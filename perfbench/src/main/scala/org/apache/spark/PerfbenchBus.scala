@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Waits until the listener bus has delivered every queued event
+  * (`waitUntilEmpty` is package-private to Spark). */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
