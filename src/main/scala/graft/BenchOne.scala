@@ -19,10 +19,12 @@ object BenchOne {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.prepareFixtures(spark, sfDir) catch { case _: Throwable => () }
+    try SparkEntry.prepareFixtures(spark, sfDir) catch { case e: Throwable =>
+      println(s"[benchone] fixture prep FAILED: $e")
+    }
     graft.core.Tables.all.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => println(s"[benchone] warm-up read of $t FAILED: $e") }
     }
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
@@ -35,7 +37,7 @@ object BenchOne {
       try {
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable => println(s"[benchone] teardown after $n FAILED: $e") }
       println(f"TIME $n min=${ts.min}%.3f runs=${ts.map(t => f"$t%.2f").mkString(",")}")
     }
     spark.stop()

@@ -19,7 +19,9 @@ object PlanDump {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.prepareFixtures(spark, sfDir) catch { case _: Throwable => () }
+    try SparkEntry.prepareFixtures(spark, sfDir) catch { case e: Throwable =>
+      println(s"[plandump] fixture prep FAILED: $e")
+    }
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       try {

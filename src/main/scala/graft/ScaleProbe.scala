@@ -89,7 +89,7 @@ object ScaleProbe extends App {
       graft.index.QuantileGrid.calibrate(skew, "embedding", partsPerDim = 4,
         gridDims = 3, dim = Fixtures.Dim)
     }
-    val qIdx = graft.index.QuantileGrid.withCellId(skew, "embedding", qcfg)
+    val qIdx = Grid.withCellId(skew, "embedding", qcfg)
       .localCheckpoint(true)
     val eCfg = GridConfig(dim = Fixtures.Dim, lower = 0.0, upper = 0.4,
       partsPerDim = 4, gridDims = 3)
@@ -103,10 +103,7 @@ object ScaleProbe extends App {
       s"quantile grid not materially more balanced: $qMax vs $eMax")
     val q2 = Fixtures.Q64.map(x => x * x)
     val qPruned = t("quantile pruned kNN k=10") {
-      graft.operators.Knn.prunedSearchBound(qIdx,
-        Distances.squaredL2Lit(col("embedding"), q2), 10,
-        cell => graft.index.QuantileGrid.cellLowerBoundSqL2(q2, cell, qcfg),
-        bruteForceThreshold = 0L)
+      Knn.prunedSearch(qIdx, qcfg, q2, 10, bruteForceThreshold = 0L)
     }
     val qBrute = t("quantile brute kNN k=10") {
       Knn.bruteForce(skew, Distances.squaredL2Lit(col("embedding"), q2), 10)

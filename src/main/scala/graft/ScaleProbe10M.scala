@@ -296,15 +296,14 @@ object ScaleProbe10M extends App {
       graft.index.QuantileGrid.calibrateSampled(vecs, "embedding", "vec_id",
         partsPerDim = 16, gridDims = 3, dim = 4, rowCount = n)
     }
-    val qIdx = graft.index.QuantileGrid.withCellId(vecs, "embedding", qcfg)
+    val qIdx = graft.index.Grid.withCellId(vecs, "embedding", qcfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val qStats = qIdx.groupBy(col("cell_id")).count()
       .agg(max(col("count")), count(lit(1))).head()
     println(s"SCALE   quantile cells: ${qStats.getLong(1)} occupied, max ${qStats.getLong(0)} " +
       s"(uniform share ${n / qcfg.numCells})")
-    val qPruned = t("quantile prunedSearchBound k=10 (10M)") {
-      graft.operators.Knn.prunedSearchBound(qIdx, dist, 10,
-        cell => graft.index.QuantileGrid.cellLowerBoundSqL2(q, cell, qcfg))
+    val qPruned = t("quantile prunedSearch k=10 (10M)") {
+      graft.operators.Knn.prunedSearch(qIdx, qcfg, q, 10)
         .map(nb => (nb.vec_id, nb.dist))
     }
     // pruned ≡ brute spot check (ids + distances; label column absent →

@@ -514,16 +514,14 @@ object SparkEntry {
     // brute-force kNN SQL — any inadmissible bound would hash-fail here
     "knn_l2_quantile_grid" -> ((s, d) => {
       val qc = qgridCfg(s, d)
-      graft.index.QuantileGrid.prunedKnnDf(s,
-        graft.index.QuantileGrid.withCellId(emb(s, d), "embedding", qc), qc, Q64, K)
+      Knn.prunedSearchDf(s, Grid.withCellId(emb(s, d), "embedding", qc), qc, Q64, K)
     }),
     // the calibration itself under the hash gate: per-cell populations of
     // the quantile grid — the oracle RECOMPUTES the quantile_cont edges
     // and re-buckets, so the boundary doubles (round-6, the quantized-
     // boundary rule) are proven engine-exact, not just copied literals
     "index_quantile_cells" -> ((s, d) =>
-      graft.index.QuantileGrid
-        .withCellId(emb(s, d), "embedding", qgridCfg(s, d))
+      Grid.withCellId(emb(s, d), "embedding", qgridCfg(s, d))
         .groupBy(col("cell_id")).agg(count(lit(1)).as("n"))
         .orderBy(col("cell_id"))),
     // the STORE lifecycle under the driver's hash gate: write the state
@@ -714,9 +712,9 @@ object SparkEntry {
     // brute-force oracle as every kNN-join form: pruning must not change
     // the answer
     "knn_join_quantile" -> ((s, d) =>
-      graft.operators.KnnCellJoin.joinQuantile(
+      graft.operators.KnnCellJoin.join(
         emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        graft.index.QuantileGrid.withCellId(emb(s, d), "embedding", qgridCfg(s, d)),
+        Grid.withCellId(emb(s, d), "embedding", qgridCfg(s, d)),
         qgridCfg(s, d), k = 3, bruteForceThreshold = 0)
         .orderBy(col("query_id"), col("rn"))),
     // first-class plan variant: custom LogicalPlan → SparkStrategy →
@@ -3072,7 +3070,7 @@ object SparkEntry {
     }),
     // the same automatic data skipping over a QUANTILE-calibrated store
     // (r11): calibrate 2-D edges from the data, write partitioned by the
-    // quantile cell, register the geometry BY PATH, and the sibling rule
+    // quantile cell, register the geometry BY PATH, and the same rule
     // injects `cell_id IN (interval-bound ≤ r cells)` into a plain radius
     // filter — spark.sql text gets quantile-index pruning without knowing
     // the index exists. Answer ≡ the unpruned radius SQL (admissibility
@@ -3087,11 +3085,11 @@ object SparkEntry {
       val qc = qgridCache.computeIfAbsent(s"2d:$d", _ =>
         graft.index.QuantileGrid.calibrate(twoD, "embedding",
           partsPerDim = 8, gridDims = 2, dim = 2))
-      graft.index.QuantileGrid.withCellId(twoD, "embedding", qc)
+      Grid.withCellId(twoD, "embedding", qc)
         // pinned 64: parallel cell-file creation (see store_roundtrip_knn)
         .repartition(64, col("cell_id"))
         .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
-      graft.plans.QuantileGridRadiusPruning.register(s, qc, dir)
+      graft.plans.GridRadiusPruning.register(s, qc, dir)
       Knn.radiusSearch(s.read.parquet(dir),
         Distances.squaredL2Lit(col("embedding"), Q64.take(2)), RadiusAuto)
     }),

@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.functions.Distances
-import graft.index.{Grid, GridConfig}
+import graft.index.{Grid, GridConfig, GridGeometry}
 import graft.operators.{Knn, Snapshot}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,26 +26,26 @@ final case class VectorRecord(vec_id: Long, embedding: Array[Float], label: Int)
   */
 trait Metric extends Serializable {
   def dist(v: Column, q: Array[Double]): Column
-  def cellBound(q: Array[Double], cell: Long, cfg: GridConfig): Double = 0.0
+  def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double = 0.0
 }
 object SquaredL2 extends Metric {
   def dist(v: Column, q: Array[Double]): Column = Distances.squaredL2Lit(v, q)
-  override def cellBound(q: Array[Double], cell: Long, cfg: GridConfig): Double =
+  override def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double =
     Grid.cellLowerBoundSqL2(q, cell, cfg)
 }
 object L1 extends Metric {
   def dist(v: Column, q: Array[Double]): Column = Distances.l1Lit(v, q)
-  override def cellBound(q: Array[Double], cell: Long, cfg: GridConfig): Double =
+  override def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double =
     Grid.cellLowerBoundL1(q, cell, cfg)
 }
 object LInf extends Metric {
   def dist(v: Column, q: Array[Double]): Column = Distances.lInfLit(v, q)
-  override def cellBound(q: Array[Double], cell: Long, cfg: GridConfig): Double =
+  override def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double =
     Grid.cellLowerBoundLInf(q, cell, cfg)
 }
 final case class MahalanobisDiag(invDiag: Array[Double]) extends Metric {
   def dist(v: Column, q: Array[Double]): Column = Distances.mahalanobisDiagLit(v, q, invDiag)
-  override def cellBound(q: Array[Double], cell: Long, cfg: GridConfig): Double =
+  override def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double =
     Grid.cellLowerBoundMahalanobisDiag(q, cell, cfg, invDiag)
 }
 
@@ -79,7 +79,7 @@ final case class MahalanobisFull(invFlat: Array[Double], mdim: Int) extends Metr
   }
   def dist(v: Column, q: Array[Double]): Column =
     Distances.mahalanobisFullLit(v, q, invFlat)
-  override def cellBound(q: Array[Double], cell: Long, cfg: GridConfig): Double =
+  override def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double =
     lamMin * Grid.cellLowerBoundSqL2(q, cell, cfg)
 }
 object MahalanobisFull {

@@ -2,52 +2,12 @@ package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
-/** Grid index configuration — the Spark re-expression of the reference's
-  * KD-tree tuning knobs (reference: vectordb/kd_tree_database.py:12-16,
-  * 234-249: dim, lower_bound, upper_bound, num_splits_per_dimension,
-  * max_leaf_size).
-  *
-  * The reference splits one dimension per tree level into
-  * `num_splits_per_dimension + 1` equal-width parts, cycling dimensions with
-  * depth (kd_tree_database.py:19-22, 59-70). For depth ≤ dim that is exactly
-  * a flat equal-width grid over the first `gridDims` dimensions — which is
-  * what we build: a deterministic `cell_id` COLUMN instead of a driver-side
-  * tree, so candidate-cell pruning becomes partition pruning / an `isin`
-  * filter that Catalyst pushes to the parquet scan. At 100 TB the indexed
-  * table is written `partitionBy("cell_id")` so pruning skips whole files.
-  *
-  * @param partsPerDim buckets per gridded dimension (= reference
-  *                    num_splits_per_dimension + 1)
-  * @param gridDims    number of leading dimensions that are gridded (= tree
-  *                    depth; the reference grows depth on leaf overflow — we
-  *                    pick it from the row count, see [[Grid.depthFor]])
-  */
-final case class GridConfig(
-    dim: Int,
-    lower: Double = -1.0,
-    upper: Double = 1.0,
-    partsPerDim: Int = 4,
-    gridDims: Int = 3) {
-  require(partsPerDim >= 2, "need at least 2 buckets per dim")
-  require(gridDims >= 1 && gridDims <= dim, "gridDims must be in [1, dim]")
-  val numCells: Long = math.pow(partsPerDim.toDouble, gridDims.toDouble).toLong
-  /** Bucket edges for gridded dim d: lower + j*width, j=0..partsPerDim. */
-  val width: Double = (upper - lower) / partsPerDim
-  /** Stable geometry fingerprint — stamped into the `cell_id` column's
-    * metadata by [[Grid.withCellId]] and used by the pruning rule to bind
-    * a cell_id column to the EXACT grid that produced it (a same-dim
-    * column built under a different geometry must never be pruned with
-    * this config's bounds). */
-  lazy val fingerprint: String = {
-    val canonical = s"$dim,$lower,$upper,$partsPerDim,$gridDims"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(canonical.getBytes("UTF-8"))
-      .take(4).map(b => f"${b & 0xff}%02x").mkString
-  }
-}
-
+/** The downstream grid code, written once over [[GridGeometry]]: cell-id
+  * Columns and their driver-side twins, the four metric cell lower bounds,
+  * plus the equal-width-only pieces (DuckDB bucketing SQL, z-order ids and
+  * the leaf-overflow [[maintain]]). */
 object Grid {
 
   /** Rows-per-cell-targeting depth pick: the batch analog of the reference's
@@ -58,54 +18,41 @@ object Grid {
     math.min(math.max(1, d), dim)
   }
 
-  /** Bucket index of one gridded dimension, as a Column. Mirrors the
-    * reference's floor formula with both-end clamping
-    * (kd_tree_database.py:59-70 clamps only the ==upper edge; we clamp both
-    * so out-of-bounds vectors land in edge cells instead of breaking —
-    * SURVEY.md §7 "out-of-bounds vectors" trap). Exact same arithmetic is
-    * emitted for the DuckDB oracle by [[bucketSql]]. */
-  def bucket(v: Column, dimIdx: Int, cfg: GridConfig): Column =
-    least(
-      lit(cfg.partsPerDim - 1L),
-      greatest(
-        lit(0L),
-        floor(((element_at(v, dimIdx + 1).cast(DoubleType) - lit(cfg.lower)) / lit(cfg.upper - cfg.lower)) * lit(cfg.partsPerDim.toDouble))
-      )
-    ).cast(IntegerType)
+  /** Bucket index of gridded dim `dimIdx` of vector column `v`: the
+    * geometry's [[GridGeometry.bucket]] over the coordinate cast to double. */
+  def bucket(v: Column, dimIdx: Int, g: GridGeometry): Column =
+    g.bucket(element_at(v, dimIdx + 1).cast(DoubleType), dimIdx)
 
   def bucketSql(col: String, dimIdx: Int, cfg: GridConfig): String = {
     import graft.oracle.DuckSql.fmt
     s"CAST(LEAST(${cfg.partsPerDim - 1}, GREATEST(0, FLOOR(((CAST($col[${dimIdx + 1}] AS DOUBLE) - (${fmt(cfg.lower)})) / (${fmt(cfg.upper - cfg.lower)})) * (${fmt(cfg.partsPerDim.toDouble)})))) AS INT)"
   }
 
-  /** cell_id = Σ bucket_d * partsPerDim^d over the gridded dims (integer
+  /** cell_id = Σ bucket_d * weight(d) over the gridded dims (integer
     * math — association-safe). */
-  def cellId(v: Column, cfg: GridConfig): Column = {
-    val terms = (0 until cfg.gridDims).map { d =>
-      val p = math.pow(cfg.partsPerDim.toDouble, d.toDouble).toLong
-      bucket(v, d, cfg).cast(LongType) * lit(p)
-    }
-    terms.reduce(_ + _)
-  }
+  def cellId(v: Column, g: GridGeometry): Column =
+    (0 until g.gridDims).map { d =>
+      bucket(v, d, g).cast(LongType) * lit(g.weight(d))
+    }.reduce(_ + _)
 
   def cellIdSql(col: String, cfg: GridConfig): String =
     (0 until cfg.gridDims).map { d =>
-      val p = math.pow(cfg.partsPerDim.toDouble, d.toDouble).toLong
-      s"(CAST(${bucketSql(col, d, cfg)} AS BIGINT) * $p)"
+      s"(CAST(${bucketSql(col, d, cfg)} AS BIGINT) * ${cfg.weight(d)})"
     }.mkString("(", " + ", ")")
 
   /** Add the cell_id column, stamped with the geometry fingerprint in its
-    * metadata so [[graft.plans.GridRadiusPruning]] can bind the column to
-    * the exact grid that produced it (metadata survives projections;
-    * parquet PARTITION columns lose it — bind those stores by path via
+    * metadata (key [[GridGeometry.fpMetaKey]]) so
+    * [[graft.plans.GridRadiusPruning]] can bind the column to the exact
+    * grid that produced it (metadata survives projections; parquet
+    * PARTITION columns lose it — bind those stores by path via
     * `GridRadiusPruning.register(spark, cfg, storePath)`). For a
     * persisted index at scale, follow with
     * `.repartition(col("cell_id")).write.partitionBy("cell_id")` so reads
     * get file-level pruning. */
-  def withCellId(df: DataFrame, vecCol: String, cfg: GridConfig): DataFrame = {
+  def withCellId(df: DataFrame, vecCol: String, g: GridGeometry): DataFrame = {
     val md = new org.apache.spark.sql.types.MetadataBuilder()
-      .putString("graft.grid.fp", cfg.fingerprint).build()
-    df.withColumn("cell_id", cellId(col(vecCol), cfg).as("cell_id", md))
+      .putString(g.fpMetaKey, g.fingerprint).build()
+    df.withColumn("cell_id", cellId(col(vecCol), g).as("cell_id", md))
   }
 
   /** Z-order (Morton) cell id: same bucket tuple as [[cellId]], but with the
@@ -193,35 +140,34 @@ object Grid {
 
   // ---- driver-side math (candidate-cell ranking for pruned search) ----
 
-  def bucketOf(x: Double, cfg: GridConfig): Int = {
-    val b = math.floor(((x - cfg.lower) / (cfg.upper - cfg.lower)) * cfg.partsPerDim).toLong
-    math.min(cfg.partsPerDim - 1L, math.max(0L, b)).toInt
-  }
-
   /** Driver-side cell id of a vector — same math as the [[cellId]] Column. */
-  def cellOf(v: Array[Double], cfg: GridConfig): Long = {
-    var c = 0L
-    var d = 0
-    var p = 1L
-    while (d < cfg.gridDims) {
-      c += bucketOf(v(d), cfg).toLong * p
-      p *= cfg.partsPerDim
-      d += 1
-    }
-    c
-  }
+  def cellOf(v: Array[Double], g: GridGeometry): Long =
+    (0 until g.gridDims).map(d => g.bucketOf(v(d), d).toLong * g.weight(d)).sum
 
-  /** Decode cell id back into per-dim bucket indices. */
-  def decode(cellId: Long, cfg: GridConfig): Array[Int] = {
-    val out = new Array[Int](cfg.gridDims)
+  /** Decode cell id back into per-dim bucket indices (mixed radix). */
+  def decode(cellId: Long, g: GridGeometry): Array[Int] = {
+    val out = new Array[Int](g.gridDims)
     var rest = cellId
     var d = 0
-    while (d < cfg.gridDims) {
-      out(d) = (rest % cfg.partsPerDim).toInt
-      rest /= cfg.partsPerDim
+    while (d < g.gridDims) {
+      out(d) = (rest % g.radix(d)).toInt
+      rest /= g.radix(d)
       d += 1
     }
     out
+  }
+
+  /** Distance from q(d) to bucket b(d)'s interval on dim d: 0 inside, and
+    * no bound on an edge bucket's open side (bucketing clamps, so edge
+    * cells absorb out-of-range mass). The right-open side still bounds
+    * below: points are < hi, so the infimum gap for q above hi is q − hi.
+    * Shared by the four metric bounds. */
+  @inline private def dimGap(q: Array[Double], b: Array[Int], d: Int,
+      g: GridGeometry): Double = {
+    val lo = g.bucketLo(d, b(d))
+    val hi = g.bucketHi(d, b(d))
+    val x = q(d)
+    if (x < lo) lo - x else if (x > hi) x - hi else 0.0
   }
 
   /** Exact squared-L2 lower bound from query point q to any point inside the
@@ -230,76 +176,35 @@ object Grid {
     * (kd_tree_database.py:164-181) and still a valid lower bound, so the
     * widening loop terminates with the exact answer. Ungridded dims
     * contribute 0 (conservative). */
-  def cellLowerBoundSqL2(q: Array[Double], cell: Long, cfg: GridConfig): Double = {
-    val b = decode(cell, cfg)
-    var s = 0.0
-    var d = 0
-    while (d < cfg.gridDims) {
-      val lo = cfg.lower + b(d) * cfg.width
-      val hi = lo + cfg.width
-      val x = q(d)
-      // Edge cells absorb out-of-bounds mass (bucket() clamps), so their
-      // interval extends to infinity on the clamped side: no bound there.
-      val below = if (b(d) == 0) Double.NegativeInfinity else lo
-      val above = if (b(d) == cfg.partsPerDim - 1) Double.PositiveInfinity else hi
-      val gap = if (x < below) below - x else if (x > above) x - above else 0.0
-      s += gap * gap
-      d += 1
-    }
+  def cellLowerBoundSqL2(q: Array[Double], cell: Long, g: GridGeometry): Double = {
+    val b = decode(cell, g)
+    var s = 0.0; var d = 0
+    while (d < g.gridDims) { val gap = dimGap(q, b, d, g); s += gap * gap; d += 1 }
     s
   }
 
   /** L1 lower bound: sum of per-dim gaps. */
-  def cellLowerBoundL1(q: Array[Double], cell: Long, cfg: GridConfig): Double = {
-    val b = decode(cell, cfg)
-    var s = 0.0
-    var d = 0
-    while (d < cfg.gridDims) {
-      val lo = cfg.lower + b(d) * cfg.width
-      val hi = lo + cfg.width
-      val below = if (b(d) == 0) Double.NegativeInfinity else lo
-      val above = if (b(d) == cfg.partsPerDim - 1) Double.PositiveInfinity else hi
-      val x = q(d)
-      val gap = if (x < below) below - x else if (x > above) x - above else 0.0
-      s += gap
-      d += 1
-    }
+  def cellLowerBoundL1(q: Array[Double], cell: Long, g: GridGeometry): Double = {
+    val b = decode(cell, g)
+    var s = 0.0; var d = 0
+    while (d < g.gridDims) { s += dimGap(q, b, d, g); d += 1 }
     s
   }
 
   /** L∞ lower bound: max per-dim gap. */
-  def cellLowerBoundLInf(q: Array[Double], cell: Long, cfg: GridConfig): Double = {
-    val b = decode(cell, cfg)
-    var m = 0.0
-    var d = 0
-    while (d < cfg.gridDims) {
-      val lo = cfg.lower + b(d) * cfg.width
-      val hi = lo + cfg.width
-      val below = if (b(d) == 0) Double.NegativeInfinity else lo
-      val above = if (b(d) == cfg.partsPerDim - 1) Double.PositiveInfinity else hi
-      val x = q(d)
-      val gap = if (x < below) below - x else if (x > above) x - above else 0.0
-      if (gap > m) m = gap
-      d += 1
-    }
+  def cellLowerBoundLInf(q: Array[Double], cell: Long, g: GridGeometry): Double = {
+    val b = decode(cell, g)
+    var m = 0.0; var d = 0
+    while (d < g.gridDims) { val gap = dimGap(q, b, d, g); if (gap > m) m = gap; d += 1 }
     m
   }
 
-  /** Mahalanobis-diagonal lower bound: weighted per-dim gaps. */
-  def cellLowerBoundMahalanobisDiag(q: Array[Double], cell: Long, cfg: GridConfig, invDiag: Array[Double]): Double = {
-    val b = decode(cell, cfg)
-    var s = 0.0
-    var d = 0
-    while (d < cfg.gridDims) {
-      val lo = cfg.lower + b(d) * cfg.width
-      val hi = lo + cfg.width
-      val below = if (b(d) == 0) Double.NegativeInfinity else lo
-      val above = if (b(d) == cfg.partsPerDim - 1) Double.PositiveInfinity else hi
-      val x = q(d)
-      val gap = if (x < below) below - x else if (x > above) x - above else 0.0
-      s += gap * gap * invDiag(d)
-      d += 1
-    }
+  /** Mahalanobis-diagonal lower bound: inverse-variance-weighted gaps². */
+  def cellLowerBoundMahalanobisDiag(q: Array[Double], cell: Long, g: GridGeometry,
+      invDiag: Array[Double]): Double = {
+    val b = decode(cell, g)
+    var s = 0.0; var d = 0
+    while (d < g.gridDims) { val gap = dimGap(q, b, d, g); s += gap * gap * invDiag(d); d += 1 }
     s
   }
 }

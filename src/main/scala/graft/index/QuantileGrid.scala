@@ -1,59 +1,16 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.DoubleType
 
-/** Quantile-calibrated grid — the data-adaptive option next to
-  * [[GridConfig]]'s equal-width buckets.
-  *
-  * The reference's grid is balanced ONLY for uniformly distributed data
-  * (its own docstring, reference kd_tree_database.py:226-233); a skewed
-  * embedding distribution piles most rows into a few equal-width cells,
-  * and pruned search degrades toward a full scan of the hot cells. Here
-  * each gridded dimension's bucket edges sit at the DATA's own quantiles
-  * (computed once by the exact interpolated percentile — the proven
-  * `agg_percentiles` kernel — one aggregation job over the corpus),
-  * so cell populations stay near-uniform for ANY distribution; the edges
-  * are rounded to 6 decimals (the repo's quantized-boundary rule: both
-  * engines then bucket with the identical double) and ride as plan
-  * literals / broadcast into the bucketing expression.
-  *
-  * Same closed-form interval lower bounds as the equal-width grid — per
-  * bucket `[edge_i, edge_{i+1})` with the two edge buckets open-ended
-  * (bucketing clamps, so out-of-range mass lands there) — which keeps the
-  * bound admissible and [[graft.operators.Knn.prunedSearchBound]]'s
-  * widening loop exact.
-  *
-  * @param boundaries per gridded dim: ASCENDING interior bucket edges
-  *                   (n edges = n+1 buckets); dims may differ in width
-  */
-final case class QuantileGridConfig(dim: Int, boundaries: Seq[Seq[Double]]) {
-  val gridDims: Int = boundaries.size
-  require(gridDims >= 1 && gridDims <= dim, "gridDims must be in [1, dim]")
-  boundaries.zipWithIndex.foreach { case (bs, d) =>
-    require(bs.nonEmpty, s"dim $d has no boundaries")
-    require(bs.sliding(2).forall(w => w.size < 2 || w(0) <= w(1)),
-      s"dim $d boundaries not ascending")
-  }
-  /** buckets per gridded dim (mixed radix — dims may differ). */
-  val partsPerDim: Seq[Int] = boundaries.map(_.size + 1)
-  val numCells: Long = partsPerDim.foldLeft(1L)(_ * _.toLong)
-  /** positional weight of dim d in the cell id (mixed-radix). */
-  val weights: Seq[Long] =
-    partsPerDim.scanLeft(1L)(_ * _.toLong).init
-
-  /** Stable geometry fingerprint (same role as [[GridConfig.fingerprint]]
-    * — binds a cell_id column to the exact boundary table that built it). */
-  lazy val fingerprint: String = {
-    val canonical = s"q:$dim:" +
-      boundaries.map(_.map(_.toString).mkString(",")).mkString(";")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(canonical.getBytes("UTF-8"))
-      .take(4).map(b => f"${b & 0xff}%02x").mkString
-  }
-}
-
+/** Calibration and drift maintenance of the quantile-calibrated grid
+  * ([[QuantileGridConfig]]). Bucket edges come from the exact interpolated
+  * percentile — the proven `agg_percentiles` kernel — in one aggregation
+  * job over the corpus, rounded to 6 decimals (the repo's quantized-boundary
+  * rule: both engines then bucket with the identical double), and ride as
+  * plan literals in the bucketing expression. Everything past the edges —
+  * cell ids, bounds, pruning, the cell join — is the shared [[Grid]] code. */
 object QuantileGrid {
 
   /** Calibrate a quantile grid from the data: per gridded dimension the
@@ -110,14 +67,6 @@ object QuantileGrid {
     }.mkString("[", ", ", "]")
   }
 
-  /** Bucket of gridded dim d: the count of boundaries ≤ v — bucket 0 is
-    * (-inf, b1), bucket i is [b_i, b_{i+1}), the last is [b_last, +inf).
-    * Clamping is inherent (no out-of-range failure mode). */
-  def bucket(v: Column, dimIdx: Int, cfg: QuantileGridConfig): Column =
-    cfg.boundaries(dimIdx).map(b =>
-      (element_at(v, dimIdx + 1).cast(DoubleType) >= lit(b)).cast(IntegerType))
-      .reduce(_ + _)
-
   def bucketSql(col: String, dimIdx: Int, cfg: QuantileGridConfig): String = {
     import graft.oracle.DuckSql.fmt
     cfg.boundaries(dimIdx).map(b =>
@@ -125,25 +74,11 @@ object QuantileGrid {
       .mkString("(", " + ", ")")
   }
 
-  /** Mixed-radix cell id over the gridded dims (integer math). */
-  def cellId(v: Column, cfg: QuantileGridConfig): Column =
-    (0 until cfg.gridDims).map { d =>
-      bucket(v, d, cfg).cast(LongType) * lit(cfg.weights(d))
-    }.reduce(_ + _)
-
+  /** Mixed-radix cell id over the gridded dims, as DuckDB SQL. */
   def cellIdSql(col: String, cfg: QuantileGridConfig): String =
     (0 until cfg.gridDims).map { d =>
       s"(CAST(${bucketSql(col, d, cfg)} AS BIGINT) * ${cfg.weights(d)})"
     }.mkString("(", " + ", ")")
-
-  /** Add the cell_id column, fingerprint-stamped (key distinct from the
-    * equal-width grid's so the radius-pruning rule can never bind an
-    * equal-width config to a quantile-bucketed column or vice versa). */
-  def withCellId(df: DataFrame, vecCol: String, cfg: QuantileGridConfig): DataFrame = {
-    val md = new org.apache.spark.sql.types.MetadataBuilder()
-      .putString("graft.qgrid.fp", cfg.fingerprint).build()
-    df.withColumn("cell_id", cellId(col(vecCol), cfg).as("cell_id", md))
-  }
 
   /** Re-calibration maintenance — the quantile sibling of [[Grid.maintain]]
     * (whose trigger is leaf overflow; here the trigger is DRIFT): boundary
@@ -170,117 +105,7 @@ object QuantileGrid {
     if (mx <= imbalanceFactor * uniformShare) (state, cfg)
     else {
       val cfg2 = calibrate(state, vecCol, cfg.partsPerDim.head, cfg.gridDims, cfg.dim)
-      (withCellId(state.drop("cell_id"), vecCol, cfg2), cfg2)
+      (Grid.withCellId(state.drop("cell_id"), vecCol, cfg2), cfg2)
     }
-  }
-
-  // ---- driver-side math (candidate-cell pricing for pruned search) ----
-
-  def bucketOf(x: Double, dimIdx: Int, cfg: QuantileGridConfig): Int = {
-    val bs = cfg.boundaries(dimIdx)
-    var i = 0
-    while (i < bs.length && x >= bs(i)) i += 1
-    i
-  }
-
-  def cellOf(v: Array[Double], cfg: QuantileGridConfig): Long = {
-    var c = 0L
-    var d = 0
-    while (d < cfg.gridDims) {
-      c += bucketOf(v(d), d, cfg).toLong * cfg.weights(d)
-      d += 1
-    }
-    c
-  }
-
-  /** Decode cell id to per-dim bucket indices (mixed radix). */
-  def decode(cellId: Long, cfg: QuantileGridConfig): Array[Int] = {
-    val out = new Array[Int](cfg.gridDims)
-    var rest = cellId
-    var d = 0
-    while (d < cfg.gridDims) {
-      out(d) = (rest % cfg.partsPerDim(d)).toInt
-      rest /= cfg.partsPerDim(d)
-      d += 1
-    }
-    out
-  }
-
-  /** Exact squared-L2 lower bound from q to any point bucketed into the
-    * cell: per-dim gap to the bucket interval — [b_i, b_{i+1}) interior,
-    * open-ended edge buckets (they absorb all out-of-range mass). The
-    * right-open side still bounds below: points are < hi, so the infimum
-    * gap for q above hi is q − hi. Admissibility pinned per-row in
-    * QuantileGridSpec. */
-  def cellLowerBoundSqL2(q: Array[Double], cell: Long, cfg: QuantileGridConfig): Double = {
-    val b = decode(cell, cfg)
-    var s = 0.0
-    var d = 0
-    while (d < cfg.gridDims) {
-      val gap = dimGap(q, b, d, cfg)
-      s += gap * gap
-      d += 1
-    }
-    s
-  }
-
-  /** Per-dim gap from q(d) to the cell's bucket interval (0 inside;
-    * edge buckets open-ended). Shared by all four metric bounds. */
-  @inline private def dimGap(q: Array[Double], b: Array[Int], d: Int,
-      cfg: QuantileGridConfig): Double = {
-    val bs = cfg.boundaries(d)
-    val lo = if (b(d) == 0) Double.NegativeInfinity else bs(b(d) - 1)
-    val hi = if (b(d) == bs.length) Double.PositiveInfinity else bs(b(d))
-    val x = q(d)
-    if (x < lo) lo - x else if (x > hi) x - hi else 0.0
-  }
-
-  /** L1 lower bound: sum of per-dim gaps. */
-  def cellLowerBoundL1(q: Array[Double], cell: Long, cfg: QuantileGridConfig): Double = {
-    val b = decode(cell, cfg)
-    var s = 0.0; var d = 0
-    while (d < cfg.gridDims) { s += dimGap(q, b, d, cfg); d += 1 }
-    s
-  }
-
-  /** L∞ lower bound: max per-dim gap. */
-  def cellLowerBoundLInf(q: Array[Double], cell: Long, cfg: QuantileGridConfig): Double = {
-    val b = decode(cell, cfg)
-    var m = 0.0; var d = 0
-    while (d < cfg.gridDims) {
-      val g = dimGap(q, b, d, cfg); if (g > m) m = g; d += 1
-    }
-    m
-  }
-
-  /** Mahalanobis-diagonal lower bound: inverse-variance-weighted gaps². */
-  def cellLowerBoundMahalanobisDiag(q: Array[Double], cell: Long,
-      cfg: QuantileGridConfig, invDiag: Array[Double]): Double = {
-    val b = decode(cell, cfg)
-    var s = 0.0; var d = 0
-    while (d < cfg.gridDims) {
-      val g = dimGap(q, b, d, cfg); s += g * g * invDiag(d); d += 1
-    }
-    s
-  }
-
-  /** Pruned exact kNN over a quantile-bucketed index: delegates to the
-    * geometry-generic widening loop with this grid's interval bounds —
-    * identical result set to brute force (QuantileGridSpec, incl. the
-    * forced-widening threshold-0 path over skewed data). */
-  def prunedKnnDf(
-      spark: org.apache.spark.sql.SparkSession,
-      indexed: DataFrame,
-      cfg: QuantileGridConfig,
-      q: Array[Double],
-      k: Int,
-      pred: Option[Column] = None,
-      bruteForceThreshold: Long = 200000L): DataFrame = {
-    import spark.implicits._
-    val rows = graft.operators.Knn.prunedSearchBound(indexed,
-      graft.functions.Distances.squaredL2Lit(col("embedding"), q), k,
-      cell => cellLowerBoundSqL2(q, cell, cfg), pred,
-      bruteForceThreshold = bruteForceThreshold)
-    spark.createDataset(rows).toDF()
   }
 }

@@ -299,12 +299,7 @@ object Ann {
         .agg(sum(floor((col("v") + lit(2.0)) * lit(16777216.0)).cast("long")).as("s"),
           count(lit(1)).as("n"), min(col("v")).as("mn"))
         .collect()
-      if (it == 0) {
-        val mn = sums.iterator.map(_.getDouble(4)).foldLeft(Double.PositiveInfinity)(math.min)
-        require(sums.isEmpty || mn >= -2.0,
-          f"seeded-exact training requires coordinates >= -2 (found $mn%.6f): " +
-            "the floor((v+2)*2^24) integer mean would round differently across engines")
-      }
+      if (it == 0) requireDomain(sums.map(_.get(4)))
       val next = cents.map(_.clone)
       sums.foreach { r =>
         next(r.getInt(0))(r.getInt(1)) =
@@ -319,7 +314,19 @@ object Ann {
     * column-pruned min-scan (cheap next to `iters` full assignment passes)
     * asserting every coordinate ≥ -2 — see [[lloydSeededExact]] DOMAIN. */
   private[operators] def requireDomainGeMinus2(db: DataFrame, vecCol: String): Unit = {
-    val mn = db.agg(min(array_min(col(vecCol).cast("array<double>")))).head().getDouble(0)
+    val r = db.agg(count(lit(1)), min(array_min(col(vecCol).cast("array<double>")))).head()
+    requireDomain(if (r.getLong(0) == 0L) Seq.empty else Seq(r.get(1)))
+  }
+
+  /** The domain check itself, over coordinate mins (per training group, or
+    * the one global min): an empty input and a null min (all-null
+    * coordinates) fail by name instead of passing vacuously or throwing an
+    * NPE. */
+  private[operators] def requireDomain(mins: Seq[Any]): Unit = {
+    require(mins.nonEmpty, "seeded-exact training requires a non-empty input")
+    require(!mins.contains(null),
+      "seeded-exact training requires non-null coordinates (found an all-null coordinate group)")
+    val mn = mins.map(_.asInstanceOf[Double]).min
     require(mn >= -2.0,
       f"seeded-exact training requires coordinates >= -2 (found $mn%.6f): " +
         "the floor((v+2)*2^24) integer mean would round differently across engines")

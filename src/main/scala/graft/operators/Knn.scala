@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Distances
-import graft.index.{Grid, GridConfig}
+import graft.index.{Grid, GridGeometry}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -61,14 +61,15 @@ object Knn {
     *
     * `cellCounts` (cell_id → rows) is computed once per index build and
     * reused across queries — the analog of the tree structure itself.
+    * Works over either [[GridGeometry]] (equal-width or quantile cells).
     */
   def prunedSearch(
       indexed: DataFrame,
-      cfg: GridConfig,
+      cfg: GridGeometry,
       q: Array[Double],
       k: Int,
       pred: Option[Column] = None,
-      cellBound: (Array[Double], Long, GridConfig) => Double = Grid.cellLowerBoundSqL2,
+      cellBound: (Array[Double], Long, GridGeometry) => Double = Grid.cellLowerBoundSqL2,
       distExpr: Option[Column] = None,
       cellCountsCache: Option[Map[Long, Long]] = None,
       bruteForceThreshold: Long = 200000L): Seq[Neighbor] =
@@ -77,10 +78,9 @@ object Knn {
       cell => cellBound(q, cell, cfg), pred, cellCountsCache,
       bruteForceThreshold)
 
-  /** Geometry-generic core of [[prunedSearch]]: the ranking + widening loop
-    * over an OPAQUE cell lower-bound function, so any grid that can price
-    * a cell (equal-width [[GridConfig]], the quantile-calibrated
-    * [[graft.index.QuantileGridConfig]], …) reuses the same exact search.
+  /** Core of [[prunedSearch]]: the ranking + widening loop over an OPAQUE
+    * cell lower-bound function, so any cell partitioning that can price a
+    * cell reuses the same exact search.
     * Correctness needs only admissibility: `bound(cell)` ≤ the true
     * distance from the query to every point bucketed into `cell`.
     *
@@ -92,7 +92,7 @@ object Knn {
     * PREFIXES via distributed top-k. At 10⁸ cells (a 100 TB store at
     * targetLeafSize rows/cell) the old collect-and-sort was a multi-GB
     * driver map (r12 verdict); now the driver holds the scanned prefix
-    * only — the same reasoning as the prune rules' MaxEnumCells cap
+    * only — the same reasoning as the prune rule's MaxEnumCells cap
     * (plans/GridPrune.scala). A non-serializable custom `bound` falls back
     * to the legacy driver-side ranking (correct, small stores only). */
   def prunedSearchBound(
@@ -292,11 +292,11 @@ object Knn {
     * bound > r cannot contain a point within r. */
   def prunedRadius(
       indexed: DataFrame,
-      cfg: GridConfig,
+      cfg: GridGeometry,
       q: Array[Double],
       r: Double,
       pred: Option[Column] = None,
-      cellBound: (Array[Double], Long, GridConfig) => Double = Grid.cellLowerBoundSqL2,
+      cellBound: (Array[Double], Long, GridGeometry) => Double = Grid.cellLowerBoundSqL2,
       distExpr: Option[Column] = None): DataFrame = {
     val cells = indexed.select(col("cell_id")).distinct().collect()
       .map(_.getAs[Number](0).longValue())
@@ -317,7 +317,7 @@ object Knn {
   def prunedSearchDf(
       spark: SparkSession,
       indexed: DataFrame,
-      cfg: GridConfig,
+      cfg: GridGeometry,
       q: Array[Double],
       k: Int,
       pred: Option[Column] = None,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Distances
-import graft.index.{Grid, GridConfig, QuantileGridConfig}
+import graft.index.{Grid, GridGeometry}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,16 +24,17 @@ import org.apache.spark.sql.functions._
   * finished-query set leaves the loop, so later (expensive, wide-box)
   * rounds run on the stragglers only.
   *
-  * Geometry-generic (r13): the loop sees the grid only through two Column
-  * builders — cells-in-box and box-covers-all — so the equal-width
-  * [[GridConfig]] and the quantile-calibrated [[QuantileGridConfig]]
-  * (whose balanced cells are exactly what skewed corpora need — 19,980 vs
-  * 977,885 max-cell at 1M rows, SCALE_NOTES) share one implementation.
-  * The box argument above never references bucket geometry, so exactness
-  * is untouched: a point outside the candidate cells of `[q−s, q+s]` sits
-  * in some dim's bucket strictly outside the span's bucket range, hence
-  * its coordinate is beyond a boundary that itself lies outside the span
-  * — squared distance > s².
+  * One join for every [[GridGeometry]]: the loop sees the grid only
+  * through the geometry's bucket Column (applied to the box endpoints),
+  * its box-covers-all test and its widening radii, so the equal-width
+  * [[graft.index.GridConfig]] and the quantile-calibrated
+  * [[graft.index.QuantileGridConfig]] (whose balanced cells are exactly
+  * what skewed corpora need — 19,980 vs 977,885 max-cell at 1M rows,
+  * SCALE_NOTES) share one implementation. The box argument above never
+  * references bucket geometry, so exactness is untouched: a point outside
+  * the candidate cells of `[q−s, q+s]` sits in some dim's bucket strictly
+  * outside the span's bucket range, hence its coordinate is beyond a
+  * boundary that itself lies outside the span — squared distance > s².
   *
   * Dimensionality regime (measured in ScaleProbe): certification compares
   * the FULL-dim kth distance against the gridded-dims box, so when most
@@ -48,108 +49,37 @@ object KnnCellJoin {
 
   /** All cell ids intersecting the per-dim bucket box of `[q−s, q+s]`,
     * as ONE Column expression (flattened cross-product of per-dim bucket
-    * ranges — gridDims is plan-time constant). Equal-width geometry. */
-  private[operators] def cellsInBox(v: Column, cfg: GridConfig, s: Double): Column = {
-    def bucketOfExpr(x: Column): Column =
-      least(lit(cfg.partsPerDim - 1L),
-        greatest(lit(0L),
-          floor(((x - lit(cfg.lower)) / lit(cfg.upper - cfg.lower)) * lit(cfg.partsPerDim.toDouble))))
+    * ranges — gridDims is plan-time constant). */
+  private[operators] def cellsInBox(v: Column, cfg: GridGeometry, s: Double): Column = {
     val ranges = (0 until cfg.gridDims).map { d =>
       val q = element_at(v, d + 1).cast("double")
-      sequence(bucketOfExpr(q - lit(s)), bucketOfExpr(q + lit(s)))
+      sequence(cfg.bucket(q - lit(s), d).cast("long"), cfg.bucket(q + lit(s), d).cast("long"))
     }
     // fold dims into flat cell ids: acc × nextDimRange
     ranges.zipWithIndex.tail.foldLeft(ranges.head) { case (acc, (rng, d)) =>
-      val p = math.pow(cfg.partsPerDim.toDouble, d.toDouble).toLong
-      flatten(transform(acc, c => transform(rng, b => c + b * lit(p))))
+      flatten(transform(acc, c => transform(rng, b => c + b * lit(cfg.weight(d)))))
     }
   }
 
-  /** The quantile sibling: per-dim bucket = count of boundary-table edges
-    * ≤ the coordinate (identical rule to [[QuantileGrid.bucket]], applied
-    * to the box endpoints), folded mixed-radix with the config's weights.
-    * Clamping is inherent — edge buckets are open-ended. */
-  private[operators] def cellsInBoxQuantile(v: Column, cfg: QuantileGridConfig,
-      s: Double): Column = {
-    def bucketOfExpr(x: Column, bs: Seq[Double]): Column =
-      bs.map(b => (x >= lit(b)).cast("long")).reduce(_ + _)
-    val ranges = (0 until cfg.gridDims).map { d =>
-      val q = element_at(v, d + 1).cast("double")
-      sequence(bucketOfExpr(q - lit(s), cfg.boundaries(d)),
-        bucketOfExpr(q + lit(s), cfg.boundaries(d)))
-    }
-    ranges.zipWithIndex.tail.foldLeft(ranges.head) { case (acc, (rng, d)) =>
-      flatten(transform(acc, c => transform(rng, b => c + b * lit(cfg.weights(d)))))
-    }
-  }
+  /** The box of THIS query covers every grid cell (so its round-result is
+    * definitionally final — also the escape hatch for < k total rows and
+    * far-out-of-bounds queries whose kth bound can never certify). */
+  private def coversAll(v: Column, cfg: GridGeometry, s: Double): Column =
+    (0 until cfg.gridDims).map { d =>
+      cfg.boxCovers(element_at(v, d + 1).cast("double"), d, s)
+    }.reduce(_ && _)
 
-  /** Exact batch kNN join over an equal-width grid (the original form). */
-  def join(queries: DataFrame, indexedDb: DataFrame, cfg: GridConfig, k: Int,
+  /** Exact batch kNN join: identical results to the brute [[KnnJoin]]
+    * (the oracle contract). Queries that never certify (NaN components,
+    * absurdly far out-of-bounds) stop widening at the geometry's
+    * `joinMaxRadius` and get exact brute-force results instead of looping
+    * forever. */
+  def join(queries: DataFrame, indexedDb: DataFrame, cfg: GridGeometry, k: Int,
       queryIdCol: String = "query_id", dbIdCol: String = "vec_id",
       vecCol: String = "embedding", bruteForceThreshold: Long = 200000L,
       driverIdLimit: Int = DriverIdLimit): DataFrame = {
-    // The box of THIS query covers every grid cell (so its round-result is
-    // definitionally final — also the escape hatch for < k total rows and
-    // far-out-of-bounds queries whose kth bound can never certify).
-    def coversAll(v: Column, radius: Double): Column =
-      (0 until cfg.gridDims).map { d =>
-        val q = element_at(v, d + 1).cast("double")
-        (q - lit(radius) <= lit(cfg.lower)) && (q + lit(radius) >= lit(cfg.upper))
-      }.reduce(_ && _)
-    joinGeneric(queries, indexedDb, k, cfg.dim,
-      (v, s) => cellsInBox(v, cfg, s), coversAll,
-      // Widening cap: any finite in-bounds query certifies or full-covers
-      // by s ≥ diameter; beyond 4× diameter only NaN components
-      // (comparisons all false → never covers) or absurdly far
-      // out-of-bounds queries remain. Those get exact brute-force results
-      // below instead of looping forever.
-      startS = cfg.width, maxS = 4.0 * (cfg.upper - cfg.lower),
-      queryIdCol, dbIdCol, vecCol, bruteForceThreshold, driverIdLimit)
-  }
-
-  /** Exact batch kNN join over a QUANTILE-calibrated grid — the batch
-    * sibling of [[QuantileGrid.prunedKnnDf]]: same widening loop, with the
-    * per-dim bucket ranges derived from the calibrated boundary table
-    * instead of the uniform bucket formula. Identical results to the
-    * brute [[KnnJoin]] (the oracle contract); preferable on skewed
-    * corpora where equal-width cells pile up. */
-  def joinQuantile(queries: DataFrame, indexedDb: DataFrame,
-      cfg: QuantileGridConfig, k: Int,
-      queryIdCol: String = "query_id", dbIdCol: String = "vec_id",
-      vecCol: String = "embedding", bruteForceThreshold: Long = 200000L,
-      driverIdLimit: Int = DriverIdLimit): DataFrame = {
-    // full cover = the box spans bucket 0 .. last in every gridded dim
-    // (edge buckets are open-ended, so that candidate set IS every cell)
-    def coversAll(v: Column, radius: Double): Column =
-      (0 until cfg.gridDims).map { d =>
-        val q = element_at(v, d + 1).cast("double")
-        (q - lit(radius) < lit(cfg.boundaries(d).head)) &&
-          (q + lit(radius) >= lit(cfg.boundaries(d).last))
-      }.reduce(_ && _)
-    // The widening schedule only needs a sane start and a termination cap
-    // (correctness never depends on either — stragglers exit via brute
-    // force): start at the mean interior boundary gap, cap at 4× the
-    // widest boundary span, with floors for degenerate one-boundary dims.
-    val startS = math.max(1e-6,
-      cfg.boundaries.map(bs =>
-        if (bs.size >= 2) (bs.last - bs.head) / (bs.size - 1) else 0.0).max)
-    val maxS = math.max(4.0 * cfg.boundaries.map(bs => bs.last - bs.head).max,
-      startS * 256)
-    joinGeneric(queries, indexedDb, k, cfg.dim,
-      (v, s) => cellsInBoxQuantile(v, cfg, s), coversAll,
-      startS, maxS, queryIdCol, dbIdCol, vecCol, bruteForceThreshold,
-      driverIdLimit)
-  }
-
-  /** The widening-loop core, geometry supplied as Column builders. */
-  private def joinGeneric(queries: DataFrame, indexedDb: DataFrame, k: Int,
-      dim: Int,
-      cellsInBoxOf: (Column, Double) => Column,
-      coversAll: (Column, Double) => Column,
-      startS: Double, maxS: Double,
-      queryIdCol: String, dbIdCol: String, vecCol: String,
-      bruteForceThreshold: Long, driverIdLimit: Int): DataFrame = {
     val spark = queries.sparkSession
+    val dim = cfg.dim
     // Query-side dim validation (the reference asserts vector shape on every
     // call, kd_tree_database.py:84-85): a null or short query embedding would
     // otherwise vanish from cellsInBox/coversAll and loop forever.
@@ -184,18 +114,18 @@ object KnnCellJoin {
     if (driverIdLimit > 0) {
       val idProbe = qs0.select(col(queryIdCol)).limit(driverIdLimit + 1).collect()
       if (idProbe.length <= driverIdLimit)
-        return joinDriverTracked(qs0, indexedDb, k, dim, cellsInBoxOf,
-          coversAll, startS, maxS, queryIdCol, dbIdCol, vecCol,
+        return joinDriverTracked(qs0, indexedDb, k, cfg,
+          queryIdCol, dbIdCol, vecCol,
           idProbe.map(_.get(0)), bruteOn)
     }
 
-    var s = startS // start at one cell width
+    var s = cfg.joinStartRadius
     var remaining = qs0
     var acc: Option[DataFrame] = None
 
-    while (!remaining.isEmpty && s <= maxS) {
+    while (!remaining.isEmpty && s <= cfg.joinMaxRadius) {
       val cand = remaining
-        .withColumn("cell_id", explode(cellsInBoxOf(col("q_embedding"), s)))
+        .withColumn("cell_id", explode(cellsInBox(col("q_embedding"), cfg, s)))
       // bounded top-k AGGREGATOR, not a window: the shuffle carries ≤ k
       // rows per query per map task — a window would shuffle and sort
       // EVERY candidate pair (measured 7× slower at 1M rows in ScaleProbe)
@@ -213,7 +143,7 @@ object KnnCellJoin {
         .agg(count(lit(1)).as("n"), max(col("dist")).as("kth"))
         .filter(col("n") === k && col("kth") <= lit(s * s))
         .select(col(queryIdCol))
-      val fullCover = remaining.filter(coversAll(col("q_embedding"), s))
+      val fullCover = remaining.filter(coversAll(col("q_embedding"), cfg, s))
         .select(col(queryIdCol))
       val finishedIds = certified.unionByName(fullCover).distinct()
       val taken = topk.join(finishedIds, queryIdCol)
@@ -240,26 +170,23 @@ object KnnCellJoin {
     * the driver — same rounds, same certification rule, same results as
     * the DataFrame loop; only the set algebra moved off the cluster. */
   private def joinDriverTracked(qs0: DataFrame, indexedDb: DataFrame,
-      k: Int, dim: Int,
-      cellsInBoxOf: (Column, Double) => Column,
-      coversAll: (Column, Double) => Column,
-      startS: Double, maxS: Double,
+      k: Int, cfg: GridGeometry,
       queryIdCol: String, dbIdCol: String, vecCol: String,
       allIds: Array[Any],
       bruteOn: DataFrame => DataFrame): DataFrame = {
     var remainingIds: Set[Any] = allIds.toSet
-    var s = startS
+    var s = cfg.joinStartRadius
     val accParts = Seq.newBuilder[DataFrame]
-    while (remainingIds.nonEmpty && s <= maxS) {
+    while (remainingIds.nonEmpty && s <= cfg.joinMaxRadius) {
       val rem =
         if (remainingIds.size == allIds.length) qs0
         else qs0.filter(col(queryIdCol).isin(remainingIds.toSeq: _*))
       val cand = rem
-        .withColumn("cell_id", explode(cellsInBoxOf(col("q_embedding"), s)))
+        .withColumn("cell_id", explode(cellsInBox(col("q_embedding"), cfg, s)))
       val topk = KnnTopK.topK(
           broadcast(cand).join(indexedDb, "cell_id")
             .select(col(queryIdCol).as("query_id"), col(dbIdCol).as("vec_id"),
-              Distances.squaredL2Cols(col("q_embedding"), col(vecCol), dim).as("dist")),
+              Distances.squaredL2Cols(col("q_embedding"), col(vecCol), cfg.dim).as("dist")),
           k)
         .withColumnRenamed("query_id", queryIdCol)
         .withColumnRenamed("vec_id", dbIdCol)
@@ -268,7 +195,7 @@ object KnnCellJoin {
         .agg(count(lit(1)).as("n"), max(col("dist")).as("kth"))
         .filter(col("n") === k && col("kth") <= lit(s * s))
         .select(col(queryIdCol))
-      val fullCover = rem.filter(coversAll(col("q_embedding"), s))
+      val fullCover = rem.filter(coversAll(col("q_embedding"), cfg, s))
         .select(col(queryIdCol))
       val finished = certified.unionByName(fullCover).distinct()
         .collect().map(_.get(0)).toSet

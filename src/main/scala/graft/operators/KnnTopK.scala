@@ -45,11 +45,13 @@ object KnnTopK {
 
   /** [[TopKAgg]] that collapses duplicate candidate ids on insert/merge —
     * for candidate sets where one (query, vec) pair can arrive several
-    * times WITH THE SAME dist (e.g. via multiple shared probe cells).
-    * Equivalent to groupBy(query, vec).min(dist) |> topK when dist is
-    * functionally determined by (query, vec), but without the extra
+    * times (e.g. via multiple shared probe cells). Equivalent to
+    * groupBy(query, vec).min(dist) |> topK in any arrival order — a
+    * duplicate id keeps the smaller dist — but without the extra
     * full-candidate-set exchange that groupBy costs (r17, guide §2.4).
-    * The id-containment check is a linear scan of a ≤k buffer. */
+    * The id-containment check is a linear scan of a ≤k buffer. An id
+    * evicted from a full buffer can never re-enter at a larger dist: the
+    * kth entry only improves, and already beat the evicted one. */
   class TopKDedupAgg(k: Int) extends Aggregator[Cand, Array[Neighbor], Array[Neighbor]] {
     def zero: Array[Neighbor] = Array.empty
     def reduce(buf: Array[Neighbor], c: Cand): Array[Neighbor] =
@@ -59,11 +61,15 @@ object KnnTopK {
     def finish(r: Array[Neighbor]): Array[Neighbor] = r
     def bufferEncoder: Encoder[Array[Neighbor]] = Encoders.kryo[Array[Neighbor]]
     def outputEncoder: Encoder[Array[Neighbor]] = Encoders.kryo[Array[Neighbor]]
-    private def insert(buf: Array[Neighbor], n: Neighbor): Array[Neighbor] =
-      if (buf.exists(_.id == n.id)) buf
+    private def insert(buf: Array[Neighbor], n: Neighbor): Array[Neighbor] = {
+      val dup = buf.indexWhere(_.id == n.id)
+      if (dup >= 0)
+        if (n.dist < buf(dup).dist) buf.updated(dup, n).sortBy(x => (x.dist, x.id))
+        else buf
       else if (buf.length < k) (buf :+ n).sortBy(x => (x.dist, x.id))
       else if (lt(n, buf(k - 1))) (buf.updated(k - 1, n)).sortBy(x => (x.dist, x.id))
       else buf
+    }
   }
 
   /** [[topK]] with duplicate-id collapse (see [[TopKDedupAgg]]). */

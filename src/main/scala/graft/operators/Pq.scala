@@ -125,12 +125,7 @@ object Pq {
             .cast("long")).as("s"),
           count(lit(1)).as("n"), min(col("v").cast("double")).as("mn"))
         .collect()
-      if (it == 0) {
-        val mn = sums.iterator.map(_.getDouble(5)).foldLeft(Double.PositiveInfinity)(math.min)
-        require(sums.isEmpty || mn >= -2.0,
-          f"seeded-exact training requires coordinates >= -2 (found $mn%.6f): " +
-            "the floor((v+2)*2^24) integer mean would round differently across engines")
-      }
+      if (it == 0) Ann.requireDomain(sums.map(_.get(5)))
       val next = books.map(_.map(_.clone))
       sums.foreach { r =>
         next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.functions.{VecMetric, VecMetricLit}
-import graft.index.{Grid, GridConfig}
+import graft.index.{Grid, GridGeometry}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Expression, In, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
@@ -10,14 +10,16 @@ import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /** Automatic grid data skipping as an OPTIMIZER RULE: a radius predicate
-  * `vec_sql2_lit(embedding) ≤ r` over a relation that carries the grid's
+  * `vec_sql2_lit(embedding) ≤ r` over a relation that carries a grid's
   * `cell_id` column gains the conjunct `cell_id IN (candidate cells)`,
-  * where a candidate is any cell whose closed-form plane lower bound
+  * where a candidate is any cell whose closed-form interval lower bound
   * (`Grid.cellLowerBoundSqL2` — the reference's `distance_to_partition`,
   * vectordb/kd_tree_database.py:164-181, evaluated per cell instead of
   * per tree node) is ≤ r. Admissible, so the rewrite only SKIPS rows the
   * exact predicate would reject anyway — the original predicate stays as
-  * the re-check.
+  * the re-check. One rule serves every [[GridGeometry]] — equal-width
+  * [[graft.index.GridConfig]] and quantile-calibrated
+  * [[graft.index.QuantileGridConfig]] stores alike.
   *
   * This closes the loop the driver-side `Knn.prunedRadius` opens: there
   * the CALLER must know about the index; here any query that merely
@@ -30,57 +32,58 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * stops the second application.
   *
   * The grid geometry cannot be inferred from the plan, so the store's
-  * [[GridConfig]] is registered on the session (runtime conf, survives
-  * plan re-use) by [[GridRadiusPruning.register]]. The registry holds
-  * MULTIPLE configs keyed by geometry fingerprint, and a config only
-  * prunes a relation it can be BOUND to — in priority order:
+  * geometry is registered on the session (runtime conf, survives plan
+  * re-use) by [[GridRadiusPruning.register]]. The registry holds MULTIPLE
+  * geometries of either kind, and a geometry only prunes a relation it can
+  * be BOUND to — in priority order:
   *
-  *  1. the cell_id attribute carries `graft.grid.fp` metadata (stamped by
-  *     [[Grid.withCellId]]; survives in-memory projections) matching a
-  *     registered fingerprint;
+  *  1. the cell_id attribute carries fingerprint metadata (stamped by
+  *     [[Grid.withCellId]] under the geometry's own key, `graft.grid.fp` or
+  *     `graft.qgrid.fp`; survives in-memory projections) matching a
+  *     registered geometry of that kind;
   *  2. the relation is a file scan whose root path was registered via
   *     `register(spark, cfg, storePath)` (parquet PARTITION columns lose
   *     metadata — the path is the durable identity of a written store);
-  *  3. exactly ONE registered UNBOUND config matches the query vector's
+  *  3. exactly ONE registered UNBOUND geometry matches the query vector's
   *     dimension (the legacy single-store session; ambiguity → no prune).
   *
   * An unrelated user column named cell_id, or a second store under a
   * different geometry, therefore never gets an inadmissible IN injected:
   * a foreign fingerprint matches nothing (rule 1 refuses outright), a
   * foreign path matches nothing, and two same-dim candidates make rule 3
-  * refuse. Registering the same fingerprint again just updates its path.
+  * refuse. Registering the same fingerprint again just updates its path,
+  * and registering a path evicts whatever geometry was bound to it before.
   */
 object GridRadiusPruning extends Rule[LogicalPlan] {
 
   val ConfKey = "spark.graft.grid.pruneCfg"
-  val FpMetaKey = "graft.grid.fp"
 
-  /** Upper bound on geometries the cell-pruning rules will enumerate
-    * driver-side (shared with [[QuantileGridPruning]]): the rules walk
-    * every cell id per matching Filter per optimizer pass, so an
+  /** Upper bound on geometries the rule will enumerate driver-side: it
+    * walks every cell id per matching Filter per optimizer pass, so an
     * unbounded registered geometry would turn plan OPTIMIZATION into an
     * O(numCells) driver loop. Larger geometries simply don't prune. */
   val MaxEnumCells: Long = 1000000L
 
   /** Register `cfg` on the session UNBOUND (dim-unique fallback matching
     * only) and install the rule (idempotent). */
-  def register(spark: SparkSession, cfg: GridConfig): Unit =
+  def register(spark: SparkSession, cfg: GridGeometry): Unit =
     addEntry(spark, cfg, None)
 
   /** Register `cfg` BOUND to a written store's root path — required for
     * stores read back through `partitionBy("cell_id")` parquet, where the
     * column's fingerprint metadata does not survive. */
-  def register(spark: SparkSession, cfg: GridConfig, storePath: String): Unit =
+  def register(spark: SparkSession, cfg: GridGeometry, storePath: String): Unit =
     addEntry(spark, cfg, Some(storePath))
 
-  private def addEntry(spark: SparkSession, cfg: GridConfig,
+  private def addEntry(spark: SparkSession, cfg: GridGeometry,
       path: Option[String]): Unit = {
-    // Dedup by fingerprint AND by bound path: after a store at path P is
-    // re-bucketed with a new geometry (Grid.maintain/configFor) and
-    // re-registered, the stale (oldCfg, P) entry must not shadow the new
-    // one — bindCfg's path branch uses collectFirst, so a leftover old
-    // entry would inject an inadmissible cell-id list against the
-    // rewritten store and silently drop rows.
+    // Dedup by fingerprint AND by bound path, across both geometry kinds:
+    // after a store at path P is re-bucketed with a new geometry
+    // (Grid.maintain, QuantileGrid.maintain, or a switch from equal-width to
+    // quantile buckets) and re-registered, the stale (oldCfg, P) entry must
+    // not shadow the new one — bindCfg's path branch uses collectFirst, so
+    // a leftover old entry would inject an inadmissible cell-id list
+    // against the rewritten store and silently drop rows.
     val newPath = path.map(normPath)
     val kept = parseEntries(spark.conf.get(ConfKey, ""))
       .filterNot { case (c, p) =>
@@ -89,8 +92,7 @@ object GridRadiusPruning extends Rule[LogicalPlan] {
       }
     val all = kept :+ (cfg, newPath)
     spark.conf.set(ConfKey, all.map { case (c, p) =>
-      val enc = java.net.URLEncoder.encode(p.getOrElse(""), "UTF-8")
-      s"${c.dim},${c.lower},${c.upper},${c.partsPerDim},${c.gridDims},$enc"
+      c.encoded + "@" + java.net.URLEncoder.encode(p.getOrElse(""), "UTF-8")
     }.mkString(";"))
     DatasetBridge.addOptimization(spark, this)
   }
@@ -98,15 +100,13 @@ object GridRadiusPruning extends Rule[LogicalPlan] {
   private def normPath(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
-  private def parseEntries(s: String): Seq[(GridConfig, Option[String])] =
+  private def parseEntries(s: String): Seq[(GridGeometry, Option[String])] =
     if (s == null || s.isEmpty) Seq.empty
     else s.split(";").toSeq.map { e =>
-      val parts = e.split(",", -1)
-      val cfg = GridConfig(parts(0).toInt, parts(1).toDouble, parts(2).toDouble,
-        parts(3).toInt, parts(4).toInt)
-      val p = if (parts.length > 5 && parts(5).nonEmpty)
-        Some(java.net.URLDecoder.decode(parts(5), "UTF-8")) else None
-      (cfg, p)
+      val at = e.lastIndexOf('@')
+      val p = e.substring(at + 1)
+      (GridGeometry.parse(e.substring(0, at)),
+        if (p.isEmpty) None else Some(java.net.URLDecoder.decode(p, "UTF-8")))
     }
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -130,7 +130,7 @@ object GridRadiusPruning extends Rule[LogicalPlan] {
   }
 
   private def cellBound(m: String, q: Array[Double], w: Array[Double],
-      cell: Long, cfg: GridConfig): Double = m match {
+      cell: Long, cfg: GridGeometry): Double = m match {
     case VecMetric.SqL2 => Grid.cellLowerBoundSqL2(q, cell, cfg)
     case VecMetric.L1   => Grid.cellLowerBoundL1(q, cell, cfg)
     case VecMetric.LInf => Grid.cellLowerBoundLInf(q, cell, cfg)
@@ -149,30 +149,29 @@ object GridRadiusPruning extends Rule[LogicalPlan] {
         }
     }.flatten
 
-  /** Bind the cell_id attribute to a registered config (see object doc
+  /** Bind the cell_id attribute to a registered geometry (see object doc
     * for the priority order), or None → no pruning. */
-  private def bindCfg(entries: Seq[(GridConfig, Option[String])],
-      child: LogicalPlan, attr: Attribute, qDim: Int): Option[GridConfig] = {
-    // a column stamped by the QUANTILE grid belongs to the sibling rule:
-    // an equal-width cell list against quantile buckets is inadmissible,
-    // and without this check the dim-unique unbound fallback would guess
-    // (caught by QuantileGridPruneRuleSpec)
-    if (attr.metadata.contains(QuantileGridRadiusPruning.FpMetaKey)) return None
-    if (attr.metadata.contains(FpMetaKey)) {
+  private def bindCfg(entries: Seq[(GridGeometry, Option[String])],
+      child: LogicalPlan, attr: Attribute, qDim: Int): Option[GridGeometry] = {
+    GridGeometry.FpMetaKeys.find(attr.metadata.contains) match {
       // a fingerprinted column binds by fingerprint ONLY: a foreign
-      // geometry must refuse, not fall through to weaker matching
-      val fp = attr.metadata.getString(FpMetaKey)
-      return entries.map(_._1).find(c => c.fingerprint == fp && c.dim == qDim)
-    }
-    scanPathOf(child, attr).flatMap { p =>
-      entries.collectFirst {
-        case (c, Some(bp)) if bp == p && c.dim == qDim => c
-      }
-    }.orElse {
-      entries.filter { case (c, p) => p.isEmpty && c.dim == qDim } match {
-        case Seq((one, _)) => Some(one)
-        case _ => None // zero or ambiguous — never guess a geometry
-      }
+      // geometry (either kind) must refuse, not fall through to weaker
+      // matching
+      case Some(key) =>
+        val fp = attr.metadata.getString(key)
+        entries.map(_._1).find(c =>
+          c.fpMetaKey == key && c.fingerprint == fp && c.dim == qDim)
+      case None =>
+        scanPathOf(child, attr).flatMap { p =>
+          entries.collectFirst {
+            case (c, Some(bp)) if bp == p && c.dim == qDim => c
+          }
+        }.orElse {
+          entries.filter { case (c, p) => p.isEmpty && c.dim == qDim } match {
+            case Seq((one, _)) => Some(one)
+            case _ => None // zero or ambiguous — never guess a geometry
+          }
+        }
     }
   }
 

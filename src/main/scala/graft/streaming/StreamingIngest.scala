@@ -33,7 +33,7 @@ object StreamingIngest {
   /** [[vectorIngest]] onto a QUANTILE-calibrated store (r11): identical
     * micro-batch shape, cells from the boundary table. Boundaries are
     * plan literals, so streamed bucketing ≡ the batch
-    * [[graft.index.QuantileGrid.withCellId]] by construction; drift since
+    * [[graft.index.Grid.withCellId]] by construction; drift since
     * calibration is handled out-of-band by `QuantileGrid.maintain` (the
     * ingest never re-calibrates mid-stream — a moving geometry would
     * scatter one logical cell across files). */
@@ -44,7 +44,7 @@ object StreamingIngest {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch
-          .withColumn("cell_id", graft.index.QuantileGrid.cellId(col("embedding"), cfg))
+          .withColumn("cell_id", graft.index.Grid.cellId(col("embedding"), cfg))
           .repartition(col("cell_id"))
           .write.mode("append").partitionBy("cell_id").parquet(storePath)
       }

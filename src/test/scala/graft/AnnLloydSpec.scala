@@ -35,6 +35,28 @@ class AnnLloydSpec extends SparkSpecBase {
     assert(ex2.getMessage.contains("-2"), ex2.getMessage)
   }
 
+  /** Both seeded-exact trainers on both domain-check paths (the first
+    * training aggregation when iters > 0, the standalone scan at 0). */
+  private def seededTrainingErrors(db: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val seeds = graft.core.Fixtures.Planes16.take(2).map(_.map(_ * 0.1))
+    val books = Array.fill(4)(Array.fill(2)(Array.fill(16)(0.0)))
+    for (iters <- Seq(0, 1); train <- Seq[() => Any](
+        () => Ann.lloydSeededExact(db, seeds, iters),
+        () => graft.operators.Pq.trainSeededExact(db, 64, books, iters)))
+      yield intercept[IllegalArgumentException](train()).getMessage
+  }
+
+  test("seeded-exact training fails by name on an empty input") {
+    val empty = Seq((0L, Array.fill(64)(0.1f))).toDF("vec_id", "embedding").filter(lit(false))
+    seededTrainingErrors(empty).foreach(m => assert(m.contains("non-empty input"), m))
+  }
+
+  test("seeded-exact training fails by name on all-null coordinates") {
+    val nulls = Seq((0L, Seq.fill(64)(Option.empty[Float])), (1L, Seq.fill(64)(Option.empty[Float])))
+      .toDF("vec_id", "embedding")
+    seededTrainingErrors(nulls).foreach(m => assert(m.contains("non-null coordinates"), m))
+  }
+
   test("lloydSeededExact: coordinates are exact 2^-24 multiples, objective improves on the seeds, training is deterministic") {
     val seeds = graft.core.Fixtures.Planes16.map(_.map(_ * 0.1))
     val trained = Ann.lloydSeededExact(emb, seeds, iters = 2)

@@ -74,8 +74,8 @@ class KnnCellJoinSpec extends SparkSpecBase {
       partsPerDim = 4, gridDims = 3, dim = Fixtures.Dim)
     val queries = emb.filter(col("vec_id") < 6)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val viaCells = KnnCellJoin.joinQuantile(queries,
-        graft.index.QuantileGrid.withCellId(emb, "embedding", qc), qc, k = 4,
+    val viaCells = KnnCellJoin.join(queries,
+        Grid.withCellId(emb, "embedding", qc), qc, k = 4,
         bruteForceThreshold = 0)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
@@ -105,8 +105,8 @@ class KnnCellJoinSpec extends SparkSpecBase {
       val queries = (100L until 104L).map(i =>
         (i, Array.fill(dim)((rnd.nextDouble() * 4.0 - 2.0).toFloat))) // often OOB
         .toDF("query_id", "embedding")
-      val viaCells = KnnCellJoin.joinQuantile(queries,
-          graft.index.QuantileGrid.withCellId(db, "embedding", qc), qc, k,
+      val viaCells = KnnCellJoin.join(queries,
+          Grid.withCellId(db, "embedding", qc), qc, k,
           bruteForceThreshold = 0)
         .orderBy("query_id", "rn")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq

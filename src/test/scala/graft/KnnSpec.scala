@@ -2,7 +2,7 @@ package graft
 
 import graft.core.{Fixtures, Tables}
 import graft.functions.Distances
-import graft.index.{Grid, GridConfig}
+import graft.index.{Grid, GridConfig, GridGeometry}
 import graft.operators.Knn
 import org.apache.spark.sql.functions._
 
@@ -39,12 +39,12 @@ class KnnSpec extends SparkSpecBase {
 
   test("pruned search equals brute force for all metrics, with and without filter") {
     val cfg = SparkEntry.gridCfg
-    val cases: Seq[(String, org.apache.spark.sql.Column, (Array[Double], Long, GridConfig) => Double)] = Seq(
+    val cases: Seq[(String, org.apache.spark.sql.Column, (Array[Double], Long, GridGeometry) => Double)] = Seq(
       ("l2", Distances.squaredL2Lit(col("embedding"), Q64), Grid.cellLowerBoundSqL2),
       ("l1", Distances.l1Lit(col("embedding"), Q64), Grid.cellLowerBoundL1),
       ("linf", Distances.lInfLit(col("embedding"), Q64), Grid.cellLowerBoundLInf),
       ("mahal", Distances.mahalanobisDiagLit(col("embedding"), Q64, InvDiag64),
-        (q: Array[Double], c: Long, g: GridConfig) => Grid.cellLowerBoundMahalanobisDiag(q, c, g, InvDiag64)))
+        (q: Array[Double], c: Long, g: GridGeometry) => Grid.cellLowerBoundMahalanobisDiag(q, c, g, InvDiag64)))
     for ((name, dist, bound) <- cases; pred <- Seq(None, Some(col("label") === 3))) {
       val brute = Knn.bruteForce(emb, dist, 10, pred = pred).collect()
         .map(r => (r.getLong(0), r.getDouble(2)))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Distances
-import graft.index.{Grid, GridConfig}
+import graft.index.{Grid, GridConfig, GridGeometry, QuantileGridConfig}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -53,56 +53,91 @@ class PropertySpec extends SparkSpecBase {
     check(p, "bound admissibility")
   }
 
+  /** The pruning rule's contract for one geometry: the bound of a point's
+    * own cell never exceeds its true distance under any metric (a bound
+    * above the true distance of ANY in-cell point would silently drop
+    * matches), and the cell decodes back to the point's per-dim buckets
+    * (mixed-radix decode, bucketing and the open-ended edge intervals
+    * agree), for points inside and outside the gridded range. */
+  private def boundsAdmissible(g: GridGeometry, q: Array[Double], v: Array[Double],
+      inv: Array[Double]): Boolean = {
+    val cell = Grid.cellOf(v, g)
+    (Grid.cellLowerBoundSqL2(q, cell, g) <= Distances.squaredL2(q, v) + 1e-9) &&
+    (Grid.cellLowerBoundL1(q, cell, g) <= Distances.l1(q, v) + 1e-9) &&
+    (Grid.cellLowerBoundLInf(q, cell, g) <= Distances.lInf(q, v) + 1e-9) &&
+    (Grid.cellLowerBoundMahalanobisDiag(q, cell, g, inv) <=
+      q.indices.map(i => { val d = q(i) - v(i); d * d * inv(i) }).sum + 1e-9) &&
+    Grid.decode(cell, g).toSeq == (0 until g.gridDims).map(d => g.bucketOf(v(d), d))
+  }
+
+  /** Query, point (also outside [-1, 1]) and diagonal inverse variances
+    * around a geometry drawn from `geometry`. */
+  private def boundsGen(geometry: Int => Gen[GridGeometry]) = for {
+    dim <- Gen.choose(1, 6)
+    g <- geometry(dim)
+    q <- vecGen(dim)
+    v <- Gen.containerOfN[Array, Double](dim, Gen.choose(-2.0, 2.0))
+    inv <- Gen.containerOfN[Array, Double](dim, Gen.choose(0.1, 5.0))
+  } yield (g, q, v, inv)
+
   test("ALL metric cell bounds are admissible (the auto-pruning rule's contract)") {
-    // GridRadiusPruning skips a cell when bound > r; a bound exceeding the
-    // true distance of ANY in-cell point would silently drop matches.
-    val gen = for {
-      dim <- Gen.choose(1, 6)
+    // GridRadiusPruning skips a cell when bound > r
+    val gen = boundsGen(dim => for {
       parts <- Gen.choose(2, 5)
       gdims <- Gen.choose(1, dim)
-      q <- vecGen(dim)
-      v <- Gen.containerOfN[Array, Double](dim, Gen.choose(-1.0, 1.0))
-      inv <- Gen.containerOfN[Array, Double](dim, Gen.choose(0.1, 5.0))
-    } yield (GridConfig(dim, -1.0, 1.0, parts, gdims), q, v, inv)
-    val p = Prop.forAll(gen) { case (cfg, q, v, inv) =>
-      val cell = Grid.cellOf(v, cfg)
-      (Grid.cellLowerBoundL1(q, cell, cfg) <= Distances.l1(q, v) + 1e-9) &&
-      (Grid.cellLowerBoundLInf(q, cell, cfg) <= Distances.lInf(q, v) + 1e-9) &&
-      (Grid.cellLowerBoundMahalanobisDiag(q, cell, cfg, inv) <=
-        q.indices.map(i => { val d = q(i) - v(i); d * d * inv(i) }).sum + 1e-9)
-    }
+    } yield GridConfig(dim, -1.0, 1.0, parts, gdims))
+    val p = Prop.forAll(gen) { case (g, q, v, inv) => boundsAdmissible(g, q, v, inv) }
     check(p, "all-metric bound admissibility")
   }
 
   test("QUANTILE grid: ALL metric interval bounds are admissible over random boundary tables") {
-    // the quantile pruning rule's contract: for ANY ascending boundary
-    // table (not just calibrated ones) and any point, the bound of the
-    // point's own cell never exceeds the true distance — the mixed-radix
-    // decode, count-of-boundaries bucketing, and open-ended edge
-    // intervals must agree
-    import graft.index.{QuantileGrid, QuantileGridConfig}
-    val gen = for {
-      dim <- Gen.choose(1, 6)
+    // for ANY ascending boundary table (not just calibrated ones):
+    // admissibility must never depend on where the edges sit
+    val gen = boundsGen(dim => for {
       gdims <- Gen.choose(1, dim)
       bs <- Gen.listOfN(gdims,
         Gen.choose(1, 4).flatMap(nb =>
           Gen.containerOfN[List, Double](nb, Gen.choose(-1.0, 1.0)).map(_.sorted)))
-      q <- vecGen(dim)
-      v <- Gen.containerOfN[Array, Double](dim, Gen.choose(-2.0, 2.0))
-      inv <- Gen.containerOfN[Array, Double](dim, Gen.choose(0.1, 5.0))
-    } yield (QuantileGridConfig(dim, bs.map(_.toSeq)), q, v, inv)
-    val p = Prop.forAll(gen) { case (cfg, q, v, inv) =>
-      val cell = QuantileGrid.cellOf(v, cfg)
-      (QuantileGrid.cellLowerBoundSqL2(q, cell, cfg) <=
-        Distances.squaredL2(q, v) + 1e-9) &&
-      (QuantileGrid.cellLowerBoundL1(q, cell, cfg) <= Distances.l1(q, v) + 1e-9) &&
-      (QuantileGrid.cellLowerBoundLInf(q, cell, cfg) <= Distances.lInf(q, v) + 1e-9) &&
-      (QuantileGrid.cellLowerBoundMahalanobisDiag(q, cell, cfg, inv) <=
-        q.indices.map(i => { val d = q(i) - v(i); d * d * inv(i) }).sum + 1e-9) &&
-      QuantileGrid.decode(cell, cfg).toSeq ==
-        (0 until cfg.gridDims).map(d => QuantileGrid.bucketOf(v(d), d, cfg))
-    }
+    } yield QuantileGridConfig(dim, bs.map(_.toSeq)))
+    val p = Prop.forAll(gen) { case (g, q, v, inv) => boundsAdmissible(g, q, v, inv) }
     check(p, "quantile-grid bound admissibility")
+  }
+
+  test("equal-width cell bounds equal the inline closed form bit-for-bit") {
+    // the equal-width interval is lo = lower + b*width, hi = lo + width:
+    // any drift in that arithmetic would move widening decisions
+    val gen = for {
+      dim <- Gen.choose(1, 6)
+      parts <- Gen.choose(2, 9)
+      gdims <- Gen.choose(1, dim)
+      lower <- Gen.choose(-2.0, 0.5)
+      span <- Gen.choose(0.1, 3.0)
+      q <- vecGen(dim)
+      inv <- Gen.containerOfN[Array, Double](dim, Gen.choose(0.1, 5.0))
+      cellFrac <- Gen.choose(0.0, 1.0)
+    } yield (GridConfig(dim, lower, lower + span, parts, gdims), q, inv, cellFrac)
+    val p = Prop.forAll(gen) { case (cfg, q, inv, cellFrac) =>
+      val cell = math.min(cfg.numCells - 1, (cellFrac * cfg.numCells).toLong)
+      var rest = cell
+      val gaps = (0 until cfg.gridDims).map { d =>
+        val b = (rest % cfg.partsPerDim).toInt
+        rest /= cfg.partsPerDim
+        val lo = cfg.lower + b * cfg.width
+        val hi = lo + cfg.width
+        val below = if (b == 0) Double.NegativeInfinity else lo
+        val above = if (b == cfg.partsPerDim - 1) Double.PositiveInfinity else hi
+        val x = q(d)
+        if (x < below) below - x else if (x > above) x - above else 0.0
+      }
+      def same(a: Double, b: Double) =
+        java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b)
+      same(Grid.cellLowerBoundSqL2(q, cell, cfg), gaps.foldLeft(0.0)((s, g) => s + g * g)) &&
+      same(Grid.cellLowerBoundL1(q, cell, cfg), gaps.foldLeft(0.0)(_ + _)) &&
+      same(Grid.cellLowerBoundLInf(q, cell, cfg), gaps.foldLeft(0.0)((m, g) => if (g > m) g else m)) &&
+      same(Grid.cellLowerBoundMahalanobisDiag(q, cell, cfg, inv),
+        gaps.indices.foldLeft(0.0)((s, d) => s + gaps(d) * gaps(d) * inv(d)))
+    }
+    check(p, "equal-width closed-form pin")
   }
 
   test("cellOf is total and stable over [lower,upper] plus out-of-bounds points") {

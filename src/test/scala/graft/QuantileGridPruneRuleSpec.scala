@@ -2,13 +2,13 @@ package graft
 
 import graft.functions.Distances
 import graft.index.{Grid, GridConfig, QuantileGrid}
-import graft.plans.{GridRadiusPruning, QuantileGridRadiusPruning}
+import graft.plans.GridRadiusPruning
 import org.apache.spark.sql.functions._
 
-/** Automatic radius pruning over QUANTILE-calibrated stores: the sibling
+/** Automatic radius pruning over QUANTILE-calibrated stores: the grid
   * rule must inject an admissible cell list from the interval bounds,
-  * reach the scan as a partition filter, never bind a foreign geometry,
-  * and compose with the equal-width rule in one optimizer batch. */
+  * reach the scan as a partition filter, never bind a foreign geometry of
+  * either kind, and inject once when both kinds are registered. */
 class QuantileGridPruneRuleSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -27,21 +27,18 @@ class QuantileGridPruneRuleSpec extends SparkSpecBase {
     QuantileGrid.calibrate(df, "embedding", partsPerDim = 8, gridDims = 2, dim = 2)
   private lazy val store = {
     val p = java.nio.file.Files.createTempDirectory("graft_qprune_rule").toString
-    QuantileGrid.withCellId(df, "embedding", qcfg)
+    Grid.withCellId(df, "embedding", qcfg)
       .write.mode("overwrite").partitionBy("cell_id").parquet(p)
     p
   }
   private val q = Array(0.05, 0.05)
   private val r = 0.01
 
-  private def clearRegistries(): Unit = {
-    spark.conf.unset(QuantileGridRadiusPruning.ConfKey)
-    spark.conf.unset(GridRadiusPruning.ConfKey)
-  }
+  private def clearRegistries(): Unit = spark.conf.unset(GridRadiusPruning.ConfKey)
 
   test("radius filter over a quantile store auto-gains cell pruning; result identical to plain") {
     clearRegistries()
-    QuantileGridRadiusPruning.register(spark, qcfg, store)
+    GridRadiusPruning.register(spark, qcfg, store)
     val indexed = spark.read.parquet(store)
     val dist = Distances.squaredL2Lit(col("embedding"), q)
     val pruned = indexed.filter(dist <= lit(r)).select("vec_id")
@@ -54,7 +51,7 @@ class QuantileGridPruneRuleSpec extends SparkSpecBase {
         .contains("cell_id"),
       s"pruning did not reach the scan:\n$phys")
     val got = pruned.collect().map(_.getLong(0)).sorted.toSeq
-    spark.conf.unset(QuantileGridRadiusPruning.ConfKey)
+    clearRegistries()
     val plain = indexed.filter(dist <= lit(r)).select("vec_id")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got == plain && got.nonEmpty)
@@ -62,7 +59,7 @@ class QuantileGridPruneRuleSpec extends SparkSpecBase {
 
   test("all four reference metrics prune admissibly (≡ brute membership) on the quantile geometry") {
     clearRegistries()
-    QuantileGridRadiusPruning.register(spark, qcfg, store)
+    GridRadiusPruning.register(spark, qcfg, store)
     val indexed = spark.read.parquet(store)
     val w = Array(2.0, 0.5)
     val cases: Seq[(org.apache.spark.sql.Column, Array[Float] => Double, Double)] = Seq(
@@ -87,9 +84,9 @@ class QuantileGridPruneRuleSpec extends SparkSpecBase {
     * fingerprint metadata survives the parquet footer — the same binding
     * path GridPruneRuleSpec exercises (a LocalRelation would be constant-
     * folded before the rule could fire). */
-  private def flatStore(cfg: graft.index.QuantileGridConfig): String = {
+  private def flatStore(cfg: graft.index.GridGeometry): String = {
     val p = java.nio.file.Files.createTempDirectory("graft_qprune_md").toString
-    QuantileGrid.withCellId(df, "embedding", cfg)
+    Grid.withCellId(df, "embedding", cfg)
       .write.mode("overwrite").parquet(p)
     p
   }
@@ -99,22 +96,30 @@ class QuantileGridPruneRuleSpec extends SparkSpecBase {
     // register a DIFFERENT quantile geometry (other boundaries) — the
     // fingerprinted column must refuse to prune
     val foreign = qcfg.copy(boundaries = qcfg.boundaries.map(_.map(_ + 0.123)))
-    QuantileGridRadiusPruning.register(spark, foreign)
-    // also register an equal-width config of the same dim on ITS registry:
-    // disjoint metadata keys mean it can never see this column either
-    GridRadiusPruning.register(spark,
-      GridConfig(dim = 2, lower = 0.0, upper = 1.0, partsPerDim = 8, gridDims = 2))
+    GridRadiusPruning.register(spark, foreign)
+    // also register an unbound equal-width config of the same dim: the
+    // column's quantile fingerprint key means it can never bind it either
+    val ew = GridConfig(dim = 2, lower = 0.0, upper = 1.0, partsPerDim = 8, gridDims = 2)
+    GridRadiusPruning.register(spark, ew)
     val dist = Distances.squaredL2Lit(col("embedding"), q)
     val opt = spark.read.parquet(flatStore(qcfg)).filter(dist <= lit(r))
       .queryExecution.optimizedPlan.toString
     assert(!opt.matches("(?s).*cell_id#\\d+L? IN.*"),
       s"foreign geometry pruned a column it must refuse:\n$opt")
+    // the other direction: an equal-width-stamped column with only a
+    // same-dim quantile geometry registered must refuse too
+    clearRegistries()
+    GridRadiusPruning.register(spark, qcfg)
+    val optEw = spark.read.parquet(flatStore(ew)).filter(dist <= lit(r))
+      .queryExecution.optimizedPlan.toString
+    assert(!optEw.matches("(?s).*cell_id#\\d+L? IN.*"),
+      s"quantile geometry pruned an equal-width column:\n$optEw")
     clearRegistries()
   }
 
-  test("matching fingerprint prunes the stored column; both rules coexist at fixed point") {
+  test("matching fingerprint prunes the stored column; both geometries coexist at fixed point") {
     clearRegistries()
-    QuantileGridRadiusPruning.register(spark, qcfg)
+    GridRadiusPruning.register(spark, qcfg)
     GridRadiusPruning.register(spark,
       GridConfig(dim = 2, lower = 0.0, upper = 1.0, partsPerDim = 8, gridDims = 2))
     val dist = Distances.squaredL2Lit(col("embedding"), q)
@@ -149,6 +154,32 @@ class QuantileGridPruneRuleSpec extends SparkSpecBase {
     clearRegistries()
   }
 
+  test("re-bucketing a path from equal-width to quantile cells evicts the stale equal-width binding") {
+    // the SAME path first holds an equal-width store, then is rewritten
+    // with the calibrated quantile geometry and re-registered: the
+    // equal-width entry for that path must be gone, or it binds first and
+    // injects its inadmissible `cell_id IN (0,1,8)` against quantile cells.
+    // A fresh session, so the registrations below are its first ones.
+    val fresh = spark.newSession()
+    val ew = GridConfig(dim = 2, lower = 0.0, upper = 1.0, partsPerDim = 8, gridDims = 2)
+    val p = java.nio.file.Files.createTempDirectory("graft_qprune_rebkt").toString
+    Grid.withCellId(df, "embedding", ew)
+      .write.mode("overwrite").partitionBy("cell_id").parquet(p)
+    GridRadiusPruning.register(fresh, ew, p)
+    Grid.withCellId(df, "embedding", qcfg)
+      .write.mode("overwrite").partitionBy("cell_id").parquet(p)
+    GridRadiusPruning.register(fresh, qcfg, p)
+    val got = fresh.read.parquet(p)
+      .filter(Distances.squaredL2Lit(col("embedding"), q) <= lit(r))
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    val want = pts.filter { case (_, v) =>
+      val dx = v(0).toDouble - q(0); val dy = v(1).toDouble - q(1)
+      dx * dx + dy * dy <= r
+    }.map(_._1).toSet
+    assert(want.nonEmpty, "radius vacuous")
+    assert(got == want, s"stale binding dropped rows: pruned ${got.size} vs brute ${want.size}")
+  }
+
   test("over-cap geometry (numCells > MaxEnumCells) degrades to no pruning, result unchanged") {
     clearRegistries()
     // 1025² ≈ 1.05M cells — past the driver-enumeration cap: optimizing a
@@ -157,7 +188,7 @@ class QuantileGridPruneRuleSpec extends SparkSpecBase {
     val edges = (1 to 1024).map(_ / 1025.0)
     val hugeCfg = graft.index.QuantileGridConfig(2, Seq(edges, edges))
     assert(hugeCfg.numCells > GridRadiusPruning.MaxEnumCells)
-    QuantileGridRadiusPruning.register(spark, hugeCfg, store)
+    GridRadiusPruning.register(spark, hugeCfg, store)
     val indexed = spark.read.parquet(store)
     val dist = Distances.squaredL2Lit(col("embedding"), q)
     val pruned = indexed.filter(dist <= lit(r)).select("vec_id")
@@ -166,7 +197,7 @@ class QuantileGridPruneRuleSpec extends SparkSpecBase {
     clearRegistries()
     val plain = indexed.filter(dist <= lit(r)).select("vec_id")
       .collect().map(_.getLong(0)).sorted.toSeq
-    QuantileGridRadiusPruning.register(spark, hugeCfg, store)
+    GridRadiusPruning.register(spark, hugeCfg, store)
     val got = pruned.collect().map(_.getLong(0)).sorted.toSeq
     assert(got == plain)
     clearRegistries()

@@ -33,27 +33,27 @@ class QuantileGridSpec extends SparkSpecBase {
       bs.foreach(b => assert(BigDecimal(b).scale <= 6))
     }
     val v = Array(0.1, 0.5, 1.7, 0.0)
-    val dec = QuantileGrid.decode(QuantileGrid.cellOf(v, cfg), cfg)
-    (0 until 3).foreach(d => assert(dec(d) == QuantileGrid.bucketOf(v(d), d, cfg)))
-    QuantileGrid.withCellId(df, "embedding", cfg)
+    val dec = Grid.decode(Grid.cellOf(v, cfg), cfg)
+    (0 until 3).foreach(d => assert(dec(d) == cfg.bucketOf(v(d), d)))
+    Grid.withCellId(df, "embedding", cfg)
       .select("embedding", "cell_id").collect().foreach { r =>
         val vv = r.getSeq[Float](0).map(_.toDouble).toArray
-        assert(r.getLong(1) == QuantileGrid.cellOf(vv, cfg))
+        assert(r.getLong(1) == Grid.cellOf(vv, cfg))
       }
   }
 
   test("pruned ≡ brute on skewed data — one-scan path AND forced widening loop") {
     val df = skewed(400, 4, 23)
     val cfg = QuantileGrid.calibrate(df, "embedding", 4, 3, 4)
-    val indexed = QuantileGrid.withCellId(df, "embedding", cfg).cache()
+    val indexed = Grid.withCellId(df, "embedding", cfg).cache()
     val rnd = new scala.util.Random(7)
     (0 until 5).foreach { _ =>
       val q = Array.fill(4)(-math.log(rnd.nextDouble()) / 3.0)
       val brute = Knn.bruteForce(df, Distances.squaredL2Lit(col("embedding"), q), 10)
         .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
       for (th <- Seq(0L, 200000L)) {
-        val pruned = QuantileGrid
-          .prunedKnnDf(spark, indexed, cfg, q, 10, bruteForceThreshold = th)
+        val pruned = Knn
+          .prunedSearchDf(spark, indexed, cfg, q, 10, bruteForceThreshold = th)
           .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
         assert(pruned == brute, s"threshold=$th q=${q.toSeq}")
       }
@@ -68,7 +68,7 @@ class QuantileGridSpec extends SparkSpecBase {
       Array(0.0, 0.0, 0.0, 0.0), Array(2.0, 2.0, 2.0, 2.0),
       Array(0.3, 1.0, 0.05, 0.7), Array(-1.0, 3.0, 0.4, 0.2))
     for (q <- qs; p <- pts) {
-      val bound = QuantileGrid.cellLowerBoundSqL2(q, QuantileGrid.cellOf(p, cfg), cfg)
+      val bound = Grid.cellLowerBoundSqL2(q, Grid.cellOf(p, cfg), cfg)
       val d = p.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum
       assert(bound <= d + 1e-12, s"q=${q.toSeq} p=${p.toSeq}: $bound > $d")
     }
@@ -80,7 +80,7 @@ class QuantileGridSpec extends SparkSpecBase {
     val ecfg = GridConfig(4, lower = 0.0, upper = 2.0, partsPerDim = 4, gridDims = 3)
     def maxCell(dfc: org.apache.spark.sql.DataFrame): Long =
       dfc.groupBy("cell_id").count().agg(max("count")).head().getLong(0)
-    val qMax = maxCell(QuantileGrid.withCellId(df, "embedding", qcfg))
+    val qMax = maxCell(Grid.withCellId(df, "embedding", qcfg))
     val eMax = maxCell(Grid.withCellId(df, "embedding", ecfg))
     assert(qMax * 2 < eMax, s"quantile max $qMax vs equal-width max $eMax")
   }
@@ -91,15 +91,15 @@ class QuantileGridSpec extends SparkSpecBase {
       partsPerDim = 4, gridDims = 3, dim = 4, rowCount = 3000, sampleTarget = 500)
     // sampled boundaries still balance: max cell well under the skewed
     // equal-width pile-up (uniform share would be 3000/64 ≈ 47)
-    val mx = QuantileGrid.withCellId(df, "embedding", cfg)
+    val mx = Grid.withCellId(df, "embedding", cfg)
       .groupBy("cell_id").count().agg(max("count")).head().getLong(0)
     assert(mx < 8L * 3000 / 64, s"sampled calibration left a hot cell of $mx")
     // pruning correctness never depends on boundary placement
     val q = Array(0.4, 0.1, 0.9, 0.2)
     val brute = Knn.bruteForce(df, Distances.squaredL2Lit(col("embedding"), q), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    val pruned = QuantileGrid.prunedKnnDf(spark,
-        QuantileGrid.withCellId(df, "embedding", cfg), cfg, q, 10,
+    val pruned = Knn.prunedSearchDf(spark,
+        Grid.withCellId(df, "embedding", cfg), cfg, q, 10,
         bruteForceThreshold = 0L)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     assert(pruned == brute)
@@ -119,7 +119,7 @@ class QuantileGridSpec extends SparkSpecBase {
     }
     val cfg0 = QuantileGrid.calibrate(uniform, "embedding", 4, 3, 4)
     val drifted = skewed(1500, 4, 17)
-    val staleState = QuantileGrid.withCellId(drifted, "embedding", cfg0).cache()
+    val staleState = Grid.withCellId(drifted, "embedding", cfg0).cache()
     def maxCell(df: org.apache.spark.sql.DataFrame): Long =
       df.groupBy("cell_id").count().agg(max("count")).head().getLong(0)
     val staleMax = maxCell(staleState)

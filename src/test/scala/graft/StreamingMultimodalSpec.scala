@@ -44,7 +44,7 @@ class StreamingMultimodalSpec extends SparkSpecBase {
     q.awaitTermination()
     val stored = spark.read.parquet(s"$tmp/store")
     assert(stored.count() === 100)
-    val batchCells = graft.index.QuantileGrid.withCellId(emb, "embedding", qcfg)
+    val batchCells = graft.index.Grid.withCellId(emb, "embedding", qcfg)
       .groupBy("cell_id").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val streamCells = stored.groupBy("cell_id").count().collect()
