@@ -41,7 +41,7 @@ object ScaleProbe extends App {
   }
   val indexed = spark.read.parquet(store)
   val counts = t("cell counts (index stats)") {
-    indexed.groupBy("cell_id").count().collect().map(r => r.getAs[Number](0).longValue() -> r.getLong(1)).toMap
+    Knn.cellCounts(indexed)
   }
   t("pruned kNN k=10 (warm 2nd run)") {
     Knn.prunedSearch(indexed, cfg, Fixtures.Q64, 10, cellCountsCache = Some(counts))

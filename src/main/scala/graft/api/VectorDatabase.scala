@@ -3,6 +3,7 @@ package graft.api
 import graft.functions.Distances
 import graft.index.{Grid, GridConfig, GridGeometry}
 import graft.operators.{Knn, Snapshot}
+import graft.plans.GridRadiusPruning
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -97,6 +98,11 @@ object MahalanobisFull {
   * At scale: `state` carries a `cell_id` column; persist with
   * `save()` (`partitionBy("cell_id")`) so kNN candidate-cell pruning becomes
   * file-level partition pruning on a 100 TB store.
+  *
+  * Each snapshot holds its own index stats (`cell_id → rows`), aggregated
+  * once on its first kNN or radius call; later calls scan only candidate
+  * cells. A mutation returns a snapshot with no stats, never its parent's:
+  * an insert or a move can fill a cell the parent did not have.
   */
 final class VectorDatabase private (
     val spark: SparkSession,
@@ -104,6 +110,14 @@ final class VectorDatabase private (
     val cfg: GridConfig,
     val defaultMetric: Metric,
     private val nextIdBase: Long) {
+
+  /** cell_id → rows of this snapshot, filled by one aggregation on first
+    * use. Held only while the geometry's cell count is within the driver
+    * cap shared with the prune rule ([[GridRadiusPruning.MaxEnumCells]]);
+    * larger geometries keep the distributed stats path of
+    * [[Knn.prunedSearch]]. */
+  private lazy val cellStats: Option[Map[Long, Long]] =
+    if (cfg.numCells <= GridRadiusPruning.MaxEnumCells) Some(Knn.cellCounts(state)) else None
 
   /** dim accessor (reference database.py:22-25). */
   def dim: Int = cfg.dim
@@ -181,7 +195,8 @@ final class VectorDatabase private (
       metric: Option[Metric] = None): Seq[Knn.Neighbor] = {
     val m = metric.getOrElse(defaultMetric)
     Knn.prunedSearch(state, cfg, q, k, pred = filter,
-      cellBound = m.cellBound, distExpr = Some(m.dist(col("embedding"), q)))
+      cellBound = m.cellBound, distExpr = Some(m.dist(col("embedding"), q)),
+      cellCountsCache = cellStats)
   }
 
   /** Radius (range) search: every stored vector within distance `r` of
@@ -194,7 +209,8 @@ final class VectorDatabase private (
       metric: Option[Metric] = None): DataFrame = {
     val m = metric.getOrElse(defaultMetric)
     Knn.prunedRadius(state, cfg, q, r, pred = filter,
-      cellBound = m.cellBound, distExpr = Some(m.dist(col("embedding"), q)))
+      cellBound = m.cellBound, distExpr = Some(m.dist(col("embedding"), q)),
+      cellCountsCache = cellStats)
   }
 
   /** Batch kNN join: k nearest stored vectors for EVERY query row — the

@@ -67,19 +67,6 @@ object QuantileGrid {
     }.mkString("[", ", ", "]")
   }
 
-  def bucketSql(col: String, dimIdx: Int, cfg: QuantileGridConfig): String = {
-    import graft.oracle.DuckSql.fmt
-    cfg.boundaries(dimIdx).map(b =>
-      s"(CASE WHEN CAST($col[${dimIdx + 1}] AS DOUBLE) >= ${fmt(b)} THEN 1 ELSE 0 END)")
-      .mkString("(", " + ", ")")
-  }
-
-  /** Mixed-radix cell id over the gridded dims, as DuckDB SQL. */
-  def cellIdSql(col: String, cfg: QuantileGridConfig): String =
-    (0 until cfg.gridDims).map { d =>
-      s"(CAST(${bucketSql(col, d, cfg)} AS BIGINT) * ${cfg.weights(d)})"
-    }.mkString("(", " + ", ")")
-
   /** Re-calibration maintenance — the quantile sibling of [[Grid.maintain]]
     * (whose trigger is leaf overflow; here the trigger is DRIFT): boundary
     * tables are computed from a snapshot of the data, and a distribution

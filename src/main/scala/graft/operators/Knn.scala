@@ -59,8 +59,12 @@ object Knn {
     * reference's `bound > current_neighbors[-1]` break
     * (kd_tree_database.py:213-218).
     *
-    * `cellCounts` (cell_id → rows) is computed once per index build and
-    * reused across queries — the analog of the tree structure itself.
+    * `cellCountsCache` (cell_id → rows, see [[cellCounts]]) is computed
+    * once per index build and reused across queries — the analog of the
+    * tree structure itself. With it, a query runs only its scan rounds;
+    * without it, each call first aggregates the stats over the whole store.
+    * `VectorDatabase` holds one such map per snapshot. Each widening round
+    * scans only the cells it adds (see [[widen]]).
     * Works over either [[GridGeometry]] (equal-width or quantile cells).
     */
   def prunedSearch(
@@ -105,19 +109,37 @@ object Knn {
       bruteForceThreshold: Long = 200000L): Seq[Neighbor] = {
 
     cellCountsCache match {
-      case Some(cc) =>
-        // Caller already holds the stats map (index-build artifact, amortized
-        // across queries) — rank it in place, exactly as before.
-        if (cc.isEmpty) return Seq.empty // empty DB → empty result (tests:70-77)
-        val ranked: Array[(Long, Double, Long)] = cc.toArray
-          .map { case (cell, n) => (cell, bound(cell), n) }
-          .sortBy { case (cell, b, _) => (b, cell) }
-        widen(indexed, dist, k, pred, bruteForceThreshold,
-          nCells = ranked.length.toLong, totalRows = cc.values.sum,
-          entry = i => ranked(i.toInt))
+      case Some(cc) => rankedSearch(indexed, dist, k, bound, pred, cc, bruteForceThreshold)
       case None =>
         prunedSearchDistributed(indexed, dist, k, bound, pred, bruteForceThreshold)
     }
+  }
+
+  /** Per-cell row counts (cell_id → rows) of a cell-indexed store: one
+    * aggregation job, O(non-empty cells) driver memory. A parquet
+    * partition column reads back as INT, so the key is normalized to Long. */
+  def cellCounts(indexed: DataFrame): Map[Long, Long] =
+    indexed.groupBy(col("cell_id").cast("long")).count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Cached-stats path: the caller holds the stats map (index-build
+    * artifact, amortized across queries), so the cells are ranked on the
+    * driver and the query runs no job over the whole store. */
+  private def rankedSearch(
+      indexed: DataFrame,
+      dist: Column,
+      k: Int,
+      bound: Long => Double,
+      pred: Option[Column],
+      cc: Map[Long, Long],
+      bruteForceThreshold: Long): Seq[Neighbor] = {
+    if (cc.isEmpty) return Seq.empty // empty DB → empty result (tests:70-77)
+    val ranked: Array[(Long, Double, Long)] = cc.toArray
+      .map { case (cell, n) => (cell, bound(cell), n) }
+      .sortBy { case (cell, b, _) => (b, cell) }
+    widen(indexed, dist, k, pred, bruteForceThreshold,
+      nCells = ranked.length.toLong, totalRows = cc.values.sum,
+      entry = i => ranked(i.toInt))
   }
 
   /** No-cache path: stats + bound pricing stay on the cluster; the driver
@@ -175,15 +197,7 @@ object Knn {
       // on the driver. Same results; O(cells) driver memory, so only sane
       // for small stores (the pre-r13 behavior).
       case e: Throwable if isNotSerializable(e) =>
-        priced.unpersist(false)
-        val cc = indexed.groupBy("cell_id").count().collect()
-          .map(r => r.getAs[Number](0).longValue() -> r.getLong(1)).toMap
-        if (cc.isEmpty) return Seq.empty
-        val ranked = cc.toArray
-          .map { case (cell, n) => (cell, bound(cell), n) }
-          .sortBy { case (cell, b, _) => (b, cell) }
-        widen(indexed, dist, k, pred, bruteForceThreshold,
-          ranked.length.toLong, cc.values.sum, i => ranked(i.toInt))
+        rankedSearch(indexed, dist, k, bound, pred, cellCounts(indexed), bruteForceThreshold)
     } finally priced.unpersist(false)
   }
 
@@ -208,7 +222,14 @@ object Knn {
 
   /** The widening loop over an abstract ranked-cell accessor. `entry(i)`
     * must return the i-th non-empty cell as (cell_id, lowerBound, rowCount)
-    * in (bound ASC, cell_id ASC) order, for 0 ≤ i < nCells. */
+    * in (bound ASC, cell_id ASC) order, for 0 ≤ i < nCells.
+    *
+    * Each round scans only the cells added since the last round and merges
+    * their top-k into the kept top-k on the driver under the same total
+    * order `(dist ASC, vec_id ASC)`. Cells are disjoint, so the merge equals
+    * the top-k of every scanned cell: the stop rule sees the same kth
+    * distance as a rescan of the whole prefix would, and no cell is read
+    * twice. */
   private def widen(
       indexed: DataFrame,
       dist: Column,
@@ -257,13 +278,22 @@ object Knn {
         cum += entry(take)._3
         take += 1
       }
-      acc = scanCells((0L until take).map(entry(_)._1))
+      acc = mergeTopK(acc, scanCells((scanned until take).map(entry(_)._1)), k)
       scanned = take
       val kth = if (acc.size >= k) acc.last.dist else Double.PositiveInfinity
       done = scanned >= nCells || entry(scanned)._2 > kth
     }
     acc
   }
+
+  /** Top-k of two result lists under the scan's `(dist ASC, vec_id ASC)`
+    * order, comparing doubles as Spark's sort does: NaN after every number,
+    * −0.0 equal to 0.0. */
+  private[graft] def mergeTopK(a: Seq[Neighbor], b: Seq[Neighbor], k: Int): Seq[Neighbor] =
+    (a ++ b).sortWith { (x, y) =>
+      val c = if (x.dist == y.dist) 0 else java.lang.Double.compare(x.dist, y.dist)
+      c < 0 || (c == 0 && x.vec_id < y.vec_id)
+    }.take(k)
 
   /** Radius (range) search — the other half of a vector-DB read API next
     * to top-k: every row within distance `r`, ordered `(dist ASC, id ASC)`.
@@ -289,7 +319,9 @@ object Knn {
     * front — exactly the cells whose closed-form lower bound is ≤ r — so
     * there is no widening loop, just one scan over the candidate cells
     * (partition pruning on a cell-partitioned store). Exact: a cell with
-    * bound > r cannot contain a point within r. */
+    * bound > r cannot contain a point within r. The non-empty cells come
+    * from `cellCountsCache` when the caller holds the stats (as in
+    * [[prunedSearch]]), else from one distinct-cells job. */
   def prunedRadius(
       indexed: DataFrame,
       cfg: GridGeometry,
@@ -297,10 +329,12 @@ object Knn {
       r: Double,
       pred: Option[Column] = None,
       cellBound: (Array[Double], Long, GridGeometry) => Double = Grid.cellLowerBoundSqL2,
-      distExpr: Option[Column] = None): DataFrame = {
-    val cells = indexed.select(col("cell_id")).distinct().collect()
-      .map(_.getAs[Number](0).longValue())
-      .filter(cell => cellBound(q, cell, cfg) <= r)
+      distExpr: Option[Column] = None,
+      cellCountsCache: Option[Map[Long, Long]] = None): DataFrame = {
+    val nonEmpty = cellCountsCache.map(_.keys.toArray).getOrElse(
+      indexed.select(col("cell_id")).distinct().collect()
+        .map(_.getAs[Number](0).longValue()))
+    val cells = nonEmpty.filter(cell => cellBound(q, cell, cfg) <= r)
     val dist = distExpr.getOrElse(Distances.squaredL2Lit(col("embedding"), q))
     val base =
       if (cells.isEmpty) indexed.filter(lit(false))

@@ -2,6 +2,8 @@ package graft
 
 import graft.api.{L1, SquaredL2, VectorDatabase}
 import graft.core.{Fixtures, Tables}
+import graft.index.GridConfig
+import graft.operators.Knn
 import org.apache.spark.sql.functions._
 
 /** The reference VectorDatabase contract exercised through the typed facade
@@ -240,5 +242,68 @@ class ApiSpec extends SparkSpecBase {
     assert(nn.map(_.vec_id).toSet.subsetOf(rows.map(_._1).toSet))
     // sorted (dist, id)
     assert(rows.sortBy(p => (p._2, p._1)).toSeq == rows.toSeq)
+  }
+
+  // A saved store one row above the facade's 200k brute-force threshold, so
+  // kNN takes the pruned path. Dim 0 stays in [-1, 0), so every cell with a
+  // dim-0 bucket of 2 or 3 is empty; dims 3..7 stay near 0, so a query's
+  // nearest rows sit in its own cell.
+  private val BigRows = 200001L
+  private lazy val big: VectorDatabase = {
+    val cfg = GridConfig(dim = 8, lower = -1.0, upper = 1.0, partsPerDim = 4, gridDims = 3)
+    def u(d: Int) = pmod(xxhash64(col("id"), lit(d)), lit(1000000L)).cast("double") / 1e6
+    val emb = array(Seq(u(0) - 1.0, u(1) * 2.0 - 1.0, u(2) * 2.0 - 1.0) ++
+      (3 until 8).map(u(_) * 0.01): _*).cast("array<float>")
+    val df = spark.range(0, BigRows).select(col("id").as("vec_id"), emb.as("embedding"),
+      (col("id") % 10).cast("int").as("label"))
+    val path = java.nio.file.Files.createTempDirectory("graftbig").toString + "/store"
+    VectorDatabase.fromDataFrame(spark, df, cfg).save(path)
+    VectorDatabase.load(spark, path, cfg)
+  }
+  private val bigQ = Array(-0.25, -0.25, 0.25, 0.005, 0.005, 0.005, 0.005, 0.005)
+
+  private def bruteTop(db: VectorDatabase, q: Array[Double], k: Int): Seq[(Long, Double)] =
+    Knn.bruteForce(db.state, SquaredL2.dist(col("embedding"), q), k).collect()
+      .map(r => (r.getLong(0), r.getDouble(2))).toSeq
+  private def knnTop(db: VectorDatabase, q: Array[Double], k: Int): Seq[(Long, Double)] =
+    db.findKNearestNeighbors(q, k).map(n => (n.vec_id, n.dist))
+
+  test("a snapshot's index stats are built once: later kNN and radius calls scan only cells") {
+    val first = knnTop(big, bigQ, 10) // fills the snapshot's stats
+    assert(first == bruteTop(big, bigQ, 10))
+    val sc = spark.sparkContext
+    val (second, knnJobs) = org.apache.spark.JobInputRows.of(sc)(knnTop(big, bigQ, 10))
+    assert(second == first)
+    assert(knnJobs.nonEmpty && knnJobs.forall(_ < BigRows), s"rows read per job: $knnJobs")
+    val r = first.last._2
+    val (inR, radiusJobs) = org.apache.spark.JobInputRows.of(sc) {
+      big.radiusSearch(bigQ, r).collect().map(x => x.getLong(0))
+    }
+    assert(first.map(_._1).toSet.subsetOf(inR.toSet))
+    assert(radiusJobs.nonEmpty && radiusJobs.forall(_ < BigRows), s"rows read per job: $radiusJobs")
+  }
+
+  test("index stats never leak from a snapshot to the snapshots written from it") {
+    import spark.implicits._
+    val nearest = knnTop(big, bigQ, 10) // fills the parent's stats
+    assert(nearest == bruteTop(big, bigQ, 10))
+    // insert a row into a cell the parent has no row in
+    val pIns = Array(0.75, 0.125, 0.125, 0.0, 0.0, 0.0, 0.0, 0.0)
+    val (inserted, ids) = big.insert(Seq((pIns.map(_.toFloat), 3)).toDF("embedding", "label"))
+    val newId = ids.collect().head.getLong(0)
+    val afterInsert = knnTop(inserted, pIns, 10)
+    assert(afterInsert.head == ((newId, 0.0)))
+    assert(afterInsert == bruteTop(inserted, pIns, 10))
+    // move a row into another cell the parent has no row in
+    val pMove = Array(0.25, -0.625, 0.625, 0.0, 0.0, 0.0, 0.0, 0.0)
+    val moved = big.updatePosition(Seq((5L, pMove.map(_.toFloat))).toDF("vec_id", "embedding"))
+    val afterMove = knnTop(moved, pMove, 10)
+    assert(afterMove.head == ((5L, 0.0)))
+    assert(afterMove == bruteTop(moved, pMove, 10))
+    // delete the parent's nearest row
+    val deleted = big.delete(Seq(nearest.head._1))
+    val afterDelete = knnTop(deleted, bigQ, 10)
+    assert(!afterDelete.exists(_._1 == nearest.head._1))
+    assert(afterDelete == bruteTop(deleted, bigQ, 10))
   }
 }

@@ -60,21 +60,61 @@ class KnnSpec extends SparkSpecBase {
     // 900-cell 2-dim grid over 2000 skewed rows (~2 rows/cell), far-corner
     // query + large k ⇒ the widening loop pages past the initial 256-cell
     // prefix through several geometric fetches — the de-O(cells) path's
-    // pager, exercised end to end with NO stats cache
+    // pager, exercised end to end with NO stats cache. Every case also runs
+    // on the cached-stats path, and each widening round scans only its new
+    // cells, so these pin the driver-side merge of per-round top-ks too.
     val cfg = GridConfig(dim = 2, lower = 0.0, upper = 1.0, partsPerDim = 30, gridDims = 2)
     val rnd = new scala.util.Random(31)
-    val db = (0L until 2000L).map { i =>
-      (i, Array(math.pow(rnd.nextDouble(), 2).toFloat, rnd.nextFloat()), rnd.nextInt(5))
-    }.toDF("vec_id", "embedding", "label")
-    val idx = Grid.withCellId(db, "embedding", cfg)
     val q = Array(0.98, 0.97)
-    val dist = Distances.squaredL2Lit(col("embedding"), q)
-    for (k <- Seq(50, 400)) {
-      val brute = Knn.bruteForce(db, dist, k).collect()
+    // eight rows at one position near the query, ids out of insertion order:
+    // with kTie the kth distance falls inside the group, so the id breaks it
+    val dupAt = Array(0.9f, 0.9f)
+    val rows = (0L until 2000L).map { i =>
+      (i, Array(math.pow(rnd.nextDouble(), 2).toFloat, rnd.nextFloat()), rnd.nextInt(5))
+    } ++ Seq(2005L, 2001L, 2007L, 2000L, 2003L, 2006L, 2002L, 2004L).map(i => (i, dupAt, 1))
+    // checkpointed so no round is folded into a driver-side local relation:
+    // each widening round then runs as one Spark job
+    val db = rows.toDF("vec_id", "embedding", "label").localCheckpoint()
+    val idx = Grid.withCellId(db, "embedding", cfg)
+    val counts = Knn.cellCounts(idx)
+    def sqL2(v: Array[Float]): Double = v.indices.map(d => math.pow(v(d).toDouble - q(d), 2)).sum
+    val kTie = rows.count(r => sqL2(r._2) < sqL2(dupAt)) + 3
+    val l2 = Distances.squaredL2Lit(col("embedding"), q)
+    val l1 = Distances.l1Lit(col("embedding"), q)
+    val l2Bound: (Array[Double], Long, GridGeometry) => Double = Grid.cellLowerBoundSqL2
+    val l1Bound: (Array[Double], Long, GridGeometry) => Double = Grid.cellLowerBoundL1
+    // (name, distance, cell bound, filter, k, least widening rounds)
+    val cases = Seq(
+      ("l2", l2, l2Bound, None, 50, 1),
+      ("l2", l2, l2Bound, None, 400, 1),
+      ("l2 tie at kth", l2, l2Bound, None, kTie, 1),
+      // no row near the query passes: the first-ranked cells yield nothing
+      ("l2 filter empties nearest cells", l2, l2Bound, Some(col("embedding")(0) < 0.6), 20, 2),
+      ("l1", l1, l1Bound, None, 5, 1),
+      ("l1 filter empties nearest cells", l1, l1Bound, Some(col("embedding")(0) < 0.6), 2, 3))
+    for ((name, dist, bound, pred, k, minRounds) <- cases; cache <- Seq(None, Some(counts))) {
+      val brute = Knn.bruteForce(db, dist, k, pred = pred).collect()
         .map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      val pruned = Knn.prunedSearch(idx, cfg, q, k, bruteForceThreshold = 0L)
-        .map(n => (n.vec_id, n.dist))
-      assert(pruned == brute, s"k=$k")
+      val (pruned, jobs) = org.apache.spark.JobInputRows.of(spark.sparkContext) {
+        Knn.prunedSearch(idx, cfg, q, k, pred = pred, cellBound = bound,
+          distExpr = Some(dist), cellCountsCache = cache, bruteForceThreshold = 0L)
+      }
+      assert(pruned.map(n => (n.vec_id, n.dist)) == brute, s"$name k=$k cached=${cache.isDefined}")
+      // with cached stats every job is one widening round
+      if (cache.isDefined) assert(jobs.size >= minRounds, s"$name widened ${jobs.size} rounds")
+    }
+  }
+
+  test("widening merge orders (dist, vec_id) as Spark's sort does: NaN last, -0.0 == 0.0") {
+    import spark.implicits._
+    val a = Seq(Knn.Neighbor(4, 0, 0.0), Knn.Neighbor(9, 0, 1.5), Knn.Neighbor(2, 0, Double.NaN))
+    val b = Seq(Knn.Neighbor(3, 0, -0.0), Knn.Neighbor(1, 0, 1.5), Knn.Neighbor(0, 0, Double.NaN),
+      Knn.Neighbor(7, 0, Double.PositiveInfinity))
+    for (k <- 1 to 7) {
+      val bySpark = (a ++ b).toDS().orderBy(col("dist").asc, col("vec_id").asc).limit(k)
+        .collect().map(_.vec_id).toSeq
+      for ((x, y) <- Seq((a, b), (b, a)))
+        assert(Knn.mergeTopK(x, y, k).map(_.vec_id) == bySpark, s"k=$k")
     }
   }
 
