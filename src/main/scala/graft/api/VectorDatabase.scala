@@ -1,9 +1,9 @@
 package graft.api
 
-import graft.functions.Distances
+import graft.functions.{Distances, VecMetric}
 import graft.index.{Grid, GridConfig, GridGeometry}
 import graft.operators.{Knn, Snapshot}
-import graft.plans.GridRadiusPruning
+import graft.plans.{GridRadiusPruning, KnnJoinPlan}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -215,11 +215,27 @@ final class VectorDatabase private (
 
   /** Batch kNN join: k nearest stored vectors for EVERY query row — the
     * cluster-scale form of [[findKNearestNeighbors]] (SURVEY §2.1 #1
-    * batch-of-queries). Skew-safe bounded top-k aggregation under the hood. */
+    * batch-of-queries). `queries` holds `queryIdCol` (any integral type)
+    * and `embedding`; the result is (query_id LONG, vec_id LONG,
+    * dist DOUBLE, rn INT), ranked (dist ASC, vec_id ASC).
+    *
+    * Runs on [[graft.plans.KnnJoinExec]]: one pass over each store
+    * partition keeping a k-bounded top-k per query, then a k-bounded merge
+    * per query. Distances use the store's metric, which must be
+    * [[SquaredL2]], [[L1]] or [[LInf]]; any other metric fails with an
+    * IllegalArgumentException. */
   def knnJoin(queries: DataFrame, k: Int,
-      queryIdCol: String = "query_id"): DataFrame =
-    graft.operators.KnnTopK.join(queries, state.drop("cell_id"), k, cfg.dim,
-      queryIdCol = queryIdCol)
+      queryIdCol: String = "query_id"): DataFrame = {
+    val metric = defaultMetric match {
+      case SquaredL2 => VecMetric.SqL2
+      case L1 => VecMetric.L1
+      case LInf => VecMetric.LInf
+      case other => throw new IllegalArgumentException(
+        "knnJoin supports stores with metric SquaredL2, L1 or LInf; this " +
+          s"store's metric is ${other.getClass.getSimpleName.stripSuffix("$")}")
+    }
+    KnnJoinPlan.join(queries, state.drop("cell_id"), k, metric, queryIdCol)
+  }
 
   /** Cell-partitioned parquet (candidate-cell pruning = file skipping) with
     * rows id-sorted inside each partition, so parquet vec_id min/max stats

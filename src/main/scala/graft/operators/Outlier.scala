@@ -34,10 +34,11 @@ object Outlier {
     * UNDERESTIMATE of the true k-th; callers gate on `n_neighbors = k`
     * (checking it here would cost an eager count job at plan-build time).
     *
-    * Top-k runs through the bounded [[KnnTopK]] aggregator, not a window:
-    * a window rank shuffles EVERY candidate pair on query_id (measured
-    * 290s at 1k scored × 1M corpus in ScaleProbe), while the aggregator's
-    * map-side partials cap the shuffle at k rows per query per map task —
+    * Top-k runs through [[graft.plans.KnnJoinExec]]'s bounded top-k, not a
+    * window: a window rank shuffles EVERY candidate pair on query_id
+    * (measured 290s at 1k scored × 1M corpus in ScaleProbe), while the
+    * operator's per-partition partials cap the shuffle at k rows per query
+    * per map task —
     * same (dist ASC, id ASC) order, bit-identical kth distance. */
   def kthNnDistance(db: DataFrame, queries: DataFrame, k: Int, dim: Int,
       threshold: Double, idCol: String = "vec_id",

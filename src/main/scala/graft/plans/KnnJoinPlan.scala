@@ -1,38 +1,47 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
+import graft.functions.VecMetric
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, BoundReference, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet}
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /** First-class logical operator for the batch kNN join — the one reference
   * operator family (filtered kNN, `vectordb/kd_tree_database.py:285-304`,
   * batched) whose WHOLE-operator semantics no single built-in relational
-  * node expresses. The §2.1 #1 composition forms (window-rank, typed
-  * Aggregator) stay the default; this node is the SparkSessionExtensions
-  * path of the same operator: a resolved marker [[BinaryNode]] that the
-  * planner ([[KnnJoinStrategy]]) lowers to a dedicated physical operator
-  * ([[KnnJoinExec]]).
+  * node expresses. It is the form `VectorDatabase.knnJoin` and
+  * `Outlier.kthNnDistance` run on; the §2.1 #1 composition forms
+  * (window-rank, typed Aggregator) compute the same result. The node is a
+  * resolved marker [[BinaryNode]] that the planner ([[KnnJoinStrategy]])
+  * lowers to a dedicated physical operator ([[KnnJoinExec]]).
   *
   * Contract (identical to [[graft.operators.KnnTopK.join]]): `queries`
   * provides (query_id LONG, embedding ARRAY<FLOAT>) — a SMALL relation
   * (broadcast side); `data` provides (vec_id LONG, embedding ARRAY<FLOAT>).
-  * Output is the top-k rows per query by squared L2, total-ordered
-  * (dist ASC, vec_id ASC), rn = 1..k; data rows with null id/vector are
-  * skipped (the metadata-filter form pre-filters `data`, preserving the
-  * reference's filter-before-k semantics, `kd_tree_database.py:186-190`).
+  * Output is the top-k rows per query by `metric` (squared L2, L1 or
+  * L-inf, as [[graft.functions.VecMetricCols]] computes them),
+  * total-ordered (dist ASC, vec_id ASC) with NaN after every number,
+  * rn = 1..k; data rows with null id/vector are skipped (the
+  * metadata-filter form pre-filters `data`, preserving the reference's
+  * filter-before-k semantics, `kd_tree_database.py:186-190`).
   */
 case class KnnJoinPlan(
     queries: LogicalPlan,
     data: LogicalPlan,
     k: Int,
+    metric: String,
     outputAttrs: Seq[Attribute]) extends BinaryNode {
   require(k > 0, s"k must be positive, got $k")
+  require(KnnJoinPlan.metrics.contains(metric),
+    s"KnnJoinPlan supports the metrics ${KnnJoinPlan.metrics.mkString("/")}, got $metric")
   override def left: LogicalPlan = queries
   override def right: LogicalPlan = data
   override def output: Seq[Attribute] = outputAttrs
@@ -53,6 +62,10 @@ case class KnnJoinPlan(
 
 object KnnJoinPlan {
 
+  /** The metrics [[KnnJoinExec]]'s kernel computes: each one's partial
+    * sums (or maxima) only grow, which keeps its early exit exact. */
+  val metrics: Seq[String] = Seq(VecMetric.SqL2, VecMetric.L1, VecMetric.LInf)
+
   private def freshOutput(): Seq[Attribute] = Seq(
     AttributeReference("query_id", LongType, nullable = false)(),
     AttributeReference("vec_id", LongType, nullable = false)(),
@@ -70,15 +83,22 @@ object KnnJoinPlan {
     * Project has no logical counterpart, so AQE's logicalLink-based stage
     * substitution never records the child's materialized query stage and
     * the replan loop adopts a "new" plan forever (livelock, observed with
-    * a cached input table). */
-  def join(queriesDf: DataFrame, dataDf: DataFrame, k: Int): DataFrame = {
+    * a cached input table).
+    *
+    * The pre-projection also renames `queryIdCol` to `query_id` and casts
+    * both id columns to LONG (a no-op the optimizer removes on LONG ids),
+    * the type [[KnnJoinExec]] reads. `metric` is one of [[metrics]]. */
+  def join(queriesDf: DataFrame, dataDf: DataFrame, k: Int,
+      metric: String = VecMetric.SqL2, queryIdCol: String = "query_id"): DataFrame = {
     val spark = queriesDf.sparkSession
     install(spark)
     DatasetBridge.ofRows(spark,
       KnnJoinPlan(
-        DatasetBridge.analyzed(queriesDf.select("query_id", "embedding")),
-        DatasetBridge.analyzed(dataDf.select("vec_id", "embedding")),
-        k, freshOutput()))
+        DatasetBridge.analyzed(queriesDf.select(
+          col(queryIdCol).cast(LongType).as("query_id"), col("embedding"))),
+        DatasetBridge.analyzed(dataDf.select(
+          col("vec_id").cast(LongType).as("vec_id"), col("embedding"))),
+        k, metric, freshOutput()))
   }
 
   /** Idempotently register the planner strategy + optimizer rule on a
@@ -205,7 +225,7 @@ object KnnJoinStrategy extends SparkStrategy {
           s"(has ${side.output.map(_.name).mkString(", ")})")
         i
       }
-      KnnJoinExec(p.outputAttrs, p.k,
+      KnnJoinExec(p.outputAttrs, p.k, p.metric,
         idx(p.queries, "query_id", "queries"), idx(p.queries, "embedding", "queries"),
         idx(p.data, "vec_id", "data"), idx(p.data, "embedding", "data"),
         planLater(p.queries), planLater(p.data)) :: Nil
@@ -225,121 +245,77 @@ object KnnJoinStrategy extends SparkStrategy {
   * the identical float→double left-to-right IEEE loop as
   * [[graft.functions.VecMetricCols]], so results are bit-equal to the
   * composition forms.
+  *
+  * The per-pair loop allocates nothing: every query's bound lives in
+  * primitive id/dist arrays kept sorted by shifted insertion
+  * ([[KnnJoinExec.insert]]), and the shuffle carries the same primitive
+  * layout ([[KnnJoinExec.TopK]]). Counters are task-local and reach the
+  * SQL metrics once per partition.
   */
 case class KnnJoinExec(
-    out: Seq[Attribute], k: Int,
+    out: Seq[Attribute], k: Int, metric: String,
     qIdIdx: Int, qVecIdx: Int, dIdIdx: Int, dVecIdx: Int,
     left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
+  import KnnJoinExec._
 
   override def output: Seq[Attribute] = out
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): KnnJoinExec =
     copy(left = newLeft, right = newRight)
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "dataRows" -> SQLMetrics.createMetric(sparkContext, "data rows scanned"),
+    "pairs" -> SQLMetrics.createMetric(sparkContext, "candidate pairs"),
+    "prunedPairs" -> SQLMetrics.createMetric(sparkContext, "pairs cut by early exit"),
+    "heapInserts" -> SQLMetrics.createMetric(sparkContext, "heap inserts"),
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
   override protected def doExecute(): RDD[InternalRow] = {
-    val qid = qIdIdx; val qv = qVecIdx; val did = dIdIdx; val dv = dVecIdx
-    val kk = k
+    val qid = qIdIdx; val qv = qVecIdx
     // query side: executeCollect is the physical analog of a broadcast
     // build side — the node's contract is |Q| small (ANN forms cover huge
     // query sets)
-    val queries: Array[(Long, Array[Float])] = left.executeCollect().collect {
-      case r if !r.isNullAt(qid) && !r.isNullAt(qv) =>
-        (r.getLong(qid), r.getArray(qv).toFloatArray)
+    val rows = left.executeCollect().filter(r => !r.isNullAt(qid) && !r.isNullAt(qv))
+    val vecs = rows.map(_.getArray(qv).toFloatArray)
+    val dim = if (vecs.isEmpty) 0 else vecs(0).length
+    vecs.indices.find(vecs(_).length != dim).foreach { i =>
+      throw new IllegalArgumentException(
+        s"KnnJoinExec: query id=${rows(i).getLong(qid)} has dim ${vecs(i).length}, " +
+          s"query id=${rows(0).getLong(qid)} has dim $dim; mixed-dimension " +
+          "queries are a data error")
     }
-    val bc = sparkContext.broadcast(queries)
-    // static helper bound to the primitive k only: task closures must not
-    // capture `this` (the whole physical plan tree would be serialized into
-    // every task)
-    val insertFn = KnnJoinExec.insertBounded(kk)
+    val flat = new Array[Double]((rows.length + 3) / 4 * 4 * dim)
+    for (i <- vecs.indices; j <- 0 until dim) flat(i * dim + j) = vecs(i)(j)
+    val bc = sparkContext.broadcast(Queries(rows.map(_.getLong(qid)), flat, dim))
+    // task closures capture only these locals, never `this` (the whole
+    // physical plan tree would be serialized into every task)
+    val kk = k; val m = metricCode(metric); val did = dIdIdx; val dv = dVecIdx
+    val counters = Counters(metrics("dataRows"), metrics("pairs"),
+      metrics("prunedPairs"), metrics("heapInserts"))
+    val numOut = metrics("numOutputRows")
 
-    val partials: RDD[(Long, Array[(Long, Double)])] = right.execute().mapPartitions { it =>
+    val partials: RDD[(Long, TopK)] = right.execute().mapPartitions { it =>
       val qs = bc.value
-      if (qs.isEmpty) Iterator.empty
-      else {
-        // hot-loop layout: parallel primitive-friendly arrays instead of
-        // tuple derefs, and a primitive acceptance check BEFORE the
-        // allocating insert — the naive form allocated a (Long, Double)
-        // tuple per candidate pair (10^9 allocations at 1k × 1M), which
-        // dominated the kernel
-        val nq = qs.length
-        val qIds = new Array[Long](nq)
-        val qVecs = new Array[Array[Float]](nq)
-        var p = 0
-        while (p < nq) { qIds(p) = qs(p)._1; qVecs(p) = qs(p)._2; p += 1 }
-        val bufs = Array.fill(nq)(Array.empty[(Long, Double)])
-        it.foreach { row =>
-          if (!row.isNullAt(did) && !row.isNullAt(dv)) {
-            val id = row.getLong(did)
-            val v = row.getArray(dv).toFloatArray
-            var i = 0
-            while (i < nq) {
-              val q = qVecs(i)
-              if (v.length != q.length)
-                throw new IllegalArgumentException(
-                  s"KnnJoinExec: data vector id=$id has dim ${v.length}, " +
-                    s"query id=${qIds(i)} has dim ${q.length}; mixed-dimension " +
-                    "input is a data error (validate at ingest, cf. Grid.requireDim)")
-              // identical IEEE order to VecMetricCols SqL2: per-element
-              // float→double subtraction, left-to-right d*d accumulation.
-              // Once the per-query heap is full, the running sum is
-              // monotone non-decreasing, so the loop aborts as soon as it
-              // strictly exceeds the kth distance — the pair would be
-              // rejected on any completion (exact: ties at == kth run to
-              // the end and tie-break on id as before)
-              val buf = bufs(i)
-              val len = q.length
-              if (buf.length < kk) {
-                var s = 0.0
-                var j = 0
-                while (j < len) {
-                  val d = q(j).toDouble - v(j).toDouble
-                  s += d * d
-                  j += 1
-                }
-                bufs(i) = insertFn(buf, (id, s))
-              } else {
-                // chunked early exit: accumulate 16 elements branch-free,
-                // then test — a per-element test defeats the JIT's
-                // reduction pipelining (measured SLOWER than no pruning)
-                val last = buf(kk - 1)
-                val thr = last._2
-                var s = 0.0
-                var j = 0
-                var live = true
-                while (live && j < len) {
-                  val end = if (j + 16 < len) j + 16 else len
-                  while (j < end) {
-                    val d = q(j).toDouble - v(j).toDouble
-                    s += d * d
-                    j += 1
-                  }
-                  if (s > thr) live = false
-                }
-                if (live && (s < thr || (s == thr && id < last._1)))
-                  bufs(i) = insertFn(buf, (id, s))
-              }
-              i += 1
-            }
-          }
-        }
-        Iterator.range(0, nq)
-          .filter(i => bufs(i).nonEmpty)
-          .map(i => (qIds(i), bufs(i)))
-      }
+      if (qs.ids.isEmpty) Iterator.empty
+      else scanPartition(it, did, dv, qs, kk, m, counters)
     }
+    // this RDD-level shuffle bypasses AQE, so size it the way AQE would
+    // coalesce a SQL shuffle: partitions of the advisory size (16 bytes per
+    // (id, dist) entry), at most spark.sql.shuffle.partitions
+    val shuffleBytes = 16.0 * rows.length * k * partials.getNumPartitions
+    val reducers = math.min(conf.numShufflePartitions, math.max(1,
+      math.ceil(shuffleBytes / conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)).toInt))
 
     // k-bounded merge per query: RDD combine-by-key with map-side combine
     // (partials are already ≤k, so reducers see k-bounded buffers only)
-    val merged = partials.reduceByKey((a, b) => b.foldLeft(a)(insertFn))
-
-    merged.mapPartitions { it =>
-      val proj = GenerateUnsafeProjection.generate(
-        out.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
-      val row = new GenericInternalRow(4)
-      it.flatMap { case (q, buf) =>
-        buf.iterator.zipWithIndex.map { case ((id, dist), i) =>
-          row.update(0, q); row.update(1, id); row.update(2, dist); row.update(3, i + 1)
-          proj(row).copy(): InternalRow
+    partials.reduceByKey(merge(_, _, kk), reducers).mapPartitions { it =>
+      val w = new UnsafeRowWriter(4)
+      it.flatMap { case (q, t) =>
+        numOut += t.ids.length
+        Iterator.tabulate(t.ids.length) { i =>
+          w.reset()
+          w.write(0, q); w.write(1, t.ids(i)); w.write(2, t.dists(i)); w.write(3, i + 1)
+          w.getRow.copy(): InternalRow
         }
       }
     }
@@ -347,14 +323,177 @@ case class KnnJoinExec(
 }
 
 object KnnJoinExec {
-  /** Insert into a (dist ASC, id ASC)-sorted, ≤k-element buffer. Static (no
-    * operator state) so task closures stay serialization-minimal. */
-  def insertBounded(k: Int): (Array[(Long, Double)], (Long, Double)) => Array[(Long, Double)] =
-    (buf, n) => {
-      def lt(a: (Long, Double), b: (Long, Double)): Boolean =
-        a._2 < b._2 || (a._2 == b._2 && a._1 < b._1)
-      if (buf.length < k) (buf :+ n).sortBy(x => (x._2, x._1))
-      else if (lt(n, buf(k - 1))) buf.updated(k - 1, n).sortBy(x => (x._2, x._1))
-      else buf
+
+  /** The broadcast query side: ids, and the vectors row-major in one array,
+    * widened to double once (float -> double is exact) and padded with
+    * zero vectors to a whole number of blocks of four. */
+  final case class Queries(ids: Array[Long], vecs: Array[Double], dim: Int)
+
+  /** One query's bound: ids and distances in (dist, id) order, at most k. */
+  final class TopK(val ids: Array[Long], val dists: Array[Double]) extends Serializable
+
+  final case class Counters(dataRows: SQLMetric, pairs: SQLMetric,
+      prunedPairs: SQLMetric, heapInserts: SQLMetric)
+
+  /** Kernel metric codes: the positions in [[KnnJoinPlan.metrics]]. */
+  private val SqL2 = 0
+  private val L1 = 1
+  private def metricCode(metric: String): Int = KnnJoinPlan.metrics.indexOf(metric)
+
+  /** Elements processed between early-exit tests: a per-element test defeats
+    * the JIT's reduction pipelining (measured SLOWER than no pruning). */
+  private val Chunk = 16
+
+  /** The output order: (dist ASC, id ASC), comparing doubles as Spark's sort
+    * does — NaN after every number and equal to NaN, −0.0 equal to 0.0. */
+  def before(d1: Double, id1: Long, d2: Double, id2: Long): Boolean =
+    if (d1 < d2) true
+    else if (d1 == d2) id1 < id2
+    else if (java.lang.Double.isNaN(d1)) java.lang.Double.isNaN(d2) && id1 < id2
+    else java.lang.Double.isNaN(d2)
+
+  /** Insert (id, d) into the sorted run `ids/dists[base, base + size)` of
+    * capacity k, shifting later entries right; a full run drops its last
+    * entry. The caller has checked that a full run's last entry comes after
+    * (id, d). Returns the new size. */
+  def insert(ids: Array[Long], dists: Array[Double], base: Int, size: Int, k: Int,
+      id: Long, d: Double): Int = {
+    var p = base + (if (size < k) size else k - 1)
+    while (p > base && before(d, id, dists(p - 1), ids(p - 1))) {
+      ids(p) = ids(p - 1); dists(p) = dists(p - 1)
+      p -= 1
     }
+    ids(p) = id; dists(p) = d
+    if (size < k) size + 1 else k
+  }
+
+  /** The first k of two bounds in (dist, id) order. */
+  def merge(a: TopK, b: TopK, k: Int): TopK = {
+    val n = math.min(k, a.ids.length + b.ids.length)
+    val ids = new Array[Long](n); val dists = new Array[Double](n)
+    var i = 0; var j = 0; var o = 0
+    while (o < n) {
+      val takeA = j >= b.ids.length ||
+        (i < a.ids.length && before(a.dists(i), a.ids(i), b.dists(j), b.ids(j)))
+      if (takeA) { ids(o) = a.ids(i); dists(o) = a.dists(i); i += 1 }
+      else { ids(o) = b.ids(j); dists(o) = b.dists(j); j += 1 }
+      o += 1
+    }
+    new TopK(ids, dists)
+  }
+
+  /** Every query's bound over one partition: query i's run sits at
+    * `[i * k, i * k + sizes(i))` of the primitive id and dist arrays.
+    * Indexes from nq up are the padding of the last block of four. */
+  private final class Bounds(nq: Int, k: Int) {
+    val ids = new Array[Long](nq * k)
+    val dists = new Array[Double](nq * k)
+    val sizes = new Array[Int](nq)
+    var inserts = 0L
+    var pruned = 0L
+
+    /** Query i's early-exit threshold: its kth distance once its run is
+      * full, +Inf before; -Inf for padding, which never holds a block. */
+    def threshold(i: Int): Double =
+      if (i >= nq) Double.NegativeInfinity
+      else if (sizes(i) < k) Double.PositiveInfinity
+      else dists(i * k + k - 1)
+
+    /** Offer a data row at distance `s` to query i. `complete` is false when
+      * the scan stopped before the last element: the partial sum already
+      * exceeded the threshold, so the pair is rejected. */
+    def offer(i: Int, id: Long, s: Double, complete: Boolean): Unit =
+      if (i >= nq) ()
+      else if (!complete) pruned += 1
+      else {
+        val base = i * k
+        val size = sizes(i)
+        if (size < k || before(s, id, dists(base + k - 1), ids(base + k - 1))) {
+          sizes(i) = insert(ids, dists, base, size, k, id, s)
+          inserts += 1
+        }
+      }
+  }
+
+  /** One data partition against every query: the bounded top-k of each
+    * query over this partition's rows.
+    *
+    * Once a query's run is full, its running sum (or max) never decreases,
+    * so its scan may stop as soon as it strictly exceeds the kth distance:
+    * the pair would be rejected on any completion (exact: ties at == kth
+    * run to the end and tie-break on id). Queries are scored in blocks of
+    * four with one accumulator each, so four independent add chains
+    * overlap; each accumulator still sums its own query left to right in
+    * VecMetricCols' per-element order, so every distance is bit-identical
+    * to it. A block stops early only when all four of its sums are past
+    * their thresholds. */
+  def scanPartition(it: Iterator[InternalRow], did: Int, dv: Int, qs: Queries,
+      k: Int, m: Int, counters: Counters): Iterator[(Long, TopK)] = {
+    val nq = qs.ids.length
+    val dim = qs.dim
+    val qv = qs.vecs
+    val b = new Bounds(nq, k)
+    val v = new Array[Double](dim)
+    var rows = 0L
+    while (it.hasNext) {
+      val row = it.next()
+      if (!row.isNullAt(did) && !row.isNullAt(dv)) {
+        val id = row.getLong(did)
+        val arr = row.getArray(dv)
+        if (arr.numElements() != dim)
+          throw new IllegalArgumentException(
+            s"KnnJoinExec: data vector id=$id has dim ${arr.numElements()}, " +
+              s"the queries have dim $dim; mixed-dimension input is a data " +
+              "error (validate at ingest, cf. Grid.requireDim)")
+        var j = 0
+        while (j < dim) { v(j) = arr.getFloat(j).toDouble; j += 1 }
+        rows += 1
+        var i = 0
+        while (i < nq) {
+          val t0 = b.threshold(i); val t1 = b.threshold(i + 1)
+          val t2 = b.threshold(i + 2); val t3 = b.threshold(i + 3)
+          val o0 = i * dim; val o1 = o0 + dim; val o2 = o1 + dim; val o3 = o2 + dim
+          var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+          j = 0
+          while (j < dim && !(s0 > t0 && s1 > t1 && s2 > t2 && s3 > t3)) {
+            val end = if (j + Chunk < dim) j + Chunk else dim
+            if (m == SqL2) while (j < end) {
+              val x = v(j)
+              val d0 = qv(o0 + j) - x; val d1 = qv(o1 + j) - x
+              val d2 = qv(o2 + j) - x; val d3 = qv(o3 + j) - x
+              s0 += d0 * d0; s1 += d1 * d1; s2 += d2 * d2; s3 += d3 * d3
+              j += 1
+            }
+            else if (m == L1) while (j < end) {
+              val x = v(j)
+              s0 += math.abs(qv(o0 + j) - x); s1 += math.abs(qv(o1 + j) - x)
+              s2 += math.abs(qv(o2 + j) - x); s3 += math.abs(qv(o3 + j) - x)
+              j += 1
+            }
+            else while (j < end) {
+              val x = v(j)
+              s0 = math.max(s0, math.abs(qv(o0 + j) - x))
+              s1 = math.max(s1, math.abs(qv(o1 + j) - x))
+              s2 = math.max(s2, math.abs(qv(o2 + j) - x))
+              s3 = math.max(s3, math.abs(qv(o3 + j) - x))
+              j += 1
+            }
+          }
+          val complete = j == dim
+          b.offer(i, id, s0, complete); b.offer(i + 1, id, s1, complete)
+          b.offer(i + 2, id, s2, complete); b.offer(i + 3, id, s3, complete)
+          i += 4
+        }
+      }
+    }
+    counters.dataRows += rows
+    counters.pairs += rows * nq
+    counters.prunedPairs += b.pruned
+    counters.heapInserts += b.inserts
+    Iterator.range(0, nq).filter(b.sizes(_) > 0).map { i =>
+      val base = i * k
+      val end = base + b.sizes(i)
+      (qs.ids(i), new TopK(b.ids.slice(base, end), b.dists.slice(base, end)))
+    }
+  }
 }

@@ -306,4 +306,114 @@ class ApiSpec extends SparkSpecBase {
     assert(!afterDelete.exists(_._1 == nearest.head._1))
     assert(afterDelete == bruteTop(deleted, bigQ, 10))
   }
+
+  // --- knnJoin: the facade's batch join against a driver-side brute force
+
+  private val JoinDim = 8
+  private val joinCfg = GridConfig(dim = JoinDim, lower = -1.0, upper = 1.0,
+    partsPerDim = 4, gridDims = 3)
+  /** 300 seeded rows, then rows 300-303 at row 7's position: the four
+    * copies and row 7 tie at every distance from any query. */
+  private lazy val joinVecs: Array[Array[Float]] = {
+    val rnd = new scala.util.Random(7)
+    val base = Array.fill(300)(Array.fill(JoinDim)(rnd.nextFloat() * 2f - 1f))
+    base ++ Array.fill(4)(base(7).clone())
+  }
+  private def joinStore(metric: graft.api.Metric, n: Int = joinVecs.length): VectorDatabase = {
+    import spark.implicits._
+    // shuffled over three partitions, so tied ids arrive out of id order
+    val df = scala.util.Random.shuffle((0 until n).toList)
+      .map(i => (i.toLong, joinVecs(i), i % 5)).toDF("vec_id", "embedding", "label")
+      .repartition(3)
+    VectorDatabase.fromDataFrame(spark, df, joinCfg, metric = metric)
+  }
+  /** INT query ids, one negative; query -3 sits on the tied position. */
+  private lazy val joinQueries: Seq[(Int, Array[Float])] = {
+    val rnd = new scala.util.Random(11)
+    Seq(-3 -> joinVecs(7).clone()) ++
+      Seq(0, 5, 42).map(_ -> Array.fill(JoinDim)(rnd.nextFloat() * 2f - 1f))
+  }
+  private def queryDf(qs: Seq[(Int, Array[Float])]) = {
+    import spark.implicits._
+    qs.toDF("qid", "embedding")
+  }
+
+  /** Top-k per query over the first `n` rows by the kernel's per-element
+    * float -> double order, ranked (dist, vec_id). */
+  private def bruteJoin(metric: String, qs: Seq[(Int, Array[Float])], k: Int,
+      n: Int = joinVecs.length): Seq[(Long, Long, Double, Int)] =
+    qs.flatMap { case (qid, q) =>
+      (0 until n).map { i =>
+        val v = joinVecs(i)
+        var s = 0.0
+        for (j <- 0 until JoinDim) {
+          val d = q(j).toDouble - v(j).toDouble
+          s = metric match {
+            case "l1" => s + math.abs(d)
+            case "linf" => math.max(s, math.abs(d))
+            case _ => s + d * d
+          }
+        }
+        (i.toLong, s)
+      }.sortBy { case (id, d) => (d, id) }.take(k).zipWithIndex
+        .map { case ((id, d), r) => (qid.toLong, id, d, r + 1) }
+    }.sortBy(x => (x._1, x._4))
+
+  private def joinRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .toSeq.sortBy(x => (x._1, x._4))
+
+  test("knnJoin equals a brute force on an L2 store, with INT and negative query ids") {
+    val got = joinStore(SquaredL2).knnJoin(queryDf(joinQueries), 3, queryIdCol = "qid")
+    assert(got.schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq("query_id" -> "bigint", "vec_id" -> "bigint", "dist" -> "double", "rn" -> "int"))
+    val rows = joinRows(got)
+    assert(rows == bruteJoin("sql2", joinQueries, 3))
+    // the tied position: row 7 and its copies 300-303 tie at 0.0; k=3
+    // keeps the three smallest ids
+    assert(rows.filter(_._1 == -3L).map(r => (r._2, r._3)) ==
+      Seq(7L -> 0.0, 300L -> 0.0, 301L -> 0.0))
+  }
+
+  test("knnJoin ranks by the store's metric on L1 and LInf stores") {
+    for ((m, name) <- Seq(L1 -> "l1", graft.api.LInf -> "linf")) {
+      val rows = joinRows(joinStore(m).knnJoin(queryDf(joinQueries), 3, queryIdCol = "qid"))
+      assert(rows == bruteJoin(name, joinQueries, 3), name)
+    }
+  }
+
+  test("knnJoin: k larger than the store, and an empty query set") {
+    val small = joinStore(SquaredL2, n = 5)
+    assert(joinRows(small.knnJoin(queryDf(joinQueries), 8, queryIdCol = "qid")) ==
+      bruteJoin("sql2", joinQueries, 8, n = 5))
+    assert(small.knnJoin(queryDf(joinQueries).filter(lit(false)), 3, queryIdCol = "qid")
+      .collect().isEmpty)
+  }
+
+  test("knnJoin: a query of the wrong dim fails by name; a Mahalanobis store is rejected") {
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    def causes(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: causes(t.getCause)
+    val db8 = joinStore(SquaredL2)
+    val short = Seq(9 -> Array.fill(JoinDim - 1)(0.5f))
+    for (qs <- Seq(short, joinQueries ++ short)) {
+      val ex = intercept[Exception](db8.knnJoin(queryDf(qs), 3, queryIdCol = "qid").collect())
+      assert(causes(ex).exists(_.isInstanceOf[IllegalArgumentException]) &&
+        msgs(ex).exists(_.contains(s"dim ${JoinDim - 1}")), s"got: ${msgs(ex)}")
+    }
+    val maha = joinStore(graft.api.MahalanobisDiag(Array.fill(JoinDim)(1.0)))
+    val ex = intercept[IllegalArgumentException](maha.knnJoin(queryDf(joinQueries), 3, queryIdCol = "qid"))
+    assert(ex.getMessage.contains("MahalanobisDiag"))
+  }
+
+  test("knnJoin runs on KnnJoinExec, not a typed aggregation") {
+    val df = joinStore(SquaredL2).knnJoin(queryDf(joinQueries), 3, queryIdCol = "qid")
+    df.collect()
+    val walk = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val plan = df.queryExecution.executedPlan
+    assert(walk.collect(plan) { case e: graft.plans.KnnJoinExec => e }.nonEmpty, plan)
+    assert(walk.collect(plan) {
+      case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
+    }.isEmpty, plan)
+  }
 }

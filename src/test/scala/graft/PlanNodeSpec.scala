@@ -98,4 +98,37 @@ class PlanNodeSpec extends SparkSpecBase {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(ex).exists(_.contains("dim")), s"got: ${msgs(ex)}")
   }
+
+  test("bounded insert and merge match orderBy(dist, vec_id).limit(k) with NaN, +Inf and ties") {
+    import spark.implicits._
+    // dim 40: the kernel tests its early exit every 16 elements, so the
+    // values at element 20 arrive after a first cut chance
+    def vec(e0: Float, e1: Float, e20: Float): Array[Float] = {
+      val v = new Array[Float](40); v(0) = e0; v(1) = e1; v(20) = e20; v
+    }
+    val nan = Float.NaN; val inf = Float.PositiveInfinity
+    val data = Seq(1L -> vec(1, 0, 0), 2L -> vec(3, 0, nan), 3L -> vec(1, 0, 0),
+      4L -> vec(0, 0, inf), 5L -> vec(0, 1, 0), 6L -> vec(0.5f, 0, 0),
+      7L -> vec(0, 0, nan), 8L -> vec(inf, 0, 0), 9L -> vec(-inf, 0, 0), 10L -> vec(2, 0, 0))
+    val qs = Seq(0L -> vec(0, 0, 0), 1L -> vec(1, 0, 0), 2L -> vec(nan, 0, 0), 3L -> vec(0, 0, inf))
+      .toDF("query_id", "embedding")
+    val ranked = data.toDF("vec_id", "embedding").crossJoin(
+        qs.select(col("query_id"), col("embedding").as("q")))
+      .select(col("query_id"), col("vec_id"),
+        functions.Distances.squaredL2Cols(col("q"), col("embedding"), 40).as("dist"))
+      .orderBy("query_id", "dist", "vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).groupBy(_._1)
+    assert(ranked(0L).count(_._3.isNaN) == 2 && ranked(0L).count(_._3.isInfinite) == 3)
+    for (order <- Seq(data, data.reverse); parts <- Seq(1, 2); k <- 1 to data.size + 1) {
+      val dataDf = spark.sparkContext.parallelize(order, parts).toDF("vec_id", "embedding")
+      val got = collect(KnnJoinPlan.join(qs, dataDf, k))
+      val want = ranked.keys.toSeq.sorted.flatMap { q =>
+        ranked(q).take(k).zipWithIndex.map { case ((_, id, d), r) => (q, id, d, r + 1) }
+      }
+      // NaN != NaN, so compare distances by their bits
+      def bits(rows: Seq[(Long, Long, Double, Int)]) =
+        rows.map { case (q, id, d, r) => (q, id, java.lang.Double.doubleToLongBits(d), r) }
+      assert(bits(got) == bits(want), s"k=$k parts=$parts ascending=${order == data}")
+    }
+  }
 }
