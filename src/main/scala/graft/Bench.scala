@@ -87,8 +87,11 @@ object Bench {
     /** min-of-`nRuns` measurement of one query, with the store-root and
       * cache teardown that keeps each query's timing independent of its
       * neighbors (see the inline notes). Shared by the main sweep and the
-      * contamination-retry pass so both measure the same thing. */
-    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      * contamination-retry pass so both measure the same thing. A query
+      * that throws still reports its time, and its name and exception go
+      * to stderr. */
+    def measure(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       def once(): Double = {
         // untimed setup: every rep starts from empty store roots, so all
         // three reps measure the same clean-directory cost (clearing only
@@ -96,9 +99,12 @@ object Bench {
         // exactly the dirty-disk state this teardown exists to avoid)
         perQueryStoreRoots.foreach(deleteRecursively)
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
+        val failure =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+          catch { case e: Throwable => Some(e) }
+        val sec = (System.nanoTime() - t0) / 1e9
+        failure.foreach(e => System.err.println(s"[bench] query $name failed: $e"))
+        sec
       }
       val best = Seq.fill(nRuns)(once()).min
       // teardown between queries: several operators persist mid-plan
@@ -132,7 +138,7 @@ object Bench {
     val midAt = sorted.size / 2
     val firstPass = sorted.zipWithIndex.map { case ((name, fn), qi) =>
       if (qi == midAt) sentinels += sentinel("middle")
-      name -> measure(fn)
+      name -> measure(name, fn)
     }
     sentinels += sentinel("end")
     // CONTAMINATION-RETRY PASS (r16): the r15 headline artifact shipped
@@ -167,7 +173,7 @@ object Bench {
     val retryNames = (topExpensive ++ refSuspects).distinct
       .sortBy(n => -byName(n)).take(20)
     val retried: Seq[(String, Double, Double)] = retryNames.map { n =>
-      (n, byName(n), measure(SparkEntry.queries(n)))
+      (n, byName(n), measure(n, SparkEntry.queries(n)))
     }
     val retryFix = retried.map { case (n, first, again) => n -> math.min(first, again) }.toMap
     val results = firstPass.map { case (n, t) => n -> retryFix.getOrElse(n, t) }

@@ -122,7 +122,8 @@ object ScaleProbe extends App {
   // kNN JOIN comparison in the cell join's regime: LOW-dim fully-gridded
   // data (at 64 dims with 3 gridded, no box short of everything certifies
   // the full-dim kth distance — curse of dimensionality; that regime
-  // belongs to KnnTopK/IVF/LSH, see KnnCellJoin docs).
+  // belongs to the brute-force KnnJoinPlan join or IVF/LSH, see
+  // KnnCellJoin docs). The two batch joins: cell-pruned vs brute force.
   val cfg4 = GridConfig(dim = 4, lower = -0.6, upper = 0.6, partsPerDim = 8, gridDims = 4)
   val db4 = Grid.withCellId(
     big.select(col("vec_id"), slice(col("embedding"), 1, 4).as("embedding")),
@@ -133,7 +134,7 @@ object ScaleProbe extends App {
     graft.operators.KnnCellJoin.join(probeQueries4, db4, cfg4, k = 10).count()
   }
   t("cross kNN join 4-dim (100 q x 1M db)") {
-    graft.operators.KnnTopK.join(probeQueries4, db4, k = 10, dim = 4).count()
+    graft.plans.KnnJoinPlan.join(probeQueries4, db4, k = 10).count()
   }
   // Batch MaxSim join at 1M: 16 queries × 1M corpus through the fused
   // VecMaxSimCols kernel + bounded top-k aggregator — the late-interaction

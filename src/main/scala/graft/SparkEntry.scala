@@ -4,8 +4,9 @@ import graft.core.{Fixtures, Tables}
 import graft.functions.Distances
 import graft.index.{Grid, GridConfig}
 import graft.multimodal.Multimodal
-import graft.operators.{Ann, AsOfJoin, CosineJoin, Dedup, GraphAnn, Knn, KnnJoin, KnnTopK, Mips, SaltedJoin, Snapshot, TextAnalysis}
+import graft.operators.{Ann, AsOfJoin, CosineJoin, Dedup, GraphAnn, Knn, KnnTopK, Mips, SaltedJoin, Snapshot, TextAnalysis}
 import graft.oracle.DuckSql
+import graft.plans.KnnJoinPlan
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -688,11 +689,13 @@ object SparkEntry {
           .withColumn("weight", (lit(1) + col("vec_id") % 10).cast("double"))
           .withColumn("band", (col("vec_id") % 10).cast("long")),
         Q64, K, bruteForceThreshold = 0)),
-    // batch kNN join (SURVEY §2.1 #1 batch form)
+    // batch kNN join (SURVEY §2.1 #1 batch form): the engine's one exact
+    // brute-force join, KnnJoinPlan → KnnJoinExec (per-partition bounded
+    // top-k + k-bounded merge)
     "knn_join_l2" -> ((s, d) =>
-      KnnJoin.join(
+      KnnJoinPlan.join(
         emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        emb(s, d), k = 3, dim = Dim)
+        emb(s, d), k = 3)
         .orderBy(col("query_id"), col("rn"))),
     // scale variant: per-query candidate cells + geometric widening (no
     // |Q|×|db| cross product) — exact, same oracle as the cross form.
@@ -717,19 +720,19 @@ object SparkEntry {
         Grid.withCellId(emb(s, d), "embedding", qgridCfg(s, d)),
         qgridCfg(s, d), k = 3, bruteForceThreshold = 0)
         .orderBy(col("query_id"), col("rn"))),
-    // first-class plan variant: custom LogicalPlan → SparkStrategy →
-    // KnnJoinExec (per-partition bounded top-k + k-bounded reduceByKey
-    // merge); bit-equal to the composition forms, same oracle
+    // the same join through its first-class plan name (custom LogicalPlan
+    // → SparkStrategy → KnnJoinExec); same oracle
     "knn_join_l2_plan" -> ((s, d) =>
-      graft.plans.KnnJoinPlan.join(
+      KnnJoinPlan.join(
         emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
         emb(s, d), k = 3)
         .orderBy(col("query_id"), col("rn"))),
-    // skew-safe variant: bounded top-k Aggregator (map-side partial top-k)
+    // the skew-safe name: KnnJoinExec's shuffle carries at most k rows per
+    // query per map task, whatever the candidate skew; same oracle
     "knn_join_l2_agg" -> ((s, d) =>
-      KnnTopK.join(
+      KnnJoinPlan.join(
         emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        emb(s, d), k = 3, dim = Dim)
+        emb(s, d), k = 3)
         .orderBy(col("query_id"), col("rn"))),
     // --- point ops / scans (SURVEY §2.1 #7-9)
     "point_lookup" -> ((s, d) =>
@@ -1419,7 +1422,7 @@ object SparkEntry {
       val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
       val approx = Ann.ivfJoin(q, Ann.assign(db, cents), cents, k = K, nprobe = 4)
         .select(col("query_id"), col("vec_id"))
-      val exact = KnnJoin.join(q, db, K, Dim)
+      val exact = KnnJoinPlan.join(q, db, K)
         .select(col("query_id").as("eq"), col("vec_id").as("ev"))
       val hits = approx.join(exact,
           col("query_id") === col("eq") && col("vec_id") === col("ev"), "left_semi")
@@ -1511,7 +1514,7 @@ object SparkEntry {
         .select(col("vec_id").as("query_id"), col("embedding"))
       val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
       val assigned = Ann.assign(db, cents)
-      val exact = KnnJoin.join(q, db, K, Dim)
+      val exact = KnnJoinPlan.join(q, db, K)
         .select(col("query_id").as("eq"), col("vec_id").as("ev"))
       // r10 fused arms (the oracle's shape): score candidates ONCE at the
       // widest probe width, carrying each cell's probe RANK (posexplode of
@@ -1611,7 +1614,7 @@ object SparkEntry {
       val approx = GraphAnn.searchJoin(graph, db, q, k = K,
           beam = GraphBeam, hops = GraphHops, nEntry = GraphEntries, dim = Dim)
         .select(col("query_id"), col("vec_id"))
-      val exact = KnnJoin.join(q, db, K, Dim)
+      val exact = KnnJoinPlan.join(q, db, K)
         .select(col("query_id").as("eq"), col("vec_id").as("ev"))
       val hits = approx.join(exact,
           col("query_id") === col("eq") && col("vec_id") === col("ev"), "left_semi")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Distances
+import graft.plans.KnnJoinExec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -154,10 +155,13 @@ object GraphAnn {
         val d = score(lg.vecs(id))
         if (!merged.get(id).exists(_ <= d)) merged(id) = d
       }
-      bm = merged.toSeq.sortBy { case (id, d) => (d, id) }.take(beam).toMap
+      bm = byDist(merged.toSeq).take(beam).toMap
     }
-    bm.toSeq.sortBy { case (id, d) => (d, id) }
+    byDist(bm.toSeq)
   }
+
+  private def byDist(xs: Seq[(Long, Double)]): Seq[(Long, Double)] =
+    xs.sortWith { case ((i1, d1), (i2, d2)) => KnnJoinExec.before(d1, i1, d2, i2) }
 
   private def sqLitLocal(v: Array[Float], q: Array[Double]): Double = {
     var s = 0.0; var i = 0

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.Distances
 import graft.index.{Grid, GridGeometry}
+import graft.plans.KnnJoinExec
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -287,13 +288,11 @@ object Knn {
   }
 
   /** Top-k of two result lists under the scan's `(dist ASC, vec_id ASC)`
-    * order, comparing doubles as Spark's sort does: NaN after every number,
-    * −0.0 equal to 0.0. */
+    * order, [[graft.plans.KnnJoinExec.before]]: doubles compare as Spark's
+    * sort does, NaN after every number, −0.0 equal to 0.0. */
   private[graft] def mergeTopK(a: Seq[Neighbor], b: Seq[Neighbor], k: Int): Seq[Neighbor] =
-    (a ++ b).sortWith { (x, y) =>
-      val c = if (x.dist == y.dist) 0 else java.lang.Double.compare(x.dist, y.dist)
-      c < 0 || (c == 0 && x.vec_id < y.vec_id)
-    }.take(k)
+    (a ++ b).sortWith((x, y) => KnnJoinExec.before(x.dist, x.vec_id, y.dist, y.vec_id))
+      .take(k)
 
   /** Radius (range) search — the other half of a vector-DB read API next
     * to top-k: every row within distance `r`, ordered `(dist ASC, id ASC)`.

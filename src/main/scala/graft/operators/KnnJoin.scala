@@ -1,45 +1,14 @@
 package graft.operators
 
-import graft.functions.Distances
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.plans.KnnJoinPlan
+import org.apache.spark.sql.DataFrame
 
-/** Batch kNN similarity join: for every query row, the k nearest database
-  * rows. The reference only answers one query at a time
-  * (vectordb/kd_tree_database.py:285-304); this is its batch/cluster form
-  * (SURVEY.md §2.1 #1 "batch-of-queries form").
-  *
-  * Strategy: broadcast the query side (queries are the small side by
-  * construction — a query batch, not the corpus), pairwise distance, then
-  * per-query top-k via `row_number` over `(dist ASC, id ASC)`. The
-  * broadcast nested-loop join never shuffles the big side; the only shuffle
-  * is the window's partition-by-query, whose input is already cut to
-  * |queries| × |db| candidate pairs — at scale, cut further by joining on
-  * candidate cell ids (see Knn.prunedSearch) instead of cross-joining.
+/** Batch kNN similarity join under its old name. The engine's exact batch
+  * join is [[KnnJoinPlan.join]]; this forwarder is kept only for the
+  * join-form layer of perfbench's `Join.scala`, which compiles against it.
   */
 object KnnJoin {
 
-  def join(
-      queries: DataFrame,
-      db: DataFrame,
-      k: Int,
-      dim: Int,
-      queryIdCol: String = "query_id",
-      dbIdCol: String = "vec_id",
-      distCols: (Column, Column) => Column = null): DataFrame = {
-    val qs = queries.select(
-      col(queryIdCol),
-      col("embedding").as("q_embedding"))
-    val distExpr =
-      if (distCols != null) distCols(col("q_embedding"), col("embedding"))
-      else Distances.squaredL2Cols(col("q_embedding"), col("embedding"), dim)
-    val pairs = db.crossJoin(broadcast(qs))
-      .withColumn("dist", distExpr)
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("dist").asc, col(dbIdCol).asc)
-    pairs
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col(queryIdCol), col(dbIdCol), col("dist"), col("rn"))
-  }
+  def join(queries: DataFrame, db: DataFrame, k: Int, dim: Int): DataFrame =
+    KnnJoinPlan.join(queries, db, k)
 }

@@ -10,19 +10,19 @@ import org.apache.spark.sql.functions._
   * neighbors are mislabeled/noise/OOD rows a curation pipeline drops or
   * down-weights before training.
   *
-  * Built on the same broadcast-pairs + per-query top-k kernel as
-  * [[KnnJoin]] (the batch form of the reference's flagship query,
-  * vectordb/kd_tree_database.py:285-304) with the self-pair excluded —
+  * Built on the engine's exact batch kNN join, [[graft.plans.KnnJoinPlan]]
+  * (the batch form of the reference's flagship query,
+  * vectordb/kd_tree_database.py:285-304), with the self-pair excluded —
   * a point is never its own neighbor. The k-th distance is emitted as
   * `MAX(dist) over the k nearest` (order-independent, so engine-exact
   * with no rounding), not `the row at rank k`.
   *
   * Scale shape: the scored subset broadcasts (score a sample, or shard the
   * full corpus into query batches); the corpus side never shuffles — the
-  * only shuffle is the window's partition-by-query over the candidate
-  * pairs. At 100 TB, cut candidates with the cell-pruned join
-  * ([[KnnCellJoin]]) instead of the cross product; the scoring contract
-  * (k-th-NN distance, self excluded) is unchanged.
+  * only shuffle merges k-bounded per-partition top-k lists. At 100 TB,
+  * cut candidates with the cell-pruned join ([[KnnCellJoin]]) instead of
+  * the cross product; the scoring contract (k-th-NN distance, self
+  * excluded) is unchanged.
   */
 object Outlier {
 

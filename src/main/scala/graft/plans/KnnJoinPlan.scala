@@ -17,21 +17,23 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 /** First-class logical operator for the batch kNN join — the one reference
   * operator family (filtered kNN, `vectordb/kd_tree_database.py:285-304`,
   * batched) whose WHOLE-operator semantics no single built-in relational
-  * node expresses. It is the form `VectorDatabase.knnJoin` and
-  * `Outlier.kthNnDistance` run on; the §2.1 #1 composition forms
-  * (window-rank, typed Aggregator) compute the same result. The node is a
-  * resolved marker [[BinaryNode]] that the planner ([[KnnJoinStrategy]])
-  * lowers to a dedicated physical operator ([[KnnJoinExec]]).
+  * node expresses. It is the engine's one exact brute-force batch kNN
+  * join: `VectorDatabase.knnJoin`, `Outlier.kthNnDistance`, the
+  * `knn_join_*` queries, the exact arms of the recall evals, streaming
+  * serving and [[graft.operators.KnnCellJoin]]'s brute arm all run on it
+  * (the cell join is the other batch join: it prunes by grid cell). The
+  * node is a resolved marker [[BinaryNode]] that the planner
+  * ([[KnnJoinStrategy]]) lowers to a dedicated physical operator
+  * ([[KnnJoinExec]]).
   *
-  * Contract (identical to [[graft.operators.KnnTopK.join]]): `queries`
-  * provides (query_id LONG, embedding ARRAY<FLOAT>) — a SMALL relation
-  * (broadcast side); `data` provides (vec_id LONG, embedding ARRAY<FLOAT>).
-  * Output is the top-k rows per query by `metric` (squared L2, L1 or
-  * L-inf, as [[graft.functions.VecMetricCols]] computes them),
-  * total-ordered (dist ASC, vec_id ASC) with NaN after every number,
-  * rn = 1..k; data rows with null id/vector are skipped (the
-  * metadata-filter form pre-filters `data`, preserving the reference's
-  * filter-before-k semantics, `kd_tree_database.py:186-190`).
+  * Contract: `queries` provides (query_id LONG, embedding ARRAY<FLOAT>) —
+  * a SMALL relation (broadcast side); `data` provides (vec_id LONG,
+  * embedding ARRAY<FLOAT>). Output is the top-k rows per query by `metric`
+  * (squared L2, L1 or L-inf, as [[graft.functions.VecMetricCols]] computes
+  * them), total-ordered by [[KnnJoinExec.before]] (dist ASC, vec_id ASC,
+  * NaN after every number), rn = 1..k; data rows with null id/vector are
+  * skipped (the metadata-filter form pre-filters `data`, preserving the
+  * reference's filter-before-k semantics, `kd_tree_database.py:186-190`).
   */
 case class KnnJoinPlan(
     queries: LogicalPlan,
@@ -243,8 +245,8 @@ object KnnJoinStrategy extends SparkStrategy {
   * same guarantee as [[graft.operators.KnnTopK]], here enforced by the
   * operator itself instead of by how the query is composed). Distances use
   * the identical float→double left-to-right IEEE loop as
-  * [[graft.functions.VecMetricCols]], so results are bit-equal to the
-  * composition forms.
+  * [[graft.functions.VecMetricCols]], so results are bit-equal to
+  * [[graft.operators.KnnTopK.topK]] over the scored cross product.
   *
   * The per-pair loop allocates nothing: every query's bound lives in
   * primitive id/dist arrays kept sorted by shifted insertion
@@ -344,8 +346,11 @@ object KnnJoinExec {
     * the JIT's reduction pipelining (measured SLOWER than no pruning). */
   private val Chunk = 16
 
-  /** The output order: (dist ASC, id ASC), comparing doubles as Spark's sort
-    * does — NaN after every number and equal to NaN, −0.0 equal to 0.0. */
+  /** The engine's one (dist ASC, id ASC) order, comparing doubles as Spark's
+    * sort does — NaN after every number and equal to NaN, −0.0 equal to
+    * 0.0. Every bounded top-k ranks by it: this exec, the
+    * [[graft.operators.KnnTopK]] aggregators, the single-query widening
+    * merge (`Knn.mergeTopK`) and the graph beam. */
   def before(d1: Double, id1: Long, d2: Double, id2: Long): Boolean =
     if (d1 < d2) true
     else if (d1 == d2) id1 < id2
@@ -365,6 +370,21 @@ object KnnJoinExec {
     }
     ids(p) = id; dists(p) = d
     if (size < k) size + 1 else k
+  }
+
+  /** `t` with (id, d) inserted, at most k entries: `t` itself when it is
+    * full and (id, d) does not come before its kth entry, else a new
+    * bound (`t` is never modified). */
+  def offer(t: TopK, id: Long, d: Double, k: Int): TopK = {
+    val n = t.ids.length
+    if (n >= k && !before(d, id, t.dists(k - 1), t.ids(k - 1))) t
+    else {
+      val size = math.min(n + 1, k)
+      val ids = java.util.Arrays.copyOf(t.ids, size)
+      val dists = java.util.Arrays.copyOf(t.dists, size)
+      insert(ids, dists, 0, n, k, id, d)
+      new TopK(ids, dists)
+    }
   }
 
   /** The first k of two bounds in (dist, id) order. */

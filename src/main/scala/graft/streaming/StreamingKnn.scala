@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.KnnJoin
+import graft.plans.KnnJoinPlan
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -8,9 +8,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * flagship query (vectordb/kd_tree_database.py:285-304). The reference
   * answers one synchronous call at a time; Spark's native unit of arrival
   * is the micro-batch, so the serving loop is `foreachBatch` running the
-  * SAME batch kNN-join kernel used offline — arriving query vectors are
-  * answered k-nearest each against the (static) store, and results flow to
-  * any sink. One code path for offline eval and online serving means the
+  * SAME batch kNN-join operator used offline ([[KnnJoinPlan]]) — arriving
+  * query vectors are answered k-nearest each against the (static) store,
+  * and results flow to any sink. One code path for offline eval and online serving means the
   * two can never drift.
   *
   * Scale: each micro-batch broadcasts only that batch's queries; the store
@@ -25,11 +25,11 @@ object StreamingKnn {
   /** Serve a stream of (query_id, embedding) rows: every micro-batch is
     * answered with the exact batch kNN join against `db`, and the
     * (query_id, vec_id, dist, rn) answers are handed to `sink`. */
-  def serve(queries: DataFrame, db: DataFrame, k: Int, dim: Int)(
+  def serve(queries: DataFrame, db: DataFrame, k: Int)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(KnnJoin.join(batch, db, k, dim), batchId)
+        sink(KnnJoinPlan.join(batch, db, k), batchId)
       }
 }

@@ -92,7 +92,7 @@ class AnnLloydSpec extends SparkSpecBase {
       .select(col("vec_id").as("query_id"), col("embedding"))
     val cents = Ann.sampleCentroids(emb, 8)
     val assigned = Ann.assign(emb, cents)
-    val exact = graft.operators.KnnTopK.join(queries, emb, k = 10, dim = 64)
+    val exact = graft.plans.KnnJoinPlan.join(queries, emb, k = 10)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     val full = Ann.ivfJoin(queries, assigned, cents, k = 10, nprobe = 8)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, GraphAnn, KnnJoin}
+import graft.operators.{Ann, GraphAnn}
 import org.apache.spark.sql.functions._
 
 /** Graph-based ANN (NSW family): exact-graph build vs an in-memory
@@ -123,7 +123,7 @@ class GraphAnnSpec extends SparkSpecBase {
         beam = 8, hops = 5, nEntry = 2, dim = dim)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = KnnJoin.join(queries, db, 3, dim)
+    val exact = graft.plans.KnnJoinPlan.join(queries, db, 3)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(approx == exact)

@@ -2,7 +2,8 @@ package graft
 
 import graft.core.Fixtures
 import graft.index.{Grid, GridConfig}
-import graft.operators.{KnnCellJoin, KnnJoin}
+import graft.operators.KnnCellJoin
+import graft.plans.KnnJoinPlan
 import org.apache.spark.sql.functions._
 
 class KnnCellJoinSpec extends SparkSpecBase {
@@ -19,25 +20,10 @@ class KnnCellJoinSpec extends SparkSpecBase {
         bruteForceThreshold = 0)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val viaCross = KnnJoin.join(queries, emb, k = 4, dim = Fixtures.Dim)
+    val viaCross = KnnJoinPlan.join(queries, emb, k = 4)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(viaCells.toSeq == viaCross.toSeq)
-  }
-
-  test("driver-tracked widening loop == DataFrame anti-join loop, row for row") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val cfg = SparkEntry.gridCfg
-    val queries = emb.filter(col("vec_id") < 6)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val indexed = Grid.withCellId(emb, "embedding", cfg)
-    def run(limit: Int) = KnnCellJoin.join(queries, indexed, cfg, k = 4,
-        bruteForceThreshold = 0, driverIdLimit = limit)
-      .orderBy("query_id", "rn")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    // limit 0 forces the legacy DataFrame loop; default takes the
-    // driver-tracked path — identical rounds, identical rows
-    assert(run(10000).toSeq == run(0).toSeq)
   }
 
   test("NaN-component query terminates via the brute-force escape; null/short query embeddings throw") {
@@ -79,7 +65,7 @@ class KnnCellJoinSpec extends SparkSpecBase {
         bruteForceThreshold = 0)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val viaCross = KnnJoin.join(queries, emb, k = 4, dim = Fixtures.Dim)
+    val viaCross = KnnJoinPlan.join(queries, emb, k = 4)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(viaCells.toSeq == viaCross.toSeq)
@@ -110,7 +96,7 @@ class KnnCellJoinSpec extends SparkSpecBase {
           bruteForceThreshold = 0)
         .orderBy("query_id", "rn")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val viaCross = KnnJoin.join(queries, db, k, dim)
+      val viaCross = KnnJoinPlan.join(queries, db, k)
         .orderBy("query_id", "rn")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(viaCells == viaCross, s"trial $trial qc=$qc n=$n k=$k")
@@ -134,7 +120,7 @@ class KnnCellJoinSpec extends SparkSpecBase {
           Grid.withCellId(db, "embedding", cfg), cfg, k, bruteForceThreshold = 0)
         .orderBy("query_id", "rn")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val viaCross = KnnJoin.join(queries, db, k, dim)
+      val viaCross = KnnJoinPlan.join(queries, db, k)
         .orderBy("query_id", "rn")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(viaCells == viaCross, s"trial $trial cfg=$cfg n=$n k=$k")

@@ -3,7 +3,7 @@ package graft
 import graft.core.{Fixtures, Tables}
 import graft.functions.Distances
 import graft.index.{Grid, GridConfig, GridGeometry}
-import graft.operators.Knn
+import graft.operators.{Knn, KnnTopK}
 import org.apache.spark.sql.functions._
 
 /** kNN behavior parity with the reference test suite
@@ -107,14 +107,25 @@ class KnnSpec extends SparkSpecBase {
 
   test("widening merge orders (dist, vec_id) as Spark's sort does: NaN last, -0.0 == 0.0") {
     import spark.implicits._
-    val a = Seq(Knn.Neighbor(4, 0, 0.0), Knn.Neighbor(9, 0, 1.5), Knn.Neighbor(2, 0, Double.NaN))
+    val a = Seq(Knn.Neighbor(4, 0, 0.0), Knn.Neighbor(9, 0, 1.5), Knn.Neighbor(2, 0, Double.NaN),
+      Knn.Neighbor(5, 0, -0.0))
     val b = Seq(Knn.Neighbor(3, 0, -0.0), Knn.Neighbor(1, 0, 1.5), Knn.Neighbor(0, 0, Double.NaN),
       Knn.Neighbor(7, 0, Double.PositiveInfinity))
-    for (k <- 1 to 7) {
+    for (k <- 1 to 9) {
       val bySpark = (a ++ b).toDS().orderBy(col("dist").asc, col("vec_id").asc).limit(k)
         .collect().map(_.vec_id).toSeq
-      for ((x, y) <- Seq((a, b), (b, a)))
+      for ((x, y) <- Seq((a, b), (b, a))) {
         assert(Knn.mergeTopK(x, y, k).map(_.vec_id) == bySpark, s"k=$k")
+        // the aggregators rank the same entries, arriving in the same order
+        for (parts <- Seq(1, 2)) {
+          val cands = spark.sparkContext.parallelize((x ++ y).map(n => (0L, n.vec_id, n.dist)), parts)
+            .toDF("query_id", "vec_id", "dist")
+          for ((form, df) <- Seq("topK" -> KnnTopK.topK(cands, k),
+              "topKDedup" -> KnnTopK.topKDedup(cands, k)))
+            assert(df.orderBy("rn").collect().map(_.getLong(1)).toSeq == bySpark,
+              s"$form k=$k parts=$parts")
+        }
+      }
     }
   }
 

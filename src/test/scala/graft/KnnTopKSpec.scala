@@ -1,7 +1,8 @@
 package graft
 
 import graft.core.Fixtures
-import graft.operators.{KnnJoin, KnnTopK}
+import graft.operators.KnnTopK
+import graft.plans.KnnJoinPlan
 import org.apache.spark.sql.functions._
 
 class KnnTopKSpec extends SparkSpecBase {
@@ -10,18 +11,18 @@ class KnnTopKSpec extends SparkSpecBase {
   private lazy val queries = emb.filter(col("vec_id") < 7)
     .select(col("vec_id").as("query_id"), col("embedding"))
 
-  test("aggregator kNN join equals window-rank kNN join exactly") {
-    val viaAgg = KnnTopK.join(queries, emb, k = 5, dim = Fixtures.Dim)
+  test("aggregator top-k over the cross candidates equals KnnJoinPlan.join exactly") {
+    val viaAgg = KnnTopK.topK(crossCands(queries, emb, Fixtures.Dim), k = 5)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val viaWin = KnnJoin.join(queries, emb, k = 5, dim = Fixtures.Dim)
+    val viaExec = KnnJoinPlan.join(queries, emb, k = 5)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    assert(viaAgg.toSeq == viaWin.toSeq)
+    assert(viaAgg.toSeq == viaExec.toSeq)
   }
 
   test("buffer stays bounded at k and merge keeps global order across partitions") {
-    val out = KnnTopK.join(queries, emb.repartition(8), k = 3, dim = Fixtures.Dim)
+    val out = KnnTopK.topK(crossCands(queries, emb.repartition(8), Fixtures.Dim), k = 3)
     val perQuery = out.groupBy("query_id").count().collect()
     assert(perQuery.forall(_.getLong(1) == 3L))
     // rn follows (dist asc, id asc) within each query
@@ -53,11 +54,12 @@ class KnnTopKSpec extends SparkSpecBase {
     val agg = new KnnTopK.TopKDedupAgg(2)
     def red(cs: Seq[(Long, Double)]) =
       cs.foldLeft(agg.zero)((b, c) => agg.reduce(b, KnnTopK.Cand(7L, c._1, c._2)))
-    val want = Seq(KnnTopK.Neighbor(1L, 0.1), KnnTopK.Neighbor(3L, 2.0))
+    def entries(t: graft.plans.KnnJoinExec.TopK) = t.ids.toSeq.zip(t.dists.toSeq)
+    val want = Seq((1L, 0.1), (3L, 2.0))
     for (cs <- Seq(Seq((1L, 5.0), (3L, 2.0), (1L, 0.1)), Seq((1L, 0.1), (3L, 2.0), (1L, 5.0)))) {
-      assert(red(cs).toSeq == want, s"reduce $cs")
-      assert(agg.merge(red(cs.take(2)), red(cs.drop(2))).toSeq == want, s"merge $cs")
-      assert(agg.merge(red(cs.drop(2)), red(cs.take(2))).toSeq == want, s"merge reversed $cs")
+      assert(entries(red(cs)) == want, s"reduce $cs")
+      assert(entries(agg.merge(red(cs.take(2)), red(cs.drop(2)))) == want, s"merge $cs")
+      assert(entries(agg.merge(red(cs.drop(2)), red(cs.take(2)))) == want, s"merge reversed $cs")
     }
   }
 }

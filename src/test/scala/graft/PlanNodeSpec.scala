@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
 /** The SparkSessionExtensions whole-operator path (SURVEY §2.2 UDF/UDAF
   * row): custom LogicalPlan → SparkStrategy → custom SparkPlan for the
   * batch kNN join. Pins (a) bit-equality with the Aggregator composition
-  * form, (b) that the planner actually lowers through KnnJoinExec, and
-  * (c) operator edge cases (empty sides, filtered data, missing columns).
+  * form (`KnnTopK.topK` over the scored cross product), (b) that the
+  * planner actually lowers through KnnJoinExec, and (c) operator edge
+  * cases (empty sides, filtered data, missing columns).
   */
 class PlanNodeSpec extends SparkSpecBase {
 
@@ -23,7 +24,7 @@ class PlanNodeSpec extends SparkSpecBase {
 
   test("KnnJoinPlan.join is bit-equal to the KnnTopK composition form") {
     val viaPlan = KnnJoinPlan.join(queries, emb, k = 3)
-    val viaAgg = KnnTopK.join(queries, emb, k = 3, dim = core.Fixtures.Dim)
+    val viaAgg = KnnTopK.topK(crossCands(queries, emb, core.Fixtures.Dim), 3)
     assert(collect(viaPlan) == collect(viaAgg))
   }
 
@@ -51,7 +52,7 @@ class PlanNodeSpec extends SparkSpecBase {
   test("filter-before-k semantics: pre-filtered data side") {
     val filtered = emb.filter(col("label") === 3)
     val viaPlan = KnnJoinPlan.join(queries, filtered, k = 3)
-    val viaAgg = KnnTopK.join(queries, filtered, k = 3, dim = core.Fixtures.Dim)
+    val viaAgg = KnnTopK.topK(crossCands(queries, filtered, core.Fixtures.Dim), 3)
     assert(collect(viaPlan) == collect(viaAgg))
   }
 
@@ -112,23 +113,25 @@ class PlanNodeSpec extends SparkSpecBase {
       7L -> vec(0, 0, nan), 8L -> vec(inf, 0, 0), 9L -> vec(-inf, 0, 0), 10L -> vec(2, 0, 0))
     val qs = Seq(0L -> vec(0, 0, 0), 1L -> vec(1, 0, 0), 2L -> vec(nan, 0, 0), 3L -> vec(0, 0, inf))
       .toDF("query_id", "embedding")
-    val ranked = data.toDF("vec_id", "embedding").crossJoin(
-        qs.select(col("query_id"), col("embedding").as("q")))
-      .select(col("query_id"), col("vec_id"),
-        functions.Distances.squaredL2Cols(col("q"), col("embedding"), 40).as("dist"))
+    val ranked = crossCands(qs, data.toDF("vec_id", "embedding"), 40)
       .orderBy("query_id", "dist", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).groupBy(_._1)
     assert(ranked(0L).count(_._3.isNaN) == 2 && ranked(0L).count(_._3.isInfinite) == 3)
     for (order <- Seq(data, data.reverse); parts <- Seq(1, 2); k <- 1 to data.size + 1) {
       val dataDf = spark.sparkContext.parallelize(order, parts).toDF("vec_id", "embedding")
-      val got = collect(KnnJoinPlan.join(qs, dataDf, k))
       val want = ranked.keys.toSeq.sorted.flatMap { q =>
         ranked(q).take(k).zipWithIndex.map { case ((_, id, d), r) => (q, id, d, r + 1) }
       }
       // NaN != NaN, so compare distances by their bits
       def bits(rows: Seq[(Long, Long, Double, Int)]) =
         rows.map { case (q, id, d, r) => (q, id, java.lang.Double.doubleToLongBits(d), r) }
-      assert(bits(got) == bits(want), s"k=$k parts=$parts ascending=${order == data}")
+      // the exec, and the aggregators over the same candidates in the same
+      // arrival order: one (dist, id) order for every bounded top-k
+      val cands = crossCands(qs, dataDf, 40)
+      for ((form, df) <- Seq("exec" -> KnnJoinPlan.join(qs, dataDf, k),
+          "topK" -> KnnTopK.topK(cands, k), "topKDedup" -> KnnTopK.topKDedup(cands, k)))
+        assert(bits(collect(df)) == bits(want),
+          s"$form k=$k parts=$parts ascending=${order == data}")
     }
   }
 }

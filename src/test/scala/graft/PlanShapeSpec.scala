@@ -115,11 +115,24 @@ class PlanShapeSpec extends SparkSpecBase {
   test("aggregator kNN join: partial+final object hash aggregate (map-side top-k)") {
     withoutAqe {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val p = planOf(KnnTopK.join(
+      val p = planOf(KnnTopK.topK(crossCands(
         emb.filter(col("vec_id") < 3).select(col("vec_id").as("query_id"), col("embedding")),
-        emb, k = 3, dim = Fixtures.Dim))
+        emb, Fixtures.Dim), k = 3))
       val aggs = p.collect { case a: ObjectHashAggregateExec => a }
       assert(aggs.size == 2, s"expected partial+final ObjectHashAggregate, got ${aggs.size}")
+    }
+  }
+
+  test("exact kNN joins and recall ground truth plan to KnnJoinExec, no Window") {
+    withoutAqe {
+      for (q <- Seq("knn_join_l2", "knn_join_l2_agg", "knn_join_l2_plan", "ann_ivf_recall")) {
+        val p = planOf(SparkEntry.queries(q)(spark, sfDir))
+        assert(p.collect { case e: graft.plans.KnnJoinExec => e }.nonEmpty,
+          s"$q: KnnJoinExec missing")
+        assert(p.collect {
+          case w: org.apache.spark.sql.execution.window.WindowExec => w
+        }.isEmpty, s"$q: WindowExec present — candidate pairs are window-ranked")
+      }
     }
   }
 

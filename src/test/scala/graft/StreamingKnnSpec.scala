@@ -1,7 +1,6 @@
 package graft
 
-import graft.core.Fixtures
-import graft.operators.KnnJoin
+import graft.plans.KnnJoinPlan
 import graft.streaming.StreamingKnn
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -23,7 +22,7 @@ class StreamingKnnSpec extends SparkSpecBase {
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Int)]
     val q = StreamingKnn.serve(
         stream.toDF().toDF("query_id", "embedding"),
-        db, k = 3, dim = Fixtures.Dim) { (answers, _) =>
+        db, k = 3) { (answers, _) =>
       got ++= answers.as[(Long, Long, Double, Int)].collect()
     }.start()
     try {
@@ -31,10 +30,10 @@ class StreamingKnnSpec extends SparkSpecBase {
       stream.addData(queryRows.drop(2)); q.processAllAvailable()
     } finally q.stop()
 
-    val want = KnnJoin.join(
+    val want = KnnJoinPlan.join(
         db.filter(col("vec_id") < 6)
           .select(col("vec_id").as("query_id"), col("embedding")),
-        db, k = 3, dim = Fixtures.Dim)
+        db, k = 3)
       .as[(Long, Long, Double, Int)].collect()
     assert(got.toSet === want.toSet)
     assert(got.size === want.length) // no duplicate serving of any batch
