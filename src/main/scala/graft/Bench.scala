@@ -45,14 +45,14 @@ object Bench {
     // codegen paths) and a footer-deep read of every fixture table so the
     // first measured query isn't charged for cold file-cache I/O.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => System.err.println(s"[bench] warm-up entry failed: $e") }
     // Physical-layout prep (bucketed tables) runs here, outside the timed
     // region — query builders are pure plan constructors.
     try SparkEntry.prepareFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => System.err.println(s"[bench] prepareFixtures failed: $e") }
     graft.core.Tables.all.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[bench] warm-up read of $t failed: $e") }
     }
     // min of three runs per query: the host is shared and single-shot
     // numbers carry 20-30% contention noise (observed cross-round on
@@ -119,7 +119,7 @@ object Bench {
       try {
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable => System.err.println(s"[bench] teardown after $name failed: $e") }
       // same independence contract for DISK state: the store-lifecycle
       // queries write fixed parquet roots under java.io.tmpdir (versioned
       // store, roundtrip store, autoprune stores). Left in place, their

@@ -40,14 +40,14 @@ object ScaleProbe extends App {
       .write.mode("overwrite").partitionBy("cell_id").parquet(store)
   }
   val indexed = spark.read.parquet(store)
-  val counts = t("cell counts (index stats)") {
-    Knn.cellCounts(indexed)
+  val stats = t("cell stats (index stats)") {
+    Knn.cellStats(indexed)
   }
   t("pruned kNN k=10 (warm 2nd run)") {
-    Knn.prunedSearch(indexed, cfg, Fixtures.Q64, 10, cellCountsCache = Some(counts))
+    Knn.prunedSearch(indexed, cfg, Fixtures.Q64, 10, cellStatsCache = Some(stats))
   }
   val pruned = t("pruned kNN k=10") {
-    Knn.prunedSearch(indexed, cfg, Fixtures.Q64, 10, cellCountsCache = Some(counts))
+    Knn.prunedSearch(indexed, cfg, Fixtures.Q64, 10, cellStatsCache = Some(stats))
   }
   val brute = t("brute kNN k=10") {
     Knn.bruteForce(indexed, Distances.squaredL2Lit(col("embedding"), Fixtures.Q64), 10)

@@ -64,7 +64,7 @@ object Verify {
       try {
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable => System.err.println(s"[verify] teardown after $name failed: $e") }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -19,35 +19,85 @@ final case class VectorRecord(vec_id: Long, embedding: Array[Float], label: Int)
 
 /** Pluggable distance metric — the Spark analog of the reference's
   * `DistanceMetric` ABC (vectordb/distance_metric.py:6-54). `dist` produces
-  * a native Column expression (codegen'd); `cellBound` is the closed-form
-  * lower bound used for candidate-cell pruning. A custom metric without a
-  * closed form can return 0.0 — never prunes, always correct (the safe
-  * replacement for the reference's scipy black-box fallback,
-  * distance_metric.py:25-54).
+  * a native Column expression (codegen'd). Two closed-form lower bounds
+  * prune candidate cells:
+  *  - `cellBound`: from the cell's grid interval, over the gridded dims;
+  *  - `boxBound`: from the data bounding box of the cell's rows (per-dim
+  *    `lo`/`hi` floats), over every dim.
+  * A custom metric without a closed form keeps the 0.0 defaults — never
+  * prunes, always correct (the safe replacement for the reference's scipy
+  * black-box fallback, distance_metric.py:25-54).
+  *
+  * The built-in box bounds take each per-dim gap from the float-widened
+  * box edges and combine the gaps in the kernel's order
+  * ([[graft.functions.VecMetricLit]]: left to right over the dims). A
+  * point in the box is no nearer than its edge on any dim, and rounding is
+  * monotone, so the bound never exceeds the distance the kernel computes,
+  * with no slack. A dim whose `lo` or `hi` is NaN adds nothing, and a query
+  * of another length than the box gets 0.0.
   */
 trait Metric extends Serializable {
   def dist(v: Column, q: Array[Double]): Column
   def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double = 0.0
+  def boxBound(q: Array[Double], lo: Array[Float], hi: Array[Float]): Double = 0.0
+}
+object Metric {
+  /** How far `q` lies outside [lo, hi] on one dim: 0 inside, and 0 unless
+    * lo ≤ hi (so 0 when an edge or `q` is NaN). */
+  @inline private[api] def gap(q: Double, lo: Float, hi: Float): Double =
+    if (!(lo <= hi)) 0.0
+    else if (q < lo) lo.toDouble - q else if (q > hi) q - hi.toDouble else 0.0
+
+  /** The squared-L2 box bound; Σ gap², summed as the kernel sums d². */
+  private[api] def sqL2Box(q: Array[Double], lo: Array[Float], hi: Array[Float]): Double = {
+    if (q.length != lo.length) return 0.0
+    var s = 0.0; var i = 0
+    while (i < q.length) { val g = gap(q(i), lo(i), hi(i)); s += g * g; i += 1 }
+    s
+  }
 }
 object SquaredL2 extends Metric {
   def dist(v: Column, q: Array[Double]): Column = Distances.squaredL2Lit(v, q)
   override def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double =
     Grid.cellLowerBoundSqL2(q, cell, cfg)
+  override def boxBound(q: Array[Double], lo: Array[Float], hi: Array[Float]): Double =
+    Metric.sqL2Box(q, lo, hi)
 }
 object L1 extends Metric {
   def dist(v: Column, q: Array[Double]): Column = Distances.l1Lit(v, q)
   override def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double =
     Grid.cellLowerBoundL1(q, cell, cfg)
+  override def boxBound(q: Array[Double], lo: Array[Float], hi: Array[Float]): Double = {
+    if (q.length != lo.length) return 0.0
+    var s = 0.0; var i = 0
+    while (i < q.length) { s += Metric.gap(q(i), lo(i), hi(i)); i += 1 }
+    s
+  }
 }
 object LInf extends Metric {
   def dist(v: Column, q: Array[Double]): Column = Distances.lInfLit(v, q)
   override def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double =
     Grid.cellLowerBoundLInf(q, cell, cfg)
+  override def boxBound(q: Array[Double], lo: Array[Float], hi: Array[Float]): Double = {
+    if (q.length != lo.length) return 0.0
+    var m = 0.0; var i = 0
+    while (i < q.length) { m = math.max(m, Metric.gap(q(i), lo(i), hi(i))); i += 1 }
+    m
+  }
 }
+/** The box bound needs non-negative weights: a negative (or NaN) one gets
+  * 0.0, since a nearer edge would then give a LARGER term. */
 final case class MahalanobisDiag(invDiag: Array[Double]) extends Metric {
   def dist(v: Column, q: Array[Double]): Column = Distances.mahalanobisDiagLit(v, q, invDiag)
   override def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double =
     Grid.cellLowerBoundMahalanobisDiag(q, cell, cfg, invDiag)
+  private val weightsNonNegative = invDiag.forall(_ >= 0.0)
+  override def boxBound(q: Array[Double], lo: Array[Float], hi: Array[Float]): Double = {
+    if (q.length != lo.length || invDiag.length < q.length || !weightsNonNegative) return 0.0
+    var s = 0.0; var i = 0
+    while (i < q.length) { val g = Metric.gap(q(i), lo(i), hi(i)); s += g * g * invDiag(i); i += 1 }
+    s
+  }
 }
 
 /** Full-covariance Mahalanobis — the reference's default-surface metric
@@ -63,7 +113,9 @@ final case class MahalanobisDiag(invDiag: Array[Double]) extends Metric {
   * λ·(squared-L2 cell bound) never exceeds the true distance to any
   * point in the cell. A non-diagonally-dominant inverse just yields
   * λ = 0 — pruning disabled, correctness untouched (same safety rule as
-  * the black-box 0.0 default in [[Metric.cellBound]]). */
+  * the black-box 0.0 default in [[Metric.cellBound]]). The box bound is
+  * λ' × the squared-L2 box bound, with λ' ≤ λ lowered by the kernel's
+  * rounding (`lamBox`). */
 final case class MahalanobisFull(invFlat: Array[Double], mdim: Int) extends Metric {
   require(invFlat.length == mdim * mdim, "inverse covariance must be mdim x mdim, row-major")
   private val lamMin: Double = {
@@ -82,6 +134,23 @@ final case class MahalanobisFull(invFlat: Array[Double], mdim: Int) extends Metr
     Distances.mahalanobisFullLit(v, q, invFlat)
   override def cellBound(q: Array[Double], cell: Long, cfg: GridGeometry): Double =
     lamMin * Grid.cellLowerBoundSqL2(q, cell, cfg)
+
+  /** `lamMin` lowered so that λ × the squared-L2 box bound never exceeds
+    * the kernel's value, rounding included. The kernel sums n² products
+    * d_i·w_ij·d_j, so it may fall short of d'·S⁻¹·d by γ·R·‖d‖² (R: the
+    * largest absolute row or column sum of S⁻¹; γ below); lamMin's own sums
+    * may overshoot the Gershgorin bound by 2γ·R; and the squared-L2 box
+    * bound may round up by a factor (1 + γ). Lowering by γ·(3R + lamMin)
+    * covers all three. */
+  private val lamBox: Double = {
+    val gamma = (mdim.toDouble * mdim + 2.0 * mdim + 4.0) * math.ulp(1.0)
+    def absSum(f: Int => Int): Double = (0 until mdim).map(j => math.abs(invFlat(f(j)))).sum
+    val r = (0 until mdim).map(i =>
+      math.max(absSum(j => i * mdim + j), absSum(j => j * mdim + i))).foldLeft(0.0)(math.max)
+    math.max(0.0, lamMin - gamma * (3.0 * r + lamMin))
+  }
+  override def boxBound(q: Array[Double], lo: Array[Float], hi: Array[Float]): Double =
+    if (q.length != mdim || !(lamBox > 0.0)) 0.0 else lamBox * Metric.sqL2Box(q, lo, hi)
 }
 object MahalanobisFull {
   /** Factorize the covariance once, then broadcast the inverse. */
@@ -99,10 +168,13 @@ object MahalanobisFull {
   * `save()` (`partitionBy("cell_id")`) so kNN candidate-cell pruning becomes
   * file-level partition pruning on a 100 TB store.
   *
-  * Each snapshot holds its own index stats (`cell_id → rows`), aggregated
-  * once on its first kNN or radius call; later calls scan only candidate
-  * cells. A mutation returns a snapshot with no stats, never its parent's:
-  * an insert or a move can fill a cell the parent did not have.
+  * Each snapshot holds its own index stats, aggregated in one job on its
+  * first kNN or radius call: per non-empty cell, its rows and the data
+  * bounding box of its embeddings (per-dim min and max over all `dim`
+  * dims). Later calls rank cells by the larger of the metric's grid bound
+  * and its box bound, and scan only candidate cells. A mutation returns a
+  * snapshot with no stats, never its parent's: an insert or a move can
+  * fill a cell the parent did not have, or leave a cell's box.
   */
 final class VectorDatabase private (
     val spark: SparkSession,
@@ -111,13 +183,33 @@ final class VectorDatabase private (
     val defaultMetric: Metric,
     private val nextIdBase: Long) {
 
-  /** cell_id → rows of this snapshot, filled by one aggregation on first
-    * use. Held only while the geometry's cell count is within the driver
-    * cap shared with the prune rule ([[GridRadiusPruning.MaxEnumCells]]);
-    * larger geometries keep the distributed stats path of
-    * [[Knn.prunedSearch]]. */
-  private lazy val cellStats: Option[Map[Long, Long]] =
-    if (cfg.numCells <= GridRadiusPruning.MaxEnumCells) Some(Knn.cellCounts(state)) else None
+  /** cell_id → rows and box of this snapshot, filled by one aggregation on
+    * first use. Held only while the geometry's cell count is within the
+    * driver cap shared with the prune rule
+    * ([[GridRadiusPruning.MaxEnumCells]]); larger geometries keep the
+    * distributed stats path of [[Knn.prunedSearch]]. The boxes (2·dim
+    * floats per non-empty cell) are held only while cells × dim is within
+    * the same cap; past it the stats hold rows alone and the grid bound
+    * prunes alone. */
+  private lazy val cellStats: Option[Map[Long, Knn.CellStats]] =
+    if (cfg.numCells > GridRadiusPruning.MaxEnumCells) None
+    else Some(Knn.cellStats(state,
+      Some(cfg.dim).filter(_ => cfg.numCells * cfg.dim <= GridRadiusPruning.MaxEnumCells)))
+
+  /** The cell bound `m` prunes with on this snapshot: its grid bound, raised
+    * to its box bound where the stats hold the cell's box. A NaN box bound
+    * raises nothing. */
+  private def cellBound(m: Metric): (Array[Double], Long, GridGeometry) => Double =
+    cellStats match {
+      case None => m.cellBound
+      case Some(stats) => (q, cell, g) => {
+        val grid = m.cellBound(q, cell, g)
+        stats.get(cell).flatMap(_.box) match {
+          case Some((lo, hi)) => val box = m.boxBound(q, lo, hi); if (box > grid) box else grid
+          case None => grid
+        }
+      }
+    }
 
   /** dim accessor (reference database.py:22-25). */
   def dim: Int = cfg.dim
@@ -195,8 +287,8 @@ final class VectorDatabase private (
       metric: Option[Metric] = None): Seq[Knn.Neighbor] = {
     val m = metric.getOrElse(defaultMetric)
     Knn.prunedSearch(state, cfg, q, k, pred = filter,
-      cellBound = m.cellBound, distExpr = Some(m.dist(col("embedding"), q)),
-      cellCountsCache = cellStats)
+      cellBound = cellBound(m), distExpr = Some(m.dist(col("embedding"), q)),
+      cellStatsCache = cellStats)
   }
 
   /** Radius (range) search: every stored vector within distance `r` of
@@ -209,8 +301,8 @@ final class VectorDatabase private (
       metric: Option[Metric] = None): DataFrame = {
     val m = metric.getOrElse(defaultMetric)
     Knn.prunedRadius(state, cfg, q, r, pred = filter,
-      cellBound = m.cellBound, distExpr = Some(m.dist(col("embedding"), q)),
-      cellCountsCache = cellStats)
+      cellBound = cellBound(m), distExpr = Some(m.dist(col("embedding"), q)),
+      cellStatsCache = cellStats)
   }
 
   /** Batch kNN join: k nearest stored vectors for EVERY query row — the

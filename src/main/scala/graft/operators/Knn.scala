@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Distances
+import graft.functions.{Distances, VecBox}
 import graft.index.{Grid, GridGeometry}
 import graft.plans.KnnJoinExec
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -60,12 +60,17 @@ object Knn {
     * reference's `bound > current_neighbors[-1]` break
     * (kd_tree_database.py:213-218).
     *
-    * `cellCountsCache` (cell_id → rows, see [[cellCounts]]) is computed
-    * once per index build and reused across queries — the analog of the
-    * tree structure itself. With it, a query runs only its scan rounds;
-    * without it, each call first aggregates the stats over the whole store.
-    * `VectorDatabase` holds one such map per snapshot. Each widening round
-    * scans only the cells it adds (see [[widen]]).
+    * `cellStatsCache` (see [[cellStats]]; the search reads its rows) is
+    * computed once per index build and reused across queries — the analog
+    * of the tree structure itself. With it, a query runs only its scan
+    * rounds; without it, each call first aggregates the stats over the
+    * whole store. Each widening round scans only the cells it adds (see
+    * [[widen]]).
+    *
+    * `cellBound` may be any admissible bound, not only the grid's:
+    * `VectorDatabase` holds one [[cellStats]] map per snapshot and ranks
+    * each cell by the larger of its metric's grid bound and its bound over
+    * the cell's data bounding box, which covers every dimension.
     * Works over either [[GridGeometry]] (equal-width or quantile cells).
     */
   def prunedSearch(
@@ -76,11 +81,11 @@ object Knn {
       pred: Option[Column] = None,
       cellBound: (Array[Double], Long, GridGeometry) => Double = Grid.cellLowerBoundSqL2,
       distExpr: Option[Column] = None,
-      cellCountsCache: Option[Map[Long, Long]] = None,
+      cellStatsCache: Option[Map[Long, CellStats]] = None,
       bruteForceThreshold: Long = 200000L): Seq[Neighbor] =
     prunedSearchBound(indexed,
       distExpr.getOrElse(Distances.squaredL2Lit(col("embedding"), q)), k,
-      cell => cellBound(q, cell, cfg), pred, cellCountsCache,
+      cell => cellBound(q, cell, cfg), pred, cellStatsCache,
       bruteForceThreshold)
 
   /** Core of [[prunedSearch]]: the ranking + widening loop over an OPAQUE
@@ -90,7 +95,7 @@ object Knn {
     * distance from the query to every point bucketed into `cell`.
     *
     * Driver memory is O(cells actually scanned), NOT O(total cells): with
-    * no `cellCountsCache`, per-cell stats are aggregated distributed, the
+    * no `cellStatsCache`, per-cell stats are aggregated distributed, the
     * bound is priced on executors (`bound` ships in a deterministic UDF —
     * every in-repo geometry closure is a pure function of plan-time
     * constants), and the driver pulls only geometrically growing RANKED
@@ -106,22 +111,39 @@ object Knn {
       k: Int,
       bound: Long => Double,
       pred: Option[Column] = None,
-      cellCountsCache: Option[Map[Long, Long]] = None,
+      cellStatsCache: Option[Map[Long, CellStats]] = None,
       bruteForceThreshold: Long = 200000L): Seq[Neighbor] = {
 
-    cellCountsCache match {
-      case Some(cc) => rankedSearch(indexed, dist, k, bound, pred, cc, bruteForceThreshold)
+    cellStatsCache match {
+      case Some(stats) => rankedSearch(indexed, dist, k, bound, pred, stats, bruteForceThreshold)
       case None =>
         prunedSearchDistributed(indexed, dist, k, bound, pred, bruteForceThreshold)
     }
   }
 
-  /** Per-cell row counts (cell_id → rows) of a cell-indexed store: one
-    * aggregation job, O(non-empty cells) driver memory. A parquet
+  /** One non-empty cell of a cell-indexed store: its row count and, when
+    * asked for, the bounding box of its embeddings — `lo` and `hi` hold the
+    * per-dim minimum and maximum over every dimension. The box is None for
+    * a cell holding a null vector, a vector of another length, or a null
+    * or NaN coordinate (see [[graft.functions.VecBox]]). */
+  final case class CellStats(rows: Long, box: Option[(Array[Float], Array[Float])])
+
+  /** Per-cell stats (cell_id → [[CellStats]]) of a cell-indexed store: one
+    * aggregation job, O(non-empty cells) driver memory, plus 2·`boxDim`
+    * floats per cell when `boxDim` is given. The box is one array-valued
+    * aggregate, so the plan does not grow with the dimension. A parquet
     * partition column reads back as INT, so the key is normalized to Long. */
-  def cellCounts(indexed: DataFrame): Map[Long, Long] =
-    indexed.groupBy(col("cell_id").cast("long")).count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+  def cellStats(indexed: DataFrame, boxDim: Option[Int] = None): Map[Long, CellStats] = {
+    val box = boxDim.map(VecBox.of(col("embedding"), _)).toSeq
+    indexed.groupBy(col("cell_id").cast("long")).agg(count(lit(1)), box: _*).collect()
+      .map { r =>
+        val lohi = boxDim.filterNot(_ => r.isNullAt(2)).map { n =>
+          val a = r.getSeq[Float](2).toArray
+          (a.take(n), a.drop(n))
+        }
+        r.getLong(0) -> CellStats(r.getLong(1), lohi)
+      }.toMap
+  }
 
   /** Cached-stats path: the caller holds the stats map (index-build
     * artifact, amortized across queries), so the cells are ranked on the
@@ -132,14 +154,14 @@ object Knn {
       k: Int,
       bound: Long => Double,
       pred: Option[Column],
-      cc: Map[Long, Long],
+      stats: Map[Long, CellStats],
       bruteForceThreshold: Long): Seq[Neighbor] = {
-    if (cc.isEmpty) return Seq.empty // empty DB → empty result (tests:70-77)
-    val ranked: Array[(Long, Double, Long)] = cc.toArray
-      .map { case (cell, n) => (cell, bound(cell), n) }
+    if (stats.isEmpty) return Seq.empty // empty DB → empty result (tests:70-77)
+    val ranked: Array[(Long, Double, Long)] = stats.toArray
+      .map { case (cell, st) => (cell, bound(cell), st.rows) }
       .sortBy { case (cell, b, _) => (b, cell) }
     widen(indexed, dist, k, pred, bruteForceThreshold,
-      nCells = ranked.length.toLong, totalRows = cc.values.sum,
+      nCells = ranked.length.toLong, totalRows = ranked.map(_._3).sum,
       entry = i => ranked(i.toInt))
   }
 
@@ -198,7 +220,7 @@ object Knn {
       // on the driver. Same results; O(cells) driver memory, so only sane
       // for small stores (the pre-r13 behavior).
       case e: Throwable if isNotSerializable(e) =>
-        rankedSearch(indexed, dist, k, bound, pred, cellCounts(indexed), bruteForceThreshold)
+        rankedSearch(indexed, dist, k, bound, pred, cellStats(indexed), bruteForceThreshold)
     } finally priced.unpersist(false)
   }
 
@@ -319,7 +341,7 @@ object Knn {
     * there is no widening loop, just one scan over the candidate cells
     * (partition pruning on a cell-partitioned store). Exact: a cell with
     * bound > r cannot contain a point within r. The non-empty cells come
-    * from `cellCountsCache` when the caller holds the stats (as in
+    * from `cellStatsCache` when the caller holds the stats (as in
     * [[prunedSearch]]), else from one distinct-cells job. */
   def prunedRadius(
       indexed: DataFrame,
@@ -329,8 +351,8 @@ object Knn {
       pred: Option[Column] = None,
       cellBound: (Array[Double], Long, GridGeometry) => Double = Grid.cellLowerBoundSqL2,
       distExpr: Option[Column] = None,
-      cellCountsCache: Option[Map[Long, Long]] = None): DataFrame = {
-    val nonEmpty = cellCountsCache.map(_.keys.toArray).getOrElse(
+      cellStatsCache: Option[Map[Long, CellStats]] = None): DataFrame = {
+    val nonEmpty = cellStatsCache.map(_.keys.toArray).getOrElse(
       indexed.select(col("cell_id")).distinct().collect()
         .map(_.getAs[Number](0).longValue()))
     val cells = nonEmpty.filter(cell => cellBound(q, cell, cfg) <= r)

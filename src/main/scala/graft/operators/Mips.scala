@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Pruning: rows are banded by a store-time `band` column (any bucketing of
   * the magnitude; the declared queries band on the integer weight). Per
   * band the driver collects (rows, max w·|v|) once — the index analog of
-  * [[Knn.prunedSearch]]'s cellCounts — then scans bands in DESCENDING bound
+  * [[Knn.prunedSearch]]'s cellStats — then scans bands in DESCENDING bound
   * order, widening geometrically until the kth best score >= the next
   * unscanned band's bound. Exact: a band whose Cauchy-Schwarz bound is
   * below the kth score cannot improve the top-k. On a band-partitioned

@@ -2,7 +2,7 @@ package graft
 
 import graft.api.{L1, SquaredL2, VectorDatabase}
 import graft.core.{Fixtures, Tables}
-import graft.index.GridConfig
+import graft.index.{Grid, GridConfig}
 import graft.operators.Knn
 import org.apache.spark.sql.functions._
 
@@ -249,24 +249,51 @@ class ApiSpec extends SparkSpecBase {
   // dim-0 bucket of 2 or 3 is empty; dims 3..7 stay near 0, so a query's
   // nearest rows sit in its own cell.
   private val BigRows = 200001L
-  private lazy val big: VectorDatabase = {
-    val cfg = GridConfig(dim = 8, lower = -1.0, upper = 1.0, partsPerDim = 4, gridDims = 3)
-    def u(d: Int) = pmod(xxhash64(col("id"), lit(d)), lit(1000000L)).cast("double") / 1e6
-    val emb = array(Seq(u(0) - 1.0, u(1) * 2.0 - 1.0, u(2) * 2.0 - 1.0) ++
-      (3 until 8).map(u(_) * 0.01): _*).cast("array<float>")
-    val df = spark.range(0, BigRows).select(col("id").as("vec_id"), emb.as("embedding"),
-      (col("id") % 10).cast("int").as("label"))
-    val path = java.nio.file.Files.createTempDirectory("graftbig").toString + "/store"
-    VectorDatabase.fromDataFrame(spark, df, cfg).save(path)
-    VectorDatabase.load(spark, path, cfg)
+  private val bigCfg = GridConfig(dim = 8, lower = -1.0, upper = 1.0, partsPerDim = 4, gridDims = 3)
+  /** A uniform [0, 1) draw per row id and dim. */
+  private def u(d: Int) = pmod(xxhash64(col("id"), lit(d)), lit(1000000L)).cast("double") / 1e6
+  /** Saves BigRows rows with `emb` over ids 0 until BigRows, reloads them. */
+  private def savedBig(name: String, emb: Seq[org.apache.spark.sql.Column]): VectorDatabase = {
+    val df = spark.range(0, BigRows).select(col("id").as("vec_id"),
+      array(emb: _*).cast("array<float>").as("embedding"), (col("id") % 10).cast("int").as("label"))
+    val path = java.nio.file.Files.createTempDirectory(name).toString + "/store"
+    VectorDatabase.fromDataFrame(spark, df, bigCfg).save(path)
+    VectorDatabase.load(spark, path, bigCfg)
   }
+  private lazy val big: VectorDatabase = savedBig("graftbig",
+    Seq(u(0) - 1.0, u(1) * 2.0 - 1.0, u(2) * 2.0 - 1.0) ++ (3 until 8).map(u(_) * 0.01))
   private val bigQ = Array(-0.25, -0.25, 0.25, 0.005, 0.005, 0.005, 0.005, 0.005)
 
-  private def bruteTop(db: VectorDatabase, q: Array[Double], k: Int): Seq[(Long, Double)] =
-    Knn.bruteForce(db.state, SquaredL2.dist(col("embedding"), q), k).collect()
+  // A saved store with two grid-adjacent clusters that differ only in the
+  // ungridded dims: `near` (ids below FaceRows) lies just below the dim-0
+  // face at 0 with dims 3..7 in [0, 0.01); `far` (the next FaceRows ids)
+  // lies just above that face with dims 3..7 in [0.9, 0.91). Gridded dims
+  // 1 and 2 are the same for both. The other rows sit in dim-0 bucket 3.
+  private val FaceRows = 1000L
+  private lazy val faces: VectorDatabase = {
+    def part(near: org.apache.spark.sql.Column, far: org.apache.spark.sql.Column,
+        rest: org.apache.spark.sql.Column) =
+      when(col("id") < FaceRows, near).when(col("id") < 2 * FaceRows, far).otherwise(rest)
+    savedBig("graftfaces",
+      Seq(part(u(0) * -0.0199 - 0.0001, u(0) * 0.0199 + 0.0001, u(0) * 0.5 + 0.5)) ++
+      (1 to 2).map(d => part(u(d) * 0.01 + 0.3, u(d) * 0.01 + 0.3, u(d) * 2.0 - 1.0)) ++
+      (3 until 8).map(d => part(u(d) * 0.01, u(d) * 0.01 + 0.9, u(d) * 0.01)))
+  }
+  /** Near the shared face, inside the near cluster's box. */
+  private val faceQ = Array(-0.001, 0.305, 0.305, 0.005, 0.005, 0.005, 0.005, 0.005)
+
+  private def bruteTop(db: VectorDatabase, q: Array[Double], k: Int,
+      m: graft.api.Metric = SquaredL2): Seq[(Long, Double)] =
+    Knn.bruteForce(db.state, m.dist(col("embedding"), q), k).collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toSeq
-  private def knnTop(db: VectorDatabase, q: Array[Double], k: Int): Seq[(Long, Double)] =
-    db.findKNearestNeighbors(q, k).map(n => (n.vec_id, n.dist))
+  private def knnTop(db: VectorDatabase, q: Array[Double], k: Int,
+      m: graft.api.Metric = SquaredL2): Seq[(Long, Double)] =
+    db.findKNearestNeighbors(q, k, metric = Some(m)).map(n => (n.vec_id, n.dist))
+  private def radiusRows(db: VectorDatabase, q: Array[Double], r: Double): Seq[(Long, Double)] =
+    db.radiusSearch(q, r).collect().map(x => (x.getLong(0), x.getDouble(2))).toSeq
+  private def bruteRadius(db: VectorDatabase, q: Array[Double], r: Double): Seq[(Long, Double)] =
+    Knn.radiusSearch(db.state, SquaredL2.dist(col("embedding"), q), r).collect()
+      .map(x => (x.getLong(0), x.getDouble(2))).toSeq
 
   test("a snapshot's index stats are built once: later kNN and radius calls scan only cells") {
     val first = knnTop(big, bigQ, 10) // fills the snapshot's stats
@@ -305,6 +332,68 @@ class ApiSpec extends SparkSpecBase {
     val afterDelete = knnTop(deleted, bigQ, 10)
     assert(!afterDelete.exists(_._1 == nearest.head._1))
     assert(afterDelete == bruteTop(deleted, bigQ, 10))
+
+    // boxes: a written row that stays in its grid cell but leaves the
+    // parent's box of that cell. With the parent's box, the cell would rank
+    // behind the far cluster and the search would stop before reading it.
+    assert(knnTop(faces, faceQ, 10) == bruteTop(faces, faceQ, 10)) // fills the parent's stats
+    val outside = Array(-0.0009765625, 0.3046875, 0.3046875) ++ Array.fill(5)(0.90625)
+    val movedOut = faces.updatePosition(Seq((5L, outside.map(_.toFloat))).toDF("vec_id", "embedding"))
+    val afterMoveOut = knnTop(movedOut, outside, 10)
+    assert(afterMoveOut.head == ((5L, 0.0)))
+    assert(afterMoveOut == bruteTop(movedOut, outside, 10))
+    val (insertedOut, outIds) = faces.insert(Seq((outside.map(_.toFloat), 3)).toDF("embedding", "label"))
+    val outId = outIds.collect().head.getLong(0)
+    val afterInsertOut = knnTop(insertedOut, outside, 10)
+    assert(afterInsertOut.head == ((outId, 0.0)))
+    assert(afterInsertOut == bruteTop(insertedOut, outside, 10))
+  }
+
+  test("kNN and radius search prune by the cells' data boxes in the ungridded dims") {
+    val sc = spark.sparkContext
+    for (m <- Seq(SquaredL2, L1)) {
+      val first = knnTop(faces, faceQ, 10, m) // fills the snapshot's stats
+      assert(first == bruteTop(faces, faceQ, 10, m), s"$m")
+      // the grid bound of the far cluster's cell is the face gap alone
+      // (0.001 in dim 0), below the kth distance, so the grid alone would
+      // read the far cell; its box bound is over 4
+      val (second, jobs) = org.apache.spark.JobInputRows.of(sc)(knnTop(faces, faceQ, 10, m))
+      assert(second == first, s"$m")
+      assert(jobs.sum == FaceRows, s"$m: rows read per job: $jobs")
+    }
+    val r = knnTop(faces, faceQ, 10).last._2
+    val (inR, jobs) = org.apache.spark.JobInputRows.of(sc)(radiusRows(faces, faceQ, r))
+    assert(inR == bruteRadius(faces, faceQ, r))
+    assert(inR.size >= 10)
+    // the sort's sampling job reads the scanned cells too
+    assert(jobs.nonEmpty && jobs.max == FaceRows, s"rows read per job: $jobs")
+  }
+
+  test("a cell holding a NaN coordinate has no box: it ranks and answers as by its grid bound") {
+    import spark.implicits._
+    // one far-cluster row with a NaN in dim 5: its cell keeps only its grid
+    // bound, so the search reads it as the grid alone would (the inserted
+    // row is in memory, so only the saved rows count as read), and the NaN
+    // distance ranks after every number
+    val withNaN = Array(0.001f, 0.305f, 0.305f, 0.9f, 0.9f, Float.NaN, 0.9f, 0.9f)
+    val (db, _) = faces.insert(Seq((withNaN, 3)).toDF("embedding", "label"))
+    val stats = Knn.cellStats(db.state, Some(8))
+    val farCell = Grid.cellOf(withNaN.map(_.toDouble), bigCfg)
+    val nearCell = Grid.cellOf(faceQ, bigCfg)
+    assert(stats(farCell).rows == FaceRows + 1 && stats(farCell).box.isEmpty)
+    assert(stats(nearCell).box.isDefined)
+    for (m <- Seq(SquaredL2, L1)) {
+      val dist = m.dist(col("embedding"), faceQ)
+      val first = knnTop(db, faceQ, 10, m)
+      val (second, jobs) = org.apache.spark.JobInputRows.of(spark.sparkContext)(knnTop(db, faceQ, 10, m))
+      val (byGrid, gridJobs) = org.apache.spark.JobInputRows.of(spark.sparkContext) {
+        Knn.prunedSearch(db.state, bigCfg, faceQ, 10, cellBound = m.cellBound,
+          distExpr = Some(dist), cellStatsCache = Some(stats)).map(n => (n.vec_id, n.dist))
+      }
+      assert(first == bruteTop(db, faceQ, 10, m), s"$m")
+      assert(second == first && byGrid == first, s"$m")
+      assert(jobs.sum == 2 * FaceRows && jobs == gridJobs, s"$m: $jobs vs $gridJobs")
+    }
   }
 
   // --- knnJoin: the facade's batch join against a driver-side brute force

@@ -76,7 +76,7 @@ class KnnSpec extends SparkSpecBase {
     // each widening round then runs as one Spark job
     val db = rows.toDF("vec_id", "embedding", "label").localCheckpoint()
     val idx = Grid.withCellId(db, "embedding", cfg)
-    val counts = Knn.cellCounts(idx)
+    val stats = Knn.cellStats(idx)
     def sqL2(v: Array[Float]): Double = v.indices.map(d => math.pow(v(d).toDouble - q(d), 2)).sum
     val kTie = rows.count(r => sqL2(r._2) < sqL2(dupAt)) + 3
     val l2 = Distances.squaredL2Lit(col("embedding"), q)
@@ -92,12 +92,12 @@ class KnnSpec extends SparkSpecBase {
       ("l2 filter empties nearest cells", l2, l2Bound, Some(col("embedding")(0) < 0.6), 20, 2),
       ("l1", l1, l1Bound, None, 5, 1),
       ("l1 filter empties nearest cells", l1, l1Bound, Some(col("embedding")(0) < 0.6), 2, 3))
-    for ((name, dist, bound, pred, k, minRounds) <- cases; cache <- Seq(None, Some(counts))) {
+    for ((name, dist, bound, pred, k, minRounds) <- cases; cache <- Seq(None, Some(stats))) {
       val brute = Knn.bruteForce(db, dist, k, pred = pred).collect()
         .map(r => (r.getLong(0), r.getDouble(2))).toSeq
       val (pruned, jobs) = org.apache.spark.JobInputRows.of(spark.sparkContext) {
         Knn.prunedSearch(idx, cfg, q, k, pred = pred, cellBound = bound,
-          distExpr = Some(dist), cellCountsCache = cache, bruteForceThreshold = 0L)
+          distExpr = Some(dist), cellStatsCache = cache, bruteForceThreshold = 0L)
       }
       assert(pruned.map(n => (n.vec_id, n.dist)) == brute, s"$name k=$k cached=${cache.isDefined}")
       // with cached stats every job is one widening round
@@ -145,6 +145,38 @@ class KnnSpec extends SparkSpecBase {
     val total = emb.count()
     val byCell = indexed.groupBy("cell_id").count().agg(sum("count")).collect()(0).getLong(0)
     assert(byCell === total)
+  }
+
+  test("cellStats: rows and per-dim min/max box per cell; a cell with a bad vector has no box") {
+    val byRow = emb.select(col("embedding")).collect().map(_.getSeq[Float](0).toArray)
+    for (parts <- Seq(1, 3)) {
+      val stats = Knn.cellStats(indexed.repartition(parts), Some(Dim))
+      for ((cell, vecs) <- byRow.groupBy(v => Grid.cellOf(v.map(_.toDouble), SparkEntry.gridCfg))) {
+        val (lo, hi) = stats(cell).box.get
+        assert(stats(cell).rows == vecs.length)
+        assert(lo.toSeq == (0 until Dim).map(d => vecs.map(_(d)).min), s"cell $cell lo")
+        assert(hi.toSeq == (0 until Dim).map(d => vecs.map(_(d)).max), s"cell $cell hi")
+      }
+      assert(stats.values.map(_.rows).sum == byRow.length)
+    }
+    assert(Knn.cellStats(indexed).values.forall(_.box.isEmpty))
+    // cells 0-4 each hold one good row and one bad one; cell 5 only good rows
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("cell_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    val good = Seq[java.lang.Float](0.5f, -1.0f)
+    val bad = Seq(Seq[java.lang.Float](Float.NaN, 0.0f), Seq[java.lang.Float](null, 0.0f), null,
+      Seq[java.lang.Float](0.0f), Seq[java.lang.Float](0.0f, 0.0f, 0.0f))
+    val rows = bad.zipWithIndex.flatMap { case (b, c) =>
+      Seq(org.apache.spark.sql.Row(c.toLong, good), org.apache.spark.sql.Row(c.toLong, b))
+    } ++ Seq(org.apache.spark.sql.Row(5L, good), org.apache.spark.sql.Row(5L, Seq[java.lang.Float](-0.0f, 2.0f)))
+    for (parts <- Seq(1, 2, 12)) {
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+      val stats = Knn.cellStats(df, Some(2))
+      assert((0 to 4).forall(c => stats(c.toLong).rows == 2 && stats(c.toLong).box.isEmpty), s"parts=$parts")
+      val (lo, hi) = stats(5L).box.get
+      assert(lo.toSeq == Seq(-0.0f, -1.0f) && hi.toSeq == Seq(0.5f, 2.0f), s"parts=$parts")
+    }
   }
 
   test("pruned radius search equals brute radius at several radii, with and without filter") {

@@ -140,6 +140,90 @@ class PropertySpec extends SparkSpecBase {
     check(p, "equal-width closed-form pin")
   }
 
+  test("box bounds never exceed the kernel's distance to a point in the box, with no slack") {
+    import graft.api.{L1, LInf, MahalanobisDiag, MahalanobisFull, Metric, SquaredL2}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    // Float box edges from double corners; a point coordinate is an edge, a
+    // float strictly inside, or the float nearest the query within the box
+    // (the point the bound is tight at); queries sit anywhere, on an edge,
+    // or one double ulp to either side of it.
+    val gen = for {
+      dim <- Gen.choose(1, 8)
+      edges <- Gen.listOfN(dim, Gen.frequency(
+        4 -> Gen.zip(Gen.choose(-2.0, 2.0), Gen.choose(-2.0, 2.0)),
+        1 -> Gen.choose(-2.0, 2.0).map(a => (a, a))))
+      qKinds <- Gen.listOfN(dim, Gen.zip(Gen.choose(0, 6), Gen.choose(-3.0, 3.0)))
+      ptKinds <- Gen.listOfN(6, Gen.listOfN(dim, Gen.zip(Gen.choose(0, 3), Gen.choose(0.0, 1.0))))
+      inv <- Gen.containerOfN[Array, Double](dim,
+        Gen.frequency(4 -> Gen.choose(0.0, 5.0), 1 -> Gen.const(0.0)))
+      scalar <- Gen.choose(0.1, 5.0)
+      off <- Gen.containerOfN[Array, Double](dim * dim, Gen.choose(-0.5, 0.5))
+      diagExtra <- Gen.containerOfN[Array, Double](dim, Gen.choose(0.0, 2.0))
+      nanDim <- Gen.choose(0, dim - 1)
+    } yield {
+      val lo = edges.map { case (a, b) => math.min(a, b).toFloat }.toArray
+      val hi = edges.map { case (a, b) => math.max(a, b).toFloat }.toArray
+      val q = qKinds.zipWithIndex.map { case ((kind, x), d) => kind match {
+        case 0 => x
+        case 1 => lo(d).toDouble
+        case 2 => hi(d).toDouble
+        case 3 => math.nextDown(lo(d).toDouble)
+        case 4 => math.nextUp(lo(d).toDouble)
+        case 5 => math.nextDown(hi(d).toDouble)
+        case _ => math.nextUp(hi(d).toDouble)
+      }}.toArray
+      def inside(d: Int, t: Double): Float =
+        math.min(hi(d), math.max(lo(d), (lo(d) + t * (hi(d) - lo(d))).toFloat))
+      val nearest = Array.tabulate(dim)(d =>
+        math.min(hi(d), math.max(lo(d), q(d).toFloat)))
+      val points = nearest +: ptKinds.map(_.zipWithIndex.map { case ((kind, t), d) => kind match {
+        case 0 => lo(d)
+        case 1 => hi(d)
+        case 2 => nearest(d)
+        case _ => inside(d, t)
+      }}.toArray)
+      // symmetric, strictly diagonally dominant inverse, and c·I, where the
+      // Gershgorin bound is tight and only the rounding margin protects it
+      val sym = Array.tabulate(dim, dim)((i, j) =>
+        if (i == j) 0.0 else off(math.min(i, j) * dim + math.max(i, j)))
+      val dominant = Array.tabulate(dim, dim)((i, j) =>
+        if (i == j) sym(i).map(math.abs).sum + diagExtra(i) else sym(i)(j)).flatten
+      val metrics = Seq[Metric](SquaredL2, L1, LInf, MahalanobisDiag(inv),
+        MahalanobisFull(dominant, dim),
+        MahalanobisFull(Array.tabulate(dim * dim)(i => if (i % (dim + 1) == 0) scalar else 0.0), dim))
+      (lo, hi, q, points, metrics, nanDim)
+    }
+    val vecRef = BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = false)
+    val p = Prop.forAll(gen) { case (lo, hi, q, points, metrics, nanDim) =>
+      val kernels = metrics.map(m => ColumnBridge.expression(m.dist(ColumnBridge.column(vecRef), q)))
+      val compiled = GenerateUnsafeProjection.generate(kernels)
+      val admissible = points.forall { x =>
+        val row = InternalRow(ArrayData.toArrayData(x))
+        val generated = compiled(row)
+        metrics.indices.forall { i =>
+          val b = metrics(i).boxBound(q, lo, hi)
+          b >= 0.0 &&
+          b <= kernels(i).eval(row).asInstanceOf[Double] && b <= generated.getDouble(i)
+        }
+      }
+      // a NaN edge bounds nothing on its dim: the same bound as an open dim
+      def edge(a: Array[Float], x: Float) = { val c = a.clone(); c(nanDim) = x; c }
+      val open = (edge(lo, Float.NegativeInfinity), edge(hi, Float.PositiveInfinity))
+      val nanEdges = metrics.forall { m =>
+        val want = m.boxBound(q, open._1, open._2)
+        m.boxBound(q, lo, edge(hi, Float.NaN)) == want &&
+        m.boxBound(q, edge(lo, Float.NaN), hi) == want
+      }
+      admissible && nanEdges
+    }
+    check(p, "box bound admissibility")
+  }
+
   test("cellOf is total and stable over [lower,upper] plus out-of-bounds points") {
     val gen = for {
       dim <- Gen.choose(1, 6)
