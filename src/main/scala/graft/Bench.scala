@@ -13,7 +13,7 @@ object Bench {
   /** Fixed tmpdir parquet roots written by the store-lifecycle queries
     * (store_time_travel, store_roundtrip_knn, store_autoprune_radius[,
     * _quantile]); deleted after every query so timings are independent of
-    * leftover disk state. Names mirror the literals in SparkEntry. */
+    * leftover disk state. Names mirror the literals in queries/StoreQueries. */
   private val perQueryStoreRoots: Seq[java.io.File] = {
     val tmp = sys.props("java.io.tmpdir")
     Seq("graft_versioned_store", "graft_store_roundtrip",

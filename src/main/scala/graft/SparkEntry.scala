@@ -2,422 +2,23 @@ package graft
 
 import graft.core.{Fixtures, Tables}
 import graft.functions.Distances
-import graft.index.{Grid, GridConfig}
-import graft.multimodal.Multimodal
-import graft.operators.{Ann, AsOfJoin, CosineJoin, Dedup, GraphAnn, Knn, KnnTopK, Mips, SaltedJoin, Snapshot, TextAnalysis}
-import graft.oracle.DuckSql
-import graft.plans.KnnJoinPlan
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.operators.Knn
+import graft.queries._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType}
 
-/** Driver contract — one `queries` entry (+ DuckDB `oracleSql`) per
-  * implemented operator from SURVEY.md §2. Spark Column expressions and
-  * oracle SQL are generated from the same constants (`graft.core.Fixtures`,
-  * `graft.oracle.DuckSql`) with identical IEEE arithmetic, so the driver's
-  * hash compare matches exactly.
+/** The engine's entry contract: the `entry` smoke query,
+  * `prepareFixtures`, and the query registry. Every query is declared
+  * once, as a [[QuerySpec]] in one of the area modules under
+  * `graft.queries`, with its Spark plan beside its DuckDB oracle SQL;
+  * `queries` and `oracleSql` are two views of that one list. Spark Column
+  * expressions and oracle SQL are generated from the same constants
+  * (`graft.core.Fixtures`, `graft.oracle.DuckSql`) with identical IEEE
+  * arithmetic, so both engines' outputs hash identically.
   */
 object SparkEntry {
-  import Fixtures.{Dim, InvDiag64, InvFull8, Planes16, Q64, Stopwords}
-
-  private val K = 10
-  private val Q8 = Q64.take(8)
-  /** Graph-ANN (NSW) hyperparameters shared by the Spark queries and their
-    * oracle replays: out-degree, beam width, expansion hops, entry-set
-    * size (the `nEntry` lowest vec_ids — fixed and replayable). */
-  private val GraphM = 12
-  private val GraphBeam = 16
-  private val GraphHops = 4
-  private val GraphEntries = 8
-  /** Query histogram for media_embed_knn (= fixture image 1's embedding). */
-  private val MediaQ8: Array[Double] =
-    Array(0.5, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.5)
-  /** Grid over the first 3 dims, 4 buckets each (64 cells) — fixture
-    * embeddings live in ~[-0.5, 0.5]; out-of-bounds clamps to edge cells. */
-  private[graft] val gridCfg =
-    GridConfig(dim = Dim, lower = -0.6, upper = 0.6, partsPerDim = 4, gridDims = 3)
-
-  private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
-  private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
-
-  /** Memoized fixture row counts, keyed by (table, dir). A dozen queries
-    * derive their size-targeted sample modulus from a count; the fixture
-    * parquet is immutable per dir, so re-running the count job per query
-    * (×3 in the bench's min-of-three) only buys contention. On a real
-    * deployment this is the table-stats lookup a catalog provides. */
-  private val countCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def embCount(s: SparkSession, d: String): Long =
-    countCache.computeIfAbsent(s"emb:$d", _ => emb(s, d).count())
-  private def docCount(s: SparkSession, d: String): Long =
-    countCache.computeIfAbsent(s"doc:$d", _ => docs(s, d).count())
-
-  /** Memoized quantile-grid calibration per fixture dir (one percentile
-    * aggregation — the same catalog-stats contract as the row counts;
-    * the fixture parquet is immutable per dir). */
-  private val qgridCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.index.QuantileGridConfig]()
-  private def qgridCfg(s: SparkSession, d: String): graft.index.QuantileGridConfig =
-    qgridCache.computeIfAbsent(d, _ => graft.index.QuantileGrid.calibrate(
-      emb(s, d), "embedding", partsPerDim = 4, gridDims = 3, dim = Dim))
-
-  /** Memoized exact k-NN graph per fixture dir (r16): the NSW index is
-    * built ONCE and searched many times — the deployment contract — and
-    * three gated queries (edges, topk, recall) share the identical build.
-    * The typed-aggregator build plan contains per-construction lambda
-    * instances, so the CacheManager's canonicalized-plan matching can
-    * never share it across separately constructed DataFrames (the
-    * window-form plan did — which is what made cross-rep bench caching
-    * look free before r16); memoizing the DataFrame object is the
-    * explicit version. `storageLevel` re-check re-arms the persist after
-    * a bench-teardown clearCache. */
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
-  private def knnGraphCached(s: SparkSession, d: String): DataFrame = {
-    // unlike countCache/qgridCache (plain values), the cached object is
-    // SESSION-BOUND — rebuild when the caller's session differs from the
-    // builder's or the builder's context has stopped, else a later
-    // session would get a DataFrame wired to a dead SparkContext
-    val (_, g) = graphCache.compute(s"graph:$d", (_, old) =>
-      if (old != null && (old._1 eq s) && !s.sparkContext.isStopped) old
-      else (s, GraphAnn.knnGraph(emb(s, d), m = GraphM, Dim)))
-    if (g.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    g
-  }
-
-  /** Fixed literal codebook for the incremental-IVF demo: the LSH planes
-    * scaled into the fixture's data range (‖0.05·plane‖ ≈ 0.4 vs raw ≈ 8,
-    * which would collapse every row into one or two cells). */
-  private val IncrCentroids: Array[Array[Double]] =
-    Planes16.take(8).map(_.map(_ * 0.05))
-
-  /** Fixed literal SEEDS for the trained (seeded-exact Lloyd) IVF family —
-    * 16 scaled planes; training moves them to data means, so the scale
-    * only shapes the first assignment. */
-  private val IvfSeeds: Array[Array[Double]] =
-    Planes16.map(_.map(_ * 0.1))
-
-  /** Fixed literal TWO-LEVEL codebook (4 coarse × 4 fine) for the
-    * hierarchical-assignment demo: coarse cells from the first four scaled
-    * planes, fine sub-centroids = coarse + a small offset from the next
-    * four — all compile-time literals, so the DuckDB oracle replays the
-    * coarse-then-fine argmin exactly. */
-  private val TwoLevelCoarse: Array[Array[Double]] =
-    Planes16.take(4).map(_.map(_ * 0.05))
-  private val TwoLevelFine: Array[Array[Array[Double]]] =
-    TwoLevelCoarse.map(c => Planes16.slice(4, 8).map(p =>
-      c.zip(p).map { case (a, b) => a + b * 0.02 }))
-
-  /** The two-level cell a query vector probes (probes = 1): nearest coarse
-    * cell (ties → lower index), then argmin of its fine codebook — the
-    * driver-side twin of [[graft.functions.VecArgMinL2TwoLevel]], used to
-    * bake the SAME constant into the Spark filter and the oracle SQL. */
-  private def twoLevelCellOf(q: Array[Double], coarse: Array[Array[Double]],
-      fine: Array[Array[Array[Double]]]): Int = {
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }; s
-    }
-    val ci = coarse.indices.minBy(c => (d2(q, coarse(c)), c))
-    val off = fine.take(ci).map(_.length).sum
-    off + fine(ci).indices.minBy(j => (d2(q, fine(ci)(j)), j))
-  }
-
-  /** Spread a small-but-CPU-heavy input across cores. The fixture parquet
-    * files arrive in 1-2 splits, so md5/shingle-heavy per-row stages would
-    * otherwise serialize on one or two tasks.
-    *
-    * r17 (guide §2.2 "fewer, larger partitions" / §1 measure first): the
-    * r16 form pinned `defaultParallelism` partitions, and AQE never
-    * coalesces an explicit repartition — so at local[32] EVERY par-wrapped
-    * query ran 32-task stages on KB-scale data. Thread-dump sampling showed
-    * those tasks dominated by shuffle-file open/mmap/commit (not compute):
-    * one data+index file per map task per shuffle, ~300 ms of filesystem
-    * metadata work per stage at 32 tasks. The driver's r16 scaling block
-    * measured the whole suite FASTER at 8 cores than 32 for exactly this
-    * reason (pipeline ratios 0.2-0.4). The partition count now scales with
-    * the optimizer's size estimate for the input plan (`parTargetBytes` per
-    * task, default 128 KB of compressed input — fixture docs ≈ 300-byte
-    * rows of ms-scale per-row work, so ~5 tasks at sf0.1), clamped to
-    * [1, defaultParallelism]: big inputs still fill the machine (at 100 TB
-    * the clamp keeps one task per core), small ones stop paying 32 tasks'
-    * shuffle-file setup for sub-millisecond work. */
-  private val parTargetBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_PAR_TARGET_BYTES", (128L << 10).toString).toLong
-  private def par(s: SparkSession, df: DataFrame): DataFrame = {
-    val bytes =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
-    val byBytes = (bytes + parTargetBytes - 1) / parTargetBytes
-    val n = byBytes.min(BigInt(s.sparkContext.defaultParallelism)).max(BigInt(1)).toInt
-    df.repartition(n)
-  }
-
-  /** Full-width variant of [[par]] for inputs whose DOWNSTREAM explodes
-    * quadratically in compute (pairwise levenshtein/jaccard over a
-    * broadcast NLJ): the input is KB-scale — so the size-derived [[par]]
-    * width and AQE (which sizes by bytes) would both run the n²/2
-    * verification nearly serial — but the consumer's cost is pairs ×
-    * per-pair work, which only the call site knows (guide §8 "use what
-    * you know that the optimizer does not"). */
-  private def parCompute(s: SparkSession, df: DataFrame): DataFrame =
-    df.repartition(s.sparkContext.defaultParallelism)
-
-  /** Documents with deterministically INJECTED PII spans (the fixture
-    * corpus is synthetic and PII-free): emails on doc_id % 7, phones on
-    * % 11, IPv4 on % 13 — shared by the redaction query and the exposure
-    * report so both replay the identical corpus. */
-  private def piiInjectedDocs(s: SparkSession, d: String): DataFrame = {
-    val ds = col("doc_id").cast("string")
-    par(s, docs(s, d))
-      .select(col("doc_id"), col("source"), col("text"))
-      .withColumn("text", concat(col("text"),
-        when(col("doc_id") % 7 === 0,
-          concat(lit(" contact u"), ds, lit("@example.com"))).otherwise(lit("")),
-        when(col("doc_id") % 11 === 0,
-          concat(lit(" call +1-555-"),
-            lpad((col("doc_id") % 1000).cast("string"), 3, "0"), lit("-"),
-            lpad((col("doc_id") % 10000).cast("string"), 4, "0"))).otherwise(lit("")),
-        when(col("doc_id") % 13 === 0,
-          concat(lit(" host 10."), (col("doc_id") % 256).cast("string"), lit("."),
-            ((col("doc_id") * 7) % 256).cast("string"), lit(".9"))).otherwise(lit(""))))
-  }
-
-  /** Size-TARGETED deterministic sample of the embeddings table: modulus
-    * m = ⌈n / target⌉, keep `vec_id % m == 0` — the sample stays ≈`target`
-    * rows at ANY corpus scale, so downstream pair enumeration is bounded
-    * forever (the r6 fixed-fraction `% 25` sample grew the pair count
-    * 10,000× at 100× data — the judge's perf-weak family). Returns the
-    * sample and m (seed predicates derive from m). The oracle replays m as
-    * a COUNT(*) scalar subquery over the same table. */
-  private def sampleTarget(s: SparkSession, d: String, target: Long): (DataFrame, Long) = {
-    val n = embCount(s, d)
-    val m = math.max(1L, (n + target - 1) / target)
-    (emb(s, d).filter(col("vec_id") % m === 0), m)
-  }
-
-  /** DuckDB replay of [[sampleTarget]]'s modulus (integer floor-division
-    * ceil: (n + target − 1) // target). */
-  private def modSql(target: Long): String =
-    s"(SELECT GREATEST(1, (COUNT(*) + ${target - 1}) // $target) FROM embeddings)"
-
-  /** Same count-derived modulus over the documents table: ~25 probe docs
-    * at any corpus size (= the historical `% 20` at the 500-doc fixture,
-    * so sf0.01 hashes are unchanged). */
-  private def docModSql: String =
-    "(SELECT GREATEST(1, (COUNT(*) + 24) // 25) FROM documents)"
-
-  /** Similarity-graph edge list over a size-targeted sample: the EXACT
-    * cosine-threshold pair join ([[CosineJoin.pairsExact]] — partitioned
-    * equi-join with admissible cell-pair pruning, never a nested loop),
-    * canonical `src < dst` orientation. Cells scale with the sample
-    * (targetCellSize 32). */
-  private def simEdges(s: SparkSession, d: String, target: Long, tau: Double): DataFrame =
-    // k derives from the sample TARGET (sample size ≈ target by
-    // construction), sparing pairsExactAutoK's extra count job
-    CosineJoin.pairsExact(
-      sampleTarget(s, d, target)._1.select(col("vec_id"), col("embedding")),
-      "vec_id", "embedding", Dim, tau, k = math.max(4, (target / 32).toInt))
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-
-  /** Exact decimal-accumulated double sum: cast the INPUT to decimal at the
-    * column's natural scale (fixture money columns have 2 decimals,
-    * events.value has 3), sum exactly, cast back to double. Casting inputs
-    * (not products/sums of doubles) makes the result order-independent AND
-    * engine-independent — Spark's double→decimal goes through the shortest
-    * string repr while DuckDB rounds the binary expansion, and the two only
-    * agree when the true value has fewer decimals than the cast scale. */
-  private def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
-  private def dsumSql(e: String, scale: Int = 2): String =
-    s"CAST(SUM(CAST($e AS DECIMAL(18,$scale))) AS DOUBLE)"
-
-  /** Σ price*(1-disc) in exact decimal arithmetic (scale-2 inputs → exact
-    * scale-4 products → exact sum → one double cast at the end). */
-  private def drevenue(price: Column, disc: Column): Column =
-    sum(price.cast(DecimalType(18, 2)) *
-      (lit(1.0).cast(DecimalType(3, 2)) - disc.cast(DecimalType(18, 2)))).cast("double")
-  private def drevenueSql(price: String, disc: String): String =
-    s"CAST(SUM(CAST($price AS DECIMAL(18,2)) * (CAST('1.00' AS DECIMAL(3,2)) - CAST($disc AS DECIMAL(18,2)))) AS DOUBLE)"
-
-  private val stopListSql = Stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
-  private def nWordsSql(t: String) = s"CAST(len(string_split($t, ' ')) AS INT)"
-  /** The [[TextAnalysis.qualityScore]] formula as DuckDB SQL, with the
-    * same IEEE double association as the Column tree. */
-  private def qualitySql(t: String): String = {
-    val nw = nWordsSql(t); val ns = nStopSql(t)
-    val awl = s"(CAST(length($t) - ($nw - 1) AS DOUBLE) / CAST($nw AS DOUBLE))"
-    s"""((LEAST(CAST(length($t) AS DOUBLE) / 500.0, 1.0)
-       |    + LEAST((CAST($ns AS DOUBLE) / CAST($nw AS DOUBLE)) * 10.0, 1.0))
-       |   + CASE WHEN $awl >= 3.0 AND $awl <= 8.0 THEN 1.0 ELSE 0.5 END) / 3.0""".stripMargin
-  }
-  private def nStopSql(t: String) =
-    s"CAST(len(list_filter(string_split($t, ' '), w -> w IN $stopListSql)) AS INT)"
-
-  /** [[TextAnalysis.qualityScoreScaled]] as DuckDB SQL: the score is the
-    * exact rational num/(3000·nw) of integer counts, quantized to
-    * `decimals` places half-up with ONE BIGINT floor-division (`//`) —
-    * bit-identical to the Column form, immune to the Spark-vs-DuckDB
-    * `round(double)` half-tie divergence that broke the r5 hash gate on
-    * `sample_source_cap` / `text_quality_percentile`. */
-  private def qualityScaledSql(t: String, decimals: Int): String = {
-    require(decimals >= 3 && decimals <= 9)
-    val p = math.pow(10, decimals - 3).toLong
-    val nw = s"CAST(${nWordsSql(t)} AS BIGINT)"
-    val ns = s"CAST(${nStopSql(t)} AS BIGINT)"
-    val len = s"CAST(length($t) AS BIGINT)"
-    val chars = s"($len - $nw + 1)"
-    val w = s"(CASE WHEN $chars >= 3 * $nw AND $chars <= 8 * $nw THEN 1000 ELSE 500 END)"
-    val num = s"(LEAST($len, 500) * 2 * $nw + LEAST($ns * 10, $nw) * 1000 + $w * $nw)"
-    s"CAST(($num * ${2L * p} + 3 * $nw) // (6 * $nw) AS BIGINT)"
-  }
-
-  // Shared MinHash/LSH SQL fragments (mirrors of Dedup.minHashSignature /
-  // minHashLshNearDupPairs with the default 8 hashes / 4 bands / width-3
-  // shingles) — single source for every oracle that embeds the pipeline.
-  /** min-hash aggregate list: `MIN((h*a + b) % P) AS mh_j`. */
-  private def minsSql: String =
-    Dedup.minHashCoeffs(8).zipWithIndex.map { case ((a, b), j) =>
-      s"MIN((h * CAST($a AS BIGINT) + CAST($b AS BIGINT)) % ${Dedup.MinHashP}) AS mh_$j"
-    }.mkString(",\n    ")
-  /** banded bucket rows over a `sig` CTE: (doc_id, band, bkey). */
-  private def bandSelectsSql: String =
-    (0 until 4).map { b =>
-      val keyExpr = (b * 2 until b * 2 + 2).map(j => s"CAST(mh_$j AS VARCHAR)")
-        .mkString(" || '_' || ")
-      s"SELECT doc_id, $b AS band, $keyExpr AS bkey FROM sig"
-    }.mkString("\n  UNION ALL ")
-  /** [[bandSelectsSql]] with Dedup.minHashLshNearDupPairs' hot-bucket cap
-    * mirrored (window count per (band, bkey), keep ≤ LshMaxBucket) — the
-    * buckets CTE body for every oracle that replays the band SELF-join;
-    * the incremental-admission oracle probes batch-vs-corpus and stays
-    * uncapped like its operator. */
-  private def cappedBandBucketsSql: String =
-    s"""SELECT doc_id, band, bkey FROM (
-       |    SELECT doc_id, band, bkey,
-       |      COUNT(*) OVER (PARTITION BY band, bkey) AS __bsz
-       |    FROM ($bandSelectsSql)
-       |  ) WHERE __bsz <= ${Dedup.LshMaxBucket}""".stripMargin
-  /** Brute-force 60-bit word-SimHash Hamming pairs over a (doc_id, text)
-    * relation — the oracle for every banded SimHash pairing (document
-    * near-dup AND the media perceptual-hash path share it). */
-  private def simhashPairsSql(docsSql: String, maxHamming: Int): String = {
-    val bitSums = (0 until 60).map { i =>
-      s"SUM(CASE WHEN (h >> $i) & 1 = 1 THEN 1 ELSE -1 END) AS b_$i"
-    }.mkString(",\n  ")
-    val sig = (0 until 60).map { i =>
-      s"(CASE WHEN b_$i > 0 THEN CAST(${1L << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-    }.mkString(" + ")
-    s"""WITH s AS (
-       |  SELECT doc_id, ($sig) AS simhash FROM (
-       |    SELECT doc_id, $bitSums
-       |    FROM (
-       |      SELECT doc_id, ${Dedup.md5LongSql("w")} AS h
-       |      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM ($docsSql))
-       |    ) GROUP BY doc_id))
-       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-       |FROM s a JOIN s b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= $maxHamming
-       |ORDER BY id_a, id_b""".stripMargin
-  }
-  /** distinct width-3 word shingles of a split-words column `w`. */
-  private val ssetSql =
-    "list_distinct(list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' ')))"
-  /** The full curation-pipeline CTE chain (gate → exact dedup → MinHash
-    * sigs → LSH buckets → verified edges → recursive CC `clusters`) —
-    * shared by the pipeline_curation result query and the funnel report,
-    * so both oracles replay literally the same stages. */
-  private def curationChainSql: String =
-    s"""WITH RECURSIVE gated AS (
-       |  ${qualityGateSql(0.3, "en")}
-       |), exact AS (
-       |  SELECT doc_id, text FROM gated
-       |  WHERE doc_id IN (SELECT MIN(doc_id) FROM gated GROUP BY md5(text))
-       |), words_t AS (
-       |  SELECT doc_id, string_split(text, ' ') AS w FROM exact
-       |), sig AS (
-       |  SELECT doc_id, $minsSql
-       |  FROM (
-       |    SELECT doc_id, ${Dedup.md5Int32Sql("shingle")} AS h FROM (
-       |      SELECT doc_id, unnest($ssetSql) AS shingle FROM words_t
-       |    )
-       |  ) GROUP BY doc_id
-       |), buckets AS (
-       |  $cappedBandBucketsSql
-       |), cand AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |), sets AS (
-       |  SELECT doc_id, $ssetSql AS sset FROM words_t
-       |), edges AS MATERIALIZED (
-       |  SELECT id_a AS src, id_b AS dst FROM (
-       |    SELECT id_a, id_b,
-       |      CAST(len(list_intersect(sa.sset, sb.sset)) AS DOUBLE) / CAST(len(list_distinct(list_cat(sa.sset, sb.sset))) AS DOUBLE) AS jac
-       |    FROM cand JOIN sets sa ON sa.doc_id = cand.id_a JOIN sets sb ON sb.doc_id = cand.id_b
-       |  ) WHERE jac >= ${DuckSql.fmt(0.5)}
-       |), sym AS MATERIALIZED (
-       |  SELECT src, dst FROM edges UNION SELECT dst AS src, src AS dst FROM edges
-       |), reach(id, lab) AS (
-       |  SELECT DISTINCT src AS id, src AS lab FROM sym
-       |  UNION
-       |  SELECT s.dst, r.lab FROM reach r JOIN sym s ON s.src = r.id
-       |), clusters AS (
-       |  SELECT id, MIN(lab) AS canonical FROM reach GROUP BY id
-       |), lsh_drops AS (
-       |  SELECT band, bkey, COUNT(*) AS n_docs FROM ($bandSelectsSql)
-       |  GROUP BY band, bkey HAVING COUNT(*) > ${Dedup.LshMaxBucket}
-       |)""".stripMargin
-
-  /** DuckDB replay of Multimodal.{mediaFromDocuments, extractFeatures}:
-    * the stub decode's Long-wraparound polynomial checksum folds in
-    * HUGEINT mod 2^64 (list_reduce over the text's chars — the fixture is
-    * ASCII, so code points == UTF-8 bytes), then re-signs; width/height
-    * read power-of-two bit fields (identical for signed/unsigned), and
-    * the frame counts correct the arithmetic-shift sign extension with
-    * (m - 2^44 mod m) offsets for the non-power-of-two moduli. */
-  private def mediaFeaturesSql: String =
-    """WITH u AS (
-      |  SELECT doc_id AS media_id,
-      |    CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
-      |    CAST(length(text) AS BIGINT) AS n_bytes,
-      |    list_reduce(
-      |      list_prepend(CAST(17 AS HUGEINT), list_transform(string_split(text, ''), c -> CAST(ord(c) AS HUGEINT))),
-      |      (acc, x) -> (acc * 31 + x) % CAST('18446744073709551616' AS HUGEINT)
-      |    ) AS uh
-      |  FROM documents
-      |), f AS (
-      |  SELECT media_id, kind, n_bytes,
-      |    CAST(CASE WHEN uh >= CAST('9223372036854775808' AS HUGEINT)
-      |         THEN uh - CAST('18446744073709551616' AS HUGEINT) ELSE uh END AS BIGINT) AS checksum,
-      |    CAST(16 + uh % 1024 AS INT) AS width,
-      |    CAST(16 + (uh // 1024) % 1024 AS INT) AS height,
-      |    CAST(uh // 1048576 AS BIGINT) AS h20,
-      |    (uh >= CAST('9223372036854775808' AS HUGEINT)) AS neg
-      |  FROM u
-      |)
-      |SELECT media_id, kind, n_bytes, checksum, width, height,
-      |  CAST(CASE kind
-      |    WHEN 'video' THEN 1 + (h20 % 300 + CASE WHEN neg THEN 284 ELSE 0 END) % 300
-      |    WHEN 'audio' THEN 1 + (h20 % 48000 + CASE WHEN neg THEN 3584 ELSE 0 END) % 48000
-      |    ELSE 1 END AS INT) AS n_frames
-      |FROM f""".stripMargin
-
-  /** quality score + lang_pred over a relation providing (doc_id, text). */
-  private def qualityGateSql(minQuality: Double, lang: String): String = {
-    val nw = nWordsSql("text"); val ns = nStopSql("text")
-    s"""SELECT doc_id, text FROM (
-       |    SELECT doc_id, text,
-       |      ((LEAST(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-       |        + LEAST((CAST($ns AS DOUBLE) / CAST($nw AS DOUBLE)) * 10.0, 1.0))
-       |       + CASE WHEN awl >= 3.0 AND awl <= 8.0 THEN 1.0 ELSE 0.5 END) / 3.0 AS quality,
-       |      CASE WHEN (CAST($ns AS DOUBLE) / CAST($nw AS DOUBLE)) >= 0.05 THEN 'en' ELSE 'other' END AS lang_pred
-       |    FROM (SELECT doc_id, text,
-       |            CAST(length(text) - ($nw - 1) AS DOUBLE) / CAST($nw AS DOUBLE) AS awl
-       |          FROM documents)
-       |  ) WHERE quality >= ${DuckSql.fmt(minQuality)} AND lang_pred = '$lang'""".stripMargin
-  }
+  import Fixtures.Q64
+  import Shared.{K, emb}
 
   // ---------------------------------------------------------------- flagship
 
@@ -463,8808 +64,16 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- queries
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- reference surface: filtered kNN under 4 metrics (SURVEY §2.1 #1-2, #12-17)
-    "knn_l2_brute" -> ((s, d) =>
-      Knn.bruteForce(emb(s, d), Distances.squaredL2Lit(col("embedding"), Q64), K)),
-    // the SAME flagship query authored through the SQL surface: the
-    // registered vec_sql2 folds its query literal into the identical
-    // codegen'd VecMetricLit at plan time, so spark.sql text and the
-    // Column API produce one plan — proven here under the driver's hash
-    // gate (Double.toString round-trips bit-exactly through the CAST)
-    "sql_knn_topk" -> ((s, d) => {
-      graft.functions.GraftExtensions.install(s)
-      emb(s, d).createOrReplaceTempView("graft_embeddings_v")
-      val qlit = Q64.map(v => s"CAST('$v' AS DOUBLE)")
-        .mkString("array(", ", ", ")")
-      s.sql(s"""SELECT vec_id, label, vec_sql2(embedding, $qlit) AS dist
-               |FROM graft_embeddings_v
-               |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin)
-    }),
-    "knn_l2_filtered" -> ((s, d) =>
-      Knn.bruteForce(emb(s, d), Distances.squaredL2Lit(col("embedding"), Q64), K,
-        pred = Some(col("label") === 3))),
-    "knn_l1" -> ((s, d) =>
-      Knn.bruteForce(emb(s, d), Distances.l1Lit(col("embedding"), Q64), K)),
-    "knn_linf" -> ((s, d) =>
-      Knn.bruteForce(emb(s, d), Distances.lInfLit(col("embedding"), Q64), K)),
-    "knn_mahalanobis" -> ((s, d) =>
-      Knn.bruteForce(emb(s, d), Distances.mahalanobisDiagLit(col("embedding"), Q64, InvDiag64), K)),
-    // full-covariance Mahalanobis over an 8-dim slice (keeps the oracle SQL
-    // at 64 terms; the operator itself is dim-generic — see VecExprSpec).
-    // r10: routed through the facade's MahalanobisFull Metric (factorized
-    // inverse + Gershgorin·sqL2 admissible cell bound) — the reference's
-    // default metric surface, selectable without dropping to Distances
-    "knn_mahalanobis_full" -> ((s, d) => {
-      import s.implicits._
-      val cfg8 = GridConfig(dim = 8, lower = -0.6, upper = 0.6, partsPerDim = 4, gridDims = 3)
-      val db = graft.api.VectorDatabase.fromDataFrame(s,
-        emb(s, d).withColumn("embedding", slice(col("embedding"), 1, 8))
-          .select(col("vec_id"), col("embedding"), col("label")),
-        cfg8, metric = graft.api.MahalanobisFull(InvFull8, 8))
-      s.createDataset(db.findKNearestNeighbors(Q8, K)).toDF()
-    }),
-    // pruned == brute (exactness of the widening loop; oracle is the brute SQL)
-    "knn_l2_pruned" -> ((s, d) =>
-      Knn.prunedSearchDf(s, Grid.withCellId(emb(s, d), "embedding", gridCfg), gridCfg, Q64, K)),
-    // QUANTILE-calibrated grid (r11): bucket edges at the data's own exact
-    // interpolated percentiles (one calibration aggregation, memoized like
-    // every catalog stat), so cells stay balanced on skewed embeddings
-    // where equal width piles up. Pruning is exact (interval bounds +
-    // the geometry-generic widening loop), so the oracle is the plain
-    // brute-force kNN SQL — any inadmissible bound would hash-fail here
-    "knn_l2_quantile_grid" -> ((s, d) => {
-      val qc = qgridCfg(s, d)
-      Knn.prunedSearchDf(s, Grid.withCellId(emb(s, d), "embedding", qc), qc, Q64, K)
-    }),
-    // the calibration itself under the hash gate: per-cell populations of
-    // the quantile grid — the oracle RECOMPUTES the quantile_cont edges
-    // and re-buckets, so the boundary doubles (round-6, the quantized-
-    // boundary rule) are proven engine-exact, not just copied literals
-    "index_quantile_cells" -> ((s, d) =>
-      Grid.withCellId(emb(s, d), "embedding", qgridCfg(s, d))
-        .groupBy(col("cell_id")).agg(count(lit(1)).as("n"))
-        .orderBy(col("cell_id"))),
-    // the STORE lifecycle under the driver's hash gate: write the state
-    // cell-partitioned (partitionBy dirs = grid cells), read it back, and
-    // answer pruned kNN off the LOADED store — candidate-cell pruning is
-    // real file skipping here (PartitionPruneSpec pins the plan), and the
-    // result must still hash-match the plain kNN oracle
-    "store_roundtrip_knn" -> ((s, d) => {
-      // fixed, overwritten path — repeated Verify/Bench invocations reuse
-      // one directory instead of accumulating temp copies of the store
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_store_roundtrip").getPath
-      // cluster by the partition column before the partitioned write
-      // (guide §6): an N-split input otherwise opens one writer per
-      // (task × cell) — N×64 tiny files and N× writer overhead
-      // repartition(64, cell_id), not repartition(cell_id): AQE coalesces
-      // the un-numbered form to ONE writer task at fixture scale, and that
-      // task creates all 64 cell files SEQUENTIALLY — profiled at ~1 s of
-      // pure file-metadata work; pinning the partition count keeps ~40
-      // writers creating their cell files in parallel (r17, guide §6)
-      Grid.withCellId(emb(s, d), "embedding", gridCfg)
-        .repartition(64, col("cell_id"))
-        .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
-      val loaded = s.read.parquet(dir)
-        .withColumn("cell_id", col("cell_id").cast("long"))
-      Knn.prunedSearchDf(s, loaded, gridCfg, Q64, K)
-    }),
-    "knn_l2_pruned_filtered" -> ((s, d) =>
-      Knn.prunedSearchDf(s, Grid.withCellId(emb(s, d), "embedding", gridCfg), gridCfg, Q64, K,
-        pred = Some(col("label") === 3))),
-    // similarity search (north star): cosine top-k
-    "sim_cosine_topk" -> ((s, d) =>
-      emb(s, d)
-        .select(col("vec_id"), col("label"),
-          Distances.cosineSimLit(col("embedding"), Q64).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-        .limit(K)),
-    // ColBERT-style late-interaction retrieval: the packed 64-d vector is
-    // viewed as 4 sub-vectors of 16 ("token embeddings"), score = MaxSim =
-    // Σ_i max_j dot(q_i, doc_j). Per-row codegen'd expression (same
-    // multiply count as 4 full dots), zero shuffles, TakeOrderedAndProject
-    // top-k; sub-dots 9-decimal-rounded so max/sum replay bit-for-bit
-    "sim_maxsim_topk" -> ((s, d) =>
-      emb(s, d)
-        .select(col("vec_id"), col("label"),
-          graft.operators.LateInteraction.maxSimLit(col("embedding"), Q64, 4).as("maxsim"))
-        .orderBy(col("maxsim").desc, col("vec_id").asc)
-        .limit(K)),
-    // Matryoshka truncation eval: recall@10 of PREFIX-16-dim L2 top-k
-    // against full 64-dim top-k per held-out query — the dimension-vs-
-    // accuracy dial of truncatable (MRL) embeddings. Prefix-L2 is
-    // squaredL2Cols over the first 16 elements, so unlike the kmeans-
-    // trained ann_ivf_recall this eval is EXACT and fully hash-checked.
-    // Cost shape: |queries| × |corpus| scored once, ranked twice — the
-    // standard eval-harness cost, queries are a small broadcast sample
-    "vec_truncate_recall" -> ((s, d) => {
-      // count-derived query page (~20 queries at ANY SF; a fixed % 67
-      // fraction grew |queries| — and the |queries|×|corpus| eval —
-      // linearly with the corpus)
-      val mq = math.max(1L, (embCount(s, d) + 19) / 20)
-      val qs = emb(s, d).filter(col("vec_id") % mq === 7)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val scored = emb(s, d).crossJoin(broadcast(qs))
-        .select(col("query_id"), col("vec_id"),
-          Distances.squaredL2Cols(col("embedding"), col("qv"), Dim).as("d_full"),
-          Distances.squaredL2Cols(col("embedding"), col("qv"), 16).as("d_pre"))
-      val wf = Window.partitionBy(col("query_id")).orderBy(col("d_full"), col("vec_id"))
-      val wp = Window.partitionBy(col("query_id")).orderBy(col("d_pre"), col("vec_id"))
-      scored
-        .withColumn("rf", row_number().over(wf))
-        .withColumn("rp", row_number().over(wp))
-        .filter(col("rf") <= K)
-        .groupBy(col("query_id"))
-        .agg(sum(when(col("rp") <= K, 1).otherwise(0)).cast(LongType).as("overlap"),
-          round(sum(when(col("rp") <= K, 1).otherwise(0)).cast("double") / K, 3).as("recall10"))
-        .orderBy(col("query_id"))
-    }),
-    // batch MaxSim join: multi-vector late-interaction retrieval for a
-    // SET of queries — a SIZE-TARGETED query page (~20 queries at any SF;
-    // the r7 `% 101` fraction grew the page — and the scored cross
-    // product — linearly with the corpus) broadcast against the corpus,
-    // per-query top-3 via the bounded KnnTopK aggregator on NEGATED
-    // maxsim (negation is IEEE-exact, so (−maxsim ASC, id ASC) ≡
-    // (maxsim DESC, id ASC)): the shuffle carries ≤ 3 rows per query per
-    // map task, never the |queries|×|corpus| scored set a full Window
-    // would sort (pinned in PlanShapeSpec)
-    "sim_maxsim_join" -> ((s, d) => {
-      val m = math.max(1L, (embCount(s, d) + 19) / 20)
-      val qs = emb(s, d).filter(col("vec_id") % m === 3)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val cands = emb(s, d).crossJoin(broadcast(qs))
-        .select(col("query_id"), col("vec_id"),
-          (-graft.operators.LateInteraction.maxSimCols(col("qv"), col("embedding"), Dim, 4))
-            .as("dist"))
-      graft.operators.KnnTopK.topK(cands, 3)
-        .select(col("query_id"), col("vec_id"), (-col("dist")).as("maxsim"), col("rn"))
-        .orderBy(col("query_id"), col("rn"))
-    }),
-    // two-stage late-interaction serving path: cheap single-vector dot
-    // generates a top-50 candidate page, MaxSim re-ranks only the page —
-    // the ColBERT deployment shape (candidate generation + late
-    // interaction), so the nSub² sub-dot cost is paid on 50 rows, not the
-    // corpus. Both stages totally ordered, so the composition is exact
-    // w.r.t. its own two-stage definition and fully hash-checked
-    "sim_maxsim_refine" -> ((s, d) => {
-      val cand = emb(s, d)
-        .select(col("vec_id"), col("embedding"),
-          Distances.dotLit(col("embedding"), Q64).as("coarse"))
-        .orderBy(col("coarse").desc, col("vec_id").asc)
-        .limit(50)
-      cand.select(col("vec_id"),
-          graft.operators.LateInteraction.maxSimLit(col("embedding"), Q64, 4).as("maxsim"))
-        .orderBy(col("maxsim").desc, col("vec_id").asc)
-        .limit(K)
-    }),
-    // per-dimension corpus statistics (the SQ8 calibration pass): min/max
-    // per embedding dimension — exact float comparisons — plus the mean
-    // over 2^-24-quantized values (floor(v·2^24) is an exact integer sum;
-    // double→decimal casts of raw floats would round differently per
-    // engine) and the implied symmetric int8 scale 127/max|·|. One
-    // explode + one map-side-combinable aggregation to |dims| rows
-    "vec_dim_stats" -> ((s, d) =>
-      emb(s, d)
-        .select(posexplode(col("embedding")).as(Seq("dim", "v")))
-        .select(col("dim"), col("v").cast("double").as("v"))
-        .groupBy(col("dim"))
-        .agg(count(lit(1)).as("n"),
-          min(col("v")).as("min_v"), max(col("v")).as("max_v"),
-          sum(floor(col("v") * 16777216.0).cast(LongType)).as("sq24"))
-        .select(col("dim"), col("n"), col("min_v"), col("max_v"),
-          round(col("sq24").cast("double") / (col("n").cast("double") * 16777216.0), 9)
-            .as("mean_q24"),
-          round(lit(127.0) / greatest(abs(col("min_v")), abs(col("max_v"))), 6)
-            .as("scale127"))
-        .orderBy(col("dim"))),
-    // embedding-space distribution drift: PSI per label between the
-    // even-id (reference) and odd-id (current) halves of the corpus, with
-    // the proven Grid cells as bins — the drift monitor for an embedding
-    // distribution (re-train the IVF codebook when cells shift), composing
-    // two hash-proven kernels; two |corpus|→|labels|×|cells| aggregations
-    "drift_embedding_cells" -> ((s, d) =>
-      graft.operators.Drift.psi(
-          Grid.withCellId(emb(s, d), "embedding", gridCfg)
-            .select(col("label"), col("cell_id"), (col("vec_id") % 2 === 0).as("is_ref")),
-          "label", "cell_id", "is_ref",
-          nBins = gridCfg.numCells.toInt)
-        .orderBy(col("label"))),
-    // max-inner-product search (the Dot metric end-to-end; retrieval-style
-    // scoring where magnitude matters, unlike cosine)
-    "sim_dot_topk" -> ((s, d) =>
-      emb(s, d)
-        .select(col("vec_id"), col("label"),
-          Distances.dotLit(col("embedding"), Q64).as("dot"))
-        .orderBy(col("dot").desc, col("vec_id").asc)
-        .limit(K)),
-    // MIPS with norm-band pruning (operators/Mips): score = w·dot(q,v) over
-    // the factorized store (w = static-quality boost, band = the weight
-    // bucket); bands scanned in descending Cauchy-Schwarz bound order with
-    // geometric widening. threshold 0 forces the loop (cf. knn_l2_pruned);
-    // oracle is the brute weighted-dot SQL — pruned must equal it exactly
-    "sim_dot_pruned" -> ((s, d) =>
-      Mips.prunedTopK(s,
-        emb(s, d)
-          .withColumn("weight", (lit(1) + col("vec_id") % 10).cast("double"))
-          .withColumn("band", (col("vec_id") % 10).cast("long")),
-        Q64, K, bruteForceThreshold = 0)),
-    // batch kNN join (SURVEY §2.1 #1 batch form): the engine's one exact
-    // brute-force join, KnnJoinPlan → KnnJoinExec (per-partition bounded
-    // top-k + k-bounded merge)
-    "knn_join_l2" -> ((s, d) =>
-      KnnJoinPlan.join(
-        emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        emb(s, d), k = 3)
-        .orderBy(col("query_id"), col("rn"))),
-    // scale variant: per-query candidate cells + geometric widening (no
-    // |Q|×|db| cross product) — exact, same oracle as the cross form.
-    // threshold 0: the declared query must exercise the loop it is named
-    // for (production callers keep the cost-based default)
-    "knn_join_l2_cells" -> ((s, d) =>
-      graft.operators.KnnCellJoin.join(
-        emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        Grid.withCellId(emb(s, d), "embedding", gridCfg), gridCfg, k = 3,
-        bruteForceThreshold = 0)
-        .orderBy(col("query_id"), col("rn"))),
-    // QUANTILE-grid batch kNN join (r13): the widening loop's per-query
-    // candidate boxes priced off the calibrated boundary table instead of
-    // the uniform bucket formula — the batch sibling of
-    // knn_l2_quantile_grid, for skewed corpora where equal-width cells
-    // pile up (19,980 vs 977,885 max-cell at 1M rows, SCALE_NOTES). Same
-    // brute-force oracle as every kNN-join form: pruning must not change
-    // the answer
-    "knn_join_quantile" -> ((s, d) =>
-      graft.operators.KnnCellJoin.join(
-        emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        Grid.withCellId(emb(s, d), "embedding", qgridCfg(s, d)),
-        qgridCfg(s, d), k = 3, bruteForceThreshold = 0)
-        .orderBy(col("query_id"), col("rn"))),
-    // the same join through its first-class plan name (custom LogicalPlan
-    // → SparkStrategy → KnnJoinExec); same oracle
-    "knn_join_l2_plan" -> ((s, d) =>
-      KnnJoinPlan.join(
-        emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        emb(s, d), k = 3)
-        .orderBy(col("query_id"), col("rn"))),
-    // the skew-safe name: KnnJoinExec's shuffle carries at most k rows per
-    // query per map task, whatever the candidate skew; same oracle
-    "knn_join_l2_agg" -> ((s, d) =>
-      KnnJoinPlan.join(
-        emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        emb(s, d), k = 3)
-        .orderBy(col("query_id"), col("rn"))),
-    // --- point ops / scans (SURVEY §2.1 #7-9)
-    "point_lookup" -> ((s, d) =>
-      emb(s, d).filter(col("vec_id") === 42).select(col("vec_id"), col("label"))),
-    "count_rows" -> ((s, d) =>
-      emb(s, d).agg(count(lit(1)).as("n_rows"))),
-    "full_scan" -> ((s, d) =>
-      emb(s, d).select(col("vec_id"), col("label")).orderBy(col("vec_id"))),
-    // --- grid index build invariant (SURVEY §2.1 #3/#8: Σ per-cell == total)
-    "index_cell_counts" -> ((s, d) =>
-      Grid.withCellId(emb(s, d), "embedding", gridCfg)
-        .groupBy(col("cell_id")).agg(count(lit(1)).as("n"))
-        .orderBy(col("cell_id"))),
-    // z-order (Morton) store layout: same buckets as index_cell_counts but
-    // bit-interleaved ids — spatial neighborhoods become CONTIGUOUS id
-    // ranges, so a range-partitioned write clusters them into the same
-    // files and the kNN pruner's cell box turns into row-group skipping
-    "index_zorder_cells" -> ((s, d) =>
-      emb(s, d).select(Grid.zCellId(col("embedding"), gridCfg).as("zcell"))
-        .groupBy(col("zcell")).agg(count(lit(1)).as("n"))
-        .orderBy(col("zcell"))),
-    // --- CRUD snapshot algebra (SURVEY §2.1 #3-6)
-    "crud_insert" -> ((s, d) => {
-      val state = emb(s, d)
-      val inserts = state.orderBy(col("vec_id")).limit(10)
-        .withColumn("vec_id", col("vec_id") + lit(1000000L))
-      labelSummary(Snapshot.insert(state, inserts))
-    }),
-    "crud_delete" -> ((s, d) => {
-      val state = emb(s, d)
-      labelSummary(Snapshot.delete(state, state.filter(col("vec_id") % 7 === 0), "vec_id"))
-    }),
-    "crud_update_position" -> ((s, d) => {
-      val state = emb(s, d)
-      val updates = state.filter(col("vec_id") % 10 === 0)
-        .withColumn("embedding",
-          concat(array(lit(0.5f)), slice(col("embedding"), 2, Dim - 1)))
-      val moved = Snapshot.updatePosition(state, updates, "vec_id", "embedding")
-      Knn.bruteForce(moved, Distances.squaredL2Lit(col("embedding"), Q64), 20)
-    }),
-    "crud_update_metadata" -> ((s, d) => {
-      val state = emb(s, d)
-      val updates = state.filter(col("vec_id") % 5 === 0)
-        .select(col("vec_id"), (col("label") + 100).as("label"))
-      labelSummary(Snapshot.updateMetadata(state, updates, "vec_id", "label"))
-    }),
-    "crud_upsert" -> ((s, d) => {
-      val state = emb(s, d)
-      val updates = state.filter(col("vec_id") < 10)
-        .withColumn("label", lit(999))
-        .unionByName(state.filter(col("vec_id") >= 10 && col("vec_id") < 15)
-          .withColumn("vec_id", col("vec_id") + lit(2000000L)))
-      labelSummary(Snapshot.upsert(state, updates, "vec_id"))
-    }),
-    // MERGE (conditional upsert+delete in one pass): matched+flag deletes,
-    // matched updates, unmatched inserts, unmatched+flag no-ops
-    "crud_merge" -> ((s, d) => {
-      val state = emb(s, d)
-      val src = state.filter(col("vec_id") % 15 === 0)
-        .withColumn("is_delete", lit(true))
-        .unionByName(state.filter(col("vec_id") % 15 === 5)
-          .withColumn("label", lit(777)).withColumn("is_delete", lit(false)))
-        .unionByName(state.filter(col("vec_id") % 15 === 10)
-          .withColumn("vec_id", col("vec_id") + lit(3000000L)).withColumn("is_delete", lit(false)))
-        .unionByName(state.filter(col("vec_id") === 7)
-          .withColumn("vec_id", col("vec_id") + lit(4000000L)).withColumn("is_delete", lit(true)))
-      labelSummary(Snapshot.merge(state, src, "vec_id"))
-    }),
-    // versioned store time travel (store/VersionedStore): manifest-tracked
-    // version chain v0=base, v1=delta, v2=checkpoint, v3=delta; read
-    // as-of v1 (replays base+delta) and as-of v3 (replays checkpoint+delta
-    // — the bounded-replay path) — both states under one hash gate.
-    // Oracle replays the same two merges as NOT EXISTS + UNION ALL
-    "store_time_travel" -> ((s, d) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_versioned_store").getPath
-      val base = emb(s, d).filter(col("vec_id") < 300)
-        .select(col("vec_id"), col("label"))
-      graft.store.VersionedStore.init(base, root)
-      val b1 = base.filter(col("vec_id") % 11 === 0 || col("vec_id") % 7 === 0)
-        .select(col("vec_id"),
-          when(col("vec_id") % 11 === 0, col("label"))
-            .otherwise(col("label") + 100).as("label"),
-          (col("vec_id") % 11 === 0).as("is_delete"))
-      graft.store.VersionedStore.commit(b1, root)
-      graft.store.VersionedStore.checkpoint(s, root, "vec_id")
-      val b2 = base.filter(col("vec_id") % 13 === 0)
-          .select(col("vec_id"), (col("label") + 200).as("label"),
-            lit(false).as("is_delete"))
-        .unionByName(base.filter(col("vec_id") < 5)
-          .select((col("vec_id") + 10000L).as("vec_id"),
-            lit(99).as("label"), lit(false).as("is_delete")))
-      graft.store.VersionedStore.commit(b2, root)
-      graft.store.VersionedStore.readAsOf(s, root, 1, "vec_id")
-        .withColumn("asof_v", lit(1))
-        .unionByName(graft.store.VersionedStore.readAsOf(s, root, 3, "vec_id")
-          .withColumn("asof_v", lit(3)))
-        .orderBy(col("asof_v"), col("vec_id"))
-    }),
-    // --- relational coverage (SURVEY §2.2: joins/aggs/windows/set ops/dates/json)
-    "agg_pricing_summary" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          drevenue(col("l_extendedprice"), col("l_discount")).as("revenue"),
-          dsum(col("l_discount")).as("sum_disc"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))),
-    "join_revenue_by_nation" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(drevenue(col("l_extendedprice"), col("l_discount")).as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy(col("r_name"), col("n_name"))),
-    // rollup: partial-aggregate-friendly subtotal lattice (null grouping
-    // slots replaced with a sentinel so both engines emit identical rows)
-    "agg_rollup_pricing" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-        .select(
-          coalesce(col("l_returnflag"), lit("(all)")).as("rf"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("ls"),
-          col("sum_qty"), col("n"))
-        .orderBy(col("rf"), col("ls"))),
-    // range join: orders against a tiny literal band table — broadcast
-    // nested-loop on the range predicate, then aggregate per band. The
-    // small side is O(bands); at 100 TB the big side streams map-side.
-    "range_join_price_bands" -> ((s, d) => {
-      import s.implicits._
-      val bands = Seq(
-        ("b0_lt50k", 0.0, 50000.0), ("b1_50k_100k", 50000.0, 100000.0),
-        ("b2_100k_200k", 100000.0, 200000.0), ("b3_ge200k", 200000.0, 1e18))
-        .toDF("band", "lo", "hi")
-      Tables.orders(s, d)
-        .join(broadcast(bands), col("o_totalprice") >= col("lo") && col("o_totalprice") < col("hi"))
-        .groupBy(col("band"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-        .orderBy(col("band"))
-    }),
-    "window_top_orders_per_customer" -> ((s, d) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      Tables.orders(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rn"))
-        .orderBy(col("o_custkey"), col("rn"))
-    }),
-    "set_intersect_custkeys" -> ((s, d) =>
-      Tables.orders(s, d).select(col("o_custkey").as("custkey"))
-        .intersect(Tables.customer(s, d).select(col("c_custkey").as("custkey")))
-        .orderBy(col("custkey"))),
-    // customers with a 200k+ order but no 300k+ order (non-empty difference)
-    "set_except_custkeys" -> ((s, d) =>
-      Tables.orders(s, d).filter(col("o_totalprice") > 200000.0)
-        .select(col("o_custkey").as("custkey"))
-        .except(Tables.orders(s, d).filter(col("o_totalprice") > 300000.0)
-          .select(col("o_custkey").as("custkey")))
-        .orderBy(col("custkey"))),
-    // MULTISET difference (EXCEPT ALL): per-customer order rows above the
-    // low bar minus those above the high bar, duplicates preserved —
-    // bag semantics the set-form except collapses. Summed per key so the
-    // output order is total without exposing row multiplicity directly
-    "set_except_all_orders" -> ((s, d) =>
-      Tables.orders(s, d).filter(col("o_totalprice") > 200000.0)
-        .select(col("o_custkey").as("custkey"))
-        .exceptAll(Tables.orders(s, d).filter(col("o_totalprice") > 300000.0)
-          .select(col("o_custkey").as("custkey")))
-        .groupBy(col("custkey")).agg(count(lit(1)).as("n_kept"))
-        .orderBy(col("custkey"))),
-    // explicit null ordering UNDER A LIMIT: nullable derived key sorted
-    // ASC NULLS FIRST — engines default differently (Spark asc = NULLS
-    // FIRST, DuckDB asc = NULLS LAST), and the limit makes the choice
-    // OBSERVABLE in the result set, so the contract must be spelled on
-    // both sides of the gate. The null block (~210 rows) fills the head
-    // of the 300-row window
-    "sort_nulls_first" -> ((s, d) =>
-      Tables.customer(s, d)
-        .withColumn("seg_rank", nullif(col("c_nationkey") % 7, lit(3L)))
-        .select(col("c_custkey"), col("seg_rank"))
-        .orderBy(col("seg_rank").asc_nulls_first, col("c_custkey").asc)
-        .limit(300)),
-    // per-group least-squares regression (price explained by quantity)
-    // from the SAME exact decimal power-sum kernel as corr/stddev — ONE
-    // map-side-combinable pass, slope/intercept/r² assembled in double on
-    // |groups| rows and rounded(6) identically in both engines
-    "agg_regr_price_qty" -> ((s, d) => {
-      val x = col("l_quantity").cast(DecimalType(18, 2))
-      val y = col("l_extendedprice").cast(DecimalType(18, 2))
-      // num/den in exact decimal, ONE double cast each (the corr_stats
-      // contract); the square is an explicit multiply, not pow (libm pow
-      // association is not pinned cross-engine)
-      val num = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-      val denX = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-      val denY = (col("n") * col("syy") - col("sy") * col("sy")).cast("double")
-      Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"), sum(x).as("sx"), sum(y).as("sy"),
-          sum(x * x).as("sxx"), sum(y * y).as("syy"), sum(x * y).as("sxy"))
-        .select(col("l_returnflag"), col("n"),
-          round(num / denX, 6).as("slope"),
-          round((col("sy").cast("double") - (num / denX) * col("sx").cast("double")) /
-            col("n").cast("double"), 6).as("intercept"),
-          round((num * num) / (denX * denY), 6).as("r2"))
-        .orderBy(col("l_returnflag"))
-    }),
-    // schema-evolution union: two projections with DIFFERENT columns
-    // combined BY NAME, absent columns null-filled — the multi-vintage
-    // read every long-lived dataset needs (yesterday's files lack the new
-    // column). unionByName(allowMissingColumns) ≡ the oracle's explicit
-    // NULL-padded UNION ALL
-    "set_union_by_name" -> ((s, d) => {
-      val a = Tables.orders(s, d).filter(col("o_orderkey") % 100 === 0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      val b = Tables.orders(s, d).filter(col("o_orderkey") % 100 === 50)
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      a.unionByName(b, allowMissingColumns = true)
-        .orderBy(col("o_orderkey"))
-    }),
-    "agg_count_distinct" -> ((s, d) =>
-      Tables.orders(s, d).agg(
-        countDistinct(col("o_custkey")).as("n_custs"),
-        count(lit(1)).as("n_orders"))),
-    // sketch aggregates (HLL++ distinct, quantile summary) — the raw
-    // sketch OUTPUTS are engine-specific, so the query is SELF-VALIDATING
-    // (r12): it computes the exact statistics side by side and emits
-    // within-bound FLAGS (HLL estimate within 3·rsd = 15% relative error;
-    // approx percentile within 0.1% RANK error, 10× the documented
-    // 1/accuracy guarantee) plus the exact values. Every output column is
-    // engine-portable, so the oracle is a full hash check — a sketch
-    // drifting out of its error contract fails the gate, not just a spec.
-    "agg_sketches" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-      // sketches and the exact stats aggregate SEPARATELY: fusing the
-      // exact countDistinct (Expand-based) with the two imperative sketch
-      // aggregates in one Aggregate degrades to a SortAggregate that costs
-      // ~8× the two plans side by side (15.4 s vs ~2 s at sf0.1); two
-      // 1-row frames cross-joined keep each in its best physical form
-      val sketch = o.agg(
-        approx_count_distinct(col("o_custkey")).as("ac"),
-        percentile_approx(col("o_totalprice"), lit(0.5), lit(10000)).as("p50"),
-        percentile_approx(col("o_totalprice"), lit(0.99), lit(10000)).as("p99"))
-      val exact = o.agg(
-        countDistinct(col("o_custkey")).as("nce"),
-        count(lit(1)).as("nr"))
-      val stats = sketch.crossJoin(exact)
-      // rank bracketing (r13, ADVICE): a returned value that TIES many
-      // rows occupies the whole rank interval [count_lt, count_le]; the
-      // old single `<=` count over-stated the rank on tie-heavy data and
-      // could fail an in-contract sketch. Within-bound now means the
-      // padded target-rank window [n·p − eps, n·p + eps] INTERSECTS the
-      // value's rank interval.
-      val rankCounts = o.crossJoin(broadcast(stats))
-        .agg(
-          max(col("nce")).as("n_custs_exact"),
-          max(col("nr")).as("n_rows"),
-          max(when(abs(col("ac") - col("nce")).cast("double") <=
-            col("nce").cast("double") * 0.15, 1).otherwise(0)).as("hll_within_bound"),
-          sum(when(col("o_totalprice") < col("p50"), 1L).otherwise(0L)).as("rp50_lt"),
-          sum(when(col("o_totalprice") <= col("p50"), 1L).otherwise(0L)).as("rp50_le"),
-          sum(when(col("o_totalprice") < col("p99"), 1L).otherwise(0L)).as("rp99_lt"),
-          sum(when(col("o_totalprice") <= col("p99"), 1L).otherwise(0L)).as("rp99_le"))
-      def withinBound(lt: Column, le: Column, p: Double): Column = {
-        val target = col("n_rows").cast("double") * p
-        val eps = greatest(col("n_rows").cast("double") / 1000.0, lit(10.0))
-        when(lt.cast("double") <= target + eps && le.cast("double") >= target - eps, 1)
-          .otherwise(0)
-      }
-      rankCounts.select(col("n_custs_exact"), col("n_rows"), col("hll_within_bound"),
-        withinBound(col("rp50_lt"), col("rp50_le"), 0.5).as("p50_within_bound"),
-        withinBound(col("rp99_lt"), col("rp99_le"), 0.99).as("p99_within_bound"))
-    }),
-    "anti_customers_without_orders" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))),
-    "date_orders_by_month" -> ((s, d) =>
-      Tables.orders(s, d)
-        .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("month"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-        .orderBy(col("month"))),
-    "json_events_by_type" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(get_json_object(col("props"), "$.k").cast(LongType)).as("k_sum"),
-          dsum(col("value"), 3).as("v_sum"))
-        .orderBy(col("event_type"))),
-    // two-phase salted aggregation (skewed-key pattern): bit-exact equal to
-    // the direct groupBy — the oracle IS the direct form
-    "agg_salted_events_by_type" -> ((s, d) =>
-      graft.operators.SaltedAgg.aggregate(
-        Tables.events(s, d), keys = Seq("event_type"),
-        salt = col("event_id"), saltBuckets = 16,
-        phase1 = Seq(
-          "n" -> count(lit(1)),
-          "v_sum" -> sum(col("value").cast(DecimalType(18, 3)))),
-        phase2 = Seq(
-          "n" -> (c => sum(c)),
-          "v_sum" -> (c => sum(c).cast("double"))))
-        .orderBy(col("event_type"))),
-    // pivot: long -> wide with an explicit value list (no extra pass to
-    // discover values; DuckDB mirror is portable conditional aggregation)
-    "pivot_event_counts" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(unix_timestamp(date_trunc("day", col("ts"))).as("day_epoch"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .orderBy(col("day_epoch"))),
-    // unpivot (melt): the wide pivot result back to long form — Spark's
-    // native unpivot plans as a single Expand, no shuffle
-    "unpivot_event_counts" -> ((s, d) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      Tables.events(s, d)
-        .groupBy(unix_timestamp(date_trunc("day", col("ts"))).as("day_epoch"))
-        .pivot("event_type", types)
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .unpivot(Array(col("day_epoch")), types.map(col).toArray, "event_type", "n")
-        .orderBy(col("day_epoch"), col("event_type"))
-    }),
-    // time-series densification: an hourly spine per day joined against
-    // observed counts — silent gaps become explicit zero rows (resample)
-    "events_hourly_dense" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val bounds = ev.agg(
-        unix_timestamp(date_trunc("hour", min(col("ts")))).as("t0"),
-        unix_timestamp(date_trunc("hour", max(col("ts")))).as("t1"))
-      val spine = bounds.select(
-        explode(sequence(col("t0"), col("t1"), lit(3600L))).as("hour_epoch"))
-      val counts = ev.filter(col("event_type") === "purchase")
-        .groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("he"))
-        .agg(count(lit(1)).as("n"))
-      spine.join(counts, col("hour_epoch") === col("he"), "left_outer")
-        .select(col("hour_epoch"), coalesce(col("n"), lit(0L)).as("n"))
-        .orderBy(col("hour_epoch"))
-    }),
-    // MapType path: JSON object -> map -> explode to (key, value) rows
-    "json_kv_explode" -> ((s, d) =>
-      Tables.events(s, d)
-        .select(explode(from_json(col("props"),
-          org.apache.spark.sql.types.DataType.fromDDL("map<string,bigint>"))).as(Seq("key", "value")))
-        .groupBy(col("key"))
-        .agg(count(lit(1)).as("n"), sum(col("value")).as("v_sum"))
-        .orderBy(col("key"))),
-    "agg_cube_pricing" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"))
-        .select(
-          coalesce(col("l_returnflag"), lit("(all)")).as("rf"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("ls"),
-          col("n"))
-        .orderBy(col("rf"), col("ls"))),
-    "events_hourly_stats" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(
-          unix_timestamp(date_trunc("hour", col("ts"))).as("hour_epoch"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 3).as("v_sum"))
-        .orderBy(col("hour_epoch"), col("event_type"))),
-    // batch embedding (north star): feature-hashing text embedder, sparse
-    // form (exact integer sums — oracle-portable)
-    "embed_feature_hash" -> ((s, d) =>
-      graft.operators.Embed.featureHashSparse(
-          par(s, docs(s, d).filter(col("doc_id") % 10 === 0)), dim = 64)
-        .orderBy(col("doc_id"), col("idx"))),
-    // Johnson-Lindenstrauss random projection: 64-dim embeddings → 8 dims
-    // via fixed gaussian hyperplanes (the same literals the LSH uses, kept
-    // as VALUES instead of signs). Per-row codegen'd dot products, zero
-    // shuffles — the cheap front-end before indexing at 100 TB
-    "embed_random_projection" -> ((s, d) =>
-      emb(s, d).filter(col("vec_id") % 5 === 0)
-        .select(col("vec_id") +: (0 until 8).map(j =>
-          Distances.dotLit(col("embedding"), Planes16(j)).as(s"rp_$j")): _*)
-        .orderBy(col("vec_id"))),
-    // --- text analysis (north star)
-    "text_features" -> ((s, d) =>
-      TextAnalysis.docFeatures(par(s, docs(s, d))).orderBy(col("doc_id"))),
-    "text_quality" -> ((s, d) =>
-      par(s, docs(s, d)).select(col("doc_id"),
-        TextAnalysis.qualityScore(col("text")).as("quality"),
-        TextAnalysis.avgWordLen(col("text")).as("avg_word_len"))
-        .orderBy(col("doc_id"))),
-    // Gopher-style rule gate (Rae et al. 2021 App. A1): per-rule booleans
-    // + the conjunction, all integer cross-multiplied comparisons — the
-    // map-side filter pass of a curation pipeline, with per-rule columns
-    // for the rejection-rate data card
-    "text_gopher_rules" -> ((s, d) =>
-      TextAnalysis.gopherRules(par(s, docs(s, d))).orderBy(col("doc_id"))),
-    // the repetition arm of the Gopher family: duplicate-word fraction and
-    // top-bigram share as integer cross-multiplied rules, raw counts
-    // included for the data card; per-row, zero shuffle
-    "text_gopher_repetition" -> ((s, d) =>
-      TextAnalysis.gopherRepetitionRules(par(s, docs(s, d))).orderBy(col("doc_id"))),
-    // CCNet-style perplexity bucketing (Wenzek et al. 2020): held-out docs
-    // labeled head/middle/tail against fixed per-token LM-score thresholds;
-    // the compare is exact decimal (sum_lp vs t·n), no float division
-    "text_perplexity_buckets" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      graft.operators.LangModel.perplexityBuckets(
-          all.filter(col("doc_id") % 10 === 0),
-          all.filter(col("doc_id") % 10 =!= 0))
-        .orderBy(col("doc_id"))
-    }),
-    "text_winnow_fingerprints" -> ((s, d) =>
-      TextAnalysis.winnowFingerprints(par(s, docs(s, d).filter(col("doc_id") % 10 === 0)))
-        .orderBy(col("doc_id"), col("fp"))),
-    // --- as-of join (SURVEY §2.2 joins row: point-in-time enrichment)
-    "asof_join_events_orders" -> ((s, d) =>
-      AsOfJoin.asOf(
-        Tables.events(s, d).select(col("event_id"), col("ts"), col("user_id"), col("event_type")),
-        Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice")),
-        keyL = "user_id", keyR = "o_custkey", timeL = "ts", timeR = "o_orderdate",
-        payloadR = Seq("o_orderkey", "o_totalprice"), tiebreakR = "o_orderkey")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("event_id"))),
-    // --- dedup (north star)
-    "dedup_exact_groups" -> ((s, d) =>
-      Dedup.exactDupGroups(par(s, docs(s, d))).orderBy(col("content_hash"))),
-    "dedup_minhash_signatures" -> ((s, d) =>
-      Dedup.minHashSignature(par(s, docs(s, d).filter(col("doc_id") % 20 === 0)),
-          "text", "doc_id", shingleWidth = 3, numHashes = 8)
-        .orderBy(col("doc_id"))),
-    "dedup_simhash" -> ((s, d) =>
-      Dedup.simHash(par(s, docs(s, d).filter(col("doc_id") % 20 === 0)), "text", "doc_id")
-        .orderBy(col("doc_id"))),
-    // banded SimHash pairing: hamming ≤ 8 pairs found via pigeonhole band
-    // buckets (recall 1, no cross product) — oracle = the brute O(n²) form
-    "dedup_simhash_pairs" -> ((s, d) =>
-      Dedup.simHashNearDupPairs(
-          par(s, docs(s, d).filter(col("doc_id") % 5 === 0)), "text", "doc_id",
-          maxHamming = 8)
-        .orderBy(col("id_a"), col("id_b"))),
-    "dedup_minhash_lsh_pairs" -> ((s, d) =>
-      Dedup.minHashLshNearDupPairs(par(s, docs(s, d)),
-          "text", "doc_id", shingleWidth = 3, numHashes = 8, bands = 4, threshold = 0.5,
-          docCountHint = docCount(s, d))
-        .orderBy(col("id_a"), col("id_b"))),
-    // the audit side of the r12 hot-bucket cap: every LSH band bucket past
-    // a threshold with its population — what a governed dedup run logs
-    // next to the pair count so capped boilerplate pockets are observable.
-    // Audited at threshold 2 (the production cap of 1024 yields an empty
-    // — and therefore unprovable — fixture result)
-    "dedup_lsh_hot_buckets" -> ((s, d) =>
-      Dedup.lshHotBandAudit(par(s, docs(s, d)), maxBucket = 2)
-        .orderBy(col("band"), col("bkey"))),
-    // incremental (batch-vs-corpus) dedup — the daily-crawl admission path:
-    // docs with id%10==7 arrive as the new batch, the rest are the corpus;
-    // each batch doc is classified exact / near (LSH + jaccard vs the
-    // corpus only, no corpus self-join) / keep, with the matched corpus id.
-    // Two corpus docs re-keyed into the batch make the 'exact' path
-    // non-vacuous (the fixture has no cross-split identical texts)
-    "dedup_incremental_batch" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      val corpus = all.filter(col("doc_id") % 10 =!= 7)
-      val batch = all.filter(col("doc_id") % 10 === 7)
-        .unionByName(all.filter(col("doc_id") === 20 || col("doc_id") === 41)
-          .withColumn("doc_id", col("doc_id") + 1000000L))
-      Dedup.incrementalDedup(corpus, batch).orderBy(col("doc_id"))
-    }),
-    // winnow-fingerprint edges → connected components → canonical doc per
-    // duplicate cluster (the last step of a dedup pipeline)
-    "dedup_cluster_canonical" -> ((s, d) => {
-      // persist: the self-join's broadcast side cannot share the md5-heavy
-      // fingerprint subtree with the probe side (same pattern as the
-      // MinHash-LSH signature persist). Edges via the df-CAPPED bucket
-      // join (r11): a boilerplate fingerprint shared by 10^5 docs would
-      // make the raw self-join quadratic in that one bucket; the cap (256,
-      // far above any fixture bucket — max observed is single digits)
-      // bounds candidate volume and is mirrored in the oracle's HAVING
-      Dedup.connectedComponents(
-        Dedup.fingerprintEdges(
-          TextAnalysis.winnowFingerprints(par(s, docs(s, d)))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-          "doc_id", "fp", maxBucket = 256))
-        .orderBy(col("id"))
-    }),
-    // deterministic hash-mod sampling (portable: md5-derived bucket, not
-    // engine-specific rand/hash) — the reproducible-subset primitive
-    "sample_documents_hashmod" -> ((s, d) =>
-      docs(s, d)
-        .filter(pmod(Dedup.md5Int32(col("doc_id").cast("string")), lit(100)) < 10)
-        .select(col("doc_id"), col("n_chars"))
-        .orderBy(col("doc_id"))),
-    // deterministic weighted Bernoulli (importance) sampling: per-row keep
-    // probability from a quality proxy, accepted by hash threshold — the
-    // same md5 gate as hashmod sampling but with a CONTINUOUS per-row
-    // rate. Reproducible across runs/engines (no RNG state), and embar-
-    // rassingly parallel: one codegen'd pass, zero shuffles before sort
-    "sample_weighted_bernoulli" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"),
-          least(col("n_chars") / 500.0, lit(1.0)).as("p"),
-          pmod(Dedup.md5Int32(col("doc_id").cast("string")), lit(1048576L)).as("h"))
-        .filter(col("h") < col("p") * 1048576.0)
-        .select(col("doc_id"), col("p"))
-        .orderBy(col("doc_id"))),
-    // all Jaccard ≥ 0.8 pairs via exact prefix filtering (SetSimJoin) —
-    // recall 1, no cross product; the brute O(n²) form lives only on
-    // the oracle side (the r5 plan was a BroadcastNestedLoop self-join).
-    // The %100 sample bounds the OUTPUT, not the plan: the fixture
-    // corpus is template-generated, so ≥0.8 pairs are quadratic in the
-    // near-dup group sizes and a full-corpus pair dump is itself
-    // O(groups²) rows — a real pipeline would feed these edges straight
-    // into connected components instead of materializing them
-    "dedup_jaccard_pairs" -> ((s, d) =>
-      graft.operators.SetSimJoin.jaccardJoin(
-          par(s, docs(s, d)).filter(col("doc_id") % 100 === 0), 0.8)
-        .orderBy(col("id_a"), col("id_b"))),
-    // substring-level dedup at n-gram granularity (Dedup.repeatedNgramSpans):
-    // maximal word spans covered by 5-grams occurring in >= 2 distinct docs
-    // — the boilerplate/licence/quote regions document-level dedup misses.
-    // One df aggregation + flagged-grams window; no self-join
-    "dedup_repeated_ngram_spans" -> ((s, d) =>
-      Dedup.repeatedNgramSpans(par(s, docs(s, d)), n = 5)
-        .orderBy(col("doc_id"), col("span_start"))),
-    // the EXACT (collision-free) form: gram STRINGS as keys, so the spans
-    // are precisely the cross-corpus duplicated regions at 5-gram
-    // granularity (Lee et al.); the intra-doc SA pair (`text_*_sa`)
-    // covers the suffix-array side of the same primitive
-    "dedup_substring_exact" -> ((s, d) =>
-      Dedup.repeatedNgramSpansExact(par(s, docs(s, d)), n = 5)
-        .orderBy(col("doc_id"), col("span_start"))),
-    // containment similarity (|A∩B| / |A|, asymmetric): catches "doc A is
-    // a subset of doc B" near-dups that symmetric Jaccard dilutes — the
-    // quote/excerpt detector of a dedup pipeline
-    // exact asymmetric prefix filter: A-prefix tokens probe the full
-    // inverted index, verification only on candidates — recall 1, never
-    // a cross product (the brute all-pairs form, the r5 bench's slowest
-    // plan, survives only as the oracle). Sampled for the same output-
-    // cardinality reason as dedup_jaccard_pairs
-    "dedup_containment_pairs" -> ((s, d) =>
-      graft.operators.SetSimJoin.containmentJoin(
-          par(s, docs(s, d)).filter(col("doc_id") % 20 === 0), 0.9)
-        .orderBy(col("id_a"), col("id_b"))),
-    // event-type transition matrix from per-user event sequences (first-
-    // order Markov mining): lag window per user, then count + row-
-    // normalize — the session-behavior statistic
-    "events_markov_transitions" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").cast("long").asc, col("event_id").asc)
-      val trans = Tables.events(s, d)
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
-        .groupBy(col("prev_type"), col("event_type")).agg(count(lit(1)).as("n"))
-      val totals = Window.partitionBy(col("prev_type"))
-      trans
-        .withColumn("p", col("n").cast("double") / sum(col("n")).over(totals))
-        .orderBy(col("prev_type"), col("event_type"))
-    }),
-    // EXACT set-similarity join via prefix filtering (PPJoin family): all
-    // Jaccard ≥ t pairs with recall 1, no cross product — the exact
-    // counterpart of the LSH near-dup path. Oracle = the brute O(n²) form
-    "dedup_prefix_filter_pairs" -> ((s, d) =>
-      graft.operators.SetSimJoin.jaccardJoin(
-          par(s, docs(s, d).filter(col("doc_id") % 20 === 0)), t = 0.5)
-        .orderBy(col("id_a"), col("id_b"))),
-    // --- ANN scale path (north star): IVF probe + vector-LSH near-dup
-    // TRAINED ivf, hash-checked end to end: 16 fixed literal seeds, two
-    // Lloyd iterations with INTEGER-EXACT centroid updates
-    // (Ann.lloydSeededExact — means on floor((v+2)·2^24) BIGINTs, so
-    // every trained coordinate is an exact multiple of 2^-24), then the
-    // standard assign → probe → pruned-scan search. The oracle replays
-    // the whole training loop as unrolled CTEs (ivfTrainedCtes) —
-    // closing r5's "trained paths are rows-only" gap
-    "ann_ivf_topk" -> ((s, d) => {
-      val db = emb(s, d)
-      val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
-      Ann.search(Ann.assign(db, cents), cents, Q64, K, nprobe = 4)
-    }),
-    // IVF with a FIXED literal codebook: same assignment/probe/scan
-    // algorithm as ann_ivf_topk but with compile-time centroids, which
-    // makes the WHOLE approximate path hash-checkable — DuckDB replays
-    // cell assignment (argmin over the literal codebook), the probe-cell
-    // choice (precomputed from the same constants), and the pruned scan
-    "ann_ivf_fixed_topk" -> ((s, d) => {
-      val cents = Planes16.take(8)
-      Ann.search(Ann.assign(emb(s, d), cents), cents, Q64, K, nprobe = 3)
-    }),
-    // TWO-LEVEL (coarse→fine) IVF with FIXED literal codebooks — the
-    // large-codebook assignment path (VecArgMinL2TwoLevel: probe the
-    // nearest coarse cell, argmin only its fine codebook) under the hash
-    // gate: DuckDB replays the hierarchical argmin as a CASE over the
-    // coarse winner; the query's own probed cell is a compile-time
-    // constant computed by the same driver helper on both sides
-    "ann_two_level_topk" -> ((s, d) => {
-      val assigned = Ann.assignTwoLevel(emb(s, d), TwoLevelCoarse, TwoLevelFine, probes = 1)
-      val qCell = twoLevelCellOf(Q64, TwoLevelCoarse, TwoLevelFine)
-      assigned.filter(col("ivf_cell") === qCell)
-        .select(col("vec_id"),
-          Distances.squaredL2Lit(col("embedding"), Q64).as("dist"))
-        .orderBy(col("dist").asc, col("vec_id").asc).limit(K)
-    }),
-    // PQ ADC scan with a FIXED literal codebook (8 subspaces × 8 entries
-    // from the Planes16 constants): encode argmin + lookup-table distance
-    // + top-k, ALL hash-checked — DuckDB replays the per-subspace argmin
-    // and the same literal lookup tables. The kmeans-trained PQ variant
-    // (ann_pq_topk) stays rows-only
-    "ann_pq_fixed_adc" -> ((s, d) => {
-      val model = FixedPqModel
-      val lut = graft.operators.Pq.adcTable(Q64, model)
-      graft.operators.Pq.encode(emb(s, d), model)
-        .select(col("vec_id"),
-          graft.operators.Pq.adcDist(col("pq_codes"), lut).as("adc_dist"))
-        .orderBy(col("adc_dist").asc, col("vec_id").asc)
-        .limit(K)
-    }),
-    // PQ reconstruction-error report: per subspace, the mean/max squared
-    // distance between each sub-vector and its NEAREST codeword (= the
-    // quantization error the ADC scan inherits) — the statistic that
-    // decides ksub/m sizing and flags a stale codebook. One scan, the 8
-    // per-row errors carried as an array then exploded to |m| groups;
-    // errors 9-decimal-quantized so the decimal mean is engine-exact
-    "vec_pq_error" -> ((s, d) => {
-      val model = FixedPqModel
-      // native min-distance kernel per subspace slice: same value as
-      // least() over the unrolled per-centroid sums (min is exact), but a
-      // compact generated loop — the 16×32×4-term unrolled tree spent its
-      // time in janino compilation, not execution
-      val errs = (0 until model.m).map { j =>
-        val sub = slice(col("embedding"), j * model.dsub + 1, model.dsub)
-        round(org.apache.spark.sql.graftbridge.ColumnBridge.column(
-            graft.functions.VecMinDistL2(
-              org.apache.spark.sql.graftbridge.ColumnBridge.expression(sub),
-              model.codebooks(j))), 9)
-          .cast(DecimalType(18, 9))
-      }
-      emb(s, d)
-        .select(posexplode(array(errs: _*)).as(Seq("subspace", "err")))
-        .groupBy(col("subspace"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("err")).cast("double") / count(lit(1)).cast("double"), 9)
-            .as("mean_err"),
-          max(col("err")).cast("double").as("max_err"))
-        .orderBy(col("subspace"))
-    }),
-    // the full PQ search (ADC prefilter to `refine` candidates, exact
-    // re-rank to k) under the same fixed codebook — both stages replayed
-    // by the oracle
-    "ann_pq_fixed_refine" -> ((s, d) =>
-      graft.operators.Pq.search(
-        graft.operators.Pq.encode(emb(s, d), FixedPqModel),
-        FixedPqModel, Q64, K, refine = 50)),
-    // the composed IVFPQ stack under fixed codebooks: IVF cell pruning
-    // picks WHICH rows, ADC codes decide HOW CHEAPLY, exact re-rank
-    // finishes — every stage oracle-replayed
-    "ann_ivfpq_fixed" -> ((s, d) => {
-      val ivfCents = Planes16.take(8)
-      graft.operators.Pq.ivfPqSearch(
-        graft.operators.Pq.encode(Ann.assign(emb(s, d), ivfCents), FixedPqModel),
-        ivfCents, FixedPqModel, Q64, K, nprobe = 5, refine = 50)
-    }),
-    // FILTERED approximate search: the reference's filter-before-k
-    // contract (metadata predicate gates candidacy, k survivors — SURVEY
-    // §2.1 #2) carried onto the IVF path; the predicate prunes the
-    // assigned table before cell probing, so selective filters shrink the
-    // scan instead of post-filtering the top-k
-    "ann_ivf_filtered" -> ((s, d) => {
-      val db = emb(s, d)
-      val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
-      Ann.search(Ann.assign(db, cents).filter(col("label") === 3),
-        cents, Q64, K, nprobe = 4)
-    }),
-    // recall@k of the IVF index against exact brute force, per query of a
-    // held-out sample — the accuracy/productivity dial every ANN deploy
-    // monitors. Both arms share one scan lineage; the overlap join is on
-    // ≤ |q|·k rows. Hash-checked since the seeded-exact Lloyd training
-    // is oracle-replayable (the recall VALUES are data, not luck)
-    "ann_ivf_recall" -> ((s, d) => {
-      val db = emb(s, d)
-      // count-derived held-out page (~20 queries at ANY SF) — keeps the
-      // |queries|×|corpus| exact ground-truth arm linear in the corpus
-      val mq = math.max(1L, (embCount(s, d) + 19) / 20)
-      val q = db.filter(col("vec_id") % mq === 0)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
-      val approx = Ann.ivfJoin(q, Ann.assign(db, cents), cents, k = K, nprobe = 4)
-        .select(col("query_id"), col("vec_id"))
-      val exact = KnnJoinPlan.join(q, db, K)
-        .select(col("query_id").as("eq"), col("vec_id").as("ev"))
-      val hits = approx.join(exact,
-          col("query_id") === col("eq") && col("vec_id") === col("ev"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
-      q.select(col("query_id"))
-        .join(hits, Seq("query_id"), "left_outer")
-        .select(col("query_id"),
-          (coalesce(col("n_hits"), lit(0L)) / lit(K.toDouble)).as("recall_at_k"))
-        .orderBy(col("query_id"))
-    }),
-    // FILTERED-ANN recall eval (r16): recall@k per selectivity band —
-    // the classic filtered-ANN failure mode is a selective predicate
-    // emptying the probed cells (the survivors live in unprobed cells),
-    // and nothing measured that degradation. Four label-predicate bands
-    // (~10/30/50/100% selectivity), each band = filtered IVF arm vs
-    // filtered exact ground truth over the SAME held-out query page; one
-    // summary row per band (hits are integers; the one division is by a
-    // driver-constant double — hash-portable)
-    "ann_ivf_filtered_recall" -> ((s, d) => {
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      val db = emb(s, d)
-      val mq = math.max(1L, (embCount(s, d) + 19) / 20)
-      val q = db.filter(col("vec_id") % mq === 0)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
-      val assigned = Ann.assign(db, cents)
-      val bands: Seq[(String, Column)] = Seq(
-        ("p010_label_eq3", col("label") === 3),
-        ("p030_label_lt3", col("label") < 3),
-        ("p050_label_lt5", col("label") < 5),
-        ("p100_all", lit(true)))
-      // r17 shared arms (VERDICT item 6, guide §1.2): the four bands used
-      // to re-run the probe join AND the |q|×|corpus| brute ground truth
-      // per band (8 corpus subtrees in one action). Both candidate sets
-      // are band-independent except for the label filter, so each is
-      // scored ONCE carrying `label`, and ONE window pass per arm computes
-      // every band's within-band rank simultaneously as a cumulative
-      // conditional count over the shared (dist, vec_id) order: for rows
-      // satisfying pred_i, count_if(pred_i) up to the current row ≡
-      // row_number over the pred_i-filtered set — the exact per-band
-      // top-K membership the old per-band subtrees computed. Hits for all
-      // four bands then come from one (query, vec) join + one aggregation.
-      val probeCells = ColumnBridge.column(graft.functions.VecArgTopNL2(
-        ColumnBridge.expression(col("q_embedding")), cents, 4))
-      val qs = q.select(col("query_id"), col("embedding").as("q_embedding"))
-        .withColumn("ivf_cell", explode(probeCells))
-      val cand = broadcast(qs).join(assigned, "ivf_cell")
-        .select(col("query_id"), col("vec_id"), col("label"),
-          Distances.squaredL2Cols(col("q_embedding"), col("embedding"), Dim).as("dist"))
-      val brute = db.crossJoin(broadcast(q.select(col("query_id").as("bq"),
-          col("embedding").as("q_embedding"))))
-        .select(col("bq").as("query_id"), col("vec_id"), col("label"),
-          Distances.squaredL2Cols(col("q_embedding"), col("embedding"), Dim).as("dist"))
-      def bandFlags(df: DataFrame, tag: String): DataFrame = {
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("dist").asc, col("vec_id").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val flagged = df.select(Seq(col("query_id"), col("vec_id")) ++
-          bands.zipWithIndex.map { case ((_, pred), i) =>
-            (pred && sum(pred.cast("long")).over(w) <= K).as(s"$tag$i") }: _*)
-        flagged.filter(bands.indices.map(i => col(s"$tag$i")).reduce(_ || _))
-      }
-      val ap = bandFlags(cand, "a")
-      val ex = bandFlags(brute, "e")
-      val hitCols = bands.zipWithIndex.map { case ((name, _), i) =>
-        struct(lit(name).as("band"),
-          coalesce(sum((col(s"a$i") && col(s"e$i")).cast("long")), lit(0L))
-            .as("n_hits")).as(s"h$i")
-      }
-      val nq = q.count() // |page| ~ 20 at any SF; one slim count job
-      ap.join(ex, Seq("query_id", "vec_id"))
-        .agg(hitCols.head, hitCols.tail: _*)
-        .select(explode(array(bands.indices.map(i => col(s"h$i")): _*)).as("h"))
-        .select(col("h.band"), lit(nq).as("n_queries"), col("h.n_hits"),
-          (col("h.n_hits") / lit(K * nq.toDouble)).as("recall_at_k"))
-        .orderBy(col("band"))
-    }),
-    // recall@k CURVE over nprobe — the accuracy/cost dial an ANN deploy
-    // publishes: one trained index, one exact ground truth, four probe
-    // widths sharing the probe RANKING (each width is a filter on the
-    // per-query centroid rank, not a re-rank). Integer hit counts; the
-    // one division is a shared-constant IEEE op — hash-checked
-    "ann_ivf_recall_curve" -> ((s, d) => {
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      val db = emb(s, d)
-      // count-derived held-out page — same rationale as ann_ivf_recall
-      val mq = math.max(1L, (embCount(s, d) + 19) / 20)
-      val q = db.filter(col("vec_id") % mq === 0)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
-      val assigned = Ann.assign(db, cents)
-      val exact = KnnJoinPlan.join(q, db, K)
-        .select(col("query_id").as("eq"), col("vec_id").as("ev"))
-      // r10 fused arms (the oracle's shape): score candidates ONCE at the
-      // widest probe width, carrying each cell's probe RANK (posexplode of
-      // the ranked VecArgTopNL2 list — top-np is its np-prefix, same
-      // comparator); each arm is a filter + bounded top-K of the persisted
-      // slim (query, rnp, vec, dist) set. The old per-arm ivfJoin form
-      // re-scored the union of probed cells ~1.9× over
-      val probeCells = ColumnBridge.column(graft.functions.VecArgTopNL2(
-        ColumnBridge.expression(col("q_embedding")), cents, 8))
-      val qs = q.select(col("query_id"), col("embedding").as("q_embedding"))
-        .select(col("query_id"), col("q_embedding"),
-          posexplode(probeCells).as(Seq("rnp0", "ivf_cell")))
-      val cand = broadcast(qs).join(assigned, "ivf_cell")
-        .select(col("query_id"), col("rnp0"), col("vec_id"),
-          Distances.squaredL2Cols(col("q_embedding"), col("embedding"), Dim).as("dist"))
-        // persist: the four arms reuse the scored set within one action;
-        // no unpersist hook exists on a returned-DataFrame contract, so
-        // reclamation is ContextCleaner's on the abandoned plan (the same
-        // documented reliance as Dedup's signature persist)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val curve = Seq(1, 2, 4, 8).map { np =>
-        KnnTopK.topK(cand.filter(col("rnp0") < np), K)
-          .select(col("query_id"), col("vec_id"))
-          .join(exact, col("query_id") === col("eq") && col("vec_id") === col("ev"),
-            "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(np).as("nprobe"), col("n_hits"))
-      }.reduce(_ unionAll _)
-      curve.crossJoin(q.agg(count(lit(1)).as("n_queries")))
-        .select(col("nprobe"), col("n_queries"), col("n_hits"),
-          (col("n_hits").cast("double")
-            / (col("n_queries") * lit(K.toLong)).cast("double")).as("recall_at_k"))
-        .orderBy(col("nprobe"))
-    }),
-    // batch ANN join: every query probes its nprobe nearest IVF cells
-    // (VecArgTopNL2) under the seeded-exact trained codebook —
-    // hash-checked; the oracle replays training + per-query probe
-    // ranking + the bounded top-k
-    "ann_ivf_join" -> ((s, d) => {
-      val db = emb(s, d)
-      val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
-      Ann.ivfJoin(
-        db.filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        Ann.assign(db, cents), cents, k = 3, nprobe = 4)
-        .orderBy(col("query_id"), col("rn"))
-    }),
-    // TRAINED PQ + ADC + exact re-rank, hash-checked: seeded-exact
-    // codebook training (Pq.trainSeededExact, integer-exact means over
-    // fixed literal seeds) makes every codeword oracle-replayable; the
-    // oracle then replays encode, the ADC pivot sum (left-assoc like
-    // adcDist's reduce), the refine cut and the exact re-rank
-    "ann_pq_topk" -> ((s, d) => {
-      val db = emb(s, d)
-      val model = graft.operators.Pq.trainSeededExact(db, Dim,
-        Fixtures.PqSeeds, iters = 2)
-      graft.operators.Pq.search(graft.operators.Pq.encode(db, model), model, Q64, K)
-    }),
-    "ann_lsh_neardup" -> ((s, d) =>
-      Ann.lshBandedNearDupPairs(par(s, emb(s, d).filter(col("vec_id") % 5 === 0)), Planes16, Dim,
-          bandBits = 4, minCosine = 0.35)
-        .orderBy(col("id_a"), col("id_b"))),
-    // --- graph-based ANN (NSW family, GraphAnn.scala — r16): the
-    // most-deployed ANN index shape, completing the IVF/PQ/LSH/MIPS set.
-    // Exact |V|² graph build — the correctness anchor; the scale build is
-    // ann_graph_edges_ivf below
-    "ann_graph_edges" -> ((s, d) =>
-      knnGraphCached(s, d).orderBy(col("src"), col("rn"))),
-    // 100 TB build path: candidates only from each node's nprobe nearest
-    // trained-IVF cells (cell-key equi-join, co-partitioned — never |V|²);
-    // the edge set it loses vs ann_graph_edges is the measured IVF recall
-    // dial, not silent truncation
-    "ann_graph_edges_ivf" -> ((s, d) => {
-      val db = emb(s, d)
-      val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
-      GraphAnn.knnGraphIvf(Ann.assign(db, cents), cents,
-          m = GraphM, nprobe = 3, Dim)
-        .orderBy(col("src"), col("rn"))
-    }),
-    // NSW beam search for a literal query: fixed entry set (the lowest
-    // GraphEntries ids), GraphHops expansion hops, beam GraphBeam →
-    // top-K. Deterministic end to end, so the
-    // oracle replays build + every hop and the result hash-checks
-    "ann_graph_topk" -> ((s, d) => {
-      val db = emb(s, d)
-      GraphAnn.searchLit(knnGraphCached(s, d), db, Q64, k = K,
-        beam = GraphBeam, hops = GraphHops, nEntry = GraphEntries)
-    }),
-    // recall@k of the beam search against exact brute force over the
-    // held-out query page — the monitoring surface for the graph path
-    // (same shape as ann_ivf_recall)
-    "ann_graph_recall" -> ((s, d) => {
-      val db = emb(s, d)
-      val mq = math.max(1L, (embCount(s, d) + 19) / 20)
-      val q = db.filter(col("vec_id") % mq === 0)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val graph = knnGraphCached(s, d)
-      val approx = GraphAnn.searchJoin(graph, db, q, k = K,
-          beam = GraphBeam, hops = GraphHops, nEntry = GraphEntries, dim = Dim)
-        .select(col("query_id"), col("vec_id"))
-      val exact = KnnJoinPlan.join(q, db, K)
-        .select(col("query_id").as("eq"), col("vec_id").as("ev"))
-      val hits = approx.join(exact,
-          col("query_id") === col("eq") && col("vec_id") === col("ev"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
-      q.select(col("query_id"))
-        .join(hits, Seq("query_id"), "left_outer")
-        .select(col("query_id"),
-          (coalesce(col("n_hits"), lit(0L)) / lit(K.toDouble)).as("recall_at_k"))
-        .orderBy(col("query_id"))
-    }),
-    // end-to-end curation: quality/lang gate → exact dedup → LSH near-dup
-    // clustering → canonical keep. The WHOLE pipeline is oracle-checked —
-    // the DuckDB mirror composes the proven per-stage SQL fragments.
-    "pipeline_curation" -> ((s, d) => {
-      val (curated, _) = graft.pipeline.Curation.curate(par(s, docs(s, d)),
-        withFunnel = false)
-      curated.select(col("doc_id")).orderBy(col("doc_id"))
-    }),
-    // one-row corpus data card: the summary a curation run publishes
-    // next to its output (doc/token/language counts, mean quality,
-    // exact-dup rate) — one flat aggregation; the quality mean sums
-    // 9-decimal-quantized per-row scores in exact decimals so the single
-    // double division is engine-exact
-    "corpus_stats_card" -> ((s, d) => {
-      val dd = par(s, docs(s, d)).withColumn("q",
-        round(TextAnalysis.qualityScore(col("text")), 9).cast(DecimalType(18, 9)))
-      dd.agg(
-          count(lit(1)).as("n_docs"),
-          sum(TextAnalysis.tokenEstimate(col("text"))).as("n_tokens_est"),
-          countDistinct(col("lang")).as("n_langs"),
-          (sum(col("q")).cast("double") / count(lit(1)).cast("double")).as("mean_quality"),
-          countDistinct(md5(col("text"))).as("n_unique_texts"))
-        .withColumn("exact_dup_rate",
-          lit(1.0) - col("n_unique_texts").cast("double") / col("n_docs").cast("double"))
-    }),
-    // the funnel report of the SAME pipeline: per-stage survivor counts
-    // (input → gate → exact dedup → near-dup dedup) — the observability
-    // surface a production curation run ships to its dashboard; the
-    // oracle recomputes every stage from the shared SQL chain
-    "pipeline_funnel_report" -> ((s, d) => {
-      import s.implicits._
-      val (_, funnel) = graft.pipeline.Curation.curate(par(s, docs(s, d)),
-        withFunnel = true)
-      funnel.zipWithIndex
-        .map { case ((stage, n), i) => (i.toLong, stage, n) }
-        .toDF("stage_idx", "stage", "n_rows")
-        .orderBy(col("stage_idx"))
-    }),
-    // GOVERNED-RELEASE funnel (r15): the privacy-gated publication flow a
-    // corpus release runs end-to-end — quality/language gate (map-side)
-    // → exact dedup (one hash shuffle) → k-anonymity SUPPRESSION on the
-    // release quasi-identifiers (source, length bucket; null-safe
-    // anti-join against the tiny violating list) → per-step row counts.
-    // Each count is an independent aggregation job (the Profile.audit
-    // shape); nothing in the chain holds driver state
-    "pipeline_release_funnel" -> ((s, d) => {
-      import graft.operators.{Dedup, Governance}
-      val all = par(s, docs(s, d))
-      val gated = graft.pipeline.Curation.qualityLangGate(all)
-        .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-      val deduped = Dedup.exactDedup(gated)
-      val withQ = deduped
-        .withColumn("cb", floor(col("n_chars") / 50).cast("int"))
-      val released = Governance.kSuppress(withQ, Seq("source", "cb"), k = 5L)
-      // r16 fused head (guide §1.2): steps 1-3 are conditional aggregates
-      // of ONE corpus scan (gate predicate evaluated once; exact-dedup
-      // survivors == countDistinct(md5(text)) over passers — the
-      // CurationSpec pin); only the k-anonymity step still needs its own
-      // branch (its count depends on the suppress anti-join). Previously
-      // four union branches re-scanned the corpus and re-ran the gate.
-      val pass = graft.pipeline.Curation.gatePassPredicate()
-      // two-level aggregation (groupBy dedup key, then totals) instead of
-      // countDistinct: avoids the mixed-distinct Expand; gate runs once/row
-      val head3 = all
-        .select(md5(col("text")).as("__k"), pass.cast("long").as("__p"))
-        .groupBy(col("__k"))
-        .agg(count(lit(1)).as("__c"), sum(col("__p")).as("__ps"))
-        .agg(sum(col("__c")).as("n1"), sum(col("__ps")).as("n2"),
-          sum((col("__ps") > 0).cast("long")).as("n3"))
-        .select(explode(array(
-          struct(lit("1_input").as("step"), col("n1").as("n_rows")),
-          struct(lit("2_quality_lang").as("step"), col("n2").as("n_rows")),
-          struct(lit("3_exact_dedup").as("step"), col("n3").as("n_rows")))).as("r"))
-        .select(col("r.step"), col("r.n_rows"))
-      head3.unionByName(
-          released.agg(count(lit(1)).as("n_rows"))
-            .select(lit("4_k_anon_release").as("step"), col("n_rows")))
-        .orderBy(col("step"))
-    }),
-    // banding recall eval: LSH near-dup pairs vs exact ground truth,
-    // restricted to pairs INCIDENT to a SIZE-TARGETED probe sample (~25
-    // probes at any SF; the r7 fixed `% 20` fraction grew the probe set —
-    // and the probes × corpus brute arm — linearly with the corpus). A
-    // mod subset of PAIRS would split almost every duplicate pair
-    // (endpoints are unrelated ids), while probe-incidence keeps the
-    // truth set intact and the brute side linear: ~25 × |corpus|
-    // distances, never corpus². Precision is 1 by construction
-    // (candidates are jaccard-verified); recall measures what the bands
-    // miss — the accuracy dial of the dedup deploy, sibling of
-    // ann_ivf_recall
-    "dedup_lsh_recall" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      val m = math.max(1L, (docCount(s, d) + 24) / 25) // = 20 at the 500-doc fixture
-      // parCompute: the brute arm below jaccard-verifies |probes|×|corpus|
-      // pairs off this table — width must track the pair count, not the
-      // KB-scale bytes the size-derived par sees
-      val sets = parCompute(s, all)
-        .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sset"))
-      val psets = sets.filter(col("doc_id") % m === 0)
-        .select(col("doc_id").as("pid"), col("sset").as("pset"))
-      val brute = sets.crossJoin(broadcast(psets))
-        .filter(col("doc_id") =!= col("pid"))
-        .filter(Dedup.jaccard(col("sset"), col("pset")) >= 0.5)
-        .select(least(col("doc_id"), col("pid")).as("id_a"),
-          greatest(col("doc_id"), col("pid")).as("id_b"))
-        .distinct()
-        .withColumn("in_brute", lit(1L))
-      val lsh = Dedup.minHashLshNearDupPairs(all, "text", "doc_id",
-          shingleWidth = 3, numHashes = 8, bands = 4, threshold = 0.5,
-          docCountHint = docCount(s, d))
-        .filter(col("id_a") % m === 0 || col("id_b") % m === 0)
-        .select(col("id_a"), col("id_b"), lit(1L).as("in_lsh"))
-      lsh.join(brute, Seq("id_a", "id_b"), "full_outer")
-        .agg(coalesce(sum(col("in_lsh")), lit(0L)).as("n_lsh"),
-          coalesce(sum(col("in_brute")), lit(0L)).as("n_brute"),
-          coalesce(sum(col("in_lsh") * col("in_brute")), lit(0L)).as("n_common"))
-        .select(col("n_lsh"), col("n_brute"), col("n_common"),
-          when(col("n_lsh") > 0,
-            col("n_common").cast("double") / col("n_lsh").cast("double")).as("precision"),
-          when(col("n_brute") > 0,
-            col("n_common").cast("double") / col("n_brute").cast("double")).as("recall"))
-    }),
-    // end-to-end PRETRAINING data prep: quality/language gate →
-    // benchmark decontamination → exact dedup → per-doc token stats. Like
-    // pipeline_curation, the WHOLE composition is oracle-checked — the
-    // DuckDB mirror chains the proven per-stage SQL fragments
-    "pipeline_pretrain" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      val gated = graft.pipeline.Curation.qualityLangGate(all)
-        .select(col("doc_id"), col("text"))
-      val bench = all.filter(col("doc_id") % 50 === 0)
-      val train = gated.filter(col("doc_id") % 50 =!= 0)
-      val flags = graft.operators.Decontam.ngramOverlap(train, bench, n = 4)
-      val clean = train
-        .join(flags.filter(!col("contaminated")).select(col("doc_id")), "doc_id")
-      Dedup.exactDedup(clean)
-        .select(col("doc_id"), TextAnalysis.nWords(col("text")).as("n_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-    // pretrain prep v2 — the round-10 curation stack composed end-to-end:
-    // Gopher rule gate (map-side integer flags, pushed into the scan) →
-    // CCNet perplexity-bucket filter (drop 'tail' under an LM trained on
-    // the %10 slice) → exact dedup → deterministic epoch shuffle. Text
-    // never moves after the gate: the bucket join carries only (doc_id,
-    // digest, n_tokens); dedup is a struct-MIN groupBy on the digest; the
-    // shuffle stage is one hash exchange + per-shard sort. Like
-    // pipeline_pretrain, the WHOLE composition is oracle-checked by
-    // chaining the proven per-stage SQL fragments
-    "pipeline_pretrain_v2" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      val train = all.filter(col("doc_id") % 10 === 0)
-      val gated = all.filter(col("doc_id") % 10 =!= 0 &&
-        TextAnalysis.gopherKeep(col("text")))
-      val buckets = graft.operators.LangModel.perplexityBuckets(train, gated)
-        .filter(col("bucket") =!= "tail")
-        .select(col("doc_id"), col("bucket"))
-      val meta = gated.select(col("doc_id"), md5(col("text")).as("__digest"),
-        TextAnalysis.nWords(col("text")).as("n_tokens"))
-      val canon = buckets.join(meta, "doc_id")
-        .groupBy(col("__digest"))
-        .agg(min(struct(col("doc_id"), col("bucket"), col("n_tokens"))).as("r"))
-        .select(col("r.doc_id").as("doc_id"), col("r.bucket").as("bucket"),
-          col("r.n_tokens").as("n_tokens"))
-      graft.operators.Governance.epochShuffle(canon, col("doc_id"),
-          seed = 7,
-          // count-derived from the INPUT corpus (memoized catalog lookup —
-          // counting `canon` itself would run the whole pipeline twice);
-          // an upper bound of the survivors, which only makes shards
-          // smaller than the target, never a skew cliff
-          nShards = graft.operators.Governance.shardCountFor(docCount(s, d)))
-        .orderBy(col("doc_id"))
-    }),
-    // --- multimodal plumbing (north star): binary payload, REAL decoder
-    // on the id-shifted decode-fixture rows (media_id >= RealDecodeIdMin),
-    // stub contract on corpus rows BY CONSTRUCTION (r16 — the r15 form
-    // attempted the header-only decode on every image row, so the
-    // stub-replay oracle held only because no corpus text payload happened
-    // to start with an image magic; the id gate makes the choice
-    // structural). The corpus is the text-payload media table UNIONed with
-    // the id-shifted real-decode fixture, so the codec genuinely FIRES
-    // inside this gated query: fixture image rows land their REAL decoded
-    // dims (oracle rows carry the known-by-construction dims; checksums/
-    // byte counts derive from the same deterministic payload bytes),
-    // document rows and the junk/audio fixture rows replay the stub
-    // fallback byte-exactly as before.
-    "media_features" -> ((s, d) => {
-      val corpus = Multimodal.mediaFromDocuments(par(s, docs(s, d)))
-      val fx = Multimodal.realDecodeFixture(s)
-        .select((col("media_id") + 1000000000L).as("media_id"),
-          col("kind"), col("payload"))
-      Multimodal.extractFeaturesReal(corpus.unionByName(fx))
-        .toDF().orderBy(col("media_id"))
-    }),
-    // exact media dedup over the BINARY payload column (md5 of raw bytes —
-    // the digest a 100 TB blob store dedups on; portable because md5 of a
-    // UTF-8 payload equals DuckDB's md5 of the source text). The fixture
-    // has no duplicate payloads, so a deterministic slice is re-keyed as
-    // fresh ids — the digest/count/canonical path runs on NON-empty output
-    // (an all-empty hash match proves nothing)
-    "media_dedup_exact" -> ((s, d) => {
-      val base = par(s, docs(s, d))
-      val dups = base.filter(col("doc_id") < 3)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-      Multimodal.dedupExactGroups(
-        Multimodal.mediaFromDocuments(base.unionByName(dups)))
-    }),
-    // REAL image decode through the gate (r12): deterministic solid-color
-    // PNG/BMP/GIF payloads encoded driver-side, decoded by the actual
-    // javax.imageio codec on executors — width/height/mean-luminance are
-    // exact for lossless formats, so the oracle is the expected-value
-    // table and the whole row set hash-checks. Junk bytes and non-image
-    // kinds pin the decoded=0 fallback contract.
-    "media_decode_real" -> ((s, d) =>
-      Multimodal.decodeStats(Multimodal.realDecodeFixture(s))
-        .toDF().orderBy(col("media_id"))),
-    // REAL-decode EMBEDDING retrieval through the gate (r14): lossless
-    // block/gradient rasters → javax.imageio decode on executors →
-    // real-pixel luminance histogram (embedMediaDecoded, dim=8) → exact-L2
-    // top-5 against a literal query histogram — the media→vector→kNN
-    // bridge end-to-end on real pixels. Every histogram mass is dyadic
-    // (k/1024 pixels, k/32 junk bytes), so the FLOAT embedding equals the
-    // oracle's DOUBLE literals bit-for-bit and the ranking hash-checks
-    "media_embed_knn" -> ((s, d) => {
-      val embedded = Multimodal.embedMediaDecoded(
-        Multimodal.embedKnnFixture(s), dim = 8).toDF()
-      embedded.select(col("media_id"), col("kind"),
-          Distances.squaredL2Lit(col("embedding"), MediaQ8).as("dist"))
-        .orderBy(col("dist").asc, col("media_id").asc)
-        .limit(5)
-    }),
-    // video frame-sampling plan: stride-spaced frame indices per video
-    // payload (the fan-out manifest a decode stage consumes; video has no
-    // JDK codec, so these counts ride the documented stub fallback — the
-    // REAL-frame-count arm is media_frame_sample_real below)
-    "media_frame_sample_plan" -> ((s, d) =>
-      Multimodal.frameSamplePlan(
-          Multimodal.extractFeaturesReal(Multimodal.mediaFromDocuments(par(s, docs(s, d)))),
-          stride = 10)
-        .orderBy(col("media_id"), col("frame_idx"))),
-    // REAL multi-frame sampling (r15): animated GIFs — the one multi-frame
-    // format with a JDK codec — encoded driver-side with known frame
-    // counts, frame counts read on executors from the actual container
-    // (ImageReader.getNumImages, header-only, no pixel decoded), then the
-    // same stride plan. Junk bytes pin the stub fallback (1 frame). The
-    // oracle is the fixture's expected-value table
-    "media_frame_sample_real" -> ((s, d) =>
-      Multimodal.frameSamplePlan(
-          // realIdMin = 0: the input is ENTIRELY the decode fixture, so the
-          // real codec fires on every image row (the junk-bytes row still
-          // pins the stub fallback by genuinely failing the header parse)
-          Multimodal.extractFeaturesReal(Multimodal.gifFixture(s), realIdMin = 0L),
-          stride = 2, kinds = Seq("image"))
-        .orderBy(col("media_id"), col("frame_idx"))),
-    // --- streaming-equivalent windowed aggregation (window() function; the
-    // streaming variant with watermark runs in StreamingSpec)
-    "stream_window_agg" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 3).as("v_sum"))
-        .select(unix_timestamp(col("window.start")).as("window_start"),
-          col("event_type"), col("n"), col("v_sum"))
-        .orderBy(col("window_start"), col("event_type"))),
-    // sliding windows (width 2h, slide 1h — every event lands in exactly
-    // two windows); the hopping-window shape streaming dashboards use
-    "stream_sliding_agg" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 3).as("v_sum"))
-        .select(unix_timestamp(col("window.start")).as("window_start"),
-          col("event_type"), col("n"), col("v_sum"))
-        .orderBy(col("window_start"), col("event_type"))),
-    // gap-based sessionization (batch form; the flatMapGroupsWithState
-    // streaming form is proven equal in SessionizeSpec)
-    "sessionize_events" -> ((s, d) =>
-      graft.streaming.Sessionize.batch(Tables.events(s, d), gapMinutes = 30)
-        .orderBy(col("user_id"), col("session_idx"))),
-    // Spark's NATIVE session_window (micro-precision bounds; an event at
-    // exactly prev + gap starts a NEW session — half-open window merge),
-    // pinned against the portable lag+cumsum formulation in the oracle
-    "sessionize_native" -> ((s, d) =>
-      Tables.events(s, d)
-        .withColumn("tus", unix_micros(col("ts")))
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("tus")).as("session_start_us"), max(col("tus")).as("session_last_us"),
-          dsum(col("value"), 3).as("v_sum"))
-        .select(col("user_id"), col("session_start_us"), col("session_last_us"),
-          col("n_events"), col("v_sum"))
-        .orderBy(col("user_id"), col("session_start_us"))),
-    // grid depth pick from row count — the reference's get_tree_depth analog
-    // (tree depth there grows from leaf overflow; here it is derived from
-    // count / targetLeafSize, SURVEY §2.1 #10)
-    "index_tree_depth" -> ((s, d) =>
-      emb(s, d).agg(count(lit(1)).as("n"))
-        .select(col("n"),
-          least(greatest(ceil(log(greatest(floor(col("n") / 50.0), lit(1.0))) / log(lit(4.0))), lit(1.0)), lit(64.0))
-            .cast("int").as("depth"))),
-    // exact cosine near-duplicate pairs over a SIZE-TARGETED sample (~250
-    // rows at any SF): partitioned cell-blocked equi-join with admissible
-    // radius pruning (CosineJoin), recall exactly 1 vs the brute oracle
-    "dedup_cosine_pairs" -> ((s, d) =>
-      CosineJoin.pairsExactAutoK(
-        sampleTarget(s, d, 250)._1.select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding", Dim, tau = 0.25, targetCellSize = 32)
-        .orderBy(col("id_a"), col("id_b"))),
-    // --- round-2 relational widening
-    // TPC-H Q3 shape: selective filters on all three tables reach the scans
-    // (PushedFilters), the small filtered customer side broadcasts, and the
-    // final top-10 plans as TakeOrderedAndProject (no full sort).
-    "join_q3_shipping" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .filter(col("l_shipdate") > lit("1998-01-01").cast("timestamp"))
-        .join(Tables.orders(s, d)
-          .filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate").cast("date").as("orderdate"))
-        .agg(drevenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)),
-    // 3-way star join over the two previously-unused dims (part, supplier)
-    "join_parts_by_brand" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("p_brand"))
-        .agg(drevenue(col("l_extendedprice"), col("l_discount")).as("revenue"),
-          count(lit(1)).as("n"),
-          countDistinct(col("s_nationkey")).as("n_supp_nations"))
-        .orderBy(col("p_brand"))),
-    // salted shuffle join (skew pattern): bit-exact equal to the plain
-    // join — the oracle IS the plain form
-    "join_salted_events_customers" -> ((s, d) =>
-      SaltedJoin.join(Tables.events(s, d), Tables.customer(s, d),
-          "user_id", "c_custkey", salt = col("event_id"), saltBuckets = 8)
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 3).as("v_sum"))
-        .orderBy(col("c_mktsegment"))),
-    // explicit grouping-sets lattice (beyond rollup/cube): the two 1-dim
-    // marginals plus the grand total, no (rf, ls) cross cells
-    "agg_grouping_sets" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .groupingSets(
-          Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq()),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-        .select(
-          coalesce(col("l_returnflag"), lit("(all)")).as("rf"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("ls"),
-          col("sum_qty"), col("n"))
-        .orderBy(col("rf"), col("ls"))),
-    // exact interpolated percentiles (sort-based; the sketch variant is
-    // agg_sketches) — IEEE-exact: both engines compute p*(n-1) and
-    // interpolate in double
-    // EXACT global order statistics WITHOUT a global sort or a buffering
-    // percentile aggregate: recursive bucket-count bisection (OrderStat) —
-    // one codegen'd counting pass per level, the driver holds 1024 longs,
-    // and only the final <= 4096-row slice is collect-sorted. The answer
-    // is an ELEMENT of the column (no arithmetic), so the oracle compare
-    // is bit-trivial; ranks are the lower median and ceil(0.99 n)
-    "agg_exact_median_bisect" -> ((s, d) => {
-      import s.implicits._
-      val li = Tables.lineitem(s, d)
-      val n = li.count()
-      val med = graft.operators.OrderStat.kthSmallest(
-        li, col("l_extendedprice"), (n + 1) / 2, collectThreshold = 4096).get
-      val p99 = graft.operators.OrderStat.kthSmallest(
-        li, col("l_extendedprice"), (99L * n + 99L) / 100L, collectThreshold = 4096).get
-      Seq((n, med, p99)).toDF("n_rows", "median", "p99")
-    }),
-    // the WEIGHTED sibling: volume-weighted median price — smallest price
-    // whose cumulative quantity reaches half the total. Integer weight
-    // sums keep every cumulative exact across engines and partitionings;
-    // same bisection passes, same element-of-the-column answer
-    "agg_weighted_median_price" -> ((s, d) => {
-      import s.implicits._
-      val li = Tables.lineitem(s, d)
-      // floor() before the integer cast: Spark's cast('long') truncates
-      // while DuckDB's CAST(.. AS BIGINT) rounds half-even — floor makes
-      // both engines agree even for fractional quantities
-      val w = li.filter(col("l_quantity") > 0)
-        .agg(sum(floor(col("l_quantity")).cast("long"))).head().getLong(0)
-      val wm = graft.operators.OrderStat.weightedRankSmallest(
-        li, col("l_extendedprice"), floor(col("l_quantity")).cast("long"),
-        (w + 1) / 2, collectThreshold = 4096).get
-      Seq((w, wm)).toDF("w_total", "wmedian")
-    }),
-    "agg_percentiles" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"))
-        .agg(
-          percentile(col("l_quantity"), lit(0.5)).as("p50_qty"),
-          percentile(col("l_quantity"), lit(0.9)).as("p90_qty"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"))),
-    // period-over-period: monthly revenue with the same-month-last-year
-    // comparison (lag 12 over the aggregated series — the window runs on
-    // |months| rows, not the fact table)
-    "agg_yoy_revenue" -> ((s, d) => {
-      val monthly = Tables.orders(s, d)
-        .groupBy((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-          .cast("long").as("ym"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("tot"))
-      monthly
-        .withColumn("prev_year_tot",
-          lag(col("tot"), 12).over(Window.orderBy(col("ym"))))
-        .select(col("ym"), col("tot").cast("double").as("total"),
-          col("prev_year_tot").cast("double").as("prev_year_total"),
-          (col("tot").cast("double") / col("prev_year_tot").cast("double") - 1.0)
-            .as("yoy_change"))
-        .orderBy(col("ym"))
-    }),
-    // percent-of-total (ratio-to-report): per-nation revenue share via an
-    // UNPARTITIONED window over the aggregated rollup — the window input
-    // is |nations| rows, so the single-partition frame is harmless
-    "window_revenue_share" -> ((s, d) => {
-      val byNation = Tables.orders(s, d)
-        .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("tot"))
-      byNation
-        .withColumn("grand", sum(col("tot")).over(Window.partitionBy()))
-        .select(col("n_name"), col("tot").cast("double").as("revenue"),
-          (col("tot").cast("double") / col("grand").cast("double")).as("share"))
-        .orderBy(col("n_name"))
-    }),
-    // winsorized aggregation: clamp to the [p05, p95] percentile band
-    // before summing — the outlier-robust revenue rollup. Bounds are a
-    // scalar agg broadcast to the clamp pass; they round to whole dollars
-    // (floor/ceil — exact in both engines) so the decimal-exact sum stays
-    // engine-portable even though interpolated percentiles are not
-    "agg_winsorized_monthly" -> ((s, d) => {
-      val bounds = Tables.orders(s, d).agg(
-        floor(percentile(col("o_totalprice"), lit(0.05))).as("lo"),
-        ceil(percentile(col("o_totalprice"), lit(0.95))).as("hi"))
-      Tables.orders(s, d).crossJoin(broadcast(bounds))
-        .select(col("o_orderdate"),
-          greatest(col("lo"), least(col("hi"), col("o_totalprice"))).as("wp"))
-        .groupBy((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-          .cast("long").as("ym"))
-        .agg(count(lit(1)).as("n"), dsum(col("wp")).as("total_winsorized"))
-        .orderBy(col("ym"))
-    }),
-    // fixed-width histogram: one scan, integer bucket arithmetic
-    "agg_histogram_prices" -> ((s, d) =>
-      Tables.orders(s, d)
-        .groupBy(least(lit(9L), floor(col("o_totalprice") / lit(50000.0))).cast("int").as("bucket"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-        .orderBy(col("bucket"))),
-    // conditional aggregation (TPC-H Q14 shape): promo revenue share per
-    // ship month — ratio of two exact decimal sums, one double division
-    "agg_promo_revenue_share" -> ((s, d) => {
-      val revDec = col("l_extendedprice").cast(DecimalType(18, 2)) *
-        (lit(1.0).cast(DecimalType(3, 2)) - col("l_discount").cast(DecimalType(18, 2)))
-      Tables.lineitem(s, d)
-        .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-        .groupBy(date_trunc("month", col("l_shipdate")).cast("date").as("month"))
-        .agg(
-          sum(when(col("p_type") === "PROMO", revDec).otherwise(lit(0).cast(DecimalType(18, 4)))).as("promo_dec"),
-          sum(revDec).as("total_dec"),
-          count(lit(1)).as("n"))
-        .select(col("month"),
-          (col("promo_dec").cast("double") / col("total_dec").cast("double") * lit(100.0)).as("promo_share"),
-          col("n"))
-        .orderBy(col("month"))
-    }),
-    // second-moment statistics from EXACT decimal power sums (n, Σx, Σy,
-    // Σx², Σy², Σxy): stddev and correlation assembled in double at the
-    // end, rounded(6) identically in both engines — a single map-side-
-    // combinable aggregation, no second pass over the data
-    "agg_corr_stats" -> ((s, d) => {
-      val x = col("l_quantity").cast(DecimalType(18, 2))
-      val y = col("l_extendedprice").cast(DecimalType(18, 2))
-      Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          sum(x).as("sx"), sum(y).as("sy"),
-          sum(x * x).as("sxx"), sum(y * y).as("syy"), sum(x * y).as("sxy"))
-        .select(col("l_returnflag"), col("n"),
-          round(sqrt((col("n") * col("syy") - col("sy") * col("sy")).cast("double") /
-            (col("n") * (col("n") - 1)).cast("double")), 6).as("stddev_price"),
-          round((col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
-            sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double") *
-              (col("n") * col("syy") - col("sy") * col("sy")).cast("double")), 6).as("corr_qty_price"))
-        .orderBy(col("l_returnflag"))
-    }),
-    // rolling 3-order revenue per customer (frame-bounded window; decimal
-    // accumulation keeps the sums order- and engine-exact)
-    "window_rolling_revenue" -> ((s, d) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-        .rowsBetween(-2, Window.currentRow)
-      Tables.orders(s, d)
-        .select(col("o_custkey"), col("o_orderkey"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2))).over(w)
-            .cast("double").as("roll_sum3"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
-    // ntile quantile bucketing per month (integer window arithmetic —
-    // engine-exact; partitioned so no global sort at scale)
-    "window_ntile_price_quartiles" -> ((s, d) => {
-      val w = Window.partitionBy(col("month"))
-        .orderBy(col("o_totalprice").asc, col("o_orderkey").asc)
-      Tables.orders(s, d)
-        .withColumn("month", date_trunc("month", col("o_orderdate")).cast("date"))
-        .withColumn("quartile", ntile(4).over(w))
-        .groupBy(col("month"), col("quartile"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-        .orderBy(col("month"), col("quartile"))
-    }),
-    // deterministic stratified sample: ≤20 rows per stratum by md5 order
-    // (portable, rerun-stable — no rand())
-    "sample_stratified_events" -> ((s, d) => {
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(Dedup.md5Int32(col("event_id").cast("string")).asc, col("event_id").asc)
-      Tables.events(s, d)
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 20)
-        .select(col("event_type"), col("rk"), col("event_id"))
-        .orderBy(col("event_type"), col("rk"))
-    }),
-    // overlapping word-window chunking (chunk → embed → index is the
-    // standard long-doc pipeline; stride < width gives overlap)
-    "text_chunks" -> ((s, d) => {
-      val width = 50
-      val stride = 25
-      val ws = docs(s, d).filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-      ws.select(col("doc_id"),
-          posexplode(transform(
-            sequence(lit(0), greatest(ceil((size(col("w")) - lit(width)) / lit(stride.toDouble)), lit(0)).cast("int")),
-            i => concat_ws(" ", slice(col("w"), i * stride + 1, lit(width))))))
-        .select(col("doc_id"), col("pos").cast("int").as("chunk_idx"),
-          md5(col("col")).as("chunk_md5"))
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-    // long-document retrieval via LATE CHUNKING: BM25 scored at CHUNK
-    // granularity (50-word windows, stride 25 — doc-level BM25 dilutes a
-    // locally-relevant passage inside a long document), top-50 chunks
-    // retrieved, then collapsed to documents by max chunk score — the
-    // retrieve-chunks/dedup-by-doc serving shape of a passage-retrieval
-    // deploy. Reuses the proven bm25TopK kernel with the chunk set as its
-    // corpus: stats/df reduce to broadcast scalars over chunks, one
-    // codegen'd scoring pass, distributed top-k, |top| rows to the doc agg
-    "text_chunk_bm25_doc" -> ((s, d) => {
-      val width = 50
-      val stride = 25
-      val ws = par(s, docs(s, d)).select(col("doc_id"), split(col("text"), " ").as("w"))
-      val chunks = ws.select(col("doc_id"),
-          posexplode(transform(
-            sequence(lit(0), greatest(ceil((size(col("w")) - lit(width)) / lit(stride.toDouble)), lit(0)).cast("int")),
-            i => concat_ws(" ", slice(col("w"), i * stride + 1, lit(width))))))
-        .select((col("doc_id") * 1000 + col("pos")).as("chunk_id"),
-          col("col").as("text"))
-      TextAnalysis.bm25TopK(chunks, Seq("spark", "table", "query"), 50,
-          idCol = "chunk_id")
-        .withColumn("doc_id", floor(col("chunk_id") / 1000).cast(LongType))
-        .groupBy(col("doc_id"))
-        .agg(max(col("bm25")).as("doc_bm25"),
-          count(lit(1)).cast(LongType).as("n_chunks_hit"))
-        .orderBy(col("doc_bm25").desc, col("doc_id").asc)
-        .limit(K)
-    }),
-    // digit redaction (PII-scrub shape): every digit run → '#'; md5 of the
-    // scrubbed text keeps the compare compact
-    "text_redact_digits" -> ((s, d) =>
-      par(s, docs(s, d)).select(col("doc_id"),
-          md5(regexp_replace(col("text"), "[0-9]+", "#")).as("redacted_md5"))
-        .orderBy(col("doc_id"))),
-    // corpus-level document frequency: top 20 non-stopword terms
-    "text_top_terms" -> ((s, d) =>
-      par(s, docs(s, d))
-        .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("term"))
-        .filter(col("term") =!= "" && !col("term").isin(Stopwords: _*))
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .orderBy(col("df").desc, col("term").asc)
-        .limit(20)),
-    // exact heavy hitters (per-partition Misra-Gries superset + exact
-    // recount — groupBy only ever sees the tiny candidate set)
-    "text_heavy_terms" -> ((s, d) => {
-      val terms = par(s, docs(s, d))
-        .select(explode(split(col("text"), " ")).as("term"))
-        .filter(col("term") =!= "")
-      graft.operators.Freq.heavyHitters(terms, "term", minShare = 0.005)
-        .withColumnRenamed("key", "term")
-        .orderBy(col("term"))
-    }),
-    // count-min sketch (Freq.countMinSketch): d×w cell counts from the
-    // md5 hash family — the one sketch that is fully SQL-replayable, so
-    // unlike HLL/KLL (rows-only agg_sketches) the whole build+lookup is
-    // hash-checked: top-10 terms' exact counts vs their CMS estimates
-    // (est >= exact always; equality iff no cell collision)
-    "text_countmin_counts" -> ((s, d) => {
-      val toks = par(s, docs(s, d))
-        .select(explode(split(col("text"), " ")).as("term"))
-        .filter(col("term") =!= "")
-      val sketch = graft.operators.Freq.countMinSketch(toks, "term", depth = 4, width = 512)
-      val probes = toks.groupBy(col("term")).agg(count(lit(1)).as("exact_n"))
-        .orderBy(col("exact_n").desc, col("term").asc).limit(10)
-      graft.operators.Freq.countMinLookup(sketch, probes, "term", depth = 4, width = 512)
-        .orderBy(col("term"))
-    }),
-    // per-doc top TF-IDF term; scored as tf/df (idf-monotone per doc and
-    // IEEE-division-exact in both engines — no transcendental ln drift)
-    "text_tfidf_top_term" -> ((s, d) => {
-      val terms = docs(s, d).filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        .filter(col("term") =!= "")
-      val tf = terms.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy((col("tf").cast("double") / col("df")).desc, col("term").asc)
-      tf.join(df_, "term")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("doc_id"), col("term"), col("tf"), col("df"))
-        .orderBy(col("doc_id"))
-    }),
-    // left outer join: every customer appears, orderless customers with
-    // zero counts (coalesce makes the aggregate null-free in both engines)
-    "join_left_outer_customer_orders" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy(col("c_custkey"), col("c_mktsegment"))
-        .agg(count(col("o_orderkey")).as("n_orders"),
-          coalesce(dsum(col("o_totalprice")), lit(0.0)).as("sum_price"))
-        .orderBy(col("c_custkey"))),
-    // full outer join over two aggregated event slices: keys exclusive to
-    // either side survive with nulls coalesced to sentinels
-    "join_full_outer_daily_types" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(unix_timestamp(date_trunc("day", col("ts"))).as("day_c"))
-        .agg(count(lit(1)).as("n_clicks"))
-      val purchases = ev.filter(col("event_type") === "purchase" && col("value") > 50.0)
-        .groupBy(unix_timestamp(date_trunc("day", col("ts"))).as("day_p"))
-        .agg(count(lit(1)).as("n_purchases"))
-      clicks.join(purchases, col("day_c") === col("day_p"), "full_outer")
-        .select(
-          coalesce(col("day_c"), col("day_p")).as("day_epoch"),
-          coalesce(col("n_clicks"), lit(0L)).as("n_clicks"),
-          coalesce(col("n_purchases"), lit(0L)).as("n_purchases"))
-        .orderBy(col("day_epoch"))
-    }),
-    // keyed interval join (batch form of the stream-stream join; the
-    // watermarked streaming form is proven equivalent in StreamJoinSpec).
-    // Timestamps floored to epoch seconds so both engines band identically.
-    "interval_join_click_purchase" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          timestamp_seconds(col("ts").cast("long")).as("t_click"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          timestamp_seconds(col("ts").cast("long")).as("t_purchase"))
-      graft.streaming.StreamJoin.batch(clicks, purchases,
-          "user_id", "p_user", "t_click", "t_purchase", windowSec = 1800)
-        .select(col("click_id"), col("purchase_id"), col("user_id"),
-          (col("t_purchase").cast("long") - col("t_click").cast("long")).as("gap_s"))
-        .orderBy(col("click_id"), col("purchase_id"))
-    }),
-    // --- round-3: subquery shapes (scalar, correlated, EXISTS)
-    // uncorrelated scalar subquery: orders above the global mean price.
-    // Exact threshold algebra: price > sum/n ⇔ price·n > sum, kept in
-    // decimal so no double-division drift between engines. The single-row
-    // aggregate broadcasts (scalar subqueries plan the same way).
-    "subquery_above_avg_orders" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-      val tot = o.agg(
-        sum(col("o_totalprice").cast(DecimalType(12, 2))).as("tot_sum"),
-        count(lit(1)).as("tot_n"))
-      o.crossJoin(broadcast(tot))
-        .filter(col("o_totalprice").cast(DecimalType(12, 2)) * col("tot_n") > col("tot_sum"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_above"), dsum(col("o_totalprice")).as("sum_price"))
-        .orderBy(col("o_orderpriority"))
-    }),
-    // correlated scalar subquery (TPC-H Q2 shape): each customer's
-    // max-price order(s), decorrelated into a grouped self-join — the
-    // rewrite Catalyst itself applies to the SQL form
-    "subquery_max_order_per_customer" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-      val mx = o.groupBy(col("o_custkey").as("mk"))
-        .agg(max(col("o_totalprice")).as("max_price"))
-      o.join(mx, col("o_custkey") === col("mk") && col("o_totalprice") === col("max_price"))
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
-    // EXISTS subquery = left-semi join (the filter pushes into the
-    // orders scan before the join)
-    "subquery_exists_big_order" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d).filter(col("o_totalprice") > 300000.0),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))),
-    // --- round-3: training-data quality signals
-    "text_repetition" -> ((s, d) =>
-      TextAnalysis.repetitionSignals(par(s, docs(s, d))).orderBy(col("doc_id"))),
-    // language-ID evaluation crosstab: declared lang × heuristic prediction
-    "text_lang_confusion" -> ((s, d) =>
-      par(s, docs(s, d))
-        .groupBy(col("lang"), TextAnalysis.langIdHeuristic(col("text")).as("lang_pred"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"), col("lang_pred"))),
-    // SUPERVISED classifier training (operators/NaiveBayes): multinomial
-    // NB fit on the even-id half (two flat aggregations — the closed-form
-    // MLE, no iterations), scored on the odd-id half; ln terms quantized
-    // to DECIMAL(18,9) so the argmax replays bit-for-bit in the oracle
-    "text_nb_confusion" -> ((s, d) => {
-      val dd = docs(s, d)
-      graft.operators.NaiveBayes.confusion(
-          par(s, dd.filter(col("doc_id") % 2 === 0)),
-          dd.filter(col("doc_id") % 2 === 1))
-        .orderBy(col("label_true"), col("predicted"))
-    }),
-    // --- round-3: window widening (LOCF fill, rank ratios, lag deltas)
-    // last-observation-carried-forward: every event annotated with the
-    // user's most recent purchase value (running last_value IGNORE NULLS —
-    // the same kernel as the as-of join, one shuffle on user_id)
-    "window_locf_last_purchase" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("tse").asc, col("event_id").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, d)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("ts").cast("long").as("tse"), col("value"))
-        .withColumn("last_purchase_value",
-          last(when(col("event_type") === "purchase", col("value")), ignoreNulls = true).over(w))
-        .select(col("event_id"), col("user_id"), col("event_type"), col("last_purchase_value"))
-        .orderBy(col("event_id"))
-    }),
-    // percent_rank + cume_dist: integer-ratio window functions (exact IEEE
-    // division in both engines); unique (price, orderkey) order → no peers
-    "window_percent_rank_orders" -> ((s, d) => {
-      val w = Window.partitionBy(col("month"))
-        .orderBy(col("o_totalprice").asc, col("o_orderkey").asc)
-      Tables.orders(s, d)
-        .withColumn("month", date_trunc("month", col("o_orderdate")).cast("date"))
-        .select(col("month"), col("o_orderkey"),
-          percent_rank().over(w).as("pct_rank"),
-          cume_dist().over(w).as("cume"))
-        .orderBy(col("month"), col("o_orderkey"))
-    }),
-    // lag delta: seconds since the user's previous event (integer-exact)
-    "window_lag_gap" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("tse").asc, col("event_id").asc)
-      Tables.events(s, d)
-        .select(col("event_id"), col("user_id"), col("ts").cast("long").as("tse"))
-        .withColumn("gap_s", col("tse") - lag(col("tse"), 1).over(w))
-        .select(col("event_id"), col("user_id"), col("gap_s"))
-        .orderBy(col("event_id"))
-    }),
-    // --- round-3: product-analytics funnel (staged conversion): users with
-    // a view, a click strictly after their first view, a purchase strictly
-    // after that click. Three key-local aggregations (same user_id shuffle
-    // partitioning reused across stages); integer counts — exact.
-    "events_funnel" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("event_type"), col("ts").cast("long").as("tse"))
-      val tv = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("tse")).as("tv"))
-      val tc = ev.join(tv, Seq("user_id"))
-        .filter(col("event_type") === "click" && col("tse") > col("tv"))
-        .groupBy(col("user_id")).agg(min(col("tse")).as("tc"))
-      val tp = ev.join(tc, Seq("user_id"))
-        .filter(col("event_type") === "purchase" && col("tse") > col("tc"))
-        .groupBy(col("user_id")).agg(min(col("tse")).as("tp"))
-      tv.agg(count(lit(1)).as("n_view"))
-        .crossJoin(tc.agg(count(lit(1)).as("n_click_after_view")))
-        .crossJoin(tp.agg(count(lit(1)).as("n_purchase_after_click")))
-    }),
-    // join-key skew diagnostic (the decision statistic BEFORE salting or
-    // AQE skew splitting): per-key frequency distribution of the fact
-    // table's join key collapsed to (n_keys, max, share of the hottest
-    // key, p50/p99 frequency) — if p99/p50 explodes or top1_share is
-    // material, the plain hash join hot-spots one reducer. The key
-    // histogram is |keys| rows; percentiles run on IT, not the fact table
-    "profile_skew_keys" -> ((s, d) => {
-      val freq = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey")).agg(count(lit(1)).as("f"))
-      freq.agg(
-          count(lit(1)).as("n_keys"),
-          sum(col("f")).as("n_rows"),
-          max(col("f")).as("max_f"),
-          percentile(col("f"), lit(0.5)).as("p50_f"),
-          percentile(col("f"), lit(0.99)).as("p99_f"))
-        .select(col("n_keys"), col("n_rows"), col("max_f"),
-          round(col("max_f").cast("double") / col("n_rows").cast("double"), 9)
-            .as("top1_share"),
-          col("p50_f"), col("p99_f"),
-          round(col("p99_f") / col("p50_f"), 6).as("p99_over_p50"))
-    }),
-    // corpus-diversity estimate: mean pairwise cosine similarity is an
-    // O(n²) statistic — at corpus scale it is ESTIMATED from the cross
-    // product of two small deterministic md5 subsets (disjoint draws, so
-    // pairs are i.i.d.-ish without sampling the quadratic space), with a
-    // 95% CI from the sample variance. Cosines 9-decimal-quantized into
-    // exact decimal power sums; estimator math in identical IEEE doubles
-    "vec_pairwise_sim_estimate" -> ((s, d) => {
-      // count-derived hash modulus: ~25 rows per arm (= the historical
-      // % 20 at the 500-row fixture) at ANY corpus size — a fixed 1/20
-      // hash slice made the cross product grow n²/400
-      val mh = math.max(2L, (embCount(s, d) + 24) / 25)
-      val h = pmod(Dedup.md5Int32(col("vec_id").cast("string")), lit(mh))
-      val a = emb(s, d).filter(h === 0).select(col("vec_id").as("id_a"), col("embedding").as("va"))
-      val b = emb(s, d).filter(h === 1).select(col("vec_id").as("id_b"), col("embedding").as("vb"))
-      val cs = round(Distances.cosineSimCols(col("va"), col("vb"), Dim), 9)
-        .cast(DecimalType(18, 9))
-      val g = a.crossJoin(b).select(cs.as("c"))
-        .agg(count(lit(1)).as("n_pairs"), sum(col("c")).as("sc"),
-          sum(col("c") * col("c")).as("scc"))
-      val nD = col("n_pairs").cast("double")
-      val mean = col("sc").cast("double") / nD
-      val varS = (nD * col("scc").cast("double") -
-        col("sc").cast("double") * col("sc").cast("double")) / (nD * (nD - 1.0))
-      val se = sqrt(varS / nD)
-      g.select(col("n_pairs"),
-        round(mean, 6).as("mean_cos"),
-        round(sqrt(varS), 6).as("std_cos"),
-        round(mean - lit(1.96) * se, 6).as("ci_low"),
-        round(mean + lit(1.96) * se, 6).as("ci_high"))
-    }),
-    // trailing-7-day distinct active users per day (the rolling-MAU
-    // shape): DISTINCT over a sliding window is not frame-expressible —
-    // the scalable exact form dedups to (day, user) pairs once, CASTS
-    // each pair to the 7 target days it contributes to (a bounded
-    // explode), and distinct-counts per target day. |active-pairs|×7
-    // rows, all key-local; no per-day rescans of the event log
-    "events_rolling_active_users" -> ((s, d) => {
-      val pairs = Tables.events(s, d)
-        .select(datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
-          .cast(LongType).as("eday"), col("user_id"))
-        .distinct()
-      val bounds = pairs.agg(min(col("eday")).as("min_day"), max(col("eday")).as("max_day"))
-      pairs
-        .select(explode(sequence(col("eday"), col("eday") + 6)).as("target_day"),
-          col("user_id"))
-        .crossJoin(broadcast(bounds))
-        .filter(col("target_day") <= col("max_day"))
-        .groupBy(col("target_day"))
-        .agg(count_distinct(col("user_id")).as("active_7d"))
-        .withColumn("day",
-          date_add(lit("1970-01-01").cast("date"), col("target_day").cast("int")))
-        .orderBy(col("target_day"))
-    }),
-    // approximate query processing: estimate total revenue from the
-    // deterministic 10% md5 sample with a 95% CI, next to the exact
-    // answer — the estimator + error-bar math an AQP dashboard shows
-    // while the full scan runs. Sample sums are exact decimals; the
-    // Horvitz-Thompson scale-up, sample variance, and CI assemble in
-    // double as the same IEEE tree in both engines
-    "agg_sample_estimate_revenue" -> ((s, d) => {
-      val rev = col("o_totalprice").cast(DecimalType(18, 2))
-      val inSample = pmod(Dedup.md5Int32(col("o_orderkey").cast("string")), lit(10L)) === 0
-      val g = Tables.orders(s, d).agg(
-        count(lit(1)).as("n"),
-        sum(rev).as("true_dec"),
-        sum(when(inSample, lit(1L))).as("n_s"),
-        sum(when(inSample, rev)).as("s_dec"),
-        sum(when(inSample, rev * rev)).as("ss_dec"))
-      val nD = col("n").cast("double"); val nsD = col("n_s").cast("double")
-      val mean = col("s_dec").cast("double") / nsD
-      val est = mean * nD
-      val varS = (nsD * col("ss_dec").cast("double") -
-        col("s_dec").cast("double") * col("s_dec").cast("double")) / (nsD * (nsD - 1.0))
-      val se = sqrt(varS / nsD) * nD
-      g.select(col("n"), col("n_s"),
-        col("true_dec").cast("double").as("true_revenue"),
-        round(est, 2).as("est_revenue"),
-        round((est - col("true_dec").cast("double")) / col("true_dec").cast("double") * 100.0, 4)
-          .as("rel_err_pct"),
-        round(est - lit(1.96) * se, 2).as("ci_low"),
-        round(est + lit(1.96) * se, 2).as("ci_high"))
-    }),
-    // quantile normalization across sources (batch-effect correction):
-    // each doc's quality is replaced by the POOLED distribution's value
-    // at the doc's within-SOURCE percentile — sources with inflated or
-    // deflated score scales become comparable in actual pooled units
-    // (zscore assumes a shape, percentile stops at ranks; this rebuilds
-    // values). Histogram collapse + two broadcast range joins into the
-    // pooled [cum_start, cum_end) rank ranges; no corpus sort
-    "text_quality_qnorm" -> ((s, d) => {
-      val q4 = round(TextAnalysis.qualityScore(col("text")), 4)
-        .cast(DecimalType(9, 4))
-      graft.operators.Governance.quantileNormalize(
-          par(s, docs(s, d)).select(col("doc_id"), col("source"), col("text")),
-          "source", q4)
-        .filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), col("source"),
-          col("score_q").cast("double").as("quality"), col("pctl"), col("qnorm"))
-        .orderBy(col("doc_id"))
-    }),
-    // frequent term-pair mining (market-basket level 2, A-PRIORI pruned):
-    // only terms that are frequent ALONE (df ≥ support, the a-priori
-    // bound) enter the per-doc pair generation, so the doc×token² blowup
-    // is capped by the frequent vocabulary, not the raw one; stopwords
-    // excluded so the pairs are informative. PMI ranks by lift over the
-    // token stream — this is its SUPPORT-count sibling, the co-occurrence
-    // dictionary a phrase detector thresholds
-    "text_frequent_pairs" -> ((s, d) => {
-      val minSupport = 25
-      val toks = par(s, docs(s, d))
-        .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
-        .filter(col("w") =!= "" && !col("w").isInCollection(Stopwords))
-      val freq = toks.groupBy(col("w")).agg(count(lit(1)).as("df"))
-        .filter(col("df") >= minSupport)
-      val ft = toks.join(broadcast(freq.select(col("w"))), "w")
-      ft.as("a").join(ft.as("b"),
-          col("a.doc_id") === col("b.doc_id") && col("a.w") < col("b.w"))
-        .groupBy(col("a.w").as("w1"), col("b.w").as("w2"))
-        .agg(count(lit(1)).as("support"))
-        .filter(col("support") >= minSupport)
-        .orderBy(col("support").desc, col("w1"), col("w2"))
-        .limit(30)
-    }),
-    // CUSUM changepoint statistic over the daily event series: the
-    // classic monitoring fold c_t = max(0, c_{t-1} + (x_t − mean)) is an
-    // inherently SEQUENTIAL recursion no window expresses — it runs as a
-    // left fold over the |days|-sized aggregated series (Spark `aggregate`
-    // ≡ DuckDB `list_reduce`, the BPE fold-replay contract), with a
-    // two-slot accumulator carrying (cusum, running max). The corpus
-    // collapses to |days| rows first; the fold never sees raw events
-    "events_cusum_daily" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n"))
-      daily
-        .agg(collect_list(struct(col("day"), col("n"))).as("arr"),
-          sum(col("n")).as("tot"), count(lit(1)).as("n_days"))
-        .withColumn("mean_daily",
-          round(col("tot").cast("double") / col("n_days").cast("double"), 6))
-        .select(col("n_days"), col("mean_daily"),
-          round(element_at(aggregate(
-            transform(array_sort(col("arr")),
-              e => e.getField("n").cast("double") - col("mean_daily")),
-            array(lit(0.0), lit(0.0)),
-            (acc, x) => {
-              val c = greatest(lit(0.0), element_at(acc, 1) + x)
-              array(c, greatest(element_at(acc, 2), c))
-            }), 2), 6).as("max_cusum"))
-    }),
-    // funnel step latency: exact p50/p90 seconds between the funnel's
-    // first qualifying events (view→click, click→purchase) — the
-    // conversion-TIME report next to events_funnel's conversion-COUNT
-    // report. Same first-qualifying-step chain (three key-local
-    // aggregations), deltas percentiled with the proven exact
-    // interpolated kernel; one row out
-    "events_funnel_latency" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("event_type"), col("ts").cast("long").as("tse"))
-      val tv = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("tse")).as("tv"))
-      val tc = ev.join(tv, Seq("user_id"))
-        .filter(col("event_type") === "click" && col("tse") > col("tv"))
-        .groupBy(col("user_id")).agg(min(col("tse")).as("tc"))
-      val tp = ev.join(tc, Seq("user_id"))
-        .filter(col("event_type") === "purchase" && col("tse") > col("tc"))
-        .groupBy(col("user_id")).agg(min(col("tse")).as("tp"))
-      val vc = tc.join(tv, Seq("user_id"))
-        .select((col("tc") - col("tv")).as("dsec"))
-        .agg(count(lit(1)).as("n_vc"),
-          percentile(col("dsec"), lit(0.5)).as("p50_view_click"),
-          percentile(col("dsec"), lit(0.9)).as("p90_view_click"))
-      val cp = tp.join(tc, Seq("user_id"))
-        .select((col("tp") - col("tc")).as("dsec"))
-        .agg(count(lit(1)).as("n_cp"),
-          percentile(col("dsec"), lit(0.5)).as("p50_click_purchase"),
-          percentile(col("dsec"), lit(0.9)).as("p90_click_purchase"))
-      vc.crossJoin(cp)
-    }),
-    // vector-norm extremes per label: min/max are order-independent double
-    // aggregates (exact cross-engine, unlike double sums)
-    "vec_norm_extremes" -> ((s, d) =>
-      emb(s, d)
-        .select(col("label"),
-          sqrt(Distances.squaredL2Lit(col("embedding"),
-            Array.fill(Dim)(0.0))).as("nrm"))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n"), min(col("nrm")).as("min_norm"), max(col("nrm")).as("max_norm"))
-        .orderBy(col("label"))),
-    // --- round-3/6/7: semantic dedup end-to-end, the SemDeDup shape
-    // (Abbas et al. 2023): deterministic k-means-style cell assignment,
-    // cosine verification ONLY within a cell, connected components →
-    // canonical id per cluster. Pair generation is an equi-join on
-    // ivf_cell — per-cell quadratic, never a corpus cross product. r7:
-    // the codebook SCALES with the corpus — k = max(8, ⌈n/64⌉) seeded
-    // stratified centroids (per id-stratum minimum — RNG-free, replayed
-    // by the oracle's arg_min), so per-cell populations stay ~64 at ANY
-    // data size (the r6 fixed-8-centroid form grew cells O(n/8), pairs
-    // O((n/8)²)); threshold raised 0.1 → 0.3 (non-vacuous; 0.25 left a giant component whose recursive-CTE oracle was quadratic in component size)
-    "dedup_semantic_clusters" -> ((s, d) => {
-      val n = embCount(s, d)
-      val k = math.max(8L, (n + 63) / 64)
-      // r10: TWO-LEVEL codebook (kc ≈ √k coarse × kf fine, both stratified
-      // min-md5 seeds — RNG-free, oracle-replayable) + hierarchical
-      // assignment (Ann.assignTwoLevel, probes=2). The r7 flat form ran
-      // the O(k·dim) argmin per row — O(n²/64·dim) corpus compute once
-      // k = n/64 scales with the data; the two-level pass is
-      // O((kc + 2·kf)·dim) ≈ O(√k·dim) per row (113 s → 33 s at 1M,
-      // SCALE_NOTES). ANY deterministic cell partition is a valid
-      // SemDeDup blocking, so the within-cell verify + connected
-      // components below are unchanged.
-      val kc = math.ceil(math.sqrt(k.toDouble)).toInt
-      val kf = ((k + kc - 1) / kc).toInt
-      val (coarse, fine) = Ann.twoLevelCodebook(emb(s, d), kc, kf)
-      val ve = Ann.assignTwoLevel(emb(s, d), coarse, fine, probes = 2)
-        .select(col("vec_id"), col("embedding"), col("ivf_cell"))
-      val pairs = ve.as("a").join(ve.as("b"),
-          col("a.ivf_cell") === col("b.ivf_cell") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-          Distances.cosineSimCols(col("a.embedding"), col("b.embedding"), Dim).as("cos_sim"))
-        .filter(col("cos_sim") >= 0.3)
-      Dedup.connectedComponents(pairs).orderBy(col("id"))
-    }),
-    // forward as-of: each event's NEXT order at-or-after its timestamp
-    "asof_join_forward" -> ((s, d) =>
-      AsOfJoin.asOf(
-        Tables.events(s, d).select(col("event_id"), col("ts"), col("user_id"), col("event_type")),
-        Tables.orders(s, d).select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice")),
-        keyL = "user_id", keyR = "o_custkey", timeL = "ts", timeR = "o_orderdate",
-        payloadR = Seq("o_orderkey", "o_totalprice"), tiebreakR = "o_orderkey",
-        direction = "forward")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("event_id"))),
-    // --- round-4: benchmark decontamination (the pre-training leakage
-    // guard): training docs sharing any word 4-gram with the benchmark
-    // split. Benchmark n-grams broadcast; the corpus side never shuffles.
-    "decontam_ngram_overlap" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      graft.operators.Decontam.ngramOverlap(
-        all.filter(col("doc_id") % 50 =!= 0),
-        all.filter(col("doc_id") % 50 === 0), n = 4)
-        .withColumn("contaminated", col("contaminated").cast("int"))
-        .orderBy(col("doc_id"))
-    }),
-    // Bloom-filter decontamination: the benchmark gram set compressed to
-    // an 8 KB bitmask (the scale path when even the deduplicated gram
-    // dictionary is too big to broadcast exactly); Kirsch–Mitzenmacher
-    // double hashing over 32-bit md5s, so the oracle replays the exact
-    // bit positions — the flag set, false positives included, is
-    // deterministic. One-sided error: exact-contaminated ⊆ bloom-flagged
-    "decontam_bloom" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      graft.operators.Decontam.bloomNgramFlags(
-        all.filter(col("doc_id") % 50 =!= 0),
-        all.filter(col("doc_id") % 50 === 0), n = 4)
-        .orderBy(col("doc_id"))
-    }),
-    // exact-span contamination report: hashed-gram candidates VERIFIED by
-    // string equality (a 60-bit collision costs a compare, never a false
-    // flag), overlapping verified grams merged into maximal spans — the
-    // span-level leakage audit (Lee et al. framing) on top of the cheap
-    // ngramOverlap gate
-    "decontam_exact_spans" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      graft.operators.Decontam.exactSpans(
-        all.filter(col("doc_id") % 50 =!= 0),
-        all.filter(col("doc_id") % 50 === 0), n = 4)
-        .orderBy(col("doc_id"))
-    }),
-    // NDCG@10 of the BM25 page against term-FREQUENCY relevance grades
-    // (raw occurrence counts, which BM25's tf saturation deliberately does
-    // NOT chase — so run ≠ ideal and the metric is non-vacuous):
-    // the offline ranking-quality readout (lexical sibling of
-    // ann_ivf_recall). Discounts ship as driver-computed literals and
-    // per-rank terms are 9-decimal-quantized, so DCG/IDCG/NDCG replay
-    // engine-exact; the ideal ranking is a distributed top-k, never a
-    // full sort
-    "rank_ndcg_bm25" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      val terms = Seq("spark", "table", "query")
-      val run = graft.operators.Rerank.rankPage(
-        TextAnalysis.bm25TopK(all, terms, k = K), "doc_id", "bm25")
-      val rel = all.select(col("doc_id"),
-        terms.map(t =>
-          size(filter(split(col("text"), " "), w => w === t)).cast("long"))
-          .reduce(_ + _).as("grade"))
-      graft.operators.Rerank.ndcgAtK(run, rel, "doc_id", k = K)
-    }),
-    // bloom-prefiltered join ≡ plain join (false positives only cost
-    // bytes; the oracle IS the plain form) — the explicit runtime-filter
-    // operator for when Spark's InjectRuntimeFilter lacks stats
-    "join_bloom_prefilter" -> ((s, d) =>
-      graft.operators.Bloom.prefilterJoin(
-        Tables.orders(s, d),
-        Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING"),
-        "o_custkey", "c_custkey", numBits = 1 << 16)
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-        .orderBy(col("o_orderpriority"))),
-    // greedy sequence packing into 512-token bins within 8 hash groups —
-    // the trainer-batching step; sequential carry proven against a
-    // DuckDB recursive-CTE fold
-    "pack_sequences_greedy" -> ((s, d) =>
-      graft.operators.Pack.greedyPack(
-        docs(s, d).withColumn("tok", TextAnalysis.tokenEstimate(col("text"))),
-        "doc_id", "tok", capacity = 512L, numGroups = 8)
-        .orderBy(col("doc_id"))),
-    // int8 scalar-quantized kNN: deterministic fixed-scale quantization →
-    // pure integer distance — the one ANN variant with an EXACT oracle
-    "knn_sq8_topk" -> ((s, d) =>
-      emb(s, d).select(col("vec_id"), col("label"),
-          graft.operators.Quantize.sq8DistLit(col("embedding"), SqScale, Q64).as("dist_sq8"))
-        .orderBy(col("dist_sq8").asc, col("vec_id").asc)
-        .limit(K)),
-    // SQ8 serving path: the pure-integer quantized distance generates a
-    // top-50 candidate page (the scan that runs over the 4×-smaller int8
-    // codes at scale), exact float L2 re-ranks only the page — the
-    // memory-bandwidth shape of a quantized ANN deploy. Fixed scale ⇒
-    // codes aren't data-derived, so BOTH stages hash-check end-to-end
-    "knn_sq8_refine" -> ((s, d) => {
-      val cand = emb(s, d)
-        .select(col("vec_id"), col("embedding"),
-          graft.operators.Quantize.sq8DistLit(col("embedding"), SqScale, Q64).as("dist_sq8"))
-        .orderBy(col("dist_sq8").asc, col("vec_id").asc)
-        .limit(50)
-      cand.select(col("vec_id"),
-          Distances.squaredL2Lit(col("embedding"), Q64).as("dist"))
-        .orderBy(col("dist").asc, col("vec_id").asc)
-        .limit(K)
-    }),
-    // hashed-bag-of-words linear classifier (fastText shape, fixed integer
-    // weights): per-row aggregate, zero shuffles
-    "text_classifier_score" -> ((s, d) =>
-      par(s, docs(s, d)).select(col("doc_id"),
-          TextAnalysis.classifierRawScore(col("text")).as("raw_score"),
-          TextAnalysis.nWords(col("text")).as("n_words"))
-        .withColumn("score", col("raw_score").cast("double") / col("n_words").cast("double"))
-        .withColumn("keep", (col("score") >= 0.0).cast("int"))
-        .orderBy(col("doc_id"))),
-    // domain-mixture sampling: per-lang target rates via the deterministic
-    // md5-mod gate — the corpus-mixing step of a pre-training pipeline
-    "sample_domain_mix" -> ((s, d) => {
-      import s.implicits._
-      val rates = Seq(("en", 500), ("de", 200), ("fr", 200), ("es", 100), ("zh", 50))
-        .toDF("r_lang", "permille")
-      docs(s, d).join(broadcast(rates), col("lang") === col("r_lang"))
-        .filter(pmod(Dedup.md5Int32(col("doc_id").cast("string")), lit(1000L)) < col("permille"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_sampled"), sum(col("doc_id")).as("id_sum"))
-        .orderBy(col("lang"))
-    }),
-    // per-source document cap: at most 10 docs per source, kept in
-    // (quality DESC, doc_id) order — the Common-Crawl per-host cap that
-    // stops one domain from dominating the mixture. row_number <= n plans
-    // as WindowGroupLimitExec: each map task keeps its local top-n per
-    // key BEFORE the shuffle, so the exchange is bounded by n·keys·tasks
-    // qq is the integer-exact nano-unit quality score (BIGINT), so the
-    // kept-set boundary can never ride a double rounding half-tie
-    "sample_source_cap" -> ((s, d) => {
-      val q = par(s, docs(s, d)).withColumn("qq",
-        TextAnalysis.qualityScoreScaled(col("text"), 9))
-      graft.operators.Governance.capPerKey(q, "source", 10,
-          Seq(col("qq").desc, col("doc_id").asc))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).as("id_sum"),
-          max(col("qq")).as("best_q"), min(col("qq")).as("worst_kept_q"))
-        .orderBy(col("source"))
-    }),
-    // priority-resolved exact dedup across sources: within a content-
-    // digest group the survivor is the lowest (source priority, doc_id) —
-    // "the curated dump beats the raw crawl for the same document". The
-    // audit rollup counts, per source, docs owned / survived / lost to a
-    // higher-priority copy — the provenance report a multi-dump merge
-    // ships. The fixture corpus has no exact dups, so cross-source copies
-    // are INJECTED deterministically (the audit_referential pattern):
-    // %40=3 docs re-appear under top-priority src0 (originals lose),
-    // %40=7 docs under bottom-priority src19 (originals win)
-    "dedup_priority_source" -> ((s, d) => {
-      val base = docs(s, d).select(col("doc_id"), col("text"), col("source"))
-      val hiPri = base.filter(col("doc_id") % 40 === 3)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"),
-          lit("src0").as("source"))
-      val loPri = base.filter(col("doc_id") % 40 === 7)
-        .select((col("doc_id") + 2000000L).as("doc_id"), col("text"),
-          lit("src19").as("source"))
-      val pri = regexp_extract(col("source"), "([0-9]+)$", 1).cast("int")
-      graft.operators.Governance
-        .priorityDedup(par(s, base.unionAll(hiPri).unionAll(loPri)),
-          "text", "doc_id", pri)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("is_kept")).cast(LongType).as("n_kept"),
-          sum(when(col("group_size") > 1 && col("is_kept") === 1, 1L)
-            .otherwise(0L)).as("n_dup_won"),
-          sum(when(col("is_kept") === 0, 1L).otherwise(0L)).as("n_dup_lost"))
-        .orderBy(col("source"))
-    }),
-    // cross-language quality calibration: raw quality scores are only
-    // comparable WITHIN a language, so the gate runs on the per-language
-    // percentile. Computed via the histogram collapse (score quantized to
-    // 4 decimals → per-(lang, score) counts → running-below window over
-    // the ≤10^4-bucket histogram → broadcast join back), NOT a row-level
-    // per-language sort of the corpus
-    // score_q is the integer-exact 10^-4-unit quality score and pctl the
-    // exact nano-unit percent-rank — both pure-BIGINT quantizations, so
-    // neither the histogram bucket nor the keep gate can flip on an
-    // engine-dependent double rounding
-    "text_quality_percentile" -> ((s, d) => {
-      val q4 = TextAnalysis.qualityScoreScaled(col("text"), 4)
-      graft.operators.Governance.percentileByGroup(
-          par(s, docs(s, d)).select(col("doc_id"), col("lang"), col("text")),
-          "lang", q4)
-        .filter(col("doc_id") % 3 === 0)
-        .withColumn("pctl",
-          graft.operators.Governance.pctlNanos(col("pct_below"), col("pct_n")))
-        .select(col("doc_id"), col("lang"), col("score_q"), col("pctl"),
-          (col("pctl") >= 200000000L).cast("int").as("keep"))
-        .orderBy(col("doc_id"))
-    }),
-    // corpus n-gram diversity per language: distinct trigrams / total
-    // trigram occurrences — the type/token health statistic that drops
-    // when a crawl is template-heavy or a generator loops. Totals need no
-    // explode (per-row max(words-2,0), summed map-side); only the
-    // distinct count walks exploded per-doc gram sets
-    "text_ngram_diversity" -> ((s, d) =>
-      TextAnalysis.ngramDiversity(par(s, docs(s, d)), n = 3)
-        .orderBy(col("lang"))),
-    // T5-style span corruption (denoising-objective example construction):
-    // md5-deterministic ~20% token masking, consecutive masked runs
-    // collapsed to numbered <extra_id_k> sentinels in the input, spans
-    // emitted sentinel-prefixed as the target. One token explode + ONE
-    // (doc, pos) shuffle shared by both windows + per-doc reconstruction
-    "prep_span_corruption" -> ((s, d) =>
-      TextAnalysis.spanCorrupt(par(s, docs(s, d).filter(col("doc_id") % 10 === 0)),
-          maskMod = 5)
-        .orderBy(col("doc_id"))),
-    // cross-language z-score calibration of the quality score: per-lang
-    // mean/std from EXACT decimal power sums (the agg_corr_stats
-    // contract) broadcast back onto the corpus — the standardization a
-    // mixed-language quality gate needs (raw scores aren't comparable
-    // across languages; sibling of the percentile calibration, but
-    // parametric). Quality quantized to 9 decimals pre-sum so the power
-    // sums are order- and engine-exact
-    "text_quality_zscore" -> ((s, d) => {
-      val q = round(TextAnalysis.qualityScore(col("text")), 9)
-        .cast(DecimalType(18, 9))
-      val scored = par(s, docs(s, d)).select(col("doc_id"), col("lang"), q.as("q"))
-      // the sums are EXACT decimals; they cast to identical doubles in
-      // both engines, and from there the mean/std arithmetic is the same
-      // IEEE expression tree (decimal×decimal×n would instead hit Spark's
-      // precision-loss scale reduction, which DuckDB doesn't replicate)
-      val stats = scored.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("q")).as("sq"),
-          sum(col("q") * col("q")).as("sqq"))
-        .select(col("lang"), col("n"),
-          (col("sq").cast("double") / col("n").cast("double")).as("mean_q"),
-          sqrt((col("n").cast("double") * col("sqq").cast("double") -
-              col("sq").cast("double") * col("sq").cast("double")) /
-            (col("n").cast("double") * (col("n").cast("double") - 1.0))).as("std_q"))
-      scored.join(broadcast(stats), "lang")
-        .filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("lang"),
-          col("q").cast("double").as("quality"),
-          round((col("q").cast("double") - col("mean_q")) / col("std_q"), 6).as("z"))
-        .orderBy(col("doc_id"))
-    }),
-    // IVF index-health report: per-cell population of the fixed-codebook
-    // index plus each cell's load factor vs uniform — the balance
-    // statistic that decides when an IVF index needs re-training (hot
-    // cells = slow probes, empty cells = wasted codebook). One
-    // aggregation to |cells| rows; the 1-row totals broadcast back
-    "ann_ivf_cell_stats" -> ((s, d) => {
-      import s.implicits._
-      val nCells = 8
-      val counted = Ann.assign(emb(s, d), Planes16.take(nCells))
-        .groupBy(col("ivf_cell").cast("int").as("ivf_cell"))
-        .agg(count(lit(1)).as("n_vecs"))
-      // every codebook entry appears, populated or not — empty cells ARE
-      // the finding (wasted codebook); load factor is vs uniform over the
-      // full codebook
-      val cells = (0 until nCells).toDF("ivf_cell")
-        .join(counted, Seq("ivf_cell"), "left")
-        .select(col("ivf_cell"), coalesce(col("n_vecs"), lit(0L)).as("n_vecs"))
-      val tot = cells.agg(sum(col("n_vecs")).as("total"))
-      cells.crossJoin(broadcast(tot))
-        .select(col("ivf_cell"), col("n_vecs"),
-          round((col("n_vecs") * nCells).cast("double") /
-            col("total").cast("double"), 9).as("load_factor"))
-        .orderBy(col("ivf_cell"))
-    }),
-    // INCREMENTAL IVF admission (r14): the O(batch) append path — train
-    // the codebook on the BASE store (seeded-exact, so the oracle replays
-    // training), argmin-assign only the NEW batch to the frozen
-    // centroids, and emit the post-admission health report (per-cell
-    // before/after populations, load factor, retrain flag once a cell
-    // exceeds 2x uniform). The store is never rescanned: a daily
-    // embedding drop costs one codegen'd assignment pass over the batch
-    "ann_ivf_append" -> ((s, d) => {
-      val all = emb(s, d)
-      val base = all.filter(col("vec_id") % 5 =!= 0)
-      val batch = all.filter(col("vec_id") % 5 === 0)
-      val cents = Ann.lloydSeededExact(base, IvfSeeds, iters = 2)
-      val assignedBase = Ann.assign(base, cents)
-      // r17: delta report — admitBatch's output is base ∪ assigned-batch,
-      // so per-cell counts add; the report scans the store assignment once
-      // and the small batch once instead of counting the store through
-      // both `before` AND the union (AnnSpec pins delta ≡ full report)
-      Ann.admissionReportDelta(assignedBase, Ann.assign(batch, cents),
-        nCells = IvfSeeds.length, maxLoad = 2.0)
-    }),
-    // perceptual-hash near-dup over media payloads: binary payload →
-    // (stub) decoded token stream → 60-bit SimHash → pigeonhole banded
-    // Hamming pairing, recall 1 with no cross product. A real pHash swaps
-    // in at the feature extractor; the binary→fingerprint→banded-join
-    // plumbing is what's pinned. Near-dup payloads INJECTED (perturbed
-    // copies of %28 docs) so the pairing is non-vacuous
-    "media_phash_neardup" -> ((s, d) => {
-      val base = docs(s, d).filter(col("doc_id") % 4 === 0)
-      val perturbed = docs(s, d).filter(col("doc_id") % 28 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" zz qq")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      val media = Multimodal.mediaFromDocuments(
-        par(s, base.unionByName(perturbed)))
-      Dedup.simHashNearDupPairs(
-          media.select(col("media_id").as("doc_id"),
-            col("payload").cast("string").as("text")),
-          "text", "doc_id", maxHamming = 8)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // perceptual near-dup on REAL decoded pixels (r13, closing the r12
-    // stub gap): deterministic block-patterned PNG/BMP payloads decode
-    // through the actual javax.imageio codec on executors, fingerprint via
-    // the integer average-hash (Multimodal.perceptualHash), and pair by
-    // the pigeonhole banded-Hamming join. Re-encodings of one raster pair
-    // at Hamming 0, a 3-block edit at Hamming 3, junk bytes fall back to a
-    // digest fingerprint and stay unpaired — the expected-value oracle is
-    // derivable by hand from the fixture's block layout (see
-    // Multimodal.phashFixture)
-    "media_phash_real" -> ((s, d) =>
-      Dedup.bandedHammingPairs(
-          Multimodal.perceptualHash(Multimodal.phashFixture(s)).toDF(),
-          "phash", "media_id", maxHamming = 8, sigBits = 64)
-        .orderBy(col("id_a"), col("id_b"))),
-    // cross-split contamination audit: near-dup pairs (the proven
-    // MinHash-LSH path) whose members land in DIFFERENT deterministic
-    // k-fold splits — exactly the train/eval leakage a dedup-after-split
-    // pipeline ships. |pairs| rows into a |folds|² aggregation
-    "split_leakage_audit" -> ((s, d) => {
-      def fold(c: Column) =
-        pmod(Dedup.md5Int32(c.cast("string")), lit(5L))
-      Dedup.minHashLshNearDupPairs(par(s, docs(s, d)), "text", "doc_id",
-          shingleWidth = 3, numHashes = 8, bands = 4, threshold = 0.5,
-          docCountHint = docCount(s, d))
-        .select(fold(col("id_a")).as("fold_a"), fold(col("id_b")).as("fold_b"))
-        .groupBy(col("fold_a"), col("fold_b"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .withColumn("cross_fold", (col("fold_a") =!= col("fold_b")).cast("int"))
-        .orderBy(col("fold_a"), col("fold_b"))
-    }),
-    // malformed-record accounting on JSON ingest: rows with event_id
-    // % 17 = 0 get a deterministically corrupted payload; the audit
-    // counts parse failures and aggregates the surviving field per type —
-    // the ingest-quality report a raw-crawl JSON reader ships. One
-    // codegen pass, no shuffle beyond the |types| aggregation
-    "json_corrupt_audit" -> ((s, d) => {
-      val raw = when(col("event_id") % 17 === 0,
-        concat(lit("{"), col("props"))).otherwise(col("props"))
-      Tables.events(s, d)
-        .select(col("event_type"),
-          get_json_object(raw, "$.k").cast(LongType).as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("k").isNull, 1L).otherwise(0L)).as("n_corrupt"),
-          sum(coalesce(col("k"), lit(0L))).as("k_sum"))
-        .orderBy(col("event_type"))
-    }),
-    // fuzzy dedup by edit distance on document prefixes (candidate pairs
-    // from a deterministic sample; at scale candidates come from LSH)
-    "dedup_edit_distance" -> ((s, d) => {
-      // parCompute, not par: the filtered side is KB-scale, but the
-      // broadcast NLJ explodes it into ~n²/2 levenshtein evaluations —
-      // spreading those across every executor thread is the whole cost
-      val sd = parCompute(s, docs(s, d).filter(col("lang") === "en" && col("doc_id") % 25 === 0))
-        .select(col("doc_id"), substring(col("text"), 1, 120).as("p"))
-      sd.as("a").join(sd.as("b"), col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-          levenshtein(col("a.p"), col("b.p")).as("lev"))
-        .filter(col("lev") <= 90)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // out-of-vocabulary rate against the corpus top-200 vocabulary — the
-    // gibberish-detector quality signal (vocab broadcasts)
-    "text_oov_rate" -> ((s, d) =>
-      TextAnalysis.oovRate(par(s, docs(s, d)), v = 200).orderBy(col("doc_id"))),
-    // PII scrub (emails/phones/IPv4 → typed sentinels): the fixture
-    // corpus is synthetic and PII-free, so leakage is INJECTED from
-    // doc_id arithmetic (both engines replay the injection — the
-    // audit_referential pattern). Per-source rollup carries the exact
-    // counts plus a hash-sum of every redacted text, pinning the
-    // replacement output byte-for-byte. Pure per-row regex — no shuffle
-    // before the final rollup
-    "text_pii_redact" -> ((s, d) =>
-      TextAnalysis.piiRedact(piiInjectedDocs(s, d), "text")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_email")).as("n_email"),
-          sum(col("n_phone")).as("n_phone"),
-          sum(col("n_ip")).as("n_ip"),
-          sum(Dedup.md5Int32(col("redacted"))).as("redacted_hashsum"))
-        .orderBy(col("source"))),
-    // per-source PII EXPOSURE report (r13, re-adding the capability the
-    // b06e9a9→5193e6 add/revert cycle dropped): docs-carrying-PII per
-    // class + any-class rate + occurrence totals, per source — the
-    // governance readout a curation pipeline gates releases on, composed
-    // from the SAME single pattern set the redaction pass uses (no second
-    // regex table). One map-side per-source aggregation over the per-row
-    // counts; streams at 100 TB
-    "text_pii_report" -> ((s, d) =>
-      TextAnalysis.piiReport(
-        TextAnalysis.piiRedact(piiInjectedDocs(s, d), "text"), "source")
-        .orderBy(col("source"))),
-    // radius (range) search — the other half of the vector-DB read API:
-    // all rows within squared-L2 distance r of the query
-    "knn_radius" -> ((s, d) =>
-      Knn.radiusSearch(emb(s, d), Distances.squaredL2Lit(col("embedding"), Q64), Radius)),
-    // cell-pruned radius: candidate cells known up front (bound ≤ r), one
-    // scan, no widening loop; same oracle as the brute form (exactness)
-    "knn_radius_pruned" -> ((s, d) =>
-      Knn.prunedRadius(Grid.withCellId(emb(s, d), "embedding", gridCfg), gridCfg, Q64, Radius)),
-    // OPTIMIZER-RULE data skipping under the gate: a 2-dim slice store is
-    // written cell-partitioned, GridRadiusPruning registered, and then a
-    // PLAIN distance filter — no driver-side pruning call anywhere — has
-    // `cell_id IN (...)` injected by the rule, reaching the scan as a
-    // partition filter (~4 of 64 cell directories opened). The oracle is
-    // the plain radius filter: data skipping must not change the answer
-    "store_autoprune_radius" -> ((s, d) => {
-      val cfg2 = GridConfig(dim = 2, lower = -0.6, upper = 0.6,
-        partsPerDim = 8, gridDims = 2)
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_autoprune_store").getPath
-      val twoD = emb(s, d).select(col("vec_id"), col("label"),
-        slice(col("embedding"), 1, 2).as("embedding"))
-      Grid.withCellId(twoD, "embedding", cfg2)
-        // pinned 64 so the 64 cell files are created in parallel, not by
-        // one AQE-coalesced writer (see store_roundtrip_knn)
-        .repartition(64, col("cell_id"))
-        .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
-      graft.plans.GridRadiusPruning.register(s, cfg2, dir)
-      Knn.radiusSearch(s.read.parquet(dir),
-        Distances.squaredL2Lit(col("embedding"), Q64.take(2)), RadiusAuto)
-    }),
-    // the same automatic data skipping over a QUANTILE-calibrated store
-    // (r11): calibrate 2-D edges from the data, write partitioned by the
-    // quantile cell, register the geometry BY PATH, and the same rule
-    // injects `cell_id IN (interval-bound ≤ r cells)` into a plain radius
-    // filter — spark.sql text gets quantile-index pruning without knowing
-    // the index exists. Answer ≡ the unpruned radius SQL (admissibility
-    // under the hash gate)
-    "store_autoprune_radius_quantile" -> ((s, d) => {
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_autoprune_qstore").getPath
-      val twoD = emb(s, d).select(col("vec_id"), col("label"),
-        slice(col("embedding"), 1, 2).as("embedding"))
-      // calibration memoized per fixture dir (the catalog-stats contract);
-      // the write + pruned read-back is the lifecycle under test
-      val qc = qgridCache.computeIfAbsent(s"2d:$d", _ =>
-        graft.index.QuantileGrid.calibrate(twoD, "embedding",
-          partsPerDim = 8, gridDims = 2, dim = 2))
-      Grid.withCellId(twoD, "embedding", qc)
-        // pinned 64: parallel cell-file creation (see store_roundtrip_knn)
-        .repartition(64, col("cell_id"))
-        .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
-      graft.plans.GridRadiusPruning.register(s, qc, dir)
-      Knn.radiusSearch(s.read.parquet(dir),
-        Distances.squaredL2Lit(col("embedding"), Q64.take(2)), RadiusAuto)
-    }),
-    // snapshot diff (CDC read side): I/D/U changelog keys between two
-    // states — one full-outer key join
-    "crud_snapshot_diff" -> ((s, d) => {
-      val state = emb(s, d)
-      val after = state.filter(col("vec_id") % 13 =!= 0)
-        .withColumn("label",
-          when(col("vec_id") % 5 === 0, col("label") + 100).otherwise(col("label")))
-        .unionByName(state.orderBy(col("vec_id")).limit(10)
-          .withColumn("vec_id", col("vec_id") + lit(1000000L)))
-      Snapshot.diff(state, after, "vec_id", Seq("label"))
-        .orderBy(col("op"), col("vec_id"))
-    }),
-    // cohort retention: users bucketed by first-seen day, activity counted
-    // per (cohort, day offset) — two key-local aggregations, exact integers
-    "events_retention_cohorts" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), unix_timestamp(date_trunc("day", col("ts"))).as("day_epoch"))
-      val cohort = ev.groupBy(col("user_id")).agg(min(col("day_epoch")).as("cohort_epoch"))
-      ev.join(cohort, "user_id")
-        .groupBy(col("cohort_epoch"),
-          ((col("day_epoch") - col("cohort_epoch")) / lit(86400L)).cast("long").as("day_offset"))
-        .agg(countDistinct(col("user_id")).as("n_active"))
-        .orderBy(col("cohort_epoch"), col("day_offset"))
-    }),
-    // small-file compaction planning: per-cell row counts binned into
-    // target-size output files — the maintenance op a cell-partitioned
-    // store runs after skewed ingest, reusing the greedy packer
-    "store_compaction_plan" -> ((s, d) => {
-      val counts = Grid.withCellId(emb(s, d), "embedding", gridCfg)
-        .groupBy(col("cell_id")).agg(count(lit(1)).as("n"))
-      graft.operators.Pack.greedyPack(counts, "cell_id", "n", capacity = 100L, numGroups = 1)
-        .select(col("doc_id").as("cell_id"), col("n_tokens").as("n_rows"),
-          col("bin_idx").as("file_idx"), col("bin_fill").as("file_fill"))
-        .orderBy(col("cell_id"))
-    }),
-    // --- round-4: SQL-surface widening (plan shapes Catalyst treats
-    // specially) + training-pipeline evaluation operators
-    // NOT IN subquery → Spark's null-aware anti join (single-column NAAJ
-    // compiles to a broadcast hash join, not a nested loop)
-    "subquery_not_in_region" -> ((s, d) => {
-      Tables.supplier(s, d).createOrReplaceTempView("supplier_v")
-      Tables.nation(s, d).createOrReplaceTempView("nation_v")
-      s.sql("""SELECT s_suppkey, s_name, s_nationkey FROM supplier_v
-              |WHERE s_nationkey NOT IN
-              |  (SELECT n_nationkey FROM nation_v WHERE n_regionkey IN (0, 1))
-              |ORDER BY s_suppkey""".stripMargin)
-    }),
-    // aggregate-below-join (manual aggregate pushdown): collapse lineitem
-    // to per-order partials BEFORE the orders join, so the join input
-    // shrinks from |lineitem| to |orders| rows — at 100 TB this is the
-    // difference between shuffling the fact table and shuffling its
-    // rollup. Must equal the join-then-aggregate form (the oracle)
-    "join_preagg_revenue" -> ((s, d) => {
-      val perOrder = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)) *
-          (lit(1.0).cast(DecimalType(3, 2)) - col("l_discount").cast(DecimalType(18, 2))))
-          .as("order_rev"), count(lit(1)).as("n_lines"))
-      Tables.orders(s, d)
-        .join(perOrder, col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(sum(col("order_rev")).cast("double").as("revenue"),
-          sum(col("n_lines")).as("n_lines"))
-        .orderBy(col("o_orderpriority"))
-    }),
-    // TPC-H Q18 shape: HAVING over a join aggregate (the filter runs on
-    // the aggregated value, post-shuffle — nothing to push down, but the
-    // partial aggregation still combines map-side)
-    "agg_having_large_orders" -> ((s, d) =>
-      Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .agg(dsum(col("l_quantity")).as("sum_qty"))
-        .filter(col("sum_qty") > 300.0)
-        .orderBy(col("o_orderkey"))),
-    // TPC-H Q19 shape: disjunctive mixed-side predicate — Catalyst
-    // extracts the part-only OR branches and pushes them into the part
-    // scan (CNF conversion), so the broadcast build side is pre-filtered
-    "join_disjunctive_pricing" -> ((s, d) => {
-      val l = Tables.lineitem(s, d)
-      val p = broadcast(Tables.part(s, d))
-      l.join(p, col("l_partkey") === col("p_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#12" && col("l_quantity").between(1, 11) && col("p_size").between(1, 5)) ||
-          (col("p_brand") === "Brand#23" && col("l_quantity").between(10, 20) && col("p_size").between(1, 10)) ||
-          (col("p_brand") === "Brand#34" && col("l_quantity").between(20, 30) && col("p_size").between(1, 15)))
-        .agg(drevenue(col("l_extendedprice"), col("l_discount")).as("revenue"),
-          count(lit(1)).as("n"))
-    }),
-    // TPC-H Q7 shape: the fact table resolves BOTH ends of a relationship
-    // through different dimension paths (supplier nation vs customer
-    // nation) — two broadcast nation joins, group by the pair
-    "join_nation_volume" -> ((s, d) => {
-      val n1 = broadcast(Tables.nation(s, d)
-        .select(col("n_nationkey").as("n1_key"), col("n_name").as("supp_nation")))
-      val n2 = broadcast(Tables.nation(s, d)
-        .select(col("n_nationkey").as("n2_key"), col("n_name").as("cust_nation")))
-      Tables.lineitem(s, d)
-        .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(n1, col("s_nationkey") === col("n1_key"))
-        .join(n2, col("c_nationkey") === col("n2_key"))
-        .filter(col("supp_nation").isin("NATION_1", "NATION_2") &&
-          col("cust_nation").isin("NATION_1", "NATION_2") &&
-          col("supp_nation") =!= col("cust_nation"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(drevenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("o_year"))
-    }),
-    // arg-max aggregation (max_by): one pass, no self-join / no window.
-    // The determinant packs (price, key) into ONE exact BIGINT — price in
-    // integer cents shifted past any plausible orderkey (< 1e11), so price
-    // strictly dominates and equal prices tie-break on the key; bigint
-    // arithmetic is engine-exact (max cents ~5e7 × 1e11 stays under 2^63)
-    "agg_argmax_order" -> ((s, d) =>
-      Tables.orders(s, d)
-        .groupBy(col("o_custkey"))
-        .agg(
-          max_by(col("o_orderkey"),
-            round(col("o_totalprice") * 100).cast("long") * lit(100000000000L)
-              + col("o_orderkey")).as("best_orderkey"),
-          max(col("o_totalprice")).as("best_price"))
-        .orderBy(col("o_custkey"))),
-    // order-sensitive list aggregation: collect_list has no deterministic
-    // order under parallel merge, so sort AFTER collecting (array_sort) —
-    // mirrors DuckDB's string_agg(... ORDER BY ...)
-    "agg_listagg_suppliers" -> ((s, d) =>
-      Tables.supplier(s, d)
-        .join(broadcast(Tables.nation(s, d)), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(concat_ws(",", array_sort(collect_list(col("s_name")))).as("suppliers"),
-          count(lit(1)).as("n"))
-        .orderBy(col("n_name"))),
-    // behavior-sequence assembly: each user's event types concatenated in
-    // the engine-wide (ts, event_id) total order — the trajectory-building
-    // step of a behavioral training set (one shuffle on the key; the
-    // sequence is assembled per key, never globally). Same ordered-listagg
-    // kernel as agg_listagg_suppliers, with the struct sort carrying the
-    // time axis
-    "seq_user_event_trajectory" -> ((s, d) =>
-      Tables.events(s, d).filter(col("user_id") % 50 === 0)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          concat_ws(" ",
-            transform(
-              array_sort(collect_list(struct(col("ts"), col("event_id"), col("event_type")))),
-              x => x("event_type"))).as("trajectory"))
-        .orderBy(col("user_id"))),
-    // incremental-ETL shape: daily partial aggregates merged to monthly ==
-    // direct monthly aggregation (sums/counts re-aggregate losslessly;
-    // the pattern that lets a 100 TB pipeline recompute only changed days)
-    "agg_partial_merge_monthly" -> ((s, d) => {
-      val daily = Tables.orders(s, d)
-        .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2))).as("tot"))
-      daily
-        .groupBy((year(col("day")) * 100 + month(col("day"))).cast("long").as("ym"))
-        .agg(sum(col("n")).as("n"), sum(col("tot")).cast("double").as("total"))
-        .orderBy(col("ym"))
-    }),
-    // RANGE window frame over event time (value-based bounds, not row
-    // counts): 30-day trailing revenue per customer — frames follow the
-    // time axis through gaps and duplicate dates
-    "window_range_frame_revenue" -> ((s, d) => {
-      // o_orderdate arrives as TIMESTAMP_NTZ; session TZ is pinned UTC so
-      // the TIMESTAMP hop to epoch seconds is exact
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate").cast("timestamp").cast("long"))
-        .rangeBetween(-30L * 86400L, 0L)
-      Tables.orders(s, d)
-        .filter(col("o_custkey") % 50 === 0)
-        .withColumn("rev30",
-          sum(col("o_totalprice").cast(DecimalType(18, 2))).over(w).cast("double"))
-        .select(col("o_custkey"), col("o_orderdate"), col("rev30"))
-        .orderBy(col("o_custkey"), col("o_orderdate"), col("rev30"))
-    }),
-    // bigram LM quality scoring (perplexity-filter shape): train on the
-    // doc_id%10==0 slice, score the held-out doc_id%10==5 slice
-    "text_bigram_lm" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      graft.operators.LangModel.scoreHeldOut(
-          all.filter(col("doc_id") % 10 === 0),
-          all.filter(col("doc_id") % 10 === 5))
-        .orderBy(col("doc_id"))
-    }),
-    // DSIR importance resampling (Xie et al. 2023, word-bigram variant):
-    // every raw doc weighted by ln p_target − ln p_raw under two bigram
-    // LMs (target = the curated 1-in-10 slice, raw = the rest), then the
-    // top-100 budget selected by the ratio — the data-selection step
-    // between raw crawl and training mix. Model tables broadcast; the
-    // ratio is an EXACT decimal difference of the two per-doc sums, so
-    // ordering replays bit-for-bit; selection is a distributed top-k
-    // (TakeOrderedAndProject), never a global sort
-    "sample_dsir_importance" -> ((s, d) => {
-      val all = par(s, docs(s, d))
-      graft.operators.LangModel.dsirLogRatios(
-          all.filter(col("doc_id") % 10 === 0),
-          all.filter(col("doc_id") % 10 =!= 0))
-        .orderBy(col("log_ratio").desc, col("doc_id").asc)
-        .limit(100)
-    }),
-    // per-label centroid of the embedding space (class prototypes)
-    "vec_label_centroids" -> ((s, d) =>
-      graft.operators.Embed.labelCentroids(emb(s, d))
-        .select(col("label"), col("dim_idx").cast("long").as("dim_idx"), col("centroid"))
-        .orderBy(col("label"), col("dim_idx"))),
-    // leave-one-out 1-NN label accuracy (embedding-space evaluation)
-    "knn_classify_loo" -> ((s, d) =>
-      graft.operators.KnnClassify.looAccuracy(emb(s, d), Dim, queryMod = 20L)
-        .orderBy(col("label"))),
-    // hard-negative mining for contrastive training: each anchor's nearest
-    // neighbor with a DIFFERENT label — the shared KnnClassify kernel with
-    // the label-inequality predicate pushed below the rank
-    "knn_hard_negatives" -> ((s, d) =>
-      graft.operators.KnnClassify.hardNegatives(emb(s, d), Dim, queryMod = 20L)
-        .orderBy(col("qid"))),
-    // stream-static enrichment: events × broadcast customer dim → hourly
-    // windowed aggregation per segment (streaming form ≡ batch, proven in
-    // StreamEnrichSpec)
-    "stream_static_enrich" -> ((s, d) =>
-      graft.streaming.StreamEnrich.hourlyBySegment(
-          Tables.events(s, d), Tables.customer(s, d))
-        .orderBy(col("c_mktsegment"), col("hour_start"))),
-    // inverted-index postings (lexical retrieval index — the text sibling
-    // of the Grid cell index): word → sorted posting list + df. Lists
-    // sort AFTER collection (collect_set order is partition-dependent)
-    "text_inverted_postings" -> ((s, d) =>
-      TextAnalysis.invertedPostings(
-          par(s, docs(s, d).filter(col("doc_id") % 10 === 0)), minDf = 2)
-        .select(col("w"), col("df"),
-          concat_ws(",", transform(col("doc_ids"), i => i.cast("string"))).as("postings"))
-        .orderBy(col("w"))),
-    // Okapi BM25 ranking for a fixed query-term bag: corpus stats reduce
-    // to broadcast scalars, scoring is one codegen'd pass + distributed
-    // top-k. Scores rounded before ranking so sub-ulp ln() drift can't
-    // flip the cross-engine order
-    "text_bm25_topk" -> ((s, d) =>
-      TextAnalysis.bm25TopK(par(s, docs(s, d)),
-        terms = Seq("spark", "table", "query"), k = K)),
-    // Zipf slope of the corpus term-frequency distribution: least-squares
-    // fit of ln(freq) ~ ln(rank) over the top-100 terms — the healthiness
-    // statistic of a text corpus (natural text ≈ -1). Per-term lns are
-    // decimal-quantized BEFORE the power sums so the fit is exact integer
-    // arithmetic until one final double division
-    "text_zipf_slope" -> ((s, d) => {
-      val ranked = TextAnalysis.topVocab(par(s, docs(s, d)), v = 100)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("c").desc, col("w").asc)))
-      val q = ranked.select(
-        round(log(col("rank").cast("double")), 6).cast(DecimalType(18, 6)).as("x"),
-        round(log(col("c").cast("double")), 6).cast(DecimalType(18, 6)).as("y"))
-      q.agg(
-          count(lit(1)).as("n"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
-        .select(col("n"),
-          ((col("sxy").cast("double") - col("sx").cast("double") * col("sy").cast("double") / col("n"))
-            / (col("sxx").cast("double") - col("sx").cast("double") * col("sx").cast("double") / col("n")))
-            .as("zipf_slope"))
-    }),
-    // BPE tokenizer training (vocabulary learning): corpus → word-freq
-    // table (the one corpus-scale shuffle) → iterative weighted pair
-    // merges on the compact dictionary. Fully oracle-checked — DuckDB
-    // replays the unrolled training loop (Bpe.oracleSql)
-    "text_bpe_merges" -> ((s, d) =>
-      graft.operators.Bpe.train(par(s, docs(s, d)), nMerges = 4)),
-    // BPE encode with the learned merges: per-doc token/char counts — the
-    // sequence-length statistic the packing stage consumes
-    "text_bpe_token_counts" -> ((s, d) =>
-      graft.operators.Bpe.trainAndEncode(par(s, docs(s, d)), nMerges = 4)
-        .orderBy(col("doc_id"))),
-    // byte-level BPE (r16, GPT-2 family): the symbol alphabet is the UTF-8
-    // BYTE sequence (hex-pair symbols), so any string decomposes and the
-    // tokenizer has no OOV hole — the byte fallback the code-point
-    // tokenizers lack. Same unrolled-training-loop oracle contract as
-    // text_bpe_merges (ByteBpe.oracleSql)
-    "text_bytebpe_merges" -> ((s, d) =>
-      graft.operators.ByteBpe.train(par(s, docs(s, d)), nMerges = 4)),
-    // byte-level encode: per-doc token/byte counts under the learned
-    // merges — n_bytes is the no-OOV invariant ceiling (zero merges ⇒
-    // n_tokens == n_bytes for EVERY document, unseen scripts included)
-    "text_bytebpe_token_counts" -> ((s, d) =>
-      graft.operators.ByteBpe.trainAndEncode(par(s, docs(s, d)), nMerges = 4)
-        .orderBy(col("doc_id"))),
-    // unigram-LM (SentencePiece-family) tokenizer training (r14): seed
-    // substring counts → hard-EM Viterbi rounds with micro-unit quantized
-    // log-probs → prune to target vocab + chars → final usage counts.
-    // Every intermediate is integer/decimal-exact, so the ENTIRE training
-    // loop replays as unrolled DuckDB CTEs (Unigram.vocabOracleSql) —
-    // same contract as text_bpe_merges
-    "text_unigram_vocab" -> ((s, d) =>
-      graft.operators.Unigram.train(par(s, docs(s, d)))._1),
-    // unigram encode: per-doc Viterbi token/char counts under the trained
-    // vocab — the sequence-length statistic for packing, over the
-    // broadcast distinct-word dictionary like text_bpe_token_counts
-    "text_unigram_token_counts" -> ((s, d) =>
-      graft.operators.Unigram.trainAndEncode(par(s, docs(s, d)))
-        .orderBy(col("doc_id"))),
-    // unigram-vocab fertility by source — the same tokenizer-efficiency
-    // row for the SECOND tokenizer family, so the data card can compare
-    // BPE vs unigram compression on each source
-    "text_unigram_fertility" -> ((s, d) =>
-      graft.operators.Unigram.trainAndFertility(par(s, docs(s, d)))
-        .orderBy(col("source"))),
-    // per-source tokenizer fertility (tokens/word, chars/token) under the
-    // learned merges — the tokenizer-efficiency row of the corpus data
-    // card; |sources| output rows at any corpus size
-    "text_token_fertility" -> ((s, d) =>
-      graft.operators.Bpe.trainAndFertility(par(s, docs(s, d)), nMerges = 4,
-          groupCol = "source")
-        .orderBy(col("source"))),
-    // trailing-window anomaly detection on the event stream: hourly counts
-    // vs their own trailing-24-HOUR mean. The frame is a value-based RANGE
-    // over hour_epoch (a ROWS frame would skip empty hours and stretch the
-    // baseline arbitrarily far back), and the mean divides the frame SUM
-    // by 24.0 so absent hours correctly count as zero activity; rows
-    // qualify once a full day of history has elapsed for that type
-    "events_hourly_anomaly" -> ((s, d) => {
-      val hourly = Tables.events(s, d)
-        .groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("hour_epoch"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("event_type")).orderBy(col("hour_epoch"))
-        .rangeBetween(-24L * 3600L, -1L)
-      val first = Window.partitionBy(col("event_type"))
-      hourly
-        .withColumn("trail_avg", coalesce(sum(col("n")).over(w), lit(0L)) / 24.0)
-        .withColumn("first_epoch", min(col("hour_epoch")).over(first))
-        .filter(col("hour_epoch") >= col("first_epoch") + 24L * 3600L)
-        .withColumn("is_anomaly",
-          (col("n") > col("trail_avg") * 1.5 || col("n") < col("trail_avg") * 0.5).cast("int"))
-        .select(col("event_type"), col("hour_epoch"), col("n"),
-          col("trail_avg"), col("is_anomaly"))
-        .orderBy(col("event_type"), col("hour_epoch"))
-    }),
-    // OHLC candlestick downsampling (TimeSeries.ohlc): per-type hourly
-    // bars with first/last under the TOTAL (ts, event_id) order — plain
-    // arg_min/min_by would tie-break arbitrarily per engine on duplicate
-    // timestamps; the row_number formulation is deterministic
-    "events_ohlc_hourly" -> ((s, d) =>
-      graft.operators.TimeSeries.ohlc(
-          Tables.events(s, d), "event_type",
-          unix_timestamp(date_trunc("hour", col("ts"))),
-          "ts", "value", "event_id")
-        .orderBy(col("event_type"), col("bucket"))),
-    // PSI distribution-drift monitor (operators/Drift): per event type,
-    // compare the value distribution of the second half-month against the
-    // first (10 fixed bins, Laplace-smoothed proportions) — the gate a
-    // pipeline runs before admitting a new crawl/period into the training
-    // mix. ln terms 9-decimal-quantized (repo transcendental rule)
-    "drift_psi_value" -> ((s, d) =>
-      graft.operators.Drift.psi(
-        Tables.events(s, d)
-          .withColumn("bin",
-            least(floor(col("value") / lit(50.0)), lit(9.0)).cast("long"))
-          .withColumn("is_ref", dayofmonth(col("ts")) <= 15),
-        "event_type", "bin", "is_ref", nBins = 10)
-        .orderBy(col("event_type"))),
-    // Q4-shape priority report: orders in a window with at least one LATE
-    // line (shipped > 75 days after order) counted by priority — the
-    // EXISTS-decorrelated-to-LEFT-SEMI composition UNDER an aggregation.
-    // Equi orderkey carries the hash semi join; the lateness predicate is
-    // the residual condition evaluated inside it (no cross product, no
-    // second scan — the semi join emits each qualifying order once)
-    "join_q4_late_orders" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-        .filter(col("o_orderdate").between(
-          lit("1995-01-01").cast("timestamp"), lit("1995-06-30").cast("timestamp")))
-      o.join(Tables.lineitem(s, d),
-          col("l_orderkey") === col("o_orderkey") &&
-            col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 75 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_late_orders"))
-        .orderBy(col("o_orderpriority"))
-    }),
-    // behavior-trajectory similarity join (the REPOSE/trajectory-search
-    // problem at the engine level): each user's event history becomes a
-    // SET of ordered event-type bigrams ("click>view"), then the EXACT
-    // prefix-filter set-similarity kernel finds all user pairs with
-    // Jaccard ≥ 0.96 — similar-behavior discovery without the user×user
-    // cross product (recall 1 by the PPJoin prefix argument). Ordering
-    // uses second-resolution epoch + event_id, the cross-engine total
-    // order the sessionize oracle established
-    "user_behavior_simjoin" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").cast("long").asc, col("event_id").asc)
-      val big = Tables.events(s, d).filter(col("user_id") % 3 === 0)
-        .withColumn("prev", lag(col("event_type"), 1).over(w))
-        .filter(col("prev").isNotNull)
-        .select(col("user_id"), concat(col("prev"), lit(">"), col("event_type")).as("bg"))
-      val behaviors = big.groupBy(col("user_id"))
-        .agg(concat_ws(" ", array_sort(collect_set(col("bg")))).as("behavior"))
-      graft.operators.SetSimJoin.jaccardJoin(behaviors, t = 0.96,
-          textCol = "behavior", idCol = "user_id")
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // peak session concurrency per day: sessions (the proven sessionize
-    // kernel) exploded to the minutes they cover, minute-level active
-    // counts, then per-day max — interval concurrency WITHOUT the global
-    // sweep-line sort (+1/-1 running sum needs ONE total order over all
-    // boundaries; the minute spine keeps every step key-local and the
-    // explode bounded by session duration). The capacity-planning gauge
-    "events_concurrency_peak" -> ((s, d) => {
-      val sess = graft.streaming.Sessionize.batch(Tables.events(s, d))
-      val conc = sess
-        .select(explode(sequence(
-          floor(col("session_start") / 60).cast(LongType),
-          floor(col("session_end") / 60).cast(LongType))).as("minute"))
-        .groupBy(col("minute"))
-        .agg(count(lit(1)).cast(LongType).as("concurrent"))
-      conc
-        .withColumn("epoch_day", floor(col("minute") / 1440).cast(LongType))
-        .groupBy(col("epoch_day"))
-        .agg(max(col("concurrent")).as("peak_concurrent"),
-          count(lit(1)).cast(LongType).as("n_active_minutes"))
-        .withColumn("day",
-          date_add(lit("1970-01-01").cast("date"), col("epoch_day").cast("int")))
-        .orderBy(col("epoch_day"))
-    }),
-    // Welch two-sample t-test between click and purchase values — the A/B
-    // significance statistic, completing the inferential kit (chi², PSI,
-    // AUC). ONE conditional-aggregation pass over events (no join, no
-    // second scan); per-group power sums are exact scale-3 decimals, cast
-    // to double once, then mean/variance/t/dof run as the same IEEE tree
-    // in both engines (the zscore double-tree contract)
-    "events_ab_ttest" -> ((s, d) => {
-      val v = col("value").cast(DecimalType(18, 3))
-      def side(t: String, c: Column) = when(col("event_type") === t, c)
-      val g = Tables.events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .agg(
-          sum(side("click", lit(1L))).as("n_a"),
-          sum(side("click", v)).as("sa"),
-          sum(side("click", v * v)).as("saa"),
-          sum(side("purchase", lit(1L))).as("n_b"),
-          sum(side("purchase", v)).as("sb"),
-          sum(side("purchase", v * v)).as("sbb"))
-      val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
-      val ma = col("sa").cast("double") / na
-      val mb = col("sb").cast("double") / nb
-      val va = (na * col("saa").cast("double") -
-        col("sa").cast("double") * col("sa").cast("double")) / (na * (na - 1.0))
-      val vb = (nb * col("sbb").cast("double") -
-        col("sb").cast("double") * col("sb").cast("double")) / (nb * (nb - 1.0))
-      val sea = va / na; val seb = vb / nb
-      g.select(col("n_a"), col("n_b"),
-        round(ma, 6).as("mean_a"), round(mb, 6).as("mean_b"),
-        round((ma - mb) / sqrt(sea + seb), 6).as("t_stat"),
-        round((sea + seb) * (sea + seb) /
-          (sea * sea / (na - 1.0) + seb * seb / (nb - 1.0)), 6).as("dof"))
-    }),
-    // RFM customer segmentation: per-customer recency/frequency/monetary
-    // from one orders aggregation, median thresholds via the proven exact
-    // interpolated percentile (3 scalars, broadcast back — NOT an
-    // unpartitioned ntile window over the customer table, which is the
-    // shape that dies at 100 TB), then 2×2×2 high/low segments with
-    // decimal-exact revenue per segment
-    "agg_rfm_segments" -> ((s, d) => {
-      val cust = Tables.orders(s, d)
-        .groupBy(col("o_custkey"))
-        .agg(max(col("o_orderdate")).as("last_o"),
-          count(lit(1)).as("freq"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2))).as("mon"))
-        .crossJoin(broadcast(
-          Tables.orders(s, d).agg(max(col("o_orderdate")).as("maxd"))))
-        .withColumn("rec_days", datediff(col("maxd"), col("last_o")).cast(LongType))
-        .withColumn("mon_d", col("mon").cast("double"))
-      val th = cust.agg(
-        percentile(col("rec_days"), lit(0.5)).as("r50"),
-        percentile(col("freq"), lit(0.5)).as("f50"),
-        percentile(col("mon_d"), lit(0.5)).as("m50"))
-      cust.crossJoin(broadcast(th))
-        .select(
-          concat(
-            when(col("rec_days") <= col("r50"), lit("R")).otherwise(lit("r")),
-            when(col("freq") > col("f50"), lit("F")).otherwise(lit("f")),
-            when(col("mon_d") > col("m50"), lit("M")).otherwise(lit("m"))).as("segment"),
-          col("mon"))
-        .groupBy(col("segment"))
-        .agg(count(lit(1)).as("n_customers"),
-          sum(col("mon")).cast("double").as("revenue"))
-        .orderBy(col("segment"))
-    }),
-    // --- round-4b: retrieval re-ranking, warehouse dimension history,
-    // stats-based data skipping, profiling/integrity audit
-    // hybrid retrieval: BM25 lexical page + cosine vector page fused by
-    // reciprocal-rank fusion — scores are exact integer `scale DIV
-    // (60+rank)` contributions, so the fused order is engine-exact
-    "rerank_rrf_hybrid" -> ((s, d) => {
-      val dd = par(s, docs(s, d))
-      val lex = graft.operators.Rerank.rankPage(
-        TextAnalysis.bm25TopK(dd, terms = Seq("spark", "table", "query"), k = 20),
-        "doc_id", "bm25")
-      val vec = graft.operators.Rerank.rankPage(
-        emb(s, d).select(col("vec_id").as("doc_id"),
-            Distances.cosineSimLit(col("embedding"), Q64).as("cos_sim"))
-          .orderBy(col("cos_sim").desc, col("doc_id").asc).limit(20),
-        "doc_id", "cos_sim")
-      graft.operators.Rerank.rrf(lex, vec, "doc_id", k = K)
-    }),
-    // diversified top-k: maximal marginal relevance over the top-20 cosine
-    // page — distributed scoring + pair matrix, driver-side k-step argmax
-    // (the sims are 9-decimal-rounded doubles, so the unrolled DuckDB
-    // replay of the greedy selection is bit-exact)
-    "rerank_mmr_diverse" -> ((s, d) =>
-      graft.operators.Rerank.mmr(emb(s, d), Q64, Dim, nCand = 20, k = 5)
-        .orderBy(col("rank"))),
-    // SCD Type-2 dimension history from the event change log: collapse
-    // consecutive repeats per user, emit [valid_from, valid_to) + current
-    // flag — two windows over ONE (user, time) shuffle. The open interval
-    // carries a far-future sentinel instead of NULL (the warehouse
-    // convention, and it keeps the cross-engine hash off null-timestamp
-    // representation). Sentinel is 2200-01-01, NOT 9999-12-31: the classic
-    // sentinel overflows int64 NANOSECONDS (max 2262-04-11), and any
-    // ns-based reader of the parquet dump (pyarrow/pandas) silently wraps
-    // it to 1816-03-29 — which is exactly how it hash-mismatched in r04
-    "scd2_user_event_history" -> ((s, d) =>
-      Snapshot.scd2(Tables.events(s, d).filter(col("user_id") % 20 === 0),
-          "user_id", "event_type", "ts", "event_id")
-        .withColumn("valid_to",
-          coalesce(col("valid_to"), lit("2200-01-01 00:00:00").cast("timestamp")))
-        // valid_to joins the sort so duplicate-timestamp change points of
-        // one attribute order totally (remaining ties are full-row dups)
-        .orderBy(col("user_id"), col("valid_from"), col("event_type"), col("valid_to"))),
-    // zone-map data skipping: month-bucketed layout + per-bucket min/max
-    // stats; a 3-month range predicate scans only overlapping buckets
-    // (3 of ~83). The oracle computes the PLAIN filter — pruning must not
-    // change the answer — plus the stats-derived bucket count
-    "store_zonemap_prune" -> ((s, d) => {
-      val li = Tables.lineitem(s, d).withColumn("bucket",
-        (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast(LongType))
-      val lo = lit("1996-03-01").cast("timestamp")
-      val hi = lit("1996-06-01").cast("timestamp")
-      val (pruned, nb) = graft.index.ZoneMap.pruneScan(
-        li, col("bucket"), col("l_shipdate"), lo, hi)
-      pruned.agg(count(lit(1)).as("n_rows"),
-          drevenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
-        .withColumn("n_buckets_scanned", lit(nb.toLong))
-    }),
-    // column profiling (ANALYZE shape): per-column null/distinct counts +
-    // typed min/max over lineitem — two flat aggregation jobs (stats +
-    // multi-distinct), deliberately split (see Profile.profile)
-    "profile_lineitem" -> ((s, d) =>
-      graft.operators.Profile.profile(Tables.lineitem(s, d), Seq(
-          "l_orderkey" -> graft.operators.Profile.Num,
-          "l_quantity" -> graft.operators.Profile.Num,
-          "l_extendedprice" -> graft.operators.Profile.Num,
-          "l_returnflag" -> graft.operators.Profile.Str,
-          "l_shipdate" -> graft.operators.Profile.Ts))
-        .orderBy(col("col_name"))),
-    // the APPROXIMATE sibling (r14, split in r15): profileApprox is the
-    // 100 TB ANALYZE — HLL++ distinct instead of the Expand-based exact
-    // multi-distinct, which replicates the input |cols|× and makes
-    // profile_lineitem the sweep's slowest query. The BENCHED query is now
-    // the pure scale plan (r14 verdict #3): no exact distincts anywhere.
-    // The HLL estimate itself is engine-specific, so the hashed surface
-    // carries only portable columns plus a LOOSE in-plan sanity flag
-    // (1 <= estimate <= non-null rows × (1+3·rsd)) that keeps the sketch
-    // un-prunable; the tight sketch-vs-exact 3·rsd bounds check lives in
-    // profile_approx_audit, which stays under the hash gate.
-    "profile_approx" -> ((s, d) => {
-      import graft.operators.Profile
-      val li = Tables.lineitem(s, d)
-      val profCols = Seq(
-        "l_orderkey" -> Profile.Num, "l_quantity" -> Profile.Num,
-        "l_extendedprice" -> Profile.Num, "l_returnflag" -> Profile.Str,
-        "l_shipdate" -> Profile.Ts)
-      val ap = Profile.profileApprox(li, profCols, rsd = 0.02)
-      val nrows = li.agg(count(lit(1)).as("__n_rows"))
-      ap.crossJoin(broadcast(nrows))
-        .select(col("col_name"), col("n_nulls"),
-          when(col("n_distinct_approx") >= least(lit(1L), col("__n_rows") - col("n_nulls")) &&
-            col("n_distinct_approx").cast("double") <=
-              (col("__n_rows") - col("n_nulls")).cast("double") * 1.06, 1)
-            .otherwise(0).as("approx_sane"),
-          col("min_num"), col("max_num"), col("min_str"), col("max_str"))
-        .orderBy(col("col_name"))
-    }),
-    // the AUDIT arm of the split: exact distincts computed alongside the
-    // sketch (gate-scale only — the ANALYZE plan above never pays them)
-    // and a within-3·rsd flag per column; a sketch drifting out of its
-    // error contract flips the flag and FAILS the hash gate (the
-    // agg_sketches self-validation device). rsd=0.02 puts the 15% gate
-    // bound at 7.5σ.
-    "profile_approx_audit" -> ((s, d) => {
-      import graft.operators.Profile
-      val li = Tables.lineitem(s, d)
-      val profCols = Seq(
-        "l_orderkey" -> Profile.Num, "l_quantity" -> Profile.Num,
-        "l_extendedprice" -> Profile.Num, "l_returnflag" -> Profile.Str,
-        "l_shipdate" -> Profile.Ts)
-      val ap = Profile.profileApprox(li, profCols, rsd = 0.02)
-      val dctAggs = profCols.map { case (c, _) =>
-        count_distinct(col(c)).as(s"${c}__dct") }
-      val exactRows = li.agg(dctAggs.head, dctAggs.tail: _*)
-        .select(explode(array(profCols.map { case (c, _) =>
-          struct(lit(c).as("col_name"),
-            col(s"${c}__dct").as("n_distinct_exact")) }: _*)).as("e"))
-        .select(col("e.*"))
-      ap.join(exactRows, "col_name")
-        .select(col("col_name"), col("n_nulls"), col("n_distinct_exact"),
-          when(abs(col("n_distinct_approx") - col("n_distinct_exact")).cast("double") <=
-            col("n_distinct_exact").cast("double") * 0.15, 1).otherwise(0)
-            .as("hll_within_bound"),
-          col("min_num"), col("max_num"), col("min_str"), col("max_str"))
-        .orderBy(col("col_name"))
-    }),
-    // referential-integrity audit: FK orphan + PK duplicate checks, with
-    // violations INJECTED deterministically (3 orphaned lineitem rows, 2
-    // duplicated embedding ids) so the audit path is exercised non-vacuously
-    "audit_referential" -> ((s, d) => {
-      import graft.operators.Profile
-      val li = Tables.lineitem(s, d)
-      val badLi = li.orderBy(col("l_orderkey"), col("l_linenumber")).limit(3)
-        .withColumn("l_orderkey", -col("l_orderkey") - 1)
-      val liAug = li.unionByName(badLi)
-      val embAll = emb(s, d)
-      val embAug = embAll.unionByName(embAll.orderBy(col("vec_id")).limit(2))
-      Profile.audit(Seq(
-        "lineitem_orphan_order" ->
-          Profile.orphans(liAug, Tables.orders(s, d), "l_orderkey", "o_orderkey"),
-        "orders_orphan_customer" ->
-          Profile.orphans(Tables.orders(s, d), Tables.customer(s, d), "o_custkey", "c_custkey"),
-        "customer_orphan_nation" ->
-          Profile.orphans(Tables.customer(s, d), Tables.nation(s, d), "c_nationkey", "n_nationkey"),
-        "embeddings_dup_pk" -> Profile.dupKeys(embAug, "vec_id"),
-        "orders_dup_pk" -> Profile.dupKeys(Tables.orders(s, d), "o_orderkey")))
-        .orderBy(col("check_name"))
-    }),
-    // time-weighted average of event value per user: each sample weighted
-    // by WHOLE SECONDS until the next — the statistic uneven sampling
-    // needs (products in exact decimal × integer seconds, one double
-    // division at the end; see TimeSeries for why not microseconds)
-    "events_time_weighted_avg" -> ((s, d) =>
-      graft.operators.TimeSeries.timeWeightedAvg(
-          Tables.events(s, d).filter(col("user_id") % 10 === 0),
-          "user_id", "ts", "value", "event_id")
-        .orderBy(col("user_id"))),
-    // deterministic k-fold cross-validation split: md5-mod fold assignment
-    // (reproducible across engines/runs, no RNG state) + per-fold balance
-    // stats — the train/eval split step of a training-data pipeline
-    "sample_kfold_assign" -> ((s, d) =>
-      docs(s, d)
-        .withColumn("fold", pmod(Dedup.md5Int32(col("doc_id").cast("string")), lit(5)))
-        .groupBy(col("fold"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_en"),
-          sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("fold"))),
-    // similarity-graph structure: nodes/edges/triangles/max-degree of the
-    // cosine pair graph — how clustered is the near-duplicate structure
-    // (triangles via the two-join wedge iterator, each counted once)
-    "graph_similarity_summary" -> ((s, d) =>
-      graft.operators.GraphOps.summary(simEdges(s, d, target = 200, tau = 0.25))),
-    // PageRank over the same similarity graph (GraphOps.pageRank): 3 fixed
-    // supersteps, each one join + one aggregation on node id; per-edge
-    // contributions 9-decimal-quantized so the unrolled SQL oracle replays
-    // the whole loop (the Pca fixed-iteration contract, on a graph)
-    "graph_pagerank" -> ((s, d) =>
-      graft.operators.GraphOps.pageRank(
-        simEdges(s, d, target = 200, tau = 0.25), iters = 3).orderBy(col("node"))),
-    // multi-source BFS hop distances over a denser similarity graph (the
-    // vec_id % 5 sample, cos >= 0.25): distance from the label-1 anchor
-    // set in 3 fixed supersteps — each superstep joins only the FRONTIER
-    // (nodes first reached last round) against the edge list; hops are
-    // integers so the unrolled oracle needs no quantization at all
-    "graph_bfs_hops" -> ((s, d) => {
-      val (ve, _) = sampleTarget(s, d, 250)
-      val seeds = ve.filter(col("label") === 1).select(col("vec_id").as("node"))
-      graft.operators.GraphOps.bfsHops(
-          simEdges(s, d, target = 250, tau = 0.25), seeds, maxHops = 3)
-        .orderBy(col("node"))
-    }),
-    // semi-supervised label propagation on the same graph: every 4th
-    // sampled node keeps its true label (clamped seeds), 2 rounds of
-    // plurality voting with min-label tie-break — integer votes, so the
-    // loop replays engine-exact; the winner per node is ONE aggregation
-    // (max of (cnt, -label) structs), not a rank window
-    "graph_label_prop" -> ((s, d) => {
-      val (ve, m) = sampleTarget(s, d, 250)
-      // clamped seeds: every 4th sampled node (vec_id % 4m == 0 — the
-      // size-targeted analog of the old %5-sample/%20-seed split)
-      val seeds = ve.filter(col("vec_id") % (4 * m) === 0)
-        .select(col("vec_id").as("node"), col("label"))
-      graft.operators.GraphOps.labelProp(
-          simEdges(s, d, target = 250, tau = 0.25), seeds, iters = 2)
-        .orderBy(col("node"))
-    }),
-    // Welch's unequal-variance t-test of each event type's value against
-    // the REST of the corpus (the experiment readout): ONE aggregation
-    // pass collapses the table to per-group exact decimal power sums; the
-    // complement's sums come from an unpartitioned window over |groups|
-    // rows by exact subtraction — the input is never scanned twice
-    "stats_welch_value" -> ((s, d) =>
-      graft.operators.Stats.welchTTest(Tables.events(s, d), "event_type", "value")
-        .orderBy(col("grp"))),
-    // equi-depth histogram of order totals: boundaries are exact i/8
-    // quantiles (the proven percentile ≡ quantile_cont contract), so the
-    // bucket counts are engine-exact integers; classification is a
-    // codegen'd indicator sum against the broadcast 1-row boundary set —
-    // the skew-proof histogram an optimizer keeps where fixed-width bins
-    // collapse under a heavy tail
-    "agg_equidepth_hist" -> ((s, d) =>
-      graft.operators.Stats.equiDepthHistogram(Tables.orders(s, d), "o_totalprice", k = 8)
-        .orderBy(col("bucket"))),
-    // bounded-lookback EWMA over the hourly event-type series: the corpus
-    // collapses to |types|×|hours| bucket means first; the decay is the
-    // series self-joined through a broadcast 24-row offset table (one
-    // equi-shuffle), weights renormalized over PRESENT buckets so gaps
-    // don't drag the average toward zero
-    "events_ewma_hourly" -> ((s, d) =>
-      graft.operators.TimeSeries.ewmaHourly(
-          Tables.events(s, d), "event_type", "ts", "value",
-          alpha = 0.9, lookback = 24)
-        .orderBy(col("key"), col("bucket"))),
-    // distributed PCA (top principal direction of the first 8 dims): the
-    // corpus collapses to its 8×8 second-moment Gram matrix in ONE
-    // aggregation pass (decimal-exact sums), then fixed-seed power
-    // iteration on the driver — the whole pipeline, Gram + 3 iterations +
-    // normalizations, is replayed by the unrolled SQL oracle bit-for-bit
-    "vec_pca_top_component" -> ((s, d) =>
-      graft.operators.Pca.topComponent(emb(s, d), dims = 8, iters = 3)
-        .orderBy(col("dim_idx"))),
-    // weighted sampling WITHOUT replacement (Efraimidis–Spirakis): key =
-    // -ln(u)/w with u a deterministic md5 uniform and w a quality proxy;
-    // the k smallest keys ARE the weighted sample — RNG-free, reproducible,
-    // one codegen'd pass + distributed top-k (keys rounded to 6 decimals
-    // before ranking so sub-ulp ln() drift can't flip the order)
-    "sample_weighted_noreplace" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"), col("n_chars"),
-          round(
-            -log((pmod(Dedup.md5Int32(col("doc_id").cast("string")), lit(1048576))
-              .cast("double") + 1.0) / 1048577.0) /
-            least(col("n_chars").cast("double") / 500.0, lit(1.0)), 6).as("es_key"))
-        .orderBy(col("es_key").asc, col("doc_id").asc)
-        .limit(50)),
-    // corpus-level boilerplate removal (C4-style "drop lines repeated
-    // across documents", over width-3 word segments): explode → distinct-
-    // count → anti-join → position-ordered reconstruction; 231 repeated
-    // segments at sf0.01 make the removal path non-vacuous
-    "text_boilerplate_removal" -> ((s, d) =>
-      TextAnalysis.boilerplateRemove(par(s, docs(s, d)), width = 3, minDocs = 3)
-        .orderBy(col("doc_id"))),
-    // binned range join: the same price-band semantics as
-    // range_join_price_bands (same oracle), but planned as an EQUI join —
-    // intervals replicate to the integer bins they overlap and the join
-    // hash-shuffles on the bin, the plan that survives when the interval
-    // side outgrows broadcast-nested-loop (pinned in BinnedRangeJoinSpec)
-    "range_join_binned" -> ((s, d) => {
-      import s.implicits._
-      val bands = Seq(
-        ("b0_lt50k", 0.0, 50000.0), ("b1_50k_100k", 50000.0, 100000.0),
-        ("b2_100k_200k", 100000.0, 200000.0), ("b3_ge200k", 200000.0, 1e18))
-        .toDF("band", "lo", "hi")
-      graft.operators.BinnedRangeJoin.join(
-          Tables.orders(s, d), col("o_totalprice"), bands,
-          "lo", "hi", binWidth = 50000.0, hiClamp = 1e6)
-        .groupBy(col("band"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-        .orderBy(col("band"))
-    }),
-    // multi-probe hyperplane LSH top-k: probe the query's bucket + every
-    // Hamming-1 neighbor (the recall lever that needs no extra tables),
-    // exact re-rank inside the candidates. Fixed literal planes → the
-    // whole approximate path is hash-checked, not rows-only
-    "ann_lsh_multiprobe_topk" -> ((s, d) =>
-      graft.operators.Ann.lshMultiProbeTopK(
-        emb(s, d), Fixtures.Planes16.take(8), Q64, K)),
-    // robust outlier detection: median + MAD per group (both from the
-    // proven exact-interpolated percentile), flag |x − med| > 2·MAD —
-    // the outlier rule a skewed money column needs where mean/stddev
-    // would be dragged by the outliers themselves. Three passes, each a
-    // groupBy + broadcast join of the 5-row stats table
-    "agg_mad_outliers" -> ((s, d) => {
-      val li = Tables.orders(s, d)
-      val med = li.groupBy(col("o_orderpriority"))
-        .agg(percentile(col("o_totalprice"), lit(0.5)).as("med"))
-      val mad = li.join(broadcast(med), Seq("o_orderpriority"))
-        .groupBy(col("o_orderpriority"))
-        .agg(max(col("med")).as("med"),
-          percentile(abs(col("o_totalprice") - col("med")), lit(0.5)).as("mad"))
-      li.join(broadcast(mad), Seq("o_orderpriority"))
-        .groupBy(col("o_orderpriority"))
-        .agg(max(col("med")).as("med"), max(col("mad")).as("mad"),
-          sum(when(abs(col("o_totalprice") - col("med")) > lit(2.0) * col("mad"), 1L)
-            .otherwise(0L)).as("n_outliers"),
-          count(lit(1)).as("n"))
-        .orderBy(col("o_orderpriority"))
-    }),
-    // chi-square independence over the lang × source contingency table
-    // (corpus-composition drift test): marginals and observed counts are
-    // three tiny aggregations of one scan; zero cells enter with their
-    // expected mass (marginal cross join ⟕ observed); per-cell terms are
-    // 9-decimal-quantized so the summed statistic is engine-exact
-    "text_chi2_lang_source" -> ((s, d) => {
-      val dd = docs(s, d)
-      val rt = dd.groupBy(col("lang")).agg(count(lit(1)).as("rt"))
-      val ct = dd.groupBy(col("source")).agg(count(lit(1)).as("ct"))
-      val o = dd.groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o"))
-      val nn = dd.agg(count(lit(1)).as("nn"))
-      val e = (col("rt") * col("ct")).cast("double") / col("nn")
-      val dev = col("o").cast("double") - col("e")
-      rt.crossJoin(ct).crossJoin(broadcast(nn))
-        .join(o, Seq("lang", "source"), "left")
-        .withColumn("o", coalesce(col("o"), lit(0L)))
-        .withColumn("e", e)
-        .withColumn("term", round(dev * dev / col("e"), 9).cast(DecimalType(28, 9)))
-        .agg(count(lit(1)).as("n_cells"), sum(col("term")).cast("double").as("chi2"))
-    }),
-    // token-budget mixture planning: per-language corpus token mass → the
-    // keep rate that hits a fixed per-language budget (min(1, B/tokens)) —
-    // the sizing step that precedes sample_domain_mix's md5-gated
-    // execution; one aggregation, rates derived from broadcastable totals
-    "sample_token_budget_plan" -> ((s, d) =>
-      docs(s, d)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextAnalysis.tokenEstimate(col("text"))).as("tokens"))
-        .withColumn("rate",
-          least(lit(1.0), lit(50000.0) / col("tokens").cast("double")))
-        .withColumn("expected_tokens",
-          round(col("rate") * col("tokens").cast("double"), 3))
-        .orderBy(col("lang"))),
-    // temperature-weighted domain mixing (the T5/mT5 alpha-sampling rule):
-    // per-language mass n^alpha normalized into mixture weights q, keep
-    // rate min(1, T·q/n), then the SAME md5-permille gate executes the
-    // plan — both the sizing math (pow quantized to 9 decimals, decimal
-    // window total) and the gated sample are oracle-replayed. One corpus
-    // aggregation + one broadcast-join scan; the window runs over |langs|
-    "sample_temperature_mix" -> ((s, d) => {
-      val alpha = 0.3
-      val plan = docs(s, d).groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
-        .withColumn("w",
-          round(pow(col("n_docs").cast("double"), lit(alpha)), 9)
-            .cast(DecimalType(18, 9)))
-        .withColumn("q", round(col("w").cast("double") /
-          sum(col("w")).over(Window.partitionBy()).cast("double"), 9))
-        .withColumn("rate",
-          least(lit(1.0), round(lit(1000.0) * col("q") / col("n_docs").cast("double"), 9)))
-        .select(col("lang"), col("n_docs"), col("rate"))
-      val sampled = docs(s, d).join(broadcast(plan), "lang")
-        .filter(pmod(Dedup.md5Int32(col("doc_id").cast("string")), lit(1000000L)) <
-          floor(col("rate") * lit(1000000.0)))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_sampled"), sum(col("doc_id")).as("id_sum"))
-      plan.join(sampled, Seq("lang"), "left")
-        .select(col("lang"), col("n_docs"), col("rate"),
-          coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
-          coalesce(col("id_sum"), lit(0L)).as("id_sum"))
-        .orderBy(col("lang"))
-    }),
-    // length-bucketed batching report (dynamic-batching prep): docs
-    // bucketed by whitespace-token count (width 16), per bucket the
-    // padding arithmetic a batched trainer/inference server pays when
-    // padding to the bucket max — batches of 32, padded = n_docs·max_len,
-    // efficiency = Σlen/padded. One |docs|→|buckets| aggregation; the
-    // integer sums are exact, the single division is rounded at 9
-    "batch_length_buckets" -> ((s, d) =>
-      par(s, docs(s, d))
-        .select(TextAnalysis.nWords(col("text")).cast(LongType).as("len"))
-        .withColumn("bucket", floor(col("len") / 16).cast(LongType))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          max(col("len")).as("max_len"),
-          sum(col("len")).as("sum_len"))
-        .withColumn("n_batches", ceil(col("n_docs").cast("double") / 32.0).cast(LongType))
-        .withColumn("padded_tokens", (col("n_docs") * col("max_len")).cast(LongType))
-        .withColumn("pad_waste", (col("padded_tokens") - col("sum_len")).cast(LongType))
-        .withColumn("efficiency",
-          round(col("sum_len").cast("double") / col("padded_tokens").cast("double"), 9))
-        .orderBy(col("bucket"))),
-    // deterministic round-robin source interleaving (training-order
-    // construction): rank docs within each source by doc_id, dense-index
-    // the sources, global position = (rank-1)·n_sources + source_idx — no
-    // contiguous training window is dominated by one source. The source
-    // index/count come from a |sources|-row aggregate (broadcast back);
-    // the per-source rank is one key-local window; first 100 positions
-    "sample_interleave_sources" -> ((s, d) => {
-      val srcs = docs(s, d).groupBy(col("source")).agg(count(lit(1)).as("n_src_docs"))
-      val idx = srcs
-        .withColumn("source_idx",
-          row_number().over(Window.orderBy(col("source"))).cast(LongType))
-        .withColumn("n_sources", count(lit(1)).over(Window.partitionBy()).cast(LongType))
-      val ranked = docs(s, d)
-        .withColumn("r", row_number().over(
-          Window.partitionBy(col("source")).orderBy(col("doc_id"))).cast(LongType))
-      ranked.join(broadcast(idx), "source")
-        .withColumn("pos", (col("r") - 1) * col("n_sources") + (col("source_idx") - 1))
-        .select(col("pos"), col("source"), col("doc_id"))
-        .orderBy(col("pos"), col("source"))
-        .limit(100)
-    }),
-    // rank-based AUC of the fastText-shape classifier against the binary
-    // en/non-en label — the calibration statistic a quality-gate deploy
-    // monitors. Pair counting over the per-SCORE histogram (concordant +
-    // half of ties), so everything but the final division is integer-
-    // exact; the running-negatives window is over |distinct scores| rows
-    // (at 100 TB, bucket the scores first — the histogram, not the
-    // corpus, bounds the window)
-    "rank_auc_classifier" -> ((s, d) => {
-      val g = par(s, docs(s, d))
-        .select(TextAnalysis.classifierRawScore(col("text")).as("score"),
-          (col("lang") === "en").cast("int").as("pos"))
-        .groupBy(col("score"))
-        .agg(sum(col("pos")).as("pos_g"), sum(lit(1) - col("pos")).as("neg_g"))
-      val below = Window.orderBy(col("score"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      g.withColumn("neg_below", coalesce(sum(col("neg_g")).over(below), lit(0L)))
-        .agg(sum(col("pos_g")).as("n_pos"), sum(col("neg_g")).as("n_neg"),
-          sum(col("pos_g") * col("neg_below")).as("conc"),
-          sum(col("pos_g") * col("neg_g")).as("tied"))
-        .select(col("n_pos"), col("n_neg"),
-          ((lit(2L) * col("conc") + col("tied")).cast("double") /
-            (lit(2L) * col("n_pos") * col("n_neg")).cast("double")).as("auc"))
-    }),
-    // skyline (Pareto frontier): orders no other order beats on BOTH
-    // price (lower) and recency (later) — the preference-query operator;
-    // banded scale form (per-band maxima broadcast prefilter + exact
-    // window on the survivors), ≡ the brute NOT EXISTS oracle
-    "skyline_orders" -> ((s, d) =>
-      graft.operators.Skyline.pareto2dBanded(
-          Tables.orders(s, d).filter(col("o_custkey") % 10 === 0)
-            .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"),
-              round(col("o_totalprice") * 100).cast(LongType).as("xc"),
-              col("o_orderdate").cast("timestamp").cast(LongType).as("ye")),
-          col("xc"), col("ye"), bandWidth = 1000000L)
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
-        .orderBy(col("o_orderkey"))),
-    // temporal (validity-interval) join against the SCD2 dimension: each
-    // purchase picks up the browsing state valid AT its timestamp —
-    // fact.ts ∈ [valid_from, valid_to) of the user's non-purchase history;
-    // purchases before any history row keep NULL state (left join). The
-    // equi key (user) carries the join; the interval predicate filters
-    // within the key's (small) history
-    "scd2_temporal_join" -> ((s, d) => {
-      val ev = Tables.events(s, d).filter(col("user_id") % 20 === 0)
-      val hist = Snapshot.scd2(ev.filter(col("event_type") =!= "purchase"),
-          "user_id", "event_type", "ts", "event_id")
-        .withColumn("valid_to",
-          coalesce(col("valid_to"), lit("9999-12-31 00:00:00").cast("timestamp")))
-        .select(col("user_id").as("h_user"), col("event_type").as("state"),
-          col("valid_from"), col("valid_to"))
-      ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-        .join(hist, col("user_id") === col("h_user") &&
-          col("ts") >= col("valid_from") && col("ts") < col("valid_to"), "left")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("state"), col("valid_from").as("state_since"))
-        .orderBy(col("event_id"))
-    }),
-    // PMI bigram collocations: corpus bigram/unigram counts → pointwise
-    // mutual information ranking (Church–Hanks). One aggregation per
-    // count table, 1-row broadcast totals, |vocab|-sized count joins; all
-    // five ln terms 9-decimal-quantized so rank AND value are engine-exact
-    "text_pmi_bigrams" -> ((s, d) =>
-      TextAnalysis.pmiBigrams(par(s, docs(s, d)), minCount = 5, k = 20)),
-    // per-document letter-distribution Shannon entropy (Gopher-family
-    // quality signal): 26 translate length-diffs per row — no explode,
-    // ZERO shuffles; exact-decimal weighted ln sum, one double division
-    "text_letter_entropy" -> ((s, d) =>
-      TextAnalysis.letterEntropy(docs(s, d)).orderBy(col("doc_id"))),
-    // grid-density clustering (the corpus-scale DBSCAN analog): points →
-    // 2-D cell histogram (the ONE corpus-scale shuffle; |cells| rows out
-    // regardless of input size) → core cells ≥ minPts → 8-neighbor
-    // adjacency as an equi-join → connected components. Pairwise point
-    // distances never materialize
-    "cluster_density_grid" -> ((s, d) =>
-      graft.operators.DensityCluster.gridClusterSummary(
-          emb(s, d), "embedding", densityCfg, minPts = DensityMinPts)
-        .select(col("cluster"), col("n_cells"), col("n_points"))
-        .orderBy(col("cluster"))),
-    // per-point cluster assignment (the DBSCAN output contract): broadcast
-    // the grid-bounded label table against the point scan; noise = -1
-    "cluster_density_assign" -> ((s, d) =>
-      graft.operators.DensityCluster.assign(
-          emb(s, d), "vec_id", "embedding", densityCfg, minPts = DensityMinPts)
-        .orderBy(col("vec_id"))),
-    // --- round-4c: distance-based outlier scoring, incremental index
-    // maintenance, bucket-co-located joins
-    // k-th-NN-distance outlier scores (Ramaswamy SIGMOD'00) over a scored
-    // subset vs the full corpus — the embedding-noise gate of a curation
-    // pipeline. kth dist = MAX over the k nearest (order-independent ⇒
-    // engine-exact); self-pair excluded
-    "knn_outlier_kth_dist" -> ((s, d) => {
-      val db = emb(s, d)
-      graft.operators.Outlier.kthNnDistance(
-          db, db.filter(col("vec_id") % 7 === 0), k = 5, dim = Dim,
-          threshold = 2.5)
-        .orderBy(col("vec_id"))
-    }),
-    // incremental IVF maintenance: only the NEW batch is assigned to the
-    // (fixed) codebook; per-cell counts merge additively with the base
-    // index stats — the 100 TB base is never rescanned. Both assignment
-    // passes + the merge are replayed by the oracle (argmin over the same
-    // literal centroids)
-    "ann_ivf_incremental" -> ((s, d) => {
-      val cents = IncrCentroids
-      val db = emb(s, d)
-      val baseCounts = Ann.assign(db.filter(col("vec_id") % 2 === 0), cents)
-        .groupBy(col("ivf_cell")).agg(count(lit(1)).as("n_base"))
-      val batchCounts = Ann.assign(db.filter(col("vec_id") % 2 =!= 0), cents)
-        .groupBy(col("ivf_cell")).agg(count(lit(1)).as("n_batch"))
-      baseCounts.join(batchCounts, Seq("ivf_cell"), "full_outer")
-        .select(col("ivf_cell"),
-          coalesce(col("n_base"), lit(0L)).as("n_base"),
-          coalesce(col("n_batch"), lit(0L)).as("n_batch"),
-          (coalesce(col("n_base"), lit(0L)) +
-            coalesce(col("n_batch"), lit(0L))).as("n_after"))
-        .orderBy(col("ivf_cell"))
-    }),
-    // bucket-co-located join: both sides written bucketed on the join key,
-    // then joined reading the buckets — at 100 TB the fact/fact join runs
-    // with ZERO shuffle (plan pinned in BucketedJoinSpec; result oracle =
-    // the plain join). The layout is produced by `prepareFixtures` (which
-    // Verify/Bench call once up front), so this builder only READS; the
-    // guard below self-prepares only when a standalone caller skipped the
-    // prep — keeping the builder side-effect-free on every normal path.
-    "join_bucketed_colocated" -> ((s, d) => {
-      if (!s.catalog.tableExists("graft_orders_bk") ||
-          !s.catalog.tableExists("graft_customer_bk"))
-        prepareFixtures(s, d)
-      s.table("graft_orders_bk")
-        .join(s.table("graft_customer_bk"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-        .orderBy(col("c_mktsegment"))
-    }),
-    // --- round-5: nearest-mode as-of, gaps-and-islands, sliding median,
-    // fractional-epoch mixing, hash-checked cardinality sketch
-    // nearest-in-time join: each purchase attached to the user's CLOSEST
-    // click in either direction (tie → the earlier one) — attribution
-    // when the touchpoint can trail the conversion. One shuffle on
-    // user_id; backward + forward candidates from two frames over the
-    // same exchange
-    "asof_join_nearest" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      AsOfJoin.asOfNearest(
-        ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("ts"), col("user_id")),
-        ev.filter(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-            col("ts").as("c_ts")),
-        keyL = "user_id", keyR = "c_user", timeL = "ts", timeR = "c_ts",
-        payloadR = Seq("click_id"), tiebreakR = "click_id")
-        .select(col("event_id"), col("user_id"), col("click_id"), col("asof_dt_s"))
-        .orderBy(col("event_id"))
-    }),
-    // longest consecutive-day activity streak per user (gaps-and-islands:
-    // day_number − row_number island constant) — pure integer day
-    // arithmetic, engine-exact
-    "events_streak_longest" -> ((s, d) =>
-      graft.operators.TimeSeries.longestDailyStreak(
-          Tables.events(s, d), "user_id", "ts")
-        .select(col("key").as("user_id"), col("n_active_days"),
-          col("longest_streak"))
-        .orderBy(col("user_id"))),
-    // exact trailing-7-row median of the per-type daily value sums — the
-    // robust smoother (spikes can't drag a median the way they drag the
-    // rolling mean). collect_list over a ROWS frame holds ≤ 7 doubles per
-    // row; partitioned by event_type, so no global window. round(6) on
-    // both engines absorbs the even-count midpoint's ULP association
-    "window_rolling_median" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          unix_timestamp(date_trunc("day", col("ts"))).as("day_epoch"))
-        .agg(dsum(col("value"), 3).as("v_day"))
-      graft.operators.TimeSeries.rollingMedian(daily, Seq(col("event_type")),
-          col("day_epoch"), col("v_day"), width = 7, outCol = "med7")
-        .select(col("event_type"), col("day_epoch"), col("v_day"),
-          round(col("med7"), 6).as("med7"))
-        .orderBy(col("event_type"), col("day_epoch"))
-    }),
-    // deterministic sharded epoch shuffle: shard = md5(seed‖id) mod N,
-    // per-shard position by the same hash — a seed-keyed pseudo-random
-    // permutation via a PARTITIONED window (never the single-partition
-    // global-sort cliff); every row's position recomputable from (seed,id).
-    // N is COUNT-derived (⌈n/64⌉ — 8 at the 500-doc fixture, so historical
-    // hashes hold), keeping per-shard window partitions bounded at any
-    // corpus size instead of O(corpus/8)
-    "sample_epoch_shuffle" -> ((s, d) =>
-      graft.operators.Governance.epochShuffle(
-          docs(s, d).select(col("doc_id")), col("doc_id"), seed = 7,
-          nShards = graft.operators.Governance.shardCountFor(docCount(s, d)))
-        .orderBy(col("doc_id"))),
-    // shard-export integrity manifest (r11): per shard of the epoch
-    // shuffle, row count + token mass + md5 over the doc ids in POSITION
-    // order — what a training-data exporter publishes next to its shard
-    // files so consumers can verify nothing was truncated or re-ordered.
-    // Pure function of (seed, ids) ⇒ the digest itself hash-checks
-    "sample_shard_manifest" -> ((s, d) =>
-      graft.operators.Governance.shardManifest(
-          graft.operators.Governance.epochShuffle(
-            docs(s, d).select(col("doc_id"),
-              TextAnalysis.nWords(col("text")).cast("long").as("n_tok")),
-            col("doc_id"), seed = 7,
-            nShards = graft.operators.Governance.shardCountFor(docCount(s, d))),
-          col("doc_id"), col("n_tok"))
-        .orderBy(col("shard"))),
-    // fractional-epoch upsampling: per-source rate in [1.00, 3.99] from
-    // the source-name hash; each doc emits ⌊rate⌋ copies plus a
-    // deterministic id-hash-selected extra — the materialized "2.5
-    // epochs of wiki" training mixture, replayed row-for-row by the
-    // oracle's generate_series. Map-side only: no shuffle before the
-    // presentation sort
-    "sample_epoch_upsample" -> ((s, d) => {
-      val rate = lit(1.0) +
-        pmod(Dedup.md5Int32(col("source")), lit(300L)).cast("double") / lit(100.0)
-      graft.operators.Governance.epochUpsample(
-          docs(s, d).select(col("doc_id"), col("source"))
-            .withColumn("rate", round(rate, 2)),
-          col("doc_id"), col("rate"))
-        .select(col("doc_id"), col("source"), col("rate"), col("copy_idx"))
-        .orderBy(col("doc_id"), col("copy_idx"))
-    }),
-    // per-source language-mix Shannon entropy — the diversity statistic a
-    // corpus governance report tracks per provider (0 = monolingual,
-    // ln(5) ≈ 1.609 = uniform over the fixture's five languages). One
-    // |src×lang| aggregation; the −Σ p·ln p terms are 9-decimal-quantized
-    // pre-sum (the chi2/PMI ln contract) so the statistic is engine-exact
-    "text_lang_mix_entropy" -> ((s, d) => {
-      val cnt = docs(s, d).groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n"))
-      val tot = cnt.groupBy(col("source")).agg(sum(col("n")).as("n_src"))
-      cnt.join(tot, "source")
-        .withColumn("p", col("n").cast("double") / col("n_src").cast("double"))
-        .withColumn("term",
-          round(-col("p") * log(col("p")), 9).cast(DecimalType(18, 9)))
-        .groupBy(col("source"))
-        .agg(max(col("n_src")).as("n_docs"),
-          count(lit(1)).as("n_langs"),
-          sum(col("term")).cast("double").as("lang_entropy"))
-        .orderBy(col("source"))
-    }),
-    // data-quality EXPECTATIONS suite (the dbt-test / Great-Expectations
-    // shape): declarative per-rule predicates over one table, evaluated
-    // in ONE conditional-aggregation pass — n_checked/n_failed per rule,
-    // no per-rule rescans. Two rules are deliberately violated by the
-    // fixture so the failure path is non-vacuous
-    "audit_expectations" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      val rules: Seq[(String, Column)] = Seq(
-        ("quantity_in_1_50", col("l_quantity").between(1, 50)),
-        ("discount_le_008", col("l_discount") >= 0.0 && col("l_discount") <= 0.08),
-        ("shipdate_not_null", col("l_shipdate").isNotNull),
-        ("price_positive", col("l_extendedprice") > 0.0),
-        ("price_under_60k", col("l_extendedprice") < 60000.0))
-      val agg = li.agg(count(lit(1)).as("n_checked"),
-        rules.map { case (n, p) =>
-          sum(when(!coalesce(p, lit(false)), 1L).otherwise(0L)).as(s"f_$n") }: _*)
-      val rows = rules.map { case (n, _) =>
-        agg.select(lit(n).as("rule"), col("n_checked"),
-          col(s"f_$n").as("n_failed")) }
-      rows.reduce(_.unionByName(_))
-        .withColumn("passed", (col("n_failed") === 0L).cast("int"))
-        .orderBy(col("rule"))
-    }),
-    // RETRACTABLE incremental aggregate (Flink-style): the daily revenue
-    // aggregate is refreshed from a CDC changelog carrying BOTH inserts
-    // and deletes — updated = base + Σinserts − Σdeletes, never a
-    // recompute of the base; the oracle recomputes from scratch and the
-    // two must agree exactly (decimal sums make subtraction lossless)
-    "agg_incremental_retract" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("event_id"), col("ts"), col("value"))
-        .withColumn("day_epoch", unix_timestamp(date_trunc("day", col("ts"))))
-      val deletes = ev.filter(col("event_id") % 13 === 0)
-      val inserts = ev.filter(col("event_id") % 17 === 0)
-        .select((col("event_id") + lit(10000000L)).as("event_id"),
-          col("ts"), round(col("value") * 2, 3).as("value"), col("day_epoch"))
-      def dayAgg(df: DataFrame) = df.groupBy(col("day_epoch"))
-        .agg(sum(round(col("value"), 3).cast(DecimalType(18, 3))).as("sv"),
-          count(lit(1)).as("n"))
-      val base = dayAgg(ev)
-      val dIns = dayAgg(inserts).withColumnRenamed("sv", "sv_i").withColumnRenamed("n", "n_i")
-      val dDel = dayAgg(deletes).withColumnRenamed("sv", "sv_d").withColumnRenamed("n", "n_d")
-      base.join(dIns, Seq("day_epoch"), "left").join(dDel, Seq("day_epoch"), "left")
-        .select(col("day_epoch"),
-          (col("sv") + coalesce(col("sv_i"), lit(0).cast(DecimalType(18, 3)))
-            - coalesce(col("sv_d"), lit(0).cast(DecimalType(18, 3))))
-            .cast("double").as("v_sum"),
-          (col("n") + coalesce(col("n_i"), lit(0L)) - coalesce(col("n_d"), lit(0L)))
-            .as("n_events"))
-        .orderBy(col("day_epoch"))
-    }),
-    // the FULL mixture-rate axis through one operator: per-source rates
-    // spanning [0.30, 3.27] — sources below 1.0 Bernoulli-DOWNsample,
-    // above 1.0 fractionally upsample; per-source realized copy counts
-    // and rates, every branch replayed by the oracle
-    "sample_mixture_rates" -> ((s, d) => {
-      val rate = round(lit(0.3) +
-        pmod(Dedup.md5Int32(col("source")), lit(298L)).cast("double") / lit(100.0), 2)
-      graft.operators.Governance.epochUpsample(
-          docs(s, d).select(col("doc_id"), col("source"))
-            .withColumn("rate", rate),
-          col("doc_id"), col("rate"))
-        .groupBy(col("source"), col("rate"))
-        .agg(countDistinct(col("doc_id")).as("n_docs_kept"),
-          count(lit(1)).as("n_copies"))
-        .orderBy(col("source"))
-    }),
-    // Greedy k-center coreset (farthest-first traversal, Gonzalez 1985)
-    // over the embedding corpus: the 8 maximally-spread exemplars.
-    // k scans — each ONE codegen'd VecMinDistL2 pass + distributed top-1
-    // (TakeOrderedAndProject, no shuffle); driver holds the 8 centers
-    // only. The selection is data-DEPENDENT, so DuckDB replays the whole
-    // greedy chain bit-for-bit as unrolled argmax-of-min-distance CTEs
-    "sample_coreset_kcenter" -> ((s, d) =>
-      graft.operators.Coreset.kCenterSelect(emb(s, d), k = 8)),
-    // the same 8 exemplars as a stratification device: nearest-center
-    // assignment (VecArgMinL2, first-min tiebreak) + per-center
-    // population and covering radius — one assignment scan + an
-    // 8-row aggregate; max(max_d) is the k-center objective the greedy
-    // 2-approximates
-    "sample_coreset_assign" -> ((s, d) =>
-      graft.operators.Coreset.kCenterAssignSummary(emb(s, d), k = 8)),
-    // sampled-page k-center (r16): ONE scan draws the 64-row deterministic
-    // md5-ordered candidate page, the greedy's 8 rounds then run against
-    // the page — bounding the exact path's k corpus scans at one + k page
-    // passes (the 100 TB form; CoresetSpec pins the corpus-objective
-    // quality bound vs exact greedy). Oracle replays page + greedy chain
-    "sample_coreset_kcenter_page" -> ((s, d) =>
-      graft.operators.Coreset.kCenterSelectSampled(emb(s, d), k = 8, page = 64)),
-    // per-source bounded A-ES priority sample (Efraimidis-Spirakis
-    // without replacement): top-20 by the deterministic -ln(u)/w key per
-    // source. Planned as the map-side-combinable bounded aggregator (the
-    // KnnTopK device), so each map task ships <= R rows per key to the
-    // shuffle — never the corpus; StreamSampleSpec pins the streaming
-    // state form EXACTLY equal under any arrival order (the priority is a
-    // pure row function, so the sample is a function of the set)
-    // k-ANONYMITY privacy audit (r14): every released row must share its
-    // quasi-identifier combination (nation, market segment, account-
-    // balance bucket) with >= k-1 others. One map-side-combinable
-    // aggregation to the bounded group table + a 1-row summary; the
-    // fixture has real under-k groups at BOTH SFs (891 at sf0.01, 29 at
-    // sf0.1), so the gate exercises a failing audit, not a vacuous pass
-    "governance_k_anonymity" -> ((s, d) =>
-      graft.operators.Governance.kAnonymityReport(
-        Tables.customer(s, d)
-          .withColumn("ab_bucket", floor(col("c_acctbal") / 1000).cast("int")),
-        Seq("c_nationkey", "c_mktsegment", "ab_bucket"), k = 5L)),
-    // the violating-combination detail a release pipeline would
-    // generalize or suppress (smallest = most identifying, first)
-    "governance_k_anon_violations" -> ((s, d) =>
-      graft.operators.Governance.kAnonymityViolations(
-          Tables.customer(s, d)
-            .withColumn("ab_bucket", floor(col("c_acctbal") / 1000).cast("int")),
-          Seq("c_nationkey", "c_mktsegment", "ab_bucket"), k = 5L)
-        .orderBy(col("group_size"), col("c_nationkey"), col("c_mktsegment"),
-          col("ab_bucket"))),
-    // ENFORCEMENT: suppress under-k rows, re-audit the released table —
-    // the output is the re-audit report, which must come back
-    // anonymous=1 with zero rows at risk (k-anonymity by construction)
-    "governance_k_suppress_audit" -> ((s, d) => {
-      import graft.operators.Governance
-      val quasi = Seq("c_nationkey", "c_mktsegment", "ab_bucket")
-      val cust = Tables.customer(s, d)
-        .withColumn("ab_bucket", floor(col("c_acctbal") / 1000).cast("int"))
-      val released = Governance.kSuppress(cust, quasi, k = 5L)
-      Governance.kAnonymityReport(released, quasi, k = 5L)
-        .withColumn("n_released", lit(1L) * released.count())
-    }),
-    // GENERALIZE-then-suppress (r15): coarsen the numeric quasi-identifier
-    // (account-balance bucket 1000 -> 4000) BEFORE suppressing — the
-    // standard release flow when suppression alone loses too many rows.
-    // Output: one re-audit row per strategy; both come back anonymous=1
-    // by construction, and the generalized flow releases strictly more
-    // rows (the point of generalization), which the gate hash-pins
-    "governance_k_generalize" -> ((s, d) => {
-      import graft.operators.Governance
-      val quasi = Seq("c_nationkey", "c_mktsegment", "ab_bucket")
-      def flow(bucketWidth: Int, step: String) = {
-        val cust = Tables.customer(s, d)
-          .withColumn("ab_bucket", floor(col("c_acctbal") / bucketWidth).cast("int"))
-        val released = Governance.kSuppress(cust, quasi, k = 5L)
-        Governance.kAnonymityReport(released, quasi, k = 5L)
-          .withColumn("step", lit(step))
-          .withColumn("n_released", lit(1L) * released.count())
-      }
-      flow(1000, "suppress_only")
-        .unionByName(flow(4000, "generalize_then_suppress"))
-        .select(col("step"), col("k"), col("n_groups"), col("n_violating_groups"),
-          col("n_rows_at_risk"), col("min_group_size"), col("anonymous"),
-          col("n_released"))
-        .orderBy(col("step"))
-    }),
-    // l-diversity: within every (nation, balance-bucket) group the
-    // market segment must take >= 2 distinct values, else membership in
-    // the group leaks the segment — k-anonymity's stronger sibling
-    "governance_l_diversity" -> ((s, d) =>
-      graft.operators.Governance.lDiversityReport(
-        Tables.customer(s, d)
-          .withColumn("ab_bucket", floor(col("c_acctbal") / 1000).cast("int")),
-        Seq("c_nationkey", "ab_bucket"), "c_mktsegment", l = 2L)),
-    // the unbounded-sensitive-domain scale path (r15): per-group HLL++
-    // distinct audited against exact at gate scale — a sketch out of its
-    // 3-rsd contract in ANY group flips hll_all_within and fails the
-    // hash gate; the summary columns stay the exact, engine-portable
-    // report. Sensitive column = c_name (one distinct value per customer
-    // — the unbounded-domain cardinality where exact per-group
-    // distinct sets start to hurt)
-    "governance_l_diversity_approx" -> ((s, d) =>
-      graft.operators.Governance.lDiversityApproxAudit(
-        Tables.customer(s, d)
-          .withColumn("ab_bucket", floor(col("c_acctbal") / 1000).cast("int")),
-        Seq("c_nationkey", "ab_bucket"), "c_name", l = 2L)),
-    "sample_priority_per_source" -> ((s, d) =>
-      graft.streaming.StreamSample.prioritySample(
-          docs(s, d), col("source"), col("doc_id"),
-          least(col("n_chars").cast("double") / 500.0, lit(1.0)), r = 20)
-        .withColumnRenamed("key", "source")
-        .orderBy(col("source"), col("rank"))),
-    // greedy MAX-COVERAGE selection (the (1-1/e) submodular greedy): the
-    // 5 documents jointly covering the most distinct tokens — the
-    // set-system sibling of the k-center coreset (spread in embedding
-    // space there, vocabulary captured here). k rounds of one anti-join +
-    // one partial-aggregated gain count + distributed top-1; the covered
-    // set stays on the cluster (bounded by VOCABULARY, not corpus). The
-    // data-dependent chain replays in DuckDB as unrolled MATERIALIZED CTEs
-    "sample_coverage_greedy" -> ((s, d) =>
-      graft.operators.Coverage.selectByWordCoverage(
-        docs(s, d).filter(col("doc_id") % 2 === 0), k = 5)),
-    // KMV distinct-count sketch over order keys: (k−1)/kth-smallest
-    // normalized hash. Pure function of the deterministic md5 hash ⇒ the
-    // estimate itself is HASH-CHECKED cross-engine (the HLL sketch in
-    // agg_sketches can't be) — alongside the exact count as ground truth
-    "agg_kmv_distinct" -> ((s, d) =>
-      graft.operators.Stats.kmvDistinct(
-        Tables.lineitem(s, d), col("l_orderkey"), k = 256)),
-    // theta-sketch INTERSECTION: |orders with a Returned line ∩ orders
-    // with an Accepted line| estimated from two 256-hash KMV samples —
-    // sketch set-algebra where the two sides never meet at full width
-    // (≤ k hashes each cross the exchange); exact ground truth alongside
-    "agg_theta_intersect" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      graft.operators.Stats.thetaIntersect(
-        li.filter(col("l_returnflag") === "R"),
-        li.filter(col("l_returnflag") === "A"),
-        col("l_orderkey"), col("l_orderkey"), k = 256)
-    }),
-    // GLOBAL row_number over every order WITHOUT the single-task
-    // unpartitioned window: range repartition + per-partition offsets +
-    // parallel intra-partition ranking (operators/Ranking). The rank
-    // assignment is unique under the total order, so the oracle's plain
-    // OVER (ORDER BY ...) replays it exactly
-    "rank_global_scalable" -> ((s, d) =>
-      graft.operators.Ranking.globalRowNumber(
-          Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice")),
-          Seq(col("o_totalprice").desc, col("o_orderkey").asc), "rnk")
-        .orderBy(col("rnk"))),
-    // ratio-to-parent hierarchical report: each nation's revenue share
-    // WITHIN its region, and each region's share of the grand total —
-    // two window levels over the |nations|-row aggregate (the corpus
-    // collapses once; the percent-of-parent math never rescans it)
-    "agg_share_of_parent" -> ((s, d) => {
-      val byNation = Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(dsum(col("o_totalprice")).as("rev"))
-      val wRegion = Window.partitionBy(col("r_name"))
-      val wAll = Window.partitionBy()
-      // window sums go back through decimal: a double sum's value depends
-      // on accumulation order, which an unordered window frame does not pin
-      def wsum(w: org.apache.spark.sql.expressions.WindowSpec) =
-        sum(col("rev").cast(DecimalType(18, 2))).over(w).cast("double")
-      byNation
-        .withColumn("share_in_region", round(col("rev") / wsum(wRegion), 6))
-        .withColumn("region_share_of_total",
-          round(wsum(wRegion) / wsum(wAll), 6))
-        .select(col("r_name"), col("n_name"), col("rev"),
-          col("share_in_region"), col("region_share_of_total"))
-        .orderBy(col("r_name"), col("n_name"))
-    }),
-    // GROUP-COHERENT holdout: the fold is a hash of the SOURCE, so every
-    // document of a source lands in one fold — the split that stops
-    // within-source near-duplicates from straddling train/eval (doc-level
-    // hashing cannot guarantee that). Emits per-fold source/doc counts;
-    // coherence is structural (fold is a function of source)
-    "sample_group_holdout" -> ((s, d) =>
-      docs(s, d)
-        .withColumn("fold", pmod(Dedup.md5Int32(col("source")), lit(5L)))
-        .groupBy(col("fold"))
-        .agg(countDistinct(col("source")).as("n_sources"),
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars_total"))
-        .orderBy(col("fold"))),
-    // Q13-shape count-of-counts: orders-per-customer histogram including
-    // the zero-order customers (left outer + count of the nullable side).
-    // TWO stacked aggregations — the second groups on the first's output,
-    // |distinct counts| rows, no corpus re-scan
-    "agg_count_distribution" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"),
-          "left_outer")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)),
-    // multi-touch LINEAR attribution: each purchase splits one unit of
-    // credit equally across the user's qualifying touches in the prior 7
-    // days; per-channel credit sums. Fractions are 9-decimal-quantized
-    // BEFORE summing so the per-channel totals are order-independent and
-    // engine-exact. Join is user-keyed + time-bounded (candidates per
-    // purchase bounded by a user's 7-day activity, not the corpus); the
-    // per-purchase count is a window over those bounded groups
-    "events_multitouch_attribution" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").cast("long").as("p_t"))
-      val touches = ev.filter(col("event_type").isin("view", "click", "signup"))
-        .select(col("user_id").as("t_user"), col("event_type").as("channel"),
-          col("ts").cast("long").as("t_t"))
-      val wn = Window.partitionBy(col("p_id"))
-      purchases.join(touches,
-          col("p_user") === col("t_user") && col("t_t") < col("p_t") &&
-            col("t_t") >= col("p_t") - lit(604800L))
-        .withColumn("n_touch", count(lit(1)).over(wn))
-        .withColumn("credit",
-          round(lit(1.0) / col("n_touch").cast("double"), 9)
-            .cast(DecimalType(18, 9)))
-        .groupBy(col("channel"))
-        .agg(count(lit(1)).as("n_touches"),
-          sum(col("credit")).cast("double").as("credit_sum"))
-        .orderBy(col("channel"))
-    }),
-    // null-safe equality join (<=>): NULL keys MATCH each other instead
-    // of dropping — the semantic SQL's plain = cannot express (and a
-    // dimension with "unknown" buckets needs). Nations in region 2 get a
-    // NULL-ified key on both sides and still pair up
-    "join_null_safe_eq" -> ((s, d) =>
-      Tables.nation(s, d)
-        .withColumn("nk", nullif(col("n_regionkey"), lit(2L)))
-        .join(Tables.region(s, d)
-            .withColumn("rk", nullif(col("r_regionkey"), lit(2L))),
-          col("nk") <=> col("rk"))
-        .select(col("n_name"), col("r_name"))
-        .orderBy(col("n_name"), col("r_name"))),
-    // day-of-week seasonal baseline + relative deviation — the weekly-
-    // rhythm-aware anomaly readout (Mondays compare against Mondays).
-    // dow from pure integer epoch arithmetic ((d/86400 + 4) mod 7,
-    // 1970-01-01 = Thursday) — no engine dayofweek() convention to
-    // reconcile. Two key-local aggregations; |days| rows after the first
-    "events_dow_seasonal" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(unix_timestamp(date_trunc("day", col("ts"))).as("day_epoch"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("dow", pmod((col("day_epoch") / 86400L).cast("long") + 4L, lit(7L)))
-      val base = daily.groupBy(col("dow"))
-        .agg((sum(col("n")).cast("double") / count(lit(1)).cast("double"))
-          .as("baseline"))
-      daily.join(broadcast(base), "dow")
-        .select(col("day_epoch"), col("dow"), col("n"),
-          round(col("baseline"), 6).as("baseline"),
-          round((col("n").cast("double") - col("baseline")) / col("baseline"), 6)
-            .as("rel_dev"))
-        .orderBy(col("day_epoch"))
-    }),
-    // LATERAL correlated derived table through the SQL FRONT DOOR: per
-    // nation the top-2 customers by balance — the "top-n per group via
-    // LATERAL" idiom Catalyst decorrelates into the same ranked-window
-    // plan the DataFrame form builds. Proves the SQL surface handles
-    // correlation + LIMIT, not just the Column API
-    "sql_lateral_topk" -> ((s, d) => {
-      Tables.nation(s, d).createOrReplaceTempView("graft_nation_v")
-      Tables.customer(s, d).createOrReplaceTempView("graft_customer_v")
-      s.sql("""SELECT n_name, c_name, c_acctbal
-              |FROM graft_nation_v JOIN LATERAL (
-              |  SELECT c_name, c_acctbal FROM graft_customer_v
-              |  WHERE c_nationkey = n_nationkey
-              |  ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 2)
-              |ORDER BY n_name, c_acctbal DESC, c_name""".stripMargin)
-    }),
-    // KMV sketch MERGEABILITY under the hash gate: per-day k-min samples
-    // (bounded per-key window, WindowGroupLimit map-side cap) merged by
-    // "k smallest of the union" give EXACTLY the direct whole-range
-    // estimate — every global top-k hash is inside its own day's top-k,
-    // so the merge is lossless. The partial-aggregate-merge contract
-    // applied to a sketch instead of a sum
-    "agg_kmv_merge_daily" -> ((s, d) => {
-      val k = 64
-      val ev = Tables.events(s, d).select(
-        unix_timestamp(date_trunc("day", col("ts"))).as("day_epoch"),
-        Dedup.md5Int32(col("user_id").cast("string")).as("h"))
-      val wd = Window.partitionBy(col("day_epoch")).orderBy(col("h").asc)
-      val perDay = ev.distinct()
-        .withColumn("__r", row_number().over(wd)).filter(col("__r") <= k)
-      def est(hs: DataFrame) = hs.select(col("h")).distinct()
-        .orderBy(col("h").asc).limit(k)
-        .agg(max(col("h")).as("kth"), count(lit(1)).as("ka"))
-        .select(round((col("ka") - lit(1)).cast("double") /
-          (col("kth").cast("double") / lit(4294967296.0)), 4).as("est"))
-      val nDays = perDay.agg(countDistinct(col("day_epoch")).as("n_days"))
-      est(perDay).withColumnRenamed("est", "est_merged")
-        .crossJoin(est(ev).withColumnRenamed("est", "est_direct"))
-        .crossJoin(nDays)
-        .select(col("est_merged"), col("est_direct"),
-          (col("est_merged") === col("est_direct")).cast("int").as("merge_lossless"),
-          col("n_days"))
-    }),
-    // gap-fill by LINEAR INTERPOLATION: days suppressed by a simulated
-    // outage (day_num % 5 = 2) are rebuilt from the nearest surviving
-    // neighbors, weighted by integer day distance — the resampling step
-    // before any fixed-grid time-series model. Same union+two-frame
-    // kernel as the nearest as-of join; the series here is ONE bounded
-    // daily aggregate (30 rows), so the unpartitioned window is benign —
-    // per-key series would partition by the key
-    "window_gap_fill_interpolate" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .filter(col("event_type") === "purchase")
-        .groupBy(unix_timestamp(date_trunc("day", col("ts"))).as("day_epoch"))
-        .agg(dsum(col("value"), 3).as("v"))
-        .withColumn("dnum", (col("day_epoch") / 86400L).cast("long"))
-      val spine = daily.select(col("day_epoch"), col("dnum"),
-        when(pmod(col("dnum"), lit(5L)) =!= 2L, col("v")).as("v_obs"))
-      val wb = Window.orderBy(col("dnum").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wf = Window.orderBy(col("dnum").asc)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val prevV = last(col("v_obs"), ignoreNulls = true).over(wb)
-      val prevD = last(when(col("v_obs").isNotNull, col("dnum")), ignoreNulls = true).over(wb)
-      val nextV = first(col("v_obs"), ignoreNulls = true).over(wf)
-      val nextD = first(when(col("v_obs").isNotNull, col("dnum")), ignoreNulls = true).over(wf)
-      spine
-        .withColumn("pv", prevV).withColumn("pd", prevD)
-        .withColumn("nv", nextV).withColumn("nd", nextD)
-        .withColumn("v_filled", round(
-          when(col("v_obs").isNotNull, col("v_obs"))
-            .when(col("pv").isNull, col("nv"))
-            .when(col("nv").isNull, col("pv"))
-            .otherwise(col("pv") + (col("nv") - col("pv")) *
-              ((col("dnum") - col("pd")).cast("double") /
-                (col("nd") - col("pd")).cast("double"))), 6))
-        .withColumn("was_gap", col("v_obs").isNull.cast("int"))
-        .select(col("day_epoch"), col("v_filled"), col("was_gap"))
-        .orderBy(col("day_epoch"))
-    }),
-    // --- round-7: exact substring-repeat dedup via suffix arrays (the
-    // Lee et al. primitive the hashed n-gram spans approximate). Both are
-    // pure per-document maps — each task builds ONE doc's SA, no shuffle,
-    // no cross-doc state — so the corpus-scale cost is a single pass.
-    // per-doc longest intra-doc repeated substring (max adjacent-LCP):
-    // the doc-level repetitiveness statistic; brute O(m²) oracle bounded
-    // to the %5 doc subset
-    "text_longest_repeat_sa" -> ((s, d) => {
-      val lr = udf((t: String) => graft.operators.SuffixArray.longestRepeat(t))
-      par(s, docs(s, d)).filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), lr(col("text")).cast("bigint").as("longest_repeat"))
-        .orderBy(col("doc_id"))
-    }),
-    // per-doc characters covered by an intra-doc repeated substring of
-    // length ≥ 10 — the duplicated-text mass a substring-level dedup would
-    // cut. SA coverage ≡ exact 10-gram coverage (SuffixArraySpec), which
-    // is what the linear-cost oracle replays over the FULL corpus
-    "text_repeat_coverage_sa" -> ((s, d) => {
-      val cov = udf((t: String) => graft.operators.SuffixArray.repeatCoverage(t, 10))
-      par(s, docs(s, d))
-        .select(col("doc_id"), cov(col("text")).cast("bigint").as("covered_chars"))
-        .orderBy(col("doc_id"))
-    }),
-    // SEMANTIC decontamination — the embedding-space sibling of the
-    // n-gram decontam pair: flag corpus vectors ≥ τ-cosine-similar to ANY
-    // benchmark vector. The benchmark set (fixed and small in production;
-    // a capped modulus sample stands in) collects driver-side and bakes
-    // into ONE codegen'd greatest-of-cosines pass — zero shuffle, a
-    // single corpus scan at any scale. The oracle computes the same max
-    // through a corpus×benchmark join (cosineSimLit's precomputed literal
-    // norm ≡ cosineSimCols' in-engine sqrt of the identical double sum)
-    "decontam_semantic" -> ((s, d) => {
-      val bench = emb(s, d).filter(col("vec_id") % 97 === 0)
-        .orderBy(col("vec_id")).limit(32)
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      // single codegen'd k×dim loop (VecMaxCosLit) — a greatest-of-k
-      // unrolled-cosines tree pays janino compile time per benchmark
-      // vector (measured 1.2 s at k=21); identical arithmetic
-      val maxCos = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        graft.functions.VecMaxCosLit(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("embedding")), bench))
-      emb(s, d).filter(col("vec_id") % 97 =!= 0)
-        .select(col("vec_id"), maxCos.as("max_sim"))
-        .filter(col("max_sim") >= 0.3)
-        .orderBy(col("vec_id"))
-    }),
-    // the FULL reference lifecycle through the api.VectorDatabase facade,
-    // under the hash gate (previously only ApiSpec covered it in-suite):
-    // load → delete (ids never reused) → strict update_position → insert
-    // (fresh monotonic ids continue past the deleted ones) → FILTERED kNN
-    // with the (dist ASC, id ASC) tie-break — database.py:18-64 end-to-end
-    "api_lifecycle" -> ((s, d) => {
-      import s.implicits._
-      val db0 = graft.api.VectorDatabase.fromDataFrame(s, emb(s, d), gridCfg)
-      val db1 = db0.delete((0L to 70L by 7))
-      val upd = Seq(3L, 13L, 23L).map(id => (id, LifecyclePos)).toDF("vec_id", "embedding")
-      val db2 = db1.updatePosition(upd)
-      val ins = Seq((LifecycleInsA, 1), (LifecycleInsB, 2)).toDF("embedding", "label")
-      val (db3, _) = db2.insert(ins)
-      val res = db3.findKNearestNeighbors(Q64, K, filter = Some(col("label") === 1))
-      s.createDataset(res).toDF()
-    }),
-    // GENERIC schemaless metadata `T` through the facade (reference
-    // database.py:11-14 — `DatabaseEntry[T]`; its tests use str AND dict):
-    // a MapType column rides end-to-end — build with map metadata, INSERT
-    // rows carrying maps, FILTER on a map key BEFORE k, kNN, then read map
-    // values back off the result. Closes the typed-columns-only API gap;
-    // the oracle replays the map predicate from the base columns the map
-    // derives from (DuckDB never sees a MAP — the OUTPUT is plain columns)
-    "api_map_metadata" -> ((s, d) => {
-      import s.implicits._
-      val base = emb(s, d).select(col("vec_id"), col("embedding"), col("label"))
-        .withColumn("meta", map(
-          lit("tier"), when(pmod(col("label"), lit(3)) === 0, lit("gold")).otherwise(lit("std")),
-          lit("src"), concat(lit("n"), pmod(col("vec_id"), lit(4)).cast("string"))))
-      val db0 = graft.api.VectorDatabase.fromDataFrame(s, base, gridCfg)
-      val ins = Seq(
-        (MapInsGold, 7, Map("tier" -> "gold", "src" -> "ins")),
-        (MapInsStd, 8, Map("tier" -> "std", "src" -> "ins")))
-        .toDF("embedding", "label", "meta")
-      val (db1, _) = db0.insert(ins)
-      val res = s.createDataset(db1.findKNearestNeighbors(Q64, K,
-        filter = Some(element_at(col("meta"), "tier") === "gold"))).toDF()
-      res.join(db1.state.select(col("vec_id"),
-          element_at(col("meta"), "src").as("src")), "vec_id")
-        .select(col("vec_id"), col("label"), col("dist"), col("src"))
-        .orderBy(col("dist").asc, col("vec_id").asc)
-    })
-  )
+  /** Every declared query, area by area; no two share a name. */
+  private[graft] lazy val specs: Seq[QuerySpec] = QuerySpec.distinct(
+    KnnQueries.specs ++ AnnQueries.specs ++ TextQueries.specs ++
+      DedupQueries.specs ++ AggQueries.specs ++ EventQueries.specs ++
+      RelationalQueries.specs ++ StoreQueries.specs ++ SampleQueries.specs ++
+      PipelineQueries.specs)
 
-  /** Literal vectors for api_map_metadata — multiples of 2⁻³ (the gold one
-    * is Q64 rounded to eighths, so it ranks first by construction). */
-  private val MapInsGold: Array[Float] =
-    Array.tabulate(Dim)(i => (math.round(Fixtures.Q64(i) * 8).toDouble / 8).toFloat)
-  private val MapInsStd: Array[Float] = Array.fill(Dim)(0.375f)
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.build).toMap
 
-  /** Literal vectors for the api_lifecycle query — exact binary fractions
-    * (multiples of 2⁻³), so the float literals round-trip bit-exactly
-    * through both engines' decimal parsers. */
-  private val LifecyclePos: Array[Float] =
-    Array.tabulate(Dim)(i => ((i % 8) - 4) * 0.125f)
-  private val LifecycleInsA: Array[Float] = Array.fill(Dim)(0.25f)
-  private val LifecycleInsB: Array[Float] =
-    Array.tabulate(Dim)(i => (i % 4) * 0.125f)
-
-  /** 2-D grid for density clustering: 32×32 cells over the embedding's two
-    * leading dims. Deliberately TIGHTER than the data's ~[-0.5, 0.5] spread
-    * (out-of-bounds clamps to edge cells) and fine enough that the Gaussian
-    * center forms one multi-cell component while the tails break into
-    * isolated core cells — at sf0.01 the query yields ~10 clusters, so the
-    * hash gate exercises CC merging AND the singleton path, not a single
-    * blob. */
-  private[graft] val densityCfg =
-    GridConfig(dim = Dim, lower = -0.4, upper = 0.4, partsPerDim = 32, gridDims = 2)
-  private[graft] val DensityMinPts = 3L
-
-  /** Squared-L2 radius for the range-search queries (between the 5th and
-    * 10th percentile of fixture query-to-corpus distances — selective but
-    * decidedly non-empty, so the oracle hash exercises the distance path). */
-  private val Radius = 2.0
-  /** 2-dim radius for the rule-pruned store query (~25 rows at sf0.01). */
-  private val RadiusAuto = 0.01
-
-  /** Fixed literal PQ codebook for the hash-checked ADC query: subspace j
-    * entry c = dims [j·8, j·8+8) of plane c — compile-time constants in
-    * BOTH engines. */
-  private[graft] val FixedPqModel = graft.operators.Pq.PqModel(
-    m = 8, ksub = 8, dsub = 8,
-    codebooks = Array.tabulate(8)(j =>
-      Array.tabulate(8)(c => Planes16(c).slice(j * 8, (j + 1) * 8))))
-
-  /** Shared DuckDB fragments for the fixed-codebook PQ oracles: the
-    * per-subspace encode argmins (`c0..c7` columns over `embeddings.
-    * embedding`) and the literal-lookup-table ADC sum over them. Mirrors
-    * VecArgMinL2 (strict `<` keeps the FIRST minimal index ↔
-    * list_position of list_min) and Pq.adcDist (left-assoc m-term sum). */
-  private lazy val pqCodeColsSql: String = {
-    val model = FixedPqModel
-    def subDistSql(off: Int, cent: Array[Double]): String =
-      cent.indices.map { i =>
-        val dd = s"(embedding[${off + i + 1}]::DOUBLE - (${DuckSql.fmt(cent(i))}))"
-        s"($dd * $dd)"
-      }.mkString("(", " + ", ")")
-    (0 until model.m).map { j =>
-      val ds = (0 until model.ksub)
-        .map(c => subDistSql(j * model.dsub, model.codebooks(j)(c)))
-        .mkString("[", ",\n      ", "]")
-      s"list_position($ds, list_min($ds)) AS c$j"
-    }.mkString(",\n    ")
-  }
-  private lazy val pqAdcSql: String = {
-    val lut = graft.operators.Pq.adcTable(Q64, FixedPqModel)
-    (0 until FixedPqModel.m).map { j =>
-      val row = lut(j).map(DuckSql.fmt).mkString("[", ", ", "]")
-      s"($row)[c$j]"
-    }.mkString(" + ")
-  }
-
-  /** SQ8 quantization step for the fixture embedding range (~[-0.5, 0.5]). */
-  private val SqScale = 0.005
-
-  /** Small deterministic digest of a state snapshot: per-label count and
-    * id-sum (exact integer math). */
-  private def labelSummary(state: DataFrame): DataFrame =
-    state.groupBy(col("label"))
-      .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"))
-      .orderBy(col("label"))
-
-  // ------------------------------------------------------------- oracle SQL
-
-  /** BM25 scored page (mirrors TextAnalysis.bm25TopK for the fixed fixture
-    * terms): `SELECT doc_id, bm25 ... ORDER BY bm25 DESC, doc_id LIMIT k`. */
-  private def bm25ScoredSql(k: Int): String = {
-    val terms = Seq("spark", "table", "query")
-    val k1 = 1.2; val b = 0.75
-    def tf(t: String) =
-      s"CAST(len(list_filter(string_split(text, ' '), w -> w = '$t')) AS DOUBLE)"
-    val termExprs = terms.zipWithIndex.map { case (t, i) =>
-      s"""LN((n_docs - df_$i + 0.5) / (df_$i + 0.5) + 1.0)
-         | * (${tf(t)} * ${DuckSql.fmt(k1 + 1.0)})
-         | / (${tf(t)} + ${DuckSql.fmt(k1)} * (${DuckSql.fmt(1.0 - b)} + ${DuckSql.fmt(b)} * dl / avgdl))"""
-        .stripMargin.replace("\n", "")
-    }
-    val dfSelects = terms.zipWithIndex.map { case (t, i) =>
-      s"SUM(CASE WHEN list_contains(string_split(text, ' '), '$t') THEN 1 ELSE 0 END) AS df_$i"
-    }.mkString(", ")
-    s"""WITH stats AS (
-       |  SELECT COUNT(*) AS n_docs,
-       |    CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS DOUBLE) / COUNT(*) AS avgdl
-       |  FROM documents),
-       |dfs AS (SELECT $dfSelects FROM documents)
-       |SELECT doc_id, ROUND(${termExprs.mkString(" + ")}, 6) AS bm25
-       |FROM (SELECT doc_id, text, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-       |      FROM documents) d
-       |CROSS JOIN stats CROSS JOIN dfs
-       |ORDER BY bm25 DESC, doc_id ASC LIMIT $k""".stripMargin
-  }
-
-  /** Unrolled DuckDB replay of Rerank.mmr's greedy selection: candidate
-    * page + pair matrix CTEs, then one argmax CTE per selection step (the
-    * selected-set max joins `pairs` against the union of prior steps).
-    * All sims are ROUND(·, 9) doubles — a 9-decimal value is uniquely
-    * recovered by a DOUBLE, so every comparison matches the driver loop
-    * bit-for-bit. */
-  private def mmrSql(nCand: Int, k: Int, lambda: Double): String = {
-    val lam = DuckSql.fmt(lambda)
-    val om = DuckSql.fmt(1.0 - lambda)
-    val cos = DuckSql.cosineSimLit("embedding", Q64)
-    val pcos = DuckSql.cosineSimCols("a.embedding", "b.embedding", Dim)
-    // MATERIALIZED throughout: cand/pairs are referenced by every step and
-    // each s_i by all later steps (twice each: IN + NOT IN); plain CTEs are
-    // inlined per reference, so the un-hinted chain recomputed the 64-dim
-    // pair matrix exponentially (28 s in the r16 driver's sweep at 500 rows).
-    val steps = (1 to k).map { i =>
-      if (i == 1)
-        s"""s1 AS MATERIALIZED (
-           |  SELECT vec_id, ($lam * simq - $om * CAST('0.0' AS DOUBLE)) AS score
-           |  FROM cand ORDER BY score DESC, vec_id ASC LIMIT 1)"""
-          .stripMargin
-      else {
-        val sel = (1 until i).map(j => s"SELECT vec_id FROM s$j").mkString(" UNION ALL ")
-        s"""s$i AS MATERIALIZED (
-           |  SELECT c.vec_id, ($lam * c.simq - $om * m.mx) AS score
-           |  FROM cand c
-           |  JOIN (SELECT p.i, MAX(p.s) AS mx FROM pairs p
-           |        WHERE p.j IN ($sel) GROUP BY p.i) m ON m.i = c.vec_id
-           |  WHERE c.vec_id NOT IN ($sel)
-           |  ORDER BY score DESC, c.vec_id ASC LIMIT 1)"""
-          .stripMargin
-      }
-    }.mkString(",\n")
-    val finalRows = (1 to k)
-      .map(i => s"SELECT CAST($i AS INT) AS rank, vec_id, score AS mmr_score FROM s$i")
-      .mkString("\n  UNION ALL ")
-    s"""WITH cand AS MATERIALIZED (
-       |  SELECT vec_id, embedding, ROUND($cos, 9) AS simq
-       |  FROM embeddings ORDER BY simq DESC, vec_id ASC LIMIT $nCand),
-       |pairs AS MATERIALIZED (
-       |  SELECT a.vec_id AS i, b.vec_id AS j, ROUND($pcos, 9) AS s
-       |  FROM cand a, cand b WHERE a.vec_id <> b.vec_id),
-       |$steps
-       |SELECT * FROM (
-       |  $finalRows
-       |) ORDER BY rank""".stripMargin
-  }
-
-  /** Unrolled DuckDB replay of Pca.topComponent: Gram CTE (dims² exact
-    * decimal sums), then one (matvec, normalize) CTE pair per power
-    * iteration — every expression left-associated to match the driver
-    * loop's IEEE arithmetic. */
-  /** DuckDB replay of [[Ann.lloydSeededExact]] + a final assignment:
-    * emits CTEs `c0..c{iters}` (cell, c DOUBLE[], 0-based cells) and `af`
-    * (vec_id, embedding, label, cell). Centroid updates are the same
-    * floor((v+2)·2^24) integer means (one BIGINT `//`), so every trained
-    * coordinate is bit-identical across engines; assignment ranks the
-    * same left-associated 64-term double distance with the same
-    * (dist, cell) tie-break as VecArgMinL2. */
-  private def ivfTrainedCtes(seeds: Array[Array[Double]], iters: Int,
-      rel: String = "embeddings"): String = {
-    def distToC(eCol: String): String =
-      (0 until Dim).map { i =>
-        val dfr = s"($eCol[${i + 1}]::DOUBLE - c.c[${i + 1}])"
-        s"($dfr * $dfr)"
-      }.mkString("(", " + ", ")")
-    val seedRows = seeds.zipWithIndex.map { case (cArr, j) =>
-      s"($j, [${cArr.map(DuckSql.fmt).mkString(", ")}])"
-    }.mkString(",\n    ")
-    val meanExprs = (0 until Dim).map { i =>
-      s"CAST(CAST(SUM(CAST(FLOOR((CAST(embedding[${i + 1}] AS DOUBLE) + 2) * 16777216) AS BIGINT)) AS BIGINT) // COUNT(*) AS DOUBLE) / 16777216.0 - 2.0"
-    }.mkString("[", ",\n      ", "]")
-    // Slim assignment: hash-agg to (vec_id, cell) via lexicographic
-    // struct-MIN — same (dc, cell) tie-break as the windowed form, but
-    // the 64-double embedding array never enters a window (peak
-    // allocation was starving the long-lived sweep connection).
-    // Every CTE is MATERIALIZED: c_{it-1} is referenced twice (by a_it
-    // and c_it) and `af` up to 4× by the recall-band oracles; plain CTEs
-    // are inlined per reference, so the un-hinted chain re-ran the whole
-    // Lloyd replay 2^iters × bands times (the r16 ann_* OOM/slow family).
-    def assignCte(name: String, cents: String) =
-      s"""$name AS MATERIALIZED (
-         |  SELECT vec_id, (MIN({'dc': dc, 'cell': cell})).cell AS cell FROM (
-         |    SELECT e.vec_id, c.cell, ${distToC("e.embedding")} AS dc
-         |    FROM $rel e CROSS JOIN $cents c)
-         |  GROUP BY vec_id)""".stripMargin
-    val its = (1 to iters).map { it =>
-      val prev = s"c${it - 1}"
-      s"""${assignCte(s"a$it", prev)},
-         |m$it AS MATERIALIZED (
-         |  SELECT a.cell, $meanExprs AS c
-         |  FROM a$it a JOIN $rel USING (vec_id) GROUP BY a.cell),
-         |c$it AS MATERIALIZED (
-         |  SELECT p.cell, COALESCE(m.c, p.c) AS c
-         |  FROM $prev p LEFT JOIN m$it m USING (cell))""".stripMargin
-    }.mkString(",\n")
-    s"""c0 AS MATERIALIZED (
-       |  SELECT cell, c FROM (VALUES
-       |    $seedRows) AS t(cell, c)),
-       |$its,
-       |${assignCte("af", s"c$iters")}""".stripMargin
-  }
-
-  /** Standalone argmin-assignment CTE of `rel` against centroid CTE
-    * `cents` — the assignCte shape of [[ivfTrainedCtes]] exposed for
-    * oracles that assign a SECOND relation (the admission batch) to an
-    * already-trained codebook. */
-  private def ivfAssignCte(name: String, rel: String, cents: String): String = {
-    val distToC = (0 until Dim).map { i =>
-      val dfr = s"(e.embedding[${i + 1}]::DOUBLE - c.c[${i + 1}])"
-      s"($dfr * $dfr)"
-    }.mkString("(", " + ", ")")
-    s"""$name AS MATERIALIZED (
-       |  SELECT vec_id, (MIN({'dc': dc, 'cell': cell})).cell AS cell FROM (
-       |    SELECT e.vec_id, c.cell, $distToC AS dc
-       |    FROM $rel e CROSS JOIN $cents c)
-       |  GROUP BY vec_id)""".stripMargin
-  }
-
-  /** Probe-cell pick for a LITERAL query vector over a trained-centroid
-    * CTE: same (dist, cell) ranking as the driver-side sort in
-    * [[Ann.search]]. */
-  private def ivfProbeSql(cents: String, q: Array[Double], nprobe: Int): String = {
-    val dq = (0 until Dim).map { i =>
-      val dfr = s"((${DuckSql.fmt(q(i))}) - c.c[${i + 1}])"
-      s"($dfr * $dfr)"
-    }.mkString("(", " + ", ")")
-    s"""(SELECT cell FROM (SELECT c.cell, $dq AS dq FROM $cents c)
-       |  ORDER BY dq ASC, cell ASC LIMIT $nprobe)""".stripMargin
-  }
-
-  /** Column-vs-centroid-array squared L2 (q table alias carrying
-    * `q_embedding` vs centroid CTE alias `c`). */
-  private def ivfDistQC: String =
-    (0 until Dim).map { i =>
-      val dfr = s"(q.q_embedding[${i + 1}]::DOUBLE - c.c[${i + 1}])"
-      s"($dfr * $dfr)"
-    }.mkString("(", " + ", ")")
-
-  /** DuckDB replay of [[GraphAnn.knnGraph]]: the exact top-m edge list.
-    * MATERIALIZED — the beam-search oracles reference it once per hop, and
-    * DuckDB inlines plain CTEs per reference (the exponential-CTE trap);
-    * dist is computed once in the inner select so the window doesn't
-    * re-evaluate the 64-term expression. */
-  private def graphEdgesCte(m: Int): String = {
-    val d2 = DuckSql.squaredL2Cols("a.embedding", "b.embedding", Dim)
-    s"""edges AS MATERIALIZED (
-       |  SELECT src, dst, dist, rn FROM (
-       |    SELECT src, dst, dist,
-       |      ROW_NUMBER() OVER (PARTITION BY src ORDER BY dist ASC, dst ASC) AS rn
-       |    FROM (SELECT a.vec_id AS src, b.vec_id AS dst, $d2 AS dist
-       |          FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id))
-       |  WHERE rn <= $m)""".stripMargin
-  }
-
-  /** SYMMETRIZED search edges over [[graphEdgesCte]]'s `edges` — mirrors
-    * [[GraphAnn.symmetrize]] (UNION ALL of out- and reversed in-edges;
-    * duplicates collapse in the hops' DISTINCT). */
-  private val graphSymCte: String =
-    """sym AS MATERIALIZED (
-      |  SELECT src, dst FROM edges
-      |  UNION ALL
-      |  SELECT dst AS src, src AS dst FROM edges)""".stripMargin
-
-  /** DuckDB replay of [[GraphAnn.searchLit]] over [[graphEdgesCte]]: entry
-    * beam = the `nEntry` lowest vec_ids, then `hops` unrolled
-    * expand-score-shrink CTE pairs (every beam MATERIALIZED — each is
-    * referenced twice by the next hop). Emits a complete SELECT. */
-  private def graphBeamLitSql(q: Array[Double], k: Int, beam: Int,
-      hops: Int, nEntry: Int): String = {
-    val dq = DuckSql.squaredL2Lit("embedding", q)
-    val hopsSql = (1 to hops).map { h =>
-      s"""cand$h AS MATERIALIZED (
-         |  SELECT DISTINCT e.dst AS vec_id
-         |  FROM beam${h - 1} b JOIN sym e ON b.vec_id = e.src),
-         |beam$h AS MATERIALIZED (
-         |  SELECT vec_id, MIN(dist) AS dist FROM (
-         |    SELECT vec_id, dist FROM beam${h - 1}
-         |    UNION ALL
-         |    SELECT c.vec_id, $dq AS dist
-         |    FROM cand$h c JOIN embeddings e2 ON e2.vec_id = c.vec_id)
-         |  GROUP BY vec_id ORDER BY dist ASC, vec_id ASC LIMIT $beam)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ${graphEdgesCte(GraphM)},
-       |$graphSymCte,
-       |beam0 AS MATERIALIZED (
-       |  SELECT vec_id, $dq AS dist FROM embeddings ORDER BY vec_id ASC LIMIT $nEntry),
-       |$hopsSql
-       |SELECT vec_id, dist FROM beam$hops ORDER BY dist ASC, vec_id ASC LIMIT $k""".stripMargin
-  }
-
-  /** Batch form of [[graphBeamLitSql]] for [[GraphAnn.searchJoin]]: expects
-    * a CTE `qs(qid, q_embedding)` already defined by the caller; emits the
-    * entry + per-qid beam chain CTEs `beam0..beam<hops>`. */
-  private def graphBeamJoinCtes(beam: Int, hops: Int, nEntry: Int): String = {
-    val dqe = DuckSql.squaredL2Cols("q.q_embedding", "e2.embedding", Dim)
-    val hopsSql = (1 to hops).map { h =>
-      s"""cand$h AS MATERIALIZED (
-         |  SELECT DISTINCT b.qid, e.dst AS vec_id
-         |  FROM beam${h - 1} b JOIN sym e ON b.vec_id = e.src),
-         |beam$h AS MATERIALIZED (
-         |  SELECT qid, vec_id, dist FROM (
-         |    SELECT qid, vec_id, dist,
-         |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist ASC, vec_id ASC) AS rn
-         |    FROM (
-         |      SELECT qid, vec_id, MIN(dist) AS dist FROM (
-         |        SELECT qid, vec_id, dist FROM beam${h - 1}
-         |        UNION ALL
-         |        SELECT c.qid, c.vec_id, $dqe AS dist
-         |        FROM cand$h c JOIN qs q ON q.qid = c.qid
-         |        JOIN embeddings e2 ON e2.vec_id = c.vec_id)
-         |      GROUP BY qid, vec_id))
-         |  WHERE rn <= $beam)""".stripMargin
-    }.mkString(",\n")
-    s"""$graphSymCte,
-       |entrys AS (
-       |  SELECT vec_id, embedding FROM embeddings ORDER BY vec_id ASC LIMIT $nEntry),
-       |beam0 AS MATERIALIZED (
-       |  SELECT q.qid, e2.vec_id, $dqe AS dist FROM qs q CROSS JOIN entrys e2),
-       |$hopsSql""".stripMargin
-  }
-
-  /** DuckDB replay of [[Pq.trainSeededExact]] + encode + ADC + refine +
-    * exact re-rank for a literal query — the trained-PQ oracle. Emits a
-    * complete SELECT. Training CTEs mirror ivfTrainedCtes in long form
-    * over (subspace j, code): same integer-exact means, same
-    * (dist, code) tie-break as the per-subspace VecArgMinL2; the ADC sum
-    * pivots the m per-subspace contributions into one left-associated
-    * 16-term sum, matching adcDist's `reduce(_ + _)`. */
-  private def pqTrainedSql(seeds: Array[Array[Array[Double]]], iters: Int,
-      q: Array[Double], k: Int, refine: Int): String = {
-    val m = seeds.length; val ksub = seeds(0).length; val dsub = Dim / m
-    val svDist = (1 to dsub).map { i =>
-      val dfr = s"(s.sv[$i]::DOUBLE - c.c[$i])"
-      s"($dfr * $dfr)"
-    }.mkString("(", " + ", ")")
-    val seedRows = (for (j <- 0 until m; cc <- 0 until ksub) yield
-      s"($j, $cc, [${seeds(j)(cc).map(DuckSql.fmt).mkString(", ")}])")
-      .mkString(",\n    ")
-    val meanExprs = (1 to dsub).map { i =>
-      s"CAST(CAST(SUM(CAST(FLOOR((CAST(sv[$i] AS DOUBLE) + 2) * 16777216) AS BIGINT)) AS BIGINT) // COUNT(*) AS DOUBLE) / 16777216.0 - 2.0"
-    }.mkString("[", ",\n      ", "]")
-    // Slim assignment (see ivfTrainedCtes): hash-agg to (vec_id, j, code)
-    // via lexicographic struct-MIN — identical (dc, code) tie-break, no
-    // subvector lists carried through windows. MATERIALIZED chain for the
-    // same per-reference-inlining reason as ivfTrainedCtes (ps_{it-1} and
-    // sub are each referenced twice per iteration).
-    def assignCte(name: String, cents: String) =
-      s"""$name AS MATERIALIZED (
-         |  SELECT vec_id, j, (MIN({'dc': dc, 'code': code})).code AS code FROM (
-         |    SELECT s.vec_id, s.j, c.code, $svDist AS dc
-         |    FROM sub s JOIN $cents c ON s.j = c.j)
-         |  GROUP BY vec_id, j)""".stripMargin
-    val its = (1 to iters).map { it =>
-      val prev = s"ps${it - 1}"
-      s"""${assignCte(s"pa$it", prev)},
-         |pm$it AS MATERIALIZED (
-         |  SELECT a.j, a.code, $meanExprs AS c
-         |  FROM pa$it a JOIN sub s ON a.vec_id = s.vec_id AND a.j = s.j
-         |  GROUP BY a.j, a.code),
-         |ps$it AS MATERIALIZED (
-         |  SELECT p.j, p.code, COALESCE(mm.c, p.c) AS c
-         |  FROM $prev p LEFT JOIN pm$it mm ON p.j = mm.j AND p.code = mm.code)""".stripMargin
-    }.mkString(",\n")
-    // per-(j, code) ADC lut: CASE over j picks the query subvector literals
-    val lutContrib = (0 until m).map { j =>
-      val terms = (1 to dsub).map { i =>
-        val dfr = s"((${DuckSql.fmt(q(j * dsub + i - 1))}) - c[$i])"
-        s"($dfr * $dfr)"
-      }.mkString("(", " + ", ")")
-      s"WHEN j = $j THEN $terms"
-    }.mkString("CASE ", "\n      ", " END")
-    val pivotCols = (0 until m).map(j =>
-      s"MAX(CASE WHEN j = $j THEN contrib END) AS t$j").mkString(",\n      ")
-    val adcSum = (0 until m).map(j => s"t$j").mkString("(", " + ", ")")
-    s"""WITH ps0 AS MATERIALIZED (
-       |  SELECT j, code, c FROM (VALUES
-       |    $seedRows) AS t(j, code, c)),
-       |sub AS MATERIALIZED (
-       |  SELECT vec_id, CAST(t.j AS INT) AS j,
-       |    list_slice(embedding, t.j * $dsub + 1, t.j * $dsub + $dsub) AS sv
-       |  FROM embeddings, range($m) t(j)),
-       |$its,
-       |${assignCte("pf", s"ps$iters")},
-       |lut AS (SELECT j, code, $lutContrib AS contrib FROM ps$iters),
-       |adc AS (
-       |  SELECT vec_id, $adcSum AS adc_dist FROM (
-       |    SELECT vec_id,
-       |      $pivotCols
-       |    FROM (SELECT pf.vec_id, pf.j, l.contrib
-       |          FROM pf JOIN lut l ON pf.j = l.j AND pf.code = l.code)
-       |    GROUP BY vec_id)),
-       |cand AS (SELECT vec_id FROM adc ORDER BY adc_dist ASC, vec_id ASC LIMIT $refine)
-       |SELECT vec_id, dist FROM (
-       |  SELECT e.vec_id, ${DuckSql.squaredL2Lit("e.embedding", q)} AS dist
-       |  FROM cand JOIN embeddings e USING (vec_id))
-       |ORDER BY dist ASC, vec_id ASC LIMIT $k""".stripMargin
-  }
-
-  private def pcaSql(dims: Int, iters: Int): String = {
-    def e(i: Int) = s"CAST(embedding[${i + 1}] AS DOUBLE)"
-    val gramCols = (for (i <- 0 until dims; j <- 0 until dims) yield
-      s"CAST(SUM(CAST(ROUND((${e(i)}) * (${e(j)}), 9) AS DECIMAL(28,9))) AS DOUBLE) AS g_${i}_$j")
-      .mkString(",\n    ")
-    val seed = DuckSql.fmt(1.0 / math.sqrt(dims.toDouble))
-    val its = (1 to iters).map { it =>
-      def prev(j: Int) = if (it == 1) seed else s"c$j"
-      val from = if (it == 1) "gram" else s"gram, n${it - 1}"
-      val ws = (0 until dims).map { i =>
-        (0 until dims).map(j => s"g_${i}_$j * (${prev(j)})")
-          .mkString("(", " + ", ")") + s" AS w$i"
-      }.mkString(",\n    ")
-      val nsq = (0 until dims).map(i => s"w$i * w$i").mkString("(", " + ", ")")
-      val cs = (0 until dims).map(i => s"w$i / SQRT($nsq) AS c$i").mkString(",\n    ")
-      s"""i$it AS (SELECT $ws FROM $from),
-         |n$it AS (SELECT $cs FROM i$it)""".stripMargin
-    }.mkString(",\n")
-    val rows = (0 until dims)
-      .map(i => s"SELECT CAST($i AS INT) AS dim_idx, c$i AS component FROM n$iters")
-      .mkString("\n  UNION ALL ")
-    s"""WITH gram AS (
-       |  SELECT $gramCols
-       |  FROM embeddings),
-       |$its
-       |SELECT * FROM (
-       |  $rows
-       |) ORDER BY dim_idx""".stripMargin
-  }
-
-  private lazy val rangeJoinBandsSql: String =
-    s"""SELECT band, COUNT(*) AS n, ${dsumSql("o_totalprice")} AS sum_price
-       |FROM orders
-       |JOIN (VALUES ('b0_lt50k', ${DuckSql.fmt(0.0)}, ${DuckSql.fmt(50000.0)}),
-       |             ('b1_50k_100k', ${DuckSql.fmt(50000.0)}, ${DuckSql.fmt(100000.0)}),
-       |             ('b2_100k_200k', ${DuckSql.fmt(100000.0)}, ${DuckSql.fmt(200000.0)}),
-       |             ('b3_ge200k', ${DuckSql.fmt(200000.0)}, ${DuckSql.fmt(1e18)})) AS bands(band, lo, hi)
-       |  ON o_totalprice >= lo AND o_totalprice < hi
-       |GROUP BY band ORDER BY band""".stripMargin
-
-  /** Unrolled greedy k-center CTE chain (`e`, `c0..c{k-1}`, `d1..`) for
-    * the coreset oracles. The selection is data-dependent, so DuckDB
-    * REPLAYS the greedy loop itself: seed = min vec_id, then k−1
-    * argmax-of-min-distance steps, each LEAST-folding the new center's
-    * left-assoc squared L2 into the running min — bit-equal to
-    * VecMinDistL2's recomputed min (min is associative and exact).
-    * Assumes ≥ k distinct vectors (the suite pins early-stop Scala-side).
-    * `baseSql` is the candidate relation — the full corpus by default, the
-    * md5-ordered page for the sampled variant. */
-  private def kcenterChainSql(k: Int,
-      baseSql: String = "SELECT vec_id, embedding FROM embeddings"): String = {
-    def sq(a: String, b: String) = DuckSql.squaredL2Cols(a, b, Dim)
-    // Every d_i/c_i is MATERIALIZED: d_i is referenced twice (by c_i and
-    // d_{i+1}), and DuckDB inlines plain CTEs per reference, so the un-hinted
-    // chain re-evaluated d_1 2^(k-1) times — the r16 driver's oracle sweep
-    // spent 15-17 s per coreset query on a 500-row fixture (measured: 15.3 s
-    // → 0.56 s with the hints, byte-identical result).
-    val parts = Seq(
-      s"e AS MATERIALIZED ($baseSql)",
-      "c0 AS MATERIALIZED (SELECT vec_id, embedding FROM e ORDER BY vec_id ASC LIMIT 1)",
-      s"d1 AS MATERIALIZED (SELECT e.vec_id, e.embedding, ${sq("e.embedding", "c0.embedding")} AS md FROM e CROSS JOIN c0)") ++
-      (1 until k).flatMap { i =>
-        Seq(s"c$i AS MATERIALIZED (SELECT vec_id, embedding, md FROM d$i ORDER BY md DESC, vec_id ASC LIMIT 1)") ++
-          (if (i < k - 1)
-            Seq(s"d${i + 1} AS MATERIALIZED (SELECT d$i.vec_id, d$i.embedding, " +
-              s"LEAST(d$i.md, ${sq(s"d$i.embedding", s"c$i.embedding")}) AS md " +
-              s"FROM d$i CROSS JOIN c$i)")
-          else Seq.empty)
-      }
-    parts.mkString(",\n")
-  }
-
-  private def knnSql(distExpr: String, k: Int, where: String = ""): String =
-    s"SELECT vec_id, label, $distExpr AS dist FROM embeddings $where ORDER BY dist ASC, vec_id ASC LIMIT $k"
-
-  private def labelSummarySql(fromSubquery: String): String =
-    s"SELECT label, COUNT(*) AS n, CAST(SUM(vec_id) AS BIGINT) AS id_sum FROM ($fromSubquery) GROUP BY label ORDER BY label"
-
-  def oracleSql: Map[String, String] = {
-    val e = "embedding"
-    val sq = DuckSql.squaredL2Lit(e, Q64)
-    val revenue = drevenueSql("l_extendedprice", "l_discount")
-    val knnJoinSql = {
-      val pd = DuckSql.squaredL2Cols("q_embedding", "embedding", Dim)
-      s"""SELECT query_id, vec_id, dist, CAST(rn AS INT) AS rn FROM (
-         |  SELECT query_id, vec_id, dist,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dist ASC, vec_id ASC) AS rn
-         |  FROM (
-         |    SELECT q.vec_id AS query_id, d.vec_id AS vec_id, $pd AS dist
-         |    FROM (SELECT vec_id, embedding AS q_embedding FROM embeddings WHERE vec_id < 5) q
-         |    CROSS JOIN embeddings d
-         |  )
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
-    }
-    Map(
-      "knn_l2_brute" -> knnSql(sq, K),
-      "sql_knn_topk" -> knnSql(sq, K),
-      "knn_l2_filtered" -> knnSql(sq, K, "WHERE label = 3"),
-      "knn_l1" -> knnSql(DuckSql.l1Lit(e, Q64), K),
-      "knn_linf" -> knnSql(DuckSql.lInfLit(e, Q64), K),
-      "knn_mahalanobis" -> knnSql(DuckSql.mahalanobisDiagLit(e, Q64, InvDiag64), K),
-      "knn_mahalanobis_full" ->
-        s"""SELECT vec_id, label, ${DuckSql.mahalanobisFullLit("e8", Q8, InvFull8)} AS dist
-           |FROM (SELECT vec_id, label, embedding[1:8] AS e8 FROM embeddings)
-           |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin,
-      "knn_l2_pruned" -> knnSql(sq, K),
-      // exact pruning ⇒ the quantile-grid search answers the SAME query
-      "knn_l2_quantile_grid" -> knnSql(sq, K),
-      "index_quantile_cells" -> {
-        import graft.index.QuantileGrid
-        s"""WITH b AS (
-           |  SELECT ${QuantileGrid.calibrateSql("embedding", 0, 4)} AS b0,
-           |         ${QuantileGrid.calibrateSql("embedding", 1, 4)} AS b1,
-           |         ${QuantileGrid.calibrateSql("embedding", 2, 4)} AS b2
-           |  FROM embeddings)
-           |SELECT cell_id, COUNT(*) AS n FROM (
-           |  SELECT (CAST(len(list_filter(b.b0, x -> CAST(e.embedding[1] AS DOUBLE) >= x)) AS BIGINT)
-           |        + CAST(len(list_filter(b.b1, x -> CAST(e.embedding[2] AS DOUBLE) >= x)) AS BIGINT) * 4
-           |        + CAST(len(list_filter(b.b2, x -> CAST(e.embedding[3] AS DOUBLE) >= x)) AS BIGINT) * 16) AS cell_id
-           |  FROM embeddings e, b)
-           |GROUP BY cell_id ORDER BY cell_id""".stripMargin
-      },
-      "store_roundtrip_knn" -> knnSql(sq, K),
-      "knn_l2_pruned_filtered" -> knnSql(sq, K, "WHERE label = 3"),
-      "sim_cosine_topk" ->
-        s"SELECT vec_id, label, ${DuckSql.cosineSimLit(e, Q64)} AS cos_sim FROM embeddings ORDER BY cos_sim DESC, vec_id ASC LIMIT $K",
-      "sim_maxsim_topk" ->
-        s"SELECT vec_id, label, ${DuckSql.maxSimLit(e, Q64, 4)} AS maxsim FROM embeddings ORDER BY maxsim DESC, vec_id ASC LIMIT $K",
-      "vec_truncate_recall" ->
-        s"""WITH qs AS (
-           |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           |  WHERE vec_id % ${modSql(20)} = 7),
-           |scored AS (
-           |  SELECT q.query_id, c.vec_id,
-           |    ${DuckSql.squaredL2Cols("c.embedding", "q.qv", Dim)} AS d_full,
-           |    ${DuckSql.squaredL2Cols("c.embedding", "q.qv", 16)} AS d_pre
-           |  FROM embeddings c CROSS JOIN qs q),
-           |ranked AS (
-           |  SELECT query_id, vec_id,
-           |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d_full, vec_id) AS rf,
-           |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d_pre, vec_id) AS rp
-           |  FROM scored)
-           |SELECT query_id,
-           |  CAST(SUM(CASE WHEN rp <= $K THEN 1 ELSE 0 END) AS BIGINT) AS overlap,
-           |  ROUND(CAST(SUM(CASE WHEN rp <= $K THEN 1 ELSE 0 END) AS DOUBLE) / $K, 3) AS recall10
-           |FROM ranked WHERE rf <= $K
-           |GROUP BY query_id ORDER BY query_id""".stripMargin,
-      "sim_maxsim_join" ->
-        s"""WITH qs AS (
-           |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           |  WHERE vec_id % ${modSql(20)} = 3),
-           |scored AS (
-           |  SELECT q.query_id, c.vec_id,
-           |    ${DuckSql.maxSimCols("q.qv", "c.embedding", Dim, 4)} AS maxsim
-           |  FROM embeddings c CROSS JOIN qs q),
-           |ranked AS (
-           |  SELECT query_id, vec_id, maxsim,
-           |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-           |      ORDER BY maxsim DESC, vec_id ASC) AS INT) AS rn
-           |  FROM scored)
-           |SELECT query_id, vec_id, maxsim, rn FROM ranked
-           |WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin,
-      "sim_maxsim_refine" ->
-        s"""SELECT vec_id, ${DuckSql.maxSimLit(e, Q64, 4)} AS maxsim
-           |FROM embeddings WHERE vec_id IN (
-           |  SELECT vec_id FROM (
-           |    SELECT vec_id, ${DuckSql.dotLit(e, Q64)} AS coarse FROM embeddings
-           |    ORDER BY coarse DESC, vec_id ASC LIMIT 50))
-           |ORDER BY maxsim DESC, vec_id ASC LIMIT $K""".stripMargin,
-      "vec_dim_stats" ->
-        """WITH el AS (
-          |  SELECT dim, CAST(embedding[dim + 1] AS DOUBLE) AS v
-          |  FROM (SELECT embedding, unnest(range(0, len(embedding))) AS dim
-          |        FROM embeddings)),
-          |st AS (
-          |  SELECT dim, COUNT(*) AS n, MIN(v) AS min_v, MAX(v) AS max_v,
-          |    CAST(SUM(CAST(FLOOR(v * 16777216.0) AS BIGINT)) AS BIGINT) AS sq24
-          |  FROM el GROUP BY dim)
-          |SELECT CAST(dim AS INT) AS dim, n, min_v, max_v,
-          |  ROUND(CAST(sq24 AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216.0), 9) AS mean_q24,
-          |  ROUND(127.0 / GREATEST(ABS(min_v), ABS(max_v)), 6) AS scale127
-          |FROM st ORDER BY dim""".stripMargin,
-      "drift_embedding_cells" ->
-        s"""WITH binned AS (
-           |  SELECT label, ${Grid.cellIdSql(e, gridCfg)} AS bin,
-           |    (vec_id % 2 = 0) AS is_ref
-           |  FROM embeddings
-           |), counts AS (
-           |  SELECT label, bin,
-           |    CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
-           |    CAST(SUM(CASE WHEN NOT is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
-           |  FROM binned GROUP BY 1, 2
-           |), tot AS (
-           |  SELECT label,
-           |    CAST(SUM(n_ref) AS BIGINT) AS t_ref, CAST(SUM(n_cur) AS BIGINT) AS t_cur
-           |  FROM counts GROUP BY 1
-           |), terms AS (
-           |  SELECT c.label,
-           |    (CAST(n_ref AS DOUBLE) + CAST('0.5' AS DOUBLE)) / (CAST(t_ref AS DOUBLE) + CAST('${gridCfg.numCells * 0.5}' AS DOUBLE)) AS pa,
-           |    (CAST(n_cur AS DOUBLE) + CAST('0.5' AS DOUBLE)) / (CAST(t_cur AS DOUBLE) + CAST('${gridCfg.numCells * 0.5}' AS DOUBLE)) AS pb
-           |  FROM counts c JOIN tot t USING (label)
-           |)
-           |SELECT label,
-           |  CAST(SUM(CAST(ROUND((pa - pb) * LN(pa / pb), 9) AS DECIMAL(28,9))) AS DOUBLE) AS psi
-           |FROM terms GROUP BY label ORDER BY label""".stripMargin,
-      "sim_dot_topk" ->
-        s"SELECT vec_id, label, ${DuckSql.dotLit(e, Q64)} AS dot FROM embeddings ORDER BY dot DESC, vec_id ASC LIMIT $K",
-      "sim_dot_pruned" ->
-        s"SELECT vec_id, label, CAST(1 + vec_id % 10 AS DOUBLE) * (${DuckSql.dotLit(e, Q64)}) AS dot FROM embeddings ORDER BY dot DESC, vec_id ASC LIMIT $K",
-      "knn_join_l2" -> knnJoinSql,
-      "knn_join_l2_plan" -> knnJoinSql,
-      "knn_join_l2_agg" -> knnJoinSql,
-      "knn_join_l2_cells" -> knnJoinSql,
-      "knn_join_quantile" -> knnJoinSql,
-      "point_lookup" -> "SELECT vec_id, label FROM embeddings WHERE vec_id = 42",
-      "count_rows" -> "SELECT COUNT(*) AS n_rows FROM embeddings",
-      "full_scan" -> "SELECT vec_id, label FROM embeddings ORDER BY vec_id",
-      "index_cell_counts" ->
-        s"SELECT ${Grid.cellIdSql(e, gridCfg)} AS cell_id, COUNT(*) AS n FROM embeddings GROUP BY cell_id ORDER BY cell_id",
-      "index_zorder_cells" ->
-        s"SELECT ${Grid.zCellIdSql(e, gridCfg)} AS zcell, COUNT(*) AS n FROM embeddings GROUP BY zcell ORDER BY zcell",
-      "crud_insert" -> labelSummarySql(
-        """SELECT vec_id, label FROM embeddings
-          |UNION ALL SELECT vec_id + 1000000 AS vec_id, label FROM (SELECT vec_id, label FROM embeddings ORDER BY vec_id LIMIT 10)""".stripMargin),
-      "crud_delete" -> labelSummarySql(
-        "SELECT vec_id, label FROM embeddings WHERE NOT (vec_id % 7 = 0)"),
-      "crud_update_position" -> {
-        val moved =
-          s"SELECT vec_id, label, CASE WHEN vec_id % 10 = 0 THEN [CAST(0.5 AS FLOAT)] || $e[2:$Dim] ELSE $e END AS $e FROM embeddings"
-        s"SELECT vec_id, label, $sq AS dist FROM ($moved) ORDER BY dist ASC, vec_id ASC LIMIT 20"
-      },
-      "crud_update_metadata" -> labelSummarySql(
-        "SELECT vec_id, CASE WHEN vec_id % 5 = 0 THEN label + 100 ELSE label END AS label FROM embeddings"),
-      "crud_upsert" -> labelSummarySql(
-        """SELECT vec_id, label FROM embeddings WHERE NOT (vec_id < 10)
-          |UNION ALL SELECT vec_id, 999 AS label FROM embeddings WHERE vec_id < 10
-          |UNION ALL SELECT vec_id + 2000000 AS vec_id, label FROM embeddings WHERE vec_id >= 10 AND vec_id < 15""".stripMargin),
-      "agg_pricing_summary" ->
-        s"""SELECT l_returnflag, l_linestatus,
-           |  ${dsumSql("l_quantity")} AS sum_qty,
-           |  $revenue AS revenue,
-           |  ${dsumSql("l_discount")} AS sum_disc,
-           |  COUNT(*) AS n
-           |FROM lineitem GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-      "join_revenue_by_nation" ->
-        s"""SELECT r_name, n_name, $revenue AS revenue, COUNT(*) AS n
-           |FROM lineitem
-           |JOIN orders ON l_orderkey = o_orderkey
-           |JOIN customer ON o_custkey = c_custkey
-           |JOIN nation ON c_nationkey = n_nationkey
-           |JOIN region ON n_regionkey = r_regionkey
-           |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-      "agg_rollup_pricing" ->
-        s"""SELECT COALESCE(l_returnflag, '(all)') AS rf, COALESCE(l_linestatus, '(all)') AS ls,
-           |  ${dsumSql("l_quantity")} AS sum_qty, COUNT(*) AS n
-           |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus) ORDER BY rf, ls""".stripMargin,
-      // range_join_binned is the equi-planned form of the SAME semantics —
-      // one oracle serves both
-      "range_join_price_bands" -> rangeJoinBandsSql,
-      "range_join_binned" -> rangeJoinBandsSql,
-      "window_top_orders_per_customer" ->
-        """SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INT) AS rn FROM (
-          |  SELECT o_custkey, o_orderkey, o_totalprice,
-          |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-          |  FROM orders
-          |) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-      "set_intersect_custkeys" ->
-        "SELECT o_custkey AS custkey FROM orders INTERSECT SELECT c_custkey AS custkey FROM customer ORDER BY custkey",
-      "set_except_all_orders" ->
-        s"""SELECT custkey, CAST(COUNT(*) AS BIGINT) AS n_kept FROM (
-           |  SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > ${DuckSql.fmt(200000.0)}
-           |  EXCEPT ALL
-           |  SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > ${DuckSql.fmt(300000.0)})
-           |GROUP BY custkey ORDER BY custkey""".stripMargin,
-      "sort_nulls_first" ->
-        """SELECT c_custkey, NULLIF(c_nationkey % 7, 3) AS seg_rank
-          |FROM customer
-          |ORDER BY seg_rank ASC NULLS FIRST, c_custkey ASC LIMIT 300""".stripMargin,
-      "agg_regr_price_qty" ->
-        """SELECT l_returnflag, n,
-          |  round(CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE), 6) AS slope,
-          |  round((CAST(sy AS DOUBLE) -
-          |    (CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE)) * CAST(sx AS DOUBLE))
-          |    / CAST(n AS DOUBLE), 6) AS intercept,
-          |  round((CAST(n * sxy - sx * sy AS DOUBLE) * CAST(n * sxy - sx * sy AS DOUBLE)) /
-          |    (CAST(n * sxx - sx * sx AS DOUBLE) * CAST(n * syy - sy * sy AS DOUBLE)), 6) AS r2
-          |FROM (
-          |  SELECT l_returnflag, COUNT(*) AS n,
-          |    SUM(x) AS sx, SUM(y) AS sy,
-          |    SUM(x * x) AS sxx, SUM(y * y) AS syy, SUM(x * y) AS sxy
-          |  FROM (SELECT l_returnflag,
-          |          CAST(l_quantity AS DECIMAL(18,2)) AS x,
-          |          CAST(l_extendedprice AS DECIMAL(18,2)) AS y
-          |        FROM lineitem)
-          |  GROUP BY l_returnflag)
-          |ORDER BY l_returnflag""".stripMargin,
-      "set_union_by_name" ->
-        """SELECT o_orderkey, o_totalprice, CAST(NULL AS VARCHAR) AS o_orderpriority
-          |FROM orders WHERE o_orderkey % 100 = 0
-          |UNION ALL
-          |SELECT o_orderkey, CAST(NULL AS DOUBLE), o_orderpriority
-          |FROM orders WHERE o_orderkey % 100 = 50
-          |ORDER BY o_orderkey""".stripMargin,
-      "set_except_custkeys" ->
-        s"""SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > ${DuckSql.fmt(200000.0)}
-           |EXCEPT SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > ${DuckSql.fmt(300000.0)}
-           |ORDER BY custkey""".stripMargin,
-      "agg_count_distinct" ->
-        "SELECT COUNT(DISTINCT o_custkey) AS n_custs, COUNT(*) AS n_orders FROM orders",
-      // the self-validating sketch query (r12): exact stats replay in any
-      // engine; the bound flags MUST be 1 — a sketch outside its error
-      // contract hash-mismatches here instead of hiding in a rows-only row
-      "agg_sketches" ->
-        """SELECT COUNT(DISTINCT o_custkey) AS n_custs_exact,
-          |  COUNT(*) AS n_rows,
-          |  1 AS hll_within_bound, 1 AS p50_within_bound, 1 AS p99_within_bound
-          |FROM orders""".stripMargin,
-      "anti_customers_without_orders" ->
-        "SELECT c_custkey, c_name FROM customer WHERE c_custkey NOT IN (SELECT o_custkey FROM orders) ORDER BY c_custkey",
-      "date_orders_by_month" ->
-        s"""SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month, COUNT(*) AS n,
-           |  ${dsumSql("o_totalprice")} AS sum_price
-           |FROM orders GROUP BY month ORDER BY month""".stripMargin,
-      "json_events_by_type" ->
-        s"""SELECT event_type, COUNT(*) AS n,
-           |  CAST(SUM(CAST(json_extract_string(props, '$$.k') AS BIGINT)) AS BIGINT) AS k_sum,
-           |  ${dsumSql("value", 3)} AS v_sum
-           |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-      "agg_salted_events_by_type" ->
-        s"""SELECT event_type, COUNT(*) AS n, ${dsumSql("value", 3)} AS v_sum
-           |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-      "pivot_event_counts" -> {
-        val cols = Seq("click", "error", "purchase", "signup", "view")
-          .map(t => s"COUNT(*) FILTER (event_type = '$t') AS \"$t\"").mkString(",\n  ")
-        s"""SELECT CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_epoch,
-           |  $cols
-           |FROM events GROUP BY day_epoch ORDER BY day_epoch""".stripMargin
-      },
-      "unpivot_event_counts" -> {
-        val unions = Seq("click", "error", "purchase", "signup", "view").map { t =>
-          s"SELECT day_epoch, '$t' AS event_type, COUNT(*) FILTER (event_type = '$t') AS n FROM ev GROUP BY day_epoch"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH ev AS (SELECT CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_epoch, event_type FROM events)
-           |SELECT day_epoch, event_type, n FROM (
-           |  $unions
-           |) ORDER BY day_epoch, event_type""".stripMargin
-      },
-      "events_hourly_dense" ->
-        """WITH bounds AS (
-          |  SELECT CAST(epoch(date_trunc('hour', min(ts))) AS BIGINT) AS t0,
-          |         CAST(epoch(date_trunc('hour', max(ts))) AS BIGINT) AS t1
-          |  FROM events
-          |), spine AS (
-          |  SELECT unnest(generate_series(t0, t1, 3600)) AS hour_epoch FROM bounds
-          |), counts AS (
-          |  SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS he, COUNT(*) AS n
-          |  FROM events WHERE event_type = 'purchase' GROUP BY he
-          |)
-          |SELECT hour_epoch, COALESCE(n, 0) AS n
-          |FROM spine LEFT OUTER JOIN counts ON hour_epoch = he
-          |ORDER BY hour_epoch""".stripMargin,
-      "json_kv_explode" ->
-        """SELECT key, COUNT(*) AS n,
-          |  CAST(SUM(CAST(json_extract_string(props, '$.' || key) AS BIGINT)) AS BIGINT) AS v_sum
-          |FROM (SELECT unnest(json_keys(props)) AS key, props FROM events)
-          |GROUP BY key ORDER BY key""".stripMargin,
-      "agg_cube_pricing" ->
-        """SELECT COALESCE(l_returnflag, '(all)') AS rf, COALESCE(l_linestatus, '(all)') AS ls, COUNT(*) AS n
-          |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus) ORDER BY rf, ls""".stripMargin,
-      "events_hourly_stats" ->
-        s"""SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch, event_type,
-           |  COUNT(*) AS n, ${dsumSql("value", 3)} AS v_sum
-           |FROM events GROUP BY hour_epoch, event_type ORDER BY hour_epoch, event_type""".stripMargin,
-      "text_features" -> {
-        val nw = nWordsSql("text"); val ns = nStopSql("text")
-        s"""SELECT doc_id,
-           |  $nw AS n_words,
-           |  CAST(length(text) AS INT) AS n_chars,
-           |  CAST(CEIL(CAST(length(text) AS DOUBLE) / 4.0) AS BIGINT) AS n_tokens_est,
-           |  CAST(len(regexp_extract_all(text, '${TextAnalysis.TokenRegex}')) AS INT) AS n_tokens_re,
-           |  $ns AS n_stopwords,
-           |  CASE WHEN (CAST($ns AS DOUBLE) / CAST($nw AS DOUBLE)) >= 0.05 THEN 'en' ELSE 'other' END AS lang_pred,
-           |  md5(lower(text)) AS fingerprint
-           |FROM documents ORDER BY doc_id""".stripMargin
-      },
-      "embed_feature_hash" ->
-        s"""SELECT doc_id, idx, CAST(SUM(sign) AS BIGINT) AS val FROM (
-           |  SELECT doc_id, (h % 64) AS idx,
-           |    CASE WHEN CAST(FLOOR(h / 64.0) AS BIGINT) % 2 = 0 THEN 1 ELSE -1 END AS sign
-           |  FROM (
-           |    SELECT doc_id, ${Dedup.md5Int32Sql("w")} AS h
-           |    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-           |          FROM documents WHERE doc_id % 10 = 0)
-           |  )
-           |) GROUP BY doc_id, idx HAVING CAST(SUM(sign) AS BIGINT) <> 0
-           |ORDER BY doc_id, idx""".stripMargin,
-      "embed_random_projection" ->
-        s"""SELECT vec_id, ${(0 until 8).map(j =>
-            s"${DuckSql.dotLit(e, Planes16(j))} AS rp_$j").mkString(",\n  ")}
-           |FROM embeddings WHERE vec_id % 5 = 0 ORDER BY vec_id""".stripMargin,
-      "media_dedup_exact" ->
-        """WITH alldocs AS (
-          |  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 3)
-          |SELECT md5(text) AS digest, COUNT(*) AS n_copies, MIN(doc_id) AS canonical_id
-          |FROM alldocs GROUP BY digest HAVING COUNT(*) >= 2 ORDER BY digest""".stripMargin,
-      "media_features" -> {
-        // fixture expected rows (r15): REAL-decoding image rows carry the
-        // known-by-construction dims (frames = 1 stills); the junk and
-        // non-image rows fall back to the stub, replayed driver-side over
-        // the same deterministic payload bytes (which also supply
-        // n_bytes and the polynomial checksum — payload identity, not
-        // decode logic).
-        val knownDims = Map(1L -> (8, 5, 1), 2L -> (20, 10, 1),
-          3L -> (12, 7, 1), 4L -> (9, 9, 1), 5L -> (16, 4, 1))
-        val fxRows = Multimodal.realDecodeFixtureRows.map { case (id, kind, payload) =>
-          val checksum = payload.foldLeft(17L)((acc, b) => acc * 31 + (b & 0xff))
-          val (w, h, f) = knownDims.getOrElse(id, Multimodal.stubDecode(payload, kind))
-          s"(CAST(${id + 1000000000L} AS BIGINT), '$kind', " +
-            s"CAST(${payload.length} AS BIGINT), CAST($checksum AS BIGINT), $w, $h, $f)"
-        }.mkString(",\n  ")
-        s"""SELECT * FROM (
-           |$mediaFeaturesSql
-           |UNION ALL
-           |SELECT * FROM (VALUES
-           |  $fxRows) AS fx(media_id, kind, n_bytes, checksum, width, height, n_frames)
-           |) ORDER BY media_id""".stripMargin
-      },
-      // expected-value table for the REAL-decode fixture: solid colors in
-      // lossless formats decode to exactly the drawn pixels, so integer
-      // ITU-R 601 luminance is a constant per row ((299R+587G+114B)/1000)
-      "media_decode_real" ->
-        """SELECT * FROM (VALUES
-          |  (CAST(1 AS BIGINT), 1, 8, 5, 1, 255),
-          |  (CAST(2 AS BIGINT), 1, 20, 10, 1, 0),
-          |  (CAST(3 AS BIGINT), 1, 12, 7, 1, 128),
-          |  (CAST(4 AS BIGINT), 1, 9, 9, 1, 76),
-          |  (CAST(5 AS BIGINT), 1, 16, 4, 1, 45),
-          |  (CAST(6 AS BIGINT), 0, -1, -1, -1, -1),
-          |  (CAST(7 AS BIGINT), 0, -1, -1, -1, -1)
-          |) AS t(media_id, decoded, width, height, n_frames, luma)
-          |ORDER BY media_id""".stripMargin,
-      "media_frame_sample_plan" ->
-        s"""SELECT media_id, n_frames,
-           |  CAST(unnest(range(0, n_frames, 10)) AS INT) AS frame_idx
-           |FROM ($mediaFeaturesSql)
-           |WHERE kind = 'video'
-           |ORDER BY media_id, frame_idx""".stripMargin,
-      // expected-value table: REAL frame counts of the gifFixture rows
-      // (7- and 3-frame animated GIFs, a 1-frame still, junk -> stub 1)
-      // unrolled through the stride-2 plan
-      "media_frame_sample_real" ->
-        """SELECT media_id, n_frames, frame_idx FROM (VALUES
-          |  (CAST(1 AS BIGINT), 7, 0), (CAST(1 AS BIGINT), 7, 2),
-          |  (CAST(1 AS BIGINT), 7, 4), (CAST(1 AS BIGINT), 7, 6),
-          |  (CAST(2 AS BIGINT), 3, 0), (CAST(2 AS BIGINT), 3, 2),
-          |  (CAST(3 AS BIGINT), 1, 0),
-          |  (CAST(4 AS BIGINT), 1, 0)
-          |) AS t(media_id, n_frames, frame_idx)
-          |ORDER BY media_id, frame_idx""".stripMargin,
-      // expected-value embeddings of the real-decode retrieval fixture:
-      // per-image luminance masses from the documented pixel patterns
-      // (k/1024 — dyadic, float==double) and the junk row's byte
-      // histogram recomputed here from the same constant string (k/32);
-      // the DISTANCES and the ranking are recomputed by DuckDB
-      "media_embed_knn" -> {
-        def frac(counts: Map[Int, Int], denom: Int): String =
-          (0 until 8).map(b => s"(${counts.getOrElse(b, 0)}.0/$denom)")
-            .mkString("[", ", ", "]")
-        val junkCounts = Multimodal.EmbedJunk.getBytes("UTF-8")
-          .groupBy(b => math.floorMod(b.toInt, 8)).map { case (k, v) => k -> v.length }
-        val rows = Seq(
-          (1L, "image", frac(Map(0 -> 512, 7 -> 512), 1024)),
-          (2L, "image", frac(Map(0 -> 512, 7 -> 512), 1024)),
-          (3L, "image", frac(Map(0 -> 768, 7 -> 256), 1024)),
-          (4L, "image", frac(Map(4 -> 1024), 1024)),
-          (5L, "image", frac((0 until 8).map(_ -> 128).toMap, 1024)),
-          (6L, "image", frac(junkCounts, 32))
-        ).map { case (id, kind, e) => s"(CAST($id AS BIGINT), '$kind', $e)" }
-          .mkString(",\n  ")
-        s"""WITH m AS (SELECT * FROM (VALUES
-           |  $rows) AS t(media_id, kind, embedding))
-           |SELECT media_id, kind,
-           |  ${DuckSql.squaredL2Lit("embedding", MediaQ8)} AS dist
-           |FROM m ORDER BY dist ASC, media_id ASC LIMIT 5""".stripMargin
-      },
-      "corpus_stats_card" -> {
-        val nw = nWordsSql("text"); val ns = nStopSql("text")
-        s"""WITH scored AS (
-           |  SELECT lang, text,
-           |    ((LEAST(chars / 500.0, 1.0) + LEAST((nsd / nwd) * 10.0, 1.0))
-           |      + CASE WHEN awl >= 3.0 AND awl <= 8.0 THEN 1.0 ELSE 0.5 END) / 3.0 AS quality
-           |  FROM (
-           |    SELECT lang, text,
-           |      CAST(length(text) AS DOUBLE) AS chars,
-           |      CAST($nw AS DOUBLE) AS nwd,
-           |      CAST($ns AS DOUBLE) AS nsd,
-           |      CAST(length(text) - ($nw - 1) AS DOUBLE) / CAST($nw AS DOUBLE) AS awl
-           |    FROM documents))
-           |SELECT COUNT(*) AS n_docs,
-           |  CAST(SUM(CAST(CEIL(CAST(length(text) AS DOUBLE) / 4.0) AS BIGINT)) AS BIGINT) AS n_tokens_est,
-           |  CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-           |  CAST(SUM(CAST(ROUND(quality, 9) AS DECIMAL(18,9))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean_quality,
-           |  CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS n_unique_texts,
-           |  ${DuckSql.fmt(1.0)} - CAST(COUNT(DISTINCT md5(text)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS exact_dup_rate
-           |FROM scored""".stripMargin
-      },
-      "text_quality" -> {
-        val nw = nWordsSql("text"); val ns = nStopSql("text")
-        s"""SELECT doc_id,
-           |  ((LEAST(chars / 500.0, 1.0) + LEAST((nsd / nwd) * 10.0, 1.0))
-           |    + CASE WHEN awl >= 3.0 AND awl <= 8.0 THEN 1.0 ELSE 0.5 END) / 3.0 AS quality,
-           |  awl AS avg_word_len
-           |FROM (
-           |  SELECT doc_id,
-           |    CAST(length(text) AS DOUBLE) AS chars,
-           |    CAST($nw AS DOUBLE) AS nwd,
-           |    CAST($ns AS DOUBLE) AS nsd,
-           |    CAST(length(text) - ($nw - 1) AS DOUBLE) / CAST($nw AS DOUBLE) AS awl
-           |  FROM documents
-           |) ORDER BY doc_id""".stripMargin
-      },
-      "text_gopher_rules" ->
-        s"""WITH s AS (
-           |  SELECT doc_id,
-           |    CAST(len(string_split(text, ' ')) AS INT) AS n_words,
-           |    CAST(length(text) - len(string_split(text, ' ')) + 1 AS INT) AS chars,
-           |    CAST(len(list_filter(string_split(text, ' '), w -> w IN $stopListSql)) AS INT) AS n_stop,
-           |    CAST(len(list_distinct(string_split(text, ' '))) AS INT) AS n_distinct
-           |  FROM documents)
-           |SELECT doc_id, n_words, n_stop, n_distinct,
-           |  (n_words >= 20 AND n_words <= 80) AS r_word_count,
-           |  (chars >= n_words * 3 AND chars <= n_words * 8) AS r_mean_word_len,
-           |  (n_stop * 50 >= n_words) AS r_stopwords,
-           |  (n_distinct * 2 >= n_words) AS r_distinct,
-           |  (n_words >= 20 AND n_words <= 80 AND chars >= n_words * 3 AND chars <= n_words * 8
-           |    AND n_stop * 50 >= n_words AND n_distinct * 2 >= n_words) AS keep
-           |FROM s ORDER BY doc_id""".stripMargin,
-      "text_gopher_repetition" ->
-        """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-          |base AS (SELECT doc_id, len(w) AS nw, len(list_distinct(w)) AS ndw FROM w),
-          |grams AS (
-          |  SELECT doc_id, unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS g
-          |  FROM w WHERE len(w) >= 2
-          |), gmax AS (
-          |  SELECT doc_id, MAX(c) AS max2
-          |  FROM (SELECT doc_id, g, COUNT(*) AS c FROM grams GROUP BY doc_id, g)
-          |  GROUP BY doc_id
-          |)
-          |SELECT b.doc_id AS doc_id, CAST(nw AS INT) AS n_words,
-          |  CAST(nw - ndw AS INT) AS n_dup_words,
-          |  CAST(COALESCE(max2, 0) AS BIGINT) AS max_bigram_count,
-          |  ((nw - ndw) * 10 <= nw * 3) AS r_dup_words,
-          |  (COALESCE(max2, 0) * 5 <= nw - 1) AS r_top_bigram,
-          |  ((nw - ndw) * 10 <= nw * 3 AND COALESCE(max2, 0) * 5 <= nw - 1) AS keep
-          |FROM base b LEFT OUTER JOIN gmax g ON b.doc_id = g.doc_id
-          |ORDER BY doc_id""".stripMargin,
-      "text_perplexity_buckets" ->
-        """WITH train AS (SELECT string_split(text, ' ') AS w FROM documents WHERE doc_id % 10 = 0),
-          |tb AS (SELECT w[i] AS w1, w[i+1] AS w2 FROM train, unnest(range(1, len(w))) AS t(i)),
-          |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM tb GROUP BY w1, w2),
-          |c1 AS (SELECT w1, COUNT(*) AS c1 FROM tb GROUP BY w1),
-          |vocab AS (SELECT COUNT(DISTINCT u.word) AS v FROM train, unnest(w) AS u(word)),
-          |held AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents WHERE doc_id % 10 <> 0),
-          |hb AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2 FROM held, unnest(range(1, len(w))) AS t(i)),
-          |scored AS (
-          |  SELECT hb.doc_id,
-          |    CAST(ROUND(LN((COALESCE(c12.c12, 0) + 1.0) / (COALESCE(c1.c1, 0) + vocab.v)), 6)
-          |      AS DECIMAL(18,6)) AS lp
-          |  FROM hb LEFT JOIN c12 ON hb.w1 = c12.w1 AND hb.w2 = c12.w2
-          |          LEFT JOIN c1 ON hb.w1 = c1.w1
-          |          CROSS JOIN vocab)
-          |SELECT doc_id, COUNT(*) AS n_bigrams,
-          |  CASE WHEN SUM(lp) < CAST(-3.55 AS DECIMAL(18,6)) * COUNT(*) THEN 'tail'
-          |       WHEN SUM(lp) >= CAST(-3.49 AS DECIMAL(18,6)) * COUNT(*) THEN 'head'
-          |       ELSE 'middle' END AS bucket
-          |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-      "text_winnow_fingerprints" ->
-        """SELECT doc_id, fp FROM (
-          |  SELECT doc_id, unnest(
-          |    CASE WHEN len(hs) >= 5 THEN list_distinct(list_transform(range(0, len(hs) - 4), j -> list_min(hs[j+1:j+5])))
-          |         WHEN len(hs) > 0 THEN [list_min(hs)]
-          |         ELSE CAST([] AS BIGINT[]) END) AS fp
-          |  FROM (
-          |    SELECT doc_id, list_filter(
-          |      list_transform(range(0, greatest(len(w) - 4, 0) + 1),
-          |        i -> CASE WHEN len(w) >= 4 THEN CAST(('0x' || substr(md5(array_to_string(w[i+1:i+4], ' ')), 1, 8)) AS BIGINT) END),
-          |      h -> h IS NOT NULL) AS hs
-          |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents WHERE doc_id % 10 = 0)
-          |  )
-          |) ORDER BY doc_id, fp""".stripMargin,
-      "asof_join_events_orders" ->
-        """SELECT event_id, user_id, event_type, o_orderkey, o_totalprice FROM (
-          |  SELECT event_id, user_id, event_type, side,
-          |    last_value(pk IGNORE NULLS) OVER w AS o_orderkey,
-          |    last_value(pv IGNORE NULLS) OVER w AS o_totalprice
-          |  FROM (
-          |    SELECT event_id, user_id AS k, ts AS t, 1 AS side, CAST(NULL AS BIGINT) AS tb,
-          |           user_id, event_type, CAST(NULL AS BIGINT) AS pk, CAST(NULL AS DOUBLE) AS pv
-          |    FROM events
-          |    UNION ALL
-          |    SELECT CAST(NULL AS BIGINT), o_custkey, o_orderdate, 0, o_orderkey,
-          |           CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR), o_orderkey, o_totalprice
-          |    FROM orders
-          |  )
-          |  WINDOW w AS (PARTITION BY k ORDER BY t ASC, side ASC, tb ASC
-          |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          |) WHERE side = 1 ORDER BY event_id""".stripMargin,
-      "dedup_minhash_lsh_pairs" ->
-        s"""WITH sig AS (
-           |  SELECT doc_id, $minsSql
-           |  FROM (
-           |    SELECT doc_id, ${Dedup.md5Int32Sql("shingle")} AS h FROM (
-           |      SELECT doc_id, unnest($ssetSql) AS shingle
-           |      FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-           |    )
-           |  ) GROUP BY doc_id
-           |), buckets AS (
-           |  $cappedBandBucketsSql
-           |), cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-           |), sets AS (
-           |  SELECT doc_id, $ssetSql AS sset
-           |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-           |)
-           |SELECT id_a, id_b, jac FROM (
-           |  SELECT id_a, id_b,
-           |    CAST(len(list_intersect(sa.sset, sb.sset)) AS DOUBLE) / CAST(len(list_distinct(list_cat(sa.sset, sb.sset))) AS DOUBLE) AS jac
-           |  FROM cand JOIN sets sa ON sa.doc_id = cand.id_a JOIN sets sb ON sb.doc_id = cand.id_b
-           |) WHERE jac >= ${DuckSql.fmt(0.5)} ORDER BY id_a, id_b""".stripMargin,
-      "dedup_lsh_hot_buckets" ->
-        s"""WITH sig AS (
-           |  SELECT doc_id, $minsSql
-           |  FROM (
-           |    SELECT doc_id, ${Dedup.md5Int32Sql("shingle")} AS h FROM (
-           |      SELECT doc_id, unnest($ssetSql) AS shingle
-           |      FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-           |    )
-           |  ) GROUP BY doc_id
-           |), buckets AS (
-           |  $bandSelectsSql
-           |)
-           |SELECT band, bkey, COUNT(*) AS n_docs FROM buckets
-           |GROUP BY band, bkey HAVING COUNT(*) > 2
-           |ORDER BY band, bkey""".stripMargin,
-      "dedup_lsh_recall" ->
-        s"""WITH words_t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           |sig AS (
-           |  SELECT doc_id, $minsSql
-           |  FROM (
-           |    SELECT doc_id, ${Dedup.md5Int32Sql("shingle")} AS h FROM (
-           |      SELECT doc_id, unnest($ssetSql) AS shingle FROM words_t
-           |    )
-           |  ) GROUP BY doc_id
-           |), buckets AS (
-           |  $cappedBandBucketsSql
-           |), sets AS (SELECT doc_id, $ssetSql AS sset FROM words_t),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-           |), lsh AS (
-           |  SELECT id_a, id_b FROM (
-           |    SELECT id_a, id_b,
-           |      CAST(len(list_intersect(sa.sset, sb.sset)) AS DOUBLE) / CAST(len(list_distinct(list_cat(sa.sset, sb.sset))) AS DOUBLE) AS jac
-           |    FROM cand JOIN sets sa ON sa.doc_id = cand.id_a JOIN sets sb ON sb.doc_id = cand.id_b
-           |  ) WHERE jac >= ${DuckSql.fmt(0.5)} AND (id_a % $docModSql = 0 OR id_b % $docModSql = 0)
-           |), brute AS (
-           |  SELECT DISTINCT LEAST(s.doc_id, p.doc_id) AS id_a,
-           |    GREATEST(s.doc_id, p.doc_id) AS id_b
-           |  FROM sets s JOIN (SELECT * FROM sets WHERE doc_id % $docModSql = 0) p
-           |    ON s.doc_id <> p.doc_id
-           |  WHERE CAST(len(list_intersect(s.sset, p.sset)) AS DOUBLE)
-           |    / CAST(len(list_distinct(list_cat(s.sset, p.sset))) AS DOUBLE) >= ${DuckSql.fmt(0.5)}
-           |), counts AS (
-           |  SELECT CAST((SELECT COUNT(*) FROM lsh) AS BIGINT) AS n_lsh,
-           |    CAST((SELECT COUNT(*) FROM brute) AS BIGINT) AS n_brute,
-           |    CAST((SELECT COUNT(*) FROM lsh l JOIN brute br
-           |          ON l.id_a = br.id_a AND l.id_b = br.id_b) AS BIGINT) AS n_common)
-           |SELECT n_lsh, n_brute, n_common,
-           |  CASE WHEN n_lsh > 0 THEN CAST(n_common AS DOUBLE) / CAST(n_lsh AS DOUBLE) END AS precision,
-           |  CASE WHEN n_brute > 0 THEN CAST(n_common AS DOUBLE) / CAST(n_brute AS DOUBLE) END AS recall
-           |FROM counts""".stripMargin,
-      "dedup_exact_groups" ->
-        "SELECT md5(text) AS content_hash, COUNT(*) AS n_docs, MIN(doc_id) AS canonical_id FROM documents GROUP BY content_hash ORDER BY content_hash",
-      "dedup_incremental_batch" ->
-        s"""WITH corpusdocs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 7),
-           |batchdocs AS (
-           |  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 7
-           |  UNION ALL
-           |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id IN (20, 41)),
-           |alldocs AS (SELECT * FROM corpusdocs UNION ALL SELECT * FROM batchdocs),
-           |sig AS (
-           |  SELECT doc_id, $minsSql
-           |  FROM (
-           |    SELECT doc_id, ${Dedup.md5Int32Sql("shingle")} AS h FROM (
-           |      SELECT doc_id, unnest($ssetSql) AS shingle
-           |      FROM (SELECT doc_id, string_split(text, ' ') AS w FROM alldocs)
-           |    )
-           |  ) GROUP BY doc_id
-           |), buckets AS (
-           |  $bandSelectsSql
-           |), cand AS (
-           |  SELECT DISTINCT a.doc_id AS b_id, b.doc_id AS c_id
-           |  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey
-           |    AND (a.doc_id >= 1000000 OR a.doc_id % 10 = 7)
-           |    AND NOT (b.doc_id >= 1000000 OR b.doc_id % 10 = 7)
-           |), sets AS (
-           |  SELECT doc_id, $ssetSql AS sset
-           |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM alldocs)
-           |), near AS (
-           |  SELECT b_id, MIN(c_id) AS near_id FROM (
-           |    SELECT b_id, c_id,
-           |      CAST(len(list_intersect(sa.sset, sb.sset)) AS DOUBLE) / CAST(len(list_distinct(list_cat(sa.sset, sb.sset))) AS DOUBLE) AS jac
-           |    FROM cand JOIN sets sa ON sa.doc_id = cand.b_id JOIN sets sb ON sb.doc_id = cand.c_id
-           |  ) WHERE jac >= ${DuckSql.fmt(0.5)} GROUP BY b_id
-           |), exact AS (
-           |  SELECT b.doc_id, MIN(c.doc_id) AS exact_id
-           |  FROM (SELECT doc_id, md5(text) AS dg FROM batchdocs) b
-           |  LEFT JOIN (SELECT doc_id, md5(text) AS dg FROM corpusdocs) c USING (dg)
-           |  GROUP BY b.doc_id
-           |)
-           |SELECT e.doc_id,
-           |  CASE WHEN exact_id IS NOT NULL THEN 'exact'
-           |       WHEN near_id IS NOT NULL THEN 'near' ELSE 'keep' END AS verdict,
-           |  COALESCE(exact_id, near_id, -1) AS match_id
-           |FROM exact e LEFT JOIN near n ON n.b_id = e.doc_id
-           |ORDER BY e.doc_id""".stripMargin,
-      "dedup_minhash_signatures" ->
-        s"""SELECT doc_id, $minsSql
-           |FROM (
-           |  SELECT doc_id, ${Dedup.md5Int32Sql("shingle")} AS h FROM (
-           |    SELECT doc_id, unnest($ssetSql) AS shingle
-           |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents WHERE doc_id % 20 = 0)
-           |  )
-           |) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-      "dedup_simhash" -> {
-        val bitSums = (0 until 60).map { i =>
-          s"SUM(CASE WHEN (h >> $i) & 1 = 1 THEN 1 ELSE -1 END) AS b_$i"
-        }.mkString(",\n  ")
-        val sig = (0 until 60).map { i =>
-          s"(CASE WHEN b_$i > 0 THEN CAST(${1L << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        }.mkString(" + ")
-        s"""SELECT doc_id, ($sig) AS simhash FROM (
-           |  SELECT doc_id, $bitSums
-           |  FROM (
-           |    SELECT doc_id, ${Dedup.md5LongSql("w")} AS h
-           |    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents WHERE doc_id % 20 = 0)
-           |  ) GROUP BY doc_id
-           |) ORDER BY doc_id""".stripMargin
-      },
-      // oracle for the banded pairing IS the brute form — exactness of the
-      // pigeonhole candidate generation is the claim under test
-      "dedup_simhash_pairs" -> simhashPairsSql(
-        "SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0", 8),
-      "media_phash_neardup" -> simhashPairsSql(
-        """SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0
-          |    UNION ALL
-          |    SELECT doc_id + 1000000, text || ' zz qq' FROM documents
-          |    WHERE doc_id % 28 = 0""".stripMargin, 8),
-      // expected-value table for the REAL-pixel perceptual pairing (the
-      // media_decode_real pattern: a codec is not SQL): Hamming distances
-      // follow from the fixture's block layout — identical rasters 0, the
-      // 3-flipped-block variant 3, everything else past the threshold
-      "media_phash_real" ->
-        """SELECT * FROM (VALUES
-          |  (CAST(1 AS BIGINT), CAST(2 AS BIGINT), 0),
-          |  (CAST(1 AS BIGINT), CAST(3 AS BIGINT), 3),
-          |  (CAST(1 AS BIGINT), CAST(7 AS BIGINT), 3),
-          |  (CAST(2 AS BIGINT), CAST(3 AS BIGINT), 3),
-          |  (CAST(2 AS BIGINT), CAST(7 AS BIGINT), 3),
-          |  (CAST(3 AS BIGINT), CAST(7 AS BIGINT), 0)
-          |) AS t(id_a, id_b, hamming)
-          |ORDER BY id_a, id_b""".stripMargin,
-      "dedup_cluster_canonical" -> {
-        val winnowFps =
-          """SELECT doc_id, unnest(
-            |    CASE WHEN len(hs) >= 5 THEN list_distinct(list_transform(range(0, len(hs) - 4), j -> list_min(hs[j+1:j+5])))
-            |         WHEN len(hs) > 0 THEN [list_min(hs)]
-            |         ELSE CAST([] AS BIGINT[]) END) AS fp
-            |  FROM (
-            |    SELECT doc_id, list_filter(
-            |      list_transform(range(0, greatest(len(w) - 4, 0) + 1),
-            |        i -> CASE WHEN len(w) >= 4 THEN CAST(('0x' || substr(md5(array_to_string(w[i+1:i+4], ' ')), 1, 8)) AS BIGINT) END),
-            |      h -> h IS NOT NULL) AS hs
-            |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-            |  )""".stripMargin
-        s"""WITH RECURSIVE fps AS (
-           |  $winnowFps
-           |), keptfp AS (
-           |  -- df cap mirroring Dedup.fingerprintEdges(maxBucket = 256):
-           |  -- boilerplate fingerprints generate no pairs
-           |  SELECT fp FROM fps GROUP BY fp HAVING COUNT(*) <= 256
-           |), edges AS (
-           |  SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-           |  FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
-           |  WHERE a.fp IN (SELECT fp FROM keptfp)
-           |), sym AS MATERIALIZED (
-           |  SELECT src, dst FROM edges UNION SELECT dst AS src, src AS dst FROM edges
-           |), reach(id, lab) AS (
-           |  SELECT DISTINCT src AS id, src AS lab FROM sym
-           |  UNION
-           |  SELECT s.dst, r.lab FROM reach r JOIN sym s ON s.src = r.id
-           |)
-           |SELECT id, MIN(lab) AS canonical FROM reach GROUP BY id ORDER BY id""".stripMargin
-      },
-      "pipeline_curation" -> {
-        s"""$curationChainSql
-           |SELECT doc_id FROM exact
-           |WHERE doc_id NOT IN (SELECT id FROM clusters WHERE id <> canonical)
-           |ORDER BY doc_id""".stripMargin
-      },
-      // funnel observability over the SAME chain: per-stage survivor
-      // counts (input → gate → exact dedup → near-dup dedup)
-      "pipeline_funnel_report" -> {
-        s"""$curationChainSql,
-           |curated AS (
-           |  SELECT doc_id FROM exact
-           |  WHERE doc_id NOT IN (SELECT id FROM clusters WHERE id <> canonical))
-           |SELECT * FROM (
-           |  SELECT CAST(0 AS BIGINT) AS stage_idx, 'input' AS stage,
-           |    (SELECT COUNT(*) FROM documents) AS n_rows
-           |  UNION ALL SELECT 1, 'quality_lang_gate', (SELECT COUNT(*) FROM gated)
-           |  UNION ALL SELECT 2, 'exact_dedup', (SELECT COUNT(*) FROM exact)
-           |  UNION ALL SELECT 3, 'near_dup_dedup', (SELECT COUNT(*) FROM curated)
-           |  UNION ALL SELECT 4, 'lsh_dropped_buckets', (SELECT COUNT(*) FROM lsh_drops)
-           |  UNION ALL SELECT 5, 'lsh_dropped_docs',
-           |    (SELECT CAST(COALESCE(SUM(n_docs), 0) AS BIGINT) FROM lsh_drops)
-           |) ORDER BY stage_idx""".stripMargin
-      },
-      "pipeline_release_funnel" ->
-        s"""WITH gated AS (
-           |  SELECT d.doc_id, d.text, d.source, d.n_chars
-           |  FROM (
-           |  ${qualityGateSql(0.3, "en")}
-           |  ) g JOIN documents d ON d.doc_id = g.doc_id),
-           |dedup AS (
-           |  SELECT doc_id, source, n_chars FROM (
-           |    SELECT doc_id, source, n_chars,
-           |      ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-           |    FROM gated) WHERE rn = 1),
-           |withq AS (
-           |  SELECT doc_id, source, CAST(FLOOR(n_chars / 50) AS INT) AS cb FROM dedup),
-           |viol AS (
-           |  SELECT source, cb FROM withq GROUP BY 1, 2 HAVING COUNT(*) < 5),
-           |released AS (
-           |  SELECT * FROM withq q WHERE NOT EXISTS (
-           |    SELECT 1 FROM viol v
-           |    WHERE v.source IS NOT DISTINCT FROM q.source
-           |      AND v.cb IS NOT DISTINCT FROM q.cb))
-           |SELECT * FROM (
-           |  SELECT '1_input' AS step, (SELECT COUNT(*) FROM documents) AS n_rows
-           |  UNION ALL SELECT '2_quality_lang', (SELECT COUNT(*) FROM gated)
-           |  UNION ALL SELECT '3_exact_dedup', (SELECT COUNT(*) FROM dedup)
-           |  UNION ALL SELECT '4_k_anon_release', (SELECT COUNT(*) FROM released)
-           |) ORDER BY step""".stripMargin,
-      "sample_documents_hashmod" ->
-        "SELECT doc_id, n_chars FROM documents WHERE (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100) < 10 ORDER BY doc_id",
-      "sample_weighted_bernoulli" ->
-        s"""SELECT doc_id, p FROM (
-           |  SELECT doc_id, LEAST(n_chars / 500.0, 1.0) AS p,
-           |    (${Dedup.md5Int32Sql("CAST(doc_id AS VARCHAR)")}) % 1048576 AS h
-           |  FROM documents)
-           |WHERE h < p * 1048576.0 ORDER BY doc_id""".stripMargin,
-      "dedup_jaccard_pairs" ->
-        """SELECT id_a, id_b, jac FROM (
-          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          |    CAST(len(list_intersect(a.wset, b.wset)) AS DOUBLE) / CAST(len(list_distinct(list_cat(a.wset, b.wset))) AS DOUBLE) AS jac
-          |  FROM (SELECT doc_id, list_distinct(string_split(text, ' ')) AS wset FROM documents WHERE doc_id % 100 = 0) a
-          |  JOIN (SELECT doc_id, list_distinct(string_split(text, ' ')) AS wset FROM documents WHERE doc_id % 100 = 0) b
-          |    ON a.doc_id < b.doc_id
-          |) WHERE jac >= 0.8 ORDER BY id_a, id_b""".stripMargin,
-      "dedup_repeated_ngram_spans" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           |g AS (
-           |  SELECT doc_id, i AS pos,
-           |    ${Dedup.md5LongSql("array_to_string(w[i+1:i+5], ' ')")} AS gh
-           |  FROM (SELECT doc_id, w,
-           |          unnest(range(0, CASE WHEN len(w) >= 5 THEN len(w) - 4 ELSE 0 END)) AS i
-           |        FROM w)),
-           |hot AS (
-           |  SELECT gh FROM (SELECT gh, COUNT(DISTINCT doc_id) AS df FROM g GROUP BY gh)
-           |  WHERE df >= 2),
-           |f AS (SELECT doc_id, pos FROM g JOIN hot USING (gh)),
-           |m AS (
-           |  SELECT doc_id, pos,
-           |    MAX(pos + 5) OVER (PARTITION BY doc_id ORDER BY pos
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-           |  FROM f),
-           |i AS (
-           |  SELECT doc_id, pos,
-           |    SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
-           |      OVER (PARTITION BY doc_id ORDER BY pos
-           |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-           |  FROM m)
-           |SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS span_start,
-           |  CAST(MAX(pos) + 5 AS BIGINT) AS span_end, COUNT(*) AS n_grams
-           |FROM i GROUP BY doc_id, island
-           |ORDER BY doc_id, span_start""".stripMargin,
-      "dedup_substring_exact" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           |g AS (
-           |  SELECT doc_id, i AS pos,
-           |    array_to_string(w[i+1:i+5], ' ') AS gh
-           |  FROM (SELECT doc_id, w,
-           |          unnest(range(0, CASE WHEN len(w) >= 5 THEN len(w) - 4 ELSE 0 END)) AS i
-           |        FROM w)),
-           |hot AS (
-           |  SELECT gh FROM (SELECT gh, COUNT(DISTINCT doc_id) AS df FROM g GROUP BY gh)
-           |  WHERE df >= 2),
-           |f AS (SELECT doc_id, pos FROM g JOIN hot USING (gh)),
-           |m AS (
-           |  SELECT doc_id, pos,
-           |    MAX(pos + 5) OVER (PARTITION BY doc_id ORDER BY pos
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-           |  FROM f),
-           |i AS (
-           |  SELECT doc_id, pos,
-           |    SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
-           |      OVER (PARTITION BY doc_id ORDER BY pos
-           |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-           |  FROM m)
-           |SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS span_start,
-           |  CAST(MAX(pos) + 5 AS BIGINT) AS span_end, COUNT(*) AS n_grams
-           |FROM i GROUP BY doc_id, island
-           |ORDER BY doc_id, span_start""".stripMargin,
-      // oracle for the prefix-filter join IS the brute form — exactness of
-      // the candidate pruning is the claim under test
-      "ann_pq_fixed_adc" ->
-        s"""SELECT vec_id, $pqAdcSql AS adc_dist FROM (
-           |  SELECT vec_id,
-           |    $pqCodeColsSql
-           |  FROM embeddings)
-           |ORDER BY adc_dist ASC, vec_id ASC LIMIT $K""".stripMargin,
-      "vec_pq_error" -> {
-        val model = FixedPqModel
-        def subDistSql(off: Int, cent: Array[Double]): String =
-          cent.indices.map { i =>
-            val dd = s"(embedding[${off + i + 1}]::DOUBLE - (${DuckSql.fmt(cent(i))}))"
-            s"($dd * $dd)"
-          }.mkString("(", " + ", ")")
-        val branches = (0 until model.m).map { j =>
-          val ds = (0 until model.ksub)
-            .map(c => subDistSql(j * model.dsub, model.codebooks(j)(c)))
-            .mkString("[", ",\n      ", "]")
-          s"SELECT $j AS subspace, CAST(ROUND(list_min($ds), 9) AS DECIMAL(18,9)) AS err FROM embeddings"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH e AS (
-           |  $branches)
-           |SELECT CAST(subspace AS INT) AS subspace, COUNT(*) AS n,
-           |  ROUND(CAST(SUM(err) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9) AS mean_err,
-           |  CAST(MAX(err) AS DOUBLE) AS max_err
-           |FROM e GROUP BY subspace ORDER BY subspace""".stripMargin
-      },
-      "ann_pq_fixed_refine" ->
-        s"""SELECT vec_id, ${DuckSql.squaredL2Lit(e, Q64)} AS dist
-           |FROM embeddings WHERE vec_id IN (
-           |  SELECT vec_id FROM (
-           |    SELECT vec_id, $pqAdcSql AS adc_dist FROM (
-           |      SELECT vec_id, $e,
-           |        $pqCodeColsSql
-           |      FROM embeddings))
-           |  ORDER BY adc_dist ASC, vec_id ASC LIMIT 50)
-           |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin,
-      "ann_ivfpq_fixed" -> {
-        // probe ranking mirrors Pq.ivfPqSearch: (dist, idx) over the same
-        // constants, nprobe=5 of the 8 IVF planes; 1-based for list_position
-        val ivfCents = Planes16.take(8)
-        val probe = ivfCents.zipWithIndex
-          .map { case (c, j) => (graft.functions.Distances.squaredL2(Q64, c), j) }
-          .sortBy(identity).take(5).map(_._2 + 1)
-        val ivfDists = ivfCents.map(c => DuckSql.squaredL2Lit(e, c))
-          .mkString("[", ",\n    ", "]")
-        s"""SELECT vec_id, ${DuckSql.squaredL2Lit(e, Q64)} AS dist
-           |FROM embeddings WHERE vec_id IN (
-           |  SELECT vec_id FROM (
-           |    SELECT vec_id, $pqAdcSql AS adc_dist FROM (
-           |      SELECT vec_id, $e,
-           |        list_position($ivfDists, list_min($ivfDists)) AS cellp,
-           |        $pqCodeColsSql
-           |      FROM embeddings)
-           |    WHERE cellp IN (${probe.mkString(", ")}))
-           |  ORDER BY adc_dist ASC, vec_id ASC LIMIT 50)
-           |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin
-      },
-      "ann_ivf_fixed_topk" -> {
-        val cents = Planes16.take(8)
-        // same driver-side probe ranking as Ann.search, over the same
-        // constants — the probe set is a compile-time literal in the SQL
-        val probe = cents.zipWithIndex
-          .map { case (c, j) => (graft.functions.Distances.squaredL2(Q64, c), j) }
-          .sortBy(identity).take(3).map(_._2 + 1) // 1-based for list_position
-        val dists = cents.map(c => DuckSql.squaredL2Lit(e, c)).mkString(",\n    ")
-        s"""SELECT vec_id, dist FROM (
-           |  SELECT vec_id, ${DuckSql.squaredL2Lit(e, Q64)} AS dist,
-           |    list_position(l, list_min(l)) AS cellp
-           |  FROM (SELECT vec_id, $e, [$dists] AS l FROM embeddings))
-           |WHERE cellp IN (${probe.mkString(", ")})
-           |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin
-      },
-      // two-level fixed-codebook replay: coarse argmin via
-      // list_position(list_min), then a CASE over the coarse winner picks
-      // the fine argmin with its global-offset; the query's probed cell is
-      // the same driver-computed constant the Spark filter carries
-      "ann_two_level_topk" -> {
-        val qcell = twoLevelCellOf(Q64, TwoLevelCoarse, TwoLevelFine)
-        val lc = TwoLevelCoarse.map(c => DuckSql.squaredL2Lit(e, c)).mkString(",\n    ")
-        val offsets = TwoLevelFine.scanLeft(0)(_ + _.length).init
-        val fineCases = TwoLevelFine.zipWithIndex.map { case (fc, c) =>
-          val lf = fc.map(f => DuckSql.squaredL2Lit(e, f)).mkString(",\n      ")
-          s"WHEN ${c + 1} THEN ${offsets(c)} + list_position([$lf], list_min([$lf])) - 1"
-        }.mkString("\n    ")
-        s"""SELECT vec_id, dist FROM (
-           |  SELECT vec_id, ${DuckSql.squaredL2Lit(e, Q64)} AS dist,
-           |    CASE list_position(lc, list_min(lc))
-           |    $fineCases
-           |    END AS cell
-           |  FROM (SELECT vec_id, $e, [$lc] AS lc FROM embeddings))
-           |WHERE cell = $qcell
-           |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin
-      },
-      // --- trained IVF family: the oracle replays the seeded-exact Lloyd
-      // training (ivfTrainedCtes) then the query-specific tail
-      "ann_ivf_topk" ->
-        s"""WITH ${ivfTrainedCtes(IvfSeeds, 2)},
-           |probe AS ${ivfProbeSql("c2", Q64, 4)}
-           |SELECT vec_id, dist FROM (
-           |  SELECT vec_id, ${DuckSql.squaredL2Lit("embedding", Q64)} AS dist, cell
-           |  FROM af JOIN embeddings USING (vec_id))
-           |WHERE cell IN (SELECT cell FROM probe)
-           |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin,
-      "ann_ivf_filtered" ->
-        s"""WITH ${ivfTrainedCtes(IvfSeeds, 2)},
-           |probe AS ${ivfProbeSql("c2", Q64, 4)}
-           |SELECT vec_id, dist FROM (
-           |  SELECT vec_id, label, ${DuckSql.squaredL2Lit("embedding", Q64)} AS dist, cell
-           |  FROM af JOIN embeddings USING (vec_id))
-           |WHERE label = 3 AND cell IN (SELECT cell FROM probe)
-           |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin,
-      "ann_ivf_join" -> {
-        val pd = DuckSql.squaredL2Cols("q.q_embedding", "a.embedding", Dim)
-        s"""WITH ${ivfTrainedCtes(IvfSeeds, 2)},
-           |qs AS (SELECT vec_id AS qid, embedding AS q_embedding FROM embeddings WHERE vec_id < 5),
-           |qprobe AS (
-           |  SELECT qid, cell FROM (
-           |    SELECT qid, cell,
-           |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dqc ASC, cell ASC) AS rnp
-           |    FROM (SELECT q.qid, c.cell, $ivfDistQC AS dqc FROM qs q CROSS JOIN c2 c))
-           |  WHERE rnp <= 4)
-           |SELECT query_id, vec_id, dist, CAST(rn AS INT) AS rn FROM (
-           |  SELECT query_id, vec_id, dist,
-           |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dist ASC, vec_id ASC) AS rn
-           |  FROM (
-           |    SELECT qp.qid AS query_id, a.vec_id, $pd AS dist
-           |    FROM qprobe qp JOIN qs q USING (qid) JOIN af f USING (cell)
-           |    JOIN embeddings a ON a.vec_id = f.vec_id)
-           |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
-      },
-      "ann_ivf_recall" -> {
-        val pd = DuckSql.squaredL2Cols("q.q_embedding", "a.embedding", Dim)
-        val ed = DuckSql.squaredL2Cols("q.q_embedding", "d.embedding", Dim)
-        s"""WITH ${ivfTrainedCtes(IvfSeeds, 2)},
-           |qs AS (SELECT vec_id AS qid, embedding AS q_embedding FROM embeddings WHERE vec_id % ${modSql(20)} = 0),
-           |qprobe AS (
-           |  SELECT qid, cell FROM (
-           |    SELECT qid, cell,
-           |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dqc ASC, cell ASC) AS rnp
-           |    FROM (SELECT q.qid, c.cell, $ivfDistQC AS dqc FROM qs q CROSS JOIN c2 c))
-           |  WHERE rnp <= 4),
-           |approx AS (
-           |  SELECT query_id, vec_id FROM (
-           |    SELECT query_id, vec_id,
-           |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dd ASC, vec_id ASC) AS rn
-           |    FROM (SELECT qp.qid AS query_id, a.vec_id, $pd AS dd
-           |          FROM qprobe qp JOIN qs q USING (qid) JOIN af f USING (cell)
-           |          JOIN embeddings a ON a.vec_id = f.vec_id))
-           |  WHERE rn <= $K),
-           |exact AS (
-           |  SELECT eq, ev FROM (
-           |    SELECT eq, ev,
-           |      ROW_NUMBER() OVER (PARTITION BY eq ORDER BY dd ASC, ev ASC) AS rn
-           |    FROM (SELECT q.qid AS eq, d.vec_id AS ev, $ed AS dd
-           |          FROM qs q CROSS JOIN embeddings d))
-           |  WHERE rn <= $K),
-           |hits AS (
-           |  SELECT query_id, COUNT(*) AS n_hits FROM approx
-           |  JOIN exact ON query_id = eq AND vec_id = ev GROUP BY query_id)
-           |SELECT q.qid AS query_id,
-           |  CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / CAST($K AS DOUBLE) AS recall_at_k
-           |FROM qs q LEFT JOIN hits h ON q.qid = h.query_id
-           |ORDER BY query_id""".stripMargin
-      },
-      "ann_ivf_filtered_recall" -> {
-        val pd = DuckSql.squaredL2Cols("q.q_embedding", "a.embedding", Dim)
-        val ed = DuckSql.squaredL2Cols("q.q_embedding", "d.embedding", Dim)
-        val bands = Seq(
-          ("p010_label_eq3", "label = 3"),
-          ("p030_label_lt3", "label < 3"),
-          ("p050_label_lt5", "label < 5"),
-          ("p100_all", "TRUE"))
-        def qual(t: String, pred: String) =
-          if (pred == "TRUE") "TRUE" else s"$t.$pred"
-        val bandCtes = bands.zipWithIndex.map { case ((_, pred), i) =>
-          s"""approx$i AS (
-             |  SELECT query_id, vec_id FROM (
-             |    SELECT query_id, vec_id,
-             |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dd ASC, vec_id ASC) AS rn
-             |    FROM (SELECT qp.qid AS query_id, a.vec_id, $pd AS dd
-             |          FROM qprobe qp JOIN qs q USING (qid) JOIN af f USING (cell)
-             |          JOIN embeddings a ON a.vec_id = f.vec_id WHERE ${qual("a", pred)}))
-             |  WHERE rn <= $K),
-             |exact$i AS (
-             |  SELECT eq, ev FROM (
-             |    SELECT eq, ev,
-             |      ROW_NUMBER() OVER (PARTITION BY eq ORDER BY dd ASC, ev ASC) AS rn
-             |    FROM (SELECT q.qid AS eq, d.vec_id AS ev, $ed AS dd
-             |          FROM qs q CROSS JOIN embeddings d WHERE ${qual("d", pred)}))
-             |  WHERE rn <= $K),
-             |hits$i AS (
-             |  SELECT COUNT(*) AS n_hits FROM approx$i
-             |  JOIN exact$i ON query_id = eq AND vec_id = ev)""".stripMargin
-        }.mkString(",\n")
-        val sel = bands.zipWithIndex.map { case ((name, _), i) =>
-          s"""SELECT '$name' AS band, (SELECT COUNT(*) FROM qs) AS n_queries,
-             |  CAST(n_hits AS BIGINT) AS n_hits,
-             |  CAST(n_hits AS DOUBLE) / CAST($K * (SELECT COUNT(*) FROM qs) AS DOUBLE) AS recall_at_k
-             |FROM hits$i""".stripMargin
-        }.mkString("\nUNION ALL\n")
-        s"""WITH ${ivfTrainedCtes(IvfSeeds, 2)},
-           |qs AS MATERIALIZED (SELECT vec_id AS qid, embedding AS q_embedding FROM embeddings WHERE vec_id % ${modSql(20)} = 0),
-           |qprobe AS MATERIALIZED (
-           |  SELECT qid, cell FROM (
-           |    SELECT qid, cell,
-           |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dqc ASC, cell ASC) AS rnp
-           |    FROM (SELECT q.qid, c.cell, $ivfDistQC AS dqc FROM qs q CROSS JOIN c2 c))
-           |  WHERE rnp <= 4),
-           |$bandCtes
-           |$sel
-           |ORDER BY band""".stripMargin
-      },
-      "ann_pq_topk" ->
-        pqTrainedSql(Fixtures.PqSeeds, iters = 2, Q64, k = K, refine = 100),
-      // --- graph ANN (r16): the oracle replays the exact |V|² build and
-      // every beam hop — see graphEdgesCte/graphBeamLitSql/graphBeamJoinCtes
-      "ann_graph_edges" ->
-        s"""WITH ${graphEdgesCte(GraphM)}
-           |SELECT src, dst, dist, CAST(rn AS INT) AS rn FROM edges
-           |ORDER BY src, rn""".stripMargin,
-      "ann_graph_edges_ivf" -> {
-        val pd = DuckSql.squaredL2Cols("q.q_embedding", "a.embedding", Dim)
-        s"""WITH ${ivfTrainedCtes(IvfSeeds, 2)},
-           |allq AS (SELECT vec_id AS qid, embedding AS q_embedding FROM embeddings),
-           |qprobe AS (
-           |  SELECT qid, cell FROM (
-           |    SELECT qid, cell,
-           |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dqc ASC, cell ASC) AS rnp
-           |    FROM (SELECT q.qid, c.cell, $ivfDistQC AS dqc FROM allq q CROSS JOIN c2 c))
-           |  WHERE rnp <= 3),
-           |cand AS (
-           |  SELECT qp.qid AS src, a.vec_id AS dst, MIN($pd) AS dist
-           |  FROM qprobe qp JOIN allq q ON q.qid = qp.qid
-           |  JOIN af f USING (cell) JOIN embeddings a ON a.vec_id = f.vec_id
-           |  WHERE a.vec_id <> qp.qid
-           |  GROUP BY qp.qid, a.vec_id)
-           |SELECT src, dst, dist, CAST(rn AS INT) AS rn FROM (
-           |  SELECT src, dst, dist,
-           |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY dist ASC, dst ASC) AS rn
-           |  FROM cand)
-           |WHERE rn <= $GraphM ORDER BY src, rn""".stripMargin
-      },
-      "ann_graph_topk" ->
-        graphBeamLitSql(Q64, k = K, beam = GraphBeam, hops = GraphHops,
-          nEntry = GraphEntries),
-      "ann_graph_recall" -> {
-        val ed = DuckSql.squaredL2Cols("q.q_embedding", "d.embedding", Dim)
-        s"""WITH ${graphEdgesCte(GraphM)},
-           |qs AS (SELECT vec_id AS qid, embedding AS q_embedding FROM embeddings WHERE vec_id % ${modSql(20)} = 0),
-           |${graphBeamJoinCtes(beam = GraphBeam, hops = GraphHops, nEntry = GraphEntries)},
-           |approx AS (
-           |  SELECT qid AS query_id, vec_id FROM (
-           |    SELECT qid, vec_id,
-           |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist ASC, vec_id ASC) AS rn
-           |    FROM beam$GraphHops)
-           |  WHERE rn <= $K),
-           |exact AS (
-           |  SELECT eq, ev FROM (
-           |    SELECT eq, ev,
-           |      ROW_NUMBER() OVER (PARTITION BY eq ORDER BY dd ASC, ev ASC) AS rn
-           |    FROM (SELECT q.qid AS eq, d.vec_id AS ev, $ed AS dd
-           |          FROM qs q CROSS JOIN embeddings d))
-           |  WHERE rn <= $K),
-           |hits AS (
-           |  SELECT query_id, COUNT(*) AS n_hits FROM approx
-           |  JOIN exact ON query_id = eq AND vec_id = ev GROUP BY query_id)
-           |SELECT q.qid AS query_id,
-           |  CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / CAST($K AS DOUBLE) AS recall_at_k
-           |FROM qs q LEFT JOIN hits h ON q.qid = h.query_id
-           |ORDER BY query_id""".stripMargin
-      },
-      "ann_ivf_recall_curve" -> {
-        val pd = DuckSql.squaredL2Cols("q.q_embedding", "a.embedding", Dim)
-        val ed = DuckSql.squaredL2Cols("q.q_embedding", "d.embedding", Dim)
-        // Fused form: ONE qprobe-af join builds all candidates once with
-        // the probe rank (rnp) of the cell each came from; the four former
-        // UNION-ALL arms are a 4-row nprobe dimension re-ranking the same
-        // slim (query, vec, dist, rnp) set — ~4x less peak work/memory.
-        s"""WITH ${ivfTrainedCtes(IvfSeeds, 2)},
-           |qs AS (SELECT vec_id AS qid, embedding AS q_embedding FROM embeddings WHERE vec_id % ${modSql(20)} = 0),
-           |qprobe AS (
-           |  SELECT qid, cell, rnp FROM (
-           |    SELECT qid, cell,
-           |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dqc ASC, cell ASC) AS rnp
-           |    FROM (SELECT q.qid, c.cell, $ivfDistQC AS dqc FROM qs q CROSS JOIN c2 c))
-           |  WHERE rnp <= 8),
-           |cand AS (
-           |  SELECT qp.qid AS query_id, a.vec_id, qp.rnp, $pd AS dist
-           |  FROM qprobe qp JOIN qs q USING (qid) JOIN af f USING (cell)
-           |  JOIN embeddings a ON a.vec_id = f.vec_id),
-           |exact AS (
-           |  SELECT eq, ev FROM (
-           |    SELECT eq, ev,
-           |      ROW_NUMBER() OVER (PARTITION BY eq ORDER BY dd ASC, ev ASC) AS rn
-           |    FROM (SELECT q.qid AS eq, d.vec_id AS ev, $ed AS dd
-           |          FROM qs q CROSS JOIN embeddings d))
-           |  WHERE rn <= $K),
-           |ranked AS (
-           |  SELECT np.nprobe, c.query_id, c.vec_id,
-           |    ROW_NUMBER() OVER (PARTITION BY np.nprobe, c.query_id
-           |      ORDER BY c.dist ASC, c.vec_id ASC) AS rn
-           |  FROM cand c JOIN (VALUES (1), (2), (4), (8)) np(nprobe)
-           |    ON c.rnp <= np.nprobe),
-           |curve AS (
-           |  SELECT np.nprobe, COALESCE(h.n_hits, 0) AS n_hits
-           |  FROM (VALUES (1), (2), (4), (8)) np(nprobe)
-           |  LEFT JOIN (
-           |    SELECT nprobe, COUNT(*) AS n_hits
-           |    FROM (SELECT nprobe, query_id, vec_id FROM ranked WHERE rn <= $K) ap
-           |    JOIN exact ON ap.query_id = exact.eq AND ap.vec_id = exact.ev
-           |    GROUP BY nprobe) h USING (nprobe)
-           |)
-           |SELECT nprobe, n_queries, CAST(n_hits AS BIGINT) AS n_hits,
-           |  CAST(n_hits AS DOUBLE) / CAST(n_queries * $K AS DOUBLE) AS recall_at_k
-           |FROM curve CROSS JOIN (SELECT COUNT(*) AS n_queries FROM qs)
-           |ORDER BY nprobe""".stripMargin
-      },
-      "dedup_prefix_filter_pairs" ->
-        """SELECT id_a, id_b, jac FROM (
-          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          |    CAST(len(list_intersect(a.wset, b.wset)) AS DOUBLE) / CAST(len(list_distinct(list_cat(a.wset, b.wset))) AS DOUBLE) AS jac
-          |  FROM (SELECT doc_id, list_distinct(string_split(text, ' ')) AS wset FROM documents WHERE doc_id % 20 = 0) a
-          |  JOIN (SELECT doc_id, list_distinct(string_split(text, ' ')) AS wset FROM documents WHERE doc_id % 20 = 0) b
-          |    ON a.doc_id < b.doc_id
-          |) WHERE jac >= 0.5 ORDER BY id_a, id_b""".stripMargin,
-      "ann_lsh_neardup" -> {
-        // Band sig = Σ 2^j over the band's planes with dot(v, plane_j) >= 0
-        // (j is the LOCAL bit index, matching Ann.lshSignature on the plane
-        // slice); disjoint bits, so the sum equals Spark's bitwiseOR fold.
-        def bandSigSql(c: String, b: Int) =
-          Planes16.slice(b * 4, b * 4 + 4).zipWithIndex.map { case (p, j) =>
-            s"(CASE WHEN ${DuckSql.dotLit(c, p)} >= ${DuckSql.fmt(0.0)} THEN CAST(${1L << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-          }.mkString("(", " + ", ")")
-        val bandSelects = (0 until 4).map { b =>
-          s"SELECT vec_id, $b AS band, ${bandSigSql("embedding", b)} AS sig FROM embeddings WHERE vec_id % 5 = 0"
-        }.mkString("\n  UNION ALL ")
-        val cs = DuckSql.cosineSimCols("ea.embedding", "eb.embedding", Dim)
-        // hot-bucket cap mirror (Ann.lshBandedNearDupPairs maxBucket)
-        s"""WITH buckets AS (
-           |  SELECT vec_id, band, sig FROM (
-           |    SELECT vec_id, band, sig,
-           |      COUNT(*) OVER (PARTITION BY band, sig) AS __bsz
-           |    FROM ($bandSelects)
-           |  ) WHERE __bsz <= ${Dedup.LshMaxBucket}
-           |), cand AS (
-           |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
-           |)
-           |SELECT id_a, id_b, cos_sim FROM (
-           |  SELECT id_a, id_b, $cs AS cos_sim
-           |  FROM cand
-           |  JOIN embeddings ea ON ea.vec_id = cand.id_a
-           |  JOIN embeddings eb ON eb.vec_id = cand.id_b
-           |) WHERE cos_sim >= ${DuckSql.fmt(0.35)} ORDER BY id_a, id_b""".stripMargin
-      },
-      "stream_window_agg" ->
-        s"""SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start, event_type,
-           |  COUNT(*) AS n, ${dsumSql("value", 3)} AS v_sum
-           |FROM events GROUP BY window_start, event_type ORDER BY window_start, event_type""".stripMargin,
-      "stream_sliding_agg" ->
-        s"""WITH ev AS (SELECT event_type, value, (epoch_ns(ts) // 1000000000) AS tse FROM events),
-           |w AS (
-           |  SELECT ((tse // 3600) * 3600) AS window_start, event_type, value FROM ev
-           |  UNION ALL
-           |  SELECT ((tse // 3600) * 3600) - 3600 AS window_start, event_type, value FROM ev
-           |)
-           |SELECT window_start, event_type, COUNT(*) AS n, ${dsumSql("value", 3)} AS v_sum
-           |FROM w GROUP BY window_start, event_type ORDER BY window_start, event_type""".stripMargin,
-      "sessionize_native" ->
-        s"""SELECT user_id, MIN(tus) AS session_start_us, MAX(tus) AS session_last_us,
-           |  COUNT(*) AS n_events, ${dsumSql("value", 3)} AS v_sum
-           |FROM (
-           |  SELECT user_id, value, tus,
-           |    SUM(CASE WHEN prev IS NOT NULL AND tus - prev >= 1800000000 THEN 1 ELSE 0 END)
-           |      OVER (PARTITION BY user_id ORDER BY tus ASC, event_id ASC
-           |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-           |  FROM (
-           |    SELECT user_id, event_id, value, (epoch_ns(ts) // 1000) AS tus,
-           |      LAG((epoch_ns(ts) // 1000)) OVER (PARTITION BY user_id
-           |        ORDER BY (epoch_ns(ts) // 1000) ASC, event_id ASC) AS prev
-           |    FROM events
-           |  )
-           |) GROUP BY user_id, session_idx ORDER BY user_id, session_start_us""".stripMargin,
-      "sessionize_events" ->
-        s"""SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-           |  MIN(tse) AS session_start, MAX(tse) AS session_end,
-           |  COUNT(*) AS n_events, ${dsumSql("value", 3)} AS v_sum
-           |FROM (
-           |  SELECT user_id, value, tse,
-           |    SUM(CASE WHEN prev IS NOT NULL AND tse - prev > 1800 THEN 1 ELSE 0 END)
-           |      OVER (PARTITION BY user_id ORDER BY tse ASC, event_id ASC
-           |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-           |  FROM (
-           |    SELECT user_id, event_id, value, (epoch_ns(ts) // 1000000000) AS tse,
-           |      LAG((epoch_ns(ts) // 1000000000)) OVER (PARTITION BY user_id
-           |        ORDER BY (epoch_ns(ts) // 1000000000) ASC, event_id ASC) AS prev
-           |    FROM events
-           |  )
-           |) GROUP BY user_id, session_idx ORDER BY user_id, session_idx""".stripMargin,
-      "index_tree_depth" ->
-        """SELECT CAST(n AS BIGINT) AS n,
-          |  CAST(LEAST(GREATEST(CEIL(ln(GREATEST(FLOOR(n / 50.0), 1.0)) / ln(4.0)), 1.0), 64.0) AS INT) AS depth
-          |FROM (SELECT COUNT(*) AS n FROM embeddings)""".stripMargin,
-      "dedup_cosine_pairs" -> {
-        val cs = DuckSql.cosineSimCols("a_embedding", "b_embedding", Dim)
-        s"""SELECT id_a, id_b, cos_sim FROM (
-           |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, $cs AS cos_sim
-           |  FROM (SELECT vec_id, embedding AS a_embedding FROM embeddings WHERE vec_id % ${modSql(250)} = 0) a
-           |  JOIN (SELECT vec_id, embedding AS b_embedding FROM embeddings WHERE vec_id % ${modSql(250)} = 0) b
-           |    ON a.vec_id < b.vec_id
-           |) WHERE cos_sim >= ${DuckSql.fmt(0.25)} ORDER BY id_a, id_b""".stripMargin
-      },
-      "join_q3_shipping" ->
-        s"""SELECT l_orderkey, CAST(o_orderdate AS DATE) AS orderdate, $revenue AS revenue
-           |FROM lineitem
-           |JOIN orders ON l_orderkey = o_orderkey
-           |JOIN customer ON o_custkey = c_custkey
-           |WHERE l_shipdate > TIMESTAMP '1998-01-01'
-           |  AND o_orderdate < TIMESTAMP '1998-01-01'
-           |  AND c_mktsegment = 'BUILDING'
-           |GROUP BY l_orderkey, orderdate
-           |ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""".stripMargin,
-      "join_parts_by_brand" ->
-        s"""SELECT p_brand, $revenue AS revenue, COUNT(*) AS n,
-           |  COUNT(DISTINCT s_nationkey) AS n_supp_nations
-           |FROM lineitem
-           |JOIN part ON l_partkey = p_partkey
-           |JOIN supplier ON l_suppkey = s_suppkey
-           |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-      "join_salted_events_customers" ->
-        s"""SELECT c_mktsegment, COUNT(*) AS n, ${dsumSql("value", 3)} AS v_sum
-           |FROM events JOIN customer ON user_id = c_custkey
-           |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-      "agg_grouping_sets" ->
-        s"""SELECT COALESCE(l_returnflag, '(all)') AS rf, COALESCE(l_linestatus, '(all)') AS ls,
-           |  ${dsumSql("l_quantity")} AS sum_qty, COUNT(*) AS n
-           |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-           |ORDER BY rf, ls""".stripMargin,
-      "agg_exact_median_bisect" ->
-        """WITH o AS (
-          |  SELECT l_extendedprice AS v,
-          |    ROW_NUMBER() OVER (ORDER BY l_extendedprice ASC) AS rn
-          |  FROM lineitem)
-          |SELECT CAST(n AS BIGINT) AS n_rows,
-          |  MAX(CASE WHEN rn = (n + 1) // 2 THEN v END) AS median,
-          |  MAX(CASE WHEN rn = (99 * n + 99) // 100 THEN v END) AS p99
-          |FROM o, (SELECT COUNT(*) AS n FROM lineitem) GROUP BY n""".stripMargin,
-      "agg_weighted_median_price" ->
-        """WITH w AS (
-          |  SELECT l_extendedprice AS v, CAST(FLOOR(l_quantity) AS BIGINT) AS wt
-          |  FROM lineitem WHERE l_quantity > 0),
-          |cum AS (
-          |  SELECT v, SUM(wt) OVER (ORDER BY v ASC) AS cw FROM w)
-          |SELECT CAST(tw AS BIGINT) AS w_total,
-          |  MIN(CASE WHEN cw >= (tw + 1) // 2 THEN v END) AS wmedian
-          |FROM cum, (SELECT SUM(wt) AS tw FROM w) GROUP BY tw""".stripMargin,
-      "agg_percentiles" ->
-        s"""SELECT l_returnflag,
-           |  quantile_cont(l_quantity, ${DuckSql.fmt(0.5)}) AS p50_qty,
-           |  quantile_cont(l_quantity, ${DuckSql.fmt(0.9)}) AS p90_qty,
-           |  COUNT(*) AS n
-           |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-      "agg_histogram_prices" ->
-        s"""SELECT CAST(LEAST(9, FLOOR(o_totalprice / ${DuckSql.fmt(50000.0)})) AS INT) AS bucket,
-           |  COUNT(*) AS n, ${dsumSql("o_totalprice")} AS sum_price
-           |FROM orders GROUP BY bucket ORDER BY bucket""".stripMargin,
-      "window_rolling_revenue" ->
-        """SELECT o_custkey, o_orderkey,
-          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-          |    PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
-          |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE) AS roll_sum3
-          |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-      "window_ntile_price_quartiles" ->
-        s"""SELECT month, quartile, COUNT(*) AS n, ${dsumSql("o_totalprice")} AS sum_price
-           |FROM (
-           |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month, o_totalprice,
-           |    CAST(NTILE(4) OVER (PARTITION BY date_trunc('month', o_orderdate)
-           |      ORDER BY o_totalprice ASC, o_orderkey ASC) AS INT) AS quartile
-           |  FROM orders
-           |) GROUP BY month, quartile ORDER BY month, quartile""".stripMargin,
-      "sample_stratified_events" ->
-        s"""SELECT event_type, CAST(rk AS INT) AS rk, event_id FROM (
-           |  SELECT event_type, event_id,
-           |    ROW_NUMBER() OVER (PARTITION BY event_type
-           |      ORDER BY ${Dedup.md5Int32Sql("CAST(event_id AS VARCHAR)")} ASC, event_id ASC) AS rk
-           |  FROM events
-           |) WHERE rk <= 20 ORDER BY event_type, rk""".stripMargin,
-      "text_top_terms" -> {
-        s"""SELECT term, COUNT(*) AS df FROM (
-           |  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS term FROM documents
-           |) WHERE term <> '' AND term NOT IN $stopListSql
-           |GROUP BY term ORDER BY df DESC, term ASC LIMIT 20""".stripMargin
-      },
-      "text_countmin_counts" ->
-        """WITH toks AS (
-          |  SELECT term FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
-          |  WHERE term <> ''
-          |), cells AS MATERIALIZED (
-          |  SELECT i,
-          |    CAST(('0x' || substr(md5('cm' || CAST(i AS VARCHAR) || '|' || term), 1, 8)) AS BIGINT) % 512 AS cell,
-          |    COUNT(*) AS n
-          |  FROM toks CROSS JOIN (SELECT unnest(range(0, 4)) AS i)
-          |  GROUP BY 1, 2
-          |), probes AS (
-          |  SELECT term, COUNT(*) AS exact_n FROM toks GROUP BY term
-          |  ORDER BY exact_n DESC, term ASC LIMIT 10
-          |)
-          |SELECT p.term, p.exact_n, MIN(c.n) AS cm_est
-          |FROM probes p JOIN cells c
-          |  ON c.cell = CAST(('0x' || substr(md5('cm' || CAST(c.i AS VARCHAR) || '|' || p.term), 1, 8)) AS BIGINT) % 512
-          |GROUP BY p.term, p.exact_n
-          |ORDER BY p.term""".stripMargin,
-      "text_chunks" ->
-        """SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-          |  md5(array_to_string(w[i*25+1 : i*25+50], ' ')) AS chunk_md5
-          |FROM (
-          |  SELECT doc_id, w,
-          |    unnest(range(0, CAST(GREATEST(CEIL((len(w) - 50) / 25.0), 0) AS BIGINT) + 1)) AS i
-          |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents WHERE doc_id % 20 = 0)
-          |)
-          |ORDER BY doc_id, chunk_idx""".stripMargin,
-      "text_chunk_bm25_doc" -> {
-        val terms = Seq("spark", "table", "query")
-        val k1 = 1.2; val b = 0.75
-        def tf(t: String) =
-          s"CAST(len(list_filter(string_split(text, ' '), w -> w = '$t')) AS DOUBLE)"
-        val termExprs = terms.zipWithIndex.map { case (t, i) =>
-          s"""LN((n_docs - df_$i + 0.5) / (df_$i + 0.5) + 1.0)
-             | * (${tf(t)} * ${DuckSql.fmt(k1 + 1.0)})
-             | / (${tf(t)} + ${DuckSql.fmt(k1)} * (${DuckSql.fmt(1.0 - b)} + ${DuckSql.fmt(b)} * dl / avgdl))"""
-            .stripMargin.replace("\n", "")
-        }
-        val dfSelects = terms.zipWithIndex.map { case (t, i) =>
-          s"SUM(CASE WHEN list_contains(string_split(text, ' '), '$t') THEN 1 ELSE 0 END) AS df_$i"
-        }.mkString(", ")
-        s"""WITH ch AS (
-           |  SELECT doc_id * 1000 + i AS chunk_id,
-           |    array_to_string(w[i*25+1 : i*25+50], ' ') AS text
-           |  FROM (
-           |    SELECT doc_id, w,
-           |      unnest(range(0, CAST(GREATEST(CEIL((len(w) - 50) / 25.0), 0) AS BIGINT) + 1)) AS i
-           |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))),
-           |stats AS (
-           |  SELECT COUNT(*) AS n_docs,
-           |    CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS DOUBLE) / COUNT(*) AS avgdl
-           |  FROM ch),
-           |dfs AS (SELECT $dfSelects FROM ch),
-           |scored AS (
-           |  SELECT chunk_id, ROUND(${termExprs.mkString(" + ")}, 6) AS bm25
-           |  FROM (SELECT chunk_id, text, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-           |        FROM ch) d
-           |  CROSS JOIN stats CROSS JOIN dfs
-           |  ORDER BY bm25 DESC, chunk_id ASC LIMIT 50)
-           |SELECT CAST(FLOOR(chunk_id / 1000) AS BIGINT) AS doc_id,
-           |  MAX(bm25) AS doc_bm25, COUNT(*) AS n_chunks_hit
-           |FROM scored GROUP BY 1
-           |ORDER BY doc_bm25 DESC, doc_id ASC LIMIT $K""".stripMargin
-      },
-      "text_redact_digits" ->
-        "SELECT doc_id, md5(regexp_replace(text, '[0-9]+', '#', 'g')) AS redacted_md5 FROM documents ORDER BY doc_id",
-      "text_heavy_terms" ->
-        """WITH terms AS (
-          |  SELECT unnest(string_split(text, ' ')) AS term FROM documents
-          |), nonempty AS (
-          |  SELECT term FROM terms WHERE term <> ''
-          |)
-          |SELECT term, COUNT(*) AS n FROM nonempty
-          |GROUP BY term
-          |HAVING COUNT(*) >= CEIL(CAST('0.005' AS DOUBLE) * (SELECT COUNT(*) FROM nonempty))
-          |ORDER BY term""".stripMargin,
-      "text_tfidf_top_term" ->
-        """WITH terms AS (
-          |  SELECT doc_id, unnest(string_split(text, ' ')) AS term
-          |  FROM documents WHERE doc_id % 20 = 0
-          |), tf AS (
-          |  SELECT doc_id, term, COUNT(*) AS tf FROM terms WHERE term <> '' GROUP BY doc_id, term
-          |), df AS (
-          |  SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-          |)
-          |SELECT doc_id, term, tf, df FROM (
-          |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-          |    ROW_NUMBER() OVER (PARTITION BY tf.doc_id
-          |      ORDER BY (CAST(tf.tf AS DOUBLE) / df.df) DESC, tf.term ASC) AS rk
-          |  FROM tf JOIN df ON tf.term = df.term
-          |) WHERE rk = 1 ORDER BY doc_id""".stripMargin,
-      "join_left_outer_customer_orders" ->
-        s"""SELECT c_custkey, c_mktsegment, COUNT(o_orderkey) AS n_orders,
-           |  COALESCE(${dsumSql("o_totalprice")}, ${DuckSql.fmt(0.0)}) AS sum_price
-           |FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
-           |GROUP BY c_custkey, c_mktsegment ORDER BY c_custkey""".stripMargin,
-      "join_full_outer_daily_types" ->
-        s"""SELECT COALESCE(day_c, day_p) AS day_epoch,
-           |  COALESCE(n_clicks, 0) AS n_clicks,
-           |  COALESCE(n_purchases, 0) AS n_purchases
-           |FROM (SELECT CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_c, COUNT(*) AS n_clicks
-           |      FROM events WHERE event_type = 'click' GROUP BY day_c) c
-           |FULL OUTER JOIN (SELECT CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_p, COUNT(*) AS n_purchases
-           |      FROM events WHERE event_type = 'purchase' AND value > ${DuckSql.fmt(50.0)} GROUP BY day_p) p
-           |  ON day_c = day_p
-           |ORDER BY day_epoch""".stripMargin,
-      "interval_join_click_purchase" ->
-        """SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id AS user_id,
-          |  (tp - tc) AS gap_s
-          |FROM (SELECT event_id, user_id, (epoch_ns(ts) // 1000000000) AS tc FROM events WHERE event_type = 'click') c
-          |JOIN (SELECT event_id, user_id, (epoch_ns(ts) // 1000000000) AS tp FROM events WHERE event_type = 'purchase') p
-          |  ON c.user_id = p.user_id AND tp >= tc AND tp <= tc + 1800
-          |ORDER BY click_id, purchase_id""".stripMargin,
-      "crud_merge" -> labelSummarySql(
-        """SELECT vec_id, label FROM embeddings WHERE NOT (vec_id % 15 = 0 OR vec_id % 15 = 5)
-          |UNION ALL SELECT vec_id, 777 AS label FROM embeddings WHERE vec_id % 15 = 5
-          |UNION ALL SELECT vec_id + 3000000 AS vec_id, label FROM embeddings WHERE vec_id % 15 = 10""".stripMargin),
-      "store_time_travel" ->
-        """WITH base AS (SELECT vec_id, label FROM embeddings WHERE vec_id < 300),
-          |b1 AS (
-          |  SELECT vec_id,
-          |    CASE WHEN vec_id % 11 = 0 THEN label ELSE label + 100 END AS label,
-          |    (vec_id % 11 = 0) AS is_delete
-          |  FROM base WHERE vec_id % 11 = 0 OR vec_id % 7 = 0),
-          |s1 AS (
-          |  SELECT b.vec_id, b.label FROM base b
-          |  WHERE NOT EXISTS (SELECT 1 FROM b1 WHERE b1.vec_id = b.vec_id)
-          |  UNION ALL SELECT vec_id, label FROM b1 WHERE NOT is_delete),
-          |b2 AS (
-          |  SELECT vec_id, label + 200 AS label FROM base WHERE vec_id % 13 = 0
-          |  UNION ALL SELECT vec_id + 10000 AS vec_id, 99 AS label FROM base WHERE vec_id < 5),
-          |s3 AS (
-          |  SELECT s.vec_id, s.label FROM s1 s
-          |  WHERE NOT EXISTS (SELECT 1 FROM b2 WHERE b2.vec_id = s.vec_id)
-          |  UNION ALL SELECT vec_id, label FROM b2)
-          |SELECT vec_id, label, 1 AS asof_v FROM s1
-          |UNION ALL SELECT vec_id, label, 3 AS asof_v FROM s3
-          |ORDER BY asof_v, vec_id""".stripMargin,
-      "agg_promo_revenue_share" -> {
-        val revDec = "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST('1.00' AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(18,2)))"
-        s"""SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
-           |  CAST(SUM(CASE WHEN p_type = 'PROMO' THEN $revDec ELSE CAST('0' AS DECIMAL(18,4)) END) AS DOUBLE)
-           |    / CAST(SUM($revDec) AS DOUBLE) * ${DuckSql.fmt(100.0)} AS promo_share,
-           |  COUNT(*) AS n
-           |FROM lineitem JOIN part ON l_partkey = p_partkey
-           |GROUP BY month ORDER BY month""".stripMargin
-      },
-      "agg_corr_stats" ->
-        """SELECT l_returnflag, n,
-          |  round(sqrt(CAST(n * syy - sy * sy AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE)), 6) AS stddev_price,
-          |  round(CAST(n * sxy - sx * sy AS DOUBLE) /
-          |    sqrt(CAST(n * sxx - sx * sx AS DOUBLE) * CAST(n * syy - sy * sy AS DOUBLE)), 6) AS corr_qty_price
-          |FROM (
-          |  SELECT l_returnflag, COUNT(*) AS n,
-          |    SUM(x) AS sx, SUM(y) AS sy,
-          |    SUM(x * x) AS sxx, SUM(y * y) AS syy, SUM(x * y) AS sxy
-          |  FROM (SELECT l_returnflag,
-          |          CAST(l_quantity AS DECIMAL(18,2)) AS x,
-          |          CAST(l_extendedprice AS DECIMAL(18,2)) AS y
-          |        FROM lineitem)
-          |  GROUP BY l_returnflag
-          |) ORDER BY l_returnflag""".stripMargin,
-      "subquery_above_avg_orders" ->
-        s"""SELECT o_orderpriority, COUNT(*) AS n_above, ${dsumSql("o_totalprice")} AS sum_price
-           |FROM orders,
-           |  (SELECT SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS tot_sum, COUNT(*) AS tot_n FROM orders) t
-           |WHERE CAST(o_totalprice AS DECIMAL(12,2)) * tot_n > tot_sum
-           |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-      "subquery_max_order_per_customer" ->
-        """SELECT o_custkey, o_orderkey, o_totalprice FROM orders o1
-          |WHERE o_totalprice = (SELECT MAX(o_totalprice) FROM orders o2 WHERE o2.o_custkey = o1.o_custkey)
-          |ORDER BY o_custkey, o_orderkey""".stripMargin,
-      "subquery_exists_big_order" ->
-        s"""SELECT c_custkey, c_name FROM customer
-           |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > ${DuckSql.fmt(300000.0)})
-           |ORDER BY c_custkey""".stripMargin,
-      "text_repetition" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           |base AS (SELECT doc_id, len(w) AS nw, len(list_distinct(w)) AS ndw FROM w),
-           |grams AS (
-           |  SELECT doc_id, unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS g
-           |  FROM w WHERE len(w) >= 2
-           |), gmax AS (
-           |  SELECT doc_id, MAX(c) AS max2
-           |  FROM (SELECT doc_id, g, COUNT(*) AS c FROM grams GROUP BY doc_id, g)
-           |  GROUP BY doc_id
-           |)
-           |SELECT b.doc_id AS doc_id, CAST(nw AS INT) AS n_words,
-           |  CAST(nw - ndw AS DOUBLE) / CAST(nw AS DOUBLE) AS dup_word_frac,
-           |  COALESCE(CAST(max2 AS DOUBLE) / CAST(nw - 1 AS DOUBLE), ${DuckSql.fmt(0.0)}) AS top_bigram_frac
-           |FROM base b LEFT OUTER JOIN gmax g ON b.doc_id = g.doc_id
-           |ORDER BY doc_id""".stripMargin,
-      "text_lang_confusion" -> {
-        val nw = nWordsSql("text"); val ns = nStopSql("text")
-        s"""SELECT lang,
-           |  CASE WHEN (CAST(ns AS DOUBLE) / CAST(nw AS DOUBLE)) >= 0.05 THEN 'en' ELSE 'other' END AS lang_pred,
-           |  COUNT(*) AS n
-           |FROM (SELECT lang, $nw AS nw, $ns AS ns FROM documents)
-           |GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin
-      },
-      "text_nb_confusion" ->
-        """WITH train AS (SELECT doc_id, lang, text FROM documents WHERE doc_id % 2 = 0),
-          |test AS (SELECT doc_id, lang, text FROM documents WHERE doc_id % 2 = 1),
-          |nt AS (
-          |  SELECT lang AS cls, w FROM (
-          |    SELECT lang, unnest(string_split(text, ' ')) AS w FROM train)
-          |  WHERE w <> ''),
-          |cw AS (SELECT cls, w, COUNT(*) AS cw FROM nt GROUP BY 1, 2),
-          |classes AS (SELECT lang AS cls, COUNT(*) AS nd FROM train GROUP BY 1),
-          |cc AS (
-          |  SELECT c.cls, COALESCE(x.cc0, 0) AS cc FROM classes c
-          |  LEFT JOIN (SELECT cls, COUNT(*) AS cc0 FROM nt GROUP BY 1) x ON x.cls = c.cls),
-          |vv AS (SELECT COUNT(DISTINCT w) AS v FROM nt),
-          |ndoc AS (SELECT COUNT(*) AS nd FROM train),
-          |priors AS (
-          |  SELECT cls,
-          |    CAST(ROUND(LN(CAST(nd AS DOUBLE) / CAST((SELECT nd FROM ndoc) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS prior_lp
-          |  FROM classes),
-          |unseen AS (
-          |  SELECT cls,
-          |    CAST(ROUND(LN(CAST(1 AS DOUBLE) / CAST(cc + (SELECT v FROM vv) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS unseen_lp
-          |  FROM cc),
-          |lik AS (
-          |  SELECT cw.cls, cw.w,
-          |    CAST(ROUND(LN(CAST(cw.cw + 1 AS DOUBLE) / CAST(cc.cc + (SELECT v FROM vv) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS lp
-          |  FROM cw JOIN cc ON cw.cls = cc.cls),
-          |tt AS (
-          |  SELECT doc_id, w FROM (
-          |    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM test)
-          |  WHERE w <> ''),
-          |ll AS (
-          |  SELECT t.doc_id, u.cls, SUM(COALESCE(l.lp, u.unseen_lp)) AS ll
-          |  FROM tt t
-          |  CROSS JOIN unseen u
-          |  LEFT JOIN lik l ON l.cls = u.cls AND l.w = t.w
-          |  GROUP BY t.doc_id, u.cls),
-          |scores AS (
-          |  SELECT d.doc_id, d.lang AS label_true, c.cls,
-          |    p.prior_lp + COALESCE(ll.ll, CAST(0 AS DECIMAL(28,9))) AS score
-          |  FROM test d
-          |  CROSS JOIN (SELECT cls FROM classes) c
-          |  LEFT JOIN ll ON ll.doc_id = d.doc_id AND ll.cls = c.cls
-          |  JOIN priors p ON p.cls = c.cls),
-          |pred AS (
-          |  SELECT doc_id, label_true, cls AS predicted,
-          |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, cls ASC) AS rn
-          |  FROM scores)
-          |SELECT label_true, predicted, COUNT(*) AS n
-          |FROM pred WHERE rn = 1
-          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-      "window_locf_last_purchase" ->
-        """SELECT event_id, user_id, event_type, last_purchase_value FROM (
-          |  SELECT event_id, user_id, event_type,
-          |    last_value(CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
-          |      OVER (PARTITION BY user_id ORDER BY tse ASC, event_id ASC
-          |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_purchase_value
-          |  FROM (SELECT event_id, user_id, event_type, value, (epoch_ns(ts) // 1000000000) AS tse FROM events)
-          |) ORDER BY event_id""".stripMargin,
-      "window_percent_rank_orders" ->
-        """SELECT month, o_orderkey,
-          |  percent_rank() OVER w AS pct_rank,
-          |  cume_dist() OVER w AS cume
-          |FROM (SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month, o_orderkey, o_totalprice FROM orders)
-          |WINDOW w AS (PARTITION BY month ORDER BY o_totalprice ASC, o_orderkey ASC)
-          |ORDER BY month, o_orderkey""".stripMargin,
-      "window_lag_gap" ->
-        """SELECT event_id, user_id, gap_s FROM (
-          |  SELECT event_id, user_id,
-          |    tse - LAG(tse) OVER (PARTITION BY user_id ORDER BY tse ASC, event_id ASC) AS gap_s
-          |  FROM (SELECT event_id, user_id, (epoch_ns(ts) // 1000000000) AS tse FROM events)
-          |) ORDER BY event_id""".stripMargin,
-      "events_funnel" ->
-        """WITH ev AS (SELECT user_id, event_type, (epoch_ns(ts) // 1000000000) AS tse FROM events),
-          |tv AS (SELECT user_id, MIN(tse) AS tv FROM ev WHERE event_type = 'view' GROUP BY user_id),
-          |tc AS (SELECT ev.user_id, MIN(tse) AS tc FROM ev JOIN tv ON ev.user_id = tv.user_id
-          |       WHERE event_type = 'click' AND tse > tv GROUP BY ev.user_id),
-          |tp AS (SELECT ev.user_id, MIN(tse) AS tp FROM ev JOIN tc ON ev.user_id = tc.user_id
-          |       WHERE event_type = 'purchase' AND tse > tc GROUP BY ev.user_id)
-          |SELECT (SELECT COUNT(*) FROM tv) AS n_view,
-          |       (SELECT COUNT(*) FROM tc) AS n_click_after_view,
-          |       (SELECT COUNT(*) FROM tp) AS n_purchase_after_click""".stripMargin,
-      "profile_skew_keys" ->
-        s"""WITH freq AS (
-           |  SELECT l_orderkey, COUNT(*) AS f FROM lineitem GROUP BY l_orderkey)
-           |SELECT COUNT(*) AS n_keys,
-           |  CAST(SUM(f) AS BIGINT) AS n_rows,
-           |  MAX(f) AS max_f,
-           |  ROUND(CAST(MAX(f) AS DOUBLE) / CAST(SUM(f) AS DOUBLE), 9) AS top1_share,
-           |  quantile_cont(f, ${DuckSql.fmt(0.5)}) AS p50_f,
-           |  quantile_cont(f, ${DuckSql.fmt(0.99)}) AS p99_f,
-           |  ROUND(quantile_cont(f, ${DuckSql.fmt(0.99)}) / quantile_cont(f, ${DuckSql.fmt(0.5)}), 6) AS p99_over_p50
-           |FROM freq""".stripMargin,
-      "vec_pairwise_sim_estimate" -> {
-        val h = s"(${Dedup.md5Int32Sql("CAST(vec_id AS VARCHAR)")} % (SELECT GREATEST(2, (COUNT(*) + 24) // 25) FROM embeddings))"
-        val cs = DuckSql.cosineSimCols("a.va", "b.vb", Dim)
-        s"""WITH a AS (SELECT vec_id AS id_a, embedding AS va FROM embeddings WHERE $h = 0),
-           |b AS (SELECT vec_id AS id_b, embedding AS vb FROM embeddings WHERE $h = 1),
-           |g AS (
-           |  SELECT COUNT(*) AS n_pairs,
-           |    SUM(c) AS sc, SUM(c * c) AS scc
-           |  FROM (SELECT CAST(ROUND($cs, 9) AS DECIMAL(18,9)) AS c
-           |        FROM a CROSS JOIN b)),
-           |m AS (
-           |  SELECT n_pairs,
-           |    CAST(sc AS DOUBLE) / CAST(n_pairs AS DOUBLE) AS mean,
-           |    (CAST(n_pairs AS DOUBLE) * CAST(scc AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE))
-           |      / (CAST(n_pairs AS DOUBLE) * (CAST(n_pairs AS DOUBLE) - 1.0)) AS var_s
-           |  FROM g)
-           |SELECT CAST(n_pairs AS BIGINT) AS n_pairs,
-           |  ROUND(mean, 6) AS mean_cos,
-           |  ROUND(SQRT(var_s), 6) AS std_cos,
-           |  ROUND(mean - ${DuckSql.fmt(1.96)} * SQRT(var_s / CAST(n_pairs AS DOUBLE)), 6) AS ci_low,
-           |  ROUND(mean + ${DuckSql.fmt(1.96)} * SQRT(var_s / CAST(n_pairs AS DOUBLE)), 6) AS ci_high
-           |FROM m""".stripMargin
-      },
-      "events_rolling_active_users" ->
-        """WITH pairs AS (
-          |  SELECT DISTINCT
-          |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS eday,
-          |    user_id
-          |  FROM events),
-          |bounds AS (SELECT MAX(eday) AS max_day FROM pairs),
-          |contrib AS (
-          |  SELECT eday + off AS target_day, user_id
-          |  FROM pairs CROSS JOIN (SELECT unnest(range(0, 7)) AS off))
-          |SELECT target_day,
-          |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS active_7d,
-          |  DATE '1970-01-01' + CAST(target_day AS INT) AS day
-          |FROM contrib CROSS JOIN bounds
-          |WHERE target_day <= max_day
-          |GROUP BY target_day ORDER BY target_day""".stripMargin,
-      "agg_sample_estimate_revenue" ->
-        s"""WITH g AS (
-           |  SELECT COUNT(*) AS n,
-           |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS true_dec,
-           |    CAST(SUM(CASE WHEN (${Dedup.md5Int32Sql("CAST(o_orderkey AS VARCHAR)")} % 10) = 0 THEN 1 END) AS BIGINT) AS n_s,
-           |    SUM(CASE WHEN (${Dedup.md5Int32Sql("CAST(o_orderkey AS VARCHAR)")} % 10) = 0 THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS s_dec,
-           |    SUM(CASE WHEN (${Dedup.md5Int32Sql("CAST(o_orderkey AS VARCHAR)")} % 10) = 0 THEN CAST(o_totalprice AS DECIMAL(18,2)) * CAST(o_totalprice AS DECIMAL(18,2)) END) AS ss_dec
-           |  FROM orders),
-           |m AS (
-           |  SELECT n, n_s, true_dec,
-           |    (CAST(s_dec AS DOUBLE) / CAST(n_s AS DOUBLE)) * CAST(n AS DOUBLE) AS est,
-           |    (CAST(n_s AS DOUBLE) * CAST(ss_dec AS DOUBLE) - CAST(s_dec AS DOUBLE) * CAST(s_dec AS DOUBLE))
-           |      / (CAST(n_s AS DOUBLE) * (CAST(n_s AS DOUBLE) - 1.0)) AS var_s
-           |  FROM g),
-           |se AS (
-           |  SELECT n, n_s, true_dec, est,
-           |    SQRT(var_s / CAST(n_s AS DOUBLE)) * CAST(n AS DOUBLE) AS se
-           |  FROM m)
-           |SELECT n, n_s, CAST(true_dec AS DOUBLE) AS true_revenue,
-           |  ROUND(est, 2) AS est_revenue,
-           |  ROUND((est - CAST(true_dec AS DOUBLE)) / CAST(true_dec AS DOUBLE) * ${DuckSql.fmt(100.0)}, 4) AS rel_err_pct,
-           |  ROUND(est - ${DuckSql.fmt(1.96)} * se, 2) AS ci_low,
-           |  ROUND(est + ${DuckSql.fmt(1.96)} * se, 2) AS ci_high
-           |FROM se""".stripMargin,
-      "text_quality_qnorm" ->
-        s"""WITH scored AS (
-           |  SELECT doc_id, source,
-           |    CAST(round(${qualitySql("text")}, 4) AS DECIMAL(9,4)) AS score_q
-           |  FROM documents),
-           |hist AS (SELECT source, score_q, COUNT(*) AS c FROM scored GROUP BY source, score_q),
-           |pr AS (
-           |  SELECT source, score_q,
-           |    CASE WHEN SUM(c) OVER (PARTITION BY source) > 1
-           |      THEN round(CAST(COALESCE(SUM(c) OVER (PARTITION BY source ORDER BY score_q ASC
-           |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS DOUBLE)
-           |        / CAST(SUM(c) OVER (PARTITION BY source) - 1 AS DOUBLE), 9)
-           |      ELSE 0.0 END AS pctl
-           |  FROM hist),
-           |ranked AS (
-           |  SELECT s.doc_id, s.source, s.score_q, p.pctl
-           |  FROM scored s JOIN pr p ON s.source = p.source AND s.score_q = p.score_q),
-           |pooled AS (SELECT score_q, COUNT(*) AS c FROM ranked GROUP BY score_q),
-           |ph AS (
-           |  SELECT score_q, cum_start, cum_start + c AS cum_end FROM (
-           |    SELECT score_q, c,
-           |      COALESCE(SUM(c) OVER (ORDER BY score_q ASC
-           |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_start
-           |    FROM pooled)),
-           |nt AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total FROM pooled),
-           |wi AS (
-           |  SELECT r.doc_id, r.source, r.score_q, r.pctl,
-           |    r.pctl * CAST(n_total - 1 AS DOUBLE) AS idx
-           |  FROM ranked r CROSS JOIN nt),
-           |w2 AS (
-           |  SELECT *, CAST(FLOOR(idx) AS BIGINT) AS lo, CAST(CEIL(idx) AS BIGINT) AS hi,
-           |    idx - CAST(CAST(FLOOR(idx) AS BIGINT) AS DOUBLE) AS frac
-           |  FROM wi)
-           |SELECT w2.doc_id, w2.source, CAST(w2.score_q AS DOUBLE) AS quality, w2.pctl,
-           |  round(CAST(l.score_q AS DOUBLE)
-           |    + (CAST(h.score_q AS DOUBLE) - CAST(l.score_q AS DOUBLE)) * w2.frac, 6) AS qnorm
-           |FROM w2
-           |JOIN ph l ON w2.lo >= l.cum_start AND w2.lo < l.cum_end
-           |JOIN ph h ON w2.hi >= h.cum_start AND w2.hi < h.cum_end
-           |WHERE w2.doc_id % 7 = 0 ORDER BY w2.doc_id""".stripMargin,
-      "text_frequent_pairs" ->
-        s"""WITH toks AS (
-           |  SELECT doc_id, w FROM (
-           |    SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-           |    FROM documents)
-           |  WHERE w <> '' AND w NOT IN $stopListSql),
-           |freq AS (SELECT w FROM (SELECT w, COUNT(*) AS df FROM toks GROUP BY w)
-           |         WHERE df >= 25),
-           |ft AS (SELECT t.doc_id, t.w FROM toks t JOIN freq f ON t.w = f.w)
-           |SELECT a.w AS w1, b.w AS w2, COUNT(*) AS support
-           |FROM ft a JOIN ft b ON a.doc_id = b.doc_id AND a.w < b.w
-           |GROUP BY a.w, b.w
-           |HAVING COUNT(*) >= 25
-           |ORDER BY support DESC, w1, w2 LIMIT 30""".stripMargin,
-      "events_cusum_daily" -> {
-        val z = DuckSql.fmt(0.0)
-        s"""WITH daily AS (
-           |  SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n FROM events GROUP BY 1),
-           |agg AS (
-           |  SELECT list(CAST(n AS DOUBLE) ORDER BY day) AS arr,
-           |    CAST(SUM(n) AS BIGINT) AS tot, CAST(COUNT(*) AS BIGINT) AS n_days
-           |  FROM daily),
-           |m AS (
-           |  SELECT n_days, arr,
-           |    ROUND(CAST(tot AS DOUBLE) / CAST(n_days AS DOUBLE), 6) AS mean_daily
-           |  FROM agg)
-           |SELECT n_days, mean_daily,
-           |  ROUND(list_reduce(
-           |    list_prepend([$z, $z], list_transform(arr, v -> [v - mean_daily])),
-           |    (acc, x) -> [GREATEST($z, acc[1] + x[1]),
-           |                 GREATEST(acc[2], GREATEST($z, acc[1] + x[1]))])[2], 6) AS max_cusum
-           |FROM m""".stripMargin
-      },
-      "events_funnel_latency" ->
-        s"""WITH ev AS (SELECT user_id, event_type, (epoch_ns(ts) // 1000000000) AS tse FROM events),
-           |tv AS (SELECT user_id, MIN(tse) AS tv FROM ev WHERE event_type = 'view' GROUP BY user_id),
-           |tc AS (SELECT ev.user_id, MIN(tse) AS tc FROM ev JOIN tv ON ev.user_id = tv.user_id
-           |       WHERE event_type = 'click' AND tse > tv GROUP BY ev.user_id),
-           |tp AS (SELECT ev.user_id, MIN(tse) AS tp FROM ev JOIN tc ON ev.user_id = tc.user_id
-           |       WHERE event_type = 'purchase' AND tse > tc GROUP BY ev.user_id),
-           |vc AS (SELECT COUNT(*) AS n_vc,
-           |         quantile_cont(tc - tv, ${DuckSql.fmt(0.5)}) AS p50_view_click,
-           |         quantile_cont(tc - tv, ${DuckSql.fmt(0.9)}) AS p90_view_click
-           |       FROM tc JOIN tv USING (user_id)),
-           |cp AS (SELECT COUNT(*) AS n_cp,
-           |         quantile_cont(tp - tc, ${DuckSql.fmt(0.5)}) AS p50_click_purchase,
-           |         quantile_cont(tp - tc, ${DuckSql.fmt(0.9)}) AS p90_click_purchase
-           |       FROM tp JOIN tc USING (user_id))
-           |SELECT * FROM vc CROSS JOIN cp""".stripMargin,
-      "vec_norm_extremes" ->
-        s"""SELECT label, COUNT(*) AS n, MIN(nrm) AS min_norm, MAX(nrm) AS max_norm
-           |FROM (SELECT label, sqrt(${DuckSql.squaredL2Lit("embedding", Array.fill(Dim)(0.0))}) AS nrm FROM embeddings)
-           |GROUP BY label ORDER BY label""".stripMargin,
-      "dedup_semantic_clusters" -> {
-        val cs = DuckSql.cosineSimCols("a_embedding", "b_embedding", Dim)
-        val d2c = DuckSql.squaredL2Cols("e.embedding", "c.cemb", Dim)
-        val d2f = DuckSql.squaredL2Cols("e.embedding", "f.femb", Dim)
-        val md5v = Dedup.md5Int32Sql("CAST(vec_id AS VARCHAR)")
-        val md5ev = Dedup.md5Int32Sql("CAST(e.vec_id AS VARCHAR)")
-        // Replays Ann.twoLevelCodebook + assignTwoLevel(probes=2) exactly:
-        // kc = ceil(sqrt(k)) coarse stratified min-md5 seeds (dense index
-        // = rank of stratum), flat coarse argmin with (dist, cidx)
-        // tie-break, per-(coarse cell, stratum % kf) fine seeds (an empty
-        // coarse cell contributes its own centroid, stratum -1), global
-        // fine id = rank over (ccell, stratum) - 1 — the scanLeft offsets
-        // — and assignment = argmin over the 2 probed cells' fine
-        // codebooks with the expression's (dist, probe rank, j) scan-order
-        // tie-break, all via lexicographic struct-MIN.
-        // kk..cem MATERIALIZED: co/ca/cem are each referenced 2-3x and plain
-        // CTEs are inlined per reference, compounding down the chain (the
-        // r16 driver sweep measured 6.4 s / near-OOM on the 500-row fixture).
-        s"""WITH RECURSIVE kk AS MATERIALIZED (
-           |  SELECT k, CAST(CEIL(SQRT(CAST(k AS DOUBLE))) AS BIGINT) AS kc,
-           |    (k + CAST(CEIL(SQRT(CAST(k AS DOUBLE))) AS BIGINT) - 1)
-           |      // CAST(CEIL(SQRT(CAST(k AS DOUBLE))) AS BIGINT) AS kf
-           |  FROM (SELECT GREATEST(8, (COUNT(*) + 63) // 64) AS k FROM embeddings)
-           |), co AS MATERIALIZED (
-           |  SELECT ROW_NUMBER() OVER (ORDER BY s) - 1 AS cidx, cemb FROM (
-           |    SELECT s, cemb FROM (
-           |      SELECT vec_id % (SELECT kc FROM kk) AS s, embedding AS cemb,
-           |        ROW_NUMBER() OVER (PARTITION BY vec_id % (SELECT kc FROM kk)
-           |          ORDER BY $md5v ASC, vec_id ASC) AS rn
-           |      FROM embeddings) WHERE rn = 1)
-           |), ca AS MATERIALIZED (
-           |  SELECT vec_id, (MIN({'d': dc, 'c': cidx})).c AS ccell FROM (
-           |    SELECT e.vec_id, c.cidx, $d2c AS dc
-           |    FROM embeddings e CROSS JOIN co c)
-           |  GROUP BY vec_id
-           |), fseed AS MATERIALIZED (
-           |  SELECT ccell, fs, femb FROM (
-           |    SELECT a.ccell, e.vec_id % (SELECT kf FROM kk) AS fs, e.embedding AS femb,
-           |      ROW_NUMBER() OVER (PARTITION BY a.ccell, e.vec_id % (SELECT kf FROM kk)
-           |        ORDER BY $md5ev ASC, e.vec_id ASC) AS rn
-           |    FROM ca a JOIN embeddings e USING (vec_id)) WHERE rn = 1
-           |  UNION ALL
-           |  SELECT c.cidx AS ccell, -1 AS fs, c.cemb AS femb
-           |  FROM co c WHERE NOT EXISTS (SELECT 1 FROM ca WHERE ca.ccell = c.cidx)
-           |), fg AS MATERIALIZED (
-           |  SELECT ccell, femb,
-           |    ROW_NUMBER() OVER (ORDER BY ccell, fs) - 1 AS gid,
-           |    ROW_NUMBER() OVER (PARTITION BY ccell ORDER BY fs) - 1 AS j
-           |  FROM fseed
-           |), pr AS MATERIALIZED (
-           |  SELECT vec_id, cidx, prnk FROM (
-           |    SELECT vec_id, cidx,
-           |      ROW_NUMBER() OVER (PARTITION BY vec_id
-           |        ORDER BY dd ASC, cidx ASC) AS prnk
-           |    FROM (SELECT e.vec_id, c.cidx, $d2c AS dd
-           |          FROM embeddings e CROSS JOIN co c)) WHERE prnk <= 2
-           |), cells AS MATERIALIZED (
-           |  SELECT vec_id, (MIN({'d': fd, 'p': prnk, 'j': j, 'g': gid})).g AS cell FROM (
-           |    SELECT p.vec_id, p.prnk, f.j, f.gid, $d2f AS fd
-           |    FROM pr p JOIN embeddings e USING (vec_id)
-           |    JOIN fg f ON f.ccell = p.cidx)
-           |  GROUP BY vec_id
-           |), cem AS MATERIALIZED (
-           |  SELECT c.vec_id, c.cell, e.embedding
-           |  FROM cells c JOIN embeddings e USING (vec_id)
-           |), edges AS MATERIALIZED (
-           |  SELECT id_a AS src, id_b AS dst FROM (
-           |    SELECT a.vec_id AS id_a, b.vec_id AS id_b, $cs AS cos_sim
-           |    FROM (SELECT vec_id, cell, embedding AS a_embedding FROM cem) a
-           |    JOIN (SELECT vec_id, cell, embedding AS b_embedding FROM cem) b
-           |      ON a.cell = b.cell AND a.vec_id < b.vec_id
-           |  ) WHERE cos_sim >= ${DuckSql.fmt(0.3)}
-           |), sym AS MATERIALIZED (
-           |  SELECT src, dst FROM edges UNION SELECT dst AS src, src AS dst FROM edges
-           |), reach(id, lab) AS (
-           |  SELECT DISTINCT src AS id, src AS lab FROM sym
-           |  UNION
-           |  SELECT s.dst, r.lab FROM reach r JOIN sym s ON s.src = r.id
-           |)
-           |SELECT id, MIN(lab) AS canonical FROM reach GROUP BY id ORDER BY id""".stripMargin
-      },
-      "asof_join_forward" ->
-        """SELECT event_id, user_id, event_type, o_orderkey, o_totalprice FROM (
-          |  SELECT event_id, user_id, event_type, side,
-          |    first_value(pk IGNORE NULLS) OVER w AS o_orderkey,
-          |    first_value(pv IGNORE NULLS) OVER w AS o_totalprice
-          |  FROM (
-          |    SELECT event_id, user_id AS k, ts AS t, 0 AS side, CAST(NULL AS BIGINT) AS tb,
-          |           user_id, event_type, CAST(NULL AS BIGINT) AS pk, CAST(NULL AS DOUBLE) AS pv
-          |    FROM events
-          |    UNION ALL
-          |    SELECT CAST(NULL AS BIGINT), o_custkey, o_orderdate, 1, o_orderkey,
-          |           CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR), o_orderkey, o_totalprice
-          |    FROM orders
-          |  )
-          |  WINDOW w AS (PARTITION BY k ORDER BY t ASC, side ASC, tb ASC
-          |               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-          |) WHERE side = 0 ORDER BY event_id""".stripMargin,
-      // --- round-4: training-pipeline widening
-      "pipeline_pretrain" ->
-        s"""WITH gated AS (
-           |  ${qualityGateSql(0.3, "en")}
-           |), bench_g AS (
-           |  SELECT DISTINCT ${Dedup.md5LongSql("g")} AS gh FROM (
-           |    SELECT unnest(list_distinct(list_transform(range(1, len(w) - 2), i -> array_to_string(w[i:i+3], ' ')))) AS g
-           |    FROM (SELECT string_split(text, ' ') AS w FROM documents WHERE doc_id % 50 = 0))
-           |), train AS (
-           |  SELECT doc_id, text FROM gated WHERE doc_id % 50 <> 0
-           |), train_g AS (
-           |  SELECT doc_id, ${Dedup.md5LongSql("g")} AS gh FROM (
-           |    SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w) - 2), i -> array_to_string(w[i:i+3], ' ')))) AS g
-           |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM train))
-           |), contaminated AS (
-           |  SELECT DISTINCT t.doc_id FROM train_g t JOIN bench_g USING (gh)
-           |), clean AS (
-           |  SELECT * FROM train WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-           |), kept AS (
-           |  SELECT MIN(doc_id) AS doc_id FROM clean GROUP BY md5(text)
-           |)
-           |SELECT c.doc_id, CAST(len(string_split(c.text, ' ')) AS INT) AS n_tokens
-           |FROM clean c JOIN kept USING (doc_id) ORDER BY doc_id""".stripMargin,
-      "pipeline_pretrain_v2" -> {
-        val h = Dedup.md5Int32Sql("'7:' || CAST(k.doc_id AS VARCHAR)")
-        s"""WITH gop AS (
-           |  SELECT doc_id FROM (
-           |    SELECT doc_id,
-           |      CAST(len(string_split(text, ' ')) AS INT) AS n_words,
-           |      CAST(length(text) - len(string_split(text, ' ')) + 1 AS INT) AS chars,
-           |      CAST(len(list_filter(string_split(text, ' '), w -> w IN $stopListSql)) AS INT) AS n_stop,
-           |      CAST(len(list_distinct(string_split(text, ' '))) AS INT) AS n_distinct
-           |    FROM documents WHERE doc_id % 10 <> 0)
-           |  WHERE n_words >= 20 AND n_words <= 80 AND chars >= n_words * 3 AND chars <= n_words * 8
-           |    AND n_stop * 50 >= n_words AND n_distinct * 2 >= n_words
-           |), train AS (SELECT string_split(text, ' ') AS w FROM documents WHERE doc_id % 10 = 0),
-           |tb AS (SELECT w[i] AS w1, w[i+1] AS w2 FROM train, unnest(range(1, len(w))) AS t(i)),
-           |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM tb GROUP BY w1, w2),
-           |c1 AS (SELECT w1, COUNT(*) AS c1 FROM tb GROUP BY w1),
-           |vocab AS (SELECT COUNT(DISTINCT u.word) AS v FROM train, unnest(w) AS u(word)),
-           |held AS (SELECT d.doc_id, string_split(d.text, ' ') AS w FROM documents d JOIN gop USING (doc_id)),
-           |hb AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2 FROM held, unnest(range(1, len(w))) AS t(i)),
-           |scored AS (
-           |  SELECT hb.doc_id,
-           |    CAST(ROUND(LN((COALESCE(c12.c12, 0) + 1.0) / (COALESCE(c1.c1, 0) + vocab.v)), 6)
-           |      AS DECIMAL(18,6)) AS lp
-           |  FROM hb LEFT JOIN c12 ON hb.w1 = c12.w1 AND hb.w2 = c12.w2
-           |          LEFT JOIN c1 ON hb.w1 = c1.w1
-           |          CROSS JOIN vocab),
-           |buck AS (
-           |  SELECT doc_id,
-           |    CASE WHEN SUM(lp) < CAST(-3.55 AS DECIMAL(18,6)) * COUNT(*) THEN 'tail'
-           |         WHEN SUM(lp) >= CAST(-3.49 AS DECIMAL(18,6)) * COUNT(*) THEN 'head'
-           |         ELSE 'middle' END AS bucket
-           |  FROM scored GROUP BY doc_id),
-           |kept AS (
-           |  SELECT b.doc_id, b.bucket, md5(d.text) AS digest,
-           |    CAST(len(string_split(d.text, ' ')) AS INT) AS n_tokens
-           |  FROM buck b JOIN documents d USING (doc_id) WHERE b.bucket <> 'tail'),
-           |canon AS (SELECT digest, MIN(doc_id) AS doc_id FROM kept GROUP BY digest),
-           |ch AS (
-           |  SELECT k.doc_id, k.bucket, k.n_tokens, ($h) AS h
-           |  FROM kept k JOIN canon c ON k.digest = c.digest AND k.doc_id = c.doc_id),
-           |ns AS (SELECT GREATEST(1, (COUNT(*) + 63) // 64) AS n FROM documents)
-           |SELECT doc_id, bucket, n_tokens, CAST(h % ns.n AS INT) AS shard,
-           |  CAST(ROW_NUMBER() OVER (PARTITION BY h % ns.n ORDER BY h, doc_id) AS INT) AS pos
-           |FROM ch, ns ORDER BY doc_id""".stripMargin
-      },
-      "decontam_ngram_overlap" ->
-        s"""WITH g AS (
-           |  SELECT doc_id, ${Dedup.md5LongSql("g")} AS gh FROM (
-           |    SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w) - 2), i -> array_to_string(w[i:i+3], ' ')))) AS g
-           |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
-           |), bench AS (
-           |  SELECT DISTINCT gh FROM g WHERE doc_id % 50 = 0
-           |), hits AS (
-           |  SELECT g.doc_id, COUNT(*) AS n FROM g JOIN bench USING (gh)
-           |  WHERE g.doc_id % 50 <> 0 GROUP BY g.doc_id
-           |)
-           |SELECT d.doc_id, COALESCE(n, 0) AS n_contaminated_ngrams,
-           |  CAST(COALESCE(n, 0) > 0 AS INT) AS contaminated
-           |FROM (SELECT doc_id FROM documents WHERE doc_id % 50 <> 0) d
-           |LEFT JOIN hits ON d.doc_id = hits.doc_id
-           |ORDER BY d.doc_id""".stripMargin,
-      "decontam_bloom" ->
-        s"""WITH bg AS (
-           |  SELECT DISTINCT g FROM (
-           |    SELECT unnest(list_distinct(list_transform(range(1, len(w) - 2), i -> array_to_string(w[i:i+3], ' ')))) AS g
-           |    FROM (SELECT string_split(text, ' ') AS w FROM documents WHERE doc_id % 50 = 0))
-           |), bits AS (
-           |  SELECT DISTINCT (h1 + i * h2) % 65536 AS p FROM (
-           |    SELECT ${Dedup.md5Int32Sql("g")} AS h1, ${Dedup.md5Int32Sql("'b:' || g")} AS h2 FROM bg),
-           |    unnest([0, 1, 2]) AS t(i)
-           |), th AS (
-           |  SELECT doc_id, ${Dedup.md5Int32Sql("g")} AS h1, ${Dedup.md5Int32Sql("'b:' || g")} AS h2 FROM (
-           |    SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w) - 2), i -> array_to_string(w[i:i+3], ' ')))) AS g
-           |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents WHERE doc_id % 50 <> 0))
-           |), fl AS (
-           |  SELECT doc_id, CASE WHEN
-           |        (h1 + 0 * h2) % 65536 IN (SELECT p FROM bits)
-           |    AND (h1 + 1 * h2) % 65536 IN (SELECT p FROM bits)
-           |    AND (h1 + 2 * h2) % 65536 IN (SELECT p FROM bits)
-           |    THEN 1 ELSE 0 END AS f FROM th
-           |)
-           |SELECT d.doc_id, CAST(COALESCE(SUM(f), 0) AS BIGINT) AS n_flagged_ngrams,
-           |  COALESCE(SUM(f), 0) > 0 AS contaminated_bloom
-           |FROM (SELECT doc_id FROM documents WHERE doc_id % 50 <> 0) d
-           |LEFT JOIN fl USING (doc_id)
-           |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-      "join_bloom_prefilter" ->
-        s"""SELECT o_orderpriority, COUNT(*) AS n, ${dsumSql("o_totalprice")} AS sum_price
-           |FROM orders JOIN customer ON o_custkey = c_custkey
-           |WHERE c_mktsegment = 'BUILDING'
-           |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-      // the oracle is definitional: exact string grams, no hashing at all
-      // — hash-transport + string-verify must agree with it exactly
-      "decontam_exact_spans" ->
-        """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-          |tg AS (
-          |  SELECT doc_id, CAST(i AS BIGINT) AS pos, array_to_string(w[i+1:i+4], ' ') AS g
-          |  FROM (SELECT doc_id, w,
-          |          unnest(range(0, CASE WHEN len(w) >= 4 THEN len(w) - 3 ELSE 0 END)) AS i
-          |        FROM w WHERE doc_id % 50 <> 0)),
-          |bg AS (
-          |  SELECT DISTINCT array_to_string(w[i+1:i+4], ' ') AS g
-          |  FROM (SELECT w,
-          |          unnest(range(0, CASE WHEN len(w) >= 4 THEN len(w) - 3 ELSE 0 END)) AS i
-          |        FROM w WHERE doc_id % 50 = 0)),
-          |v AS (SELECT DISTINCT t.doc_id, t.pos FROM tg t JOIN bg USING (g)),
-          |m AS (
-          |  SELECT doc_id, pos,
-          |    MAX(pos + 4) OVER (PARTITION BY doc_id ORDER BY pos
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-          |  FROM v),
-          |i AS (
-          |  SELECT doc_id, pos,
-          |    SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
-          |      OVER (PARTITION BY doc_id ORDER BY pos
-          |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-          |  FROM m),
-          |sp AS (
-          |  SELECT doc_id, island, MIN(pos) AS s, MAX(pos) + 4 AS e, COUNT(*) AS ng
-          |  FROM i GROUP BY doc_id, island)
-          |SELECT doc_id, COUNT(*) AS n_spans,
-          |  CAST(MAX(e - s) AS BIGINT) AS max_span_words,
-          |  CAST(SUM(ng) AS BIGINT) AS n_grams
-          |FROM sp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-      "rank_ndcg_bm25" -> {
-        val discVals = (1 to K).map(r =>
-          s"($r, ${DuckSql.fmt(1.0 / (math.log(r + 1.0) / math.log(2.0)))})").mkString(", ")
-        val gradeSql = Seq("spark", "table", "query").map(t =>
-          s"len(list_filter(string_split(text, ' '), w -> w = '$t'))")
-          .mkString(" + ")
-        s"""WITH page AS (${bm25ScoredSql(K)}),
-           |run AS (SELECT doc_id,
-           |          ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id ASC) AS rank
-           |        FROM page),
-           |rel AS (SELECT doc_id, CAST($gradeSql AS BIGINT) AS grade FROM documents),
-           |discounts(rank, disc) AS (VALUES $discVals),
-           |d AS (
-           |  SELECT SUM(CAST(round(CAST(g.grade AS DOUBLE) * w.disc, 9) AS DECIMAL(18,9))) AS dcg
-           |  FROM run r JOIN rel g USING (doc_id) JOIN discounts w ON w.rank = r.rank),
-           |ideal AS (
-           |  SELECT grade, ROW_NUMBER() OVER (ORDER BY grade DESC, doc_id ASC) AS rank
-           |  FROM rel ORDER BY grade DESC, doc_id ASC LIMIT $K),
-           |idl AS (
-           |  SELECT SUM(CAST(round(CAST(i.grade AS DOUBLE) * w.disc, 9) AS DECIMAL(18,9))) AS idcg
-           |  FROM ideal i JOIN discounts w ON w.rank = i.rank)
-           |SELECT CAST($K AS INT) AS k,
-           |  round(CAST(dcg AS DOUBLE), 6) AS dcg,
-           |  round(CAST(idcg AS DOUBLE), 6) AS idcg,
-           |  round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6) AS ndcg
-           |FROM d, idl""".stripMargin
-      },
-      "pack_sequences_greedy" ->
-        """WITH RECURSIVE t AS MATERIALIZED (
-          |  SELECT doc_id % 8 AS grp, doc_id, CAST(CEIL(CAST(length(text) AS DOUBLE) / 4.0) AS BIGINT) AS tok,
-          |    ROW_NUMBER() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS rn
-          |  FROM documents
-          |), r AS (
-          |  SELECT grp, rn, doc_id, tok, CAST(0 AS BIGINT) AS bin, tok AS fill
-          |  FROM t WHERE rn = 1
-          |  UNION ALL
-          |  SELECT t.grp, t.rn, t.doc_id, t.tok,
-          |    CASE WHEN r.fill + t.tok > 512 THEN r.bin + 1 ELSE r.bin END,
-          |    CASE WHEN r.fill + t.tok > 512 THEN t.tok ELSE r.fill + t.tok END
-          |  FROM r JOIN t ON t.grp = r.grp AND t.rn = r.rn + 1
-          |)
-          |SELECT grp, doc_id, tok AS n_tokens, bin AS bin_idx, fill AS bin_fill
-          |FROM r ORDER BY doc_id""".stripMargin,
-      "knn_sq8_topk" ->
-        s"""SELECT vec_id, label, ${graft.operators.Quantize.sq8DistLitSql(e, SqScale, Q64)} AS dist_sq8
-           |FROM embeddings ORDER BY dist_sq8 ASC, vec_id ASC LIMIT $K""".stripMargin,
-      "knn_sq8_refine" ->
-        s"""SELECT vec_id, ${DuckSql.squaredL2Lit(e, Q64)} AS dist
-           |FROM embeddings WHERE vec_id IN (
-           |  SELECT vec_id FROM (
-           |    SELECT vec_id, ${graft.operators.Quantize.sq8DistLitSql(e, SqScale, Q64)} AS dist_sq8
-           |    FROM embeddings ORDER BY dist_sq8 ASC, vec_id ASC LIMIT 50))
-           |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin,
-      "text_classifier_score" -> {
-        val nw = nWordsSql("text")
-        s"""SELECT doc_id, raw_score, n_words,
-           |  CAST(raw_score AS DOUBLE) / CAST(n_words AS DOUBLE) AS score,
-           |  CAST(CAST(raw_score AS DOUBLE) / CAST(n_words AS DOUBLE) >= 0.0 AS INT) AS keep
-           |FROM (
-           |  SELECT doc_id,
-           |    CAST(list_sum(list_transform(string_split(text, ' '), w -> (${Dedup.md5Int32Sql("w")} % 21) - 10)) AS BIGINT) AS raw_score,
-           |    $nw AS n_words
-           |  FROM documents
-           |) ORDER BY doc_id""".stripMargin
-      },
-      "sample_domain_mix" ->
-        s"""SELECT lang, COUNT(*) AS n_sampled, CAST(SUM(doc_id) AS BIGINT) AS id_sum
-           |FROM documents
-           |JOIN (VALUES ('en', 500), ('de', 200), ('fr', 200), ('es', 100), ('zh', 50)) AS r(r_lang, permille)
-           |  ON lang = r_lang
-           |WHERE (${Dedup.md5Int32Sql("CAST(doc_id AS VARCHAR)")} % 1000) < permille
-           |GROUP BY lang ORDER BY lang""".stripMargin,
-      "sample_source_cap" ->
-        s"""SELECT source, COUNT(*) AS n_kept, CAST(SUM(doc_id) AS BIGINT) AS id_sum,
-           |  MAX(qq) AS best_q, MIN(qq) AS worst_kept_q
-           |FROM (
-           |  SELECT source, doc_id, qq,
-           |    row_number() OVER (PARTITION BY source ORDER BY qq DESC, doc_id ASC) AS rnk
-           |  FROM (SELECT source, doc_id,
-           |          ${qualityScaledSql("text", 9)} AS qq
-           |        FROM documents)
-           |) WHERE rnk <= 10
-           |GROUP BY source ORDER BY source""".stripMargin,
-      "dedup_priority_source" ->
-        s"""WITH corpus AS (
-           |  SELECT doc_id, text, source FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 1000000, text, 'src0' FROM documents WHERE doc_id % 40 = 3
-           |  UNION ALL
-           |  SELECT doc_id + 2000000, text, 'src19' FROM documents WHERE doc_id % 40 = 7
-           |), g AS (
-           |  SELECT source, doc_id,
-           |    COUNT(*) OVER (PARTITION BY md5(text)) AS group_size,
-           |    row_number() OVER (PARTITION BY md5(text)
-           |      ORDER BY CAST(regexp_extract(source, '([0-9]+)$$', 1) AS INT) ASC,
-           |               doc_id ASC) AS rn
-           |  FROM corpus)
-           |SELECT source, COUNT(*) AS n_docs,
-           |  CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           |  CAST(SUM(CASE WHEN rn = 1 AND group_size > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_won,
-           |  CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_lost
-           |FROM g GROUP BY source ORDER BY source""".stripMargin,
-      "text_quality_percentile" ->
-        s"""WITH scored AS (
-           |  SELECT doc_id, lang,
-           |    ${qualityScaledSql("text", 4)} AS score_q
-           |  FROM documents),
-           |hist AS (SELECT lang, score_q, COUNT(*) AS c FROM scored GROUP BY lang, score_q),
-           |pr AS (
-           |  SELECT lang, score_q,
-           |    COALESCE(SUM(c) OVER (PARTITION BY lang ORDER BY score_q ASC
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below,
-           |    SUM(c) OVER (PARTITION BY lang) AS n
-           |  FROM hist)
-           |SELECT s.doc_id, s.lang, s.score_q,
-           |  CAST(CASE WHEN p.n > 1
-           |    THEN (p.below * 2000000000 + (p.n - 1)) // ((p.n - 1) * 2)
-           |    ELSE 0 END AS BIGINT) AS pctl,
-           |  CAST(CASE WHEN p.n > 1
-           |    THEN (p.below * 2000000000 + (p.n - 1)) // ((p.n - 1) * 2)
-           |    ELSE 0 END >= 200000000 AS INT) AS keep
-           |FROM scored s JOIN pr p ON s.lang = p.lang AND s.score_q = p.score_q
-           |WHERE s.doc_id % 3 = 0 ORDER BY s.doc_id""".stripMargin,
-      "text_ngram_diversity" ->
-        s"""WITH tot AS (
-           |  SELECT lang,
-           |    CAST(SUM(GREATEST(CAST(len(string_split(text, ' ')) AS BIGINT) - 2, 0)) AS BIGINT) AS n_grams
-           |  FROM documents GROUP BY lang),
-           |dist AS (
-           |  SELECT lang, CAST(COUNT(DISTINCT g) AS BIGINT) AS n_distinct
-           |  FROM (
-           |    SELECT lang, unnest($ssetSql) AS g
-           |    FROM (SELECT lang, string_split(text, ' ') AS w FROM documents)
-           |  ) GROUP BY lang)
-           |SELECT t.lang, t.n_grams, d.n_distinct,
-           |  CASE WHEN t.n_grams > 0
-           |    THEN CAST(d.n_distinct AS DOUBLE) / CAST(t.n_grams AS DOUBLE) END AS diversity
-           |FROM tot t JOIN dist d ON t.lang = d.lang ORDER BY t.lang""".stripMargin,
-      "prep_span_corruption" ->
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest(range(0, len(w))) AS pos, w
-           |  FROM (SELECT doc_id, string_split(text, ' ') AS w
-           |        FROM documents WHERE doc_id % 10 = 0)),
-           |t2 AS (
-           |  SELECT doc_id, pos, w[pos + 1] AS word,
-           |    (${Dedup.md5Int32Sql("CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR)")} % 5) = 0 AS m
-           |  FROM toks),
-           |f AS (
-           |  SELECT *, m AND NOT COALESCE(LAG(m) OVER (PARTITION BY doc_id ORDER BY pos), FALSE) AS run_start
-           |  FROM t2),
-           |kk AS (
-           |  SELECT *, SUM(CASE WHEN run_start THEN 1 ELSE 0 END)
-           |      OVER (PARTITION BY doc_id ORDER BY pos
-           |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS k
-           |  FROM f),
-           |p AS (
-           |  SELECT doc_id, pos, run_start, m,
-           |    CASE WHEN NOT m THEN word
-           |         WHEN run_start THEN '<extra_id_' || CAST(k AS VARCHAR) || '>' END AS piece_in,
-           |    CASE WHEN run_start THEN '<extra_id_' || CAST(k AS VARCHAR) || '>' || ' ' || word
-           |         WHEN m THEN word END AS piece_tgt
-           |  FROM kk)
-           |SELECT doc_id,
-           |  COALESCE(string_agg(piece_in, ' ' ORDER BY pos), '') AS input_text,
-           |  COALESCE(string_agg(piece_tgt, ' ' ORDER BY pos), '') AS target_text,
-           |  CAST(SUM(CASE WHEN run_start THEN 1 ELSE 0 END) AS BIGINT) AS n_spans,
-           |  CAST(SUM(CASE WHEN m THEN 1 ELSE 0 END) AS BIGINT) AS n_masked
-           |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-      "text_quality_zscore" ->
-        s"""WITH scored AS (
-           |  SELECT doc_id, lang,
-           |    CAST(round(${qualitySql("text")}, 9) AS DECIMAL(18,9)) AS q
-           |  FROM documents),
-           |stats AS (
-           |  SELECT lang, COUNT(*) AS n, SUM(q) AS sq, SUM(q * q) AS sqq
-           |  FROM scored GROUP BY lang),
-           |st AS (
-           |  SELECT lang, n,
-           |    CAST(sq AS DOUBLE) / CAST(n AS DOUBLE) AS mean_q,
-           |    SQRT((CAST(n AS DOUBLE) * CAST(sqq AS DOUBLE)
-           |        - CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE))
-           |      / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS std_q
-           |  FROM stats)
-           |SELECT s.doc_id, s.lang, CAST(s.q AS DOUBLE) AS quality,
-           |  round((CAST(s.q AS DOUBLE) - st.mean_q) / st.std_q, 6) AS z
-           |FROM scored s JOIN st ON s.lang = st.lang
-           |WHERE s.doc_id % 3 = 0 ORDER BY s.doc_id""".stripMargin,
-      "ann_ivf_cell_stats" -> {
-        val dists = Planes16.take(8)
-          .map(c => DuckSql.squaredL2Lit(e, c)).mkString(",\n    ")
-        s"""WITH counted AS (
-           |  SELECT CAST(list_position(l, list_min(l)) - 1 AS INT) AS ivf_cell,
-           |    COUNT(*) AS n_vecs
-           |  FROM (SELECT vec_id, [$dists] AS l FROM embeddings)
-           |  GROUP BY 1
-           |), cells AS (
-           |  SELECT CAST(r.range AS INT) AS ivf_cell,
-           |    CAST(COALESCE(c.n_vecs, 0) AS BIGINT) AS n_vecs
-           |  FROM range(0, 8) r LEFT JOIN counted c ON r.range = c.ivf_cell
-           |), tot AS (SELECT CAST(SUM(n_vecs) AS BIGINT) AS total FROM cells)
-           |SELECT ivf_cell, n_vecs,
-           |  round(CAST(n_vecs * 8 AS DOUBLE) / CAST(total AS DOUBLE), 9) AS load_factor
-           |FROM cells, tot ORDER BY ivf_cell""".stripMargin
-      },
-      // incremental admission: replay seeded-exact training on the BASE,
-      // assign the batch to the frozen trained centroids, recompute the
-      // health report (the ivf_cell_stats shape with before/after + flag)
-      "ann_ivf_append" -> {
-        val nc = IvfSeeds.length
-        s"""WITH base AS (
-           |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 <> 0),
-           |batch AS (
-           |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 = 0),
-           |${ivfTrainedCtes(IvfSeeds, 2, rel = "base")},
-           |${ivfAssignCte("abatch", "batch", "c2")},
-           |nb AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n FROM af GROUP BY cell),
-           |nn AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n FROM abatch GROUP BY cell),
-           |cells AS (
-           |  SELECT CAST(r.range AS INT) AS ivf_cell,
-           |    CAST(COALESCE(b.n, 0) AS BIGINT) AS n_before,
-           |    CAST(COALESCE(b.n, 0) + COALESCE(a.n, 0) AS BIGINT) AS n_after,
-           |    CAST(COALESCE(a.n, 0) AS BIGINT) AS n_admitted
-           |  FROM range(0, $nc) r
-           |  LEFT JOIN nb b ON r.range = b.cell
-           |  LEFT JOIN nn a ON r.range = a.cell),
-           |tot AS (SELECT CAST(SUM(n_after) AS BIGINT) AS total FROM cells)
-           |SELECT ivf_cell, n_before, n_after, n_admitted,
-           |  round(CAST(n_after * $nc AS DOUBLE) / CAST(total AS DOUBLE), 9) AS load_factor,
-           |  CASE WHEN CAST(n_after * $nc AS DOUBLE) > CAST(total AS DOUBLE) * ${DuckSql.fmt(2.0)}
-           |       THEN 1 ELSE 0 END AS retrain_flag
-           |FROM cells, tot ORDER BY ivf_cell""".stripMargin
-      },
-      "split_leakage_audit" -> {
-        val foldSql = (c: String) =>
-          s"(${Dedup.md5Int32Sql(s"CAST($c AS VARCHAR)")} % 5)"
-        s"""WITH sig AS (
-           |  SELECT doc_id, $minsSql
-           |  FROM (
-           |    SELECT doc_id, ${Dedup.md5Int32Sql("shingle")} AS h FROM (
-           |      SELECT doc_id, unnest($ssetSql) AS shingle
-           |      FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-           |    )
-           |  ) GROUP BY doc_id
-           |), buckets AS (
-           |  $cappedBandBucketsSql
-           |), cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-           |), sets AS (
-           |  SELECT doc_id, $ssetSql AS sset
-           |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-           |), pairs AS (
-           |  SELECT id_a, id_b FROM (
-           |    SELECT id_a, id_b,
-           |      CAST(len(list_intersect(sa.sset, sb.sset)) AS DOUBLE) / CAST(len(list_distinct(list_cat(sa.sset, sb.sset))) AS DOUBLE) AS jac
-           |    FROM cand JOIN sets sa ON sa.doc_id = cand.id_a JOIN sets sb ON sb.doc_id = cand.id_b
-           |  ) WHERE jac >= ${DuckSql.fmt(0.5)})
-           |SELECT fold_a, fold_b, COUNT(*) AS n_pairs,
-           |  CAST(fold_a <> fold_b AS INT) AS cross_fold
-           |FROM (SELECT ${foldSql("id_a")} AS fold_a, ${foldSql("id_b")} AS fold_b FROM pairs)
-           |GROUP BY fold_a, fold_b ORDER BY fold_a, fold_b""".stripMargin
-      },
-      "json_corrupt_audit" ->
-        s"""SELECT event_type, COUNT(*) AS n_events,
-           |  CAST(SUM(CASE WHEN k IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupt,
-           |  CAST(SUM(COALESCE(k, 0)) AS BIGINT) AS k_sum
-           |FROM (
-           |  SELECT event_type,
-           |    CASE WHEN json_valid(raw)
-           |      THEN CAST(json_extract_string(raw, '$$.k') AS BIGINT) END AS k
-           |  FROM (
-           |    SELECT event_type,
-           |      CASE WHEN event_id % 17 = 0 THEN '{' || props ELSE props END AS raw
-           |    FROM events)
-           |) GROUP BY event_type ORDER BY event_type""".stripMargin,
-      "dedup_edit_distance" ->
-        """SELECT id_a, id_b, lev FROM (
-          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(levenshtein(a.p, b.p) AS INT) AS lev
-          |  FROM (SELECT doc_id, substr(text, 1, 120) AS p FROM documents WHERE lang = 'en' AND doc_id % 25 = 0) a
-          |  JOIN (SELECT doc_id, substr(text, 1, 120) AS p FROM documents WHERE lang = 'en' AND doc_id % 25 = 0) b
-          |    ON a.doc_id < b.doc_id
-          |) WHERE lev <= 90 ORDER BY id_a, id_b""".stripMargin,
-      "text_oov_rate" ->
-        """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-          |vocab AS (SELECT w AS vw FROM (SELECT w, COUNT(*) AS c FROM tok GROUP BY w ORDER BY c DESC, w ASC LIMIT 200))
-          |SELECT doc_id, COUNT(*) AS n_tokens,
-          |  CAST(COUNT(*) FILTER (vw IS NULL) AS BIGINT) AS n_oov,
-          |  CAST(COUNT(*) FILTER (vw IS NULL) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS oov_rate
-          |FROM tok LEFT JOIN vocab ON w = vw
-          |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-      "text_pii_redact" -> {
-        val em = TextAnalysis.PiiEmail
-        val ph = TextAnalysis.PiiPhone
-        val ip = TextAnalysis.PiiIp
-        s"""WITH injected AS (
-           |  SELECT doc_id, source, text ||
-           |    CASE WHEN doc_id % 7 = 0 THEN ' contact u' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END ||
-           |    CASE WHEN doc_id % 11 = 0 THEN ' call +1-555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END ||
-           |    CASE WHEN doc_id % 13 = 0 THEN ' host 10.' || CAST(doc_id % 256 AS VARCHAR) || '.' || CAST((doc_id * 7) % 256 AS VARCHAR) || '.9' ELSE '' END AS text
-           |  FROM documents),
-           |s1 AS (SELECT doc_id, source,
-           |    CAST(len(regexp_extract_all(text, '$em')) AS BIGINT) AS n_email,
-           |    regexp_replace(text, '$em', '<EMAIL>', 'g') AS t1 FROM injected),
-           |s2 AS (SELECT doc_id, source, n_email,
-           |    CAST(len(regexp_extract_all(t1, '$ph')) AS BIGINT) AS n_phone,
-           |    regexp_replace(t1, '$ph', '<PHONE>', 'g') AS t2 FROM s1),
-           |s3 AS (SELECT doc_id, source, n_email, n_phone,
-           |    CAST(len(regexp_extract_all(t2, '$ip')) AS BIGINT) AS n_ip,
-           |    regexp_replace(t2, '$ip', '<IP>', 'g') AS redacted FROM s2)
-           |SELECT source, COUNT(*) AS n_docs,
-           |  CAST(SUM(n_email) AS BIGINT) AS n_email,
-           |  CAST(SUM(n_phone) AS BIGINT) AS n_phone,
-           |  CAST(SUM(n_ip) AS BIGINT) AS n_ip,
-           |  CAST(SUM(${Dedup.md5Int32Sql("redacted")}) AS BIGINT) AS redacted_hashsum
-           |FROM s3 GROUP BY source ORDER BY source""".stripMargin
-      },
-      "text_pii_report" -> {
-        val em = TextAnalysis.PiiEmail
-        val ph = TextAnalysis.PiiPhone
-        val ip = TextAnalysis.PiiIp
-        s"""WITH injected AS (
-           |  SELECT doc_id, source, text ||
-           |    CASE WHEN doc_id % 7 = 0 THEN ' contact u' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END ||
-           |    CASE WHEN doc_id % 11 = 0 THEN ' call +1-555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END ||
-           |    CASE WHEN doc_id % 13 = 0 THEN ' host 10.' || CAST(doc_id % 256 AS VARCHAR) || '.' || CAST((doc_id * 7) % 256 AS VARCHAR) || '.9' ELSE '' END AS text
-           |  FROM documents),
-           |s1 AS (SELECT doc_id, source,
-           |    CAST(len(regexp_extract_all(text, '$em')) AS BIGINT) AS n_email,
-           |    regexp_replace(text, '$em', '<EMAIL>', 'g') AS t1 FROM injected),
-           |s2 AS (SELECT doc_id, source, n_email,
-           |    CAST(len(regexp_extract_all(t1, '$ph')) AS BIGINT) AS n_phone,
-           |    regexp_replace(t1, '$ph', '<PHONE>', 'g') AS t2 FROM s1),
-           |s3 AS (SELECT doc_id, source, n_email, n_phone,
-           |    CAST(len(regexp_extract_all(t2, '$ip')) AS BIGINT) AS n_ip FROM s2)
-           |SELECT source, COUNT(*) AS n_docs,
-           |  CAST(SUM(CASE WHEN n_email > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_email,
-           |  CAST(SUM(CASE WHEN n_phone > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_phone,
-           |  CAST(SUM(CASE WHEN n_ip > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_ip,
-           |  CAST(SUM(CASE WHEN n_email + n_phone + n_ip > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_any,
-           |  CAST(SUM(n_email) AS BIGINT) AS occ_email,
-           |  CAST(SUM(n_phone) AS BIGINT) AS occ_phone,
-           |  CAST(SUM(n_ip) AS BIGINT) AS occ_ip,
-           |  CAST(SUM(CASE WHEN n_email + n_phone + n_ip > 0 THEN 1 ELSE 0 END) AS DOUBLE)
-           |    / CAST(COUNT(*) AS DOUBLE) AS pii_doc_rate
-           |FROM s3 GROUP BY source ORDER BY source""".stripMargin
-      },
-      "knn_radius" -> {
-        s"""SELECT vec_id, label, dist FROM (SELECT vec_id, label, $sq AS dist FROM embeddings)
-           |WHERE dist <= ${DuckSql.fmt(Radius)} ORDER BY dist ASC, vec_id ASC""".stripMargin
-      },
-      "knn_radius_pruned" ->
-        s"""SELECT vec_id, label, dist FROM (SELECT vec_id, label, $sq AS dist FROM embeddings)
-           |WHERE dist <= ${DuckSql.fmt(Radius)} ORDER BY dist ASC, vec_id ASC""".stripMargin,
-      "store_autoprune_radius" -> {
-        val sq2 = DuckSql.squaredL2Lit("embedding", Q64.take(2))
-        s"""SELECT vec_id, label, dist FROM (SELECT vec_id, label, $sq2 AS dist FROM embeddings)
-           |WHERE dist <= ${DuckSql.fmt(RadiusAuto)} ORDER BY dist ASC, vec_id ASC""".stripMargin
-      },
-      // pruning is admissible, so the quantile-store variant answers the
-      // identical radius query
-      "store_autoprune_radius_quantile" -> {
-        val sq2 = DuckSql.squaredL2Lit("embedding", Q64.take(2))
-        s"""SELECT vec_id, label, dist FROM (SELECT vec_id, label, $sq2 AS dist FROM embeddings)
-           |WHERE dist <= ${DuckSql.fmt(RadiusAuto)} ORDER BY dist ASC, vec_id ASC""".stripMargin
-      },
-      "crud_snapshot_diff" ->
-        """WITH b AS (SELECT vec_id, label FROM embeddings),
-          |a AS (
-          |  SELECT vec_id, CASE WHEN vec_id % 5 = 0 THEN label + 100 ELSE label END AS label
-          |  FROM embeddings WHERE vec_id % 13 <> 0
-          |  UNION ALL
-          |  SELECT vec_id + 1000000 AS vec_id, label
-          |  FROM (SELECT vec_id, label FROM embeddings ORDER BY vec_id LIMIT 10)
-          |)
-          |SELECT op, vec_id FROM (
-          |  SELECT CASE WHEN b.vec_id IS NULL THEN 'I'
-          |              WHEN a.vec_id IS NULL THEN 'D'
-          |              WHEN a.label IS DISTINCT FROM b.label THEN 'U' END AS op,
-          |         COALESCE(a.vec_id, b.vec_id) AS vec_id
-          |  FROM b FULL OUTER JOIN a ON b.vec_id = a.vec_id
-          |) WHERE op IS NOT NULL ORDER BY op, vec_id""".stripMargin,
-      "events_retention_cohorts" ->
-        """WITH ev AS (SELECT user_id, CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_epoch FROM events),
-          |c AS (SELECT user_id, MIN(day_epoch) AS cohort_epoch FROM ev GROUP BY user_id)
-          |SELECT cohort_epoch, (day_epoch - cohort_epoch) // 86400 AS day_offset,
-          |  COUNT(DISTINCT ev.user_id) AS n_active
-          |FROM ev JOIN c ON ev.user_id = c.user_id
-          |GROUP BY cohort_epoch, day_offset ORDER BY cohort_epoch, day_offset""".stripMargin,
-      "store_compaction_plan" ->
-        s"""WITH RECURSIVE cc AS (
-           |  SELECT ${Grid.cellIdSql(e, gridCfg)} AS cell_id, COUNT(*) AS n
-           |  FROM embeddings GROUP BY cell_id
-           |), t AS MATERIALIZED (
-           |  SELECT cell_id, n, ROW_NUMBER() OVER (ORDER BY cell_id) AS rn FROM cc
-           |), r AS (
-           |  SELECT rn, cell_id, n, CAST(0 AS BIGINT) AS bin, n AS fill FROM t WHERE rn = 1
-           |  UNION ALL
-           |  SELECT t.rn, t.cell_id, t.n,
-           |    CASE WHEN r.fill + t.n > 100 THEN r.bin + 1 ELSE r.bin END,
-           |    CASE WHEN r.fill + t.n > 100 THEN t.n ELSE r.fill + t.n END
-           |  FROM r JOIN t ON t.rn = r.rn + 1
-           |)
-           |SELECT cell_id, n AS n_rows, bin AS file_idx, fill AS file_fill
-           |FROM r ORDER BY cell_id""".stripMargin,
-      // --- round-4
-      "subquery_not_in_region" ->
-        """SELECT s_suppkey, s_name, s_nationkey FROM supplier
-          |WHERE s_nationkey NOT IN
-          |  (SELECT n_nationkey FROM nation WHERE n_regionkey IN (0, 1))
-          |ORDER BY s_suppkey""".stripMargin,
-      "join_preagg_revenue" ->
-        s"""SELECT o.o_orderpriority,
-           |  ${drevenueSql("l.l_extendedprice", "l.l_discount")} AS revenue,
-           |  COUNT(*) AS n_lines
-           |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-           |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin,
-      "agg_having_large_orders" ->
-        s"""SELECT o.o_orderkey, o.o_custkey, o.o_totalprice,
-           |  ${dsumSql("l.l_quantity")} AS sum_qty
-           |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-           |GROUP BY o.o_orderkey, o.o_custkey, o.o_totalprice
-           |HAVING ${dsumSql("l.l_quantity")} > 300.0
-           |ORDER BY o_orderkey""".stripMargin,
-      "join_disjunctive_pricing" ->
-        s"""SELECT ${drevenueSql("l_extendedprice", "l_discount")} AS revenue, COUNT(*) AS n
-           |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-           |WHERE (p.p_brand = 'Brand#12' AND l.l_quantity BETWEEN 1 AND 11 AND p.p_size BETWEEN 1 AND 5)
-           |   OR (p.p_brand = 'Brand#23' AND l.l_quantity BETWEEN 10 AND 20 AND p.p_size BETWEEN 1 AND 10)
-           |   OR (p.p_brand = 'Brand#34' AND l.l_quantity BETWEEN 20 AND 30 AND p.p_size BETWEEN 1 AND 15)""".stripMargin,
-      "join_nation_volume" ->
-        s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-           |  CAST(YEAR(o.o_orderdate) AS BIGINT) AS o_year,
-           |  ${drevenueSql("l.l_extendedprice", "l.l_discount")} AS revenue
-           |FROM lineitem l
-           |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-           |JOIN orders o ON l.l_orderkey = o.o_orderkey
-           |JOIN customer c ON o.o_custkey = c.c_custkey
-           |JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-           |JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-           |WHERE n1.n_name IN ('NATION_1','NATION_2') AND n2.n_name IN ('NATION_1','NATION_2')
-           |  AND n1.n_name <> n2.n_name
-           |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-      "agg_argmax_order" ->
-        """SELECT o_custkey,
-          |  arg_max(o_orderkey, CAST(ROUND(o_totalprice * 100) AS BIGINT) * 100000000000 + o_orderkey) AS best_orderkey,
-          |  MAX(o_totalprice) AS best_price
-          |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-      "agg_listagg_suppliers" ->
-        """SELECT n.n_name, string_agg(s.s_name, ',' ORDER BY s.s_name) AS suppliers,
-          |  COUNT(*) AS n
-          |FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-          |GROUP BY n.n_name ORDER BY n.n_name""".stripMargin,
-      "seq_user_event_trajectory" ->
-        """SELECT user_id, COUNT(*) AS n_events,
-          |  string_agg(event_type, ' ' ORDER BY ts, event_id) AS trajectory
-          |FROM events WHERE user_id % 50 = 0
-          |GROUP BY user_id ORDER BY user_id""".stripMargin,
-      "agg_partial_merge_monthly" ->
-        """SELECT CAST(YEAR(o_orderdate)*100 + MONTH(o_orderdate) AS BIGINT) AS ym,
-          |  COUNT(*) AS n,
-          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-          |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-      "window_range_frame_revenue" ->
-        """SELECT o_custkey, o_orderdate,
-          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-          |    PARTITION BY o_custkey ORDER BY o_orderdate
-          |    RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW) AS DOUBLE) AS rev30
-          |FROM orders WHERE o_custkey % 50 = 0
-          |ORDER BY o_custkey, o_orderdate, rev30""".stripMargin,
-      "text_bigram_lm" ->
-        """WITH train AS (SELECT string_split(text, ' ') AS w FROM documents WHERE doc_id % 10 = 0),
-          |tb AS (SELECT w[i] AS w1, w[i+1] AS w2
-          |       FROM train, unnest(range(1, len(w))) AS t(i)),
-          |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM tb GROUP BY w1, w2),
-          |c1 AS (SELECT w1, COUNT(*) AS c1 FROM tb GROUP BY w1),
-          |vocab AS (SELECT COUNT(DISTINCT u.word) AS v FROM train, unnest(w) AS u(word)),
-          |held AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents WHERE doc_id % 10 = 5),
-          |hb AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2
-          |       FROM held, unnest(range(1, len(w))) AS t(i)),
-          |scored AS (
-          |  SELECT hb.doc_id,
-          |    CAST(ROUND(LN((COALESCE(c12.c12, 0) + 1.0) / (COALESCE(c1.c1, 0) + vocab.v)), 6)
-          |      AS DECIMAL(18,6)) AS lp
-          |  FROM hb LEFT JOIN c12 ON hb.w1 = c12.w1 AND hb.w2 = c12.w2
-          |          LEFT JOIN c1 ON hb.w1 = c1.w1
-          |          CROSS JOIN vocab)
-          |SELECT doc_id, COUNT(*) AS n_bigrams,
-          |  CAST(SUM(lp) AS DOUBLE) / COUNT(*) AS avg_logp
-          |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-      "sample_dsir_importance" ->
-        """WITH tt AS (SELECT string_split(text, ' ') AS w FROM documents WHERE doc_id % 10 = 0),
-          |ttb AS (SELECT w[i] AS w1, w[i+1] AS w2 FROM tt, unnest(range(1, len(w))) AS t(i)),
-          |tc12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM ttb GROUP BY w1, w2),
-          |tc1 AS (SELECT w1, COUNT(*) AS c1 FROM ttb GROUP BY w1),
-          |tv AS (SELECT COUNT(DISTINCT u.word) AS v FROM tt, unnest(w) AS u(word)),
-          |rt AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents WHERE doc_id % 10 <> 0),
-          |rtb AS (SELECT w[i] AS w1, w[i+1] AS w2 FROM rt, unnest(range(1, len(w))) AS t(i)),
-          |rc12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM rtb GROUP BY w1, w2),
-          |rc1 AS (SELECT w1, COUNT(*) AS c1 FROM rtb GROUP BY w1),
-          |rv AS (SELECT COUNT(DISTINCT u.word) AS v FROM rt, unnest(w) AS u(word)),
-          |hb AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2 FROM rt, unnest(range(1, len(w))) AS t(i)),
-          |st AS (
-          |  SELECT doc_id, COUNT(*) AS n_bigrams, SUM(lp) AS lp_t FROM (
-          |    SELECT hb.doc_id,
-          |      CAST(ROUND(LN((COALESCE(tc12.c12, 0) + 1.0) / (COALESCE(tc1.c1, 0) + tv.v)), 6)
-          |        AS DECIMAL(18,6)) AS lp
-          |    FROM hb LEFT JOIN tc12 ON hb.w1 = tc12.w1 AND hb.w2 = tc12.w2
-          |            LEFT JOIN tc1 ON hb.w1 = tc1.w1
-          |            CROSS JOIN tv)
-          |  GROUP BY doc_id),
-          |sr AS (
-          |  SELECT doc_id, SUM(lp) AS lp_r FROM (
-          |    SELECT hb.doc_id,
-          |      CAST(ROUND(LN((COALESCE(rc12.c12, 0) + 1.0) / (COALESCE(rc1.c1, 0) + rv.v)), 6)
-          |        AS DECIMAL(18,6)) AS lp
-          |    FROM hb LEFT JOIN rc12 ON hb.w1 = rc12.w1 AND hb.w2 = rc12.w2
-          |            LEFT JOIN rc1 ON hb.w1 = rc1.w1
-          |            CROSS JOIN rv)
-          |  GROUP BY doc_id)
-          |SELECT st.doc_id, st.n_bigrams, CAST(st.lp_t - sr.lp_r AS DOUBLE) AS log_ratio
-          |FROM st JOIN sr ON st.doc_id = sr.doc_id
-          |ORDER BY log_ratio DESC, st.doc_id ASC LIMIT 100""".stripMargin,
-      "vec_label_centroids" ->
-        s"""SELECT label, i AS dim_idx,
-           |  CAST(SUM(CAST(ROUND(CAST($e[i+1] AS DOUBLE) * 1000000.0) AS BIGINT)) AS DOUBLE)
-           |    / (1000000.0 * COUNT(*)) AS centroid
-           |FROM embeddings, unnest(range(0, $Dim)) AS t(i)
-           |GROUP BY label, i ORDER BY label, i""".stripMargin,
-      "knn_hard_negatives" ->
-        s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel
-           |           FROM embeddings WHERE vec_id % 20 = 0),
-           |pairs AS (
-           |  SELECT q.qid, e.vec_id AS vid, e.label AS neg_label,
-           |    ${DuckSql.squaredL2Cols("q.qe", s"e.$e", Dim)} AS dist
-           |  FROM q, embeddings e WHERE e.label <> q.qlabel),
-           |best AS (SELECT qid, vid, neg_label, dist,
-           |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist, vid) AS rn FROM pairs)
-           |SELECT qid, vid AS hard_negative_id, neg_label, dist
-           |FROM best WHERE rn = 1 ORDER BY qid""".stripMargin,
-      "knn_classify_loo" ->
-        s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel
-           |           FROM embeddings WHERE vec_id % 20 = 0),
-           |pairs AS (
-           |  SELECT q.qid, q.qlabel, e.label AS plabel, e.vec_id AS vid,
-           |    ${DuckSql.squaredL2Cols("q.qe", s"e.$e", Dim)} AS dist
-           |  FROM q, embeddings e WHERE e.vec_id <> q.qid),
-           |best AS (SELECT qid, qlabel, plabel,
-           |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist, vid) AS rn FROM pairs)
-           |SELECT qlabel AS label, COUNT(*) AS n,
-           |  CAST(SUM(CASE WHEN plabel = qlabel THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-           |FROM best WHERE rn = 1 GROUP BY 1 ORDER BY 1""".stripMargin,
-      "stream_static_enrich" ->
-        """SELECT c.c_mktsegment, CAST(epoch(date_trunc('hour', e.ts)) AS BIGINT) AS hour_start,
-          |  COUNT(*) AS n, CAST(SUM(CAST(e.value AS DECIMAL(18,3))) AS DOUBLE) AS v_sum
-          |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-      "dedup_containment_pairs" ->
-        """SELECT id_a, id_b, containment FROM (
-          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          |    CAST(len(list_intersect(a.wset, b.wset)) AS DOUBLE) / CAST(len(a.wset) AS DOUBLE) AS containment
-          |  FROM (SELECT doc_id, list_distinct(string_split(text, ' ')) AS wset FROM documents WHERE doc_id % 20 = 0) a
-          |  JOIN (SELECT doc_id, list_distinct(string_split(text, ' ')) AS wset FROM documents WHERE doc_id % 20 = 0) b
-          |    ON a.doc_id <> b.doc_id
-          |) WHERE containment >= 0.9 ORDER BY id_a, id_b""".stripMargin,
-      "events_markov_transitions" ->
-        """WITH seq AS (
-          |  SELECT user_id, event_id, event_type,
-          |    (epoch_ns(ts) // 1000000000) AS tse FROM events),
-          |trans AS (
-          |  SELECT prev_type, event_type, COUNT(*) AS n FROM (
-          |    SELECT event_type,
-          |      LAG(event_type) OVER (PARTITION BY user_id ORDER BY tse ASC, event_id ASC) AS prev_type
-          |    FROM seq)
-          |  WHERE prev_type IS NOT NULL GROUP BY prev_type, event_type)
-          |SELECT prev_type, event_type, n,
-          |  CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY prev_type) AS BIGINT) AS p
-          |FROM trans ORDER BY prev_type, event_type""".stripMargin,
-      "agg_yoy_revenue" ->
-        """WITH monthly AS (
-          |  SELECT CAST(YEAR(o_orderdate)*100 + MONTH(o_orderdate) AS BIGINT) AS ym,
-          |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS tot
-          |  FROM orders GROUP BY 1)
-          |SELECT ym, CAST(tot AS DOUBLE) AS total,
-          |  CAST(prev_year_tot AS DOUBLE) AS prev_year_total,
-          |  CAST(tot AS DOUBLE) / CAST(prev_year_tot AS DOUBLE) - 1.0 AS yoy_change
-          |FROM (SELECT ym, tot, LAG(tot, 12) OVER (ORDER BY ym) AS prev_year_tot FROM monthly)
-          |ORDER BY ym""".stripMargin,
-      "window_revenue_share" ->
-        """WITH by_nation AS (
-          |  SELECT n.n_name, SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS tot
-          |  FROM orders o
-          |  JOIN customer c ON o.o_custkey = c.c_custkey
-          |  JOIN nation n ON c.c_nationkey = n.n_nationkey
-          |  GROUP BY n.n_name)
-          |SELECT n_name, CAST(tot AS DOUBLE) AS revenue,
-          |  CAST(tot AS DOUBLE) / CAST(SUM(tot) OVER () AS DOUBLE) AS share
-          |FROM by_nation ORDER BY n_name""".stripMargin,
-      "agg_winsorized_monthly" ->
-        """WITH bounds AS (
-          |  SELECT FLOOR(quantile_cont(o_totalprice, 0.05)) AS lo,
-          |         CEIL(quantile_cont(o_totalprice, 0.95)) AS hi
-          |  FROM orders)
-          |SELECT CAST(YEAR(o_orderdate)*100 + MONTH(o_orderdate) AS BIGINT) AS ym,
-          |  COUNT(*) AS n,
-          |  CAST(SUM(CAST(GREATEST(lo, LEAST(hi, o_totalprice)) AS DECIMAL(18,2))) AS DOUBLE) AS total_winsorized
-          |FROM orders CROSS JOIN bounds
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-      "text_zipf_slope" ->
-        """WITH tv AS (
-          |  SELECT w, c, ROW_NUMBER() OVER (ORDER BY c DESC, w ASC) AS rank FROM (
-          |    SELECT w, COUNT(*) AS c FROM (
-          |      SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-          |    GROUP BY w ORDER BY c DESC, w ASC LIMIT 100)),
-          |q AS (
-          |  SELECT CAST(ROUND(LN(CAST(rank AS DOUBLE)), 6) AS DECIMAL(18,6)) AS x,
-          |         CAST(ROUND(LN(CAST(c AS DOUBLE)), 6) AS DECIMAL(18,6)) AS y
-          |  FROM tv)
-          |SELECT COUNT(*) AS n,
-          |  (CAST(SUM(x * y) AS DOUBLE) - CAST(SUM(x) AS DOUBLE) * CAST(SUM(y) AS DOUBLE) / COUNT(*))
-          |    / (CAST(SUM(x * x) AS DOUBLE) - CAST(SUM(x) AS DOUBLE) * CAST(SUM(x) AS DOUBLE) / COUNT(*)) AS zipf_slope
-          |FROM q""".stripMargin,
-      "text_inverted_postings" ->
-        """SELECT w, COUNT(*) AS df, string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
-          |FROM (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-          |      FROM documents WHERE doc_id % 10 = 0)
-          |GROUP BY w HAVING COUNT(*) >= 2 ORDER BY w""".stripMargin,
-      "text_bm25_topk" -> bm25ScoredSql(K),
-      "text_bpe_merges" -> graft.operators.Bpe.oracleSql(4),
-      "text_bpe_token_counts" -> graft.operators.Bpe.encodeOracleSql(4),
-      "text_bytebpe_merges" -> graft.operators.ByteBpe.oracleSql(4),
-      "text_bytebpe_token_counts" -> graft.operators.ByteBpe.encodeOracleSql(4),
-      "text_unigram_vocab" -> graft.operators.Unigram.vocabOracleSql(),
-      "text_unigram_token_counts" -> graft.operators.Unigram.encodeOracleSql(),
-      "text_token_fertility" -> graft.operators.Bpe.fertilityOracleSql(4),
-      "text_unigram_fertility" -> graft.operators.Unigram.fertilityOracleSql(),
-      "events_hourly_anomaly" ->
-        """WITH hourly AS (
-          |  SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-          |    event_type, COUNT(*) AS n
-          |  FROM events GROUP BY 1, 2)
-          |SELECT event_type, hour_epoch, n, trail_avg,
-          |  CAST(CASE WHEN n > trail_avg * 1.5 OR n < trail_avg * 0.5 THEN 1 ELSE 0 END AS INT) AS is_anomaly
-          |FROM (
-          |  SELECT event_type, hour_epoch, n,
-          |    COALESCE(SUM(n) OVER w, 0) / 24.0 AS trail_avg,
-          |    MIN(hour_epoch) OVER (PARTITION BY event_type) AS first_epoch
-          |  FROM hourly
-          |  WINDOW w AS (PARTITION BY event_type ORDER BY hour_epoch
-          |               RANGE BETWEEN 86400 PRECEDING AND 1 PRECEDING))
-          |WHERE hour_epoch >= first_epoch + 86400
-          |ORDER BY event_type, hour_epoch""".stripMargin,
-      "events_ohlc_hourly" ->
-        """WITH b AS (
-          |  SELECT event_type,
-          |    CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS bucket,
-          |    CAST(value AS DECIMAL(18,3)) AS v,
-          |    ROW_NUMBER() OVER w AS rn,
-          |    COUNT(*) OVER (PARTITION BY event_type, CAST(epoch(date_trunc('hour', ts)) AS BIGINT)) AS nb
-          |  FROM events
-          |  WINDOW w AS (PARTITION BY event_type, CAST(epoch(date_trunc('hour', ts)) AS BIGINT)
-          |               ORDER BY (epoch_ns(ts) // 1000) ASC, event_id ASC)
-          |)
-          |SELECT event_type, bucket,
-          |  CAST(MAX(CASE WHEN rn = 1 THEN v END) AS DOUBLE) AS open,
-          |  CAST(MAX(v) AS DOUBLE) AS high,
-          |  CAST(MIN(v) AS DOUBLE) AS low,
-          |  CAST(MAX(CASE WHEN rn = nb THEN v END) AS DOUBLE) AS close,
-          |  COUNT(*) AS n
-          |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-      "drift_psi_value" ->
-        """WITH binned AS (
-          |  SELECT event_type,
-          |    CAST(LEAST(FLOOR(value / CAST('50.0' AS DOUBLE)), CAST('9.0' AS DOUBLE)) AS BIGINT) AS bin,
-          |    (day(ts) <= 15) AS is_ref
-          |  FROM events
-          |), counts AS (
-          |  SELECT event_type, bin,
-          |    CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
-          |    CAST(SUM(CASE WHEN NOT is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
-          |  FROM binned GROUP BY 1, 2
-          |), tot AS (
-          |  SELECT event_type,
-          |    CAST(SUM(n_ref) AS BIGINT) AS t_ref, CAST(SUM(n_cur) AS BIGINT) AS t_cur
-          |  FROM counts GROUP BY 1
-          |), terms AS (
-          |  SELECT c.event_type,
-          |    (CAST(n_ref AS DOUBLE) + CAST('0.5' AS DOUBLE)) / (CAST(t_ref AS DOUBLE) + CAST('5.0' AS DOUBLE)) AS pa,
-          |    (CAST(n_cur AS DOUBLE) + CAST('0.5' AS DOUBLE)) / (CAST(t_cur AS DOUBLE) + CAST('5.0' AS DOUBLE)) AS pb
-          |  FROM counts c JOIN tot t USING (event_type)
-          |)
-          |SELECT event_type,
-          |  CAST(SUM(CAST(ROUND((pa - pb) * LN(pa / pb), 9) AS DECIMAL(28,9))) AS DOUBLE) AS psi
-          |FROM terms GROUP BY event_type ORDER BY event_type""".stripMargin,
-      "join_q4_late_orders" ->
-        """SELECT o_orderpriority, COUNT(*) AS n_late_orders
-          |FROM orders o
-          |WHERE o_orderdate BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1995-06-30'
-          |  AND EXISTS (SELECT 1 FROM lineitem l
-          |    WHERE l.l_orderkey = o.o_orderkey
-          |      AND l.l_shipdate > o.o_orderdate + INTERVAL 75 DAY)
-          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-      "user_behavior_simjoin" ->
-        """WITH bg AS (
-          |  SELECT user_id, prev || '>' || event_type AS bg
-          |  FROM (
-          |    SELECT user_id, event_type,
-          |      LAG(event_type) OVER (PARTITION BY user_id
-          |        ORDER BY (epoch_ns(ts) // 1000000000) ASC, event_id ASC) AS prev
-          |    FROM events WHERE user_id % 3 = 0)
-          |  WHERE prev IS NOT NULL),
-          |ws AS (SELECT user_id, list_distinct(list(bg)) AS wset FROM bg GROUP BY user_id)
-          |SELECT id_a, id_b, jac FROM (
-          |  SELECT a.user_id AS id_a, b.user_id AS id_b,
-          |    CAST(len(list_intersect(a.wset, b.wset)) AS DOUBLE)
-          |      / CAST(len(list_distinct(list_cat(a.wset, b.wset))) AS DOUBLE) AS jac
-          |  FROM ws a JOIN ws b ON a.user_id < b.user_id)
-          |WHERE jac >= CAST('0.96' AS DOUBLE) ORDER BY id_a, id_b""".stripMargin,
-      "events_concurrency_peak" ->
-        """WITH sess AS (
-          |  SELECT user_id, session_idx,
-          |    MIN(tse) AS session_start, MAX(tse) AS session_end
-          |  FROM (
-          |    SELECT user_id, tse,
-          |      SUM(CASE WHEN prev IS NOT NULL AND tse - prev > 1800 THEN 1 ELSE 0 END)
-          |        OVER (PARTITION BY user_id ORDER BY tse ASC, event_id ASC
-          |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-          |    FROM (
-          |      SELECT user_id, event_id, (epoch_ns(ts) // 1000000000) AS tse,
-          |        LAG((epoch_ns(ts) // 1000000000)) OVER (PARTITION BY user_id
-          |          ORDER BY (epoch_ns(ts) // 1000000000) ASC, event_id ASC) AS prev
-          |      FROM events
-          |    )
-          |  ) GROUP BY user_id, session_idx),
-          |mins AS (
-          |  SELECT unnest(generate_series(
-          |    CAST(FLOOR(session_start / 60) AS BIGINT),
-          |    CAST(FLOOR(session_end / 60) AS BIGINT))) AS minute
-          |  FROM sess),
-          |conc AS (SELECT minute, CAST(COUNT(*) AS BIGINT) AS concurrent
-          |         FROM mins GROUP BY minute)
-          |SELECT epoch_day, peak_concurrent, n_active_minutes,
-          |  DATE '1970-01-01' + CAST(epoch_day AS INT) AS day
-          |FROM (
-          |  SELECT CAST(FLOOR(minute / 1440) AS BIGINT) AS epoch_day,
-          |    MAX(concurrent) AS peak_concurrent,
-          |    CAST(COUNT(*) AS BIGINT) AS n_active_minutes
-          |  FROM conc GROUP BY 1)
-          |ORDER BY epoch_day""".stripMargin,
-      "events_ab_ttest" ->
-        """WITH g AS (
-          |  SELECT
-          |    CAST(SUM(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS n_a,
-          |    SUM(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(18,3)) END) AS sa,
-          |    SUM(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(18,3)) * CAST(value AS DECIMAL(18,3)) END) AS saa,
-          |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS n_b,
-          |    SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,3)) END) AS sb,
-          |    SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,3)) * CAST(value AS DECIMAL(18,3)) END) AS sbb
-          |  FROM events WHERE event_type IN ('click', 'purchase')),
-          |m AS (
-          |  SELECT n_a, n_b,
-          |    CAST(sa AS DOUBLE) / CAST(n_a AS DOUBLE) AS ma,
-          |    CAST(sb AS DOUBLE) / CAST(n_b AS DOUBLE) AS mb,
-          |    (CAST(n_a AS DOUBLE) * CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
-          |      / (CAST(n_a AS DOUBLE) * (CAST(n_a AS DOUBLE) - 1.0)) AS va,
-          |    (CAST(n_b AS DOUBLE) * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE))
-          |      / (CAST(n_b AS DOUBLE) * (CAST(n_b AS DOUBLE) - 1.0)) AS vb
-          |  FROM g),
-          |se AS (
-          |  SELECT n_a, n_b, ma, mb,
-          |    va / CAST(n_a AS DOUBLE) AS sea, vb / CAST(n_b AS DOUBLE) AS seb
-          |  FROM m)
-          |SELECT n_a, n_b, ROUND(ma, 6) AS mean_a, ROUND(mb, 6) AS mean_b,
-          |  ROUND((ma - mb) / SQRT(sea + seb), 6) AS t_stat,
-          |  ROUND((sea + seb) * (sea + seb)
-          |    / (sea * sea / (CAST(n_a AS DOUBLE) - 1.0)
-          |      + seb * seb / (CAST(n_b AS DOUBLE) - 1.0)), 6) AS dof
-          |FROM se""".stripMargin,
-      "agg_rfm_segments" ->
-        s"""WITH cust AS (
-           |  SELECT o_custkey, MAX(o_orderdate) AS last_o, COUNT(*) AS freq,
-           |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS mon
-           |  FROM orders GROUP BY o_custkey),
-           |mx AS (SELECT MAX(o_orderdate) AS maxd FROM orders),
-           |c2 AS (
-           |  SELECT o_custkey, freq, mon, CAST(mon AS DOUBLE) AS mon_d,
-           |    CAST(date_diff('day', CAST(last_o AS DATE), CAST(maxd AS DATE)) AS BIGINT) AS rec_days
-           |  FROM cust CROSS JOIN mx),
-           |th AS (
-           |  SELECT quantile_cont(rec_days, ${DuckSql.fmt(0.5)}) AS r50,
-           |    quantile_cont(freq, ${DuckSql.fmt(0.5)}) AS f50,
-           |    quantile_cont(mon_d, ${DuckSql.fmt(0.5)}) AS m50
-           |  FROM c2)
-           |SELECT (CASE WHEN rec_days <= r50 THEN 'R' ELSE 'r' END
-           |     || CASE WHEN freq > f50 THEN 'F' ELSE 'f' END
-           |     || CASE WHEN mon_d > m50 THEN 'M' ELSE 'm' END) AS segment,
-           |  CAST(COUNT(*) AS BIGINT) AS n_customers,
-           |  CAST(SUM(mon) AS DOUBLE) AS revenue
-           |FROM c2 CROSS JOIN th
-           |GROUP BY 1 ORDER BY 1""".stripMargin,
-      // --- round-4b
-      "rerank_rrf_hybrid" ->
-        s"""WITH lex_scored AS (${bm25ScoredSql(20)}),
-           |lex AS (SELECT doc_id,
-           |          CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id ASC) AS INT) AS rank_a
-           |        FROM lex_scored),
-           |vec_scored AS (
-           |  SELECT vec_id AS doc_id, ${DuckSql.cosineSimLit("embedding", Q64)} AS cos_sim
-           |  FROM embeddings ORDER BY cos_sim DESC, doc_id ASC LIMIT 20),
-           |vec AS (SELECT doc_id,
-           |          CAST(ROW_NUMBER() OVER (ORDER BY cos_sim DESC, doc_id ASC) AS INT) AS rank_b
-           |        FROM vec_scored)
-           |SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id, rank_a, rank_b,
-           |  COALESCE(1000000000000 // (60 + rank_a), 0)
-           |    + COALESCE(1000000000000 // (60 + rank_b), 0) AS rrf_score
-           |FROM lex l FULL OUTER JOIN vec v ON l.doc_id = v.doc_id
-           |ORDER BY rrf_score DESC, doc_id ASC LIMIT $K""".stripMargin,
-      "rerank_mmr_diverse" -> mmrSql(nCand = 20, k = 5, lambda = 0.7),
-      "scd2_user_event_history" ->
-        """SELECT user_id, event_type, valid_from,
-          |  COALESCE(valid_to0, TIMESTAMP '2200-01-01 00:00:00') AS valid_to,
-          |  CAST(CASE WHEN valid_to0 IS NULL THEN 1 ELSE 0 END AS INT) AS is_current
-          |FROM (
-          |  SELECT user_id, event_type, ts AS valid_from,
-          |    LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to0
-          |  FROM (
-          |    SELECT user_id, event_type, ts, event_id,
-          |      LAG(event_type) OVER w AS prev_type,
-          |      ROW_NUMBER() OVER w AS rn
-          |    FROM events WHERE user_id % 20 = 0
-          |    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-          |  WHERE rn = 1 OR prev_type IS DISTINCT FROM event_type)
-          |ORDER BY user_id, valid_from, event_type, valid_to""".stripMargin,
-      "store_zonemap_prune" ->
-        s"""WITH b AS (
-           |  SELECT *, CAST(year(l_shipdate) * 100 + month(l_shipdate) AS BIGINT) AS bucket
-           |  FROM lineitem),
-           |stats AS (SELECT bucket, MIN(l_shipdate) AS mn, MAX(l_shipdate) AS mx
-           |          FROM b GROUP BY bucket),
-           |cand AS (SELECT bucket FROM stats
-           |         WHERE mx >= TIMESTAMP '1996-03-01' AND mn < TIMESTAMP '1996-06-01')
-           |SELECT COUNT(*) AS n_rows,
-           |  ${drevenueSql("l_extendedprice", "l_discount")} AS revenue,
-           |  (SELECT COUNT(*) FROM cand) AS n_buckets_scanned
-           |FROM lineitem
-           |WHERE l_shipdate >= TIMESTAMP '1996-03-01' AND l_shipdate < TIMESTAMP '1996-06-01'""".stripMargin,
-      "profile_lineitem" -> {
-        def row(c: String, minNum: String, maxNum: String,
-            minStr: String, maxStr: String) =
-          s"""SELECT '$c' AS col_name,
-             |  CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-             |  COUNT(DISTINCT $c) AS n_distinct,
-             |  $minNum AS min_num, $maxNum AS max_num,
-             |  $minStr AS min_str, $maxStr AS max_str
-             |FROM lineitem""".stripMargin
-        def num(c: String) = row(c,
-          s"CAST(MIN($c) AS DOUBLE)", s"CAST(MAX($c) AS DOUBLE)",
-          "CAST(NULL AS VARCHAR)", "CAST(NULL AS VARCHAR)")
-        def str(c: String) = row(c,
-          "CAST(NULL AS DOUBLE)", "CAST(NULL AS DOUBLE)", s"MIN($c)", s"MAX($c)")
-        def ts(c: String) = row(c,
-          s"CAST(CAST(epoch(MIN($c)) AS BIGINT) AS DOUBLE)",
-          s"CAST(CAST(epoch(MAX($c)) AS BIGINT) AS DOUBLE)",
-          "CAST(NULL AS VARCHAR)", "CAST(NULL AS VARCHAR)")
-        Seq(num("l_orderkey"), num("l_quantity"), num("l_extendedprice"),
-          str("l_returnflag"), ts("l_shipdate"))
-          .mkString("", "\nUNION ALL ", "\nORDER BY col_name")
-      },
-      // approx profile (scale plan): portable stats + literal sanity flag
-      // (the Spark side computes the real flag from the live sketch)
-      "profile_approx" -> {
-        def row(c: String, minNum: String, maxNum: String,
-            minStr: String, maxStr: String) =
-          s"""SELECT '$c' AS col_name,
-             |  CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-             |  1 AS approx_sane,
-             |  $minNum AS min_num, $maxNum AS max_num,
-             |  $minStr AS min_str, $maxStr AS max_str
-             |FROM lineitem""".stripMargin
-        def num(c: String) = row(c,
-          s"CAST(MIN($c) AS DOUBLE)", s"CAST(MAX($c) AS DOUBLE)",
-          "CAST(NULL AS VARCHAR)", "CAST(NULL AS VARCHAR)")
-        def str(c: String) = row(c,
-          "CAST(NULL AS DOUBLE)", "CAST(NULL AS DOUBLE)", s"MIN($c)", s"MAX($c)")
-        def ts(c: String) = row(c,
-          s"CAST(CAST(epoch(MIN($c)) AS BIGINT) AS DOUBLE)",
-          s"CAST(CAST(epoch(MAX($c)) AS BIGINT) AS DOUBLE)",
-          "CAST(NULL AS VARCHAR)", "CAST(NULL AS VARCHAR)")
-        Seq(num("l_orderkey"), num("l_quantity"), num("l_extendedprice"),
-          str("l_returnflag"), ts("l_shipdate"))
-          .mkString("", "\nUNION ALL ", "\nORDER BY col_name")
-      },
-      // audit arm: exact stats + literal within-bound flags (the
-      // agg_sketches device — the Spark side computes the real flag)
-      "profile_approx_audit" -> {
-        def row(c: String, minNum: String, maxNum: String,
-            minStr: String, maxStr: String) =
-          s"""SELECT '$c' AS col_name,
-             |  CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-             |  COUNT(DISTINCT $c) AS n_distinct_exact,
-             |  1 AS hll_within_bound,
-             |  $minNum AS min_num, $maxNum AS max_num,
-             |  $minStr AS min_str, $maxStr AS max_str
-             |FROM lineitem""".stripMargin
-        def num(c: String) = row(c,
-          s"CAST(MIN($c) AS DOUBLE)", s"CAST(MAX($c) AS DOUBLE)",
-          "CAST(NULL AS VARCHAR)", "CAST(NULL AS VARCHAR)")
-        def str(c: String) = row(c,
-          "CAST(NULL AS DOUBLE)", "CAST(NULL AS DOUBLE)", s"MIN($c)", s"MAX($c)")
-        def ts(c: String) = row(c,
-          s"CAST(CAST(epoch(MIN($c)) AS BIGINT) AS DOUBLE)",
-          s"CAST(CAST(epoch(MAX($c)) AS BIGINT) AS DOUBLE)",
-          "CAST(NULL AS VARCHAR)", "CAST(NULL AS VARCHAR)")
-        Seq(num("l_orderkey"), num("l_quantity"), num("l_extendedprice"),
-          str("l_returnflag"), ts("l_shipdate"))
-          .mkString("", "\nUNION ALL ", "\nORDER BY col_name")
-      },
-      "audit_referential" ->
-        """WITH li_aug AS (
-          |  SELECT l_orderkey FROM lineitem
-          |  UNION ALL
-          |  SELECT -l_orderkey - 1 AS l_orderkey
-          |  FROM (SELECT l_orderkey, l_linenumber FROM lineitem
-          |        ORDER BY l_orderkey, l_linenumber LIMIT 3)),
-          |emb_aug AS (
-          |  SELECT vec_id FROM embeddings
-          |  UNION ALL
-          |  SELECT vec_id FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 2))
-          |SELECT * FROM (
-          |  -- NOT EXISTS, not NOT IN: the operator is an anti join, which
-          |  -- keeps NULL-keyed child rows as orphans; NOT IN would return
-          |  -- NULL (drop them) the moment either side holds a NULL
-          |  SELECT 'lineitem_orphan_order' AS check_name, COUNT(*) AS n_bad
-          |  FROM li_aug l WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
-          |  UNION ALL
-          |  SELECT 'orders_orphan_customer', COUNT(*)
-          |  FROM orders o WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-          |  UNION ALL
-          |  SELECT 'customer_orphan_nation', COUNT(*)
-          |  FROM customer c WHERE NOT EXISTS (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey)
-          |  UNION ALL
-          |  SELECT 'embeddings_dup_pk', COUNT(*)
-          |  FROM (SELECT vec_id FROM emb_aug GROUP BY vec_id HAVING COUNT(*) > 1)
-          |  UNION ALL
-          |  SELECT 'orders_dup_pk', COUNT(*)
-          |  FROM (SELECT o_orderkey FROM orders GROUP BY o_orderkey HAVING COUNT(*) > 1)
-          |) ORDER BY check_name""".stripMargin,
-      // dt in integer SECONDS (epoch_ns // 1e9 mirrors Spark's ts.cast(long)
-      // floor); products in exact DECIMAL(18,3) × BIGINT whose summed
-      // unscaled value stays under 2^53, so the decimal→double cast is
-      // correctly rounded (hence identical) in both engines
-      "events_time_weighted_avg" ->
-        """SELECT user_id,
-          |  CAST(SUM(CAST(value AS DECIMAL(18,3)) * dt_s) AS DOUBLE)
-          |    / CAST(SUM(dt_s) AS DOUBLE) AS twa,
-          |  CAST(SUM(dt_s) AS BIGINT) AS total_dt_s,
-          |  COUNT(*) AS n_intervals
-          |FROM (
-          |  SELECT user_id, value,
-          |    LEAD(tse) OVER w - tse AS dt_s
-          |  FROM (SELECT user_id, value, event_id, (epoch_ns(ts) // 1000000000) AS tse
-          |        FROM events WHERE user_id % 10 = 0)
-          |  WINDOW w AS (PARTITION BY user_id ORDER BY tse, event_id))
-          |WHERE dt_s IS NOT NULL
-          |GROUP BY user_id HAVING SUM(dt_s) > 0 ORDER BY user_id""".stripMargin,
-      "sample_kfold_assign" ->
-        s"""SELECT fold, COUNT(*) AS n,
-           |  CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
-           |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-           |FROM (SELECT lang, n_chars,
-           |        (${Dedup.md5Int32Sql("CAST(doc_id AS VARCHAR)")}) % 5 AS fold
-           |      FROM documents)
-           |GROUP BY fold ORDER BY fold""".stripMargin,
-      "graph_similarity_summary" -> {
-        val cs = DuckSql.cosineSimCols("a.embedding", "b.embedding", Dim)
-        s"""WITH ve AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % ${modSql(200)} = 0),
-           |edges AS (
-           |  SELECT a.vec_id AS src, b.vec_id AS dst
-           |  FROM ve a JOIN ve b ON a.vec_id < b.vec_id
-           |  WHERE $cs >= ${DuckSql.fmt(0.25)}),
-           |deg AS (
-           |  SELECT node, COUNT(*) AS degree
-           |  FROM (SELECT src AS node FROM edges UNION ALL SELECT dst AS node FROM edges)
-           |  GROUP BY node)
-           |SELECT
-           |  (SELECT COUNT(*) FROM deg) AS n_nodes,
-           |  (SELECT COUNT(*) FROM edges) AS n_edges,
-           |  (SELECT COUNT(*) FROM edges e1
-           |     JOIN edges e2 ON e1.dst = e2.src
-           |     JOIN edges e3 ON e1.src = e3.src AND e2.dst = e3.dst) AS n_triangles,
-           |  (SELECT MAX(degree) FROM deg) AS max_degree""".stripMargin
-      },
-      "vec_pca_top_component" -> pcaSql(dims = 8, iters = 3),
-      "graph_pagerank" -> {
-        val cs = DuckSql.cosineSimCols("a.embedding", "b.embedding", Dim)
-        val baseSql =
-          "(CAST(1 AS DOUBLE) - CAST('0.85' AS DOUBLE)) / CAST((SELECT n FROM nn) AS DOUBLE)"
-        val iters = (1 to 3).map { i =>
-          val prev = if (i == 1) "pr0" else s"pr${i - 1}"
-          // floor-quantized nano-unit contributions: FLOOR on a double
-          // product is the identical IEEE op in both engines (ROUND is not
-          // — Spark HALF_UPs the exact decimal, DuckDB scales-and-rounds,
-          // and they split at half boundaries)
-          s"""it$i AS MATERIALIZED (
-             |  SELECT d.dst AS node,
-             |    SUM(CAST(FLOOR((p.pr / p.deg) * 1e9) AS BIGINT)) AS s9
-             |  FROM dir d JOIN $prev p ON d.src = p.node GROUP BY 1),
-             |pr$i AS MATERIALIZED (
-             |  SELECT q.node, q.deg,
-             |    (FLOOR(($baseSql + CAST('0.85' AS DOUBLE) * (CAST(t.s9 AS DOUBLE) / 1e9)) * 1e9) / 1e9) AS pr
-             |  FROM it$i t JOIN deg q ON q.node = t.node)""".stripMargin
-        }.mkString(",\n")
-        // MATERIALIZED: dir is referenced by deg + every it_i, edges0 twice
-        // by dir, deg by every pr_i — per-reference inlining re-ran the
-        // 64-dim similarity cross join ~8x (2.8 s in the r16 driver sweep).
-        s"""WITH ve AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings WHERE vec_id % ${modSql(200)} = 0),
-           |edges0 AS MATERIALIZED (
-           |  SELECT a.vec_id AS src, b.vec_id AS dst
-           |  FROM ve a JOIN ve b ON a.vec_id < b.vec_id
-           |  WHERE $cs >= ${DuckSql.fmt(0.25)}),
-           |dir AS MATERIALIZED (SELECT src, dst FROM edges0 UNION ALL SELECT dst AS src, src AS dst FROM edges0),
-           |deg AS MATERIALIZED (SELECT src AS node, COUNT(*) AS deg FROM dir GROUP BY 1),
-           |nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM deg),
-           |pr0 AS MATERIALIZED (
-           |  SELECT node, deg,
-           |    (FLOOR((CAST(1 AS DOUBLE) / CAST((SELECT n FROM nn) AS DOUBLE)) * 1e9) / 1e9) AS pr
-           |  FROM deg),
-           |$iters
-           |SELECT node, pr FROM pr3 ORDER BY node""".stripMargin
-      },
-      "graph_bfs_hops" -> {
-        val cs = DuckSql.cosineSimCols("a.embedding", "b.embedding", Dim)
-        val steps = (1 to 3).map { i =>
-          s"""d$i AS MATERIALIZED (
-             |  SELECT node, MIN(hop) AS hop FROM (
-             |    SELECT node, hop FROM d${i - 1}
-             |    UNION ALL
-             |    SELECT e.dst AS node, CAST($i AS BIGINT) AS hop
-             |    FROM dir e JOIN (SELECT node FROM d${i - 1} WHERE hop = ${i - 1}) f
-             |      ON e.src = f.node)
-             |  GROUP BY node)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH ve AS MATERIALIZED (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id % ${modSql(250)} = 0),
-           |edges0 AS MATERIALIZED (
-           |  SELECT a.vec_id AS src, b.vec_id AS dst
-           |  FROM ve a JOIN ve b ON a.vec_id < b.vec_id
-           |  WHERE $cs >= ${DuckSql.fmt(0.25)}),
-           |dir AS MATERIALIZED (SELECT src, dst FROM edges0 UNION ALL SELECT dst AS src, src AS dst FROM edges0),
-           |d0 AS MATERIALIZED (SELECT DISTINCT vec_id AS node, CAST(0 AS BIGINT) AS hop FROM ve WHERE label = 1),
-           |$steps
-           |SELECT node, hop FROM d3 ORDER BY node""".stripMargin
-      },
-      "graph_label_prop" -> {
-        val cs = DuckSql.cosineSimCols("a.embedding", "b.embedding", Dim)
-        val rounds = (1 to 2).map { i =>
-          val prev = if (i == 1) "seeds" else s"l${i - 1}"
-          s"""v$i AS MATERIALIZED (
-             |  SELECT d.dst, l.label, COUNT(*) AS cnt
-             |  FROM dir d JOIN $prev l ON d.src = l.node GROUP BY d.dst, l.label),
-             |w$i AS MATERIALIZED (
-             |  SELECT dst AS node, label FROM (
-             |    SELECT dst, label,
-             |      ROW_NUMBER() OVER (PARTITION BY dst ORDER BY cnt DESC, label ASC) AS rn
-             |    FROM v$i) WHERE rn = 1),
-             |l$i AS MATERIALIZED (
-             |  SELECT node, label FROM seeds
-             |  UNION ALL
-             |  SELECT node, label FROM w$i w
-             |  WHERE NOT EXISTS (SELECT 1 FROM seeds s WHERE s.node = w.node))""".stripMargin
-        }.mkString(",\n")
-        s"""WITH ve AS MATERIALIZED (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id % ${modSql(250)} = 0),
-           |edges0 AS MATERIALIZED (
-           |  SELECT a.vec_id AS src, b.vec_id AS dst
-           |  FROM ve a JOIN ve b ON a.vec_id < b.vec_id
-           |  WHERE $cs >= ${DuckSql.fmt(0.25)}),
-           |dir AS MATERIALIZED (SELECT src, dst FROM edges0 UNION ALL SELECT dst AS src, src AS dst FROM edges0),
-           |seeds AS MATERIALIZED (SELECT vec_id AS node, CAST(label AS BIGINT) AS label
-           |          FROM ve WHERE vec_id % (4 * ${modSql(250)}) = 0),
-           |$rounds
-           |SELECT node, label FROM l2 ORDER BY node""".stripMargin
-      },
-      "stats_welch_value" -> {
-        val one = DuckSql.fmt(1.0)
-        s"""WITH g AS (
-           |  SELECT event_type AS grp, COUNT(*) AS n,
-           |    SUM(CAST(round(value, 3) AS DECIMAL(18,3))) AS sx,
-           |    SUM(CAST(round(round(value, 3) * round(value, 3), 6) AS DECIMAL(18,6))) AS sxx
-           |  FROM events GROUP BY event_type),
-           |b AS (
-           |  SELECT grp, n, sx, sxx,
-           |    SUM(n) OVER () - n AS rn,
-           |    SUM(sx) OVER () - sx AS rsx,
-           |    SUM(sxx) OVER () - sxx AS rsxx
-           |  FROM g),
-           |c AS (
-           |  SELECT grp, n,
-           |    CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS m1,
-           |    CAST(rsx AS DOUBLE) / CAST(rn AS DOUBLE) AS m2,
-           |    ((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-           |      / (CAST(n AS DOUBLE) - $one)) / CAST(n AS DOUBLE) AS q1,
-           |    ((CAST(rsxx AS DOUBLE) - CAST(rsx AS DOUBLE) * CAST(rsx AS DOUBLE) / CAST(rn AS DOUBLE))
-           |      / (CAST(rn AS DOUBLE) - $one)) / CAST(rn AS DOUBLE) AS q2,
-           |    CAST(n AS DOUBLE) AS nd, CAST(rn AS DOUBLE) AS rnd
-           |  FROM b)
-           |SELECT grp, n, round(m1, 6) AS mean,
-           |  round((m1 - m2) / sqrt(q1 + q2), 6) AS t_welch,
-           |  round((q1 + q2) * (q1 + q2) /
-           |    (q1 * q1 / (nd - $one) + q2 * q2 / (rnd - $one)), 6) AS df_welch
-           |FROM c ORDER BY grp""".stripMargin
-      },
-      "agg_equidepth_hist" -> {
-        val k = 8
-        val bs = (1 until k).map(i =>
-          s"quantile_cont(o_totalprice, ${DuckSql.fmt(i.toDouble / k)}) AS b$i").mkString(", ")
-        val cls = (1 until k).map(i =>
-          s"(CASE WHEN o_totalprice >= b$i THEN 1 ELSE 0 END)").mkString(" + ")
-        s"""WITH bounds AS (SELECT $bs FROM orders)
-           |SELECT CAST($cls AS BIGINT) AS bucket, COUNT(*) AS n,
-           |  MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi
-           |FROM orders, bounds
-           |GROUP BY bucket ORDER BY bucket""".stripMargin
-      },
-      "events_ewma_hourly" -> {
-        val vals = (0 until 24).map(j =>
-          s"($j, ${DuckSql.fmt(math.pow(0.9, j))})").mkString(", ")
-        s"""WITH series AS (
-           |  SELECT event_type AS key, CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS bucket,
-           |    round(CAST(SUM(CAST(round(value, 3) AS DECIMAL(18,3))) AS DOUBLE)
-           |      / CAST(COUNT(*) AS DOUBLE), 6) AS x
-           |  FROM events GROUP BY 1, 2),
-           |weights(j, w) AS (VALUES $vals)
-           |SELECT c.key AS key, c.bucket AS bucket,
-           |  round(CAST(SUM(CAST(round(p.x * wt.w, 9) AS DECIMAL(18,9))) AS DOUBLE)
-           |    / CAST(SUM(CAST(round(wt.w, 9) AS DECIMAL(18,9))) AS DOUBLE), 6) AS ewma
-           |FROM series c CROSS JOIN weights wt
-           |JOIN series p ON p.key = c.key AND p.bucket = c.bucket - wt.j * 3600
-           |GROUP BY c.key, c.bucket ORDER BY key, bucket""".stripMargin
-      },
-      "ann_lsh_multiprobe_topk" -> {
-        val planes8 = Fixtures.Planes16.take(8)
-        val probes = graft.operators.Ann.multiProbeSigs(planes8, Q64).mkString(", ")
-        // per-row signature: disjoint power-of-two terms, so + ≡ bitwise OR
-        val sigSql = planes8.zipWithIndex.map { case (p, j) =>
-          s"(CASE WHEN ${DuckSql.dotLit("embedding", p)} >= 0.0 THEN ${1L << j} ELSE 0 END)"
-        }.mkString(" + ")
-        s"""SELECT vec_id, label, ${DuckSql.squaredL2Lit("embedding", Q64)} AS dist
-           |FROM (SELECT *, $sigSql AS sig FROM embeddings)
-           |WHERE sig IN ($probes)
-           |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin
-      },
-      "agg_mad_outliers" ->
-        s"""WITH med AS (
-           |  SELECT o_orderpriority, quantile_cont(o_totalprice, ${DuckSql.fmt(0.5)}) AS med
-           |  FROM orders GROUP BY o_orderpriority),
-           |mad AS (
-           |  SELECT o.o_orderpriority, MAX(m.med) AS med,
-           |    quantile_cont(ABS(o.o_totalprice - m.med), ${DuckSql.fmt(0.5)}) AS mad
-           |  FROM orders o JOIN med m ON o.o_orderpriority = m.o_orderpriority
-           |  GROUP BY o.o_orderpriority)
-           |SELECT o.o_orderpriority, MAX(d.med) AS med, MAX(d.mad) AS mad,
-           |  CAST(SUM(CASE WHEN ABS(o.o_totalprice - d.med) > ${DuckSql.fmt(2.0)} * d.mad
-           |                THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-           |  COUNT(*) AS n
-           |FROM orders o JOIN mad d ON o.o_orderpriority = d.o_orderpriority
-           |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin,
-      "text_chi2_lang_source" ->
-        """WITH rt AS (SELECT lang, COUNT(*) AS rt FROM documents GROUP BY lang),
-          |ct AS (SELECT source, COUNT(*) AS ct FROM documents GROUP BY source),
-          |obs AS (SELECT lang, source, COUNT(*) AS o FROM documents GROUP BY lang, source),
-          |nn AS (SELECT COUNT(*) AS nn FROM documents),
-          |cells AS (
-          |  SELECT r.lang, c.source, COALESCE(obs.o, 0) AS o,
-          |    CAST(r.rt * c.ct AS DOUBLE) / nn.nn AS e
-          |  FROM rt r CROSS JOIN ct c CROSS JOIN nn
-          |  LEFT JOIN obs ON obs.lang = r.lang AND obs.source = c.source)
-          |SELECT COUNT(*) AS n_cells,
-          |  CAST(SUM(CAST(ROUND((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e, 9)
-          |                AS DECIMAL(28,9))) AS DOUBLE) AS chi2
-          |FROM cells""".stripMargin,
-      "sample_token_budget_plan" ->
-        s"""SELECT lang, n_docs, tokens,
-           |  LEAST(1.0, ${DuckSql.fmt(50000.0)} / CAST(tokens AS DOUBLE)) AS rate,
-           |  ROUND(LEAST(1.0, ${DuckSql.fmt(50000.0)} / CAST(tokens AS DOUBLE)) * CAST(tokens AS DOUBLE), 3) AS expected_tokens
-           |FROM (
-           |  SELECT lang, COUNT(*) AS n_docs,
-           |    CAST(SUM(CAST(CEIL(CAST(length(text) AS DOUBLE) / 4.0) AS BIGINT)) AS BIGINT) AS tokens
-           |  FROM documents GROUP BY lang)
-           |ORDER BY lang""".stripMargin,
-      "sample_temperature_mix" ->
-        s"""WITH counts AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang),
-           |planw AS (SELECT lang, n_docs,
-           |    CAST(ROUND(POW(CAST(n_docs AS DOUBLE), ${DuckSql.fmt(0.3)}), 9) AS DECIMAL(18,9)) AS w
-           |  FROM counts),
-           |planq AS (SELECT lang, n_docs,
-           |    ROUND(CAST(w AS DOUBLE) / CAST(SUM(w) OVER () AS DOUBLE), 9) AS q
-           |  FROM planw),
-           |plan AS (SELECT lang, n_docs,
-           |    LEAST(1.0, ROUND(${DuckSql.fmt(1000.0)} * q / CAST(n_docs AS DOUBLE), 9)) AS rate
-           |  FROM planq),
-           |sampled AS (
-           |  SELECT d.lang, COUNT(*) AS n_sampled, CAST(SUM(d.doc_id) AS BIGINT) AS id_sum
-           |  FROM documents d JOIN plan p ON d.lang = p.lang
-           |  WHERE (${Dedup.md5Int32Sql("CAST(doc_id AS VARCHAR)")} % 1000000)
-           |    < CAST(FLOOR(rate * ${DuckSql.fmt(1000000.0)}) AS BIGINT)
-           |  GROUP BY d.lang)
-           |SELECT p.lang, p.n_docs, p.rate,
-           |  CAST(COALESCE(s.n_sampled, 0) AS BIGINT) AS n_sampled,
-           |  CAST(COALESCE(s.id_sum, 0) AS BIGINT) AS id_sum
-           |FROM plan p LEFT JOIN sampled s ON p.lang = s.lang
-           |ORDER BY p.lang""".stripMargin,
-      "batch_length_buckets" ->
-        """WITH lens AS (
-          |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS len FROM documents),
-          |b AS (
-          |  SELECT CAST(FLOOR(len / 16) AS BIGINT) AS bucket, COUNT(*) AS n_docs,
-          |    MAX(len) AS max_len, CAST(SUM(len) AS BIGINT) AS sum_len
-          |  FROM lens GROUP BY 1)
-          |SELECT bucket, n_docs, max_len, sum_len,
-          |  CAST(CEIL(CAST(n_docs AS DOUBLE) / 32.0) AS BIGINT) AS n_batches,
-          |  CAST(n_docs * max_len AS BIGINT) AS padded_tokens,
-          |  CAST(n_docs * max_len - sum_len AS BIGINT) AS pad_waste,
-          |  ROUND(CAST(sum_len AS DOUBLE) / CAST(n_docs * max_len AS DOUBLE), 9) AS efficiency
-          |FROM b ORDER BY bucket""".stripMargin,
-      "sample_interleave_sources" ->
-        """WITH idx AS (
-          |  SELECT source,
-          |    CAST(ROW_NUMBER() OVER (ORDER BY source) AS BIGINT) AS source_idx,
-          |    CAST(COUNT(*) OVER () AS BIGINT) AS n_sources
-          |  FROM (SELECT DISTINCT source FROM documents)),
-          |ranked AS (
-          |  SELECT doc_id, source,
-          |    CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS r
-          |  FROM documents)
-          |SELECT (r.r - 1) * i.n_sources + (i.source_idx - 1) AS pos, r.source, r.doc_id
-          |FROM ranked r JOIN idx i ON r.source = i.source
-          |ORDER BY pos, r.source LIMIT 100""".stripMargin,
-      "rank_auc_classifier" ->
-        s"""WITH g AS (
-           |  SELECT score, SUM(pos) AS pos_g, SUM(1 - pos) AS neg_g FROM (
-           |    SELECT CAST(list_sum(list_transform(string_split(text, ' '), w -> (${Dedup.md5Int32Sql("w")} % 21) - 10)) AS BIGINT) AS score,
-           |      CAST(lang = 'en' AS INT) AS pos
-           |    FROM documents) GROUP BY score),
-           |b AS (
-           |  SELECT pos_g, neg_g,
-           |    COALESCE(SUM(neg_g) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS neg_below
-           |  FROM g)
-           |SELECT CAST(SUM(pos_g) AS BIGINT) AS n_pos, CAST(SUM(neg_g) AS BIGINT) AS n_neg,
-           |  CAST(2 * SUM(pos_g * neg_below) + SUM(pos_g * neg_g) AS DOUBLE)
-           |    / CAST(2 * SUM(pos_g) * SUM(neg_g) AS DOUBLE) AS auc
-           |FROM b""".stripMargin,
-      "skyline_orders" ->
-        """WITH o AS (
-          |  SELECT o_orderkey, o_totalprice, o_orderdate,
-          |    CAST(ROUND(o_totalprice * 100) AS BIGINT) AS xc,
-          |    CAST(epoch(o_orderdate) AS BIGINT) AS ye
-          |  FROM orders WHERE o_custkey % 10 = 0)
-          |SELECT o_orderkey, o_totalprice, o_orderdate FROM o r
-          |WHERE NOT EXISTS (
-          |  SELECT 1 FROM o s
-          |  WHERE s.xc <= r.xc AND s.ye >= r.ye AND (s.xc < r.xc OR s.ye > r.ye))
-          |ORDER BY o_orderkey""".stripMargin,
-      "scd2_temporal_join" ->
-        """WITH hist AS (
-          |  SELECT user_id AS h_user, event_type AS state, valid_from,
-          |    COALESCE(valid_to0, TIMESTAMP '9999-12-31 00:00:00') AS valid_to
-          |  FROM (
-          |    SELECT user_id, event_type, ts AS valid_from,
-          |      LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to0
-          |    FROM (
-          |      SELECT user_id, event_type, ts, event_id,
-          |        LAG(event_type) OVER w AS prev_type,
-          |        ROW_NUMBER() OVER w AS rn
-          |      FROM events WHERE user_id % 20 = 0 AND event_type <> 'purchase'
-          |      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-          |    WHERE rn = 1 OR prev_type IS DISTINCT FROM event_type))
-          |SELECT e.event_id, e.user_id, e.ts, h.state, h.valid_from AS state_since
-          |FROM events e
-          |LEFT JOIN hist h ON e.user_id = h.h_user
-          |  AND e.ts >= h.valid_from AND e.ts < h.valid_to
-          |WHERE e.user_id % 20 = 0 AND e.event_type = 'purchase'
-          |ORDER BY e.event_id""".stripMargin,
-      "sample_weighted_noreplace" ->
-        s"""SELECT doc_id, n_chars,
-           |  ROUND((-LN((CAST((${Dedup.md5Int32Sql("CAST(doc_id AS VARCHAR)")}) % 1048576 AS DOUBLE) + 1.0) / 1048577.0))
-           |    / LEAST(CAST(n_chars AS DOUBLE) / 500.0, 1.0), 6) AS es_key
-           |FROM documents ORDER BY es_key ASC, doc_id ASC LIMIT 50""".stripMargin,
-      "text_boilerplate_removal" ->
-        """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-          |base AS (SELECT doc_id, CAST(ceil(len(w) / 3.0) AS INT) AS n_segments, w FROM d),
-          |segs AS (
-          |  SELECT doc_id, struct_extract(s, 'pos') AS seg_pos, struct_extract(s, 'seg') AS seg
-          |  FROM (SELECT doc_id, unnest(list_transform(range(0, n_segments),
-          |          i -> {'pos': i, 'seg': array_to_string(w[i*3+1:i*3+3], ' ')})) AS s
-          |        FROM base)),
-          |common AS (SELECT seg FROM segs GROUP BY seg HAVING COUNT(DISTINCT doc_id) >= 3),
-          |kept AS (
-          |  SELECT doc_id, COUNT(*) AS n_kept,
-          |    string_agg(seg, ' ' ORDER BY seg_pos) AS clean_text
-          |  FROM segs WHERE seg NOT IN (SELECT seg FROM common)
-          |  GROUP BY doc_id)
-          |SELECT b.doc_id, b.n_segments,
-          |  CAST(b.n_segments - COALESCE(k.n_kept, 0) AS BIGINT) AS n_removed,
-          |  COALESCE(k.clean_text, '') AS clean_text
-          |FROM base b LEFT JOIN kept k ON b.doc_id = k.doc_id
-          |ORDER BY b.doc_id""".stripMargin,
-      "text_pmi_bigrams" -> {
-        def q(v: String) =
-          s"CAST(round(ln(CAST($v AS DOUBLE)), 9) AS DECIMAL(18,9))"
-        s"""WITH words_t AS (SELECT string_split(text, ' ') AS w FROM documents),
-           |grams AS (
-           |  SELECT w[i+1] AS x, w[i+2] AS y
-           |  FROM (SELECT w, unnest(range(0, len(w) - 1)) AS i
-           |        FROM words_t WHERE len(w) >= 2)),
-           |uni AS (SELECT unnest(w) AS t FROM words_t),
-           |cxy AS (SELECT x, y, COUNT(*) AS n FROM grams GROUP BY x, y),
-           |cx AS (SELECT t, COUNT(*) AS c FROM uni GROUP BY t),
-           |tot AS (SELECT (SELECT COUNT(*) FROM uni) AS nuni,
-           |               (SELECT COUNT(*) FROM grams) AS nbi)
-           |SELECT x, y, n,
-           |  CAST(${q("n")} - ${q("nbi")} - ${q("a.c")} - ${q("b.c")}
-           |    + ${q("nuni")} + ${q("nuni")} AS DOUBLE) AS pmi
-           |FROM cxy JOIN cx a ON a.t = cxy.x JOIN cx b ON b.t = cxy.y
-           |CROSS JOIN tot
-           |WHERE n >= 5
-           |ORDER BY pmi DESC, x ASC, y ASC LIMIT 20""".stripMargin
-      },
-      "text_letter_entropy" -> {
-        def q(v: String) =
-          s"CAST(round(ln(CAST($v AS DOUBLE)), 9) AS DECIMAL(18,9))"
-        val cCols = TextAnalysis.Letters.map(ch =>
-          s"(length(t) - length(replace(t, '$ch', ''))) AS c_$ch").mkString(", ")
-        val nExpr = TextAnalysis.Letters.map(ch => s"c_$ch").mkString(" + ")
-        val terms = TextAnalysis.Letters.map { ch =>
-          s"CASE WHEN c_$ch > 0 THEN CAST(CAST(c_$ch AS DECIMAL(10,0)) * ${q(s"c_$ch")} AS DECIMAL(29,9)) ELSE CAST(0 AS DECIMAL(29,9)) END"
-        }.mkString("(", " + ", ")")
-        s"""WITH t0 AS (SELECT doc_id, lower(text) AS t FROM documents),
-           |c0 AS (SELECT doc_id, $cCols FROM t0),
-           |n0 AS (SELECT *, ($nExpr) AS n FROM c0)
-           |SELECT doc_id, n AS n_letters,
-           |  CAST(CAST(CAST(n AS DECIMAL(10,0)) * ${q("n")} AS DECIMAL(29,9)) - $terms AS DOUBLE)
-           |    / CAST(n AS DOUBLE) AS entropy
-           |FROM n0 WHERE n >= 1 ORDER BY doc_id""".stripMargin
-      },
-      "cluster_density_grid" -> {
-        val bx = Grid.bucketSql("embedding", 0, densityCfg)
-        val by = Grid.bucketSql("embedding", 1, densityCfg)
-        s"""WITH RECURSIVE cells AS (
-           |  SELECT bx, by, COUNT(*) AS n
-           |  FROM (SELECT $bx AS bx, $by AS by FROM embeddings) GROUP BY bx, by),
-           |core AS (
-           |  SELECT CAST(bx AS BIGINT) * ${densityCfg.partsPerDim} + by AS cell, bx, by, n
-           |  FROM cells WHERE n >= $DensityMinPts),
-           |edges AS (
-           |  SELECT a.cell AS src, b.cell AS dst FROM core a JOIN core b
-           |  ON abs(a.bx - b.bx) <= 1 AND abs(a.by - b.by) <= 1 AND a.cell < b.cell),
-           |sym AS MATERIALIZED (SELECT src, dst FROM edges
-           |        UNION SELECT dst AS src, src AS dst FROM edges),
-           |reach(id, lab) AS (
-           |  SELECT DISTINCT src AS id, src AS lab FROM sym
-           |  UNION
-           |  SELECT s.dst, r.lab FROM reach r JOIN sym s ON s.src = r.id),
-           |labels AS (SELECT id, MIN(lab) AS canonical FROM reach GROUP BY id)
-           |SELECT cluster, COUNT(*) AS n_cells, CAST(SUM(n) AS BIGINT) AS n_points
-           |FROM (SELECT core.n AS n, COALESCE(l.canonical, core.cell) AS cluster
-           |      FROM core LEFT JOIN labels l ON l.id = core.cell)
-           |GROUP BY cluster ORDER BY cluster""".stripMargin
-      },
-      "cluster_density_assign" -> {
-        val bx = Grid.bucketSql("embedding", 0, densityCfg)
-        val by = Grid.bucketSql("embedding", 1, densityCfg)
-        s"""WITH RECURSIVE cells AS (
-           |  SELECT bx, by, COUNT(*) AS n
-           |  FROM (SELECT $bx AS bx, $by AS by FROM embeddings) GROUP BY bx, by),
-           |core AS (
-           |  SELECT CAST(bx AS BIGINT) * ${densityCfg.partsPerDim} + by AS cell, bx, by, n
-           |  FROM cells WHERE n >= $DensityMinPts),
-           |edges AS (
-           |  SELECT a.cell AS src, b.cell AS dst FROM core a JOIN core b
-           |  ON abs(a.bx - b.bx) <= 1 AND abs(a.by - b.by) <= 1 AND a.cell < b.cell),
-           |sym AS MATERIALIZED (SELECT src, dst FROM edges
-           |        UNION SELECT dst AS src, src AS dst FROM edges),
-           |reach(id, lab) AS (
-           |  SELECT DISTINCT src AS id, src AS lab FROM sym
-           |  UNION
-           |  SELECT s.dst, r.lab FROM reach r JOIN sym s ON s.src = r.id),
-           |labels AS (SELECT id, MIN(lab) AS canonical FROM reach GROUP BY id),
-           |cl AS (SELECT core.cell, COALESCE(l.canonical, core.cell) AS cluster
-           |       FROM core LEFT JOIN labels l ON l.id = core.cell)
-           |SELECT e.vec_id, COALESCE(cl.cluster, -1) AS cluster
-           |FROM (SELECT vec_id, CAST($bx AS BIGINT) * ${densityCfg.partsPerDim} + $by AS cell
-           |      FROM embeddings) e
-           |LEFT JOIN cl ON cl.cell = e.cell
-           |ORDER BY e.vec_id""".stripMargin
-      },
-      // --- round-4c
-      "knn_outlier_kth_dist" -> {
-        val pd = DuckSql.squaredL2Cols("q_embedding", "embedding", Dim)
-        s"""SELECT query_id AS vec_id, MAX(dist) AS kth_dist,
-           |  COUNT(*) AS n_neighbors,
-           |  CAST(CASE WHEN MAX(dist) > ${DuckSql.fmt(2.5)} THEN 1 ELSE 0 END AS INT) AS is_outlier
-           |FROM (
-           |  SELECT query_id, dist,
-           |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dist ASC, vec_id ASC) AS rn
-           |  FROM (
-           |    SELECT q.query_id, d.vec_id, $pd AS dist
-           |    FROM (SELECT vec_id AS query_id, embedding AS q_embedding
-           |          FROM embeddings WHERE vec_id % 7 = 0) q
-           |    CROSS JOIN embeddings d
-           |    WHERE d.vec_id <> q.query_id))
-           |WHERE rn <= 5 GROUP BY query_id ORDER BY vec_id""".stripMargin
-      },
-      "ann_ivf_incremental" -> {
-        val dists = IncrCentroids
-          .map(c => DuckSql.squaredL2Lit("embedding", c)).mkString(",\n    ")
-        s"""WITH assigned AS (
-           |  SELECT vec_id, CAST(list_position(l, list_min(l)) - 1 AS INT) AS ivf_cell
-           |  FROM (SELECT vec_id, [$dists] AS l FROM embeddings)),
-           |b AS (SELECT ivf_cell, COUNT(*) AS n_base FROM assigned
-           |      WHERE vec_id % 2 = 0 GROUP BY ivf_cell),
-           |nb AS (SELECT ivf_cell, COUNT(*) AS n_batch FROM assigned
-           |       WHERE vec_id % 2 <> 0 GROUP BY ivf_cell)
-           |SELECT COALESCE(b.ivf_cell, nb.ivf_cell) AS ivf_cell,
-           |  COALESCE(n_base, 0) AS n_base, COALESCE(n_batch, 0) AS n_batch,
-           |  COALESCE(n_base, 0) + COALESCE(n_batch, 0) AS n_after
-           |FROM b FULL OUTER JOIN nb ON b.ivf_cell = nb.ivf_cell
-           |ORDER BY ivf_cell""".stripMargin
-      },
-      "join_bucketed_colocated" ->
-        s"""SELECT c_mktsegment, COUNT(*) AS n, ${dsumSql("o_totalprice")} AS sum_price
-           |FROM orders JOIN customer ON o_custkey = c_custkey
-           |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-      // round-5
-      "asof_join_nearest" ->
-        """WITH u AS (
-          |  SELECT event_id, user_id AS k, ts AS t,
-          |         (epoch_ns(ts) // 1000000000) AS tse,
-          |         1 AS sb, 0 AS sf, CAST(NULL AS BIGINT) AS tb,
-          |         user_id, CAST(NULL AS BIGINT) AS pid, CAST(NULL AS BIGINT) AS pts
-          |  FROM events WHERE event_type = 'purchase'
-          |  UNION ALL
-          |  SELECT CAST(NULL AS BIGINT), user_id, ts, CAST(NULL AS BIGINT),
-          |         0, 1, event_id,
-          |         CAST(NULL AS BIGINT), event_id, (epoch_ns(ts) // 1000000000)
-          |  FROM events WHERE event_type = 'click'),
-          |c AS (
-          |  SELECT event_id, user_id, sb, tse,
-          |    last_value(pid IGNORE NULLS) OVER wb AS b_id,
-          |    last_value(pts IGNORE NULLS) OVER wb AS b_t,
-          |    first_value(pid IGNORE NULLS) OVER wf AS f_id,
-          |    first_value(pts IGNORE NULLS) OVER wf AS f_t
-          |  FROM u
-          |  WINDOW wb AS (PARTITION BY k ORDER BY t ASC, sb ASC, tb ASC
-          |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-          |         wf AS (PARTITION BY k ORDER BY t ASC, sf ASC, tb ASC
-          |                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-          |SELECT event_id, user_id,
-          |  CASE WHEN b_id IS NOT NULL AND (f_id IS NULL OR (tse - b_t) <= (f_t - tse))
-          |       THEN b_id ELSE f_id END AS click_id,
-          |  CASE WHEN b_id IS NOT NULL AND (f_id IS NULL OR (tse - b_t) <= (f_t - tse))
-          |       THEN b_t - tse ELSE f_t - tse END AS asof_dt_s
-          |FROM c WHERE sb = 1 ORDER BY event_id""".stripMargin,
-      "events_streak_longest" ->
-        """WITH days AS (
-          |  SELECT DISTINCT user_id,
-          |    (CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400) AS d
-          |  FROM events),
-          |r AS (SELECT user_id, d,
-          |        ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY d ASC) AS rn
-          |      FROM days),
-          |g AS (SELECT user_id, COUNT(*) AS streak FROM r GROUP BY user_id, d - rn)
-          |SELECT user_id, CAST(SUM(streak) AS BIGINT) AS n_active_days,
-          |  MAX(streak) AS longest_streak
-          |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-      "window_rolling_median" ->
-        s"""WITH daily AS (
-           |  SELECT event_type, CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_epoch,
-           |    ${dsumSql("value", 3)} AS v_day
-           |  FROM events GROUP BY event_type, day_epoch)
-           |SELECT event_type, day_epoch, v_day,
-           |  round(median(v_day) OVER (PARTITION BY event_type ORDER BY day_epoch ASC
-           |        ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS med7
-           |FROM daily ORDER BY event_type, day_epoch""".stripMargin,
-      "sample_epoch_shuffle" -> {
-        val h = Dedup.md5Int32Sql("'7:' || CAST(doc_id AS VARCHAR)")
-        // shard count replays Governance.shardCountFor: ⌈n/64⌉
-        s"""WITH ns AS (SELECT GREATEST(1, (COUNT(*) + 63) // 64) AS n FROM documents),
-           |h AS (SELECT doc_id, ($h) AS h FROM documents)
-           |SELECT doc_id, CAST(h % ns.n AS INT) AS shard,
-           |  CAST(ROW_NUMBER() OVER (PARTITION BY h % ns.n ORDER BY h, doc_id) AS INT) AS pos
-           |FROM h, ns ORDER BY doc_id""".stripMargin
-      },
-      "sample_shard_manifest" -> {
-        val h = Dedup.md5Int32Sql("'7:' || CAST(doc_id AS VARCHAR)")
-        s"""WITH ns AS (SELECT GREATEST(1, (COUNT(*) + 63) // 64) AS n FROM documents),
-           |h AS (
-           |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok, ($h) AS h
-           |  FROM documents),
-           |s AS (
-           |  SELECT doc_id, n_tok, CAST(h % ns.n AS INT) AS shard,
-           |    ROW_NUMBER() OVER (PARTITION BY h % ns.n ORDER BY h, doc_id) AS pos
-           |  FROM h, ns)
-           |SELECT shard, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-           |  md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY pos)) AS content_digest
-           |FROM s GROUP BY shard ORDER BY shard""".stripMargin
-      },
-      "sample_epoch_upsample" -> {
-        val srcH = Dedup.md5Int32Sql("source")
-        val idH = Dedup.md5Int32Sql("CAST(doc_id AS VARCHAR)")
-        s"""WITH r AS (
-           |  SELECT doc_id, source, (100 + ($srcH % 300)) AS cents
-           |  FROM documents),
-           |n AS (
-           |  SELECT doc_id, source, cents,
-           |    (cents // 100) +
-           |      CASE WHEN ($idH % 100) < (cents % 100) THEN 1 ELSE 0 END AS n_copies
-           |  FROM r)
-           |SELECT doc_id, source,
-           |  round(CAST(cents AS DOUBLE) / CAST('100.0' AS DOUBLE), 2) AS rate,
-           |  CAST(unnest(generate_series(1, CAST(n_copies AS BIGINT))) AS INT) AS copy_idx
-           |FROM n WHERE n_copies >= 1
-           |ORDER BY doc_id, copy_idx""".stripMargin
-      },
-      "text_lang_mix_entropy" ->
-        """WITH cnt AS (
-          |  SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n
-          |  FROM documents GROUP BY source, lang),
-          |tot AS (SELECT source, CAST(SUM(n) AS BIGINT) AS n_src FROM cnt GROUP BY source)
-          |SELECT source, MAX(n_src) AS n_docs, CAST(COUNT(*) AS BIGINT) AS n_langs,
-          |  CAST(SUM(CAST(round(-(CAST(n AS DOUBLE) / CAST(n_src AS DOUBLE))
-          |    * ln(CAST(n AS DOUBLE) / CAST(n_src AS DOUBLE)), 9) AS DECIMAL(18,9))) AS DOUBLE)
-          |    AS lang_entropy
-          |FROM cnt JOIN tot USING (source)
-          |GROUP BY source ORDER BY source""".stripMargin,
-      "audit_expectations" -> {
-        def failSql(pred: String) =
-          s"CAST(SUM(CASE WHEN NOT COALESCE($pred, FALSE) THEN 1 ELSE 0 END) AS BIGINT)"
-        val preds = Seq(
-          ("quantity_in_1_50", "l_quantity BETWEEN 1 AND 50"),
-          ("discount_le_008",
-            s"l_discount >= ${DuckSql.fmt(0.0)} AND l_discount <= ${DuckSql.fmt(0.08)}"),
-          ("shipdate_not_null", "l_shipdate IS NOT NULL"),
-          ("price_positive", s"l_extendedprice > ${DuckSql.fmt(0.0)}"),
-          ("price_under_60k", s"l_extendedprice < ${DuckSql.fmt(60000.0)}"))
-        val aggCols = preds.zipWithIndex
-          .map { case ((_, p), i) => s"${failSql(p)} AS f$i" }.mkString(", ")
-        val rows = preds.zipWithIndex.map { case ((n, _), i) =>
-          s"""SELECT '$n' AS rule, n_checked, f$i AS n_failed,
-             |  CAST(CASE WHEN f$i = 0 THEN 1 ELSE 0 END AS INT) AS passed FROM a""".stripMargin }
-        s"""WITH a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_checked, $aggCols FROM lineitem)
-           |${rows.mkString("\n", "\nUNION ALL\n", "\n")}ORDER BY rule""".stripMargin
-      },
-      "agg_incremental_retract" ->
-        """WITH ev AS (
-          |  SELECT event_id, CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_epoch, value
-          |  FROM events),
-          |final AS (
-          |  SELECT day_epoch, value FROM ev WHERE event_id % 13 <> 0
-          |  UNION ALL
-          |  SELECT day_epoch, round(value * 2, 3) FROM ev WHERE event_id % 17 = 0)
-          |SELECT day_epoch,
-          |  CAST(SUM(CAST(round(value, 3) AS DECIMAL(18,3))) AS DOUBLE) AS v_sum,
-          |  CAST(COUNT(*) AS BIGINT) AS n_events
-          |FROM final GROUP BY day_epoch ORDER BY day_epoch""".stripMargin,
-      "sample_mixture_rates" -> {
-        val srcH = Dedup.md5Int32Sql("source")
-        val idH = Dedup.md5Int32Sql("CAST(doc_id AS VARCHAR)")
-        s"""WITH r AS (
-           |  SELECT doc_id, source, (30 + ($srcH % 298)) AS cents
-           |  FROM documents),
-           |n AS (
-           |  SELECT doc_id, source, cents,
-           |    (cents // 100) +
-           |      CASE WHEN ($idH % 100) < (cents % 100) THEN 1 ELSE 0 END AS n_copies
-           |  FROM r)
-           |SELECT source, round(CAST(cents AS DOUBLE) / CAST('100.0' AS DOUBLE), 2) AS rate,
-           |  CAST(COUNT(DISTINCT CASE WHEN n_copies >= 1 THEN doc_id END) AS BIGINT) AS n_docs_kept,
-           |  CAST(SUM(n_copies) AS BIGINT) AS n_copies
-           |FROM n GROUP BY source, cents ORDER BY source""".stripMargin
-      },
-      "sample_coreset_kcenter" -> {
-        val steps = (0 until 8).map { i =>
-          if (i == 0)
-            s"SELECT CAST(0 AS INT) AS step, vec_id, ${DuckSql.fmt(-1.0)} AS r_cov FROM c0"
-          else s"SELECT CAST($i AS INT) AS step, vec_id, md AS r_cov FROM c$i"
-        }.mkString("\nUNION ALL ")
-        s"WITH ${kcenterChainSql(8)}\n$steps\nORDER BY step"
-      },
-      "sample_coreset_kcenter_page" -> {
-        val idH = Dedup.md5Int32Sql("CAST(vec_id AS VARCHAR)")
-        val pageSql =
-          s"""SELECT vec_id, embedding FROM embeddings
-             |  ORDER BY $idH ASC, vec_id ASC LIMIT 64""".stripMargin
-        val steps = (0 until 8).map { i =>
-          if (i == 0)
-            s"SELECT CAST(0 AS INT) AS step, vec_id, ${DuckSql.fmt(-1.0)} AS r_cov FROM c0"
-          else s"SELECT CAST($i AS INT) AS step, vec_id, md AS r_cov FROM c$i"
-        }.mkString("\nUNION ALL ")
-        s"WITH ${kcenterChainSql(8, pageSql)}\n$steps\nORDER BY step"
-      },
-      "sample_coreset_assign" -> {
-        val dists = (0 until 8)
-          .map(i => DuckSql.squaredL2Cols("e.embedding", s"c$i.embedding", Dim))
-          .mkString(",\n    ")
-        val crosses = (0 until 8).map(i => s"CROSS JOIN c$i").mkString(" ")
-        s"""WITH ${kcenterChainSql(8)},
-           |lst AS (
-           |  SELECT e.vec_id, [$dists] AS l
-           |  FROM e $crosses),
-           |assigned AS (
-           |  SELECT vec_id, CAST(list_position(l, list_min(l)) - 1 AS INT) AS step,
-           |    list_min(l) AS d
-           |  FROM lst)
-           |SELECT step, CAST(COUNT(*) AS BIGINT) AS n, MAX(d) AS max_d
-           |FROM assigned GROUP BY step ORDER BY step""".stripMargin
-      },
-      "sample_coverage_greedy" -> {
-        // unrolled greedy chain: u1 = all distinct (doc, token) pairs;
-        // s_i = argmax marginal gain over u_i; u_{i+1} = u_i minus the
-        // winner's tokens. MATERIALIZED: each u_i is referenced twice.
-        val k = 5
-        val steps = (1 to k).flatMap { i =>
-          Seq(
-            s"""s$i AS MATERIALIZED (
-               |  SELECT doc_id, COUNT(*) AS gain FROM u$i GROUP BY doc_id
-               |  ORDER BY gain DESC, doc_id ASC LIMIT 1)""".stripMargin) ++
-            (if (i < k)
-              Seq(s"""u${i + 1} AS MATERIALIZED (
-                     |  SELECT u$i.doc_id, u$i.sh FROM u$i
-                     |  WHERE sh NOT IN (
-                     |    SELECT DISTINCT sh FROM u$i JOIN s$i USING (doc_id)))""".stripMargin)
-            else Seq.empty)
-        }
-        val sel = (1 to k).map(i =>
-          s"SELECT CAST(${i - 1} AS INT) AS step, doc_id, CAST(gain AS BIGINT) AS gain FROM s$i")
-          .mkString("\nUNION ALL ")
-        s"""WITH u1 AS MATERIALIZED (
-           |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS sh
-           |  FROM documents WHERE doc_id % 2 = 0),
-           |${steps.mkString(",\n")}
-           |$sel
-           |ORDER BY step""".stripMargin
-      },
-      "governance_k_anonymity" ->
-        """WITH g AS (
-          |  SELECT c_nationkey, c_mktsegment,
-          |    CAST(FLOOR(c_acctbal / 1000) AS INT) AS ab_bucket,
-          |    COUNT(*) AS gn
-          |  FROM customer GROUP BY 1, 2, 3)
-          |SELECT CAST(5 AS BIGINT) AS k,
-          |  COUNT(*) AS n_groups,
-          |  CAST(SUM(CASE WHEN gn < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_groups,
-          |  CAST(SUM(CASE WHEN gn < 5 THEN gn ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-          |  CAST(MIN(gn) AS BIGINT) AS min_group_size,
-          |  CASE WHEN MIN(gn) >= 5 THEN 1 ELSE 0 END AS anonymous
-          |FROM g""".stripMargin,
-      "governance_k_anon_violations" ->
-        """SELECT c_nationkey, c_mktsegment,
-          |  CAST(FLOOR(c_acctbal / 1000) AS INT) AS ab_bucket,
-          |  COUNT(*) AS group_size
-          |FROM customer GROUP BY 1, 2, 3 HAVING COUNT(*) < 5
-          |ORDER BY group_size, c_nationkey, c_mktsegment, ab_bucket""".stripMargin,
-      "governance_k_suppress_audit" ->
-        """WITH q AS (
-          |  SELECT c_custkey, c_nationkey, c_mktsegment,
-          |    CAST(FLOOR(c_acctbal / 1000) AS INT) AS ab_bucket
-          |  FROM customer),
-          |viol AS (
-          |  SELECT c_nationkey, c_mktsegment, ab_bucket
-          |  FROM q GROUP BY 1, 2, 3 HAVING COUNT(*) < 5),
-          |released AS (
-          |  SELECT * FROM q WHERE NOT EXISTS (
-          |    SELECT 1 FROM viol v
-          |    WHERE v.c_nationkey IS NOT DISTINCT FROM q.c_nationkey
-          |      AND v.c_mktsegment IS NOT DISTINCT FROM q.c_mktsegment
-          |      AND v.ab_bucket IS NOT DISTINCT FROM q.ab_bucket)),
-          |g AS (
-          |  SELECT c_nationkey, c_mktsegment, ab_bucket, COUNT(*) AS gn
-          |  FROM released GROUP BY 1, 2, 3)
-          |SELECT CAST(5 AS BIGINT) AS k,
-          |  COUNT(*) AS n_groups,
-          |  CAST(SUM(CASE WHEN gn < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_groups,
-          |  CAST(SUM(CASE WHEN gn < 5 THEN gn ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-          |  CAST(MIN(gn) AS BIGINT) AS min_group_size,
-          |  CASE WHEN MIN(gn) >= 5 THEN 1 ELSE 0 END AS anonymous,
-          |  (SELECT COUNT(*) FROM released) AS n_released
-          |FROM g""".stripMargin,
-      "governance_k_generalize" -> {
-        def flowSql(w: Int, tag: String, step: String) =
-          s"""q_$tag AS (
-             |  SELECT c_custkey, c_nationkey, c_mktsegment,
-             |    CAST(FLOOR(c_acctbal / $w) AS INT) AS ab_bucket
-             |  FROM customer),
-             |viol_$tag AS (
-             |  SELECT c_nationkey, c_mktsegment, ab_bucket
-             |  FROM q_$tag GROUP BY 1, 2, 3 HAVING COUNT(*) < 5),
-             |rel_$tag AS (
-             |  SELECT * FROM q_$tag q WHERE NOT EXISTS (
-             |    SELECT 1 FROM viol_$tag v
-             |    WHERE v.c_nationkey IS NOT DISTINCT FROM q.c_nationkey
-             |      AND v.c_mktsegment IS NOT DISTINCT FROM q.c_mktsegment
-             |      AND v.ab_bucket IS NOT DISTINCT FROM q.ab_bucket)),
-             |g_$tag AS (
-             |  SELECT c_nationkey, c_mktsegment, ab_bucket, COUNT(*) AS gn
-             |  FROM rel_$tag GROUP BY 1, 2, 3),
-             |r_$tag AS (
-             |  SELECT '$step' AS step, CAST(5 AS BIGINT) AS k,
-             |    COUNT(*) AS n_groups,
-             |    CAST(SUM(CASE WHEN gn < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_groups,
-             |    CAST(SUM(CASE WHEN gn < 5 THEN gn ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-             |    CAST(MIN(gn) AS BIGINT) AS min_group_size,
-             |    CASE WHEN MIN(gn) >= 5 THEN 1 ELSE 0 END AS anonymous,
-             |    (SELECT COUNT(*) FROM rel_$tag) AS n_released
-             |  FROM g_$tag)""".stripMargin
-        s"""WITH ${flowSql(1000, "s", "suppress_only")},
-           |${flowSql(4000, "g", "generalize_then_suppress")}
-           |SELECT * FROM r_g UNION ALL SELECT * FROM r_s
-           |ORDER BY step""".stripMargin
-      },
-      "governance_l_diversity" ->
-        """WITH g AS (
-          |  SELECT c_nationkey, CAST(FLOOR(c_acctbal / 1000) AS INT) AS ab_bucket,
-          |    COUNT(*) AS gn, COUNT(DISTINCT c_mktsegment) AS gl
-          |  FROM customer GROUP BY 1, 2)
-          |SELECT CAST(2 AS BIGINT) AS l,
-          |  COUNT(*) AS n_groups,
-          |  CAST(SUM(CASE WHEN gl < 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_groups,
-          |  CAST(SUM(CASE WHEN gl < 2 THEN gn ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-          |  CAST(MIN(gl) AS BIGINT) AS min_diversity,
-          |  CASE WHEN MIN(gl) >= 2 THEN 1 ELSE 0 END AS diverse
-          |FROM g""".stripMargin,
-      // exact replay + literal flag (the Spark side computes the real
-      // per-group sketch-vs-exact flag — the agg_sketches device)
-      "governance_l_diversity_approx" ->
-        """WITH g AS (
-          |  SELECT c_nationkey, CAST(FLOOR(c_acctbal / 1000) AS INT) AS ab_bucket,
-          |    COUNT(*) AS gn, COUNT(DISTINCT c_name) AS gl
-          |  FROM customer GROUP BY 1, 2)
-          |SELECT CAST(2 AS BIGINT) AS l,
-          |  COUNT(*) AS n_groups,
-          |  CAST(SUM(CASE WHEN gl < 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_groups,
-          |  CAST(SUM(CASE WHEN gl < 2 THEN gn ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-          |  CAST(MIN(gl) AS BIGINT) AS min_diversity,
-          |  CASE WHEN MIN(gl) >= 2 THEN 1 ELSE 0 END AS diverse,
-          |  1 AS hll_all_within
-          |FROM g""".stripMargin,
-      "sample_priority_per_source" ->
-        s"""WITH scored AS (
-           |  SELECT source, doc_id,
-           |    ROUND((-LN((CAST((${Dedup.md5Int32Sql("CAST(doc_id AS VARCHAR)")}) % 1048576 AS DOUBLE) + 1.0) / 1048577.0))
-           |      / LEAST(CAST(n_chars AS DOUBLE) / 500.0, 1.0), 6) AS es_key
-           |  FROM documents)
-           |SELECT source, CAST(rn AS INT) AS rank, doc_id, es_key FROM (
-           |  SELECT source, doc_id, es_key,
-           |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY es_key ASC, doc_id ASC) AS rn
-           |  FROM scored)
-           |WHERE rn <= 20 ORDER BY source, rank""".stripMargin,
-      "agg_kmv_distinct" -> {
-        val h = Dedup.md5Int32Sql("CAST(l_orderkey AS VARCHAR)")
-        s"""WITH hs AS (SELECT DISTINCT $h AS h FROM lineitem),
-           |topk AS (SELECT h FROM hs ORDER BY h ASC LIMIT 256),
-           |kth AS (SELECT MAX(h) AS kth_h, COUNT(*) AS k_actual FROM topk)
-           |SELECT CAST(k_actual AS BIGINT) AS k, kth_h,
-           |  round(CAST(k_actual - 1 AS DOUBLE) /
-           |    (CAST(kth_h AS DOUBLE) / ${DuckSql.fmt(4294967296.0)}), 4) AS est_distinct,
-           |  (SELECT CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) FROM lineitem) AS exact_distinct
-           |FROM kth""".stripMargin
-      },
-      "agg_theta_intersect" -> {
-        val h = Dedup.md5Int32Sql("CAST(l_orderkey AS VARCHAR)")
-        s"""WITH ha AS (SELECT DISTINCT $h AS h FROM lineitem WHERE l_returnflag = 'R'),
-           |hb AS (SELECT DISTINCT $h AS h FROM lineitem WHERE l_returnflag = 'A'),
-           |tha AS (SELECT MAX(h) AS th FROM (SELECT h FROM ha ORDER BY h ASC LIMIT 256)),
-           |thb AS (SELECT MAX(h) AS th FROM (SELECT h FROM hb ORDER BY h ASC LIMIT 256)),
-           |th AS (SELECT LEAST(tha.th, thb.th) AS theta_h FROM tha, thb),
-           |common AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_common
-           |           FROM ha JOIN hb USING (h), th WHERE h <= th.theta_h),
-           |ex AS (SELECT CAST(COUNT(*) AS BIGINT) AS exact_intersect FROM
-           |  (SELECT DISTINCT l_orderkey FROM lineitem WHERE l_returnflag = 'R') a
-           |  JOIN (SELECT DISTINCT l_orderkey FROM lineitem WHERE l_returnflag = 'A') b
-           |  USING (l_orderkey))
-           |SELECT theta_h, n_common,
-           |  round(CAST(n_common AS DOUBLE) /
-           |    (CAST(theta_h AS DOUBLE) / ${DuckSql.fmt(4294967296.0)}), 4) AS est_intersect,
-           |  exact_intersect
-           |FROM th, common, ex""".stripMargin
-      },
-      "rank_global_scalable" ->
-        """SELECT o_orderkey, o_totalprice,
-          |  CAST(ROW_NUMBER() OVER (ORDER BY o_totalprice DESC, o_orderkey ASC) AS BIGINT) AS rnk
-          |FROM orders ORDER BY rnk""".stripMargin,
-      "agg_share_of_parent" ->
-        s"""WITH bn AS (
-           |  SELECT r_name, n_name, ${dsumSql("o_totalprice")} AS rev
-           |  FROM orders
-           |  JOIN customer ON o_custkey = c_custkey
-           |  JOIN nation ON c_nationkey = n_nationkey
-           |  JOIN region ON n_regionkey = r_regionkey
-           |  GROUP BY r_name, n_name)
-           |SELECT r_name, n_name, rev,
-           |  round(rev / CAST(SUM(CAST(rev AS DECIMAL(18,2))) OVER (PARTITION BY r_name) AS DOUBLE), 6)
-           |    AS share_in_region,
-           |  round(CAST(SUM(CAST(rev AS DECIMAL(18,2))) OVER (PARTITION BY r_name) AS DOUBLE)
-           |      / CAST(SUM(CAST(rev AS DECIMAL(18,2))) OVER () AS DOUBLE), 6)
-           |    AS region_share_of_total
-           |FROM bn ORDER BY r_name, n_name""".stripMargin,
-      "sample_group_holdout" -> {
-        val h = Dedup.md5Int32Sql("source")
-        s"""SELECT ($h % 5) AS fold,
-           |  CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
-           |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-           |  CAST(SUM(n_chars) AS BIGINT) AS chars_total
-           |FROM documents GROUP BY fold ORDER BY fold""".stripMargin
-      },
-      "agg_count_distribution" ->
-        """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist FROM (
-          |  SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS c_count
-          |  FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
-          |  GROUP BY c_custkey)
-          |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-      "events_multitouch_attribution" ->
-        s"""WITH p AS (SELECT event_id AS p_id, user_id AS p_user,
-           |             (epoch_ns(ts) // 1000000000) AS p_t
-           |           FROM events WHERE event_type = 'purchase'),
-           |t AS (SELECT user_id AS t_user, event_type AS channel,
-           |        (epoch_ns(ts) // 1000000000) AS t_t
-           |      FROM events WHERE event_type IN ('view', 'click', 'signup')),
-           |j AS (SELECT p_id, channel FROM p JOIN t
-           |      ON p_user = t_user AND t_t < p_t AND t_t >= p_t - 604800),
-           |c AS (SELECT p_id, channel,
-           |        COUNT(*) OVER (PARTITION BY p_id) AS n_touch FROM j)
-           |SELECT channel, CAST(COUNT(*) AS BIGINT) AS n_touches,
-           |  CAST(SUM(CAST(round(${DuckSql.fmt(1.0)} / CAST(n_touch AS DOUBLE), 9)
-           |    AS DECIMAL(18,9))) AS DOUBLE) AS credit_sum
-           |FROM c GROUP BY channel ORDER BY channel""".stripMargin,
-      "join_null_safe_eq" ->
-        """SELECT n_name, r_name
-          |FROM (SELECT n_name, NULLIF(n_regionkey, 2) AS nk FROM nation)
-          |JOIN (SELECT r_name, NULLIF(r_regionkey, 2) AS rk FROM region)
-          |  ON nk IS NOT DISTINCT FROM rk
-          |ORDER BY n_name, r_name""".stripMargin,
-      "events_dow_seasonal" ->
-        """WITH daily AS (
-          |  SELECT CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_epoch,
-          |    CAST(COUNT(*) AS BIGINT) AS n
-          |  FROM events GROUP BY day_epoch),
-          |d2 AS (SELECT day_epoch, n, ((day_epoch // 86400) + 4) % 7 AS dow FROM daily),
-          |base AS (SELECT dow, CAST(SUM(n) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS baseline
-          |         FROM d2 GROUP BY dow)
-          |SELECT day_epoch, dow, n, round(baseline, 6) AS baseline,
-          |  round((CAST(n AS DOUBLE) - baseline) / baseline, 6) AS rel_dev
-          |FROM d2 JOIN base USING (dow) ORDER BY day_epoch""".stripMargin,
-      "window_gap_fill_interpolate" ->
-        s"""WITH daily AS (
-           |  SELECT CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_epoch,
-           |    ${dsumSql("value", 3)} AS v
-           |  FROM events WHERE event_type = 'purchase' GROUP BY day_epoch),
-           |sp AS (SELECT day_epoch, day_epoch // 86400 AS dnum,
-           |         CASE WHEN (day_epoch // 86400) % 5 <> 2 THEN v END AS v_obs
-           |       FROM daily),
-           |c AS (SELECT day_epoch, dnum, v_obs,
-           |    last_value(v_obs IGNORE NULLS) OVER wb AS pv,
-           |    last_value(CASE WHEN v_obs IS NOT NULL THEN dnum END IGNORE NULLS) OVER wb AS pd,
-           |    first_value(v_obs IGNORE NULLS) OVER wf AS nv,
-           |    first_value(CASE WHEN v_obs IS NOT NULL THEN dnum END IGNORE NULLS) OVER wf AS nd
-           |  FROM sp
-           |  WINDOW wb AS (ORDER BY dnum ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-           |         wf AS (ORDER BY dnum ASC ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-           |SELECT day_epoch,
-           |  round(CASE WHEN v_obs IS NOT NULL THEN v_obs
-           |             WHEN pv IS NULL THEN nv
-           |             WHEN nv IS NULL THEN pv
-           |             ELSE pv + (nv - pv) * (CAST(dnum - pd AS DOUBLE) / CAST(nd - pd AS DOUBLE)) END, 6) AS v_filled,
-           |  CAST(CASE WHEN v_obs IS NULL THEN 1 ELSE 0 END AS INT) AS was_gap
-           |FROM c ORDER BY day_epoch""".stripMargin,
-      "sql_lateral_topk" ->
-        """SELECT n_name, c_name, c_acctbal
-          |FROM nation JOIN LATERAL (
-          |  SELECT c_name, c_acctbal FROM customer
-          |  WHERE c_nationkey = n_nationkey
-          |  ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 2) ON true
-          |ORDER BY n_name, c_acctbal DESC, c_name""".stripMargin,
-      // brute replay of the suffix-array longest intra-doc repeat: a length
-      // L repeats in a doc iff some L-gram occurs ≥ 2 times — enumerate
-      // every (L, start) pair (O(m²) rows, bounded by the %5 doc subset)
-      // Suffix-sort + adjacent-LCP form (r17): the longest substring
-      // occurring at ≥2 distinct positions equals the max longest-common-
-      // prefix over ADJACENT suffixes in sorted order (any repeat of
-      // length L makes two suffixes share an L-prefix, and sorted order
-      // puts the maximizing pair next to each other; overlapping
-      // occurrences included — e.g. "aaa" → suffixes "aaa"/"aa", LCP 2).
-      // The previous all-grams form materialized every substring of every
-      // length — O(len³) characters, 22 s and a near-2GB spike in the r16
-      // driver's starved sweep; this is O(len²) and <0.2 s, same rows.
-      "text_longest_repeat_sa" ->
-        """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
-          |sfx AS (
-          |  SELECT doc_id, substr(text, CAST(i AS INT)) AS s
-          |  FROM (SELECT doc_id, text, UNNEST(generate_series(1, length(text))) AS i FROM d)),
-          |ord AS (
-          |  SELECT doc_id, s, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY s) AS rn
-          |  FROM sfx),
-          |adj AS (
-          |  SELECT a.doc_id, a.rn, a.s AS s1, b.s AS s2,
-          |    LEAST(length(a.s), length(b.s)) AS ml
-          |  FROM ord a JOIN ord b ON a.doc_id = b.doc_id AND b.rn = a.rn + 1),
-          |lcp AS (
-          |  SELECT doc_id, rn,
-          |    COALESCE(MIN(CASE WHEN substr(s1, CAST(i AS INT), 1) <> substr(s2, CAST(i AS INT), 1) THEN i END) - 1, ml) AS l
-          |  FROM (SELECT doc_id, rn, s1, s2, ml, UNNEST(generate_series(1, ml)) AS i FROM adj)
-          |  GROUP BY doc_id, rn, ml),
-          |best AS (SELECT doc_id, MAX(l) AS lr FROM lcp GROUP BY doc_id)
-          |SELECT d.doc_id, CAST(COALESCE(b.lr, 0) AS BIGINT) AS longest_repeat
-          |FROM d LEFT JOIN best b USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-      // semantic decontam replay: the benchmark subquery joins the corpus
-      // and MAX-aggregates the same cosine the Spark side evaluates as a
-      // greatest-of-literals — identical IEEE value per pair, so max ≡ max
-      "decontam_semantic" -> {
-        val cs = DuckSql.cosineSimCols("c.embedding", "b.bemb", Dim)
-        s"""WITH bench AS (
-           |  SELECT embedding AS bemb FROM embeddings
-           |  WHERE vec_id % 97 = 0 ORDER BY vec_id LIMIT 32),
-           |c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 97 <> 0)
-           |SELECT vec_id, max_sim FROM (
-           |  SELECT c.vec_id, MAX($cs) AS max_sim
-           |  FROM c CROSS JOIN bench b GROUP BY c.vec_id)
-           |WHERE max_sim >= ${DuckSql.fmt(0.3)} ORDER BY vec_id""".stripMargin
-      },
-      // facade lifecycle replay: anti-join delete, CASE update, MAX+i
-      // insert ids, then the filtered kNN tail with the standard tie-break
-      "api_lifecycle" -> {
-        def arr(a: Array[Float]): String =
-          a.map(_.toString).mkString("CAST([", ", ", "] AS FLOAT[])")
-        val delList = (0L to 70L by 7).mkString(", ")
-        val sq = DuckSql.squaredL2Lit("embedding", Q64)
-        s"""WITH base AS (
-           |  SELECT vec_id, embedding, label FROM embeddings
-           |  WHERE vec_id NOT IN ($delList)),
-           |upd AS (
-           |  SELECT vec_id,
-           |    CASE WHEN vec_id IN (3, 13, 23) THEN ${arr(LifecyclePos)}
-           |         ELSE embedding END AS embedding,
-           |    label
-           |  FROM base),
-           |mx AS (SELECT MAX(vec_id) AS m FROM embeddings),
-           |allr AS (
-           |  SELECT vec_id, embedding, label FROM upd
-           |  UNION ALL
-           |  SELECT (SELECT m FROM mx) + 1, ${arr(LifecycleInsA)}, CAST(1 AS INT)
-           |  UNION ALL
-           |  SELECT (SELECT m FROM mx) + 2, ${arr(LifecycleInsB)}, CAST(2 AS INT))
-           |SELECT vec_id, label, $sq AS dist FROM allr
-           |WHERE label = 1 ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin
-      },
-      "api_map_metadata" -> {
-        def arr(a: Array[Float]): String =
-          a.map(_.toString).mkString("CAST([", ", ", "] AS FLOAT[])")
-        val sq = DuckSql.squaredL2Lit("embedding", Q64)
-        s"""WITH mx AS (SELECT MAX(vec_id) AS m FROM embeddings),
-           |allr AS (
-           |  SELECT vec_id, embedding, label,
-           |    CASE WHEN label % 3 = 0 THEN 'gold' ELSE 'std' END AS tier,
-           |    'n' || CAST(vec_id % 4 AS VARCHAR) AS src
-           |  FROM embeddings
-           |  UNION ALL
-           |  SELECT (SELECT m FROM mx) + 1, ${arr(MapInsGold)}, CAST(7 AS INT), 'gold', 'ins'
-           |  UNION ALL
-           |  SELECT (SELECT m FROM mx) + 2, ${arr(MapInsStd)}, CAST(8 AS INT), 'std', 'ins')
-           |SELECT vec_id, label, $sq AS dist, src FROM allr
-           |WHERE tier = 'gold' ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin
-      },
-      // exact 10-gram coverage ≡ SA repeat coverage (the SuffixArraySpec
-      // identity): duplicated-gram starts expand to their 10 positions,
-      // DISTINCT-counted per doc — linear in corpus characters
-      "text_repeat_coverage_sa" ->
-        """WITH g AS (
-          |  SELECT doc_id, i, substr(text, CAST(i AS INT), 10) AS gr
-          |  FROM (SELECT doc_id, text, UNNEST(generate_series(1, length(text) - 9)) AS i
-          |        FROM documents WHERE length(text) >= 10)),
-          |dup AS (
-          |  SELECT doc_id, i FROM (
-          |    SELECT doc_id, i, COUNT(*) OVER (PARTITION BY doc_id, gr) AS c FROM g)
-          |  WHERE c > 1),
-          |cov AS (
-          |  SELECT doc_id, COUNT(DISTINCT i + o) AS covered
-          |  FROM dup CROSS JOIN (SELECT UNNEST(generate_series(0, 9)) AS o)
-          |  GROUP BY doc_id)
-          |SELECT d.doc_id, CAST(COALESCE(c.covered, 0) AS BIGINT) AS covered_chars
-          |FROM documents d LEFT JOIN cov c USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-      "agg_kmv_merge_daily" -> {
-        val h = Dedup.md5Int32Sql("CAST(user_id AS VARCHAR)")
-        s"""WITH ev AS (
-           |  SELECT CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_epoch, $h AS h
-           |  FROM events),
-           |per_day AS (
-           |  SELECT day_epoch, h FROM (
-           |    SELECT day_epoch, h,
-           |      ROW_NUMBER() OVER (PARTITION BY day_epoch ORDER BY h ASC) AS r
-           |    FROM (SELECT DISTINCT day_epoch, h FROM ev)) WHERE r <= 64),
-           |em AS (SELECT round(CAST(ka - 1 AS DOUBLE) /
-           |         (CAST(kth AS DOUBLE) / ${DuckSql.fmt(4294967296.0)}), 4) AS est_merged
-           |       FROM (SELECT MAX(h) AS kth, COUNT(*) AS ka FROM
-           |         (SELECT DISTINCT h FROM per_day ORDER BY h ASC LIMIT 64))),
-           |ed AS (SELECT round(CAST(ka - 1 AS DOUBLE) /
-           |         (CAST(kth AS DOUBLE) / ${DuckSql.fmt(4294967296.0)}), 4) AS est_direct
-           |       FROM (SELECT MAX(h) AS kth, COUNT(*) AS ka FROM
-           |         (SELECT DISTINCT h FROM ev ORDER BY h ASC LIMIT 64))),
-           |nd AS (SELECT CAST(COUNT(DISTINCT day_epoch) AS BIGINT) AS n_days FROM per_day)
-           |SELECT est_merged, est_direct,
-           |  CAST(CASE WHEN est_merged = est_direct THEN 1 ELSE 0 END AS INT) AS merge_lossless,
-           |  n_days
-           |FROM em, ed, nd""".stripMargin
-      }
-    )
-  }
+  def oracleSql: Map[String, String] =
+    specs.map(q => q.name -> q.oracleSql).toMap
 }

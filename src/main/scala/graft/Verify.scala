@@ -9,8 +9,9 @@ import java.nio.file.{Files, Paths}
   * `{}` even though this main exited 0 and an independent rerun of the same
   * gate passed 260/260 — i.e. the failure was downstream of us and silent.
   * This main is now self-diagnosing so an empty round can be attributed:
-  *   - refuses (exit 2) to run with an empty `SparkEntry.queries` map or
-  *     with oracle keys that have no matching query;
+  *   - refuses (exit 2) to run with an empty `SparkEntry.queries` map
+  *     (both maps come from one `QuerySpec` list, so every oracle key has
+  *     its query by construction);
   *   - parses oracle_sql.json BACK with Jackson (the strictest JSON reader
   *     on the classpath) and exits 3 if the parse-back fails or the key
   *     count drifts — a malformed file would otherwise zero the round;
@@ -33,11 +34,6 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
     if (queries.isEmpty) {
       System.err.println("[verify] FATAL: SparkEntry.queries is empty")
-      sys.exit(2)
-    }
-    val orphanOracles = oracle.keySet.diff(queries.keySet)
-    if (orphanOracles.nonEmpty) {
-      System.err.println(s"[verify] FATAL: oracleSql keys with no query: ${orphanOracles.toSeq.sorted.mkString(",")}")
       sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -236,13 +236,17 @@ final class VectorDatabase private (
     * moves the whole insert batch through ONE partition, which is the
     * first thing to fall over on a large ingest. The assigned ids are
     * identical: zipWithIndex orders by (partition, row-in-partition),
-    * exactly the global order of `monotonically_increasing_id`. */
+    * exactly the global order of `monotonically_increasing_id`.
+    * The batch is validated as [[VectorDatabase.fromDataFrame]] validates
+    * its input ([[Grid.requireDim]]): a null vector or one of another
+    * length fails the insert; the stored rows are not re-checked. */
   def insert(rows: DataFrame): (VectorDatabase, DataFrame) = {
     val base = nextIdBase
+    val checked = Grid.requireDim(rows, "embedding", cfg.dim)
     val schema = org.apache.spark.sql.types.StructType(
-      rows.schema.fields :+ org.apache.spark.sql.types.StructField(
+      checked.schema.fields :+ org.apache.spark.sql.types.StructField(
         "vec_id", org.apache.spark.sql.types.LongType, nullable = false))
-    val indexed = rows.rdd.zipWithIndex().map { case (r, i) =>
+    val indexed = checked.rdd.zipWithIndex().map { case (r, i) =>
       org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (base + i))
     }
     val withIds = spark.createDataFrame(indexed, schema)
@@ -265,10 +269,13 @@ final class VectorDatabase private (
     * action time (kd_tree_database.py:313-315: `self._id_access.get(id)`
     * returns None and `.metadata` raises AttributeError); use
     * [[Snapshot.updatePosition]] directly with `strict = false` for the
-    * lenient pipeline behavior. */
+    * lenient pipeline behavior. The updates are validated like an insert
+    * batch: a null or wrong-length vector fails the snapshot's first
+    * action. */
   def updatePosition(updates: DataFrame): VectorDatabase =
     new VectorDatabase(spark,
-      Snapshot.updatePosition(state.drop("cell_id"), updates, "vec_id",
+      Snapshot.updatePosition(state.drop("cell_id"),
+          Grid.requireDim(updates, "embedding", cfg.dim), "vec_id",
           "embedding", strict = true)
         .withColumn("cell_id", Grid.cellId(col("embedding"), cfg))
         .select(state.columns.map(col).toSeq: _*),

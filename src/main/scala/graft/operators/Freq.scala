@@ -66,7 +66,7 @@ object Freq {
   /** Per-row count-min cell ids: cell_i(x) = md5("cm{i}|" ++ x) mod width,
     * one per hash row i — the same md5-derived 32-bit hash family the dedup
     * operators use, so the whole sketch is replayable as SQL (unlike
-    * HLL/KLL, whose binary registers keep [[graft.SparkEntry]]'s sketch
+    * HLL/KLL, whose binary registers keep the registry's sketch
     * queries rows-only, count-min is hash-checked end-to-end). */
   private def cmCells(key: Column, depth: Int, width: Int): Column =
     array((0 until depth).map(i =>

@@ -180,7 +180,7 @@ object Knn {
     // fixture-scale pruned queries ~+0.1 s each (r13 bench).
     val totalRows = indexed.count()
     if (totalRows == 0L) return Seq.empty // empty DB → empty result (tests:70-77)
-    if (totalRows <= bruteForceThreshold) return bruteScan(indexed, dist, k, pred)
+    if (totalRows <= bruteForceThreshold) return scanTopK(indexed, dist, k, pred)
     // One aggregation job builds the |cells|-row stats table; the bound UDF
     // prices each cell where its stats row lives. Persisted because the
     // widening loop re-sorts it per prefix fetch (O(log cells) fetches).
@@ -228,20 +228,24 @@ object Knn {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
       .exists(_.isInstanceOf[java.io.NotSerializableException])
 
-  /** The under-threshold path: one codegen'd full scan + distributed
-    * top-k, no index machinery. */
-  private def bruteScan(indexed: DataFrame, dist: Column, k: Int,
-      pred: Option[Column]): Seq[Neighbor] = {
-    val filtered = pred.map(indexed.filter).getOrElse(indexed)
-    filtered
+  /** One codegen'd scan + distributed top-k of `rows` under `pred`, in
+    * `(dist ASC, vec_id ASC)` order: the under-threshold path over the
+    * whole store and each widening round's scan of its new cells. A row
+    * whose distance is null (a null coordinate or a short vector) is never
+    * returned: nulls sort last and are dropped after the collect, so the answer
+    * is the top-k of the rows whose distance is defined, as in
+    * [[graft.plans.KnnJoinExec]]. Not an `isNotNull` filter: Catalyst may
+    * push it below the projection and evaluate the kernel twice per row. */
+  private def scanTopK(rows: DataFrame, dist: Column, k: Int,
+      pred: Option[Column]): Seq[Neighbor] =
+    pred.map(rows.filter).getOrElse(rows)
       .withColumn("dist", dist)
       .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
+      .orderBy(col("dist").asc_nulls_last, col("vec_id").asc)
       .limit(k)
       .collect()
-      .map(r => Neighbor(r.getLong(0), r.getInt(1), r.getDouble(2)))
+      .collect { case r if !r.isNullAt(2) => Neighbor(r.getLong(0), r.getInt(1), r.getDouble(2)) }
       .toSeq
-  }
 
   /** The widening loop over an abstract ranked-cell accessor. `entry(i)`
     * must return the i-th non-empty cell as (cell_id, lowerBound, rowCount)
@@ -268,20 +272,7 @@ object Knn {
     // per-job overhead, not the data, dominates small stores). Above it,
     // candidate-cell pruning skips whole files. Same exact result either
     // way — the specs pin pruned ≡ brute with bruteForceThreshold = 0.
-    if (totalRows <= bruteForceThreshold) return bruteScan(indexed, dist, k, pred)
-
-    def scanCells(cells: Seq[Long]): Seq[Neighbor] = {
-      val base = indexed.filter(col("cell_id").isin(cells: _*))
-      val filtered = pred.map(base.filter).getOrElse(base)
-      filtered
-        .withColumn("dist", dist)
-        .select(col("vec_id"), col("label"), col("dist"))
-        .orderBy(col("dist").asc, col("vec_id").asc)
-        .limit(k)
-        .collect()
-        .map(r => Neighbor(r.getLong(0), r.getInt(1), r.getDouble(2)))
-        .toSeq
-    }
+    if (totalRows <= bruteForceThreshold) return scanTopK(indexed, dist, k, pred)
 
     // Widening loop. Because the filter can empty out any cell, count-based
     // sizing is a heuristic only; correctness comes from the bound check.
@@ -301,7 +292,8 @@ object Knn {
         cum += entry(take)._3
         take += 1
       }
-      acc = mergeTopK(acc, scanCells((scanned until take).map(entry(_)._1)), k)
+      val cells = (scanned until take).map(entry(_)._1)
+      acc = mergeTopK(acc, scanTopK(indexed.filter(col("cell_id").isin(cells: _*)), dist, k, pred), k)
       scanned = take
       val kth = if (acc.size >= k) acc.last.dist else Double.PositiveInfinity
       done = scanned >= nCells || entry(scanned)._2 > kth

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, StructF
   * stay far below 2^53, so the one decimal→double cast is correctly
   * rounded — identical — in Spark and DuckDB. The driver's fixed-seed,
   * fixed-iteration-count power loop uses left-associated IEEE arithmetic
-  * that an unrolled SQL replay (SparkEntry.pcaSql) reproduces bit-for-bit.
+  * that an unrolled SQL replay (KnnQueries.pcaSql) reproduces bit-for-bit.
   *
   * At 100 TB: the scan dominates and parallelizes perfectly; the driver
   * work is O(iters·dims²) scalar flops on a dims×dims matrix — independent

@@ -80,7 +80,7 @@ object Profile {
     * The estimate is ENGINE-SPECIFIC (HLL++ register layout), so a gated
     * query must not compare it raw — wrap it with the self-validating
     * flag device (compute exact alongside at gate scale, emit a
-    * within-3·rsd flag; `profile_approx` in SparkEntry, the
+    * within-3·rsd flag; `profile_approx` in AggQueries, the
     * `agg_sketches` precedent) so a sketch drifting out of its error
     * contract FAILS the gate while the output stays engine-portable.
     *

@@ -103,7 +103,7 @@ object Rerank {
     * the page-rerank stage of a retrieval stack, NOT a scan (the corpus
     * never reaches the driver). All stage-2 arithmetic is plain double
     * `λ*simq - (1-λ)*maxSim` in fixed operand order so a SQL replay
-    * (generated unrolled, see SparkEntry) reproduces it bit-for-bit.
+    * (generated unrolled, see KnnQueries.mmrSql) reproduces it bit-for-bit.
     *
     * Returns (rank 1..k, vec_id, mmr_score). Ties break on smaller id.
     */

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * The band predicate must reference the event-time COLUMNS directly in
   * the streaming form (Spark infers state cleanup from them); the batch
   * form uses the same raw-timestamp predicate. Oracle-declared queries
-  * floor to epoch seconds instead (engine-exact; see SparkEntry).
+  * floor to epoch seconds instead (engine-exact; see queries/EventQueries).
   */
 object StreamJoin {
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-/** Streaming monitoring statistics. The batch CUSUM (SparkEntry
+/** Streaming monitoring statistics. The batch CUSUM (query
   * `events_cusum_daily`) runs the sequential recursion
   * c_t = max(0, c_{t-1} + (x_t − mean)) as a left fold over the
   * aggregated daily series; here the SAME fold continues across

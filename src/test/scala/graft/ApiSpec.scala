@@ -4,6 +4,7 @@ import graft.api.{L1, SquaredL2, VectorDatabase}
 import graft.core.{Fixtures, Tables}
 import graft.index.{Grid, GridConfig}
 import graft.operators.Knn
+import graft.queries.Shared
 import org.apache.spark.sql.functions._
 
 /** The reference VectorDatabase contract exercised through the typed facade
@@ -12,7 +13,7 @@ class ApiSpec extends SparkSpecBase {
   import Fixtures._
 
   private lazy val db = VectorDatabase.fromDataFrame(
-    spark, Tables.embeddings(spark, sfDir), SparkEntry.gridCfg)
+    spark, Tables.embeddings(spark, sfDir), Shared.gridCfg)
 
   test("dim / count / treeDepth accessors") {
     assert(db.dim === 64)
@@ -154,7 +155,7 @@ class ApiSpec extends SparkSpecBase {
 
   test("Grid.maintain deepens the grid when cells overflow (leaf-split analog)") {
     import graft.index.{Grid, GridConfig}
-    val cfg1 = SparkEntry.gridCfg.copy(gridDims = 1)
+    val cfg1 = Shared.gridCfg.copy(gridDims = 1)
     val state = Grid.withCellId(Tables.embeddings(spark, sfDir), "embedding", cfg1)
     // 500 rows, target 10/cell: 4 cells at depth 1 can't hold it → deepen
     val (state2, cfg2) = Grid.maintain(state, cfg1, targetLeafSize = 10)
@@ -223,7 +224,7 @@ class ApiSpec extends SparkSpecBase {
   test("save/load round-trips through cell-partitioned parquet") {
     val path = java.nio.file.Files.createTempDirectory("graftdb").toString + "/store"
     db.save(path)
-    val db2 = VectorDatabase.load(spark, path, SparkEntry.gridCfg)
+    val db2 = VectorDatabase.load(spark, path, Shared.gridCfg)
     assert(db2.count() === db.count())
     val res = db2.findKNearestNeighbors(Q64, 3)
     val orig = db.findKNearestNeighbors(Q64, 3)
@@ -504,5 +505,50 @@ class ApiSpec extends SparkSpecBase {
     assert(walk.collect(plan) {
       case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
     }.isEmpty, plan)
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("kNN never returns a row whose distance is null; brute and pruned paths agree") {
+    import spark.implicits._
+    // the kernel's distance is null for a null coordinate: that row takes
+    // no slot, so the answer is the top-k of the other rows at every k
+    val cfg2 = GridConfig(dim = 2, lower = 0.0, upper = 1.0, partsPerDim = 2, gridDims = 2)
+    val store = VectorDatabase.fromDataFrame(spark,
+      Seq((0L, Seq(Some(0.1f), Some(0.1f)), 0), (1L, Seq(None, Some(0.2f)), 1),
+        (2L, Seq(Some(0.3f), Some(0.3f)), 2)).toDF("vec_id", "embedding", "label"),
+      cfg2)
+    val q = Array(0.0, 0.0)
+    val d0 = 2 * 0.1f.toDouble * 0.1f.toDouble
+    val d2 = 2 * 0.3f.toDouble * 0.3f.toDouble
+    for (k <- Seq(2, 3)) {
+      val facade = store.findKNearestNeighbors(q, k)
+      assert(facade.map(n => (n.vec_id, n.dist)) == Seq((0L, d0), (2L, d2)), s"k=$k")
+      val stats = Some(Knn.cellStats(store.state, Some(2)))
+      for (threshold <- Seq(Long.MaxValue, 0L); cache <- Seq(None, stats)) {
+        val res = Knn.prunedSearch(store.state, cfg2, q, k,
+          cellStatsCache = cache, bruteForceThreshold = threshold)
+        assert(res == facade, s"k=$k threshold=$threshold stats=${cache.isDefined}")
+      }
+    }
+  }
+
+  test("insert and updatePosition validate their batch as fromDataFrame does") {
+    import spark.implicits._
+    val cfg8 = GridConfig(dim = 8, lower = -1.0, upper = 1.0, partsPerDim = 4, gridDims = 3)
+    val store = VectorDatabase.fromDataFrame(spark,
+      Seq((0L, Array.fill(8)(0.1f), 0), (1L, Array.fill(8)(0.2f), 1))
+        .toDF("vec_id", "embedding", "label"), cfg8)
+    val short = intercept[Exception] {
+      store.insert(Seq((Array.fill(7)(0.3f), 2)).toDF("embedding", "label"))
+    }
+    assert(messages(short).exists(_.contains("ingest validation")), short.getMessage)
+    // the update is lazy like every snapshot; it fails at its first action
+    val moved = store.updatePosition(
+      Seq((1L, null: Array[Float])).toDF("vec_id", "embedding"))
+    val nullVec = intercept[Exception](moved.count())
+    assert(messages(nullVec).exists(_.contains("ingest validation")), nullVec.getMessage)
+    assert(store.count() === 2)
   }
 }

@@ -3,9 +3,8 @@ package graft
 /** Driver-contract guards, cheap enough for every `sbt test` run:
   * each declared query must BUILD (analyze) against the smoke fixture —
   * catching unresolved columns, bad casts, and registry typos without
-  * waiting for the driver's sf0.01 Verify round-trip — and the set of
-  * queries without oracle SQL must stay exactly the documented
-  * kmeans-trained / engine-specific-sketch six. */
+  * waiting for the sf0.01 Verify round-trip — and every query
+  * name must be declared once, with non-empty oracle SQL. */
 class ContractSpec extends SparkSpecBase {
 
   test("every declared query analyzes against the smoke fixture, " +
@@ -53,6 +52,27 @@ class ContractSpec extends SparkSpecBase {
     assert(noOracle.isEmpty, s"rows-only queries crept back in: $noOracle")
   }
 
+  test("no oracle SQL is orphaned (every oracle key has a query)") {
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
+  }
+
+  test("every query is declared once, with non-empty oracle SQL") {
+    // A QuerySpec declares a query's plan and its oracle together, so no
+    // query can lack an oracle and no oracle can lack a query. What the
+    // type cannot pin: names are distinct (turning the list into a Map
+    // would silently keep only the last of a duplicate), and no oracle is
+    // an empty placeholder (the rows-only guard since r12).
+    val specs = SparkEntry.specs
+    assert(specs.map(_.name).distinct.size == specs.size)
+    assert(SparkEntry.queries.size == specs.size && SparkEntry.oracleSql.size == specs.size)
+    val empty = specs.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(empty.isEmpty, s"rows-only queries crept back in: $empty")
+    val dup = intercept[IllegalArgumentException](
+      graft.queries.QuerySpec.distinct(specs :+ specs.head))
+    assert(dup.getMessage.contains(specs.head.name))
+  }
+
   test("cross-SF growth audit artifact carries an empty flag list (no quadratic creepers)") {
     // r12 (VERDICT item 4): scripts/cross_sf_audit.py compares the full
     // registry's per-query times at sf0.01 vs sf0.1 and flags any query
@@ -68,11 +88,6 @@ class ContractSpec extends SparkSpecBase {
       .map(node.get("flagged_queries").get(_).asText()).toSet
     assert((flagged -- justified).isEmpty,
       s"unjustified cross-SF growth flags: ${flagged -- justified}")
-  }
-
-  test("no oracle SQL is orphaned (every oracle key has a query)") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
   }
 
   test("README and SURVEY query counts match the declared registry (single source of truth)") {
@@ -108,7 +123,7 @@ class ContractSpec extends SparkSpecBase {
     val p = java.nio.file.Paths.get("OPERATORS.md")
     assert(java.nio.file.Files.exists(p), "OPERATORS.md missing — run scripts/gen_operators.py")
     val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    val rowRe = """(?m)^\| `([a-z][a-z0-9_]*)` \| `SparkEntry\.scala:\d+` \|""".r
+    val rowRe = """(?m)^\| `([a-z][a-z0-9_]*)` \| `queries/[A-Za-z]+\.scala:\d+` \|""".r
     val listed = rowRe.findAllMatchIn(txt).map(_.group(1)).toSet
     val declared = SparkEntry.queries.keySet
     assert(listed == declared,

@@ -4,6 +4,7 @@ import graft.core.Fixtures
 import graft.index.{Grid, GridConfig}
 import graft.operators.KnnCellJoin
 import graft.plans.KnnJoinPlan
+import graft.queries.Shared
 import org.apache.spark.sql.functions._
 
 class KnnCellJoinSpec extends SparkSpecBase {
@@ -13,7 +14,7 @@ class KnnCellJoinSpec extends SparkSpecBase {
 
   test("cell-pruned batch kNN join equals the broadcast-cross join on the fixture") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val cfg = SparkEntry.gridCfg
+    val cfg = Shared.gridCfg
     val queries = emb.filter(col("vec_id") < 6)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val viaCells = KnnCellJoin.join(queries, Grid.withCellId(emb, "embedding", cfg), cfg, k = 4,

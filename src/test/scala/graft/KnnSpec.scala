@@ -4,6 +4,7 @@ import graft.core.{Fixtures, Tables}
 import graft.functions.Distances
 import graft.index.{Grid, GridConfig, GridGeometry}
 import graft.operators.{Knn, KnnTopK}
+import graft.queries.Shared
 import org.apache.spark.sql.functions._
 
 /** kNN behavior parity with the reference test suite
@@ -14,7 +15,7 @@ class KnnSpec extends SparkSpecBase {
   import Fixtures._
 
   private lazy val emb = Tables.embeddings(spark, sfDir).cache()
-  private lazy val indexed = Grid.withCellId(emb, "embedding", SparkEntry.gridCfg).cache()
+  private lazy val indexed = Grid.withCellId(emb, "embedding", Shared.gridCfg).cache()
 
   test("self-query: a db vector is its own nearest neighbor at dist 0 (tests:54-68)") {
     val row = emb.filter(col("vec_id") === 7).collect()(0)
@@ -38,7 +39,7 @@ class KnnSpec extends SparkSpecBase {
   }
 
   test("pruned search equals brute force for all metrics, with and without filter") {
-    val cfg = SparkEntry.gridCfg
+    val cfg = Shared.gridCfg
     val cases: Seq[(String, org.apache.spark.sql.Column, (Array[Double], Long, GridGeometry) => Double)] = Seq(
       ("l2", Distances.squaredL2Lit(col("embedding"), Q64), Grid.cellLowerBoundSqL2),
       ("l1", Distances.l1Lit(col("embedding"), Q64), Grid.cellLowerBoundL1),
@@ -131,13 +132,13 @@ class KnnSpec extends SparkSpecBase {
 
   test("kNN on empty DB returns empty (tests:70-77)") {
     val empty = indexed.filter(lit(false))
-    val res = Knn.prunedSearch(empty, SparkEntry.gridCfg, Q64, 5)
+    val res = Knn.prunedSearch(empty, Shared.gridCfg, Q64, 5)
     assert(res.isEmpty)
   }
 
   test("k larger than row count returns all rows") {
-    val five = Grid.withCellId(emb.limit(5), "embedding", SparkEntry.gridCfg)
-    val res = Knn.prunedSearch(five, SparkEntry.gridCfg, Q64, 100)
+    val five = Grid.withCellId(emb.limit(5), "embedding", Shared.gridCfg)
+    val res = Knn.prunedSearch(five, Shared.gridCfg, Q64, 100)
     assert(res.size === 5)
   }
 
@@ -151,7 +152,7 @@ class KnnSpec extends SparkSpecBase {
     val byRow = emb.select(col("embedding")).collect().map(_.getSeq[Float](0).toArray)
     for (parts <- Seq(1, 3)) {
       val stats = Knn.cellStats(indexed.repartition(parts), Some(Dim))
-      for ((cell, vecs) <- byRow.groupBy(v => Grid.cellOf(v.map(_.toDouble), SparkEntry.gridCfg))) {
+      for ((cell, vecs) <- byRow.groupBy(v => Grid.cellOf(v.map(_.toDouble), Shared.gridCfg))) {
         val (lo, hi) = stats(cell).box.get
         assert(stats(cell).rows == vecs.length)
         assert(lo.toSeq == (0 until Dim).map(d => vecs.map(_(d)).min), s"cell $cell lo")
@@ -180,7 +181,7 @@ class KnnSpec extends SparkSpecBase {
   }
 
   test("pruned radius search equals brute radius at several radii, with and without filter") {
-    val cfg = SparkEntry.gridCfg
+    val cfg = Shared.gridCfg
     for (r <- Seq(0.5, 1.3, 1.6, 3.0); pred <- Seq(None, Some(col("label") === 3))) {
       val brute = Knn.radiusSearch(emb,
           Distances.squaredL2Lit(col("embedding"), Q64), r, pred = pred)
@@ -193,6 +194,6 @@ class KnnSpec extends SparkSpecBase {
 
   test("radius search on empty DB returns empty") {
     val empty = indexed.filter(lit(false))
-    assert(Knn.prunedRadius(empty, SparkEntry.gridCfg, Q64, 2.0).count() === 0)
+    assert(Knn.prunedRadius(empty, Shared.gridCfg, Q64, 2.0).count() === 0)
   }
 }

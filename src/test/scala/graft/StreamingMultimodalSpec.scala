@@ -3,6 +3,7 @@ package graft
 import graft.core.Tables
 import graft.index.GridConfig
 import graft.multimodal.Multimodal
+import graft.queries.Shared
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -15,7 +16,7 @@ class StreamingMultimodalSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, sfDir).limit(100)
     emb.write.parquet(src)
     val stream = spark.readStream.schema(emb.schema).parquet(src)
-    val cfg = SparkEntry.gridCfg
+    val cfg = Shared.gridCfg
     val q = StreamingIngest.vectorIngest(stream, cfg, store)
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
