@@ -43,14 +43,16 @@ object ScaleProbe extends App {
   val stats = t("cell stats (index stats)") {
     Knn.cellStats(indexed)
   }
+  val l2 = Distances.squaredL2Lit(col("embedding"), Fixtures.Q64)
+  val l2Bound: Long => Double = Grid.cellLowerBoundSqL2(Fixtures.Q64, _, cfg)
   t("pruned kNN k=10 (warm 2nd run)") {
-    Knn.prunedSearch(indexed, cfg, Fixtures.Q64, 10, cellStatsCache = Some(stats))
+    Knn.prunedSearch(indexed, l2, 10, l2Bound, cellStatsCache = Some(stats))
   }
   val pruned = t("pruned kNN k=10") {
-    Knn.prunedSearch(indexed, cfg, Fixtures.Q64, 10, cellStatsCache = Some(stats))
+    Knn.prunedSearch(indexed, l2, 10, l2Bound, cellStatsCache = Some(stats))
   }
   val brute = t("brute kNN k=10") {
-    Knn.bruteForce(indexed, Distances.squaredL2Lit(col("embedding"), Fixtures.Q64), 10)
+    Knn.bruteForce(indexed, l2, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
   }
   assert(pruned.map(n => (n.vec_id, n.dist)) == brute, "pruned != brute at scale")
@@ -103,7 +105,8 @@ object ScaleProbe extends App {
       s"quantile grid not materially more balanced: $qMax vs $eMax")
     val q2 = Fixtures.Q64.map(x => x * x)
     val qPruned = t("quantile pruned kNN k=10") {
-      Knn.prunedSearch(qIdx, qcfg, q2, 10, bruteForceThreshold = 0L)
+      Knn.prunedSearch(qIdx, Distances.squaredL2Lit(col("embedding"), q2), 10,
+        Grid.cellLowerBoundSqL2(q2, _, qcfg), bruteForceThreshold = 0L)
     }
     val qBrute = t("quantile brute kNN k=10") {
       Knn.bruteForce(skew, Distances.squaredL2Lit(col("embedding"), q2), 10)

@@ -303,7 +303,8 @@ object ScaleProbe10M extends App {
     println(s"SCALE   quantile cells: ${qStats.getLong(1)} occupied, max ${qStats.getLong(0)} " +
       s"(uniform share ${n / qcfg.numCells})")
     val qPruned = t("quantile prunedSearch k=10 (10M)") {
-      graft.operators.Knn.prunedSearch(qIdx, qcfg, q, 10)
+      graft.operators.Knn.prunedSearch(qIdx, dist, 10,
+        graft.index.Grid.cellLowerBoundSqL2(q, _, qcfg))
         .map(nb => (nb.vec_id, nb.dist))
     }
     // pruned ≡ brute spot check (ids + distances; label column absent →
@@ -322,7 +323,8 @@ object ScaleProbe10M extends App {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     ewIdx.count()
     val ewPruned = t("prunedSearch k=10 over 10.6M-cell grid (10M rows)") {
-      graft.operators.Knn.prunedSearch(ewIdx, bigCfg, q, 10)
+      graft.operators.Knn.prunedSearch(ewIdx, dist, 10,
+        graft.index.Grid.cellLowerBoundSqL2(q, _, bigCfg))
     }
     assert(ewPruned.map(nb => (nb.vec_id, nb.dist)) == brute,
       "10M-cell pruned != brute")

@@ -196,13 +196,15 @@ final class VectorDatabase private (
     else Some(Knn.cellStats(state,
       Some(cfg.dim).filter(_ => cfg.numCells * cfg.dim <= GridRadiusPruning.MaxEnumCells)))
 
-  /** The cell bound `m` prunes with on this snapshot: its grid bound, raised
-    * to its box bound where the stats hold the cell's box. A NaN box bound
-    * raises nothing. */
-  private def cellBound(m: Metric): (Array[Double], Long, GridGeometry) => Double =
+  /** The cell bound `m` prunes with for `q` on this snapshot: its grid
+    * bound, raised to its box bound where the stats hold the cell's box. A
+    * NaN box bound raises nothing. Captures no snapshot, so the distributed
+    * stats path can ship it to executors. */
+  private def cellBound(m: Metric, q: Array[Double]): Long => Double = {
+    val g = cfg
     cellStats match {
-      case None => m.cellBound
-      case Some(stats) => (q, cell, g) => {
+      case None => m.cellBound(q, _, g)
+      case Some(stats) => cell => {
         val grid = m.cellBound(q, cell, g)
         stats.get(cell).flatMap(_.box) match {
           case Some((lo, hi)) => val box = m.boxBound(q, lo, hi); if (box > grid) box else grid
@@ -210,6 +212,7 @@ final class VectorDatabase private (
         }
       }
     }
+  }
 
   /** dim accessor (reference database.py:22-25). */
   def dim: Int = cfg.dim
@@ -293,9 +296,8 @@ final class VectorDatabase private (
       filter: Option[Column] = None,
       metric: Option[Metric] = None): Seq[Knn.Neighbor] = {
     val m = metric.getOrElse(defaultMetric)
-    Knn.prunedSearch(state, cfg, q, k, pred = filter,
-      cellBound = cellBound(m), distExpr = Some(m.dist(col("embedding"), q)),
-      cellStatsCache = cellStats)
+    Knn.prunedSearch(state, m.dist(col("embedding"), q), k, cellBound(m, q), filter,
+      cellStats)
   }
 
   /** Radius (range) search: every stored vector within distance `r` of
@@ -307,9 +309,8 @@ final class VectorDatabase private (
       filter: Option[Column] = None,
       metric: Option[Metric] = None): DataFrame = {
     val m = metric.getOrElse(defaultMetric)
-    Knn.prunedRadius(state, cfg, q, r, pred = filter,
-      cellBound = cellBound(m), distExpr = Some(m.dist(col("embedding"), q)),
-      cellStatsCache = cellStats)
+    Knn.prunedRadius(state, m.dist(col("embedding"), q), r, cellBound(m, q), filter,
+      cellStats)
   }
 
   /** Batch kNN join: k nearest stored vectors for EVERY query row — the

@@ -3,9 +3,8 @@ package graft.operators
 import graft.functions.{Distances, VecBox}
 import graft.index.{Grid, GridGeometry}
 import graft.plans.KnnJoinExec
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Filtered k-nearest-neighbor search — the reference's flagship query
   * (reference API: vectordb/database.py:31-48, impl:
@@ -15,8 +14,15 @@ import org.apache.spark.sql.types._
   *  - the metadata filter applies BEFORE top-k selection
   *    (kd_tree_database.py:186-190);
   *  - default metric is SQUARED L2 (kd_tree_database.py:243, no sqrt);
-  *  - deterministic total order `(dist ASC, id ASC)` replaces the
-  *    reference's insertion-order tie-break.
+  *  - deterministic total order `(dist ASC NULLS LAST, id ASC)` replaces
+  *    the reference's insertion-order tie-break.
+  *
+  * This object is the engine's one exact single-query search, as the
+  * reference answers every single-vector read through one best-first
+  * descent with one bound-break (kd_tree_database.py:213-218, 285-304):
+  * brute force, grid-pruned kNN, radius search and [[Mips]]'s banded
+  * max-inner-product top-k share one scan-and-rank body ([[bruteForce]]),
+  * one pruned entry ([[prunedSearch]]) and one widening loop ([[widen]]).
   *
   * Physical plan: `Scan → Filter → Project(+dist) → TakeOrderedAndProject`
   * — Spark's distributed top-k (per-partition heap + driver merge), the
@@ -26,21 +32,26 @@ import org.apache.spark.sql.types._
   */
 object Knn {
 
-  /** Brute-force exact kNN: distance over every (filtered) row + top-k. */
+  /** Brute-force exact kNN, and the one scan-and-rank body of every exact
+    * single-query search here: the filter, the distance, then the top-k of
+    * `(vec_id, label, dist)` in `(dist ASC NULLS LAST, vec_id ASC)` order,
+    * the order of the DuckDB oracles. A row whose distance is null (a null
+    * coordinate or a short vector) ranks after every row whose distance is
+    * defined. */
   def bruteForce(
       db: DataFrame,
       distExpr: Column,
       k: Int,
-      idCol: String = "vec_id",
-      pred: Option[Column] = None,
-      keep: Seq[String] = Seq("vec_id", "label")): DataFrame = {
-    val filtered = pred.map(db.filter).getOrElse(db)
-    filtered
-      .withColumn("dist", distExpr)
-      .select((keep.map(col) :+ col("dist")): _*)
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-  }
+      pred: Option[Column] = None): DataFrame =
+    scored(db, distExpr, pred).orderBy(order: _*).limit(k)
+
+  /** `(vec_id, label, dist)` of the rows that pass `pred`. */
+  private def scored(db: DataFrame, dist: Column, pred: Option[Column]): DataFrame =
+    pred.map(db.filter).getOrElse(db)
+      .withColumn("dist", dist)
+      .select(col("vec_id"), col("label"), col("dist"))
+
+  private def order: Seq[Column] = Seq(col("dist").asc_nulls_last, col("vec_id").asc)
 
   /** Result row of a pruned search (kept scalar so it round-trips through
     * createDataFrame deterministically). */
@@ -51,75 +62,46 @@ object Knn {
     * descent with plane-distance bounds (kd_tree_database.py:149-221,
     * SURVEY.md §4 O1).
     *
-    * Non-empty cells are ranked by a closed-form lower bound (priced on
-    * executors; the driver pages in ranked prefixes only — see
-    * [[prunedSearchBound]]), the nearest cells are scanned (Catalyst pushes
-    * the `cell_id isin` predicate into the scan → partition pruning on a
-    * cell-partitioned table), and the prefix widens until the kth distance
-    * is ≤ the next unscanned cell's bound — the same stop rule as the
-    * reference's `bound > current_neighbors[-1]` break
-    * (kd_tree_database.py:213-218).
+    * Non-empty cells are ranked by `bound`, the nearest cells are scanned
+    * (Catalyst pushes the `cell_id isin` predicate into the scan → partition
+    * pruning on a cell-partitioned table), and the prefix widens until the
+    * kth distance is ≤ the next unscanned cell's bound — the same stop rule
+    * as the reference's `bound > current_neighbors[-1]` break
+    * (kd_tree_database.py:213-218). Each widening round scans only the
+    * cells it adds (see [[widen]]).
+    *
+    * `bound` may be any cell pricing, of any geometry (equal-width or
+    * quantile [[GridGeometry]] cells, or the grid bound raised to a data
+    * box bound as `VectorDatabase` ranks them); correctness needs only
+    * admissibility: `bound(cell)` ≤ the distance from the query to every
+    * point bucketed into `cell`.
     *
     * `cellStatsCache` (see [[cellStats]]; the search reads its rows) is
     * computed once per index build and reused across queries — the analog
-    * of the tree structure itself. With it, a query runs only its scan
-    * rounds; without it, each call first aggregates the stats over the
-    * whole store. Each widening round scans only the cells it adds (see
-    * [[widen]]).
-    *
-    * `cellBound` may be any admissible bound, not only the grid's:
-    * `VectorDatabase` holds one [[cellStats]] map per snapshot and ranks
-    * each cell by the larger of its metric's grid bound and its bound over
-    * the cell's data bounding box, which covers every dimension.
-    * Works over either [[GridGeometry]] (equal-width or quantile cells).
-    */
-  def prunedSearch(
-      indexed: DataFrame,
-      cfg: GridGeometry,
-      q: Array[Double],
-      k: Int,
-      pred: Option[Column] = None,
-      cellBound: (Array[Double], Long, GridGeometry) => Double = Grid.cellLowerBoundSqL2,
-      distExpr: Option[Column] = None,
-      cellStatsCache: Option[Map[Long, CellStats]] = None,
-      bruteForceThreshold: Long = 200000L): Seq[Neighbor] =
-    prunedSearchBound(indexed,
-      distExpr.getOrElse(Distances.squaredL2Lit(col("embedding"), q)), k,
-      cell => cellBound(q, cell, cfg), pred, cellStatsCache,
-      bruteForceThreshold)
-
-  /** Core of [[prunedSearch]]: the ranking + widening loop over an OPAQUE
-    * cell lower-bound function, so any cell partitioning that can price a
-    * cell reuses the same exact search.
-    * Correctness needs only admissibility: `bound(cell)` ≤ the true
-    * distance from the query to every point bucketed into `cell`.
-    *
-    * Driver memory is O(cells actually scanned), NOT O(total cells): with
-    * no `cellStatsCache`, per-cell stats are aggregated distributed, the
-    * bound is priced on executors (`bound` ships in a deterministic UDF —
-    * every in-repo geometry closure is a pure function of plan-time
-    * constants), and the driver pulls only geometrically growing RANKED
-    * PREFIXES via distributed top-k. At 10⁸ cells (a 100 TB store at
-    * targetLeafSize rows/cell) the old collect-and-sort was a multi-GB
-    * driver map (r12 verdict); now the driver holds the scanned prefix
+    * of the tree structure itself. With it, the cells are ranked on the
+    * driver and a query runs only its scan rounds. Without it, driver
+    * memory is O(cells actually scanned), NOT O(total cells): per-cell
+    * stats are aggregated distributed, `bound` is priced on executors (it
+    * ships in a deterministic UDF — every in-repo geometry closure is a
+    * pure function of plan-time constants), and the driver pulls only
+    * geometrically growing RANKED PREFIXES via distributed top-k. At 10⁸
+    * cells (a 100 TB store at targetLeafSize rows/cell) a collect-and-sort
+    * would be a multi-GB driver map; the driver holds the scanned prefix
     * only — the same reasoning as the prune rule's MaxEnumCells cap
-    * (plans/GridPrune.scala). A non-serializable custom `bound` falls back
-    * to the legacy driver-side ranking (correct, small stores only). */
-  def prunedSearchBound(
+    * (plans/GridPrune.scala). A non-serializable `bound` falls back to
+    * driver-side ranking (correct, small stores only). */
+  def prunedSearch(
       indexed: DataFrame,
       dist: Column,
       k: Int,
       bound: Long => Double,
       pred: Option[Column] = None,
       cellStatsCache: Option[Map[Long, CellStats]] = None,
-      bruteForceThreshold: Long = 200000L): Seq[Neighbor] = {
-
+      bruteForceThreshold: Long = 200000L): Seq[Neighbor] =
     cellStatsCache match {
       case Some(stats) => rankedSearch(indexed, dist, k, bound, pred, stats, bruteForceThreshold)
-      case None =>
-        prunedSearchDistributed(indexed, dist, k, bound, pred, bruteForceThreshold)
+      case None => prunedSearchDistributed(indexed, dist, k, bound, pred, bruteForceThreshold)
     }
-  }
 
   /** One non-empty cell of a cell-indexed store: its row count and, when
     * asked for, the bounding box of its embeddings — `lo` and `hi` hold the
@@ -147,20 +129,23 @@ object Knn {
 
   /** Cached-stats path: the caller holds the stats map (index-build
     * artifact, amortized across queries), so the cells are ranked on the
-    * driver and the query runs no job over the whole store. */
-  private def rankedSearch(
+    * driver and the query runs no job over the whole store. `cellCol`
+    * names the column the stats are keyed by: [[Mips]] runs here over its
+    * norm bands. */
+  private[operators] def rankedSearch(
       indexed: DataFrame,
       dist: Column,
       k: Int,
       bound: Long => Double,
       pred: Option[Column],
       stats: Map[Long, CellStats],
-      bruteForceThreshold: Long): Seq[Neighbor] = {
+      bruteForceThreshold: Long,
+      cellCol: String = "cell_id"): Seq[Neighbor] = {
     if (stats.isEmpty) return Seq.empty // empty DB → empty result (tests:70-77)
     val ranked: Array[(Long, Double, Long)] = stats.toArray
       .map { case (cell, st) => (cell, bound(cell), st.rows) }
       .sortBy { case (cell, b, _) => (b, cell) }
-    widen(indexed, dist, k, pred, bruteForceThreshold,
+    widen(indexed, cellCol, dist, k, pred, bruteForceThreshold,
       nCells = ranked.length.toLong, totalRows = ranked.map(_._3).sum,
       entry = i => ranked(i.toInt))
   }
@@ -213,7 +198,7 @@ object Knn {
         }
         prefix(i.toInt)
       }
-      widen(indexed, dist, k, pred, bruteForceThreshold, nCells, totalRows, entry)
+      widen(indexed, "cell_id", dist, k, pred, bruteForceThreshold, nCells, totalRows, entry)
     } catch {
       // A custom bound whose closure can't ship (captures a session, a
       // connection, …) fails at task serialization — fall back to pricing
@@ -228,8 +213,7 @@ object Knn {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
       .exists(_.isInstanceOf[java.io.NotSerializableException])
 
-  /** One codegen'd scan + distributed top-k of `rows` under `pred`, in
-    * `(dist ASC, vec_id ASC)` order: the under-threshold path over the
+  /** [[bruteForce]] of `rows`, collected: the under-threshold path over the
     * whole store and each widening round's scan of its new cells. A row
     * whose distance is null (a null coordinate or a short vector) is never
     * returned: nulls sort last and are dropped after the collect, so the answer
@@ -238,27 +222,24 @@ object Knn {
     * push it below the projection and evaluate the kernel twice per row. */
   private def scanTopK(rows: DataFrame, dist: Column, k: Int,
       pred: Option[Column]): Seq[Neighbor] =
-    pred.map(rows.filter).getOrElse(rows)
-      .withColumn("dist", dist)
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist").asc_nulls_last, col("vec_id").asc)
-      .limit(k)
-      .collect()
+    bruteForce(rows, dist, k, pred).collect()
       .collect { case r if !r.isNullAt(2) => Neighbor(r.getLong(0), r.getInt(1), r.getDouble(2)) }
       .toSeq
 
-  /** The widening loop over an abstract ranked-cell accessor. `entry(i)`
-    * must return the i-th non-empty cell as (cell_id, lowerBound, rowCount)
-    * in (bound ASC, cell_id ASC) order, for 0 ≤ i < nCells.
+  /** The one widening loop, over an abstract ranked-cell accessor.
+    * `entry(i)` must return the i-th non-empty cell as (cell, lowerBound,
+    * rowCount) in (bound ASC, cell ASC) order, for 0 ≤ i < nCells; a cell
+    * is the set of rows whose `cellCol` holds its id.
     *
     * Each round scans only the cells added since the last round and merges
     * their top-k into the kept top-k on the driver under the same total
-    * order `(dist ASC, vec_id ASC)`. Cells are disjoint, so the merge equals
+    * order `(dist ASC NULLS LAST, vec_id ASC)`. Cells are disjoint, so the merge equals
     * the top-k of every scanned cell: the stop rule sees the same kth
     * distance as a rescan of the whole prefix would, and no cell is read
     * twice. */
   private def widen(
       indexed: DataFrame,
+      cellCol: String,
       dist: Column,
       k: Int,
       pred: Option[Column],
@@ -293,7 +274,7 @@ object Knn {
         take += 1
       }
       val cells = (scanned until take).map(entry(_)._1)
-      acc = mergeTopK(acc, scanTopK(indexed.filter(col("cell_id").isin(cells: _*)), dist, k, pred), k)
+      acc = mergeTopK(acc, scanTopK(indexed.filter(col(cellCol).isin(cells: _*)), dist, k, pred), k)
       scanned = take
       val kth = if (acc.size >= k) acc.last.dist else Double.PositiveInfinity
       done = scanned >= nCells || entry(scanned)._2 > kth
@@ -309,55 +290,40 @@ object Knn {
       .take(k)
 
   /** Radius (range) search — the other half of a vector-DB read API next
-    * to top-k: every row within distance `r`, ordered `(dist ASC, id ASC)`.
-    * Same plan shape as [[bruteForce]] minus the limit; the distance
-    * predicate evaluates inside the scan's codegen stage, so at 100 TB it
-    * is a single filtered scan with no shuffle. */
+    * to top-k: every row within distance `r`, in [[bruteForce]]'s order.
+    * The distance predicate evaluates inside the scan's codegen stage, so
+    * at 100 TB it is a single filtered scan. The rows that pass move to one
+    * partition and are sorted there: a global sort would start a
+    * range-partition sampling job that reads the scan's input a second
+    * time. */
   def radiusSearch(
       db: DataFrame,
       distExpr: Column,
       r: Double,
-      idCol: String = "vec_id",
-      pred: Option[Column] = None,
-      keep: Seq[String] = Seq("vec_id", "label")): DataFrame = {
-    val filtered = pred.map(db.filter).getOrElse(db)
-    filtered
-      .withColumn("dist", distExpr)
-      .filter(col("dist") <= lit(r))
-      .select((keep.map(col) :+ col("dist")): _*)
-      .orderBy(col("dist").asc, col(idCol).asc)
-  }
+      pred: Option[Column] = None): DataFrame =
+    scored(db, distExpr, pred).filter(col("dist") <= lit(r))
+      .repartition(1).sortWithinPartitions(order: _*)
 
-  /** Cell-pruned radius search: unlike kNN, the pruning set is KNOWN up
-    * front — exactly the cells whose closed-form lower bound is ≤ r — so
-    * there is no widening loop, just one scan over the candidate cells
-    * (partition pruning on a cell-partitioned store). Exact: a cell with
-    * bound > r cannot contain a point within r. The non-empty cells come
-    * from `cellStatsCache` when the caller holds the stats (as in
-    * [[prunedSearch]]), else from one distinct-cells job. */
+  /** Cell-pruned radius search: [[radiusSearch]] over the candidate cells.
+    * Unlike kNN, the pruning set is KNOWN up front — exactly the cells
+    * whose `bound` is ≤ r — so there is no widening loop, just one scan
+    * over the candidate cells (partition pruning on a cell-partitioned
+    * store). Exact for any admissible `bound` (see [[prunedSearch]]): a
+    * cell with bound > r cannot contain a point within r. The non-empty
+    * cells come from `cellStatsCache` when the caller holds the stats,
+    * else from one distinct-cells job. */
   def prunedRadius(
       indexed: DataFrame,
-      cfg: GridGeometry,
-      q: Array[Double],
+      dist: Column,
       r: Double,
+      bound: Long => Double,
       pred: Option[Column] = None,
-      cellBound: (Array[Double], Long, GridGeometry) => Double = Grid.cellLowerBoundSqL2,
-      distExpr: Option[Column] = None,
       cellStatsCache: Option[Map[Long, CellStats]] = None): DataFrame = {
-    val nonEmpty = cellStatsCache.map(_.keys.toArray).getOrElse(
+    val nonEmpty = cellStatsCache.map(_.keys.toSeq).getOrElse(
       indexed.select(col("cell_id")).distinct().collect()
-        .map(_.getAs[Number](0).longValue()))
-    val cells = nonEmpty.filter(cell => cellBound(q, cell, cfg) <= r)
-    val dist = distExpr.getOrElse(Distances.squaredL2Lit(col("embedding"), q))
-    val base =
-      if (cells.isEmpty) indexed.filter(lit(false))
-      else indexed.filter(col("cell_id").isin(cells.toSeq: _*))
-    val filtered = pred.map(base.filter).getOrElse(base)
-    filtered
-      .withColumn("dist", dist)
-      .filter(col("dist") <= lit(r))
-      .select(col("vec_id"), col("label"), col("dist"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
+        .map(_.getAs[Number](0).longValue()).toSeq)
+    radiusSearch(indexed.filter(col("cell_id").isin(nonEmpty.filter(bound(_) <= r): _*)),
+      dist, r, pred)
   }
 
   /** DataFrame wrapper around [[prunedSearch]] for the driver contract. */
@@ -370,8 +336,8 @@ object Knn {
       pred: Option[Column] = None,
       bruteForceThreshold: Long = 200000L): DataFrame = {
     import spark.implicits._
-    val rows = prunedSearch(indexed, cfg, q, k, pred,
-      bruteForceThreshold = bruteForceThreshold)
+    val rows = prunedSearch(indexed, Distances.squaredL2Lit(col("embedding"), q), k,
+      Grid.cellLowerBoundSqL2(q, _, cfg), pred, bruteForceThreshold = bruteForceThreshold)
     spark.createDataset(rows).toDF()
   }
 }

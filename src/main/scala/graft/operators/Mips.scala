@@ -22,12 +22,16 @@ import org.apache.spark.sql.functions._
   * Pruning: rows are banded by a store-time `band` column (any bucketing of
   * the magnitude; the declared queries band on the integer weight). Per
   * band the driver collects (rows, max w·|v|) once — the index analog of
-  * [[Knn.prunedSearch]]'s cellStats — then scans bands in DESCENDING bound
-  * order, widening geometrically until the kth best score >= the next
-  * unscanned band's bound. Exact: a band whose Cauchy-Schwarz bound is
-  * below the kth score cannot improve the top-k. On a band-partitioned
-  * store the `band isin` predicate is file-level pruning, so a hot-k query
-  * touches only the high-magnitude slice of the corpus.
+  * [[Knn.prunedSearch]]'s cellStats. The search runs on Knn's one widening
+  * loop, with the bands as its cells: it ranks `dist = −(w·dot(q, v))`
+  * ascending and each band by its negated Cauchy-Schwarz bound, so bands
+  * are scanned in DESCENDING bound order, each read once, widening
+  * geometrically until the kth best score >= the next unscanned band's
+  * bound. Exact: a band whose bound is below the kth score cannot improve
+  * the top-k. Negation is exact, so `dot = −dist` is bit-identical to the
+  * brute score. On a band-partitioned store the `band isin` predicate is
+  * file-level pruning, so a hot-k query touches only the high-magnitude
+  * slice of the corpus.
   */
 object Mips {
 
@@ -40,17 +44,16 @@ object Mips {
     * Weights must be non-negative (they are factored magnitudes): a
     * negative w flips the score sign and w·|v| stops bounding it, so the
     * same pass validates min(w) >= 0. */
-  def bandStats(indexed: DataFrame, weightCol: String = "weight",
-      bandCol: String = "band"): Map[Long, (Long, Double)] = {
-    val wnorm = col(weightCol) *
+  def bandStats(indexed: DataFrame): Map[Long, (Long, Double)] = {
+    val wnorm = col("weight") *
       sqrt(aggregate(col("embedding"), lit(0.0d),
         (acc, x) => acc + x.cast("double") * x.cast("double")))
-    val rows = indexed.groupBy(col(bandCol))
+    val rows = indexed.groupBy(col("band"))
       .agg(count(lit(1)).as("n"), max(wnorm).as("mx"),
-        min(col(weightCol)).as("wmin"),
+        min(col("weight")).as("wmin"),
         // aggregates SKIP nulls, so a null weight would silently drop out
         // of min/max and corrupt the bound — count them explicitly
-        sum(when(col(weightCol).isNull, 1L).otherwise(0L)).as("n_null"))
+        sum(when(col("weight").isNull, 1L).otherwise(0L)).as("n_null"))
       .collect()
     rows.foreach { r =>
       require(r.getLong(4) == 0L,
@@ -60,15 +63,19 @@ object Mips {
         s"Mips: weight must be non-negative (band ${r.get(0)} has " +
           s"min weight ${r.getDouble(3)}); factor magnitudes, not signs")
     }
+    // a band whose every norm is null (null coordinates) has no defined
+    // score: its max over no rows is -Inf, so it ranks last
     rows.map(r => r.getAs[Number](0).longValue() ->
-      (r.getLong(1), r.getDouble(2))).toMap
+      (r.getLong(1), if (r.isNullAt(2)) Double.NegativeInfinity else r.getDouble(2))).toMap
   }
 
   /** Exact weighted-dot top-k with band pruning: returns
     * (vec_id, label, dot = w·dot(q, v)) ordered (dot DESC, vec_id ASC),
-    * equal to the brute scan (MipsSpec pins it with threshold 0).
+    * equal to the brute scan (MipsSpec pins it with threshold 0). A row
+    * whose score is null (a null coordinate) is never returned, and a NaN
+    * score ranks after every number: the order of Knn's one loop.
     *
-    * `bruteForceThreshold` mirrors [[Knn.prunedSearch]]'s cost-based path
+    * `bruteForceThreshold` is [[Knn.prunedSearch]]'s cost-based path
     * choice: below it, one codegen'd scan beats the widening loop's
     * multi-job overhead; above it, band pruning skips whole files. */
   def prunedTopK(
@@ -76,59 +83,19 @@ object Mips {
       indexed: DataFrame,
       q: Array[Double],
       k: Int,
-      weightCol: String = "weight",
-      bandCol: String = "band",
       pred: Option[Column] = None,
       bandStatsCache: Option[Map[Long, (Long, Double)]] = None,
       bruteForceThreshold: Long = 200000L): DataFrame = {
     import spark.implicits._
-
-    val stats = bandStatsCache.getOrElse(bandStats(indexed, weightCol, bandCol))
-    val score = col(weightCol) * Distances.dotLit(col("embedding"), q)
-
-    def topK(base: DataFrame): Seq[Scored] = {
-      val filtered = pred.map(base.filter).getOrElse(base)
-      filtered.withColumn("dot", score)
-        .select(col("vec_id"), col("label"), col("dot"))
-        .orderBy(col("dot").desc, col("vec_id").asc)
-        .limit(k)
-        .collect()
-        .map(r => Scored(r.getLong(0), r.getInt(1), r.getDouble(2)))
-        .toSeq
-    }
-
-    if (stats.isEmpty) return spark.createDataset(Seq.empty[Scored]).toDF()
-
+    val stats = bandStatsCache.getOrElse(bandStats(indexed))
     val qNorm = math.sqrt(q.map(x => x * x).sum)
     // conservative ulp guard: the bound gates STOPPING only, so inflating
     // it can cost an extra band scan but never a wrong result
-    val ranked: Array[(Long, Double, Long)] = stats.toArray
-      .map { case (band, (n, mx)) =>
-        (band, qNorm * mx * (1 + 1e-9) + 1e-12, n) }
-      .sortBy { case (band, b, _) => (-b, band) }
-
-    if (stats.values.map(_._1).sum <= bruteForceThreshold)
-      return spark.createDataset(topK(indexed)).toDF()
-
-    var scanned = 0
-    var acc: Seq[Scored] = Seq.empty
-    var done = false
-    while (!done && scanned < ranked.length) {
-      // same widening shape as Knn.prunedSearch: cover >= 8k rows the first
-      // round, then double the scanned prefix — O(log bands) Spark jobs
-      var take = scanned
-      var cum = 0L
-      val target = math.max(8L * k, 1L)
-      while (take < ranked.length &&
-          (cum < target || take < math.max(scanned * 2, scanned + 1))) {
-        cum += ranked(take)._3
-        take += 1
-      }
-      acc = topK(indexed.filter(col(bandCol).isin(ranked.take(take).map(_._1).toSeq: _*)))
-      scanned = take
-      val kth = if (acc.size >= k) acc.last.dot else Double.NegativeInfinity
-      done = scanned >= ranked.length || ranked(scanned)._2 < kth
-    }
-    spark.createDataset(acc).toDF()
+    val hits = Knn.rankedSearch(indexed,
+      -(col("weight") * Distances.dotLit(col("embedding"), q)), k,
+      band => -(qNorm * stats(band)._2 * (1 + 1e-9) + 1e-12), pred,
+      stats.map { case (band, (n, _)) => band -> Knn.CellStats(n, None) },
+      bruteForceThreshold, cellCol = "band")
+    spark.createDataset(hits.map(n => Scored(n.vec_id, n.label, -n.dist))).toDF()
   }
 }

@@ -21,8 +21,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * [[graft.index.GridConfig]] and quantile-calibrated
   * [[graft.index.QuantileGridConfig]] stores alike.
   *
-  * This closes the loop the driver-side `Knn.prunedRadius` opens: there
-  * the CALLER must know about the index; here any query that merely
+  * This closes the loop the driver-side `Knn.prunedRadius` opens (it runs
+  * `Knn.radiusSearch` over the cells whose bound, priced by the caller, is
+  * ≤ r): there the CALLER must know about the index; here any query that merely
   * *filters by distance* — `spark.sql` text included — gets the pruning,
   * and on a store written `partitionBy("cell_id")` the injected IN
   * reaches the scan as a PARTITION filter, i.e. files for far cells are

@@ -181,9 +181,12 @@ object KnnQueries {
         s"""SELECT vec_id, label, ${DuckSql.mahalanobisFullLit("e8", Q8, InvFull8)} AS dist
            |FROM (SELECT vec_id, label, embedding[1:8] AS e8 FROM embeddings)
            |ORDER BY dist ASC, vec_id ASC LIMIT $K""".stripMargin),
-    // pruned == brute (exactness of the widening loop; oracle is the brute SQL)
+    // pruned == brute (exactness of the widening loop; oracle is the brute
+    // SQL). threshold 0 runs the loop: the fixture is below the brute path's
+    // 200k-row threshold
     QuerySpec("knn_l2_pruned", ((s, d) =>
-      Knn.prunedSearchDf(s, Grid.withCellId(emb(s, d), "embedding", gridCfg), gridCfg, Q64, K)),
+      Knn.prunedSearchDf(s, Grid.withCellId(emb(s, d), "embedding", gridCfg), gridCfg, Q64, K,
+        bruteForceThreshold = 0)),
       knnSql(sq, K)),
     // QUANTILE-calibrated grid (r11): bucket edges at the data's own exact
     // interpolated percentiles (one calibration aggregation, memoized like
@@ -193,13 +196,14 @@ object KnnQueries {
     // brute-force kNN SQL — any inadmissible bound would hash-fail here
     QuerySpec("knn_l2_quantile_grid", ((s, d) => {
       val qc = qgridCfg(s, d)
-      Knn.prunedSearchDf(s, Grid.withCellId(emb(s, d), "embedding", qc), qc, Q64, K)
+      Knn.prunedSearchDf(s, Grid.withCellId(emb(s, d), "embedding", qc), qc, Q64, K,
+        bruteForceThreshold = 0)
     }),
       // exact pruning ⇒ the quantile-grid search answers the SAME query
       knnSql(sq, K)),
     QuerySpec("knn_l2_pruned_filtered", ((s, d) =>
       Knn.prunedSearchDf(s, Grid.withCellId(emb(s, d), "embedding", gridCfg), gridCfg, Q64, K,
-        pred = Some(col("label") === 3))),
+        pred = Some(col("label") === 3), bruteForceThreshold = 0)),
       knnSql(sq, K, "WHERE label = 3")),
     // similarity search (north star): cosine top-k
     QuerySpec("sim_cosine_topk", ((s, d) =>
@@ -614,7 +618,9 @@ object KnnQueries {
     // cell-pruned radius: candidate cells known up front (bound ≤ r), one
     // scan, no widening loop; same oracle as the brute form (exactness)
     QuerySpec("knn_radius_pruned", ((s, d) =>
-      Knn.prunedRadius(Grid.withCellId(emb(s, d), "embedding", gridCfg), gridCfg, Q64, Radius)),
+      Knn.prunedRadius(Grid.withCellId(emb(s, d), "embedding", gridCfg),
+        Distances.squaredL2Lit(col("embedding"), Q64), Radius,
+        Grid.cellLowerBoundSqL2(Q64, _, gridCfg))),
         s"""SELECT vec_id, label, dist FROM (SELECT vec_id, label, $sq AS dist FROM embeddings)
            |WHERE dist <= ${DuckSql.fmt(Radius)} ORDER BY dist ASC, vec_id ASC""".stripMargin),
     // per-label centroid of the embedding space (class prototypes)

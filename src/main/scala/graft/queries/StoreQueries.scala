@@ -70,7 +70,8 @@ object StoreQueries {
     // cell-partitioned (partitionBy dirs = grid cells), read it back, and
     // answer pruned kNN off the LOADED store — candidate-cell pruning is
     // real file skipping here (PartitionPruneSpec pins the plan), and the
-    // result must still hash-match the plain kNN oracle
+    // result must still hash-match the plain kNN oracle (threshold 0 runs the
+    // widening loop: the fixture is below the brute path's threshold)
     QuerySpec("store_roundtrip_knn", ((s, d) => {
       // fixed, overwritten path — repeated Verify/Bench invocations reuse
       // one directory instead of accumulating temp copies of the store
@@ -89,7 +90,7 @@ object StoreQueries {
         .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
       val loaded = s.read.parquet(dir)
         .withColumn("cell_id", col("cell_id").cast("long"))
-      Knn.prunedSearchDf(s, loaded, gridCfg, Q64, K)
+      Knn.prunedSearchDf(s, loaded, gridCfg, Q64, K, bruteForceThreshold = 0)
     }),
       knnSql(sq, K)),
     // --- point ops / scans (SURVEY §2.1 #7-9)

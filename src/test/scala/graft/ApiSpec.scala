@@ -120,9 +120,8 @@ class ApiSpec extends SparkSpecBase {
     assert(res.map(n => (n.vec_id, n.dist)) === brute)
     // widening-loop path (bruteForceThreshold = 0): the Gershgorin·sqL2
     // cell bound must be admissible — pruned ≡ brute exactly
-    val pruned = operators.Knn.prunedSearch(db8.state, cfg8, Q8, 10,
-      cellBound = m.cellBound, distExpr = Some(m.dist(col("embedding"), Q8)),
-      bruteForceThreshold = 0L)
+    val pruned = operators.Knn.prunedSearch(db8.state, m.dist(col("embedding"), Q8), 10,
+      m.cellBound(Q8, _, cfg8), bruteForceThreshold = 0L)
     assert(pruned.map(n => (n.vec_id, n.dist)) === brute)
     // the bound itself never exceeds the true distance for any stored row
     val bounds = db8.state.select(col("cell_id"),
@@ -366,8 +365,8 @@ class ApiSpec extends SparkSpecBase {
     val (inR, jobs) = org.apache.spark.JobInputRows.of(sc)(radiusRows(faces, faceQ, r))
     assert(inR == bruteRadius(faces, faceQ, r))
     assert(inR.size >= 10)
-    // the sort's sampling job reads the scanned cells too
-    assert(jobs.nonEmpty && jobs.max == FaceRows, s"rows read per job: $jobs")
+    // the scanned cell is read once: the sort starts no sampling job
+    assert(jobs.sum == FaceRows, s"rows read per job: $jobs")
   }
 
   test("a cell holding a NaN coordinate has no box: it ranks and answers as by its grid bound") {
@@ -388,8 +387,8 @@ class ApiSpec extends SparkSpecBase {
       val first = knnTop(db, faceQ, 10, m)
       val (second, jobs) = org.apache.spark.JobInputRows.of(spark.sparkContext)(knnTop(db, faceQ, 10, m))
       val (byGrid, gridJobs) = org.apache.spark.JobInputRows.of(spark.sparkContext) {
-        Knn.prunedSearch(db.state, bigCfg, faceQ, 10, cellBound = m.cellBound,
-          distExpr = Some(dist), cellStatsCache = Some(stats)).map(n => (n.vec_id, n.dist))
+        Knn.prunedSearch(db.state, dist, 10, m.cellBound(faceQ, _, bigCfg),
+          cellStatsCache = Some(stats)).map(n => (n.vec_id, n.dist))
       }
       assert(first == bruteTop(db, faceQ, 10, m), s"$m")
       assert(second == first && byGrid == first, s"$m")
@@ -527,8 +526,8 @@ class ApiSpec extends SparkSpecBase {
       assert(facade.map(n => (n.vec_id, n.dist)) == Seq((0L, d0), (2L, d2)), s"k=$k")
       val stats = Some(Knn.cellStats(store.state, Some(2)))
       for (threshold <- Seq(Long.MaxValue, 0L); cache <- Seq(None, stats)) {
-        val res = Knn.prunedSearch(store.state, cfg2, q, k,
-          cellStatsCache = cache, bruteForceThreshold = threshold)
+        val res = Knn.prunedSearch(store.state, SquaredL2.dist(col("embedding"), q), k,
+          SquaredL2.cellBound(q, _, cfg2), cellStatsCache = cache, bruteForceThreshold = threshold)
         assert(res == facade, s"k=$k threshold=$threshold stats=${cache.isDefined}")
       }
     }

@@ -49,8 +49,7 @@ class KnnSpec extends SparkSpecBase {
     for ((name, dist, bound) <- cases; pred <- Seq(None, Some(col("label") === 3))) {
       val brute = Knn.bruteForce(emb, dist, 10, pred = pred).collect()
         .map(r => (r.getLong(0), r.getDouble(2)))
-      val pruned = Knn.prunedSearch(indexed, cfg, Q64, 10, pred = pred,
-        cellBound = bound, distExpr = Some(dist),
+      val pruned = Knn.prunedSearch(indexed, dist, 10, bound(Q64, _, cfg), pred,
         bruteForceThreshold = 0L).map(n => (n.vec_id, n.dist))
       assert(pruned === brute.toSeq, s"metric=$name pred=$pred")
     }
@@ -97,8 +96,7 @@ class KnnSpec extends SparkSpecBase {
       val brute = Knn.bruteForce(db, dist, k, pred = pred).collect()
         .map(r => (r.getLong(0), r.getDouble(2))).toSeq
       val (pruned, jobs) = org.apache.spark.JobInputRows.of(spark.sparkContext) {
-        Knn.prunedSearch(idx, cfg, q, k, pred = pred, cellBound = bound,
-          distExpr = Some(dist), cellStatsCache = cache, bruteForceThreshold = 0L)
+        Knn.prunedSearch(idx, dist, k, bound(q, _, cfg), pred, cache, bruteForceThreshold = 0L)
       }
       assert(pruned.map(n => (n.vec_id, n.dist)) == brute, s"$name k=$k cached=${cache.isDefined}")
       // with cached stats every job is one widening round
@@ -130,16 +128,52 @@ class KnnSpec extends SparkSpecBase {
     }
   }
 
+  private def l2Q64 = Distances.squaredL2Lit(col("embedding"), Q64)
+  private def l2Bound(q: Array[Double], g: GridGeometry): Long => Double =
+    Grid.cellLowerBoundSqL2(q, _, g)
+
   test("kNN on empty DB returns empty (tests:70-77)") {
     val empty = indexed.filter(lit(false))
-    val res = Knn.prunedSearch(empty, Shared.gridCfg, Q64, 5)
+    val res = Knn.prunedSearch(empty, l2Q64, 5, l2Bound(Q64, Shared.gridCfg))
     assert(res.isEmpty)
   }
 
   test("k larger than row count returns all rows") {
     val five = Grid.withCellId(emb.limit(5), "embedding", Shared.gridCfg)
-    val res = Knn.prunedSearch(five, Shared.gridCfg, Q64, 100)
+    val res = Knn.prunedSearch(five, l2Q64, 100, l2Bound(Q64, Shared.gridCfg))
     assert(res.size === 5)
+  }
+
+  test("brute force ranks a null distance after every defined one") {
+    import spark.implicits._
+    // row 1's null coordinate makes its distance null: absent from a top-2,
+    // last in a top-3, as in the oracles' ORDER BY dist ASC (nulls last)
+    val db = Seq((0L, Seq(Some(0.1f), Some(0.1f)), 0), (1L, Seq(None, Some(0.2f)), 1),
+      (2L, Seq(Some(0.3f), Some(0.3f)), 2)).toDF("vec_id", "embedding", "label")
+    val dist = Distances.squaredL2Lit(col("embedding"), Array(0.0, 0.0))
+    def top(k: Int) = Knn.bruteForce(db, dist, k).collect()
+      .map(r => (r.getLong(0), if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq
+    val d0 = Some(2 * 0.1f.toDouble * 0.1f.toDouble)
+    val d2 = Some(2 * 0.3f.toDouble * 0.3f.toDouble)
+    assert(top(2) == Seq((0L, d0), (2L, d2)))
+    assert(top(3) == Seq((0L, d0), (2L, d2), (1L, None)))
+  }
+
+  test("a bound that cannot ship to executors is priced on the driver: equals brute") {
+    // the no-stats path prices cells in a UDF; a closure holding a
+    // non-serializable object fails task serialization and falls back to
+    // ranking the cells on the driver
+    val driverOnly = new Object
+    val bound: Long => Double = cell => {
+      driverOnly.hashCode
+      Grid.cellLowerBoundSqL2(Q64, cell, Shared.gridCfg)
+    }
+    for (pred <- Seq(None, Some(col("label") === 3))) {
+      val brute = Knn.bruteForce(emb, l2Q64, 10, pred).collect()
+        .map(r => (r.getLong(0), r.getDouble(2))).toSeq
+      val pruned = Knn.prunedSearch(indexed, l2Q64, 10, bound, pred, bruteForceThreshold = 0L)
+      assert(pruned.map(n => (n.vec_id, n.dist)) == brute, s"pred=$pred")
+    }
   }
 
   test("index invariant: sum of per-cell counts equals total (tests:20-28)") {
@@ -186,7 +220,7 @@ class KnnSpec extends SparkSpecBase {
       val brute = Knn.radiusSearch(emb,
           Distances.squaredL2Lit(col("embedding"), Q64), r, pred = pred)
         .collect().map(x => (x.getLong(0), x.getDouble(2))).toSeq
-      val pruned = Knn.prunedRadius(indexed, cfg, Q64, r, pred = pred)
+      val pruned = Knn.prunedRadius(indexed, l2Q64, r, l2Bound(Q64, cfg), pred)
         .collect().map(x => (x.getLong(0), x.getDouble(2))).toSeq
       assert(pruned === brute, s"r=$r pred=$pred")
     }
@@ -194,6 +228,6 @@ class KnnSpec extends SparkSpecBase {
 
   test("radius search on empty DB returns empty") {
     val empty = indexed.filter(lit(false))
-    assert(Knn.prunedRadius(empty, Shared.gridCfg, Q64, 2.0).count() === 0)
+    assert(Knn.prunedRadius(empty, l2Q64, 2.0, l2Bound(Q64, Shared.gridCfg)).count() === 0)
   }
 }

@@ -79,6 +79,25 @@ class MipsSpec extends SparkSpecBase {
     assert(ex.getMessage.contains("NULL"))
   }
 
+  test("a null score is never returned and a NaN score ranks last") {
+    import spark.implicits._
+    // row 1 (alone in its band) has a null coordinate, so a null score;
+    // row 3 has a NaN one. Rows 0 and 2 tie at 1.0
+    val tiny = Seq(
+      (0L, Seq(Some(0.5f), Some(0.5f)), 1.0, 0L),
+      (1L, Seq(None, Some(0.5f)), 1.0, 1L),
+      (2L, Seq(Some(0.25f), Some(0.25f)), 2.0, 0L),
+      (3L, Seq(Some(Float.NaN), Some(0.0f)), 1.0, 2L),
+      (4L, Seq(Some(-0.5f), Some(0.0f)), 1.0, 0L))
+      .toDF("vec_id", "embedding", "weight", "band").withColumn("label", lit(0))
+    for (threshold <- Seq(0L, Long.MaxValue)) {
+      val got = Mips.prunedTopK(spark, tiny, Array(1.0, 1.0), 5, bruteForceThreshold = threshold)
+        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+      assert(got.map(_._1) == Seq(0L, 2L, 4L, 3L), s"threshold=$threshold")
+      assert(got.take(3).map(_._2) == Seq(1.0, 1.0, -0.5) && got(3)._2.isNaN, s"threshold=$threshold")
+    }
+  }
+
   test("band stats cache short-circuits recomputation") {
     val stats = Mips.bandStats(store)
     assert(stats.size === 10 && stats.values.map(_._1).sum === 500)
