@@ -149,7 +149,8 @@ object PlanAudit {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.prepareFixtures(spark, sfDir) catch { case _: Throwable => () }
+    try SparkEntry.prepareFixtures(spark, sfDir)
+    catch { case e: Throwable => System.err.println(s"[planaudit] prepareFixtures failed: $e") }
 
     val sb = new StringBuilder
     // title derives from the artifact name (PLANS_r16.md -> "round 16")
@@ -172,7 +173,8 @@ object PlanAudit {
       // execute BEFORE explaining: with AQE the pre-execution dump is the
       // initial plan (isFinalPlan=false, no codegen ids, no runtime
       // broadcast conversion) — the audit wants the plan that actually ran
-      try { df.collect(); () } catch { case _: Throwable => () }
+      try { df.collect(); () }
+      catch { case e: Throwable => System.err.println(s"[planaudit] query $name failed: $e") }
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       // count operators in the plan TREE only (formatted mode repeats each
       // node as a detail section below the tree); codegen spans show up as

@@ -122,11 +122,10 @@ object ScaleProbe extends App {
           .as("maxsim"))
       .orderBy(col("maxsim").desc, col("vec_id").asc).limit(10).count()
   }
-  // kNN JOIN comparison in the cell join's regime: LOW-dim fully-gridded
-  // data (at 64 dims with 3 gridded, no box short of everything certifies
-  // the full-dim kth distance — curse of dimensionality; that regime
-  // belongs to the brute-force KnnJoinPlan join or IVF/LSH, see
-  // KnnCellJoin docs). The two batch joins: cell-pruned vs brute force.
+  // kNN JOIN comparison on LOW-dim fully-gridded data. The cell join ranks
+  // cells by grid bounds raised to the cells' data-box bounds, so it prunes
+  // 64-dim stores gridded in 3 dims too; here every dim is gridded. The two
+  // batch joins: cell-pruned vs brute force.
   val cfg4 = GridConfig(dim = 4, lower = -0.6, upper = 0.6, partsPerDim = 8, gridDims = 4)
   val db4 = Grid.withCellId(
     big.select(col("vec_id"), slice(col("embedding"), 1, 4).as("embedding")),

@@ -3,7 +3,7 @@ package graft.api
 import graft.functions.{Distances, VecMetric}
 import graft.index.{Grid, GridConfig, GridGeometry}
 import graft.operators.{Knn, Snapshot}
-import graft.plans.{GridRadiusPruning, KnnJoinPlan}
+import graft.plans.KnnJoinPlan
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -183,35 +183,16 @@ final class VectorDatabase private (
     val defaultMetric: Metric,
     private val nextIdBase: Long) {
 
-  /** cell_id → rows and box of this snapshot, filled by one aggregation on
-    * first use. Held only while the geometry's cell count is within the
-    * driver cap shared with the prune rule
-    * ([[GridRadiusPruning.MaxEnumCells]]); larger geometries keep the
-    * distributed stats path of [[Knn.prunedSearch]]. The boxes (2·dim
-    * floats per non-empty cell) are held only while cells × dim is within
-    * the same cap; past it the stats hold rows alone and the grid bound
-    * prunes alone. */
-  private lazy val cellStats: Option[Map[Long, Knn.CellStats]] =
-    if (cfg.numCells > GridRadiusPruning.MaxEnumCells) None
-    else Some(Knn.cellStats(state,
-      Some(cfg.dim).filter(_ => cfg.numCells * cfg.dim <= GridRadiusPruning.MaxEnumCells)))
+  /** cell_id → rows and box of this snapshot ([[Knn.cellStats]]), filled
+    * by one aggregation on first use. */
+  private lazy val cellStats: Option[Map[Long, Knn.CellStats]] = Knn.cellStats(state, cfg)
 
-  /** The cell bound `m` prunes with for `q` on this snapshot: its grid
-    * bound, raised to its box bound where the stats hold the cell's box. A
-    * NaN box bound raises nothing. Captures no snapshot, so the distributed
-    * stats path can ship it to executors. */
+  /** The cell bound `m` prunes with for `q` on this snapshot
+    * ([[Knn.cellBound]]). Captures no snapshot, so the distributed stats
+    * path can ship it to executors. */
   private def cellBound(m: Metric, q: Array[Double]): Long => Double = {
     val g = cfg
-    cellStats match {
-      case None => m.cellBound(q, _, g)
-      case Some(stats) => cell => {
-        val grid = m.cellBound(q, cell, g)
-        stats.get(cell).flatMap(_.box) match {
-          case Some((lo, hi)) => val box = m.boxBound(q, lo, hi); if (box > grid) box else grid
-          case None => grid
-        }
-      }
-    }
+    Knn.cellBound(m.cellBound(q, _, g), m.boxBound(q, _, _), cellStats)
   }
 
   /** dim accessor (reference database.py:22-25). */

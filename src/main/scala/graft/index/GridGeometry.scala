@@ -32,7 +32,7 @@ sealed trait GridGeometry {
   /** Driver-side bucket of coordinate x on dim d — same math as [[bucket]]. */
   def bucketOf(x: Double, d: Int): Int
   /** Bucket of a DOUBLE coordinate Column on dim d (IntegerType). Builds
-    * `cell_id` and the box endpoints of the cell join. */
+    * `cell_id`. */
   def bucket(x: Column, d: Int): Column
   /** Stable geometry fingerprint, stamped into the `cell_id` column's
     * metadata under [[fpMetaKey]] by [[Grid.withCellId]]: it binds a cell_id
@@ -41,11 +41,6 @@ sealed trait GridGeometry {
   def fpMetaKey: String
   /** Registry encoding, read back by [[GridGeometry.parse]]. */
   def encoded: String
-  /** The cell join's box `[x − s, x + s]` spans every bucket of dim d. */
-  def boxCovers(x: Column, d: Int, s: Double): Column
-  /** The cell join's first and last widening radius. */
-  def joinStartRadius: Double
-  def joinMaxRadius: Double
 
   protected def md5Prefix(canonical: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -132,14 +127,6 @@ final case class GridConfig(
   lazy val fingerprint: String = md5Prefix(s"$dim,$lower,$upper,$partsPerDim,$gridDims")
   def fpMetaKey: String = GridGeometry.EqualWidthFpKey
   def encoded: String = s"g:$dim,$lower,$upper,$partsPerDim,$gridDims"
-
-  def boxCovers(x: Column, d: Int, s: Double): Column =
-    (x - lit(s) <= lit(lower)) && (x + lit(s) >= lit(upper))
-  // Any finite in-bounds query certifies or full-covers by s ≥ diameter;
-  // beyond 4× diameter only NaN components or absurdly far out-of-bounds
-  // queries remain, and those leave through the join's brute-force escape.
-  def joinStartRadius: Double = width
-  def joinMaxRadius: Double = 4.0 * (upper - lower)
 }
 
 /** Quantile-calibrated grid — the data-adaptive option next to
@@ -196,16 +183,4 @@ final case class QuantileGridConfig(dim: Int, boundaries: Seq[Seq[Double]])
     md5Prefix(s"q:$dim:" + boundaries.map(_.map(_.toString).mkString(",")).mkString(";"))
   def fpMetaKey: String = GridGeometry.QuantileFpKey
   def encoded: String = s"q:$dim:" + boundaries.map(_.mkString(",")).mkString("|")
-
-  // full cover = the box spans bucket 0 .. last (edge buckets are
-  // open-ended, so that candidate set IS every cell)
-  def boxCovers(x: Column, d: Int, s: Double): Column =
-    (x - lit(s) < lit(boundaries(d).head)) && (x + lit(s) >= lit(boundaries(d).last))
-  // Correctness never depends on the schedule (stragglers exit via brute
-  // force): start at the mean interior boundary gap, cap at 4× the widest
-  // boundary span, with floors for degenerate one-boundary dims.
-  def joinStartRadius: Double = math.max(1e-6,
-    boundaries.map(bs => if (bs.size >= 2) (bs.last - bs.head) / (bs.size - 1) else 0.0).max)
-  def joinMaxRadius: Double = math.max(
-    4.0 * boundaries.map(bs => bs.last - bs.head).max, joinStartRadius * 256)
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.{Distances, VecBox}
 import graft.index.{Grid, GridGeometry}
-import graft.plans.KnnJoinExec
+import graft.plans.{GridRadiusPruning, KnnJoinExec}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,6 +23,10 @@ import org.apache.spark.sql.functions._
   * brute force, grid-pruned kNN, radius search and [[Mips]]'s banded
   * max-inner-product top-k share one scan-and-rank body ([[bruteForce]]),
   * one pruned entry ([[prunedSearch]]) and one widening loop ([[widen]]).
+  * Its index decisions — the per-cell stats ([[cellStats]]), the cell
+  * bound ([[cellBound]]), the ranking ([[rank]]), the round size
+  * ([[roundEnd]]) and the stop rule ([[stops]]) — are written once here
+  * and shared with the batch [[KnnCellJoin]].
   *
   * Physical plan: `Scan → Filter → Project(+dist) → TakeOrderedAndProject`
   * — Spark's distributed top-k (per-partition heap + driver merge), the
@@ -72,7 +76,7 @@ object Knn {
     *
     * `bound` may be any cell pricing, of any geometry (equal-width or
     * quantile [[GridGeometry]] cells, or the grid bound raised to a data
-    * box bound as `VectorDatabase` ranks them); correctness needs only
+    * box bound, [[cellBound]]); correctness needs only
     * admissibility: `bound(cell)` ≤ the distance from the query to every
     * point bucketed into `cell`.
     *
@@ -127,6 +131,42 @@ object Knn {
       }.toMap
   }
 
+  /** The per-cell stats of a store indexed by `g`, when the driver may hold
+    * them: None past the cell cap shared with the prune rule
+    * ([[GridRadiusPruning.MaxEnumCells]]), where the distributed stats path
+    * of [[prunedSearch]] runs instead. The boxes (2·dim floats per
+    * non-empty cell) are held only while cells × dim is within the same
+    * cap; past it the stats hold rows alone and the grid bound prunes
+    * alone. */
+  def cellStats(indexed: DataFrame, g: GridGeometry): Option[Map[Long, CellStats]] =
+    if (g.numCells > GridRadiusPruning.MaxEnumCells) None
+    else Some(cellStats(indexed,
+      Some(g.dim).filter(_ => g.numCells * g.dim <= GridRadiusPruning.MaxEnumCells)))
+
+  /** The cell bound a search prunes with: the grid bound, raised to the box
+    * bound where the stats hold the cell's box. A NaN box bound raises
+    * nothing. Captures only its arguments, so the distributed stats path
+    * can ship it to executors. */
+  def cellBound(grid: Long => Double, box: (Array[Float], Array[Float]) => Double,
+      stats: Option[Map[Long, CellStats]]): Long => Double = stats match {
+    case None => grid
+    case Some(st) => cell => {
+      val g = grid(cell)
+      st.get(cell).flatMap(_.box) match {
+        case Some((lo, hi)) => val b = box(lo, hi); if (b > g) b else g
+        case None => g
+      }
+    }
+  }
+
+  /** The non-empty cells as (cell, bound, rows) in (bound ASC, cell ASC)
+    * order: the order every widening scans them in. */
+  private[operators] def rank(stats: Map[Long, CellStats],
+      bound: Long => Double): Array[(Long, Double, Long)] =
+    stats.toArray
+      .map { case (cell, st) => (cell, bound(cell), st.rows) }
+      .sortBy { case (cell, b, _) => (b, cell) }
+
   /** Cached-stats path: the caller holds the stats map (index-build
     * artifact, amortized across queries), so the cells are ranked on the
     * driver and the query runs no job over the whole store. `cellCol`
@@ -142,9 +182,7 @@ object Knn {
       bruteForceThreshold: Long,
       cellCol: String = "cell_id"): Seq[Neighbor] = {
     if (stats.isEmpty) return Seq.empty // empty DB → empty result (tests:70-77)
-    val ranked: Array[(Long, Double, Long)] = stats.toArray
-      .map { case (cell, st) => (cell, bound(cell), st.rows) }
-      .sortBy { case (cell, b, _) => (b, cell) }
+    val ranked = rank(stats, bound)
     widen(indexed, cellCol, dist, k, pred, bruteForceThreshold,
       nCells = ranked.length.toLong, totalRows = ranked.map(_._3).sum,
       entry = i => ranked(i.toInt))
@@ -226,7 +264,9 @@ object Knn {
       .collect { case r if !r.isNullAt(2) => Neighbor(r.getLong(0), r.getInt(1), r.getDouble(2)) }
       .toSeq
 
-  /** The one widening loop, over an abstract ranked-cell accessor.
+  /** The single-query widening loop, over an abstract ranked-cell accessor.
+    * Its round size ([[roundEnd]]) and stop rule ([[stops]]) are the batch
+    * [[KnnCellJoin]]'s too.
     * `entry(i)` must return the i-th non-empty cell as (cell, lowerBound,
     * rowCount) in (bound ASC, cell ASC) order, for 0 ≤ i < nCells; a cell
     * is the set of rows whose `cellCol` holds its id.
@@ -255,32 +295,46 @@ object Knn {
     // way — the specs pin pruned ≡ brute with bruteForceThreshold = 0.
     if (totalRows <= bruteForceThreshold) return scanTopK(indexed, dist, k, pred)
 
-    // Widening loop. Because the filter can empty out any cell, count-based
-    // sizing is a heuristic only; correctness comes from the bound check.
     var scanned = 0L
     var acc: Seq[Neighbor] = Seq.empty
     var done = false
     while (!done && scanned < nCells) {
-      // Each round is a full Spark job (scan + top-k + collect), so round
-      // count dominates latency. First round: take cells covering ≥ 8k rows
-      // (filters and boundary effects make exactly-k too optimistic — one
-      // extra cell is far cheaper than another round). Later rounds: double
-      // the scanned prefix, so total rounds stay O(log cells).
-      var take = scanned
-      var cum = 0L
-      val target = math.max(8L * k, 1L)
-      while (take < nCells && (cum < target || take < math.max(scanned * 2, scanned + 1))) {
-        cum += entry(take)._3
-        take += 1
-      }
+      val take = roundEnd(scanned, nCells, k, entry(_)._3)
       val cells = (scanned until take).map(entry(_)._1)
       acc = mergeTopK(acc, scanTopK(indexed.filter(col(cellCol).isin(cells: _*)), dist, k, pred), k)
       scanned = take
-      val kth = if (acc.size >= k) acc.last.dist else Double.PositiveInfinity
-      done = scanned >= nCells || entry(scanned)._2 > kth
+      done = stops(scanned, nCells, entry(_)._2, acc.size, k, acc.last.dist)
     }
     acc
   }
+
+  /** The end of the next round over ranked cells `[scanned, end)`, `rows(i)`
+    * being the i-th cell's row count. Each round is a full Spark job (scan +
+    * top-k + collect), so round count dominates latency. First round: cells
+    * covering ≥ 8k rows (filters and boundary effects make exactly-k too
+    * optimistic — one extra cell is far cheaper than another round). Later
+    * rounds: double the scanned prefix, so total rounds stay O(log cells).
+    * Because a filter can empty out any cell, count-based sizing is a
+    * heuristic only; correctness comes from [[stops]]. */
+  private[operators] def roundEnd(scanned: Long, nCells: Long, k: Int, rows: Long => Long): Long = {
+    var take = scanned
+    var cum = 0L
+    val target = math.max(8L * k, 1L)
+    while (take < nCells && (cum < target || take < math.max(scanned * 2, scanned + 1))) {
+      cum += rows(take)
+      take += 1
+    }
+    take
+  }
+
+  /** The stop rule of every widening: done once no cell is left, or once
+    * the next cell's bound exceeds the kth distance kept (+∞ while fewer
+    * than k are kept) — the reference's `bound > current_neighbors[-1]`
+    * break (kd_tree_database.py:213-218). Exact for an admissible `bound`:
+    * no unscanned cell holds a point nearer than the kth. */
+  private[operators] def stops(next: Long, nCells: Long, bound: Long => Double,
+      kept: Int, k: Int, kth: => Double): Boolean =
+    next >= nCells || bound(next) > (if (kept >= k) kth else Double.PositiveInfinity)
 
   /** Top-k of two result lists under the scan's `(dist ASC, vec_id ASC)`
     * order, [[graft.plans.KnnJoinExec.before]]: doubles compare as Spark's

@@ -1,143 +1,105 @@
 package graft.operators
 
+import graft.api.SquaredL2
 import graft.functions.Distances
 import graft.index.{Grid, GridGeometry}
-import graft.plans.KnnJoinPlan
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.{KnnJoinExec, KnnJoinPlan}
+import graft.plans.KnnJoinExec.TopK
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exact batch kNN join with per-query candidate-cell pruning — the
   * engine's other batch join, the scale form of the brute-force
   * [[graft.plans.KnnJoinPlan]]: instead of |Q| × |db| distances, each
-  * query joins only the db cells inside its current search box, and
-  * unfinished queries widen their box geometrically.
+  * query joins only the db cells its own widening reaches.
   *
-  * Exactness: the box `[q − s, q + s]` per gridded dim contains every
-  * point within L2 distance `s` of `q` (any point outside has some
-  * |coord diff| > s, hence squared distance > s²). So once a query holds
-  * k hits with kth squared distance ≤ s², nothing outside the box can
-  * beat them — the same admissible-bound argument as the single-query
-  * widening loop (SURVEY §4 O1), vectorized over the query set.
+  * It widens as the single-query search does ([[Knn.prunedSearch]]), on
+  * the same decisions, written once in [[Knn]]: the store's per-cell stats
+  * ([[Knn.cellStats]]), each query's non-empty cells ranked by the
+  * squared-L2 grid bound raised to the cell's data-box bound
+  * ([[Knn.cellBound]], [[Knn.rank]]), the round size ([[Knn.roundEnd]]) and
+  * the stop rule ([[Knn.stops]]). The box bound prunes in every dim, so
+  * the join prunes on 64-dim vectors gridded in 3 dims as well as on
+  * fully gridded low-dim data. This is the REPOSE shape (ICDE 2021): a
+  * local bounded top-k per query under that query's own threshold.
   *
-  * Scale: per round, ONE equi-join on cell_id between the (small,
-  * broadcastable) exploded query×cells side and the cell-partitioned
-  * store — file-level pruning applies; rounds are O(log diameter); the
-  * finished queries leave the loop, so later (expensive, wide-box)
-  * rounds run on the stragglers only. The finished/remaining sets are
-  * query ids held on the driver (the query side is broadcast every round
-  * anyway, so its ids fit there by construction): each round costs two
-  * jobs, the checkpointed top-k and the finished-id collect.
+  * Exactness: the bounds are admissible for the squared-L2 column kernel
+  * ([[Distances.squaredL2Cols]]) with the query's float coordinates widened
+  * to double, as the kernel reads them, for every [[GridGeometry]]. Cells
+  * are disjoint, so the per-round top-k merged into the kept top-k
+  * ([[KnnJoinExec.merge]], top-k(S ∪ D) = merge(top-k(S), top-k(D))) is
+  * the top-k of every scanned cell, and a query stops only when no
+  * unscanned cell can beat its kth distance, or when its cells run out (a
+  * NaN or far out-of-bounds query ends that way).
   *
-  * One join for every [[GridGeometry]]: the loop sees the grid only
-  * through the geometry's bucket Column (applied to the box endpoints),
-  * its box-covers-all test and its widening radii, so the equal-width
-  * [[graft.index.GridConfig]] and the quantile-calibrated
-  * [[graft.index.QuantileGridConfig]] (whose balanced cells are exactly
-  * what skewed corpora need — 19,980 vs 977,885 max-cell at 1M rows,
-  * SCALE_NOTES) share one implementation. The box argument above never
-  * references bucket geometry, so exactness is untouched: a point outside
-  * the candidate cells of `[q−s, q+s]` sits in some dim's bucket strictly
-  * outside the span's bucket range, hence its coordinate is beyond a
-  * boundary that itself lies outside the span — squared distance > s².
-  *
-  * Dimensionality regime (measured in ScaleProbe): certification compares
-  * the FULL-dim kth distance against the gridded-dims box, so when most
-  * of the distance lives in ungridded dims (e.g. 64-dim vectors, 3
-  * gridded) no box short of everything certifies and the loop degenerates
-  * to a full scan plus round overhead — use [[graft.plans.KnnJoinPlan]]
-  * (exact) or [[Ann]] (IVF/LSH, approximate) there. In low-dim
-  * fully-gridded data (geo, PCA'd embeddings) the first rounds certify
-  * and the join touches a small cell fraction.
+  * Scale: per round, one collect — a broadcast (query, cell) pair table
+  * joined to the store filtered by `cell_id IN` the round's cells (file
+  * pruning on a cell-partitioned store), ranked by the bounded
+  * [[KnnTopK.topK]] aggregator and collected (≤ |Q|·k rows). The queries, their rankings and
+  * their kept top-k live on the driver: the query side is small by the
+  * join's contract. Finished queries leave the loop.
   */
 object KnnCellJoin {
-
-  /** All cell ids intersecting the per-dim bucket box of `[q−s, q+s]`,
-    * as ONE Column expression (flattened cross-product of per-dim bucket
-    * ranges — gridDims is plan-time constant). */
-  private[operators] def cellsInBox(v: Column, cfg: GridGeometry, s: Double): Column = {
-    val ranges = (0 until cfg.gridDims).map { d =>
-      val q = element_at(v, d + 1).cast("double")
-      sequence(cfg.bucket(q - lit(s), d).cast("long"), cfg.bucket(q + lit(s), d).cast("long"))
-    }
-    // fold dims into flat cell ids: acc × nextDimRange
-    ranges.zipWithIndex.tail.foldLeft(ranges.head) { case (acc, (rng, d)) =>
-      flatten(transform(acc, c => transform(rng, b => c + b * lit(cfg.weight(d)))))
-    }
-  }
-
-  /** The box of THIS query covers every grid cell (so its round-result is
-    * definitionally final — also the escape hatch for < k total rows and
-    * far-out-of-bounds queries whose kth bound can never certify). */
-  private def coversAll(v: Column, cfg: GridGeometry, s: Double): Column =
-    (0 until cfg.gridDims).map { d =>
-      cfg.boxCovers(element_at(v, d + 1).cast("double"), d, s)
-    }.reduce(_ && _)
 
   /** Exact batch kNN join: identical results to the brute
     * [[graft.plans.KnnJoinPlan]] join (the oracle contract). `queries`
     * provides (query_id, embedding), `indexedDb` (vec_id, embedding,
-    * cell_id). Queries that never certify (NaN components, absurdly far
-    * out-of-bounds) stop widening at the geometry's `joinMaxRadius` and
-    * get exact brute-force results instead of looping forever. */
+    * cell_id); the result is (query_id, vec_id, dist, rn). A stored row
+    * whose distance is null (a null coordinate) is never returned. A store
+    * of at most `bruteForceThreshold` rows, or one whose geometry has more
+    * cells than the driver holds stats for, runs the brute-force join. */
   def join(queries: DataFrame, indexedDb: DataFrame, cfg: GridGeometry, k: Int,
       bruteForceThreshold: Long = 200000L): DataFrame = {
     // Query-side dim validation (the reference asserts vector shape on every
-    // call, kd_tree_database.py:84-85): a null or short query embedding would
-    // otherwise vanish from cellsInBox/coversAll and loop forever.
-    val qs0 = Grid.requireDim(queries, "embedding", cfg.dim)
+    // call, kd_tree_database.py:84-85): a null or short query embedding fails.
+    val qs = Grid.requireDim(queries, "embedding", cfg.dim)
       .select(col("query_id"), col("embedding"))
       .localCheckpoint(true)
-    // Exact brute-force join over a query subset — the fast path for small
-    // stores AND the escape hatch for uncertifiable stragglers.
-    def bruteOn(qs: DataFrame): DataFrame = KnnJoinPlan.join(qs, indexedDb, k)
+    val rows = qs.collect()
     // Cost-based path choice (same rule as Knn.prunedSearch): below the
-    // threshold the widening loop's per-round jobs cost more than one
-    // brute-force join; above it, cell pruning skips most of the db per
-    // query. Identical results either way (specs pin threshold = 0).
-    if (indexedDb.count() <= bruteForceThreshold) return bruteOn(qs0)
-
-    val allIds = qs0.select(col("query_id")).collect().map(_.get(0))
-    var remainingIds: Set[Any] = allIds.toSet
-    // membership as `isin` literal filters over the checkpointed queries
-    def remaining: DataFrame =
-      if (remainingIds.size == allIds.length) qs0
-      else qs0.filter(col("query_id").isin(remainingIds.toSeq: _*))
-    var s = cfg.joinStartRadius
-    val accParts = Seq.newBuilder[DataFrame]
-    while (remainingIds.nonEmpty && s <= cfg.joinMaxRadius) {
-      val rem = remaining
-      val cand = rem.withColumn("cell_id", explode(cellsInBox(col("embedding"), cfg, s)))
-      // bounded top-k AGGREGATOR, not a window: the shuffle carries ≤ k
-      // rows per query per map task — a window would shuffle and sort
-      // EVERY candidate pair (measured 7× slower at 1M rows in ScaleProbe)
-      val topk = KnnTopK.topK(
-          broadcast(cand.withColumnRenamed("embedding", "q_embedding"))
-            .join(indexedDb, "cell_id")
-            .select(col("query_id"), col("vec_id"),
-              Distances.squaredL2Cols(col("q_embedding"), col("embedding"), cfg.dim).as("dist")),
-          k)
-        .localCheckpoint(true)
-      // DONE: k hits with kth dist <= s² (nothing outside the box can beat
-      // them), or the box already spans every cell.
-      val certified = topk.groupBy(col("query_id"))
-        .agg(count(lit(1)).as("n"), max(col("dist")).as("kth"))
-        .filter(col("n") === k && col("kth") <= lit(s * s))
-        .select(col("query_id"))
-      val fullCover = rem.filter(coversAll(col("embedding"), cfg, s))
-        .select(col("query_id"))
-      val finished = certified.unionByName(fullCover).distinct()
-        .collect().map(_.get(0)).toSet
-      if (finished.nonEmpty) {
-        accParts += topk.filter(col("query_id").isin(finished.toSeq: _*))
-        remainingIds --= finished
-      }
-      s *= 4
+    // threshold the widening rounds cost more than one brute-force join.
+    // Identical results either way (specs pin threshold = 0).
+    val stats = Knn.cellStats(indexedDb, cfg) match {
+      case Some(st) if st.valuesIterator.map(_.rows).sum > bruteForceThreshold => st
+      case _ => return KnnJoinPlan.join(qs, indexedDb, k)
     }
-    // Escape hatch for stragglers the box logic can never certify: exact
-    // brute force — always correct, and no more work than the all-cells box
-    // they were widening toward.
-    if (remainingIds.nonEmpty) accParts += bruteOn(remaining)
-    accParts.result().reduceOption(_ unionByName _)
-      .getOrElse(qs0.sparkSession.emptyDataFrame)
+    val spark = qs.sparkSession
+    import spark.implicits._
+    val vecs = rows.map(_.getSeq[Float](1).toArray)
+    val ranked = vecs.map { v =>
+      val q = v.map(_.toDouble)
+      Knn.rank(stats, Knn.cellBound(SquaredL2.cellBound(q, _, cfg), SquaredL2.boxBound(q, _, _),
+        Some(stats)))
+    }
+    val nCells = stats.size.toLong
+    // the query side of every round, keyed by row index: a query id may repeat
+    val qtab = vecs.toSeq.zipWithIndex.map(_.swap).toDF("query_id", "q_embedding")
+    val scanned = Array.fill(rows.length)(0L)
+    val kept = Array.fill(rows.length)(new TopK(Array.emptyLongArray, Array.emptyDoubleArray))
+    var live: Seq[Int] = rows.indices
+    while (live.nonEmpty) {
+      val ends = live.map(i => Knn.roundEnd(scanned(i), nCells, k, j => ranked(i)(j.toInt)._3))
+      val pairs = live.zip(ends).flatMap { case (i, end) =>
+        (scanned(i) until end).map(j => (i, ranked(i)(j.toInt)._1))
+      }
+      val cands = broadcast(pairs.toDF("query_id", "cell_id").join(qtab, "query_id"))
+        .join(indexedDb.filter(col("cell_id").isin(pairs.map(_._2).distinct: _*)), "cell_id")
+        .select(col("query_id"), col("vec_id"),
+          Distances.squaredL2Cols(col("q_embedding"), col("embedding"), cfg.dim).as("dist"))
+      KnnTopK.topK(cands, k).as[KnnTopK.Result].collect().groupBy(_.query_id).foreach {
+        case (i, rs) =>
+          val r = rs.sortBy(_.rn)
+          kept(i.toInt) = KnnJoinExec.merge(kept(i.toInt), new TopK(r.map(_.vec_id), r.map(_.dist)), k)
+      }
+      live.zip(ends).foreach { case (i, end) => scanned(i) = end }
+      live = live.filterNot(i => Knn.stops(scanned(i), nCells, j => ranked(i)(j.toInt)._2,
+        kept(i).ids.length, k, kept(i).dists(k - 1)))
+    }
+    // rows sharing a query id merge, as KnnJoinExec merges them
+    val ids = rows.map(_.getAs[Number](0).longValue)
+    rows.indices.groupBy(ids(_)).toSeq.flatMap { case (id, is) =>
+      val t = is.map(kept(_)).reduce(KnnJoinExec.merge(_, _, k))
+      t.ids.indices.map(r => KnnTopK.Result(id, t.ids(r), t.dists(r), r + 1))
+    }.toDF()
   }
 }

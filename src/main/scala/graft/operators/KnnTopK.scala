@@ -26,13 +26,21 @@ import org.apache.spark.sql.functions._
   */
 object KnnTopK {
 
-  case class Cand(query_id: Long, vec_id: Long, dist: Double)
+  /** A candidate; its `dist` is null when the kernel's is (a null
+    * coordinate), and such a candidate is never ranked. */
+  case class Cand(query_id: Long, vec_id: Long, dist: java.lang.Double)
   case class Result(query_id: Long, vec_id: Long, dist: Double, rn: Int)
 
   private val empty = new TopK(Array.emptyLongArray, Array.emptyDoubleArray)
 
-  /** The ≤k [[TopK]] buffer both aggregators keep per query. */
+  /** The ≤k [[TopK]] buffer both aggregators keep per query. A candidate
+    * whose distance is null is dropped here, inside the aggregation: an
+    * `isNotNull` filter on `dist` would be pushed below the projection and
+    * evaluate the kernel twice per candidate. */
   abstract class BoundedAgg extends Aggregator[Cand, TopK, TopK] {
+    final def reduce(buf: TopK, c: Cand): TopK =
+      if (c.dist == null) buf else add(buf, c.vec_id, c.dist)
+    protected def add(buf: TopK, id: Long, d: Double): TopK
     def zero: TopK = empty
     def finish(r: TopK): TopK = r
     def bufferEncoder: Encoder[TopK] = Encoders.kryo[TopK]
@@ -40,7 +48,7 @@ object KnnTopK {
   }
 
   class TopKAgg(k: Int) extends BoundedAgg {
-    def reduce(buf: TopK, c: Cand): TopK = KnnJoinExec.offer(buf, c.vec_id, c.dist, k)
+    protected def add(buf: TopK, id: Long, d: Double): TopK = KnnJoinExec.offer(buf, id, d, k)
     def merge(a: TopK, b: TopK): TopK = KnnJoinExec.merge(a, b, k)
   }
 
@@ -55,10 +63,9 @@ object KnnTopK {
     * larger dist: the kth entry only improves, and already beat the
     * evicted one. */
   class TopKDedupAgg(k: Int) extends BoundedAgg {
-    def reduce(buf: TopK, c: Cand): TopK = add(buf, c.vec_id, c.dist)
     def merge(a: TopK, b: TopK): TopK =
       b.ids.indices.foldLeft(a)((t, i) => add(t, b.ids(i), b.dists(i)))
-    private def add(buf: TopK, id: Long, d: Double): TopK = {
+    protected def add(buf: TopK, id: Long, d: Double): TopK = {
       var dup = 0
       while (dup < buf.ids.length && buf.ids(dup) != id) dup += 1
       if (dup == buf.ids.length) KnnJoinExec.offer(buf, id, d, k)
@@ -74,7 +81,8 @@ object KnnTopK {
 
   /** Bounded top-k over an arbitrary candidate set (columns query_id,
     * vec_id, dist) — the shuffle carries ≤ k rows per query per map task
-    * instead of every candidate. */
+    * instead of every candidate. A candidate whose distance is null is
+    * never returned. */
   def topK(cands: DataFrame, k: Int): DataFrame = rank(cands, new TopKAgg(k))
 
   private def rank(cands: DataFrame, agg: BoundedAgg): DataFrame = {

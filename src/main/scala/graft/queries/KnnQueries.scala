@@ -392,8 +392,9 @@ object KnnQueries {
         emb(s, d), k = 3)
         .orderBy(col("query_id"), col("rn"))),
       knnJoinSql),
-    // scale variant: per-query candidate cells + geometric widening (no
-    // |Q|×|db| cross product) — exact, same oracle as the cross form.
+    // scale variant: each query widens over its own ranked cells, by the
+    // single-query search's bounds, round size and stop rule (no |Q|×|db|
+    // cross product) — exact, same oracle as the cross form.
     // threshold 0: the declared query must exercise the loop it is named
     // for (production callers keep the cost-based default)
     QuerySpec("knn_join_l2_cells", ((s, d) =>
@@ -403,8 +404,8 @@ object KnnQueries {
         bruteForceThreshold = 0)
         .orderBy(col("query_id"), col("rn"))),
       knnJoinSql),
-    // QUANTILE-grid batch kNN join (r13): the widening loop's per-query
-    // candidate boxes priced off the calibrated boundary table instead of
+    // QUANTILE-grid batch kNN join (r13): the same cell join over cells
+    // whose grid bounds come from the calibrated boundary table instead of
     // the uniform bucket formula — the batch sibling of
     // knn_l2_quantile_grid, for skewed corpora where equal-width cells
     // pile up (19,980 vs 977,885 max-cell at 1M rows, SCALE_NOTES). Same

@@ -1,10 +1,12 @@
 package graft
 
+import graft.api.VectorDatabase
 import graft.core.Fixtures
 import graft.index.{Grid, GridConfig}
-import graft.operators.KnnCellJoin
+import graft.operators.{KnnCellJoin, KnnTopK}
 import graft.plans.KnnJoinPlan
 import graft.queries.Shared
+import org.apache.spark.JobInputRows
 import org.apache.spark.sql.functions._
 
 class KnnCellJoinSpec extends SparkSpecBase {
@@ -27,14 +29,14 @@ class KnnCellJoinSpec extends SparkSpecBase {
     assert(viaCells.toSeq == viaCross.toSeq)
   }
 
-  test("NaN-component query terminates via the brute-force escape; null/short query embeddings throw") {
+  test("NaN-component query terminates when its cells run out; null/short query embeddings throw") {
     val cfg = GridConfig(dim = 2, lower = -1.0, upper = 1.0, partsPerDim = 4, gridDims = 2)
     val db = (0L until 10L).map(i => (i, Array(i.toFloat / 10f, i.toFloat / 10f)))
       .toDF("vec_id", "embedding")
     val indexed = Grid.withCellId(db, "embedding", cfg)
 
-    // NaN comparisons are all false, so neither certification nor coversAll
-    // can ever fire — pre-fix this looped forever (ADVICE r1, medium).
+    // NaN comparisons are all false, so the stop rule never fires: the NaN
+    // query widens until its cells run out.
     val nanQ = Seq((100L, Array(Float.NaN, 0.2f)), (101L, Array(0.5f, 0.5f)))
       .toDF("query_id", "embedding")
     val out = KnnCellJoin.join(nanQ, indexed, cfg, k = 3, bruteForceThreshold = 0)
@@ -126,5 +128,62 @@ class KnnCellJoinSpec extends SparkSpecBase {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(viaCells == viaCross, s"trial $trial cfg=$cfg n=$n k=$k")
     }
+  }
+
+  private def sorted(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Int)] =
+    df.orderBy("query_id", "rn").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
+
+  test("a stored row whose distance is null is never returned: the cell join equals the brute join") {
+    val cfg = GridConfig(dim = 3, lower = -1.0, upper = 1.0, partsPerDim = 4, gridDims = 2)
+    // vec 10 sits in the query's cell with a null in the ungridded dim 2, so
+    // its cell_id is defined and its distance is null
+    val rows = (0L until 10L).map(i => (i, Seq[java.lang.Float](i / 10f, i / 10f, 0.5f))) :+
+      ((10L, Seq[java.lang.Float](0.45f, 0.45f, null)))
+    val db = rows.toDF("vec_id", "embedding")
+    val queries = Seq((1L, Array(0.45f, 0.45f, 0.5f))).toDF("query_id", "embedding")
+    def viaCells(k: Int) = sorted(KnnCellJoin.join(queries, Grid.withCellId(db, "embedding", cfg),
+      cfg, k, bruteForceThreshold = 0))
+    assert(viaCells(3) == sorted(KnnJoinPlan.join(queries, db, 3)))
+    // at k = 11 the brute join returns vec 10 at 0.25, having read its null
+    // as 0.0, so the cell join is checked against the 10 defined rows
+    val all = viaCells(11)
+    assert(all.map(_._2).sorted == (0L until 10L) && all.map(_._4) == (1 to 10))
+    // the aggregator drops it; no filter re-evaluates the kernel
+    val cands = crossCands(queries, db, 3)
+    val plan = KnnTopK.topK(cands, 3).queryExecution.optimizedPlan.toString
+    assert("vec_sql2_cols".r.findAllMatchIn(plan).size == 1, plan)
+    assert(KnnTopK.topKDedup(cands, 11).collect().length == 10)
+  }
+
+  test("the cell join prunes by the cells' data boxes in the ungridded dims") {
+    // a saved cell-partitioned store of two grid-adjacent clusters that differ
+    // only in the ungridded dims: `near` lies just below the dim-0 face at 0
+    // with dims 3..7 in [0, 0.01), `far` just above it with dims 3..7 in
+    // [0.9, 0.91). The far cell's grid bound is the 0.001 face gap alone,
+    // below the kth distance; its box bound is over 4.
+    val n = 300L
+    val cfg = GridConfig(dim = 8, lower = -1.0, upper = 1.0, partsPerDim = 4, gridDims = 3)
+    def u(d: Int) = pmod(xxhash64(col("id"), lit(d)), lit(1000000L)).cast("double") / 1e6
+    def part(near: org.apache.spark.sql.Column, far: org.apache.spark.sql.Column) =
+      when(col("id") < n, near).otherwise(far)
+    val emb = Seq(part(u(0) * -0.0199 - 0.0001, u(0) * 0.0199 + 0.0001)) ++
+      (1 to 2).map(d => u(d) * 0.01 + 0.3) ++
+      (3 until 8).map(d => part(u(d) * 0.01, u(d) * 0.01 + 0.9))
+    val df = spark.range(0, 2 * n).select(col("id").as("vec_id"),
+      array(emb: _*).cast("array<float>").as("embedding"), lit(0).as("label"))
+    val path = java.nio.file.Files.createTempDirectory("graftcellfaces").toString + "/store"
+    VectorDatabase.fromDataFrame(spark, df, cfg).save(path)
+    val store = VectorDatabase.load(spark, path, cfg).state
+    val queries = Seq((1L, Array(-0.001f, 0.305f, 0.305f, 0.005f, 0.005f, 0.005f, 0.005f, 0.005f)))
+      .toDF("query_id", "embedding")
+    val (viaCells, jobs) = JobInputRows.of(spark.sparkContext) {
+      sorted(KnnCellJoin.join(queries, store, cfg, k = 10, bruteForceThreshold = 0))
+    }
+    assert(viaCells == sorted(KnnJoinPlan.join(queries, store, k = 10)))
+    // the stats job reads the whole store; every scan round after it reads
+    // the near cell alone
+    val stats = jobs.indexOf(2 * n)
+    assert(stats >= 0 && jobs.drop(stats + 1).sum == n, s"rows read per job: $jobs")
   }
 }

@@ -199,14 +199,21 @@ class PropertySpec extends SparkSpecBase {
       (lo, hi, q, points, metrics, nanDim)
     }
     val vecRef = BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = false)
+    val qRef = BoundReference(1, ArrayType(FloatType, containsNull = false), nullable = false)
     val p = Prop.forAll(gen) { case (lo, hi, q, points, metrics, nanDim) =>
-      val kernels = metrics.map(m => ColumnBridge.expression(m.dist(ColumnBridge.column(vecRef), q)))
+      // each metric's literal-query kernel, then the squared-L2 column kernel
+      // of the batch cell join, whose query is a float vector read as double
+      val qf = q.map(_.toFloat)
+      val kernels = metrics.map(m => ColumnBridge.expression(m.dist(ColumnBridge.column(vecRef), q))) :+
+        ColumnBridge.expression(Distances.squaredL2Cols(
+          ColumnBridge.column(qRef), ColumnBridge.column(vecRef), q.length))
+      val bounds = metrics.map(_.boxBound(q, lo, hi)) :+ SquaredL2.boxBound(qf.map(_.toDouble), lo, hi)
       val compiled = GenerateUnsafeProjection.generate(kernels)
       val admissible = points.forall { x =>
-        val row = InternalRow(ArrayData.toArrayData(x))
+        val row = InternalRow(ArrayData.toArrayData(x), ArrayData.toArrayData(qf))
         val generated = compiled(row)
-        metrics.indices.forall { i =>
-          val b = metrics(i).boxBound(q, lo, hi)
+        kernels.indices.forall { i =>
+          val b = bounds(i)
           b >= 0.0 &&
           b <= kernels(i).eval(row).asInstanceOf[Double] && b <= generated.getDouble(i)
         }
