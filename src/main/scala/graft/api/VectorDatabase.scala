@@ -2,7 +2,7 @@ package graft.api
 
 import graft.functions.{Distances, VecMetric}
 import graft.index.{Grid, GridConfig, GridGeometry}
-import graft.operators.{Knn, Snapshot}
+import graft.operators.{CellRows, Knn, Snapshot}
 import graft.plans.KnnJoinPlan
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -175,6 +175,17 @@ object MahalanobisFull {
   * and its box bound, and scan only candidate cells. A mutation returns a
   * snapshot with no stats, never its parent's: an insert or a move can
   * fill a cell the parent did not have, or leave a cell's box.
+  *
+  * The same pass builds the snapshot's row cache
+  * ([[graft.operators.CellRows]]): the rows the stats job read, held, then
+  * shuffled once to one persisted (MEMORY_AND_DISK) partition per non-empty
+  * cell, the cell ↔ file identity `save()` writes. Each kNN widening round
+  * is then one RDD job over its cells' partitions, evaluating the filter
+  * and distance row by row with no SQL planning; a filter or metric that
+  * cannot be evaluated that way (a subquery, an aggregate) runs the Dataset
+  * rounds instead, with the same answer. Like the stats, the cache is never
+  * handed to a written snapshot, which builds its own; Spark's
+  * `ContextCleaner` releases it when the snapshot is garbage-collected.
   */
 final class VectorDatabase private (
     val spark: SparkSession,
@@ -183,9 +194,11 @@ final class VectorDatabase private (
     val defaultMetric: Metric,
     private val nextIdBase: Long) {
 
-  /** cell_id → rows and box of this snapshot ([[Knn.cellStats]]), filled
-    * by one aggregation on first use. */
-  private lazy val cellStats: Option[Map[Long, Knn.CellStats]] = Knn.cellStats(state, cfg)
+  /** This snapshot's index, built on first use from one pass over `state`:
+    * cell_id → rows and box ([[Knn.cellStats]]) and its rows, one cached
+    * partition per non-empty cell ([[CellRows]]). None past the stats cap. */
+  private[graft] lazy val cellRows: Option[CellRows] = CellRows(state, Knn.cellStats(_, cfg))
+  private def cellStats: Option[Map[Long, Knn.CellStats]] = cellRows.map(_.stats)
 
   /** The cell bound `m` prunes with for `q` on this snapshot
     * ([[Knn.cellBound]]). Captures no snapshot, so the distributed stats
@@ -277,8 +290,11 @@ final class VectorDatabase private (
       filter: Option[Column] = None,
       metric: Option[Metric] = None): Seq[Knn.Neighbor] = {
     val m = metric.getOrElse(defaultMetric)
-    Knn.prunedSearch(state, m.dist(col("embedding"), q), k, cellBound(m, q), filter,
-      cellStats)
+    val dist = m.dist(col("embedding"), q)
+    cellRows match {
+      case Some(rows) => Knn.cachedSearch(rows, dist, k, cellBound(m, q), filter)
+      case None => Knn.prunedSearch(state, dist, k, cellBound(m, q), filter)
+    }
   }
 
   /** Radius (range) search: every stored vector within distance `r` of

@@ -33,6 +33,14 @@ import org.apache.spark.sql.functions._
   * built-in equivalent of the reference's per-leaf truncate-and-merge
   * (kd_tree_database.py:159-161, 191-195). No full sort, no full shuffle;
   * scales linearly with executors at 100 TB.
+  *
+  * The facade's rounds skip that plan ([[cachedSearch]]): a snapshot holds
+  * its rows in a cache with one partition per non-empty cell
+  * ([[CellRows]]), and each round is one RDD job over its cells' partitions
+  * that evaluates the filter and distance row by row, so a query pays for
+  * no planning, as the reference's walk of its resident tree pays for
+  * none. A distance or filter that cannot be evaluated row by row (a
+  * subquery, an aggregate) runs the Dataset rounds above.
   */
 object Knn {
 
@@ -180,12 +188,31 @@ object Knn {
       pred: Option[Column],
       stats: Map[Long, CellStats],
       bruteForceThreshold: Long,
-      cellCol: String = "cell_id"): Seq[Neighbor] = {
+      cellCol: String = "cell_id"): Seq[Neighbor] =
+    rankedWiden(stats, bound, k, bruteForceThreshold, datasetScan(indexed, cellCol, dist, k, pred))
+
+  /** [[prunedSearch]] with cached stats, on a snapshot's row cache: each
+    * round (and the under-threshold scan, one round over every cell) is one
+    * RDD job over its cells' partitions of `rows`, with no SQL query
+    * ([[CellRows.scan]]). A distance or filter that cannot be evaluated row
+    * by row runs the Dataset rounds of [[rankedSearch]] instead. The
+    * ranking, round sizes, stop rule and answer are [[rankedSearch]]'s. */
+  private[graft] def cachedSearch(
+      rows: CellRows,
+      dist: Column,
+      k: Int,
+      bound: Long => Double,
+      pred: Option[Column],
+      bruteForceThreshold: Long = 200000L): Seq[Neighbor] =
+    rankedWiden(rows.stats, bound, k, bruteForceThreshold, rows.scan(dist, k, pred)
+      .getOrElse(datasetScan(rows.state, "cell_id", dist, k, pred)))
+
+  private def rankedWiden(stats: Map[Long, CellStats], bound: Long => Double, k: Int,
+      bruteForceThreshold: Long, scan: Option[Seq[Long]] => Seq[Neighbor]): Seq[Neighbor] = {
     if (stats.isEmpty) return Seq.empty // empty DB → empty result (tests:70-77)
     val ranked = rank(stats, bound)
-    widen(indexed, cellCol, dist, k, pred, bruteForceThreshold,
-      nCells = ranked.length.toLong, totalRows = ranked.map(_._3).sum,
-      entry = i => ranked(i.toInt))
+    widen(scan, k, bruteForceThreshold, nCells = ranked.length.toLong,
+      totalRows = ranked.map(_._3).sum, entry = i => ranked(i.toInt))
   }
 
   /** No-cache path: stats + bound pricing stay on the cluster; the driver
@@ -236,7 +263,8 @@ object Knn {
         }
         prefix(i.toInt)
       }
-      widen(indexed, "cell_id", dist, k, pred, bruteForceThreshold, nCells, totalRows, entry)
+      widen(datasetScan(indexed, "cell_id", dist, k, pred), k, bruteForceThreshold, nCells,
+        totalRows, entry)
     } catch {
       // A custom bound whose closure can't ship (captures a session, a
       // connection, …) fails at task serialization — fall back to pricing
@@ -264,12 +292,24 @@ object Knn {
       .collect { case r if !r.isNullAt(2) => Neighbor(r.getLong(0), r.getInt(1), r.getDouble(2)) }
       .toSeq
 
+  /** The Dataset scan of a widening: `scan(Some(cells))` is [[scanTopK]]
+    * of the rows whose `cellCol` holds one of `cells`, `scan(None)` that of
+    * every row. */
+  private def datasetScan(indexed: DataFrame, cellCol: String, dist: Column, k: Int,
+      pred: Option[Column]): Option[Seq[Long]] => Seq[Neighbor] = {
+    case None => scanTopK(indexed, dist, k, pred)
+    case Some(cells) => scanTopK(indexed.filter(col(cellCol).isin(cells: _*)), dist, k, pred)
+  }
+
   /** The single-query widening loop, over an abstract ranked-cell accessor.
     * Its round size ([[roundEnd]]) and stop rule ([[stops]]) are the batch
     * [[KnnCellJoin]]'s too.
     * `entry(i)` must return the i-th non-empty cell as (cell, lowerBound,
-    * rowCount) in (bound ASC, cell ASC) order, for 0 ≤ i < nCells; a cell
-    * is the set of rows whose `cellCol` holds its id.
+    * rowCount) in (bound ASC, cell ASC) order, for 0 ≤ i < nCells.
+    * `scan(Some(cells))` must return the top-k of the rows of `cells` whose
+    * distance is defined, and `scan(None)` that of the whole store: a
+    * Dataset round ([[datasetScan]]) or a round over a snapshot's row
+    * cache ([[CellRows.scan]]).
     *
     * Each round scans only the cells added since the last round and merges
     * their top-k into the kept top-k on the driver under the same total
@@ -278,22 +318,19 @@ object Knn {
     * distance as a rescan of the whole prefix would, and no cell is read
     * twice. */
   private def widen(
-      indexed: DataFrame,
-      cellCol: String,
-      dist: Column,
+      scan: Option[Seq[Long]] => Seq[Neighbor],
       k: Int,
-      pred: Option[Column],
       bruteForceThreshold: Long,
       nCells: Long,
       totalRows: Long,
       entry: Long => (Long, Double, Long)): Seq[Neighbor] = {
 
-    // Cost-based path choice: below the threshold, one codegen'd full scan
+    // Cost-based path choice: below the threshold, one full scan
     // is cheaper than the widening loop's multiple scan+collect jobs (the
     // per-job overhead, not the data, dominates small stores). Above it,
     // candidate-cell pruning skips whole files. Same exact result either
     // way — the specs pin pruned ≡ brute with bruteForceThreshold = 0.
-    if (totalRows <= bruteForceThreshold) return scanTopK(indexed, dist, k, pred)
+    if (totalRows <= bruteForceThreshold) return scan(None)
 
     var scanned = 0L
     var acc: Seq[Neighbor] = Seq.empty
@@ -301,7 +338,7 @@ object Knn {
     while (!done && scanned < nCells) {
       val take = roundEnd(scanned, nCells, k, entry(_)._3)
       val cells = (scanned until take).map(entry(_)._1)
-      acc = mergeTopK(acc, scanTopK(indexed.filter(col(cellCol).isin(cells: _*)), dist, k, pred), k)
+      acc = mergeTopK(acc, scan(Some(cells)), k)
       scanned = take
       done = stops(scanned, nCells, entry(_)._2, acc.size, k, acc.last.dist)
     }

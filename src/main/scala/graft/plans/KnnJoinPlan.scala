@@ -465,44 +465,48 @@ object KnnJoinExec {
             s"KnnJoinExec: data vector id=$id has dim ${arr.numElements()}, " +
               s"the queries have dim $dim; mixed-dimension input is a data " +
               "error (validate at ingest, cf. Grid.requireDim)")
+        // a null element gives the row no distance, as in the kernels and
+        // the DuckDB oracles, so the row is skipped
         var j = 0
-        while (j < dim) { v(j) = arr.getFloat(j).toDouble; j += 1 }
-        rows += 1
-        var i = 0
-        while (i < nq) {
-          val t0 = b.threshold(i); val t1 = b.threshold(i + 1)
-          val t2 = b.threshold(i + 2); val t3 = b.threshold(i + 3)
-          val o0 = i * dim; val o1 = o0 + dim; val o2 = o1 + dim; val o3 = o2 + dim
-          var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-          j = 0
-          while (j < dim && !(s0 > t0 && s1 > t1 && s2 > t2 && s3 > t3)) {
-            val end = if (j + Chunk < dim) j + Chunk else dim
-            if (m == SqL2) while (j < end) {
-              val x = v(j)
-              val d0 = qv(o0 + j) - x; val d1 = qv(o1 + j) - x
-              val d2 = qv(o2 + j) - x; val d3 = qv(o3 + j) - x
-              s0 += d0 * d0; s1 += d1 * d1; s2 += d2 * d2; s3 += d3 * d3
-              j += 1
+        while (j < dim && !arr.isNullAt(j)) { v(j) = arr.getFloat(j).toDouble; j += 1 }
+        if (j == dim) {
+          rows += 1
+          var i = 0
+          while (i < nq) {
+            val t0 = b.threshold(i); val t1 = b.threshold(i + 1)
+            val t2 = b.threshold(i + 2); val t3 = b.threshold(i + 3)
+            val o0 = i * dim; val o1 = o0 + dim; val o2 = o1 + dim; val o3 = o2 + dim
+            var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+            j = 0
+            while (j < dim && !(s0 > t0 && s1 > t1 && s2 > t2 && s3 > t3)) {
+              val end = if (j + Chunk < dim) j + Chunk else dim
+              if (m == SqL2) while (j < end) {
+                val x = v(j)
+                val d0 = qv(o0 + j) - x; val d1 = qv(o1 + j) - x
+                val d2 = qv(o2 + j) - x; val d3 = qv(o3 + j) - x
+                s0 += d0 * d0; s1 += d1 * d1; s2 += d2 * d2; s3 += d3 * d3
+                j += 1
+              }
+              else if (m == L1) while (j < end) {
+                val x = v(j)
+                s0 += math.abs(qv(o0 + j) - x); s1 += math.abs(qv(o1 + j) - x)
+                s2 += math.abs(qv(o2 + j) - x); s3 += math.abs(qv(o3 + j) - x)
+                j += 1
+              }
+              else while (j < end) {
+                val x = v(j)
+                s0 = math.max(s0, math.abs(qv(o0 + j) - x))
+                s1 = math.max(s1, math.abs(qv(o1 + j) - x))
+                s2 = math.max(s2, math.abs(qv(o2 + j) - x))
+                s3 = math.max(s3, math.abs(qv(o3 + j) - x))
+                j += 1
+              }
             }
-            else if (m == L1) while (j < end) {
-              val x = v(j)
-              s0 += math.abs(qv(o0 + j) - x); s1 += math.abs(qv(o1 + j) - x)
-              s2 += math.abs(qv(o2 + j) - x); s3 += math.abs(qv(o3 + j) - x)
-              j += 1
-            }
-            else while (j < end) {
-              val x = v(j)
-              s0 = math.max(s0, math.abs(qv(o0 + j) - x))
-              s1 = math.max(s1, math.abs(qv(o1 + j) - x))
-              s2 = math.max(s2, math.abs(qv(o2 + j) - x))
-              s3 = math.max(s3, math.abs(qv(o3 + j) - x))
-              j += 1
-            }
+            val complete = j == dim
+            b.offer(i, id, s0, complete); b.offer(i + 1, id, s1, complete)
+            b.offer(i + 2, id, s2, complete); b.offer(i + 3, id, s3, complete)
+            i += 4
           }
-          val complete = j == dim
-          b.offer(i, id, s0, complete); b.offer(i + 1, id, s1, complete)
-          b.offer(i + 2, id, s2, complete); b.offer(i + 3, id, s3, complete)
-          i += 4
         }
       }
     }

@@ -17,6 +17,18 @@ object DatasetBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(classic(spark), plan)
 
+  /** Runs `body` with the session's SQL confs set as local properties, so
+    * the tasks of the jobs it starts read them through `SQLConf.get`, as the
+    * tasks of a SQL query do. */
+  def withSQLConfPropagated[T](spark: SparkSession)(body: => T): T =
+    org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(classic(spark))(body)
+
+  /** DataFrame over rows already in Catalyst's internal form. */
+  def internalDataFrame(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    classic(spark).internalCreateDataFrame(rows, schema, isStreaming = false)
+
   /** The analyzed logical plan of a DataFrame (resolved attributes). */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 

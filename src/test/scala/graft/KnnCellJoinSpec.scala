@@ -3,7 +3,8 @@ package graft
 import graft.api.VectorDatabase
 import graft.core.Fixtures
 import graft.index.{Grid, GridConfig}
-import graft.operators.{KnnCellJoin, KnnTopK}
+import graft.functions.Distances
+import graft.operators.{Knn, KnnCellJoin, KnnTopK}
 import graft.plans.KnnJoinPlan
 import graft.queries.Shared
 import org.apache.spark.JobInputRows
@@ -145,10 +146,15 @@ class KnnCellJoinSpec extends SparkSpecBase {
     def viaCells(k: Int) = sorted(KnnCellJoin.join(queries, Grid.withCellId(db, "embedding", cfg),
       cfg, k, bruteForceThreshold = 0))
     assert(viaCells(3) == sorted(KnnJoinPlan.join(queries, db, 3)))
-    // at k = 11 the brute join returns vec 10 at 0.25, having read its null
-    // as 0.0, so the cell join is checked against the 10 defined rows
+    // at k = 11 every join returns the 10 defined rows, Knn.bruteForce's
+    // top-k, with the same distances
     val all = viaCells(11)
     assert(all.map(_._2).sorted == (0L until 10L) && all.map(_._4) == (1 to 10))
+    val byExec = sorted(KnnJoinPlan.join(queries, db, 11))
+    val brute = Knn.bruteForce(db.withColumn("label", lit(0)),
+      Distances.squaredL2Lit(col("embedding"), Array(0.45f, 0.45f, 0.5f).map(_.toDouble)), 11)
+      .collect().filterNot(_.isNullAt(2)).map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    assert(byExec.map(r => (r._2, r._3)) == brute && byExec == all)
     // the aggregator drops it; no filter re-evaluates the kernel
     val cands = crossCands(queries, db, 3)
     val plan = KnnTopK.topK(cands, 3).queryExecution.optimizedPlan.toString
