@@ -4,7 +4,13 @@ import graft.index.{Grid, GridConfig}
 import graft.functions.Distances
 import graft.operators.{Ann, Knn}
 import graft.core.Fixtures
+import graft.plans.{KnnJoinExec, KnnJoinPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Scale probe (manual main, not part of the driver contract): amplify the
   * sf0.1 embeddings 200x (~1M vectors, 64-dim), build the cell-partitioned
@@ -122,22 +128,31 @@ object ScaleProbe extends App {
           .as("maxsim"))
       .orderBy(col("maxsim").desc, col("vec_id").asc).limit(10).count()
   }
-  // kNN JOIN comparison on LOW-dim fully-gridded data. The cell join ranks
-  // cells by grid bounds raised to the cells' data-box bounds, so it prunes
-  // 64-dim stores gridded in 3 dims too; here every dim is gridded. The two
-  // batch joins: cell-pruned vs brute force.
+  // kNN JOIN on LOW-dim fully-gridded data: the cell join's two cell-restricted
+  // passes of KnnJoinExec (metrics read from their executed plans) vs one exec.
   val cfg4 = GridConfig(dim = 4, lower = -0.6, upper = 0.6, partsPerDim = 8, gridDims = 4)
   val db4 = Grid.withCellId(
     big.select(col("vec_id"), slice(col("embedding"), 1, 4).as("embedding")),
     "embedding", cfg4).localCheckpoint(true)
   val probeQueries4 = db4.filter(pmod(col("vec_id"), lit(10000)) === 7)
     .select(col("vec_id").as("query_id"), col("embedding"))
-  t("cell-pruned kNN join 4-dim (100 q x 1M db)") {
-    graft.operators.KnnCellJoin.join(probeQueries4, db4, cfg4, k = 10).count()
+  val passes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+  val passListener = new QueryExecutionListener {
+    def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = passes.add(qe.executedPlan)
+    def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
   }
-  t("cross kNN join 4-dim (100 q x 1M db)") {
-    graft.plans.KnnJoinPlan.join(probeQueries4, db4, k = 10).count()
+  spark.listenerManager.register(passListener)
+  val viaCells = t("cell-pruned kNN join 4-dim (100 q x 1M db)") {
+    graft.operators.KnnCellJoin.join(probeQueries4, db4, cfg4, k = 10).collect()
   }
+  DatasetBridge.drainListeners(spark); spark.listenerManager.unregister(passListener)
+  for (p <- passes.asScala; e <- new AdaptiveSparkPlanHelper {}.collect(p) { case e: KnnJoinExec => e })
+    println(s"SCALE   cell join pass: dataRows ${e.metrics("dataRows").value} pairs ${e.metrics("pairs").value}")
+  val viaCross = t("cross kNN join 4-dim (100 q x 1M db)") {
+    KnnJoinPlan.join(probeQueries4, db4, k = 10).collect()
+  }
+  assert(viaCells.map(_.toString).sorted.sameElements(viaCross.map(_.toString).sorted),
+    "cell-pruned join != cross join at 1M rows")
   // Batch MaxSim join at 1M: 16 queries × 1M corpus through the fused
   // VecMaxSimCols kernel + bounded top-k aggregator — the late-interaction
   // retrieval shape of sim_maxsim_join at production row counts.

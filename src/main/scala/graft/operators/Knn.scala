@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   * one pruned entry ([[prunedSearch]]) and one widening loop ([[widen]]).
   * Its index decisions — the per-cell stats ([[cellStats]]), the cell
   * bound ([[cellBound]]), the ranking ([[rank]]), the round size
-  * ([[roundEnd]]) and the stop rule ([[stops]]) — are written once here
-  * and shared with the batch [[KnnCellJoin]].
+  * ([[roundEnd]]) and the stop rule ([[stops]]) — are written once here.
+  * The batch [[KnnCellJoin]] plans its two passes on them: its seed is the
+  * first round, and its pruned pass keeps the cells the stop rule keeps.
   *
   * Physical plan: `Scan → Filter → Project(+dist) → TakeOrderedAndProject`
   * — Spark's distributed top-k (per-partition heap + driver merge), the
@@ -169,7 +170,7 @@ object Knn {
 
   /** The non-empty cells as (cell, bound, rows) in (bound ASC, cell ASC)
     * order: the order every widening scans them in. */
-  private[operators] def rank(stats: Map[Long, CellStats],
+  private[graft] def rank(stats: Map[Long, CellStats],
       bound: Long => Double): Array[(Long, Double, Long)] =
     stats.toArray
       .map { case (cell, st) => (cell, bound(cell), st.rows) }
@@ -301,9 +302,8 @@ object Knn {
     case Some(cells) => scanTopK(indexed.filter(col(cellCol).isin(cells: _*)), dist, k, pred)
   }
 
-  /** The single-query widening loop, over an abstract ranked-cell accessor.
-    * Its round size ([[roundEnd]]) and stop rule ([[stops]]) are the batch
-    * [[KnnCellJoin]]'s too.
+  /** The single-query widening loop, over an abstract ranked-cell accessor,
+    * by its round size ([[roundEnd]]) and stop rule ([[stops]]).
     * `entry(i)` must return the i-th non-empty cell as (cell, lowerBound,
     * rowCount) in (bound ASC, cell ASC) order, for 0 ≤ i < nCells.
     * `scan(Some(cells))` must return the top-k of the rows of `cells` whose
@@ -353,7 +353,7 @@ object Knn {
     * rounds: double the scanned prefix, so total rounds stay O(log cells).
     * Because a filter can empty out any cell, count-based sizing is a
     * heuristic only; correctness comes from [[stops]]. */
-  private[operators] def roundEnd(scanned: Long, nCells: Long, k: Int, rows: Long => Long): Long = {
+  private[graft] def roundEnd(scanned: Long, nCells: Long, k: Int, rows: Long => Long): Long = {
     var take = scanned
     var cum = 0L
     val target = math.max(8L * k, 1L)
@@ -368,8 +368,9 @@ object Knn {
     * the next cell's bound exceeds the kth distance kept (+∞ while fewer
     * than k are kept) — the reference's `bound > current_neighbors[-1]`
     * break (kd_tree_database.py:213-218). Exact for an admissible `bound`:
-    * no unscanned cell holds a point nearer than the kth. */
-  private[operators] def stops(next: Long, nCells: Long, bound: Long => Double,
+    * no unscanned cell holds a point nearer than the kth. [[KnnCellJoin]]'s
+    * pruned pass keeps a cell by the same test. */
+  private[graft] def stops(next: Long, nCells: Long, bound: Long => Double,
       kept: Int, k: Int, kth: => Double): Boolean =
     next >= nCells || bound(next) > (if (kept >= k) kth else Double.PositiveInfinity)
 

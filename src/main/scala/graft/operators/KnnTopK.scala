@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * carries at most k rows per query per map task and reducers merge
   * k-bounded buffers — immune to candidate-count skew. It ranks the
   * candidates that pruned or approximate forms produce (graph beam, IVF
-  * probes, the cell join's rounds, MaxSim scores); the exact brute-force
-  * batch join is [[graft.plans.KnnJoinPlan]].
+  * probes, MaxSim scores); every exact batch join, brute or cell pruned,
+  * scores on [[graft.plans.KnnJoinPlan]]'s exec.
   *
   * The buffers are [[KnnJoinExec.TopK]] bounds, ranked and merged by
   * [[KnnJoinExec.before]]/[[KnnJoinExec.offer]]/[[KnnJoinExec.merge]]:

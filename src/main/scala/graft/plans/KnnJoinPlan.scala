@@ -20,9 +20,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * node expresses. It is the engine's one exact brute-force batch kNN
   * join: `VectorDatabase.knnJoin`, `Outlier.kthNnDistance`, the
   * `knn_join_*` queries, the exact arms of the recall evals, streaming
-  * serving and [[graft.operators.KnnCellJoin]]'s brute arm all run on it
-  * (the cell join is the other batch join: it prunes by grid cell). The
-  * node is a resolved marker [[BinaryNode]] that the planner
+  * serving and [[graft.operators.KnnCellJoin]]'s two cell-restricted
+  * passes all run on it: it scores every batch join. The node is a
+  * resolved marker [[BinaryNode]] that the planner
   * ([[KnnJoinStrategy]]) lowers to a dedicated physical operator
   * ([[KnnJoinExec]]).
   *
@@ -40,7 +40,8 @@ case class KnnJoinPlan(
     data: LogicalPlan,
     k: Int,
     metric: String,
-    outputAttrs: Seq[Attribute]) extends BinaryNode {
+    outputAttrs: Seq[Attribute],
+    cells: Option[KnnJoinExec.Cells] = None) extends BinaryNode {
   require(k > 0, s"k must be positive, got $k")
   require(KnnJoinPlan.metrics.contains(metric),
     s"KnnJoinPlan supports the metrics ${KnnJoinPlan.metrics.mkString("/")}, got $metric")
@@ -56,7 +57,7 @@ case class KnnJoinPlan(
   // keeping what the strategy resolves by name.
   override def references: AttributeSet = AttributeSet(
     queries.output.filter(a => a.name == "query_id" || a.name == "embedding") ++
-      data.output.filter(a => a.name == "vec_id" || a.name == "embedding"))
+      data.output.filter(a => Seq("vec_id", "embedding", "cell_id").contains(a.name)))
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): KnnJoinPlan =
     copy(queries = newLeft, data = newRight)
@@ -91,16 +92,22 @@ object KnnJoinPlan {
     * both id columns to LONG (a no-op the optimizer removes on LONG ids),
     * the type [[KnnJoinExec]] reads. `metric` is one of [[metrics]]. */
   def join(queriesDf: DataFrame, dataDf: DataFrame, k: Int,
-      metric: String = VecMetric.SqL2, queryIdCol: String = "query_id"): DataFrame = {
+      metric: String = VecMetric.SqL2, queryIdCol: String = "query_id"): DataFrame =
+    join(queriesDf, dataDf, k, metric, queryIdCol, None)
+
+  /** [[join]] under a cell restriction: `dataDf` also provides cell_id, cast to LONG. */
+  private[graft] def join(queriesDf: DataFrame, dataDf: DataFrame, k: Int, metric: String,
+      queryIdCol: String, cells: Option[KnnJoinExec.Cells]): DataFrame = {
     val spark = queriesDf.sparkSession
     install(spark)
+    val cellId = cells.map(_ => col("cell_id").cast(LongType).as("cell_id"))
     DatasetBridge.ofRows(spark,
       KnnJoinPlan(
         DatasetBridge.analyzed(queriesDf.select(
           col(queryIdCol).cast(LongType).as("query_id"), col("embedding"))),
         DatasetBridge.analyzed(dataDf.select(
-          col("vec_id").cast(LongType).as("vec_id"), col("embedding"))),
-        k, metric, freshOutput()))
+          Seq(col("vec_id").cast(LongType).as("vec_id"), col("embedding")) ++ cellId: _*)),
+        k, metric, freshOutput(), cells))
   }
 
   /** Idempotently register the planner strategy + optimizer rule on a
@@ -217,10 +224,8 @@ object KnnJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: KnnJoinPlan =>
       // Resolve contract columns by position in the (already-pruned-by-
-      // join()) child outputs. NEVER invent logical nodes here: a Project
-      // created at planning time has no logicalLink into the logical plan,
-      // which breaks AQE's materialized-stage substitution and livelocks
-      // the replan loop (see KnnJoinPlan.join scaladoc).
+      // join()) child outputs. NEVER invent logical nodes here: a planning-
+      // time Project livelocks AQE's replan loop (see KnnJoinPlan.join).
       def idx(side: LogicalPlan, name: String, which: String): Int = {
         val i = side.output.indexWhere(_.name == name)
         require(i >= 0, s"KnnJoinPlan: $which side must provide column '$name' " +
@@ -230,6 +235,7 @@ object KnnJoinStrategy extends SparkStrategy {
       KnnJoinExec(p.outputAttrs, p.k, p.metric,
         idx(p.queries, "query_id", "queries"), idx(p.queries, "embedding", "queries"),
         idx(p.data, "vec_id", "data"), idx(p.data, "embedding", "data"),
+        p.cells.fold(-1)(_ => idx(p.data, "cell_id", "data")), p.cells,
         planLater(p.queries), planLater(p.data)) :: Nil
     case _ => Nil
   }
@@ -253,10 +259,12 @@ object KnnJoinStrategy extends SparkStrategy {
   * ([[KnnJoinExec.insert]]), and the shuffle carries the same primitive
   * layout ([[KnnJoinExec.TopK]]). Counters are task-local and reach the
   * SQL metrics once per partition.
+  * Under a cell restriction (`cells`, on data column `dCellIdx`) a query scores only the rows
+  * of the cells it admits, from its start threshold; the broadcast holds each such pair.
   */
 case class KnnJoinExec(
     out: Seq[Attribute], k: Int, metric: String,
-    qIdIdx: Int, qVecIdx: Int, dIdIdx: Int, dVecIdx: Int,
+    qIdIdx: Int, qVecIdx: Int, dIdIdx: Int, dVecIdx: Int, dCellIdx: Int, cells: Option[KnnJoinExec.Cells],
     left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
   import KnnJoinExec._
 
@@ -267,7 +275,7 @@ case class KnnJoinExec(
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "dataRows" -> SQLMetrics.createMetric(sparkContext, "data rows scanned"),
-    "pairs" -> SQLMetrics.createMetric(sparkContext, "candidate pairs"),
+    "pairs" -> SQLMetrics.createMetric(sparkContext, "admitted (query, row) pairs"),
     "prunedPairs" -> SQLMetrics.createMetric(sparkContext, "pairs cut by early exit"),
     "heapInserts" -> SQLMetrics.createMetric(sparkContext, "heap inserts"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
@@ -288,10 +296,15 @@ case class KnnJoinExec(
     }
     val flat = new Array[Double]((rows.length + 3) / 4 * 4 * dim)
     for (i <- vecs.indices; j <- 0 until dim) flat(i * dim + j) = vecs(i)(j)
-    val bc = sparkContext.broadcast(Queries(rows.map(_.getLong(qid)), flat, dim))
+    val ids = rows.map(_.getLong(qid))
+    val own = ids.map(q => cells.flatMap(_.get(q)))
+    val admits = own.indices.flatMap(i => own(i).toSeq.flatMap(_._1).map(_ -> i)).groupBy(_._1)
+      .map { case (c, qi) => val q = qi.map(_._2).toArray; c -> (q, q.map(_ & ~3).distinct) }
+    val bc = sparkContext.broadcast(Queries(ids, flat, dim,
+      own.map(_.fold(Double.PositiveInfinity)(_._2)), admits))
     // task closures capture only these locals, never `this` (the whole
     // physical plan tree would be serialized into every task)
-    val kk = k; val m = metricCode(metric); val did = dIdIdx; val dv = dVecIdx
+    val kk = k; val m = metricCode(metric); val did = dIdIdx; val dv = dVecIdx; val dc = dCellIdx
     val counters = Counters(metrics("dataRows"), metrics("pairs"),
       metrics("prunedPairs"), metrics("heapInserts"))
     val numOut = metrics("numOutputRows")
@@ -299,7 +312,7 @@ case class KnnJoinExec(
     val partials: RDD[(Long, TopK)] = right.execute().mapPartitions { it =>
       val qs = bc.value
       if (qs.ids.isEmpty) Iterator.empty
-      else scanPartition(it, did, dv, qs, kk, m, counters)
+      else scanPartition(it, did, dv, dc, qs, kk, m, counters)
     }
     // this RDD-level shuffle bypasses AQE, so size it the way AQE would
     // coalesce a SQL shuffle: partitions of the advisory size (16 bytes per
@@ -326,10 +339,17 @@ case class KnnJoinExec(
 
 object KnnJoinExec {
 
+  /** Query id → (admitted cells, start threshold); a query absent from it admits no cell. */
+  type Cells = Map[Long, (Array[Long], Double)]
+
+  private val NoQueries = (Array.emptyIntArray, Array.emptyIntArray)
+
   /** The broadcast query side: ids, and the vectors row-major in one array,
     * widened to double once (float -> double is exact) and padded with
-    * zero vectors to a whole number of blocks of four. */
-  final case class Queries(ids: Array[Long], vecs: Array[Double], dim: Int)
+    * zero vectors to a whole number of blocks of four; the start thresholds,
+    * and each restricted cell's admitting queries and their blocks, by position. */
+  final case class Queries(ids: Array[Long], vecs: Array[Double], dim: Int,
+      start: Array[Double], admits: Map[Long, (Array[Int], Array[Int])])
 
   /** One query's bound: ids and distances in (dist, id) order, at most k. */
   final class TopK(val ids: Array[Long], val dists: Array[Double]) extends Serializable
@@ -405,31 +425,37 @@ object KnnJoinExec {
   /** Every query's bound over one partition: query i's run sits at
     * `[i * k, i * k + sizes(i))` of the primitive id and dist arrays.
     * Indexes from nq up are the padding of the last block of four. */
-  private final class Bounds(nq: Int, k: Int) {
+  private final class Bounds(nq: Int, k: Int, start: Array[Double]) {
     val ids = new Array[Long](nq * k)
     val dists = new Array[Double](nq * k)
     val sizes = new Array[Int](nq)
     var inserts = 0L
     var pruned = 0L
 
-    /** Query i's early-exit threshold: its kth distance once its run is
-      * full, +Inf before; -Inf for padding, which never holds a block. */
-    def threshold(i: Int): Double =
-      if (i >= nq) Double.NegativeInfinity
-      else if (sizes(i) < k) Double.PositiveInfinity
-      else dists(i * k + k - 1)
+    /** Each query's early-exit threshold for the current row: its kth distance once its run is
+      * full, before that its start threshold (a bound on the final kth, so a pair past it is cut);
+      * -Inf (no distance) masks padding and a query not admitting the row's cell from its block. */
+    val threshold: Array[Double] =
+      Array.tabulate((nq + 3) / 4 * 4)(i => if (i < nq) start(i) else Double.NegativeInfinity)
+
+    /** Admit the queries `qs` alone, where the blocks `prev` held the ones admitted last. */
+    def mask(prev: Array[Int], qs: Array[Int]): Unit = {
+      for (i <- prev) java.util.Arrays.fill(threshold, i, i + 4, Double.NegativeInfinity)
+      for (i <- qs) threshold(i) = if (sizes(i) < k) start(i) else dists(i * k + k - 1)
+    }
 
     /** Offer a data row at distance `s` to query i. `complete` is false when
       * the scan stopped before the last element: the partial sum already
       * exceeded the threshold, so the pair is rejected. */
     def offer(i: Int, id: Long, s: Double, complete: Boolean): Unit =
-      if (i >= nq) ()
+      if (threshold(i) == Double.NegativeInfinity) ()
       else if (!complete) pruned += 1
       else {
         val base = i * k
         val size = sizes(i)
         if (size < k || before(s, id, dists(base + k - 1), ids(base + k - 1))) {
           sizes(i) = insert(ids, dists, base, size, k, id, s)
+          if (sizes(i) == k) threshold(i) = dists(base + k - 1)
           inserts += 1
         }
       }
@@ -446,15 +472,17 @@ object KnnJoinExec {
     * overlap; each accumulator still sums its own query left to right in
     * VecMetricCols' per-element order, so every distance is bit-identical
     * to it. A block stops early only when all four of its sums are past
-    * their thresholds. */
-  def scanPartition(it: Iterator[InternalRow], did: Int, dv: Int, qs: Queries,
+    * their thresholds. With a cell column (`dc` ≥ 0) only the blocks admitting a row's cell
+    * score it, re-masked only when the cell changes: a saved store clusters rows by cell. */
+  def scanPartition(it: Iterator[InternalRow], did: Int, dv: Int, dc: Int, qs: Queries,
       k: Int, m: Int, counters: Counters): Iterator[(Long, TopK)] = {
     val nq = qs.ids.length
     val dim = qs.dim
     val qv = qs.vecs
-    val b = new Bounds(nq, k)
+    val b = new Bounds(nq, k, qs.start)
     val v = new Array[Double](dim)
     var rows = 0L
+    var pairs = 0L; var admitted = nq; var cell = 0L; var blocks = Array.range(0, nq, 4)
     while (it.hasNext) {
       val row = it.next()
       if (!row.isNullAt(did) && !row.isNullAt(dv)) {
@@ -470,9 +498,16 @@ object KnnJoinExec {
         var j = 0
         while (j < dim && !arr.isNullAt(j)) { v(j) = arr.getFloat(j).toDouble; j += 1 }
         if (j == dim) {
+          if (dc >= 0 && (rows == 0 || row.getLong(dc) != cell)) {
+            cell = row.getLong(dc)
+            val (qi, bs) = qs.admits.getOrElse(cell, NoQueries)
+            b.mask(blocks, qi); blocks = bs; admitted = qi.length
+          }
           rows += 1
-          var i = 0
-          while (i < nq) {
+          pairs += admitted
+          var bi = 0
+          while (bi < blocks.length) {
+            val i = blocks(bi)
             val t0 = b.threshold(i); val t1 = b.threshold(i + 1)
             val t2 = b.threshold(i + 2); val t3 = b.threshold(i + 3)
             val o0 = i * dim; val o1 = o0 + dim; val o2 = o1 + dim; val o3 = o2 + dim
@@ -505,13 +540,13 @@ object KnnJoinExec {
             val complete = j == dim
             b.offer(i, id, s0, complete); b.offer(i + 1, id, s1, complete)
             b.offer(i + 2, id, s2, complete); b.offer(i + 3, id, s3, complete)
-            i += 4
+            bi += 1
           }
         }
       }
     }
     counters.dataRows += rows
-    counters.pairs += rows * nq
+    counters.pairs += pairs
     counters.prunedPairs += b.pruned
     counters.heapInserts += b.inserts
     Iterator.range(0, nq).filter(b.sizes(_) > 0).map { i =>

@@ -392,10 +392,10 @@ object KnnQueries {
         emb(s, d), k = 3)
         .orderBy(col("query_id"), col("rn"))),
       knnJoinSql),
-    // scale variant: each query widens over its own ranked cells, by the
-    // single-query search's bounds, round size and stop rule (no |Q|×|db|
-    // cross product) — exact, same oracle as the cross form.
-    // threshold 0: the declared query must exercise the loop it is named
+    // scale variant: two cell-restricted passes of KnnJoinExec, a seed over
+    // each query's first cells and a pass over the cells its bounds cannot
+    // cut (no |Q|×|db| cross product) — exact, same oracle as the cross form.
+    // threshold 0: the declared query must exercise the passes it is named
     // for (production callers keep the cost-based default)
     QuerySpec("knn_join_l2_cells", ((s, d) =>
       graft.operators.KnnCellJoin.join(
@@ -404,9 +404,9 @@ object KnnQueries {
         bruteForceThreshold = 0)
         .orderBy(col("query_id"), col("rn"))),
       knnJoinSql),
-    // QUANTILE-grid batch kNN join (r13): the same cell join over cells
-    // whose grid bounds come from the calibrated boundary table instead of
-    // the uniform bucket formula — the batch sibling of
+    // QUANTILE-grid batch kNN join (r13): the same two-pass cell join over
+    // cells whose grid bounds come from the calibrated boundary table instead
+    // of the uniform bucket formula — the batch sibling of
     // knn_l2_quantile_grid, for skewed corpora where equal-width cells
     // pile up (19,980 vs 977,885 max-cell at 1M rows, SCALE_NOTES). Same
     // brute-force oracle as every kNN-join form: pruning must not change

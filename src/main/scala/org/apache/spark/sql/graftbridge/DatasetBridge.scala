@@ -29,6 +29,9 @@ object DatasetBridge {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     classic(spark).internalCreateDataFrame(rows, schema, isStreaming = false)
 
+  /** Waits until every queued listener event is delivered. */
+  def drainListeners(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** The analyzed logical plan of a DataFrame (resolved attributes). */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 

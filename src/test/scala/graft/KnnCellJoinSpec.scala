@@ -4,11 +4,17 @@ import graft.api.VectorDatabase
 import graft.core.Fixtures
 import graft.index.{Grid, GridConfig}
 import graft.functions.Distances
+import graft.api.SquaredL2
 import graft.operators.{Knn, KnnCellJoin, KnnTopK}
-import graft.plans.KnnJoinPlan
+import graft.plans.{KnnJoinExec, KnnJoinPlan}
 import graft.queries.Shared
 import org.apache.spark.JobInputRows
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 class KnnCellJoinSpec extends SparkSpecBase {
   import spark.implicits._
@@ -51,6 +57,11 @@ class KnnCellJoinSpec extends SparkSpecBase {
         (id, d0 * d0 + d1 * d1)
       }.sortBy(x => (x._2, x._1)).take(3).map(_._1).toSeq
     assert(out.filter(_.getLong(0) == 101L).map(_.getLong(1)).toSeq == expect)
+    // every bound of the NaN query is NaN, so no cell is cut: its rows (NaN
+    // distances, by id) are the brute join's
+    def bits(rs: Seq[org.apache.spark.sql.Row]) =
+      rs.map(r => (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2))))
+    assert(bits(out.toSeq) == bits(KnnJoinPlan.join(nanQ, db, 3).orderBy("query_id", "rn").collect().toSeq))
 
     val badQ = Seq((200L, Array(0.1f))).toDF("query_id", "embedding")
     intercept[Exception] {
@@ -75,6 +86,10 @@ class KnnCellJoinSpec extends SparkSpecBase {
     assert(viaCells.toSeq == viaCross.toSeq)
   }
 
+  /** A repeated query id: both rows' neighbours merge into one top-k. */
+  private def extraQueries(dim: Int): Seq[(Long, Array[Float])] =
+    Seq((100L, Array.fill(dim)(0.25f)))
+
   test("QUANTILE-grid join is exact on random SKEWED data + random boundary tables (5 trials)") {
     for (trial <- 1 to 5) {
       val dim = 2 + rnd.nextInt(3)
@@ -92,9 +107,9 @@ class KnnCellJoinSpec extends SparkSpecBase {
         (i, Array.fill(dim)((math.pow(rnd.nextDouble(), 3) * 2.4 - 0.6).toFloat))
       }.toDF("vec_id", "embedding")
       val k = 1 + rnd.nextInt(n + 3) // may exceed |db|
-      val queries = (100L until 104L).map(i =>
-        (i, Array.fill(dim)((rnd.nextDouble() * 4.0 - 2.0).toFloat))) // often OOB
-        .toDF("query_id", "embedding")
+      val queries = ((100L until 104L).map(i =>
+        (i, Array.fill(dim)((rnd.nextDouble() * 4.0 - 2.0).toFloat))) ++ // often OOB
+        extraQueries(dim)).toDF("query_id", "embedding")
       val viaCells = KnnCellJoin.join(queries,
           Grid.withCellId(db, "embedding", qc), qc, k,
           bruteForceThreshold = 0)
@@ -117,9 +132,9 @@ class KnnCellJoinSpec extends SparkSpecBase {
         (i, Array.fill(dim)((rnd.nextDouble() * 2.4 - 1.2).toFloat)))
         .toDF("vec_id", "embedding")
       val k = 1 + rnd.nextInt(n + 3) // may exceed |db|
-      val queries = (100L until 104L).map(i =>
-        (i, Array.fill(dim)((rnd.nextDouble() * 4.0 - 2.0).toFloat))) // often OOB
-        .toDF("query_id", "embedding")
+      val queries = ((100L until 104L).map(i =>
+        (i, Array.fill(dim)((rnd.nextDouble() * 4.0 - 2.0).toFloat))) ++ // often OOB
+        extraQueries(dim)).toDF("query_id", "embedding")
       val viaCells = KnnCellJoin.join(queries,
           Grid.withCellId(db, "embedding", cfg), cfg, k, bruteForceThreshold = 0)
         .orderBy("query_id", "rn")
@@ -191,5 +206,89 @@ class KnnCellJoinSpec extends SparkSpecBase {
     // the near cell alone
     val stats = jobs.indexOf(2 * n)
     assert(stats >= 0 && jobs.drop(stats + 1).sum == n, s"rows read per job: $jobs")
+  }
+
+  test("ties at the seed's kth distance across a seed cell and a later cell, and k > |db|") {
+    // 4x4 cells of width 0.5; the query sits in cell A = [0, 0.5)^2 with one
+    // row on it and 15 duplicate rows at squared distance 0.0625, so with
+    // k = 2 the seed is A alone (16 = 8k rows) and τ = 0.0625. One row of
+    // the next cell B = [-0.5, 0) x [0, 0.5) ties at exactly τ (dyadic
+    // coordinates, so the distances are exact): its box bound is τ, so the
+    // pruned pass admits B, and the tie breaks on id, either way round.
+    val cfg = GridConfig(dim = 2, lower = -1.0, upper = 1.0, partsPerDim = 4, gridDims = 2)
+    val queries = Seq((1L, Array(0.125f, 0.125f))).toDF("query_id", "embedding")
+    val seedRows = (1L -> Array(0.125f, 0.125f)) +: (10L until 25L).map(_ -> Array(0.375f, 0.125f))
+    val far = Seq(30L -> Array(0.875f, -0.875f), 31L -> Array(-0.875f, -0.625f))
+    for ((tieId, tieFirst) <- Seq((0L, true), (99L, false), (0L, false), (99L, true))) {
+      val tie = Seq(tieId -> Array(-0.125f, 0.125f))
+      val db = (if (tieFirst) tie ++ seedRows ++ far else seedRows ++ far ++ tie)
+        .toDF("vec_id", "embedding")
+      for (k <- Seq(2, 3, 40)) {
+        val viaCells = sorted(KnnCellJoin.join(queries, Grid.withCellId(db, "embedding", cfg), cfg,
+          k, bruteForceThreshold = 0))
+        assert(viaCells == sorted(KnnJoinPlan.join(queries, db, k)), s"tie $tieId k $k")
+        if (k == 2) assert(viaCells.map(_._2) == Seq(1L, if (tieId == 0L) 0L else 10L))
+        if (k == 40) assert(viaCells.size == db.count())
+      }
+    }
+  }
+
+  test("a store the widening loop needs >= 3 rounds for runs the stats job and <= 2 execs") {
+    // 96 rows on a circle of radius 0.9 around the query: the ring cells'
+    // bounds sit below the kth distance, so a round-by-round widening keeps
+    // doubling its prefix; the replay below counts its rounds.
+    val cfg = GridConfig(dim = 2, lower = -1.0, upper = 1.0, partsPerDim = 8, gridDims = 2)
+    val db = (0L until 96L).map { i =>
+      val a = 2 * math.Pi * i / 96
+      (i, Array((0.9 * math.cos(a)).toFloat, (0.9 * math.sin(a)).toFloat))
+    }.toDF("vec_id", "embedding")
+    val queries = Seq((1L, Array(0f, 0f)), (2L, Array(0.05f, -0.05f))).toDF("query_id", "embedding")
+    val indexed = Grid.withCellId(db, "embedding", cfg)
+    val stats = Knn.cellStats(indexed, cfg).get
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (viaCells, _) = try JobInputRows.of(spark.sparkContext) {
+      sorted(KnnCellJoin.join(queries, indexed, cfg, k = 1, bruteForceThreshold = 0))
+    } finally spark.listenerManager.unregister(listener)
+    assert(viaCells == sorted(KnnJoinPlan.join(queries, db, 1)))
+    // the loop's rounds on the query at the centre: each round ends at
+    // Knn.roundEnd, and it goes on while Knn.stops does not fire
+    val ranked = Knn.rank(stats, Knn.cellBound(SquaredL2.cellBound(Array(0.0, 0.0), _, cfg),
+      SquaredL2.boxBound(Array(0.0, 0.0), _, _), Some(stats)))
+    val kth = viaCells.head._3
+    val rounds = Iterator.iterate(0L)(Knn.roundEnd(_, ranked.length, 1, j => ranked(j.toInt)._3))
+      .drop(1).indexWhere(e => Knn.stops(e, ranked.length, j => ranked(j.toInt)._2, 1, 1, kth)) + 1
+    assert(rounds >= 3, s"$rounds rounds")
+    val walk = new AdaptiveSparkPlanHelper {}
+    val all = plans.asScala.toSeq
+    val execs = all.count(p => walk.collect(p) { case e: KnnJoinExec => e }.nonEmpty)
+    val aggs = all.flatMap(p => walk.collect(p) { case a: ObjectHashAggregateExec => a })
+    assert(execs >= 1 && execs <= 2, s"$execs KnnJoinExec executions")
+    // the one ObjectHashAggregate is the stats job's data-box aggregate
+    assert(aggs.nonEmpty && aggs.forall(_.aggregateExpressions.exists(
+      _.aggregateFunction.isInstanceOf[graft.functions.VecBox])), aggs.mkString("\n"))
+  }
+
+  test("a stored vector of another length fails in both joins with the exec's error") {
+    val cfg = GridConfig(dim = 3, lower = -1.0, upper = 1.0, partsPerDim = 4, gridDims = 2)
+    val queries = Seq((1L, Array(0.45f, 0.45f, 0.5f))).toDF("query_id", "embedding")
+    def causes(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: causes(t.getCause)
+    for (bad <- Seq(Array(0.45f, 0.45f), Array(0.45f, 0.45f, 0.5f, 0.5f))) {
+      // vec 10 sits in the query's cell, so every join reads it
+      val db = ((0L until 10L).map(i => (i, Array(i / 10f, i / 10f, 0.5f))) :+ (10L -> bad))
+        .toDF("vec_id", "embedding")
+      for (run <- Seq[() => Any](
+          () => KnnCellJoin.join(queries, Grid.withCellId(db, "embedding", cfg), cfg, 3,
+            bruteForceThreshold = 0).collect(),
+          () => KnnJoinPlan.join(queries, db, 3).collect())) {
+        val ex = intercept[Exception](run())
+        assert(causes(ex).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains(s"KnnJoinExec: data vector id=10 has dim ${bad.length}")), ex)
+      }
+    }
   }
 }
