@@ -477,28 +477,6 @@ object Multimodal {
         .otherwise("video")).as("kind"),
       col("text").cast(BinaryType).as("payload"))
 
-  /** Batch-shaped variant (the JVM analog of `mapInPandas`): the decoder
-    * sees FIXED-SIZE slices of each partition, the shape a vectorized or
-    * GPU decode kernel wants — swap `stubDecode` for a per-batch codec
-    * call without touching the plumbing. Constant memory: one batch
-    * buffered at a time. */
-  def extractFeaturesBatched(media: DataFrame, batchSize: Int = 256): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload").as[(Long, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          // per-batch hook: a real implementation decodes `batch` in one
-          // vectorized call; the stub maps per element
-          batch.map { case (id, kind, payload) =>
-            val checksum = payload.foldLeft(17L)((acc, b) => acc * 31 + (b & 0xff))
-            val (w, h, f) = stubDecode(payload, kind)
-            MediaFeatures(id, kind, payload.length.toLong, checksum, w, h, f)
-          }
-        }
-      }
-  }
-
   final case class ResizedMedia(
       media_id: Long, kind: String, width: Int, height: Int, payload: Array[Byte])
 

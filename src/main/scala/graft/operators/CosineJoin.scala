@@ -68,8 +68,8 @@ object CosineJoin {
     // empty strata just shrink k. Hash-spread (not min-id) because ids
     // often correlate with content: on a replicated corpus with
     // sequential ids, min-id seeds all land on the first few base rows
-    // and one cell swallows the table (caught by ScaleProbe10M — max
-    // cell 223k of 1M at k=1024 before this fix).
+    // and one cell swallows the table (SCALE_NOTES.md, round-7 10M-doc
+    // probe, finding 1: max cell 223k of 1M at k=1024 before this fix).
     val seedRows = base
       .withColumn("_s", pmod(col("_id"), lit(kk.toLong)))
       .groupBy(col("_s")).agg(min_by(col("_v"),

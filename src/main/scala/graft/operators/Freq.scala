@@ -88,14 +88,6 @@ object Freq {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Cell-wise sum of two sketches of the SAME (depth, width) — count-min
-    * is a monoid, so incremental/streamed builds merge losslessly
-    * (StreamingCmsSpec pins streamed fold == one-shot build). */
-  def mergeCountMin(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("i"), col("cell"))
-      .agg(sum(col("n")).as("n"))
-
   /** Point estimates from a built sketch: appends `cm_est` =
     * min_i sketch(i, cell_i(key)) to `probes` (0 for keys hashing only to
     * empty cells — the standard CMS never-underestimate guarantee holds:

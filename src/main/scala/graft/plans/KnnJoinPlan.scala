@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * batched) whose WHOLE-operator semantics no single built-in relational
   * node expresses. It is the engine's one exact brute-force batch kNN
   * join: `VectorDatabase.knnJoin`, `Outlier.kthNnDistance`, the
-  * `knn_join_*` queries, the exact arms of the recall evals, streaming
-  * serving and [[graft.operators.KnnCellJoin]]'s two cell-restricted
+  * `knn_join_*` queries, the exact arms of the recall evals and
+  * [[graft.operators.KnnCellJoin]]'s two cell-restricted
   * passes all run on it: it scores every batch join. The node is a
   * resolved marker [[BinaryNode]] that the planner
   * ([[KnnJoinStrategy]]) lowers to a dedicated physical operator

@@ -22,9 +22,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   *     corpus size;
   *   - the streaming form (`mapGroupsWithState`, state = the current
   *     top-R per key, size |keys|·R regardless of stream length) is
-  *     EXACTLY ≡ the batch form under ANY arrival order — a strictly
-  *     stronger contract than [[StreamCap]]'s in-order-only equality,
-  *     because admission here never depends on what arrived first.
+  *     EXACTLY ≡ the batch form under ANY arrival order, because
+  *     admission never depends on what arrived first.
   *
   * No reference-file analog (the reference has no sampling surface);
   * the weight-to-priority transform matches the proven

@@ -413,6 +413,51 @@ class ApiSpec extends SparkSpecBase {
     }
   }
 
+  test("past the stats cap, kNN, radius search and the cell join equal brute force") {
+    import spark.implicits._
+    // 8^7 cells: more than the driver holds stats for, so the snapshot has
+    // no row cache and every search takes its no-stats path
+    val capCfg = GridConfig(dim = 8, lower = -1.0, upper = 1.0, partsPerDim = 8, gridDims = 7)
+    assert(capCfg.numCells > graft.plans.GridRadiusPruning.MaxEnumCells)
+    // 560 seeded uniform rows, then rows 560-599 at rows 0-39's positions:
+    // each copy ties its original at every distance
+    val rnd = new scala.util.Random(13)
+    val base = Array.fill(560)(Array.fill(8)(rnd.nextFloat() * 2f - 1f))
+    val vecs = base ++ base.take(40).map(_.clone())
+    val store = VectorDatabase.fromDataFrame(spark,
+      vecs.toSeq.zipWithIndex.map { case (v, i) => (i.toLong, v, i % 3) }
+        .toDF("vec_id", "embedding", "label"), capCfg)
+    assert(store.cellRows.isEmpty)
+    val qs = Seq(vecs(3).map(_.toDouble), Array.fill(8)(0.1), Array.fill(8)(-0.9))
+    val odd = col("label") === 1
+    val sparse = col("vec_id") % 10 === 0
+    for ((q, i) <- qs.zipWithIndex) {
+      for (m <- Seq(SquaredL2, L1)) assert(knnTop(store, q, 10, m) == bruteTop(store, q, 10, m), s"q$i $m")
+      val dist = SquaredL2.dist(col("embedding"), q)
+      assert(store.findKNearestNeighbors(q, 10, filter = Some(odd)).map(n => (n.vec_id, n.dist)) ==
+        Knn.bruteForce(store.state, dist, 10, Some(odd)).collect()
+          .map(r => (r.getLong(0), r.getDouble(2))).toSeq, s"q$i filtered")
+      val r = knnTop(store, q, 10).last._2
+      assert(radiusRows(store, q, r) == bruteRadius(store, q, r), s"q$i radius")
+      // k = 40: the first round covers 8k = 320 rows, past the ranked
+      // prefix's first 256-cell fetch, so the pager fetches a second prefix.
+      // One row in ten passes `sparse`, so its 40 nearest lie well past
+      // the first prefix's cells
+      val ranked = Knn.rank(Knn.cellStats(store.state), SquaredL2.cellBound(q, _, capCfg))
+      assert(Knn.roundEnd(0, ranked.length, 40, j => ranked(j.toInt)._3) > 256, s"q$i")
+      for (pred <- Seq(None, Some(sparse))) {
+        val pruned = Knn.prunedSearch(store.state, dist, 40, SquaredL2.cellBound(q, _, capCfg),
+          pred, bruteForceThreshold = 0)
+        assert(pruned.map(n => (n.vec_id, n.dist)) == Knn.bruteForce(store.state, dist, 40, pred)
+          .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq, s"q$i pruned $pred")
+      }
+    }
+    val queries = qs.zipWithIndex.map { case (q, i) => (i.toLong, q.map(_.toFloat)) }
+      .toDF("query_id", "embedding")
+    assert(joinRows(graft.operators.KnnCellJoin.join(queries, store.state, capCfg, 10,
+      bruteForceThreshold = 0)) == joinRows(graft.plans.KnnJoinPlan.join(queries, store.state, 10)))
+  }
+
   // --- knnJoin: the facade's batch join against a driver-side brute force
 
   private val JoinDim = 8

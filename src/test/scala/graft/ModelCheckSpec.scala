@@ -219,6 +219,23 @@ class ModelCheckSpec extends SparkSpecBase {
     assert(model.nonEmpty)
   }
 
+  test("daily CUSUM equals the sequential fold model on fixture events") {
+    val got = SparkEntry.queries("events_cusum_daily")(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    def round6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val daily = graft.core.Tables.events(spark, sfDir).select("ts").collect()
+      .groupBy(_.getTimestamp(0).toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate)
+      .toSeq.sortBy(_._1.toEpochDay).map(_._2.length.toLong)
+    val mean = round6(daily.sum.toDouble / daily.size.toDouble)
+    // c_t = max(0, c_{t-1} + (x_t - mean)), reporting the running max of c
+    val maxCusum = daily.foldLeft((0.0, 0.0)) { case ((c, m), n) =>
+      val c2 = math.max(0.0, c + (n.toDouble - mean))
+      (c2, math.max(m, c2))
+    }._2
+    assert(got == Seq((daily.size.toLong, mean, round6(maxCusum))))
+    assert(maxCusum > 0.0)
+  }
+
   test("winsorized monthly rollup: counts match plain rollup, sums clamped within band") {
     val rows = SparkEntry.queries("agg_winsorized_monthly")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

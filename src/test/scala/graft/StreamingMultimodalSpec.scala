@@ -1,78 +1,10 @@
 package graft
 
 import graft.core.Tables
-import graft.index.GridConfig
 import graft.multimodal.Multimodal
-import graft.queries.Shared
-import graft.streaming.StreamingIngest
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 class StreamingMultimodalSpec extends SparkSpecBase {
-
-  test("streaming ingest: micro-batch append lands cell-bucketed rows equal to batch") {
-    val tmp = java.nio.file.Files.createTempDirectory("graftstream").toString
-    val src = s"$tmp/src"; val store = s"$tmp/store"; val ckpt = s"$tmp/ckpt"
-    val emb = Tables.embeddings(spark, sfDir).limit(100)
-    emb.write.parquet(src)
-    val stream = spark.readStream.schema(emb.schema).parquet(src)
-    val cfg = Shared.gridCfg
-    val q = StreamingIngest.vectorIngest(stream, cfg, store)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val stored = spark.read.parquet(store)
-    assert(stored.count() === 100)
-    assert(stored.columns.contains("cell_id"))
-    // same bucketing as the batch index build
-    val batchCells = graft.index.Grid.withCellId(emb, "embedding", cfg)
-      .groupBy("cell_id").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val streamCells = stored.groupBy("cell_id").count().collect()
-      .map(r => r.getAs[Number]("cell_id").longValue() -> r.getLong(1)).toMap
-    assert(streamCells === batchCells)
-  }
-
-  test("streaming quantile ingest: micro-batch cells equal batch quantile bucketing") {
-    val tmp = java.nio.file.Files.createTempDirectory("graftqstream").toString
-    val emb = Tables.embeddings(spark, sfDir).limit(100)
-    emb.write.parquet(s"$tmp/src")
-    val qcfg = graft.index.QuantileGrid.calibrate(emb, "embedding",
-      partsPerDim = 4, gridDims = 3, dim = graft.core.Fixtures.Dim)
-    val stream = spark.readStream.schema(emb.schema).parquet(s"$tmp/src")
-    val q = StreamingIngest.vectorIngestQuantile(stream, qcfg, s"$tmp/store")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val stored = spark.read.parquet(s"$tmp/store")
-    assert(stored.count() === 100)
-    val batchCells = graft.index.Grid.withCellId(emb, "embedding", qcfg)
-      .groupBy("cell_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val streamCells = stored.groupBy("cell_id").count().collect()
-      .map(r => r.getAs[Number]("cell_id").longValue() -> r.getLong(1)).toMap
-    assert(streamCells === batchCells)
-  }
-
-  test("windowed event stats with watermark runs as a stream and matches batch") {
-    val tmp = java.nio.file.Files.createTempDirectory("graftstream2").toString
-    val events = Tables.events(spark, sfDir)
-    events.write.parquet(s"$tmp/src")
-    val stream = spark.readStream.schema(events.schema).parquet(s"$tmp/src")
-    val agg = StreamingIngest.windowedEventStats(stream)
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName("win_out")
-      .option("checkpointLocation", s"$tmp/ckpt").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("win_out")
-      .select("window_start", "event_type", "n")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    val batch = events
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start"), col("event_type"), col("n"))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    assert(streamed === batch)
-  }
 
   test("multimodal: binary payload features are deterministic and complete") {
     val media = Multimodal.mediaFromDocuments(Tables.documents(spark, sfDir))
