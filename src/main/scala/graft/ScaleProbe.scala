@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.VectorDatabase
 import graft.index.{Grid, GridConfig}
 import graft.functions.Distances
 import graft.operators.{Ann, Knn}
@@ -43,7 +44,8 @@ object ScaleProbe extends App {
   t(s"build+write store (${nBase * reps} rows)") {
     Grid.withCellId(big, "embedding", cfg)
       .repartition(col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id").parquet(store)
+      .write.mode("overwrite").options(VectorDatabase.PlainColumns)
+      .partitionBy("cell_id").parquet(store)
   }
   val indexed = spark.read.parquet(store)
   val stats = t("cell stats (index stats)") {

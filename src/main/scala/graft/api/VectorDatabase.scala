@@ -3,10 +3,17 @@ package graft.api
 import graft.functions.{Distances, VecMetric}
 import graft.index.{Grid, GridConfig, GridGeometry}
 import graft.operators.{CellRows, Knn, Snapshot}
-import graft.plans.KnnJoinPlan
+import graft.plans.{KnnJoinExec, KnnJoinPlan}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Cast, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** Typed record of the vector store — the Spark analog of the reference's
   * `DatabaseEntry[T]` (reference: vectordb/database.py:11-14) with the id
@@ -186,6 +193,9 @@ object MahalanobisFull {
   * rounds instead, with the same answer. Like the stats, the cache is never
   * handed to a written snapshot, which builds its own; Spark's
   * `ContextCleaner` releases it when the snapshot is garbage-collected.
+  *
+  * A snapshot also plans its (vec_id, embedding) scan once, on its first
+  * [[knnJoin]]; a written snapshot plans its own.
   */
 final class VectorDatabase private (
     val spark: SparkSession,
@@ -310,17 +320,30 @@ final class VectorDatabase private (
       cellStats)
   }
 
+  /** This snapshot's (vec_id LONG, embedding) rows, planned once, on its
+    * first [[knnJoin]]: later calls run its RDD with no planning. */
+  private lazy val joinScan: RDD[InternalRow] =
+    state.select(col("vec_id").cast(LongType), col("embedding")).queryExecution.toRdd
+
   /** Batch kNN join: k nearest stored vectors for EVERY query row — the
     * cluster-scale form of [[findKNearestNeighbors]] (SURVEY §2.1 #1
     * batch-of-queries). `queries` holds `queryIdCol` (any integral type)
     * and `embedding`; the result is (query_id LONG, vec_id LONG,
     * dist DOUBLE, rn INT), ranked (dist ASC, vec_id ASC).
     *
-    * Runs on [[graft.plans.KnnJoinExec]]: one pass over each store
-    * partition keeping a k-bounded top-k per query, then a k-bounded merge
-    * per query. Distances use the store's metric, which must be
-    * [[SquaredL2]], [[L1]] or [[LInf]]; any other metric fails with an
-    * IllegalArgumentException. */
+    * The join runs when this is called, and the result is a local
+    * DataFrame of its |Q|·k rows at most. It plans no Spark SQL query: the
+    * query rows are read through `queries`' own planned DataFrame (a
+    * DataFrame reused across calls is planned once), and the store through
+    * this snapshot's planned scan. It is [[graft.plans.KnnJoinExec]]'s
+    * body ([[graft.plans.KnnJoinExec.topK]]): one pass over each store
+    * partition keeping a k-bounded top-k per query, then a fold of those
+    * partials, on the driver while they fit in
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, with one more tree
+    * level above it; no shuffle and no map-side combine. Query rows with a
+    * null id or vector are skipped. Distances use the store's metric, which
+    * must be [[SquaredL2]], [[L1]] or [[LInf]]; any other metric fails with
+    * an IllegalArgumentException. */
   def knnJoin(queries: DataFrame, k: Int,
       queryIdCol: String = "query_id"): DataFrame = {
     val metric = defaultMetric match {
@@ -331,20 +354,55 @@ final class VectorDatabase private (
         "knnJoin supports stores with metric SquaredL2, L1 or LInf; this " +
           s"store's metric is ${other.getClass.getSimpleName.stripSuffix("$")}")
     }
-    KnnJoinPlan.join(queries, state.drop("cell_id"), k, metric, queryIdCol)
+    require(k > 0, s"k must be positive, got $k")
+    val conf = DatasetBridge.sqlConf(spark)
+    val qe = queries.queryExecution
+    // the two query columns, bound by position to the planned rows
+    def column(name: String, to: DataType): Expression = {
+      val in = qe.analyzed.output
+      val e = qe.analyzed.resolveQuoted(name, conf.resolver) match {
+        case Some(Alias(nested, _)) => nested
+        case Some(attr) => attr
+        case None => throw new IllegalArgumentException(
+          s"knnJoin: queries have no column '$name' (has ${in.map(_.name).mkString(", ")})")
+      }
+      require(Cast.canCast(e.dataType, to), s"knnJoin: column '$name' of type " +
+        s"${e.dataType.simpleString} cannot be read as ${to.simpleString}")
+      val bound = BindReferences.bindReference[Expression](e, in)
+      if (DataType.equalsStructurally(bound.dataType, to, ignoreNullability = true)) bound
+      else Cast(bound, to, Some(conf.sessionLocalTimeZone))
+    }
+    val id = column(queryIdCol, LongType)
+    val vec = column("embedding", ArrayType(FloatType))
+    val rows = DatasetBridge.withSQLConfPropagated(spark)(qe.executedPlan.executeCollect())
+      .map(r => (id.eval(r), vec.eval(r))).filter { case (i, v) => i != null && v != null }
+    val qs = KnnJoinExec.Queries(rows.map(_._1.asInstanceOf[Long]),
+      rows.map(_._2.asInstanceOf[ArrayData].toFloatArray), None)
+    val found = KnnJoinExec.topK(joinScan, 0, 1, -1, qs, k, metric,
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES), None)
+    DatasetBridge.ofRows(spark,
+      LocalRelation(KnnJoinPlan.freshOutput(), KnnJoinExec.resultRows(found).toSeq))
   }
 
   /** Cell-partitioned parquet (candidate-cell pruning = file skipping) with
     * rows id-sorted inside each partition, so parquet vec_id min/max stats
-    * let point lookups and id-range deletes skip whole row groups too. */
+    * let point lookups and id-range deletes skip whole row groups too.
+    * The embedding elements and the ids are written PLAIN: their values
+    * rarely repeat, so a dictionary would be built and then dropped. */
   def save(path: String): Unit =
     state.repartition(col("cell_id"))
       .sortWithinPartitions(col("vec_id"))
       .write.mode("overwrite")
+      .options(VectorDatabase.PlainColumns)
       .partitionBy("cell_id").parquet(path)
 }
 
 object VectorDatabase {
+  /** Parquet writer options turning off the dictionary of the high-entropy
+    * store columns, the embedding elements and vec_id; `label` keeps it. */
+  private[graft] val PlainColumns: Map[String, String] =
+    Seq("embedding.list.element", "vec_id").map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
+
   /** Build from an existing id'd DataFrame (vec_id, embedding, metadata...). */
   def fromDataFrame(spark: SparkSession, df: DataFrame, cfg: GridConfig,
       metric: Metric = SquaredL2, validate: Boolean = true): VectorDatabase = {

@@ -387,33 +387,13 @@ object Bpe {
     out.toArray
   }
 
-  /** Encode: apply an ordered merge list to the corpus and report each
-    * document's BPE token count next to its character count — the
-    * sequence-length statistic a packing/batching stage consumes. The
-    * merge table is tiny and applied as chained per-row folds; the only
-    * shuffle is the per-doc aggregation (word-level token counts could
-    * also come from a broadcast dictionary join — chained folds keep the
-    * whole encode map-side and stateless). */
-  def encodeTokenCounts(docs: DataFrame, merges: Seq[(String, String)],
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val sym = merges.foldLeft(toSymbols(col("word"))) {
-      case (s, (p1, p2)) => applyMerge(s, p1, p2)
-    }
-    val words = docs
-      .select(col(idCol), explode(split(col(textCol), " ")).as("word"))
-      .filter(col("word") =!= "")
-    // fold over the DICTIONARY (|vocab| rows), not the corpus occurrences —
-    // the corpus side only pays a broadcast hash probe per word
-    val dict = words.select(col("word")).distinct()
-      .select(col("word"), size(split(sym, " ")).as("n_tok"),
-        length(col("word")).as("n_chr"))
-    words.join(broadcast(dict), "word")
-      .groupBy(col(idCol))
-      .agg(sum(col("n_tok")).as("n_tokens"), sum(col("n_chr")).as("n_chars"))
-  }
-
-  /** [[train]] + [[encodeTokenCounts]] in one call (merges re-derived from
-    * the same corpus — the self-contained form the oracle mirrors).
+  /** [[train]], then encode: apply the ordered merge list to the corpus and
+    * report each document's BPE token count next to its character count —
+    * the sequence-length statistic a packing/batching stage consumes (merges
+    * re-derived from the same corpus — the self-contained form the oracle
+    * mirrors). The merge table is tiny and applied as chained per-row folds
+    * over the word dictionary; the corpus pays a broadcast hash probe per
+    * word and the per-doc aggregation.
     *
     * r16 pass sharing: the corpus-scale word-frequency aggregation is
     * computed ONCE (persisted — an intra-query intermediate, freed with
@@ -446,7 +426,7 @@ object Bpe {
     * and chars/token — the tokenizer-efficiency row of a corpus data card
     * (a source whose fertility spikes is a tokenizer–domain mismatch; the
     * statistic token-budget planning divides by). Same broadcast-dictionary
-    * shape as [[encodeTokenCounts]]: the merge fold runs over |vocab| rows,
+    * shape as [[trainAndEncode]]: the merge fold runs over |vocab| rows,
     * the corpus pays a broadcast hash probe and ONE aggregation keyed by
     * the group — output is |groups| rows at any corpus size. */
   def fertilityByGroup(docs: DataFrame, merges: Seq[(String, String)],

@@ -50,10 +50,10 @@ object ByteBpe {
       batchTopK, toByteSymbols, localByteSymbols)
 
   /** Apply an ordered merge list over the byte symbols of each dictionary
-    * word; returns per-doc (n_tokens, n_bytes) — [[Bpe.encodeTokenCounts]]
-    * with byte symbols and octet counts. Broadcast-dictionary shape: the
-    * fold runs over |vocab| rows, the corpus pays a hash probe and one
-    * aggregation. */
+    * word; returns per-doc (n_tokens, n_bytes) — the encode of
+    * [[Bpe.trainAndEncode]] with byte symbols and octet counts.
+    * Broadcast-dictionary shape: the fold runs over |vocab| rows, the corpus
+    * pays a hash probe and one aggregation. */
   def encodeTokenCounts(docs: DataFrame, merges: Seq[(String, String)],
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val sym = merges.foldLeft(toByteSymbols(col("word"))) {

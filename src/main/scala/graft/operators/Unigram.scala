@@ -274,7 +274,7 @@ object Unigram {
 
   /** Encode pass: per-document Viterbi token counts under trained scores.
     * The fold runs over the DISTINCT-WORD dictionary (the [[Bpe
-    * .encodeTokenCounts]] broadcast-dictionary shape); the corpus pays one
+    * .trainAndEncode]] broadcast-dictionary shape); the corpus pays one
     * broadcast hash probe per word and ONE per-doc aggregation. */
   def encodeTokenCounts(docs: DataFrame, scores: Seq[(String, Long)],
       cfg: Config = Config(), textCol: String = "text",

@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import graft.functions.VecMetric
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -7,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.DatasetBridge
@@ -18,10 +20,11 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * operator family (filtered kNN, `vectordb/kd_tree_database.py:285-304`,
   * batched) whose WHOLE-operator semantics no single built-in relational
   * node expresses. It is the engine's one exact brute-force batch kNN
-  * join: `VectorDatabase.knnJoin`, `Outlier.kthNnDistance`, the
-  * `knn_join_*` queries, the exact arms of the recall evals and
-  * [[graft.operators.KnnCellJoin]]'s two cell-restricted
-  * passes all run on it: it scores every batch join. The node is a
+  * join: `Outlier.kthNnDistance`, the `knn_join_*` queries, the exact
+  * arms of the recall evals and [[graft.operators.KnnCellJoin]]'s two
+  * cell-restricted passes all run on it, and `VectorDatabase.knnJoin`
+  * runs its exec's body ([[KnnJoinExec.topK]]) with no plan: it scores
+  * every batch join. The node is a
   * resolved marker [[BinaryNode]] that the planner
   * ([[KnnJoinStrategy]]) lowers to a dedicated physical operator
   * ([[KnnJoinExec]]).
@@ -69,7 +72,7 @@ object KnnJoinPlan {
     * sums (or maxima) only grow, which keeps its early exit exact. */
   val metrics: Seq[String] = Seq(VecMetric.SqL2, VecMetric.L1, VecMetric.LInf)
 
-  private def freshOutput(): Seq[Attribute] = Seq(
+  private[graft] def freshOutput(): Seq[Attribute] = Seq(
     AttributeReference("query_id", LongType, nullable = false)(),
     AttributeReference("vec_id", LongType, nullable = false)(),
     AttributeReference("dist", DoubleType, nullable = false)(),
@@ -243,22 +246,23 @@ object KnnJoinStrategy extends SparkStrategy {
 
 /** Physical batch kNN join: collect + broadcast the (small) query side,
   * stream the data side once per partition keeping a ≤k bound per query,
-  * then merge the k-bounded partials per query with map-side combine.
+  * then fold the k-bounded partials ([[KnnJoinExec.topK]]). The join runs
+  * when the node is executed; its result, |Q|·k rows at most, is returned
+  * as a one-partition RDD.
   *
   * Scale shape (the reason this operator exists rather than a generic
-  * join): the shuffle carries at most |Q|·k rows PER MAP PARTITION —
-  * independent of data-side row count and immune to candidate skew (the
-  * same guarantee as [[graft.operators.KnnTopK]], here enforced by the
-  * operator itself instead of by how the query is composed). Distances use
-  * the identical float→double left-to-right IEEE loop as
+  * join): each data partition returns at most |Q|·k entries — independent
+  * of data-side row count and immune to candidate skew (the same guarantee
+  * as [[graft.operators.KnnTopK]], here enforced by the operator itself
+  * instead of by how the query is composed). Distances use the identical
+  * float→double left-to-right IEEE loop as
   * [[graft.functions.VecMetricCols]], so results are bit-equal to
   * [[graft.operators.KnnTopK.topK]] over the scored cross product.
   *
   * The per-pair loop allocates nothing: every query's bound lives in
   * primitive id/dist arrays kept sorted by shifted insertion
-  * ([[KnnJoinExec.insert]]), and the shuffle carries the same primitive
-  * layout ([[KnnJoinExec.TopK]]). Counters are task-local and reach the
-  * SQL metrics once per partition.
+  * ([[KnnJoinExec.insert]]). Counters are task-local and reach the SQL
+  * metrics once per partition.
   * Under a cell restriction (`cells`, on data column `dCellIdx`) a query scores only the rows
   * of the cells it admits, from its start threshold; the broadcast holds each such pair.
   */
@@ -281,59 +285,20 @@ case class KnnJoinExec(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val qid = qIdIdx; val qv = qVecIdx
     // query side: executeCollect is the physical analog of a broadcast
     // build side — the node's contract is |Q| small (ANN forms cover huge
     // query sets)
-    val rows = left.executeCollect().filter(r => !r.isNullAt(qid) && !r.isNullAt(qv))
-    val vecs = rows.map(_.getArray(qv).toFloatArray)
-    val dim = if (vecs.isEmpty) 0 else vecs(0).length
-    vecs.indices.find(vecs(_).length != dim).foreach { i =>
-      throw new IllegalArgumentException(
-        s"KnnJoinExec: query id=${rows(i).getLong(qid)} has dim ${vecs(i).length}, " +
-          s"query id=${rows(0).getLong(qid)} has dim $dim; mixed-dimension " +
-          "queries are a data error")
-    }
-    val flat = new Array[Double]((rows.length + 3) / 4 * 4 * dim)
-    for (i <- vecs.indices; j <- 0 until dim) flat(i * dim + j) = vecs(i)(j)
-    val ids = rows.map(_.getLong(qid))
-    val own = ids.map(q => cells.flatMap(_.get(q)))
-    val admits = own.indices.flatMap(i => own(i).toSeq.flatMap(_._1).map(_ -> i)).groupBy(_._1)
-      .map { case (c, qi) => val q = qi.map(_._2).toArray; c -> (q, q.map(_ & ~3).distinct) }
-    val bc = sparkContext.broadcast(Queries(ids, flat, dim,
-      own.map(_.fold(Double.PositiveInfinity)(_._2)), admits))
-    // task closures capture only these locals, never `this` (the whole
-    // physical plan tree would be serialized into every task)
-    val kk = k; val m = metricCode(metric); val did = dIdIdx; val dv = dVecIdx; val dc = dCellIdx
-    val counters = Counters(metrics("dataRows"), metrics("pairs"),
-      metrics("prunedPairs"), metrics("heapInserts"))
+    val rows = left.executeCollect().filter(r => !r.isNullAt(qIdIdx) && !r.isNullAt(qVecIdx))
+    val qs = Queries(rows.map(_.getLong(qIdIdx)), rows.map(_.getArray(qVecIdx).toFloatArray), cells)
+    val result = resultRows(topK(right.execute(), dIdIdx, dVecIdx, dCellIdx, qs, k, metric,
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      Some(Counters(metrics("dataRows"), metrics("pairs"), metrics("prunedPairs"),
+        metrics("heapInserts")))))
     val numOut = metrics("numOutputRows")
-
-    val partials: RDD[(Long, TopK)] = right.execute().mapPartitions { it =>
-      val qs = bc.value
-      if (qs.ids.isEmpty) Iterator.empty
-      else scanPartition(it, did, dv, dc, qs, kk, m, counters)
-    }
-    // this RDD-level shuffle bypasses AQE, so size it the way AQE would
-    // coalesce a SQL shuffle: partitions of the advisory size (16 bytes per
-    // (id, dist) entry), at most spark.sql.shuffle.partitions
-    val shuffleBytes = 16.0 * rows.length * k * partials.getNumPartitions
-    val reducers = math.min(conf.numShufflePartitions, math.max(1,
-      math.ceil(shuffleBytes / conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)).toInt))
-
-    // k-bounded merge per query: RDD combine-by-key with map-side combine
-    // (partials are already ≤k, so reducers see k-bounded buffers only)
-    partials.reduceByKey(merge(_, _, kk), reducers).mapPartitions { it =>
-      val w = new UnsafeRowWriter(4)
-      it.flatMap { case (q, t) =>
-        numOut += t.ids.length
-        Iterator.tabulate(t.ids.length) { i =>
-          w.reset()
-          w.write(0, q); w.write(1, t.ids(i)); w.write(2, t.dists(i)); w.write(3, i + 1)
-          w.getRow.copy(): InternalRow
-        }
-      }
-    }
+    numOut += result.length
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), Seq(numOut))
+    sparkContext.parallelize(result.toSeq, 1)
   }
 }
 
@@ -350,6 +315,25 @@ object KnnJoinExec {
     * and each restricted cell's admitting queries and their blocks, by position. */
   final case class Queries(ids: Array[Long], vecs: Array[Double], dim: Int,
       start: Array[Double], admits: Map[Long, (Array[Int], Array[Int])])
+
+  object Queries {
+    /** The query side of a join: query i has id `ids(i)` and vector `vecs(i)`, every vector of
+      * one dim, and under a cell restriction each query's admitted cells and start threshold. */
+    def apply(ids: Array[Long], vecs: Array[Array[Float]], cells: Option[Cells]): Queries = {
+      val dim = if (vecs.isEmpty) 0 else vecs(0).length
+      vecs.indices.find(vecs(_).length != dim).foreach { i =>
+        throw new IllegalArgumentException(
+          s"KnnJoinExec: query id=${ids(i)} has dim ${vecs(i).length}, " +
+            s"query id=${ids(0)} has dim $dim; mixed-dimension queries are a data error")
+      }
+      val flat = new Array[Double]((ids.length + 3) / 4 * 4 * dim)
+      for (i <- vecs.indices; j <- 0 until dim) flat(i * dim + j) = vecs(i)(j)
+      val own = ids.map(q => cells.flatMap(_.get(q)))
+      val admits = own.indices.flatMap(i => own(i).toSeq.flatMap(_._1).map(_ -> i)).groupBy(_._1)
+        .map { case (c, qi) => val q = qi.map(_._2).toArray; c -> (q, q.map(_ & ~3).distinct) }
+      new Queries(ids, flat, dim, own.map(_.fold(Double.PositiveInfinity)(_._2)), admits)
+    }
+  }
 
   /** One query's bound: ids and distances in (dist, id) order, at most k. */
   final class TopK(val ids: Array[Long], val dists: Array[Double]) extends Serializable
@@ -422,6 +406,66 @@ object KnnJoinExec {
     new TopK(ids, dists)
   }
 
+  /** The top-k of every query of `qs` over the rows of `data` (id, vector and, when `dc` ≥ 0,
+    * cell at `did`, `dv`, `dc`), one entry per query id in first-appearance order; queries
+    * sharing an id merge, and an id with no hit is left out.
+    *
+    * Each partition runs [[scanPartition]], and the partials are folded by [[merge]] as a
+    * `treeReduce` does. Each partial holds at most 16·|Q|·k bytes of (id, dist) entries: while
+    * all P of them fit in `budget` (the advisory partition size, the size a SQL shuffle's
+    * reducers get) the tree has depth 1, a fold on the driver: one job, whose partials the
+    * driver merges as its tasks end (`RDD.fold`'s shape, run through `runJob` with a task
+    * object, so that no closure is cleaned per call). Above it, `treeReduce` adds a level of
+    * executors merging groups of partials. There is one fold and no shuffle at depth 1. */
+  def topK(data: RDD[InternalRow], did: Int, dv: Int, dc: Int, qs: Queries, k: Int,
+      metric: String, budget: Long, counters: Option[Counters]): Seq[(Long, TopK)] = {
+    val nq = qs.ids.length
+    val parts = data.getNumPartitions
+    if (nq == 0 || parts == 0) return Seq.empty
+    val sc = data.sparkContext
+    val bc = sc.broadcast(qs)
+    val scan = Scan(did, dv, dc, bc, k, metricCode(metric), counters)
+    val fold = Fold(k)
+    val folded =
+      try {
+        if (16.0 * parts * nq * k <= budget) {
+          var acc = Array.fill(nq)(new TopK(Array.emptyLongArray, Array.emptyDoubleArray))
+          sc.runJob(data, scan, 0 until parts, (_: Int, part: Array[TopK]) => acc = fold(acc, part))
+          acc
+        } else data.mapPartitions(it => Iterator(scan(TaskContext.get(), it))).treeReduce(fold, 2)
+      } finally bc.destroy()
+    val byId = scala.collection.mutable.LinkedHashMap[Long, TopK]()
+    for (i <- 0 until nq)
+      byId(qs.ids(i)) = byId.get(qs.ids(i)).fold(folded(i))(merge(_, folded(i), k))
+    byId.toSeq.filter(_._2.ids.nonEmpty)
+  }
+
+  /** [[topK]]'s task: one partition's [[scanPartition]] against the broadcast queries. */
+  private final case class Scan(did: Int, dv: Int, dc: Int, qs: Broadcast[Queries], k: Int,
+      m: Int, counters: Option[Counters])
+      extends ((TaskContext, Iterator[InternalRow]) => Array[TopK]) {
+    def apply(tc: TaskContext, it: Iterator[InternalRow]): Array[TopK] =
+      scanPartition(it, did, dv, dc, qs.value, k, m, counters)
+  }
+
+  /** [[topK]]'s fold: two partials merged query by query. */
+  private final case class Fold(k: Int) extends ((Array[TopK], Array[TopK]) => Array[TopK]) {
+    def apply(a: Array[TopK], b: Array[TopK]): Array[TopK] =
+      Array.tabulate(a.length)(i => merge(a(i), b(i), k))
+  }
+
+  /** [[topK]]'s entries as (query_id, vec_id, dist, rn) rows. */
+  def resultRows(found: Seq[(Long, TopK)]): Array[InternalRow] = {
+    val w = new UnsafeRowWriter(4)
+    found.iterator.flatMap { case (q, t) =>
+      Iterator.tabulate(t.ids.length) { i =>
+        w.reset()
+        w.write(0, q); w.write(1, t.ids(i)); w.write(2, t.dists(i)); w.write(3, i + 1)
+        w.getRow.copy(): InternalRow
+      }
+    }.toArray
+  }
+
   /** Every query's bound over one partition: query i's run sits at
     * `[i * k, i * k + sizes(i))` of the primitive id and dist arrays.
     * Indexes from nq up are the padding of the last block of four. */
@@ -462,7 +506,7 @@ object KnnJoinExec {
   }
 
   /** One data partition against every query: the bounded top-k of each
-    * query over this partition's rows.
+    * query over this partition's rows, by query position.
     *
     * Once a query's run is full, its running sum (or max) never decreases,
     * so its scan may stop as soon as it strictly exceeds the kth distance:
@@ -475,7 +519,7 @@ object KnnJoinExec {
     * their thresholds. With a cell column (`dc` ≥ 0) only the blocks admitting a row's cell
     * score it, re-masked only when the cell changes: a saved store clusters rows by cell. */
   def scanPartition(it: Iterator[InternalRow], did: Int, dv: Int, dc: Int, qs: Queries,
-      k: Int, m: Int, counters: Counters): Iterator[(Long, TopK)] = {
+      k: Int, m: Int, counters: Option[Counters]): Array[TopK] = {
     val nq = qs.ids.length
     val dim = qs.dim
     val qv = qs.vecs
@@ -545,14 +589,16 @@ object KnnJoinExec {
         }
       }
     }
-    counters.dataRows += rows
-    counters.pairs += pairs
-    counters.prunedPairs += b.pruned
-    counters.heapInserts += b.inserts
-    Iterator.range(0, nq).filter(b.sizes(_) > 0).map { i =>
+    counters.foreach { c =>
+      c.dataRows += rows
+      c.pairs += pairs
+      c.prunedPairs += b.pruned
+      c.heapInserts += b.inserts
+    }
+    Array.tabulate(nq) { i =>
       val base = i * k
       val end = base + b.sizes(i)
-      (qs.ids(i), new TopK(b.ids.slice(base, end), b.dists.slice(base, end)))
+      new TopK(b.ids.slice(base, end), b.dists.slice(base, end))
     }
   }
 }

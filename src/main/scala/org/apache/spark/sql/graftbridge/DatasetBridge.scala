@@ -17,6 +17,10 @@ object DatasetBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(classic(spark), plan)
 
+  /** The session's SQL conf. */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    classic(spark).sessionState.conf
+
   /** Runs `body` with the session's SQL confs set as local properties, so
     * the tasks of the jobs it starts read them through `SQLConf.get`, as the
     * tasks of a SQL query do. */

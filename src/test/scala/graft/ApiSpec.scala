@@ -470,13 +470,15 @@ class ApiSpec extends SparkSpecBase {
     val base = Array.fill(300)(Array.fill(JoinDim)(rnd.nextFloat() * 2f - 1f))
     base ++ Array.fill(4)(base(7).clone())
   }
-  private def joinStore(metric: graft.api.Metric, n: Int = joinVecs.length): VectorDatabase = {
+  private def joinStore(metric: graft.api.Metric, n: Int = joinVecs.length): VectorDatabase =
+    VectorDatabase.fromDataFrame(spark, joinInput(n, parts = 3), joinCfg, metric = metric)
+  /** The first `n` rows, shuffled over `parts` partitions, so tied ids
+    * arrive out of id order. */
+  private def joinInput(n: Int, parts: Int): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    // shuffled over three partitions, so tied ids arrive out of id order
-    val df = scala.util.Random.shuffle((0 until n).toList)
+    scala.util.Random.shuffle((0 until n).toList)
       .map(i => (i.toLong, joinVecs(i), i % 5)).toDF("vec_id", "embedding", "label")
-      .repartition(3)
-    VectorDatabase.fromDataFrame(spark, df, joinCfg, metric = metric)
+      .repartition(parts)
   }
   /** INT query ids, one negative; query -3 sits on the tied position. */
   private lazy val joinQueries: Seq[(Int, Array[Float])] = {
@@ -493,9 +495,13 @@ class ApiSpec extends SparkSpecBase {
     * float -> double order, ranked (dist, vec_id). */
   private def bruteJoin(metric: String, qs: Seq[(Int, Array[Float])], k: Int,
       n: Int = joinVecs.length): Seq[(Long, Long, Double, Int)] =
+    bruteJoinOver(metric, qs, k, (0 until n).map(i => i.toLong -> joinVecs(i)))
+
+  /** [[bruteJoin]] over the given (vec_id, embedding) rows. */
+  private def bruteJoinOver(metric: String, qs: Seq[(Int, Array[Float])], k: Int,
+      rows: Seq[(Long, Array[Float])]): Seq[(Long, Long, Double, Int)] =
     qs.flatMap { case (qid, q) =>
-      (0 until n).map { i =>
-        val v = joinVecs(i)
+      rows.map { case (id, v) =>
         var s = 0.0
         for (j <- 0 until JoinDim) {
           val d = q(j).toDouble - v(j).toDouble
@@ -505,7 +511,7 @@ class ApiSpec extends SparkSpecBase {
             case _ => s + d * d
           }
         }
-        (i.toLong, s)
+        (id, s)
       }.sortBy { case (id, d) => (d, id) }.take(k).zipWithIndex
         .map { case ((id, d), r) => (qid.toLong, id, d, r + 1) }
     }.sortBy(x => (x._1, x._4))
@@ -557,15 +563,133 @@ class ApiSpec extends SparkSpecBase {
     assert(ex.getMessage.contains("MahalanobisDiag"))
   }
 
-  test("knnJoin runs on KnnJoinExec, not a typed aggregation") {
-    val df = joinStore(SquaredL2).knnJoin(queryDf(joinQueries), 3, queryIdCol = "qid")
-    df.collect()
-    val walk = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val plan = df.queryExecution.executedPlan
-    assert(walk.collect(plan) { case e: graft.plans.KnnJoinExec => e }.nonEmpty, plan)
-    assert(walk.collect(plan) {
-      case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
-    }.isEmpty, plan)
+  /** The L2 store over checkpointed input: its plan holds no exchange, so
+    * every job or shuffle of a join is the join's own. */
+  private def checkpointedStore(parts: Int): VectorDatabase =
+    VectorDatabase.fromDataFrame(spark,
+      joinInput(joinVecs.length, parts).localCheckpoint(true), joinCfg)
+
+  /** What `body` ran: its value, its jobs, the stages it submitted, the
+    * shuffle bytes its tasks wrote and the SQL executions it started. */
+  private case class Ran[T](out: T, jobs: Int, stages: Int, shuffleBytes: Long, sqlQueries: Int)
+  private def ran[T](body: => T): Ran[T] = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val seen = new SparkListener {
+      val stages = new java.util.concurrent.atomic.AtomicInteger
+      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+      val sqlQueries = new java.util.concurrent.atomic.AtomicInteger
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          sqlQueries.incrementAndGet()
+        case _ =>
+      }
+    }
+    org.apache.spark.sql.graftbridge.DatasetBridge.drainListeners(spark)
+    sc.addSparkListener(seen)
+    // JobInputRows drains the bus after `body`, so `seen` has every event
+    try {
+      val (out, jobs) = org.apache.spark.JobInputRows.of(sc)(body)
+      Ran(out, jobs.length, seen.stages.get, seen.shuffleBytes.get, seen.sqlQueries.get)
+    } finally sc.removeSparkListener(seen)
+  }
+
+  private def withSQLConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("knnJoin runs two jobs and no shuffle, and a repeated call plans no SQL query") {
+    val store = checkpointedStore(parts = 3)
+    // a query side read by a job, as a table's would be
+    val queries = queryDf(joinQueries).localCheckpoint(true)
+    val want = bruteJoin("sql2", joinQueries, 3)
+    for (call <- 1 to 2) {
+      // the join runs in the call; collecting its local result runs no job
+      val r = ran(store.knnJoin(queries, 3, queryIdCol = "qid"))
+      assert((r.jobs, r.stages, r.shuffleBytes) == (2, 2, 0L), s"call $call: $r")
+      if (call == 2) assert(r.sqlQueries == 0, r)
+      assert(ran(joinRows(r.out)).jobs == 0)
+      assert(joinRows(r.out) == want)
+    }
+  }
+
+  test("the partials fold to one answer at depth 1 and 2, for the facade, the plan and the cell join") {
+    val store = checkpointedStore(parts = 8)
+    val qs = queryDf(joinQueries)
+    val ids = qs.withColumnRenamed("qid", "query_id")
+    val forms = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "facade" -> (() => store.knnJoin(qs, 3, queryIdCol = "qid")),
+      "plan" -> (() => graft.plans.KnnJoinPlan.join(ids, store.scan(), 3)),
+      "cells" -> (() => graft.operators.KnnCellJoin.join(ids, store.state, joinCfg, 3,
+        bruteForceThreshold = 0)))
+    val want = bruteJoin("sql2", joinQueries, 3)
+    for ((name, form) <- forms) {
+      val depth1 = ran(joinRows(form()))
+      // 16 bytes x 8 partitions x 4 queries x k = 1,536 bytes of partials
+      // exceed a 1-byte budget: the fold gains a tree level
+      val depth2 = withSQLConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key, "1") {
+        ran(joinRows(form()))
+      }
+      assert(depth2.stages > depth1.stages, s"$name: $depth1 / $depth2")
+      assert(depth1.out == want, name)
+      assert(depth2.out == depth1.out, name)
+    }
+  }
+
+  test("knnJoin on a written snapshot scans the written rows; its parent's join is unchanged") {
+    import spark.implicits._
+    val parent = joinStore(SquaredL2)
+    val queries = queryDf(joinQueries)
+    val before = joinRows(parent.knnJoin(queries, 3, queryIdCol = "qid"))
+    assert(before == bruteJoin("sql2", joinQueries, 3))
+    // a row on query 0, row 42 moved onto query 5, and two of the rows tied
+    // with query -3 deleted
+    val (inserted, _) = parent.insert(Seq((joinQueries(1)._2, 9)).toDF("embedding", "label"))
+    val written = inserted.delete(Seq(7L, 300L))
+      .updatePosition(Seq((42L, joinQueries(2)._2)).toDF("vec_id", "embedding"))
+    val rows = written.scan().select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
+    val got = joinRows(written.knnJoin(queries, 3, queryIdCol = "qid"))
+    assert(got == bruteJoinOver("sql2", joinQueries, 3, rows))
+    assert(got.filter(_._1 == 0L).head._2 == joinVecs.length.toLong)
+    assert(got.filter(_._1 == 5L).head._2 == 42L)
+    assert(got.filter(_._1 == -3L).map(_._2) == Seq(301L, 302L, 303L))
+    assert(joinRows(parent.knnJoin(queries, 3, queryIdCol = "qid")) == before)
+  }
+
+  test("save writes the embedding elements and vec_id without a dictionary; label keeps one") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // three element values: a dictionary would pay for itself on every
+    // column, so only the writer options keep it off
+    val cfg = GridConfig(dim = 4, lower = -1.0, upper = 1.0, partsPerDim = 2, gridDims = 2)
+    val store = VectorDatabase.fromDataFrame(spark, (0 until 400).map { i =>
+      (i.toLong, Array.tabulate(4)(j => ((i + j) % 3 - 1) * 0.5f), i % 4)
+    }.toDF("vec_id", "embedding", "label"), cfg)
+    val dir = java.nio.file.Files.createTempDirectory("graft-plain").resolve("store")
+    store.save(dir.toString)
+    val files = java.nio.file.Files.walk(dir).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq
+    assert(files.nonEmpty)
+    val chunks = files.flatMap { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
+      finally reader.close()
+    }
+    def dictionary(path: String): Seq[Boolean] =
+      chunks.filter(_.getPath.toDotString == path).map(_.hasDictionaryPage)
+    for (path <- Seq("embedding.list.element", "vec_id", "label"))
+      assert(dictionary(path).size == files.size, path)
+    assert(!dictionary("embedding.list.element").exists(identity))
+    assert(!dictionary("vec_id").exists(identity))
+    assert(dictionary("label").forall(identity))
   }
 
   private def messages(t: Throwable): Seq[String] =
